@@ -2138,16 +2138,19 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     */
   private val asofHook: Lowering.AsofStatsHook =
     (t, c, pred) => tables.get(t.toLowerCase).map { desc =>
-      if (statistics.get(desc.name).isEmpty)
-        statistics.rebuild(desc, readTable(desc))
-      else statistics.ensureFresh(desc)
+      ensureStats(desc)
       val st = statistics.get(desc.name).get
-      val rows = pred match {
-        case None    => st.rowCount
-        case Some(p) => statistics.estimateCard(desc, Some(p))
-      }
-      (math.max(rows, 1L), st.ndv(c).getOrElse(math.max(st.rowCount, 1L)))
+      (math.max(statistics.estimateCard(desc, pred), 1L),
+        st.ndv(c).getOrElse(math.max(st.rowCount, 1L)))
     }
+
+  /** Statistics an estimator can use: a table without any (external
+    * parquet) gets a one-pass rebuild — rowcount + HLL sketches + bottom-k
+    * sample — and one left stale by a rewrite rebuilds once.
+    */
+  private def ensureStats(desc: TableDesc): Unit =
+    if (statistics.get(desc.name).isEmpty) statistics.rebuild(desc, readTable(desc))
+    else statistics.ensureFresh(desc)
 
   private def lowerQuery(q: BoundQuery): DataFrame = {
     val source: Analyzer.BoundTable => DataFrame = bt => readTable(bt.desc)
@@ -2790,20 +2793,17 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   /** Statistics-driven planning (the reference's sample-based cardinality
     * estimation, planner/bottomup.rs:111-168): for a multi-table SELECT,
-    * make sure every FROM table has statistics (external parquet tables
-    * get a lazy one-pass rebuild: rowcount + HLL sketches + bottom-k
-    * sample), then estimate each table's post-selection cardinality by
-    * running its pushed-down conjuncts against the maintained sample.
+    * make sure every FROM table has statistics (ensureStats), then
+    * estimate each table's post-selection cardinality by running its
+    * pushed-down conjuncts against the driver-resident sample — with
+    * fresh statistics this fires no Spark job.
     */
   private def estimateBindings(s: BoundSelect): Seq[(String, Long)] = {
     // derived tables have no maintained statistics (their cardinality is
     // the subquery's, unknown without running it) — leave join order and
     // build sides to Catalyst/AQE for those queries
     if (s.tables.length < 2 || s.derived.nonEmpty) return Nil
-    s.tables.foreach(bt =>
-      if (statistics.get(bt.desc.name).isEmpty)
-        statistics.rebuild(bt.desc, readTable(bt.desc))
-      else statistics.ensureFresh(bt.desc))
+    s.tables.foreach(bt => ensureStats(bt.desc))
     val perTable: Map[String, Seq[Analyzer.BoundExpr]] =
       s.predicate.map(Lowering.conjuncts).getOrElse(Nil)
         .flatMap(c => Lowering.singleBinding(c).map(_ -> c))

@@ -1,11 +1,15 @@
 package graft.sql
 
-import java.nio.file.{Files, Paths}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.Base64
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.stats.CountingHll
 import Analyzer._
@@ -52,6 +56,9 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
 
   private val stats = mutable.Map.empty[String, TableStats]
   private val bstats = mutable.Map.empty[String, BucketStats]
+  // table → its bottom-k sample rows (≤ SampleSize, table column order):
+  // the only per-table row state the driver keeps (sidecar-persisted)
+  private val samples = mutable.Map.empty[String, IndexedSeq[UnsafeRow]]
   // Tables whose sketches/sample predate the last copy-on-write rewrite:
   // the row count is exact, the estimation artifacts are deferred until
   // an estimator needs them (ensureFresh). Persisted, so a reopened
@@ -123,12 +130,14 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
   def initTable(desc: TableDesc): Unit = {
     stats(desc.name) = TableStats(0L,
       desc.attributes.map(a => a.name.toLowerCase -> CountingHll.emptySketch).toMap)
+    setSample(desc.name, None)
     save()
   }
 
   /** DROP TABLE: forget the table's statistics (persisted). */
   def dropTable(name: String): Unit = {
     stats.remove(name.toLowerCase)
+    setSample(name.toLowerCase, None)
     bstats.remove(name.toLowerCase)
     staleTables.remove(name.toLowerCase)
     staleDescs.remove(name.toLowerCase)
@@ -157,50 +166,39 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
 
   // ---- bucket-local statistics ----
 
-  // (table, rendered value) → bucket id; planning-time lookups reuse it
-  private val bucketIdCache = mutable.Map.empty[(String, String), Int]
-
-  /** Spark's bucket id for a value — pmod(murmur3(value), n), evaluated
-    * with the engine's own `hash` expression (the same Murmur3/seed-42 the
-    * bucketed write used) so the estimate points at the file the scan
-    * will actually prune to. Value must already have the column's type.
+  /** Spark's bucket id for a value — pmod(murmur3(value), n), the engine's
+    * own `hash` expression (the same Murmur3/seed-42 the bucketed write
+    * used) evaluated in-process, so the estimate points at the file the
+    * scan will actually prune to. Value must already have the column's type.
     */
   def bucketIdOf(desc: TableDesc, value: Any): Int = {
     val (bcol, n) = desc.bucket.get
-    bucketIdCache.getOrElseUpdate((desc.name, String.valueOf(value)), {
-      val attr = desc.attr(bcol).get
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v", attr.sqlType.spark)))
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(value)), 1), schema)
-        .select(pmod(hash(col("v")), lit(n)).as("b"))
-        .head.getInt(0)
-    })
+    val schema = bucketSchema(desc, bcol)
+    val id = bind(schema, pmod(hash(col("v")), lit(n))).head
+    id.eval(Bridge.unsafeRows(schema, Seq(Row(value))).head).asInstanceOf[Int]
   }
 
-  /** Incremental per-bucket fold on the INSERT path: one tiny local job
-    * computes the batch's bucket ids; counts and sketches update
-    * driver-side (REPL-scale batches, same cost class as recordInsert).
+  private def bucketSchema(desc: TableDesc, bcol: String): StructType =
+    StructType(Seq(StructField("v", desc.attr(bcol).get.sqlType.spark)))
+
+  /** Incremental per-bucket fold on the INSERT path: bucket ids and the
+    * sketch's string images evaluate in-process; counts and sketches
+    * update driver-side (REPL-scale batches, same cost class as
+    * recordInsert).
     */
   private def recordBucketInsert(desc: TableDesc, rows: Seq[Seq[Any]]): Unit =
     desc.bucket.foreach { case (bcol, n) =>
       val idx = desc.attributes.indexWhere(_.name.equalsIgnoreCase(bcol))
-      val attr = desc.attributes(idx)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v", attr.sqlType.spark)))
-      val assigned = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            rows.map(r => org.apache.spark.sql.Row(r(idx))), 1), schema)
-        .select(pmod(hash(col("v")), lit(n)).as("b"), col("v").cast("string").as("s"))
-        .collect()
+      val schema = bucketSchema(desc, bcol)
+      val Seq(id, image) = bind(schema, pmod(hash(col("v")), lit(n)), col("v").cast("string"))
       val prev = bstats.getOrElse(desc.name, BucketStats(Map.empty, Map.empty))
       val rowsM = mutable.Map(prev.rows.toSeq: _*).withDefaultValue(0L)
       val sksM = mutable.Map(prev.sketches.map { case (k, v) => k -> v.clone() }.toSeq: _*)
-      assigned.foreach { r =>
-        val b = r.getInt(0)
+      Bridge.unsafeRows(schema, rows.map(r => Row(r(idx)))).foreach { r =>
+        val b = id.eval(r).asInstanceOf[Int]
         rowsM(b) = rowsM(b) + 1
         val sk = sksM.getOrElseUpdate(b, CountingHll.emptySketch)
-        CountingHll.add(sk, if (r.isNullAt(1)) null else r.getString(1))
+        CountingHll.add(sk, Option(image.eval(r)).map(_.toString).orNull)
       }
       bstats(desc.name) = BucketStats(rowsM.toMap, sksM.toMap)
     }
@@ -243,83 +241,82 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
       }
     }
 
-  // ---- deterministic sample ----
+  // ---- resident bottom-k sample ----
 
-  private def samplePath(name: String) = s"$warehouse/_samples/$name"
+  private def bind(schema: StructType, cols: Column*): Seq[Expression] =
+    Bridge.bindOver(spark, schema, cols)
 
-  /** Bottom-k by md5 over the row's string image: a uniform k-sample that
-    * any engine reproduces and that merges associatively (min-k of a union
-    * = min-k of min-k's) — the property the reference's reservoir skip
-    * machinery exists to provide.
+  /** The sample rows of `rows` by the bottom-k md5 key: a uniform k-sample
+    * that any engine reproduces and that merges associatively (min-k of a
+    * union = min-k of min-k's) — the property the reference's reservoir
+    * skip machinery exists to provide.
     */
-  private def updateSample(desc: TableDesc, rows: Seq[Seq[Any]]): Unit = {
-    import org.apache.spark.sql.Row
-    val newDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1), desc.sparkSchema)
-    val dir = samplePath(desc.name)
-    val existing =
-      if (Files.exists(Paths.get(dir)) && Files.list(Paths.get(dir)).findFirst().isPresent)
-        spark.read.schema(desc.sparkSchema).parquet(dir)
-      else newDf.limit(0)
-    val keyed = existing.unionAll(newDf)
-      .withColumn("__k", md5(concat_ws("\u0001",
-        desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit("\u0000"))): _*)))
-      .orderBy("__k")
-      .limit(SampleSize)
-      .drop("__k")
-    val tmp = s"$dir.tmp"
-    keyed.coalesce(1).write.mode("overwrite").parquet(tmp)
-    // atomic-ish swap (single-process warehouse, same as the reference)
-    val dirP = Paths.get(dir)
-    if (Files.exists(dirP)) {
-      Files.walk(dirP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
-    Files.move(Paths.get(tmp), dirP)
+  private def bottomK(desc: TableDesc, key: Column,
+      rows: IndexedSeq[UnsafeRow]): IndexedSeq[UnsafeRow] = {
+    val k = bind(desc.sparkSchema, key).head
+    rows.map(r => k.eval(r).toString -> r).sortBy(_._1).take(SampleSize).map(_._2)
   }
 
-  def sample(desc: TableDesc): DataFrame = {
+  private def insertKey(desc: TableDesc): Column =
+    md5(concat_ws("\u0001",
+      desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit("\u0000"))): _*))
+
+  private def rebuildKey(desc: TableDesc): Column =
+    md5(concat_ws("",
+      desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit(" "))): _*))
+
+  /** Merge an inserted batch into the resident sample, in-process. */
+  private def updateSample(desc: TableDesc, rows: Seq[Seq[Any]]): Unit =
+    setSample(desc.name, Some(bottomK(desc, insertKey(desc),
+      samples.getOrElse(desc.name, IndexedSeq.empty) ++
+        Bridge.unsafeRows(desc.sparkSchema, rows.map(Row.fromSeq)))))
+
+  private def sampleRows(desc: TableDesc): IndexedSeq[UnsafeRow] = {
     ensureFresh(desc)
-    val dir = samplePath(desc.name)
-    if (Files.exists(Paths.get(dir)))
-      spark.read.schema(desc.sparkSchema).parquet(dir)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], desc.sparkSchema)
+    samples.getOrElse(desc.name, IndexedSeq.empty)
   }
+
+  /** The table's sample as a DataFrame over the resident rows (a
+    * LocalRelation: reading it runs no Spark job).
+    */
+  def sample(desc: TableDesc): DataFrame =
+    Bridge.localFrame(spark, desc.sparkSchema, sampleRows(desc))
+
+  /** Sample rows held per table (resident-state introspection for specs). */
+  private[sql] def residentSampleRows: Map[String, Int] =
+    samples.view.mapValues(_.length).toMap
 
   /** Estimated cardinality of (table WHERE predicate): matching sample
     * fraction × row count, floored at 1 — the reference's estimator
     * (planner/bottomup.rs:111-168, incl. its base/(2·SAMPLE) floor idea).
+    * The predicate resolves once against the sample schema and runs as an
+    * interpreted predicate over the resident rows: no Spark job.
     */
-  def estimateCard(desc: TableDesc, predicate: Option[org.apache.spark.sql.Column]): Long = {
-    ensureFresh(desc)
+  def estimateCard(desc: TableDesc, predicate: Option[Column]): Long = {
+    val rows = sampleRows(desc)
     val total = stats.get(desc.name).map(_.rowCount).getOrElse(0L)
     predicate match {
-      case None => total
-      case Some(p) =>
-        val s = sample(desc)
-        val n = s.count()
-        if (n == 0) total
-        else {
-          val hit = s.filter(p).count()
-          val frac = if (hit == 0) 1.0 / (2.0 * n) else hit.toDouble / n
-          math.max(1L, math.round(frac * total))
-        }
+      case Some(p) if rows.nonEmpty =>
+        val pred = Predicate.createInterpreted(bind(desc.sparkSchema, p).head)
+        pred.initialize(0)
+        val hit = rows.count(pred.eval)
+        val n = rows.length
+        val frac = if (hit == 0) 1.0 / (2.0 * n) else hit.toDouble / n
+        math.max(1L, math.round(frac * total))
+      case _ => total
     }
   }
 
   // ---- join selectivity from joined samples ----
 
-  // sample column values collected once per (table, column, rowcount) —
-  // ≤ SampleSize strings, invalidated when the table's rowcount moves
-  private val colValuesCache = mutable.Map.empty[(String, String, Long), Seq[String]]
-
+  /** A column's non-null sample values, as strings. */
   private def sampleColumn(desc: TableDesc, column: String): Seq[String] = {
-    val rc = stats.get(desc.name).map(_.rowCount).getOrElse(0L)
-    colValuesCache.getOrElseUpdate((desc.name, column.toLowerCase, rc), {
-      sample(desc).select(col(column).cast("string")).collect()
-        .flatMap(r => Option(r.getString(0))).toSeq
-    })
+    val rows = sampleRows(desc)
+    if (rows.isEmpty) Nil
+    else {
+      val v = bind(desc.sparkSchema, col(column).cast("string")).head
+      rows.flatMap(r => Option(v.eval(r)).map(_.toString))
+    }
   }
 
   /** Equi-join selectivity estimated by JOINING the two tables' bottom-k
@@ -330,13 +327,12 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     * domains). Zero sample hits floor at half a hit — the reference's
     * zero-hit-floor idea (planner/bottomup.rs:111-168) applied to pairs.
     * None when either sample is missing (caller falls back to NDV).
-    * Both samples are driver-sized (≤ SampleSize rows) by construction,
-    * so the multiset intersection is an in-process hash lookup — the same
-    * place the reference evaluates its reservoir sample.
+    * Both samples are resident (≤ SampleSize rows), so the multiset
+    * intersection is an in-process hash lookup — the same place the
+    * reference evaluates its reservoir sample.
     */
   def estimateJoinSel(a: TableDesc, colA: String,
       b: TableDesc, colB: String): Option[Double] = {
-    ensureFresh(a); ensureFresh(b)
     val va = sampleColumn(a, colA)
     val vb = sampleColumn(b, colB)
     if (va.isEmpty || vb.isEmpty) None
@@ -351,7 +347,7 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
   /** Full rebuild after a copy-on-write rewrite (DELETE/UPDATE): rowcount,
     * per-column sketches (distributed, via SketchAggregator — sketches
     * merge map-side, only ~15 KB per column crosses the shuffle) and the
-    * deterministic sample.
+    * deterministic sample (one distributed top-k, collected to the driver).
     */
   def rebuild(desc: TableDesc, df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.udaf
@@ -368,36 +364,69 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
         }.toMap
       }
     stats(desc.name) = TableStats(n, sketches)
-    rewriteSample(desc, df)
+    val top = df.withColumn("__k", rebuildKey(desc)).orderBy("__k")
+      .limit(SampleSize).drop("__k").collect()
+    setSample(desc.name, Some(Bridge.unsafeRows(desc.sparkSchema, top.toSeq)))
+    deleteTree(Paths.get(s"$warehouse/_samples/${desc.name}")) // pre-sidecar layout
     rebuildBucketStats(desc, df)
     staleTables.remove(desc.name)
     staleDescs.remove(desc.name)
     save()
   }
 
-  /** Recompute the bottom-k sample from a full table image. */
-  private def rewriteSample(desc: TableDesc, df: DataFrame): Unit = {
-    val keyed = df
-      .withColumn("__k", md5(concat_ws("",
-        desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit(" "))): _*)))
-      .orderBy("__k")
-      .limit(SampleSize)
-      .drop("__k")
-    val dir = samplePath(desc.name)
-    val tmp = s"$dir.tmp"
-    keyed.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val dirP = Paths.get(dir)
-    if (Files.exists(dirP)) {
-      Files.walk(dirP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
-    Files.move(Paths.get(tmp), dirP)
-  }
-
   // ---- persistence ----
 
   private def statsPath = Paths.get(s"$warehouse/stats.json")
   private def bucketStatsPath = Paths.get(s"$warehouse/bucketstats.json")
+  private def sidecarPath(name: String) = Paths.get(s"$warehouse/samples/$name.rows")
+
+  /** Replace (Some) or forget (None) a table's resident sample and its
+    * sidecar: [field count][row count] then per row [length][UnsafeRow
+    * bytes], written to a temp file and moved into place.
+    */
+  private def setSample(name: String, rows: Option[IndexedSeq[UnsafeRow]]): Unit = {
+    val path = sidecarPath(name)
+    rows match {
+      case None =>
+        samples.remove(name)
+        Files.deleteIfExists(path)
+      case Some(rs) =>
+        samples(name) = rs
+        Files.createDirectories(path.getParent)
+        val tmp = path.resolveSibling(s"$name.rows.tmp")
+        val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(tmp)))
+        try {
+          out.writeInt(rs.headOption.map(_.numFields).getOrElse(0))
+          out.writeInt(rs.length)
+          rs.foreach { r => val b = r.getBytes; out.writeInt(b.length); out.write(b) }
+        } finally out.close()
+        Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
+  private def readSidecar(name: String): Option[IndexedSeq[UnsafeRow]] = {
+    val path = sidecarPath(name)
+    if (!Files.exists(path)) None
+    else {
+      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(path)))
+      try {
+        val fields = in.readInt()
+        Some(IndexedSeq.fill(in.readInt()) {
+          val b = new Array[Byte](in.readInt())
+          in.readFully(b)
+          val r = new UnsafeRow(fields)
+          r.pointTo(b, b.length)
+          r
+        })
+      } finally in.close()
+    }
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
 
   private def save(): Unit = {
     val enc = Base64.getEncoder
@@ -444,6 +473,16 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
           if (staleTag != null) staleTables += name
         case line if line.nonEmpty => sys.error(s"bad stats line: $line")
         case _ =>
+      }
+    }
+    // a non-empty table without a sidecar (a warehouse written before the
+    // sidecar existed keeps its sample as _samples/<t> parquet) reopens
+    // stale: the first estimator use rebuilds it through ensureFresh
+    stats.foreach { case (name, ts) =>
+      readSidecar(name) match {
+        case Some(rows)            => samples(name) = rows
+        case None if ts.rowCount > 0 => staleTables += name
+        case None                  =>
       }
     }
     if (Files.exists(bucketStatsPath)) {

@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences,
+  BoundReference, Expression, InterpretedUnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpressions}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is private[sql] in Spark 4,
   * so custom native Expressions (graft.functions.DotProduct) get their
@@ -12,6 +18,49 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Resolve `cols` over a relation of `schema` with the session's own
+    * analyzer — time zone, ANSI mode, type coercion and registered
+    * functions behave exactly as in a query — and bind them to row
+    * ordinals for interpreted evaluation on the driver. Runtime-replaceable
+    * and current-time expressions are replaced as the optimizer would.
+    */
+  def bindOver(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      cols: Seq[Column]): Seq[Expression] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rel = LocalRelation(DataTypeUtils.toAttributes(schema))
+    val plan = Project(cols.zipWithIndex.map { case (c, i) =>
+      Alias(session.expression(c), s"_$i")() }, rel)
+    val analyzed =
+      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker)
+    ComputeCurrentTime(ReplaceExpressions(analyzed)) match {
+      case Project(list, _) => list.map {
+        case a: Alias => BindReferences.bindReference(a.child, AttributeSeq(rel.output))
+        case other    => BindReferences.bindReference(other, AttributeSeq(rel.output))
+      }
+      case other => sys.error(s"unexpected analyzed projection: $other")
+    }
+  }
+
+  /** External rows (the values a DataFrame of `schema` accepts or yields)
+    * as compact UnsafeRows, converted in-process.
+    */
+  def unsafeRows(schema: StructType,
+      rows: Seq[org.apache.spark.sql.Row]): IndexedSeq[UnsafeRow] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val project = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, nullable = true) })
+    rows.iterator.map(r =>
+      project(toCatalyst(r).asInstanceOf[InternalRow]).copy()).toIndexedSeq
+  }
+
+  /** A DataFrame over driver-held rows (a LocalRelation: no Spark job). */
+  def localFrame(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Cap a checkpointed DataFrame's inherited size/rowCount estimates at
     * Long.MaxValue — the identity for every sane estimate, a bound for the

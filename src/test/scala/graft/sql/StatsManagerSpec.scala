@@ -1,10 +1,14 @@
 package graft.sql
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.JobCounter
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import Analyzer.{AttributeDesc, TableDesc}
 
 /** Statistics maintenance specs, mirroring the reference's planner and
   * statistics tests (reference planner/bottomup.rs:523-606 — "10 rows
@@ -147,5 +151,133 @@ class StatsManagerSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(df.count() == 1000)
+  }
+
+  test("a multi-table select with fresh statistics fires no Spark job before it returns") {
+    val db = freshDb()
+    db.query("CREATE TABLE ja (id INT, tag VARCHAR(10))")
+    db.query("CREATE TABLE jb (aid BIGINT, v BIGINT) CLUSTERED BY (aid) INTO 4 BUCKETS")
+    db.query("INSERT INTO ja VALUES " + (1 to 300).map(i => s"($i, 't${i % 7}')").mkString(", "))
+    db.query("INSERT INTO jb VALUES " + (1 to 600).map(i => s"(${i % 300 + 1}, $i)").mkString(", "))
+    // sample estimates for both filters, join selectivity from both
+    // samples, and the bucket-local point estimate for jb.aid = 42
+    val sql = "SELECT ja.tag, jb.v FROM ja, jb " +
+      "WHERE ja.id = jb.aid AND ja.tag <> 't3' AND jb.aid = 42"
+    val (df, jobs) = JobCounter.jobsDuring(spark.sparkContext)(db.select(sql).toOption.get)
+    assert(jobs == 0, s"$jobs Spark job(s) fired while building the statement")
+    assert(db.lastJoinOrder.exists(_.toSet == Set("ja", "jb")))
+    assert(df.collect().map(_.getLong(1)).sorted.toSeq == Seq(41L, 341L))
+  }
+
+  test("estimateCard equals the hit fraction Spark computes over the sample rows") {
+    val db = freshDb()
+    db.query("CREATE TABLE p (id INT, name VARCHAR(20), amount DECIMAL(10,2), d DATE)")
+    val names = Seq("Zoë", "Ångström", "東京", "naïve", "plain", "ÉCOLE")
+    (1 to 3000).grouped(500).foreach(batch => db.query("INSERT INTO p VALUES " + batch.map { i =>
+      val name = if (i % 11 == 0) "NULL" else s"'${names(i % names.length)}'"
+      val amount = if (i % 13 == 0) "NULL" else s"${i % 500}.25"
+      s"($i, $name, $amount, DATE '${java.time.LocalDate.of(2024, 1, 1).plusDays(i % 366)}')"
+    }.mkString(", ")))
+    val desc = TableDesc("p", Seq(AttributeDesc("id", SqlType.SqlInt),
+      AttributeDesc("name", SqlType.SqlVarChar(20)),
+      AttributeDesc("amount", SqlType.SqlDecimal(10, 2)),
+      AttributeDesc("d", SqlType.SqlDate)))
+    val rows = db.statistics.sample(desc).collect()
+    assert(rows.length == db.statistics.SampleSize)
+    val total = db.statistics.get("p").get.rowCount
+    val ref = spark.createDataFrame(java.util.Arrays.asList(rows: _*), desc.sparkSchema)
+    val preds = Seq(
+      "= NULL" -> (col("name") === lit(null)),
+      "IS NULL OR" -> (col("amount").isNull || col("id") < 40),
+      "non-ASCII =" -> (col("name") === "東京"),
+      "non-ASCII >" -> (col("name") > "Zz"),
+      "IN" -> col("id").isin(3, 5, 8, 13, 21, 34, 55, 89, 144, 233, 377, 610, 987, 1597, 2584),
+      "BETWEEN" -> col("amount").between(10, 60.5),
+      "LIKE" -> col("name").like("%ö%"),
+      "OR" -> (col("name") === "plain" || col("d") < java.sql.Date.valueOf("2024-02-01")),
+      "CAST" -> (col("d").cast("string").startsWith("2024-03") && col("amount").cast("int") > 100),
+      "graft gcd" -> (graft.functions.NumericFunctions.gcd(
+        col("id").cast("bigint"), lit(6L)) === 3L))
+    val hits = preds.map { case (label, p) =>
+      val hit = ref.filter(p).count()
+      val frac = if (hit == 0) 1.0 / (2.0 * rows.length) else hit.toDouble / rows.length
+      val want = math.max(1L, math.round(frac * total))
+      assert(db.statistics.estimateCard(desc, Some(p)) == want, s"$label: $hit sample hits")
+      hit
+    }
+    // the predicates cover empty, partial and broad hit sets
+    assert(hits.head == 0 && hits.count(h => h > 0 && h < rows.length) >= 8, hits)
+  }
+
+  test("in-process bucket ids equal Spark's pmod(hash(col), n)") {
+    val db = freshDb()
+    val cases: Seq[(SqlType, Seq[Any])] = Seq(
+      SqlType.SqlBigInt -> Seq(0L, 1L, -7L, Long.MaxValue, null),
+      SqlType.SqlInt -> Seq(0, 42, -1, Int.MinValue, null),
+      SqlType.SqlVarChar(20) -> Seq("", "abc", "Zoë", "東京", "Ångström", null),
+      SqlType.SqlDecimal(10, 2) -> Seq(new java.math.BigDecimal("0.00"),
+        new java.math.BigDecimal("123.45"), new java.math.BigDecimal("-9.99"), null),
+      SqlType.SqlDate -> Seq(java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Date.valueOf("1970-01-01"), null))
+    for ((t, values) <- cases; n <- Seq(4, 7)) {
+      val desc = TableDesc("bk", Seq(AttributeDesc("v", t)), bucket = Some(("v", n)))
+      val spark_ = spark.createDataFrame(
+          java.util.Arrays.asList(values.map(v => Row(v)): _*), desc.sparkSchema)
+        .select(pmod(hash(col("v")), lit(n))).collect().map(_.getInt(0)).toSeq
+      assert(values.map(v => db.statistics.bucketIdOf(desc, v)) == spark_, s"${t.render} n=$n")
+    }
+  }
+
+  test("driver-side state stays one resident sample per table across INSERTs") {
+    val db = freshDb()
+    db.query("CREATE TABLE g (id INT, k BIGINT) CLUSTERED BY (k) INTO 4 BUCKETS")
+    db.query("CREATE TABLE h (k BIGINT, name VARCHAR(10))")
+    db.query("INSERT INTO h VALUES " + (1 to 100).map(i => s"($i, 'n$i')").mkString(", "))
+    (1 to 50).foreach { b =>
+      db.query("INSERT INTO g VALUES " +
+        (1 to 30).map(i => s"(${b * 100 + i}, ${(b * 7 + i) % 100 + 1})").mkString(", "))
+      // every estimator runs between INSERTs: sample, join and bucket point
+      db.select(s"SELECT h.name FROM g, h WHERE g.k = h.k AND g.k = $b AND g.id > 300")
+        .toOption.get
+    }
+    assert(db.statistics.residentSampleRows ==
+      Map("g" -> db.statistics.SampleSize, "h" -> 100))
+    db.query("DROP TABLE g")
+    assert(db.statistics.residentSampleRows == Map("h" -> 100))
+  }
+
+  test("a warehouse with only legacy _samples parquet reopens stale and rebuilds on first use") {
+    val wh = Files.createTempDirectory("graft-stats-wh").toString
+    val db = new GraftDatabase(spark, wh)
+    db.query("CREATE TABLE la (id INT, g INT)")
+    db.query("CREATE TABLE lb (g INT, name VARCHAR(10))")
+    db.query("INSERT INTO la VALUES " + (1 to 400).map(i => s"($i, ${i % 40})").mkString(", "))
+    db.query("INSERT INTO lb VALUES " + (0 until 40).map(i => s"($i, 'g$i')").mkString(", "))
+    val descs = Seq(
+      TableDesc("la", Seq(AttributeDesc("id", SqlType.SqlInt), AttributeDesc("g", SqlType.SqlInt))),
+      TableDesc("lb", Seq(AttributeDesc("g", SqlType.SqlInt),
+        AttributeDesc("name", SqlType.SqlVarChar(10)))))
+    def sorted(d: TableDesc, st: StatsManager) =
+      st.sample(d).collect().map(_.toString).sorted.toSeq
+    val before = descs.map(d => sorted(d, db.statistics))
+    // the pre-sidecar layout: each sample as _samples/<t> parquet, no sidecar
+    descs.foreach { d =>
+      db.statistics.sample(d).write.parquet(s"$wh/_samples/${d.name}")
+      Files.delete(Paths.get(s"$wh/samples/${d.name}.rows"))
+    }
+    val db2 = new GraftDatabase(spark, wh)
+    assert(descs.forall(d => db2.statistics.isStale(d.name)))
+    assert(db2.statistics.residentSampleRows.isEmpty)
+    val df = db2.select("SELECT la.id, lb.name FROM la, lb WHERE la.g = lb.g AND la.id < 50")
+      .toOption.get
+    descs.foreach { d =>
+      assert(!db2.statistics.isStale(d.name))
+      assert(Files.exists(Paths.get(s"$wh/samples/${d.name}.rows")))
+      assert(!Files.exists(Paths.get(s"$wh/_samples/${d.name}")))
+    }
+    // both tables fit the sample whole, so the rebuilt samples are the
+    // insert-path ones
+    assert(descs.map(d => sorted(d, db2.statistics)) == before)
+    assert(df.count() == 49)
   }
 }
