@@ -120,8 +120,11 @@ object Bench {
     // above the accepted value) instead of it being re-timed away
     // silently.
     final case class Fired(raw: Double, kept: Double, retimes: Int)
+    // times: the queries that completed in this rep; failures: the first
+    // error of each query that threw in it (no time recorded for those)
     final case class Rep(times: Map[String, Double], sentinels: Seq[Double],
-        famBuild: Map[String, Double], fired: Map[String, Fired]) {
+        famBuild: Map[String, Double], fired: Map[String, Fired],
+        failures: Map[String, String]) {
       def ratio: Double = median(sentinels) / baseline
       def drifted: Boolean = ratio > DriftRatio
     }
@@ -167,6 +170,7 @@ object Bench {
       val sent = scala.collection.mutable.ArrayBuffer(timeSentinel())
       val famBuild = scala.collection.mutable.Map.empty[String, Double]
       val fired = scala.collection.mutable.Map.empty[String, Fired]
+      val failures = scala.collection.mutable.Map.empty[String, String]
       var i = 0
       var prevFam = ""
       // SORTED name order: deterministic run order (a Map's hash order
@@ -183,53 +187,60 @@ object Bench {
           if (HeavyFamilies.contains(prevFam)) { releaseCaches(); System.gc() }
           prevFam = fam
         }
+        // A throwing execution fails the query for this rep: its error is
+        // recorded and the rep keeps no time for it (+∞ never wins a min).
         def once(): Double = {
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case e: Throwable =>
+            failures.getOrElseUpdate(name, String.valueOf(e))
+            Double.PositiveInfinity
+          }
         }
         var t = once()
         val raw0 = t
-        // Build-vs-query split for the heavy cached families: the cold
-        // run pays this query's share of the family's shared-memo build
-        // (persisted shingle/signature/pair frames); a second, memo-warm
-        // run measures the QUERY. The surplus goes to the family's build
-        // bucket — BENCH_FULL reports it separately so an amortized
-        // build cost can't read as a slow query.
-        if (HeavyFamilies.contains(fam)) {
-          val warm = once()
-          famBuild(fam) = famBuild.getOrElse(fam, 0.0) + math.max(0.0, t - warm)
-          t = math.min(t, warm)
+        if (!failures.contains(name)) {
+          // Build-vs-query split for the heavy cached families: the cold
+          // run pays this query's share of the family's shared-memo build
+          // (persisted shingle/signature/pair frames); a second, memo-warm
+          // run measures the QUERY. The surplus goes to the family's build
+          // bucket — BENCH_FULL reports it separately so an amortized
+          // build cost can't read as a slow query.
+          if (HeavyFamilies.contains(fam)) {
+            val warm = once()
+            famBuild(fam) = famBuild.getOrElse(fam, 0.0) + math.max(0.0, t - warm)
+            t = math.min(t, warm)
+          }
+          // Transient-inflation guard: a reading >1.5× the session's best
+          // for this query re-times once and keeps the min — a GC pause or
+          // codegen-cache eviction landing on one execution must not
+          // become the rep's number. (Systematic state is handled by the
+          // family-boundary GC above; this catches the residual noise.)
+          var retimes = 0
+          if (t > 0.3 && bestSoFar.get(name).exists(b => t > b * 1.5)) {
+            t = math.min(t, once()); retimes += 1
+          }
+          // Cross-round guard: >2× the best committed median for this
+          // query on this box re-times up to twice more — only a reading
+          // that SURVIVES re-timing (a real regression) is accepted.
+          var retries = 0
+          while (retries < 2 && t > 0.3 && qref.get(name).exists(b => t > b * 2)) {
+            t = math.min(t, once()); retries += 1; retimes += 1
+          }
+          if (retimes > 0 || (HeavyFamilies.contains(fam) && t < raw0))
+            fired(name) = Fired(raw0, t, retimes)
+          bestSoFar(name) = bestSoFar.get(name).fold(t)(math.min(_, t))
         }
-        // Transient-inflation guard: a reading >1.5× the session's best
-        // for this query re-times once and keeps the min — a GC pause or
-        // codegen-cache eviction landing on one execution must not
-        // become the rep's number. (Systematic state is handled by the
-        // family-boundary GC above; this catches the residual noise.)
-        var retimes = 0
-        if (t > 0.3 && bestSoFar.get(name).exists(b => t > b * 1.5)) {
-          t = math.min(t, once()); retimes += 1
-        }
-        // Cross-round guard: >2× the best committed median for this
-        // query on this box re-times up to twice more — only a reading
-        // that SURVIVES re-timing (a real regression) is accepted.
-        var retries = 0
-        while (retries < 2 && t > 0.3 && qref.get(name).exists(b => t > b * 2)) {
-          t = math.min(t, once()); retries += 1; retimes += 1
-        }
-        if (retimes > 0 || (HeavyFamilies.contains(fam) && t < raw0))
-          fired(name) = Fired(raw0, t, retimes)
-        bestSoFar(name) = bestSoFar.get(name).fold(t)(math.min(_, t))
         i += 1
         if (i % SentinelEvery == 0) sent += timeSentinel()
         name -> t
-      }
+      }.filterNot { case (name, _) => failures.contains(name) }
       releaseCaches()
       // bound cross-rep heap pressure: one explicit GC per rep (3-5
       // pauses per bench run; keeps codegen/metaspace churn from one
       // rep inflating the small queries of the next)
       System.gc()
-      Rep(r.toMap, sent.toSeq, famBuild.toMap, fired.toMap)
+      Rep(r.toMap, sent.toSeq, famBuild.toMap, fired.toMap, failures.toMap)
     }
     val reps = scala.collection.mutable.ArrayBuffer.empty[Rep]
     while (reps.count(!_.drifted) < CleanTarget && reps.length < MaxReps) {
@@ -241,9 +252,16 @@ object Bench {
     val usable = if (clean.nonEmpty) clean else reps.toSeq
     val runDrifted = clean.isEmpty
 
-    val medians: Seq[(String, Double)] = SparkEntry.queries.keys.toSeq.map { name =>
-      name -> median(usable.map(_.times(name)))
-    }
+    // a query that threw in any usable rep has no median: BENCH_FULL lists
+    // it under "failed" with the failing rep count and its first error
+    val failed: Seq[(String, Int, String)] =
+      usable.flatMap(_.failures.keys).distinct.sorted.map { n =>
+        (n, usable.count(_.failures.contains(n)), usable.flatMap(_.failures.get(n)).head)
+      }
+    val medians: Seq[(String, Double)] = SparkEntry.queries.keys.toSeq
+      .filterNot(n => failed.exists(_._1 == n)).map { name =>
+        name -> median(usable.map(_.times(name)))
+      }
     def f3(d: Double): Double = math.rint(d * 1000) / 1000
     // Per-family shared-memo build cost (median across usable reps):
     // heavy-family query times above are memo-WARM; the family's
@@ -296,9 +314,19 @@ object Bench {
     // full JSON to a repo file, print it as the FIRST stdout line (before
     // shutdown logging), flush, then print a SHORT self-contained summary
     // line that parses even if the long line is cut from either end.
+    def jsonStr(x: String): String = x.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }
+    val failedJson = failed.map { case (n, reps, err) =>
+      s""""$n":{"reps_failed":$reps,"error":"${jsonStr(err)}"}"""
+    }.mkString("{", ",", "}")
     try {
       val p = java.nio.file.Paths.get(repoRoot, "BENCH_FULL.json")
-      java.nio.file.Files.write(p, line.getBytes("UTF-8"))
+      java.nio.file.Files.write(p,
+        (line.dropRight(1) + s""","failed":$failedJson}""").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     println(line)
     Console.out.flush()
