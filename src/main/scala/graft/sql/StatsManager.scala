@@ -251,23 +251,23 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     * union = min-k of min-k's) — the property the reference's reservoir
     * skip machinery exists to provide.
     */
-  private def bottomK(desc: TableDesc, key: Column,
-      rows: IndexedSeq[UnsafeRow]): IndexedSeq[UnsafeRow] = {
-    val k = bind(desc.sparkSchema, key).head
+  private def bottomK(desc: TableDesc, rows: IndexedSeq[UnsafeRow]): IndexedSeq[UnsafeRow] = {
+    val k = bind(desc.sparkSchema, sampleKey(desc)).head
     rows.map(r => k.eval(r).toString -> r).sortBy(_._1).take(SampleSize).map(_._2)
   }
 
-  private def insertKey(desc: TableDesc): Column =
+  /** The one bottom-k key, for the INSERT merge and the full rebuild
+    * alike: md5 of the row's string image, columns joined by U+0001 and
+    * NULL written as U+0000, so no two different rows share an image by
+    * concatenation (("a","bc") vs ("ab","c")) or by NULL vs a literal.
+    */
+  private def sampleKey(desc: TableDesc): Column =
     md5(concat_ws("\u0001",
       desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit("\u0000"))): _*))
 
-  private def rebuildKey(desc: TableDesc): Column =
-    md5(concat_ws("",
-      desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit(" "))): _*))
-
   /** Merge an inserted batch into the resident sample, in-process. */
   private def updateSample(desc: TableDesc, rows: Seq[Seq[Any]]): Unit =
-    setSample(desc.name, Some(bottomK(desc, insertKey(desc),
+    setSample(desc.name, Some(bottomK(desc,
       samples.getOrElse(desc.name, IndexedSeq.empty) ++
         Bridge.unsafeRows(desc.sparkSchema, rows.map(Row.fromSeq)))))
 
@@ -364,7 +364,7 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
         }.toMap
       }
     stats(desc.name) = TableStats(n, sketches)
-    val top = df.withColumn("__k", rebuildKey(desc)).orderBy("__k")
+    val top = df.withColumn("__k", sampleKey(desc)).orderBy("__k")
       .limit(SampleSize).drop("__k").collect()
     setSample(desc.name, Some(Bridge.unsafeRows(desc.sparkSchema, top.toSeq)))
     deleteTree(Paths.get(s"$warehouse/_samples/${desc.name}")) // pre-sidecar layout

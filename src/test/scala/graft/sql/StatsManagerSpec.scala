@@ -280,4 +280,35 @@ class StatsManagerSpec extends AnyFunSuite {
     assert(descs.map(d => sorted(d, db2.statistics)) == before)
     assert(df.count() == 49)
   }
+
+  test("import, rebuild and INSERTs share one bottom-k key: the sample is the table's bottom-k") {
+    import org.apache.spark.sql.functions.{coalesce, concat_ws, md5}
+    val wh = Files.createTempDirectory("graft-stats-wh").toString
+    val src = s"$wh-src.parquet"
+    // pairs like ("a","bc") / ("ab","c") collide when columns are joined
+    // without a separator; NULLs and non-ASCII strings ride along
+    val rows: Seq[Row] = (1 to 3000).map { i =>
+      val (a, b) = if (i % 2 == 0) (s"x$i", "yz") else (s"x${i - 1}y", "z")
+      Row(if (i % 17 == 0) null else a, if (i % 19 == 0) null else s"${b}é", i)
+    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("a STRING, b STRING, n INT")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).write.parquet(src)
+    val db = new GraftDatabase(spark, wh)
+    assert(db.importParquet("kt", src) == 3000)
+    val desc = TableDesc("kt", schema.fields.toSeq.map(f =>
+      AttributeDesc(f.name, SqlType.fromSpark(f.dataType))))
+    db.statistics.sample(desc) // runs the deferred post-import rebuild
+    (0 until 3).foreach { b =>
+      db.query("INSERT INTO kt VALUES " + (1 to 200).map { i =>
+        val n = 10000 + b * 200 + i
+        if (i % 2 == 0) s"('k$n', 'vw', $n)" else s"('k${n - 1}v', 'w', $n)"
+      }.mkString(", "))
+    }
+    assert(db.statistics.get("kt").get.rowCount == 3600)
+    val key = md5(concat_ws("\u0001", Seq("a", "b", "n").map(c =>
+      coalesce(col(c).cast("string"), lit("\u0000"))): _*))
+    val want = spark.read.parquet(s"$wh/data/kt").orderBy(key)
+      .limit(db.statistics.SampleSize).collect().map(_.toString).sorted.toSeq
+    assert(db.statistics.sample(desc).collect().map(_.toString).sorted.toSeq == want)
+  }
 }
