@@ -16,18 +16,32 @@ import Analyzer._
 
 /** Online table statistics, mirroring the reference's statistics subsystem
   * (SURVEY.md §4.3): per-column counting-HLL NDV sketches and a
-  * deterministic bottom-k-by-hash sample per table, both maintained on
-  * every INSERT (reference access/heap.rs:245-292 updates its sketches and
-  * reservoir sample on the same write path). The sample feeds selectivity
-  * estimation by executing predicates against it (reference
-  * planner/bottomup.rs:111-168); the planner uses the estimates to pick
-  * broadcast sides (reference optimizer/optimizer.rs:177-180 picks hash
-  * build sides the same way).
+  * deterministic bottom-k sample per table, both maintained on every
+  * INSERT (reference access/heap.rs:245-292). The planner estimates
+  * cardinalities and join selectivities from the sample (reference
+  * planner/bottomup.rs:111-168) and picks join order and build sides from
+  * them (reference optimizer/optimizer.rs:60-104, 177-180).
   *
-  * Replacements for the HOW: the reference's AES-CTR skip-list reservoir
-  * becomes bottom-k by md5(row) — equally uniform, but deterministic,
-  * mergeable across batches/partitions, and engine-reproducible; sketches
-  * persist as base64 ints in a JSON sidecar instead of catalog segments.
+  * The sample is resident: ≤ SampleSize UnsafeRows per table, held by the
+  * driver like the reference's in-memory reservoir. Each estimate
+  * (predicate hit fraction, sample-join selectivity, bucket id) resolves
+  * its expression once with the session's analyzer and evaluates it
+  * interpreted over those rows, so planning with fresh statistics runs no
+  * Spark job. INSERTs merge their batch in-process; a full rebuild makes
+  * one distributed top-k pass and collects it. initTable/rebuild replace
+  * and dropTable removes a table's sample — nothing else is cached.
+  *
+  * One key on both paths: md5 of the row's string image, columns joined by
+  * U+0001 and NULL as U+0000 (bottom-k of a union = bottom-k of bottom-k's).
+  * It replaces the reference's AES-CTR skip-list reservoir: equally
+  * uniform, but deterministic and mergeable.
+  *
+  * Persistence, outside data/: stats.json (row counts, base64 sketches,
+  * stale flags), bucketstats.json and one sidecar per table,
+  * samples/<table>.rows — [field count][row count], then [length][UnsafeRow
+  * bytes] per row, which covers every SqlType. A non-empty table without a
+  * sidecar (a warehouse that kept _samples/<table> parquet) reopens stale;
+  * its first estimator use rebuilds it and deletes the legacy directory.
   */
 final class StatsManager(spark: SparkSession, warehouse: String) {
 
@@ -166,39 +180,35 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
 
   // ---- bucket-local statistics ----
 
-  /** Spark's bucket id for a value — pmod(murmur3(value), n), the engine's
-    * own `hash` expression (the same Murmur3/seed-42 the bucketed write
-    * used) evaluated in-process, so the estimate points at the file the
-    * scan will actually prune to. Value must already have the column's type.
+  /** (bucket id, string image) of bucket-column values, evaluated
+    * in-process: pmod(murmur3(v), n) is the engine's own `hash` expression
+    * — the same Murmur3/seed-42 the bucketed write used — so an estimate
+    * points at the file the scan will prune to. Values must already have
+    * the column's type.
     */
-  def bucketIdOf(desc: TableDesc, value: Any): Int = {
+  private def bucketed(desc: TableDesc, values: Seq[Any]): Seq[(Int, String)] = {
     val (bcol, n) = desc.bucket.get
-    val schema = bucketSchema(desc, bcol)
-    val id = bind(schema, pmod(hash(col("v")), lit(n))).head
-    id.eval(Bridge.unsafeRows(schema, Seq(Row(value))).head).asInstanceOf[Int]
+    val schema = StructType(Seq(StructField("v", desc.attr(bcol).get.sqlType.spark)))
+    val Seq(id, image) = bind(schema, pmod(hash(col("v")), lit(n)), col("v").cast("string"))
+    Bridge.unsafeRows(schema, values.map(Row(_))).map(r =>
+      (id.eval(r).asInstanceOf[Int], Option(image.eval(r)).map(_.toString).orNull))
   }
 
-  private def bucketSchema(desc: TableDesc, bcol: String): StructType =
-    StructType(Seq(StructField("v", desc.attr(bcol).get.sqlType.spark)))
+  def bucketIdOf(desc: TableDesc, value: Any): Int = bucketed(desc, Seq(value)).head._1
 
-  /** Incremental per-bucket fold on the INSERT path: bucket ids and the
-    * sketch's string images evaluate in-process; counts and sketches
+  /** Incremental per-bucket fold on the INSERT path: counts and sketches
     * update driver-side (REPL-scale batches, same cost class as
     * recordInsert).
     */
   private def recordBucketInsert(desc: TableDesc, rows: Seq[Seq[Any]]): Unit =
-    desc.bucket.foreach { case (bcol, n) =>
+    desc.bucket.foreach { case (bcol, _) =>
       val idx = desc.attributes.indexWhere(_.name.equalsIgnoreCase(bcol))
-      val schema = bucketSchema(desc, bcol)
-      val Seq(id, image) = bind(schema, pmod(hash(col("v")), lit(n)), col("v").cast("string"))
       val prev = bstats.getOrElse(desc.name, BucketStats(Map.empty, Map.empty))
       val rowsM = mutable.Map(prev.rows.toSeq: _*).withDefaultValue(0L)
       val sksM = mutable.Map(prev.sketches.map { case (k, v) => k -> v.clone() }.toSeq: _*)
-      Bridge.unsafeRows(schema, rows.map(r => Row(r(idx)))).foreach { r =>
-        val b = id.eval(r).asInstanceOf[Int]
+      bucketed(desc, rows.map(_(idx))).foreach { case (b, image) =>
         rowsM(b) = rowsM(b) + 1
-        val sk = sksM.getOrElseUpdate(b, CountingHll.emptySketch)
-        CountingHll.add(sk, Option(image.eval(r)).map(_.toString).orNull)
+        CountingHll.add(sksM.getOrElseUpdate(b, CountingHll.emptySketch), image)
       }
       bstats(desc.name) = BucketStats(rowsM.toMap, sksM.toMap)
     }
@@ -405,22 +415,18 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     }
   }
 
-  private def readSidecar(name: String): Option[IndexedSeq[UnsafeRow]] = {
-    val path = sidecarPath(name)
-    if (!Files.exists(path)) None
-    else {
-      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(path)))
-      try {
-        val fields = in.readInt()
-        Some(IndexedSeq.fill(in.readInt()) {
-          val b = new Array[Byte](in.readInt())
-          in.readFully(b)
-          val r = new UnsafeRow(fields)
-          r.pointTo(b, b.length)
-          r
-        })
-      } finally in.close()
-    }
+  private def readSidecar(path: java.nio.file.Path): IndexedSeq[UnsafeRow] = {
+    val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(path)))
+    try {
+      val fields = in.readInt()
+      IndexedSeq.fill(in.readInt()) {
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        val r = new UnsafeRow(fields)
+        r.pointTo(b, b.length)
+        r
+      }
+    } finally in.close()
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit =
@@ -479,11 +485,9 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     // sidecar existed keeps its sample as _samples/<t> parquet) reopens
     // stale: the first estimator use rebuilds it through ensureFresh
     stats.foreach { case (name, ts) =>
-      readSidecar(name) match {
-        case Some(rows)            => samples(name) = rows
-        case None if ts.rowCount > 0 => staleTables += name
-        case None                  =>
-      }
+      val path = sidecarPath(name)
+      if (Files.exists(path)) samples(name) = readSidecar(path)
+      else if (ts.rowCount > 0) staleTables += name
     }
     if (Files.exists(bucketStatsPath)) {
       val bRe = """\{"table":"([^"]+)","bucket":(\d+),"rows":(\d+),"sketch":"([^"]*)"\}""".r

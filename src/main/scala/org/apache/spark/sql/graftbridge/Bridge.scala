@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.StructType
 /** Column ⇄ Expression bridge. `ExpressionUtils` is private[sql] in Spark 4,
   * so custom native Expressions (graft.functions.DotProduct) get their
   * Column wrapper through this package-located shim — the standard pattern
-  * for Spark extension libraries that ship Catalyst expressions.
+  * for Spark extension libraries that ship Catalyst expressions. The same
+  * access lets the statistics evaluate Columns over driver-held rows.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
