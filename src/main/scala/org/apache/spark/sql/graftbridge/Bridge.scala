@@ -21,10 +21,11 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Resolve `cols` over a relation of `schema` with the session's own
-    * analyzer — time zone, ANSI mode, type coercion and registered
-    * functions behave exactly as in a query — and bind them to row
-    * ordinals for interpreted evaluation on the driver. Runtime-replaceable
-    * and current-time expressions are replaced as the optimizer would.
+    * analyzer, that session active — time zone, ANSI mode, type coercion
+    * and registered functions behave exactly as in a query — and bind them
+    * to row ordinals for interpreted evaluation on the driver.
+    * Runtime-replaceable and current-time expressions are replaced as the
+    * optimizer would.
     */
   def bindOver(spark: org.apache.spark.sql.SparkSession, schema: StructType,
       cols: Seq[Column]): Seq[Expression] = {
@@ -32,8 +33,8 @@ object Bridge {
     val rel = LocalRelation(DataTypeUtils.toAttributes(schema))
     val plan = Project(cols.zipWithIndex.map { case (c, i) =>
       Alias(session.expression(c), s"_$i")() }, rel)
-    val analyzed =
-      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker)
+    val analyzed = session.withActive(
+      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker))
     ComputeCurrentTime(ReplaceExpressions(analyzed)) match {
       case Project(list, _) => list.map {
         case a: Alias => BindReferences.bindReference(a.child, AttributeSeq(rel.output))
