@@ -41,7 +41,12 @@ import Analyzer._
   * samples/<table>.rows — [field count][row count], then [length][UnsafeRow
   * bytes] per row, which covers every SqlType. A non-empty table without a
   * sidecar (a warehouse that kept _samples/<table> parquet) reopens stale;
-  * its first estimator use rebuilds it and deletes the legacy directory.
+  * its first estimator use rebuilds it.
+  *
+  * A stale table holds no sample: markStale drops it (the rewrite may have
+  * changed the columns), INSERTs skip the merge, and ensureFresh rebuilds
+  * it before any read. Resident rows therefore always have the layout of
+  * the table's current descriptor.
   */
 final class StatsManager(spark: SparkSession, warehouse: String) {
 
@@ -106,6 +111,7 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     stats(desc.name) = TableStats(n, prev.sketches, prev.ndvOverride)
     staleTables += desc.name
     staleDescs(desc.name) = desc
+    setSample(desc.name, None)
     save()
     n
   }
@@ -275,11 +281,14 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     md5(concat_ws("\u0001",
       desc.attributes.map(a => coalesce(col(a.name).cast("string"), lit("\u0000"))): _*))
 
-  /** Merge an inserted batch into the resident sample, in-process. */
+  /** Merge an inserted batch into the resident sample, in-process. A
+    * stale table has no sample to merge into; its rebuild covers the batch.
+    */
   private def updateSample(desc: TableDesc, rows: Seq[Seq[Any]]): Unit =
-    setSample(desc.name, Some(bottomK(desc,
-      samples.getOrElse(desc.name, IndexedSeq.empty) ++
-        Bridge.unsafeRows(desc.sparkSchema, rows.map(Row.fromSeq)))))
+    if (!staleTables.contains(desc.name))
+      setSample(desc.name, Some(bottomK(desc,
+        samples.getOrElse(desc.name, IndexedSeq.empty) ++
+          Bridge.unsafeRows(desc.sparkSchema, rows.map(Row.fromSeq)))))
 
   private def sampleRows(desc: TableDesc): IndexedSeq[UnsafeRow] = {
     ensureFresh(desc)
@@ -377,7 +386,6 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     val top = df.withColumn("__k", sampleKey(desc)).orderBy("__k")
       .limit(SampleSize).drop("__k").collect()
     setSample(desc.name, Some(Bridge.unsafeRows(desc.sparkSchema, top.toSeq)))
-    deleteTree(Paths.get(s"$warehouse/_samples/${desc.name}")) // pre-sidecar layout
     rebuildBucketStats(desc, df)
     staleTables.remove(desc.name)
     staleDescs.remove(desc.name)
@@ -428,11 +436,6 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
       }
     } finally in.close()
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
 
   private def save(): Unit = {
     val enc = Base64.getEncoder

@@ -273,12 +273,42 @@ class StatsManagerSpec extends AnyFunSuite {
     descs.foreach { d =>
       assert(!db2.statistics.isStale(d.name))
       assert(Files.exists(Paths.get(s"$wh/samples/${d.name}.rows")))
-      assert(!Files.exists(Paths.get(s"$wh/_samples/${d.name}")))
     }
     // both tables fit the sample whole, so the rebuilt samples are the
     // insert-path ones
     assert(descs.map(d => sorted(d, db2.statistics)) == before)
     assert(df.count() == 49)
+  }
+
+  test("schema-changing ALTERs drop the resident sample; INSERTs while stale keep none") {
+    import org.apache.spark.sql.functions.{coalesce, concat_ws, md5}
+    val db = freshDb()
+    db.query("CREATE TABLE sa (id INT, n INT)")
+    db.query("INSERT INTO sa VALUES " + (1 to 1500).map(i => s"($i, ${i % 97})").mkString(", "))
+    assert(db.statistics.residentSampleRows.get("sa").contains(db.statistics.SampleSize))
+    def insertWhileStale(values: Seq[String]): Unit = {
+      db.query("INSERT INTO sa VALUES " + values.mkString(", "))
+      assert(db.statistics.isStale("sa"))
+      assert(!db.statistics.residentSampleRows.contains("sa"))
+    }
+    // a wider row: the old two-field sample rows must not meet the new key
+    assert(db.query("ALTER TABLE sa ADD COLUMN s VARCHAR(10)").isRight)
+    insertWhileStale((1501 to 1800).map(i => s"($i, ${i % 97}, 'é$i')"))
+    // INT -> VARCHAR: the old int slots must not be read as strings
+    assert(db.query("ALTER TABLE sa ALTER COLUMN n TYPE VARCHAR(12)").isRight)
+    insertWhileStale((1801 to 2100).map(i => s"($i, 'v$i', NULL)"))
+    val desc = TableDesc("sa", Seq(AttributeDesc("id", SqlType.SqlInt),
+      AttributeDesc("n", SqlType.SqlVarChar(12)), AttributeDesc("s", SqlType.SqlVarChar(10))))
+    val key = md5(concat_ws("\u0001", Seq("id", "n", "s").map(c =>
+      coalesce(col(c).cast("string"), lit("\u0000"))): _*))
+    def bottomK() = db.select("SELECT id, n, s FROM sa").toOption.get.orderBy(key)
+      .limit(db.statistics.SampleSize).collect().map(_.toString).sorted.toSeq
+    def resident() = db.statistics.sample(desc).collect().map(_.toString).sorted.toSeq
+    assert(resident() == bottomK()) // the first read rebuilds the sample
+    // fresh again: the next INSERT merges into rows of the new layout
+    db.query("INSERT INTO sa VALUES " + (2101 to 2400).map(i => s"($i, 'w$i', 'x')").mkString(", "))
+    assert(!db.statistics.isStale("sa"))
+    assert(resident() == bottomK())
   }
 
   test("import, rebuild and INSERTs share one bottom-k key: the sample is the table's bottom-k") {
