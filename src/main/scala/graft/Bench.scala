@@ -308,27 +308,28 @@ object Bench {
     // total stays all-inclusive (query medians + family builds) so it
     // remains comparable with pre-split rounds
     val total = medians.map(_._2).sum + famBuildMed.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"family_build":$famJson,"guards":$guardJson,"sf":"$sfDir","reps":${usable.length},"agg":"median","drift":$drift}"""
+    // a query that threw is missing from "queries" and "total": both
+    // stdout lines name it, so a failure never reads as a speed-up (the
+    // key is absent, and the lines unchanged, when nothing failed)
+    import graft.sql.FuzzDump.jsonStr
+    val failedKey =
+      if (failed.isEmpty) ""
+      else failed.map(f => jsonStr(f._1)).mkString(""","failed":[""", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"family_build":$famJson,"guards":$guardJson,"sf":"$sfDir","reps":${usable.length},"agg":"median","drift":$drift"""
     // The driver's capture truncates long output, which has cut this
     // (multi-KB) line in past rounds. Defend from every side: persist the
     // full JSON to a repo file, print it as the FIRST stdout line (before
     // shutdown logging), flush, then print a SHORT self-contained summary
     // line that parses even if the long line is cut from either end.
-    def jsonStr(x: String): String = x.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
     val failedJson = failed.map { case (n, reps, err) =>
-      s""""$n":{"reps_failed":$reps,"error":"${jsonStr(err)}"}"""
+      s"""${jsonStr(n)}:{"reps_failed":$reps,"error":${jsonStr(err)}}"""
     }.mkString("{", ",", "}")
     try {
       val p = java.nio.file.Paths.get(repoRoot, "BENCH_FULL.json")
       java.nio.file.Files.write(p,
-        (line.dropRight(1) + s""","failed":$failedJson}""").getBytes("UTF-8"))
+        (line + s""","failed":$failedJson}""").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    println(line)
+    println(line + failedKey + "}")
     Console.out.flush()
     // The driver keeps only the LAST ~2000 chars of stdout and its parser
     // requires a complete JSON line with a "queries" key — the full line
@@ -339,7 +340,7 @@ object Bench {
     val top = medians.sortBy(-_._2).take(25)
       .map { case (k, v) => f"""\"$k\":${f3(v)}%s""" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"family_build":$famJson,"sf":"$sfDir","reps":${usable.length},"agg":"median","queries_shown":"top25_by_median","queries_total":${medians.length},"queries_file":"BENCH_FULL.json","drift":$drift}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$top,"family_build":$famJson,"sf":"$sfDir","reps":${usable.length},"agg":"median","queries_shown":"top25_by_median","queries_total":${medians.length},"queries_file":"BENCH_FULL.json","drift":$drift$failedKey}""")
     Console.out.flush()
     spark.stop()
   }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FuzzDump {
 
-  private def jsonStr(s: String): String =
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
