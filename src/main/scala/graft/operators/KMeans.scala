@@ -56,6 +56,7 @@ object KMeans {
     */
   def train(df: DataFrame, idCol: String, eCol: String, k: Int, iters: Int,
       roundTo: Option[Int] = None): Model = {
+    require(k > 0, s"KMeans.train needs k >= 1 (got $k)")
     // deterministic seeding: smallest md5(id). The seed rows also carry
     // the dimensionality — no separate size() probe job over the data.
     val seeds = df
@@ -64,6 +65,7 @@ object KMeans {
       .select(col(eCol)).collect()
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](0).toArray) }
+    require(seeds.nonEmpty, "KMeans.train needs a non-empty training input")
     val dim = seeds.headOption.map(_._2.length).getOrElse(0)
     var model = Model(seeds)
     // The Lloyd loop runs statically planned (AQE off, saved/restored):
@@ -71,15 +73,10 @@ object KMeans {
     // per row into a (cid, dim) partial aggregate of k·dim groups — so
     // runtime re-planning discovers nothing and only costs one
     // separately scheduled query-stage job per exchange (the CC /
-    // recursive-CTE fixpoint recipe). Conf mutation assumes the
-    // single-threaded driver of the gate/bench shape; the set happens
-    // INSIDE the try so a failing action can't leak AQE=off into the
-    // session.
+    // recursive-CTE fixpoint recipe), scoped by Fixpoint.withConfRestored.
     val spark = df.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = spark.conf.get(aqeKey, "true")
-    try {
-      spark.conf.set(aqeKey, "false")
+    Fixpoint.withConfRestored(spark, Fixpoint.AqeKey) {
+      spark.conf.set(Fixpoint.AqeKey, "false")
       for (_ <- 1 to iters) {
         val assigned = df.withColumn("cid", model.assignExpr(col(eCol)))
         val sums = assigned
@@ -103,7 +100,7 @@ object KMeans {
         }
         model = Model(next)
       }
-    } finally spark.conf.set(aqeKey, aqeBefore)
+    }
     model
   }
 

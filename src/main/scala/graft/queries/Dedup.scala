@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.operators.Fixpoint
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -223,21 +225,11 @@ object Dedup {
     // variant — edges by v, labels by id, shared partition count — was
     // measured WORSE under AQE: 130 jobs, the extra repartitions became
     // stages of their own.)
-    // Conf mutation assumes the SINGLE-THREADED driver of the gate /
-    // bench shape: a query planned concurrently on this session during
-    // the fixpoint would silently see AQE off / a clamped width, and two
-    // interleaved fixpoints could restore each other's values. Callers
-    // that plan queries from multiple threads must isolate the loop in a
-    // cloned session (spark.newSession() shares state, isolates conf).
-    // Every conf set sits INSIDE the try so a failing action can't leak
-    // the mutation past the finally (ADVICE r15).
+    // The conf is scoped by Fixpoint.withConfRestored (restored also when
+    // an action fails; see there for the single-threaded assumption).
     val session = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val aqeBefore = session.conf.get(aqeKey, "true")
-    val partsBefore = session.conf.get(partsKey)
-    try {
-    session.conf.set(aqeKey, "false")
+    Fixpoint.withConfRestored(session, Fixpoint.AqeKey, Fixpoint.PartitionsKey) {
+    session.conf.set(Fixpoint.AqeKey, "false")
     val edges = ckpt(pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .union(pairs.select(col("b_id").as("u"), col("a_id").as("v"))))
     // Static stand-in for AQE's partition coalescing: the loop's shuffle
@@ -246,10 +238,8 @@ object Dedup {
     // graph keeps the cluster-default width, the gate's 1,800-edge graph
     // gets 1, so the statically-planned rounds don't run a fleet of
     // empty tasks per exchange. Scale-adaptive, never a local constant.
-    val parts = math.max(1L, math.min(
-      session.sparkContext.defaultParallelism.toLong,
-      edges.count() / 2000000L + 1L)).toInt
-    session.conf.set(partsKey, parts.toString)
+    session.conf.set(Fixpoint.PartitionsKey,
+      Fixpoint.loopWidth(session, edges.count()).toString)
     var labels = ckpt(edges.select(col("u").as("id")).distinct()
       .withColumn("lbl", col("id")))
     // One full propagation hop: adopt the min label among self+neighbors,
@@ -291,9 +281,6 @@ object Dedup {
     }
     lastCcRounds = iter
     labels.select(col("id"), col("lbl").as("cluster"))
-    } finally {
-      session.conf.set(aqeKey, aqeBefore)
-      session.conf.set(partsKey, partsBefore)
     }
   }
 

@@ -1155,15 +1155,6 @@ object Analyzer {
     catch { case e: Exception => Left(s"structure is not valid JSON") }
   }
 
-  /** The column-capable INTERVAL constructors (to_days(n) …): interval-
-    * valued operands, legal only on the right of temporal + / −, exactly
-    * like INTERVAL literals.
-    */
-  private[sql] val IntervalFuncs: Set[String] = Set(
-    "to_years", "to_quarters", "to_months", "to_weeks", "to_days",
-    "to_hours", "to_minutes", "to_seconds", "to_milliseconds",
-    "to_microseconds", "to_decades", "to_centuries", "to_millennia")
-
   /** ENUM ordering plumbing: an enum value's sort key is its 1-based
     * DEFINITION position, not its text (DuckDB probed: </>/min/max
     * follow declared order). The value list rides to the lowering as a
@@ -1193,7 +1184,7 @@ object Analyzer {
     case BoundOperand.BArith(_, l, BoundOperand.BInterval(_, _)) =>
       operandType(l) // temporal ± INTERVAL keeps the temporal type
     case BoundOperand.BArith(_, l, BoundOperand.BFunc(f, _))
-        if IntervalFuncs(f) =>
+        if Functions.isIntervalConstructor(f) =>
       operandType(l) // temporal ± to_days(n) keeps the temporal type
     case BoundOperand.BInterval(_, _) => SqlType.SqlTimestamp // placeholder
     case BoundOperand.BArith(op, l, r) =>
@@ -1230,263 +1221,8 @@ object Analyzer {
         case (SqlType.SqlDouble, _) | (_, SqlType.SqlDouble) => SqlType.SqlDouble
         case _ => SqlType.SqlBigInt
       }
-    case BoundOperand.BFunc(f, args) => f match {
-      case "upper" | "lower" | "trim" | "substr" | "concat" | "||" | "replace" |
-           "ltrim" | "rtrim" | "reverse" | "md5" | "repeat" |
-           "lpad" | "rpad" | "split_part" |
-           "regexp_replace" | "regexp_extract" |
-           "left" | "right" | "translate" =>
-        SqlType.SqlVarChar(65535)
-      case "length" | "year" | "month" | "day" | "instr" | "datediff" |
-           "sign" | "quarter" | "hour" | "minute" | "second" |
-           "levenshtein" | "ascii" =>
-        SqlType.SqlInt
-      case "chr" | "to_hex" => SqlType.SqlVarChar(65535)
-      case "epoch_ms" | "epoch_us" => SqlType.SqlBigInt
-      case "epoch"          => SqlType.SqlDouble
-      case "make_timestamp" => SqlType.SqlTimestamp
-      case "date_part" => args.head match {
-        case BoundOperand.BLit(Lit.LitString(u))
-            if u.equalsIgnoreCase("epoch") => SqlType.SqlDouble
-        case _ => SqlType.SqlInt
-      }
-      case "abs"      => operandType(args.head)
-      case "round"    => SqlType.SqlDouble
-      case "coalesce" => operandType(args.head)
-      case "nullif" | "greatest" | "least" => operandType(args.head)
-      case "floor" | "ceil" => SqlType.SqlBigInt
-      case "mod"      => operandType(args.head)
-      case "date_trunc" => SqlType.SqlTimestamp
-      case "last_day" | "make_date" => SqlType.SqlDate
-      // list/array functions
-      case "len" | "array_length" | "list_position" | "array_position" =>
-        SqlType.SqlBigInt
-      case "list_contains" | "array_contains" => SqlType.SqlBool
-      case "list_extract" | "list_element" | "unnest" =>
-        operandType(args.head) match {
-          case SqlType.SqlArray(e) => e
-          case other               => other
-        }
-      // map surface (DuckDB): subscript/map_extract read a LIST of the
-      // value ([] when absent)
-      case "__map_lit" =>
-        if (args.isEmpty) SqlType.SqlMap(SqlType.SqlInt, SqlType.SqlInt)
-        else SqlType.SqlMap(operandType(args(0)), operandType(args(1)))
-      case "map" => (operandType(args(0)), operandType(args(1))) match {
-        case (SqlType.SqlArray(k), SqlType.SqlArray(v)) => SqlType.SqlMap(k, v)
-        case _ => SqlType.SqlMap(SqlType.SqlInt, SqlType.SqlInt) // rejected later
-      }
-      case "map_extract" => operandType(args.head) match {
-        case SqlType.SqlMap(_, v) => SqlType.SqlArray(v)
-        case other                => other
-      }
-      case "map_keys" => operandType(args.head) match {
-        case SqlType.SqlMap(k, _) => SqlType.SqlArray(k)
-        case other                => other
-      }
-      case "map_values" => operandType(args.head) match {
-        case SqlType.SqlMap(_, v) => SqlType.SqlArray(v)
-        case other                => other
-      }
-      case "cardinality" => SqlType.SqlBigInt
-      case "list_distinct" | "array_distinct" | "list_sort" | "array_sort" |
-           "list_concat" | "array_concat" | "list_slice" | "list_filter" =>
-        operandType(args.head)
-      case "isnan" | "isfinite" | "isinf" |
-           "starts_with" | "ends_with" | "contains" |
-           "regexp_matches"      => SqlType.SqlBool
-      case "printf" | "strftime" => SqlType.SqlVarChar(65535)
-      case "factorial" | "gcd" | "lcm" | "hamming" | "date_diff" |
-           "damerau_levenshtein" | "mismatches" =>
-        SqlType.SqlBigInt
-      // list_cosine_similarity/list_distance/list_dot_product/
-      // list_inner_product / jaro / jaro_winkler fall to the SqlDouble
-      // default below
-      case "strip_accents" | "nfc_normalize" | "format_bytes" =>
-        SqlType.SqlVarChar(65535)
-      case "ord" => SqlType.SqlInt
-      case "list_select" | "list_where" | "list_resize" |
-           "list_reverse_sort" =>
-        operandType(args.head)
-      case "list_grade_up" => SqlType.SqlArray(SqlType.SqlBigInt)
-      case "list_any_value" => operandType(args.head) match {
-        case SqlType.SqlArray(e) => e
-        case other               => other
-      }
-      case "map_entries" => operandType(args.head) match {
-        case SqlType.SqlMap(k, v) =>
-          SqlType.SqlArray(SqlType.SqlStruct(Vector("key" -> k, "value" -> v)))
-        case other => other
-      }
-      case "map_concat" => operandType(args.head)
-      case "element_at" => operandType(args.head) match {
-        case SqlType.SqlMap(_, v) => SqlType.SqlArray(v)
-        case other                => other
-      }
-      case "format" => SqlType.SqlVarChar(65535)
-      case "__intdiv" => SqlType.SqlBigInt
-      case "dayname" | "monthname" => SqlType.SqlVarChar(65535)
-      case "signbit" | "prefix" | "suffix" | "regexp_full_match" =>
-        SqlType.SqlBool
-      case "century" | "isodow" | "week" | "weekofyear" | "dayofmonth" |
-           "isoyear" => SqlType.SqlInt
-      case "bin" | "to_base64" | "regexp_escape" => SqlType.SqlVarChar(65535)
-      case "unbin" | "from_base64" => SqlType.SqlVarBinary(65535)
-      case "xor" => SqlType.SqlBigInt
-      case "try_strptime" => SqlType.SqlTimestamp
-      case "millisecond" | "microsecond" | "decade" | "millennium" |
-           "weekday" | "yearweek" | "era" => SqlType.SqlInt
-      case "json_extract" | "json_extract_path" | "json_type" |
-           "json_object" | "json_array" => SqlType.SqlVarChar(65535)
-      // wave 9
-      case "encode" => SqlType.SqlVarBinary(65535)
-      case "decode" | "json_quote" | "bar" | "error" |
-           "current_database" | "current_schema" | "version" | "uuid" |
-           "formatreadabledecimalsize" =>
-        SqlType.SqlVarChar(65535)
-      case "epoch_ns" | "length_grapheme" => SqlType.SqlBigInt
-      case "json_merge_patch" | "json_structure" => SqlType.SqlVarChar(65535)
-      case "json_contains" => SqlType.SqlBool
-      case "fdiv" | "fmod" => SqlType.SqlDouble
-      case "array_cross_product" => SqlType.SqlArray(SqlType.SqlDouble)
-      case "timezone" | "timezone_hour" | "timezone_minute" => SqlType.SqlInt
-      case "make_time" | "__ts_to_time" |
-           "__time_plus" | "__time_minus" => SqlType.SqlTime
-      case "__enum_pos" | "enum_code" => SqlType.SqlInt
-      case "__rint" => SqlType.SqlDouble
-      case "__enum_cast" | "__enum_try_cast" | "__enum_from_pos" => args(1) match {
-        case BoundOperand.BLit(Lit.LitString(vs)) =>
-          SqlType.SqlEnum(vs.split('\u0001').toVector)
-        case _ => SqlType.SqlVarChar(65535)
-      }
-      case "enum_first" | "enum_last" => SqlType.SqlVarChar(65535)
-      case "union_value" => args match {
-        case Seq(BoundOperand.BLit(Lit.LitString(k)), v) =>
-          SqlType.SqlUnion(Vector(k -> operandType(v)))
-        case _ => SqlType.SqlVarChar(65535)
-      }
-      case "union_tag" => SqlType.SqlVarChar(65535)
-      case "union_extract" => (operandType(args.head), args(1)) match {
-        case (SqlType.SqlUnion(ms), BoundOperand.BLit(Lit.LitString(k))) =>
-          ms.find(_._1 == k).map(_._2).getOrElse(SqlType.SqlVarChar(65535))
-        case _ => SqlType.SqlVarChar(65535)
-      }
-      case "__union_make" => args.head match {
-        case BoundOperand.BLit(Lit.LitString(spec)) =>
-          SqlType.SqlUnion(spec.split('\u0001').toVector
-            .zip(args.drop(2).map(operandType)))
-        case _ => SqlType.SqlVarChar(65535)
-      }
-      case "__tz_to_tz" => SqlType.SqlTimestampTz
-      case "__tz_to_naive" => SqlType.SqlTimestamp
-      case "__tstz_text" => SqlType.SqlVarChar(65535)
-      case "hash" | "__age_part" => SqlType.SqlBigInt
-      case "age" => SqlType.SqlVarChar(65535) // rendered interval text
-      case "setseed" => SqlType.SqlVarChar(1) // VOID: always NULL
-      case "from_json" | "from_json_strict" => args(1) match {
-        case BoundOperand.BLit(Lit.LitString(st)) =>
-          parseJsonStructure(st).getOrElse(SqlType.SqlVarChar(65535))
-        case _ => SqlType.SqlVarChar(65535)
-      }
-      case "get_bit" | "bit_position" => SqlType.SqlInt
-      case "set_bit" | "bitstring" => SqlType.SqlVarChar(65535)
-      case "left_grapheme" | "right_grapheme" | "substring_grapheme" =>
-        SqlType.SqlVarChar(65535)
-      case "md5_number_lower" | "md5_number_upper" => SqlType.SqlDecimal(20, 0)
-      // full 128-bit value: VARCHAR carrier (see Lowering md5_number)
-      case "md5_number" => SqlType.SqlVarChar(65535)
-      case "like_escape" | "ilike_escape" | "not_like_escape" |
-           "not_ilike_escape" => SqlType.SqlBool
-      case "current_date" => SqlType.SqlDate
-      case "now" => SqlType.SqlTimestamp
-      case "random" => SqlType.SqlDouble
-      case f2 if IntervalFuncs(f2) => SqlType.SqlTimestamp // placeholder
-      case "map_from_entries" => operandType(args.head) match {
-        case SqlType.SqlArray(SqlType.SqlStruct(fs)) if fs.length == 2 =>
-          SqlType.SqlMap(fs(0)._2, fs(1)._2)
-        case other => other
-      }
-      case "struct_insert" => operandType(args.head) match {
-        case SqlType.SqlStruct(fs) =>
-          SqlType.SqlStruct(fs ++ args.tail.grouped(2).collect {
-            case Seq(BoundOperand.BLit(Lit.LitString(k)), v) =>
-              k -> operandType(v)
-          })
-        case other => other
-      }
-      case "json_array_length" => SqlType.SqlBigInt
-      case "json_keys" => SqlType.SqlArray(SqlType.SqlVarChar(65535))
-      case "json_valid" => SqlType.SqlBool
-      // even/gamma/lgamma/trunc/round_even/julian fall to the SqlDouble
-      // default
-      case "parse_path" => SqlType.SqlArray(SqlType.SqlVarChar(65535))
-      case "parse_dirname" | "parse_filename" | "parse_dirpath" | "hex" =>
-        SqlType.SqlVarChar(65535)
-      case "unhex" | "from_hex" => SqlType.SqlVarBinary(65535)
-      case "octet_length" | "bit_length" | "unicode" => SqlType.SqlInt
-      case "jaccard"             => SqlType.SqlDouble
-      case "sha256" | "to_base" | "json_extract_string" =>
-        SqlType.SqlVarChar(65535)
-      case "ifnull"              => operandType(args.head)
-      case "bit_count"           => SqlType.SqlInt
-      case "strptime" | "to_timestamp" | "time_bucket" => SqlType.SqlTimestamp
-      case "list_min" | "list_max" | "list_sum" |
-           "array_min" | "array_max" =>
-        operandType(args.head) match {
-          case SqlType.SqlArray(e) => e
-          case other               => other
-        }
-      case "str_extract" | "str_slice" => SqlType.SqlVarChar(65535)
-      case "list_reverse" => operandType(args.head)
-      case "flatten" => operandType(args.head) match {
-        case SqlType.SqlArray(e) => e
-        case other               => other
-      }
-      case "list_unique" => SqlType.SqlBigInt
-      case "list_append" | "list_intersect" => operandType(args.head)
-      case "list_prepend" => operandType(args(1))
-      case "list_has_any" | "list_has_all" => SqlType.SqlBool
-      case "list_transform" => SqlType.SqlArray(operandType(args(1)))
-      case "list_reduce"    => operandType(args(1))
-      case "string_split" | "string_to_array" | "split" |
-           "regexp_split_to_array" | "regexp_extract_all" =>
-        SqlType.SqlArray(SqlType.SqlVarChar(65535))
-      case "list_value" =>
-        SqlType.SqlArray(args.headOption.map(operandType)
-          .getOrElse(SqlType.SqlVarChar(65535)))
-      case "array_to_string" => SqlType.SqlVarChar(65535)
-      // list_zip: DuckDB 1.0 unnamed tuple structs — fields carried as
-      // f1..fn internally, addressed via 1-based NUMERIC struct_extract
-      case "list_zip" =>
-        SqlType.SqlStruct(args.zipWithIndex.map { case (a, i) =>
-          s"f${i + 1}" -> (operandType(a) match {
-            case SqlType.SqlArray(e) => e
-            case other               => other
-          })
-        }.toVector) match { case st => SqlType.SqlArray(st) }
-      case "struct_extract" =>
-        (operandType(args.head), args(1)) match {
-          case (SqlType.SqlStruct(fs), BoundOperand.BLit(Lit.LitLong(i)))
-              if i >= 1 && i <= fs.length => fs(i.toInt - 1)._2
-          case (SqlType.SqlStruct(fs), BoundOperand.BLit(Lit.LitString(k)))
-              if fs.exists(_._1.equalsIgnoreCase(k)) =>
-            fs.find(_._1.equalsIgnoreCase(k)).get._2
-          case _ => SqlType.SqlVarChar(65535) // unreachable past validation
-        }
-      // named struct literal / struct_pack: keys interleave as string
-      // literals at odd positions
-      case "struct_pack" =>
-        SqlType.SqlStruct(args.grouped(2).collect {
-          case Seq(BoundOperand.BLit(Lit.LitString(k)), v) =>
-            k -> operandType(v)
-        }.toVector)
-      case "to_json" => SqlType.SqlVarChar(65535)
-      case "concat_ws" => SqlType.SqlVarChar(65535)
-      case "date_add_days" | "date_sub_days" => SqlType.SqlDate
-      case "list_avg" => SqlType.SqlDouble
-      case "list_count" => SqlType.SqlBigInt
-      case _          => SqlType.SqlDouble // sqrt / power / exp / ln / log10 / log2
-    }
+    case BoundOperand.BFunc(f, args) =>
+      Functions.resultType(f, args, operandType)
     // CASE types from its first NON-NULL-literal branch (THEN values,
     // then ELSE): a bare NULL literal carries the VARCHAR(1) fallback
     // type, and `CASE WHEN c THEN NULL ELSE round(x) END` must type as
@@ -3493,610 +3229,67 @@ object Analyzer {
               }, Seq(acc))
             })
         }
-      case Operand.FuncCall(f0raw, args) if Set("list_transform",
-          "array_transform", "list_filter", "array_filter",
-          "list_reduce", "list_apply", "array_apply",
-          "array_reduce", "reduce", "apply", "filter")(f0raw.toLowerCase) =>
-        val f0 = f0raw.toLowerCase match {
-          case "list_apply" | "array_apply" | "apply" => "list_transform"
-          case "array_reduce" | "reduce"              => "list_reduce"
-          case "filter"                               => "list_filter"
-          case x                                      => x
-        }
-        val f = if (f0.startsWith("array_")) "list_" + f0.stripPrefix("array_")
-                else f0
-        val nParams = if (f == "list_reduce") 2 else 1
-        args match {
-          case Seq(listArg, Operand.Lambda(ps, body)) =>
-            for {
-              bl <- bindOp(listArg, allowAgg, allowSub)
-              elemT <- operandType(bl) match {
-                case SqlType.SqlArray(e) => Right(e)
-                case other => Left(BadFunction(
-                  s"$f0 takes a list first argument (got ${other.render})"))
-              }
-              _ <-
-                if (ps.length == nParams) Right(())
-                else Left(BadFunction(
-                  s"$f0 takes a $nParams-parameter lambda"))
-              _ <-
-                if (ps.map(_.toLowerCase).distinct.length == ps.length) Right(())
-                else Left(DuplicateBinding(ps.head))
-              bbody <- {
-                val saved = lambdaScope
-                lambdaScope = lambdaScope ++ ps.map(_.toLowerCase -> elemT)
-                val r = bindOp(body, allowAgg = false)
-                lambdaScope = saved
-                r
-              }
-              _ <-
-                if (!BoundOperand.operandHasSub(bbody)) Right(())
-                else Left(BadSubquery(
-                  "subqueries are not supported inside a lambda body"))
-              _ <-
-                if (!BoundOperand.containsAgg(bbody)) Right(())
-                else Left(BadAggregate(
-                  "aggregates are not valid inside a lambda body"))
-            } yield BoundOperand.BFunc(f,
-              Seq(bl, BoundOperand.BLambda(ps.map(_.toLowerCase), bbody)))
-          case _ => Left(BadFunction(
-            s"$f0 takes (list, lambda) — e.g. $f0(l, x -> x + 1)"))
-        }
       case Operand.Lambda(_, _) =>
         Left(BadFunction(
           "a lambda (x -> …) is only valid as a list-function argument"))
-      case Operand.FuncCall(f0name, args) =>
-        // pure-alias rebinds (DuckDB synonyms onto canonical names)
-        val f = f0name.toLowerCase match {
-          case "strlen" => "length"
-          case "lcase"  => "lower"
-          case "ucase"  => "upper"
-          case "array_cat" | "list_cat"      => "list_concat"
-          case "array_extract"               => "list_extract"
-          case "array_has" | "list_has"      => "list_contains"
-          case "array_indexof" | "list_indexof" => "list_position"
-          case "array_slice"                 => "list_slice"
-          case "array_unique"                => "list_unique"
-          case "array_value" | "list_pack"   => "list_value"
-          case "array_zip"                   => "list_zip"
-          case "array_aggregate" | "array_aggr" => "list_aggregate"
-          case "array_grade_up"              => "list_grade_up"
-          case "array_resize"                => "list_resize"
-          case "array_reverse_sort"          => "list_reverse_sort"
-          case "array_select"                => "list_select"
-          case "array_where"                 => "list_where"
-          case "array_cosine_similarity"     => "list_cosine_similarity"
-          case "array_distance"              => "list_distance"
-          case "array_dot_product"           => "list_dot_product"
-          case "array_inner_product"         => "list_inner_product"
-          case "array_to_json"               => "to_json"
-          case "greatest_common_divisor"     => "gcd"
-          case "least_common_multiple"       => "lcm"
-          case "datepart"                    => "date_part"
-          case "datetrunc"                   => "date_trunc"
-          case "datesub" | "date_sub"        => "date_diff"
-          case "str_split"                   => "string_split"
-          case "str_split_regex" | "string_split_regex" =>
-            "regexp_split_to_array"
-          case "editdist3"                   => "levenshtein"
-          case "base64"                      => "to_base64"
-          case "json_extract_path_text"      => "json_extract_string"
-          case "row_to_json"                 => "to_json"
-          // wave 9: bare list-function names (DuckDB synonyms) + the
-          // environment/temporal spellings that share one lowering
-          case "grade_up"                    => "list_grade_up"
-          case "reduce"                      => "list_reduce"
-          case "apply"                       => "list_transform"
-          case "filter"                      => "list_filter"
-          case "aggregate"                   => "list_aggregate"
-          case "formatreadablesize"          => "format_bytes"
-          case "today"                       => "current_date"
-          case "get_current_timestamp" | "transaction_timestamp" => "now"
-          case "gen_random_uuid"             => "uuid"
-          case "json_transform"              => "from_json"
-          case "json_transform_strict"       => "from_json_strict"
-          case "to_binary"                   => "bin"
-          case "from_binary"                 => "unbin"
-          case "unpivot_list"                => "list_value"
-          case x        => x
-        }
-        val arityOk = f match {
-          case "upper" | "lower" | "length" | "abs" |
-               "year" | "month" | "day" |
-               "floor" | "ceil" | "sqrt" |
-               "reverse" | "md5" | "sign" |
-               "exp" | "ln" | "log10" | "log2" |
-               "last_day" | "quarter" | "hour" | "minute" | "second" |
-               "sin" | "cos" | "tan" | "asin" | "acos" | "atan" | "cot" |
-               "degrees" | "radians" | "cbrt" | "factorial" |
-               "isnan" | "isfinite" | "isinf" | "bit_count" |
-               "to_timestamp" | "list_min" | "list_max" | "list_sum" |
-               "array_min" | "array_max"
-                                     => args.length == 1
-          case "pi"                  => args.isEmpty
-          case "log"                 => args.length == 1 || args.length == 2
-          case "atan2" | "starts_with" | "ends_with" | "contains" |
-               "regexp_matches" | "gcd" | "lcm" |
-               "ifnull" | "hamming" | "jaccard" => args.length == 2
-          case "list_cosine_similarity" | "list_distance" |
-               "list_dot_product" | "list_inner_product" |
-               "damerau_levenshtein" | "jaro_similarity" |
-               "jaro_winkler_similarity" | "mismatches" |
-               "list_select" | "list_where" | "list_resize" =>
-            args.length == 2
-          case "strip_accents" | "nfc_normalize" | "ord" | "format_bytes" |
-               "list_grade_up" | "list_reverse_sort" | "list_any_value" =>
-            args.length == 1
-          case "map_entries" | "parse_path" | "parse_dirname" |
-               "parse_dirpath" | "hex" | "unhex" | "from_hex" =>
-            args.length == 1
-          case "element_at"    => args.length == 2
-          case "map_concat"    => args.length >= 2
-          case "__intdiv"      => args.length == 2
-          case "dayname" | "monthname" | "even" | "signbit" | "gamma" |
-               "lgamma" | "trunc" | "century" | "isodow" | "week" |
-               "weekofyear" | "dayofmonth" | "isoyear" => args.length == 1
-          case "round_even"    => args.length == 1 || (args.length == 2 &&
-            args(1).isInstanceOf[Operand.Literal])
-          case "prefix" | "suffix" | "regexp_full_match" => args.length == 2
-          case "bin" | "unbin" | "to_base64" | "from_base64" |
-               "regexp_escape" | "millisecond" | "microsecond" |
-               "decade" | "millennium" | "weekday" | "yearweek" |
-               "julian" | "era" => args.length == 1
-          case "xor"           => args.length == 2
-          case "try_strptime"  => args.length == 2
-          case "json_extract" | "json_extract_path" => args.length == 2 &&
-            args(1).isInstanceOf[Operand.Literal]
-          case "json_array_length" => args.length == 1 || (args.length == 2 &&
-            args(1).isInstanceOf[Operand.Literal])
-          case "json_keys" | "json_valid" | "json_type" => args.length == 1
-          case "json_object"   => args.length % 2 == 0 &&
-            args.grouped(2).forall(_.head match {
-              case Operand.Literal(Lit.LitString(_)) => true
-              case _ => false
-            })
-          case "json_array"    => args.nonEmpty
-          case "parse_filename" => args.length == 1 || args.length == 2
-          case "format"        => args.nonEmpty &&
-            args.head.isInstanceOf[Operand.Literal]
-          case "octet_length" | "bit_length" | "sha256" | "unicode" =>
-            args.length == 1
-          case "to_base"             => args.length == 2
-          case "json_extract_string" => args.length == 2
-          case "time_bucket"         => args.length == 2
-          case "date_diff"           => args.length == 3
-          case "printf"              => args.nonEmpty &&
-            args.head.isInstanceOf[Operand.Literal]
-          case "strftime" | "strptime" => args.length == 2
-          // optional trim-characters second argument (standard
-          // TRIM(chars FROM x) or the two-arg call form)
-          case "trim" | "ltrim" | "rtrim" => args.length == 1 || args.length == 2
-          case "round"               => args.length == 1 || args.length == 2
-          case "substr"              => args.length == 2 || args.length == 3
-          case "coalesce" | "concat" => args.nonEmpty
-          case "||"                  => args.length == 2
-          case "power" | "instr" | "mod" | "datediff" |
-               "nullif" | "repeat" |
-               "left" | "right"      => args.length == 2
-          case "date_part"           => args.length == 2
-          case "translate" | "make_date" => args.length == 3
-          case "date_trunc"          => args.length == 2
-          case "replace" | "lpad" | "rpad" | "split_part" => args.length == 3
-          // DuckDB regexp_replace: first-match-only unless flag 'g'
-          case "regexp_replace"      => args.length == 3 || args.length == 4
-          case "regexp_extract"      => args.length == 2 || args.length == 3
-          case "regexp_extract_all"  => args.length == 2 || args.length == 3
-          case "greatest" | "least"  => args.length >= 2
-          // list/array functions (DuckDB surface onto Spark natives)
-          case "len" | "array_length" | "list_distinct" | "array_distinct" |
-               "unnest" => args.length == 1
-          case "list_sort" | "array_sort" =>
-            args.length == 1 || (args.length == 2 && (args(1) match {
-              case Operand.Literal(Lit.LitString(dr)) =>
-                Set("asc", "desc")(dr.toLowerCase)
-              case _ => false
-            }))
-          case "list_contains" | "array_contains" | "list_extract" |
-               "list_element" | "list_position" | "array_position" |
-               "list_concat" | "array_concat" | "string_split" |
-               "string_to_array" | "split" | "array_to_string" |
-               "regexp_split_to_array" => args.length == 2
-          case "list_slice"          => args.length == 3
-          case "__map_lit"           => args.length % 2 == 0
-          case "map" | "map_extract" => args.length == 2
-          case "map_keys" | "map_values" | "cardinality" => args.length == 1
-          case "list_reverse" | "flatten" | "list_unique" => args.length == 1
-          case "list_append" | "list_prepend" | "list_intersect" |
-               "list_has_any" | "list_has_all" => args.length == 2
-          case "list_value"          => true
-          case "list_zip"            => args.length >= 2 && args.length <= 8
-          case "struct_extract"      => args.length == 2
-          case "struct_pack"         => args.length >= 2 && args.length % 2 == 0
-          case "to_json"             => args.length == 1
-          case "concat_ws"           => args.length >= 2
-          case "list_aggregate" | "list_aggr" => args.length == 2
-          case "levenshtein"         => args.length == 2
-          case "chr" | "ascii" | "to_hex" | "epoch_ms" |
-               "epoch" | "epoch_us" => args.length == 1
-          case "make_timestamp"      => args.length == 6
-          // wave 9
-          case "typeof" | "encode" | "decode" | "epoch_ns" | "json_quote" |
-               "map_from_entries" | "error" | "md5_number_lower" |
-               "md5_number_upper" | "md5_number" => args.length == 1
-          case "nextafter"           => args.length == 2
-          case "struct_insert"       => args.length >= 3 && args.length % 2 == 1
-          case "bar"                 => args.length == 3 || args.length == 4
-          case "like_escape" | "ilike_escape" | "not_like_escape" |
-               "not_ilike_escape" => args.length == 3
-          case "current_date" | "now" | "current_database" |
-               "current_schema" | "version" | "uuid" | "random" =>
-            args.isEmpty
-          case "formatreadabledecimalsize" | "length_grapheme" =>
-            args.length == 1
-          case "left_grapheme" | "right_grapheme" => args.length == 2
-          case "substring_grapheme" => args.length == 3
-          case "json_merge_patch" | "json_contains" => args.length == 2
-          case "json_structure" => args.length == 1
-          case "from_json" | "from_json_strict" | "json_transform" |
-               "json_transform_strict" => args.length == 2 &&
-            args(1).isInstanceOf[Operand.Literal]
-          case "array_cross_product" => args.length == 2
-          case "timezone" => args.length == 1 || args.length == 2
-          case "make_time" => args.length == 3
-          case "enum_range" | "enum_first" | "enum_last" |
-               "enum_code" => args.length == 1
-          case "union_value" | "union_extract" => args.length == 2
-          case "union_tag" => args.length == 1
-          case "timezone_hour" | "timezone_minute" |
-               "hash" | "setseed" => args.length == 1
-          case "age" => args.length == 2
-          case "nextval" | "currval" => args.length == 1
-          case "fdiv" | "fmod" | "get_bit" | "bit_position" =>
-            args.length == 2
-          case "set_bit" => args.length == 3
-          case "bitstring" => args.length == 2
-          case "to_years" | "to_quarters" | "to_months" | "to_weeks" |
-               "to_days" | "to_hours" | "to_minutes" | "to_seconds" |
-               "to_milliseconds" | "to_microseconds" | "to_decades" |
-               "to_centuries" | "to_millennia" => args.length == 1
-          case _                     => false
-        }
-        if (!arityOk)
-          Left(BadFunction(s"$f takes a different number of arguments (got ${args.length})"))
-        // Spark's split pattern / array_join delimiter compile into the
-        // expression — they must be string literals
-        else if (Set("string_split", "string_to_array", "split",
-            "array_to_string", "regexp_split_to_array")(f) && !(args(1) match {
-          case Operand.Literal(Lit.LitString(_)) => true
-          case _ => false
-        }))
-          Left(BadFunction(s"$f separator must be a string literal"))
-        // round's scale must be an integer literal (the engine compiles it
-        // into the rounding expression)
-        else if (f == "round" && args.length == 2 && !(args(1) match {
-          case Operand.Literal(Lit.LitLong(_)) => true
-          case _ => false
-        }))
-          Left(BadFunction("round scale must be an integer literal"))
-        else if (f == "date_part" && !(args.head match {
-          case Operand.Literal(Lit.LitString(u)) => Set("year", "quarter",
-            "month", "day", "hour", "minute", "second", "week", "dow",
-            "doy", "dayofweek", "dayofyear", "epoch")(u.toLowerCase)
-          case _ => false
-        }))
-          Left(BadFunction(
-            "date_part unit must be a string literal (year/quarter/month/week/day/dow/doy/hour/minute/second/epoch)"))
-        else if (f == "date_diff" && !(args.head match {
-          case Operand.Literal(Lit.LitString(u)) => Set("day", "month",
-            "year", "hour", "minute", "second")(u.toLowerCase)
-          case _ => false
-        }))
-          Left(BadFunction(
-            "date_diff part must be a string literal (day/month/year/hour/minute/second)"))
-        else if (f == "struct_extract" && !(args(1) match {
-          case Operand.Literal(Lit.LitLong(i))   => i >= 1
-          case Operand.Literal(Lit.LitString(_)) => true // named structs
-          case _ => false
-        }))
-          Left(BadFunction(
-            "struct_extract takes a 1-based integer-literal index " +
-              "(unnamed list_zip tuples) or a field-name string literal " +
-              "(named structs)"))
-        else if (f == "concat_ws" && !(args.head match {
-          case Operand.Literal(Lit.LitString(_)) => true
-          case _ => false
-        }))
-          // Spark's concat_ws separator compiles into the expression
-          Left(BadFunction("concat_ws separator must be a string literal"))
-        else if ((f == "list_aggregate" || f == "list_aggr") && !(args(1) match {
-          case Operand.Literal(Lit.LitString(n)) =>
-            Set("sum", "min", "max", "avg", "count")(n.toLowerCase)
-          case _ => false
-        }))
-          Left(BadFunction(
-            "list_aggregate takes a function-name string literal " +
-              "(sum/min/max/avg/count)"))
-        else if (f == "struct_pack" && {
-          val keys = args.grouped(2).map(_.head).toSeq
-          keys.collect { case Operand.Literal(Lit.LitString(k)) => k.toLowerCase }
-            .distinct.length != keys.length
-        })
-          Left(BadFunction("struct_pack keys must be distinct names"))
-        else if (f == "translate" && !((args(1), args(2)) match {
-          case (Operand.Literal(Lit.LitString(_)),
-                Operand.Literal(Lit.LitString(_))) => true
-          case _ => false
-        }))
-          Left(BadFunction("translate from/to arguments must be string literals"))
-        else if (f == "date_trunc" && !(args.head match {
-          case Operand.Literal(Lit.LitString(u)) => Set("year", "quarter",
-            "month", "week", "day", "hour", "minute", "second")(u.toLowerCase)
-          case _ => false
-        }))
-          Left(BadFunction(
-            "date_trunc unit must be a string literal (year/quarter/month/week/day/hour/minute/second)"))
-        // pad/repeat/split lengths compile into the expression — they
-        // must be literals (like round's scale)
-        else if ((f == "repeat" && !(args(1) match {
-          case Operand.Literal(Lit.LitLong(n)) => n >= 0
-          case _ => false
-        })) || ((f == "lpad" || f == "rpad") && !((args(1), args(2)) match {
-          case (Operand.Literal(Lit.LitLong(n)),
-                Operand.Literal(Lit.LitString(_))) => n >= 0
-          case _ => false
-        })))
-          Left(BadFunction(s"$f length/pad arguments must be literals"))
-        // empty pad with a target longer than the input can never pad —
-        // DuckDB raises "Insufficient padding"; the old message blamed
-        // literal-ness, which the arguments satisfied
-        else if ((f == "lpad" || f == "rpad") && (args(2) match {
-          case Operand.Literal(Lit.LitString(p)) => p.isEmpty
-          case _ => false
-        }))
-          Left(BadFunction(
-            s"insufficient padding in ${f.toUpperCase}: the pad string is empty"))
-        // Spark's regexp_extract compiles the pattern and group index
-        // into the expression — they must be literals
-        else if ((f == "regexp_extract" || f == "regexp_extract_all") &&
-          !((args(1), args.lift(2)) match {
-          case (Operand.Literal(Lit.LitString(_)),
-                None | Some(Operand.Literal(Lit.LitLong(_)))) => true
-          case _ => false
-        }))
-          Left(BadFunction(
-            "regexp_extract takes a string-literal pattern and an integer-literal group"))
-        // regexp_replace flags: a literal over {g,i,c} — 'g' global,
-        // 'i' case-insensitive, 'c' case-sensitive (DuckDB's default,
-        // a no-op here); RE2 newline options (m/n/p/s/l) reject loudly
-        // rather than silently running with Java's different defaults
-        else if (f == "regexp_replace" && args.length == 4 && !(args(3) match {
-          case Operand.Literal(Lit.LitString(fl)) =>
-            fl.forall(c => c == 'g' || c == 'i' || c == 'c')
-          case _ => false
-        }))
-          Left(BadFunction(
-            "regexp_replace options must be a string literal over 'g' " +
-              "(global), 'i' (case-insensitive), 'c' (case-sensitive)"))
-        // from_json structure literals parse at analysis (output typing
-        // + the lowering's schema both derive from it)
-        else if ((f == "from_json" || f == "from_json_strict") && {
-          args(1) match {
-            case Operand.Literal(Lit.LitString(st)) =>
-              parseJsonStructure(st).isLeft
-            case _ => true
-          }
-        })
-          Left(BadFunction(args(1) match {
-            case Operand.Literal(Lit.LitString(st)) =>
-              s"from_json structure: ${parseJsonStructure(st).left.getOrElse("")}"
-            case _ => "from_json takes a string-literal structure"
-          }))
-        // nextval/currval substitute at statement time in FROM-less
-        // SELECTs and INSERT … VALUES rows (the only places row order
-        // is well-defined); reaching the analyzer means an unsupported
-        // position — a distributed scan's row order is nondeterministic
-        else if (f == "nextval" || f == "currval")
-          Left(BadFunction(
-            s"$f is supported in FROM-less SELECTs and INSERT … VALUES " +
-              "rows only (table-scan row order is undefined under a " +
-              "distributed scan)"))
-        // the LIKE escape character compiles into Spark's like expression
-        else if ((f == "like_escape" || f == "ilike_escape" ||
-            f == "not_like_escape" || f == "not_ilike_escape") &&
-          !(args(2) match {
-            case Operand.Literal(Lit.LitString(e)) => e.length == 1
-            case _ => false
-          }))
-          Left(BadFunction(
-            s"$f takes a single-character string-literal escape"))
-        else if (f == "split_part" && !((args(1), args(2)) match {
-          case (Operand.Literal(Lit.LitString(sep)),
-                Operand.Literal(Lit.LitLong(_))) => sep.nonEmpty
-          case _ => false
-        }))
-          Left(BadFunction(
-            "split_part takes a non-empty separator string literal and an integer index literal (negative counts from the end)"))
-        // format: fmt-style literal — sequential {} and positional {n}
-        // placeholders with {{ }} escapes; {:spec} forms reject loudly
-        // (they would silently diverge from fmt's width/precision
-        // rules); placeholder indexes must stay inside the arg list
-        else if (f == "format" && {
-          val Operand.Literal(Lit.LitString(fmt)) = args.head: @unchecked
-          var bad = false
-          var next = 0
-          var maxIdx = -1
-          var i = 0
-          while (i < fmt.length && !bad) {
-            val c = fmt.charAt(i)
-            if (c == '{' && i + 1 < fmt.length && fmt.charAt(i + 1) == '{') i += 2
-            else if (c == '}' && i + 1 < fmt.length && fmt.charAt(i + 1) == '}') i += 2
-            else if (c == '{') {
-              val close = fmt.indexOf('}', i)
-              if (close < 0) bad = true
-              else {
-                val inner = fmt.substring(i + 1, close)
-                if (inner.isEmpty) { maxIdx = math.max(maxIdx, next); next += 1 }
-                else if (inner.forall(_.isDigit))
-                  maxIdx = math.max(maxIdx, inner.toInt)
-                else bad = true
-                i = close + 1
-              }
-            } else if (c == '}') bad = true
-            else i += 1
-          }
-          bad || maxIdx >= args.length - 1
-        })
-          Left(BadFunction(
-            "format supports {} and {n} placeholders ({{ }} escape) with " +
-              "enough arguments; {:spec} forms are not supported"))
-        // strftime: the C-style format is a literal, translated token-
-        // by-token onto Spark's Java pattern at lowering — unknown %
-        // tokens reject here rather than silently diverging
-        else if ((f == "strftime" || f == "strptime" ||
-            f == "try_strptime") && !(args(1) match {
-          case Operand.Literal(Lit.LitString(fmt)) =>
-            StrftimeTokens.findAllMatchIn(fmt).forall(m =>
-              StrftimeMap.contains(m.matched)) && !fmt.contains("'") &&
-              !StrftimeTokens.replaceAllIn(fmt, "").exists(_.isLetter)
-          case _ => false
-        }))
-          Left(BadFunction(
-            s"$f takes a literal format using %Y %y %m %d %H %M %S %j (no quotes)"))
-        // log base must be a literal (Spark compiles it into the plan)
-        else if (f == "json_extract_string" && !(args(1) match {
-          case Operand.Literal(Lit.LitString(pth)) => pth.startsWith("$")
-          case _ => false
-        }))
-          Left(BadFunction(
-            "json_extract_string takes a '$.path' string literal"))
-        else if (f == "time_bucket" && !(args.head match {
-          case Operand.Interval(_, u) => Set("second", "minute", "hour",
-            "day", "week")(u.toLowerCase)
-          case _ => false
-        }))
-          Left(BadFunction(
-            "time_bucket takes a fixed-length INTERVAL literal width " +
-              "(second/minute/hour/day/week) and a timestamp"))
-        else if (f == "to_base" && !(args(1) match {
-          case Operand.Literal(Lit.LitLong(b)) => b >= 2 && b <= 36
-          case _ => false
-        }))
-          Left(BadFunction("to_base takes an integer-literal radix (2-36)"))
-        else if (f == "log" && args.length == 2 && !(args.head match {
-          case Operand.Literal(Lit.LitLong(_) | Lit.LitDouble(_)) => true
-          case _ => false
-        }))
-          Left(BadFunction("log(base, x) takes a numeric-literal base"))
-        else
-          args.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](Right(Vector.empty)) {
-            (acc, a) => acc.flatMap(v => bindOp(a, allowAgg, allowSub).map(v :+ _))
-          }.flatMap { bargs =>
-            if (f == "list_zip" &&
-                !bargs.forall(b => operandType(b).isInstanceOf[SqlType.SqlArray]))
-              Left(BadFunction("list_zip arguments must all be lists"))
-            else if (f == "__map_lit" && bargs.nonEmpty && {
-              val ks = bargs.indices.collect { case i if i % 2 == 0 => bargs(i) }
-              val vs = bargs.indices.collect { case i if i % 2 == 1 => bargs(i) }
-              !ks.forall(k => SqlType.comparable(operandType(k),
-                operandType(ks.head))) ||
-                !vs.forall(v => SqlType.comparable(operandType(v),
-                  operandType(vs.head)))
-            })
-              Left(BadFunction(
-                "MAP literal: keys (and values) must share one type"))
-            else if (f == "map" && !((operandType(bargs(0)),
-                operandType(bargs(1))) match {
-              case (SqlType.SqlArray(_), SqlType.SqlArray(_)) => true
-              case _ => false
-            }))
-              Left(BadFunction("map takes two lists (keys, values)"))
-            else if (f == "map_extract" && !((operandType(bargs.head),
-                bargs(1)) match {
-              case (SqlType.SqlMap(k, _), b) =>
-                SqlType.comparable(k, operandType(b))
-              case _ => false
-            }))
-              Left(BadFunction(
-                "map_extract takes a map and a key of the map's key type"))
-            else if ((f == "map_keys" || f == "map_values" ||
-                f == "cardinality") &&
-                !operandType(bargs.head).isInstanceOf[SqlType.SqlMap])
-              Left(BadFunction(s"$f takes a map"))
-            // the bracket postfix on a MAP base rebinds to map_extract
-            // below — validate the key type here, while the name is
-            // still list_extract
-            else if (f == "list_extract" && bargs.length == 2 &&
-                (operandType(bargs.head) match {
-                  case SqlType.SqlMap(k, _) =>
-                    !SqlType.comparable(k, operandType(bargs(1)))
-                  case _ => false
-                }))
-              Left(BadFunction(
-                "map subscript key must match the map's key type"))
-            else if (f == "to_json" && !(operandType(bargs.head) match {
-              case SqlType.SqlStruct(_) | SqlType.SqlArray(_) |
-                   SqlType.SqlMap(_, _) => true
-              case _ => false
-            }))
-              // Spark's to_json serializes container types only; scalars
-              // reject toward wrapping ({'v': x} / [x]). NOTE: NULL
-              // struct FIELDS serialize differently (Spark omits the
-              // key, DuckDB keeps "k":null) — spec-pinned posture.
-              Left(BadFunction(
-                "to_json takes a struct or list (wrap scalars: {'v': x})"))
-            else if (f == "struct_extract") (operandType(bargs.head), bargs(1)) match {
-              case (SqlType.SqlStruct(fs), BoundOperand.BLit(Lit.LitLong(i)))
-                  if i >= 1 && i <= fs.length => Right(bargs)
-              // string key → the canonical field name (case-insensitive),
-              // carried on the internal by-name node
-              case (SqlType.SqlStruct(fs), BoundOperand.BLit(Lit.LitString(k)))
-                  if fs.exists(_._1.equalsIgnoreCase(k)) =>
-                Right(Vector(bargs.head, BoundOperand.BLit(
-                  Lit.LitString(fs.find(_._1.equalsIgnoreCase(k)).get._1))))
+      case Operand.FuncCall(fname, args) =>
+        // one catalog resolves the name or alias, checks the arity, the
+        // literal arguments and (after binding) the argument types
+        val fdef = Functions.lookup(fname.toLowerCase)
+        val f = fdef.fold(fname.toLowerCase)(_.name)
+        fdef match {
+          // list higher-order functions: the second argument is a lambda
+          // whose parameters bind to the list's ELEMENT type; the body may
+          // capture enclosing columns (they lower as ordinary references
+          // inside Spark's lambda) but not aggregates or subqueries
+          case Some(d) if d.lambdaParams > 0 =>
+            val listName =
+              if (f.startsWith("array_")) "list_" + f.stripPrefix("array_") else f
+            val nParams = d.lambdaParams
+            args match {
+              case Seq(listArg, Operand.Lambda(ps, body)) =>
+                for {
+                  bl <- bindOp(listArg, allowAgg, allowSub)
+                  elemT <- operandType(bl) match {
+                    case SqlType.SqlArray(e) => Right(e)
+                    case other => Left(BadFunction(
+                      s"$f takes a list first argument (got ${other.render})"))
+                  }
+                  _ <-
+                    if (ps.length == nParams) Right(())
+                    else Left(BadFunction(
+                      s"$f takes a $nParams-parameter lambda"))
+                  _ <-
+                    if (ps.map(_.toLowerCase).distinct.length == ps.length) Right(())
+                    else Left(DuplicateBinding(ps.head))
+                  bbody <- {
+                    val saved = lambdaScope
+                    lambdaScope = lambdaScope ++ ps.map(_.toLowerCase -> elemT)
+                    val r = bindOp(body, allowAgg = false)
+                    lambdaScope = saved
+                    r
+                  }
+                  _ <-
+                    if (!BoundOperand.operandHasSub(bbody)) Right(())
+                    else Left(BadSubquery(
+                      "subqueries are not supported inside a lambda body"))
+                  _ <-
+                    if (!BoundOperand.containsAgg(bbody)) Right(())
+                    else Left(BadAggregate(
+                      "aggregates are not valid inside a lambda body"))
+                } yield BoundOperand.BFunc(listName,
+                  Seq(bl, BoundOperand.BLambda(ps.map(_.toLowerCase), bbody)))
               case _ => Left(BadFunction(
-                "struct_extract index/field not found (or the base is not a struct)"))
+                s"$f takes (list, lambda) — e.g. $f(l, x -> x + 1)"))
             }
-            else if (f == "encode" && !(operandType(bargs.head) match {
-              case SqlType.SqlVarChar(_) => true
-              case _ => false
-            }))
-              Left(BadFunction("encode takes a VARCHAR (returns its UTF-8 bytes)"))
-            else if (f == "decode" && !(operandType(bargs.head) match {
-              case SqlType.SqlVarBinary(_) => true
-              case _ => false
-            }))
-              Left(BadFunction("decode takes a BLOB (reads it as UTF-8 text)"))
-            else if (f == "map_from_entries" && !(operandType(bargs.head) match {
-              case SqlType.SqlArray(SqlType.SqlStruct(fs)) => fs.length == 2
-              case _ => false
-            }))
-              Left(BadFunction(
-                "map_from_entries takes a list of two-field structs"))
-            else if (f == "union_extract") ((operandType(bargs.head), bargs(1)) match {
-              case (SqlType.SqlUnion(ms),
-                    BoundOperand.BLit(Lit.LitString(k))) =>
-                if (ms.exists(_._1 == k)) Right(bargs)
-                else Left(BadFunction(
-                  s"""Could not find key "$k" in union"""))
-              case (other, _) => Left(BadFunction(
-                s"union_extract takes a UNION first argument (got ${other.render})"))
-            })
-            else if (f == "struct_insert") operandType(bargs.head) match {
-              case SqlType.SqlStruct(fs) =>
-                val keys = bargs.tail.grouped(2).map(_.head).collect {
-                  case BoundOperand.BLit(Lit.LitString(k)) => k.toLowerCase
-                }.toSeq
-                if (keys.distinct.length != keys.length)
-                  Left(BadFunction("struct_insert keys must be distinct names"))
-                else keys.find(k => fs.exists(_._1.equalsIgnoreCase(k))) match {
-                  case Some(k) => Left(BadFunction(
-                    s"struct_insert: field $k already exists in the struct"))
-                  case None => Right(bargs)
-                }
-              case _ => Left(BadFunction("struct_insert base must be a struct"))
+          case Some(d) if d.arity(args.length) => for {
+            _ <- d.literalCheck(args).map(BadFunction(_)).toLeft(())
+            bound <- args.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
+                Right(Vector.empty)) { (acc, a) =>
+              acc.flatMap(v => bindOp(a, allowAgg, allowSub).map(v :+ _))
             }
-            else Right(bargs)
-          }.map { bargs =>
+            bargs <- d.boundCheck(bound, operandType).left.map(BadFunction(_))
+          } yield {
             // the bracket postfix parses as list_extract/list_slice; on a
             // VARCHAR base it is DuckDB's STRING subscript/slice —
             // rebound here onto the substr lowering (1-based, inclusive)
@@ -4124,37 +3317,30 @@ object Analyzer {
                   "month", "day", "hour", "minute", "second")(u.toLowerCase)
                 case _ => false
               }
-              if (!unitOk) BoundOperand.BFunc(f, bargs) // falls to lowering error
+              // other units read the rendered text
+              if (!unitOk) BoundOperand.BFunc(f, bargs)
               else BoundOperand.BFunc("__age_part", bargs.head +: ageArgs)
             }
             // timezone(tz, x) / x AT TIME ZONE tz: the DIRECTION is
             // typed — a naive timestamp is interpreted as tz wall time
             // and becomes TIMESTAMPTZ; a TIMESTAMPTZ converts to the tz
             // wall time and becomes naive (DuckDB/Postgres probed)
-            else if (f == "timezone" && bargs.length == 2) {
-              operandType(bargs(1)) match {
-                case SqlType.SqlTimestampTz =>
-                  BoundOperand.BFunc("__tz_to_naive", bargs)
-                case SqlType.SqlTimestamp | SqlType.SqlDate =>
-                  BoundOperand.BFunc("__tz_to_tz", bargs)
-                case _ => BoundOperand.BFunc(f, bargs) // lowering rejects
-              }
-            }
+            else if (f == "timezone" && bargs.length == 2)
+              BoundOperand.BFunc(
+                if (operandType(bargs(1)) == SqlType.SqlTimestampTz) "__tz_to_naive"
+                else "__tz_to_tz", bargs)
             // enum introspection folds at analysis — the value domain is
             // static type information
-            else if (Set("enum_range", "enum_first", "enum_last",
-                "enum_code")(f)) {
-              operandType(bargs.head) match {
-                case SqlType.SqlEnum(vs) => f match {
-                  case "enum_range" => BoundOperand.BFunc("list_value",
-                    vs.map(v => BoundOperand.BLit(Lit.LitString(v))))
-                  case "enum_first" => BoundOperand.BLit(Lit.LitString(vs.head))
-                  case "enum_last"  => BoundOperand.BLit(Lit.LitString(vs.last))
-                  case _ => BoundOperand.BCast(BoundOperand.BArith('-',
-                    enumPos(bargs.head, vs),
-                    BoundOperand.BLit(Lit.LitLong(1L))), SqlType.SqlInt)
-                }
-                case _ => BoundOperand.BFunc(f, bargs) // lowering rejects
+            else if (f.startsWith("enum_")) {
+              val SqlType.SqlEnum(vs) = operandType(bargs.head): @unchecked
+              f match {
+                case "enum_range" => BoundOperand.BFunc("list_value",
+                  vs.map(v => BoundOperand.BLit(Lit.LitString(v))))
+                case "enum_first" => BoundOperand.BLit(Lit.LitString(vs.head))
+                case "enum_last"  => BoundOperand.BLit(Lit.LitString(vs.last))
+                case _ => BoundOperand.BCast(BoundOperand.BArith('-',
+                  enumPos(bargs.head, vs),
+                  BoundOperand.BLit(Lit.LitLong(1L))), SqlType.SqlInt)
               }
             }
             // typeof folds to the analyzed DuckDB type name — a literal,
@@ -4179,10 +3365,7 @@ object Analyzer {
             else if (f == "contains" && bargs.length == 2 && arrBase)
               BoundOperand.BFunc("list_contains", bargs)
             // list_aggregate(l, 'name') → the dedicated list_<name> node
-            else if ((f == "list_aggregate" || f == "list_aggr") && (bargs(1) match {
-              case BoundOperand.BLit(Lit.LitString(_)) => true
-              case _ => false
-            })) {
+            else if (f == "list_aggregate") {
               val BoundOperand.BLit(Lit.LitString(n)) = bargs(1): @unchecked
               BoundOperand.BFunc(s"list_${n.toLowerCase}", Seq(bargs.head))
             }
@@ -4223,6 +3406,9 @@ object Analyzer {
             }
             else BoundOperand.BFunc(f, bargs)
           }
+          case _ => Left(BadFunction(
+            s"$f takes a different number of arguments (got ${args.length})"))
+        }
       case Operand.CaseWhen(branches, els) =>
         for {
           bs <- branches.foldLeft[Either[AnalyzerError, Vector[(BoundExpr, BoundOperand)]]](
@@ -4310,14 +3496,16 @@ object Analyzer {
             // the to_days(n)-family constructors are interval-valued:
             // same placement rule as INTERVAL literals, but the count
             // can be any expression (column-capable)
-            case (_, BoundOperand.BFunc(ivf, _)) if IntervalFuncs(ivf) =>
+            case (_, BoundOperand.BFunc(ivf, _))
+                if Functions.isIntervalConstructor(ivf) =>
               if ((ch == '+' || ch == '-') && operandType(bl) == SqlType.SqlTime)
                 timePlus(ch, bl, br)
               else if ((ch == '+' || ch == '-') && temporal(bl))
                 Right(BoundOperand.BArith(ch, bl, br))
               else Left(BadFunction(
                 s"$ivf is INTERVAL-valued: only <date/timestamp> + or - $ivf(n)"))
-            case (BoundOperand.BFunc(ivf, _), _) if IntervalFuncs(ivf) =>
+            case (BoundOperand.BFunc(ivf, _), _)
+                if Functions.isIntervalConstructor(ivf) =>
               Left(BadFunction(
                 s"$ivf is INTERVAL-valued: it must be the RIGHT operand of + or -"))
             case (BoundOperand.BInterval(_, _), _) =>

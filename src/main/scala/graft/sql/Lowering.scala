@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Analyzer._
+import graft.operators.Fixpoint
 
 /** Lowers a bound query to a declarative DataFrame program. This is the
   * whole "planner + optimizer + execution engine" of the reference
@@ -559,7 +560,7 @@ object Lowering {
         case BoundOperand.BLit(l) => lowerLit(l)
         case BoundOperand.BInterval(n, u) => intervalCol(n, u)
         case BoundOperand.BArith(op, l, r) => arith(op, havingOperand(l), havingOperand(r))
-        case BoundOperand.BFunc(f, args)   => lowerFunc(f, args, havingOperand)
+        case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, havingOperand)
         case BoundOperand.BCase(bs, els)   => caseCol(bs, els, havingOperand)
         case BoundOperand.BCast(x, t)      => havingOperand(x).cast(t.spark)
         case BoundOperand.BTryCast(x, t)   => havingOperand(x).try_cast(t.spark)
@@ -3377,7 +3378,7 @@ object Lowering {
         }.toMap
         def low(o: BoundOperand): Column = nodeCol.getOrElse(o, o match {
           case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-          case BoundOperand.BFunc(f2, args)  => lowerFunc(f2, args, low)
+          case BoundOperand.BFunc(f2, args)  => Functions.lower(f2, args, low)
           case BoundOperand.BCase(bs, els)   => caseCol(bs, els, low)
           case BoundOperand.BCast(x, t)      => low(x).cast(t.spark)
           case BoundOperand.BTryCast(x, t)   => low(x).try_cast(t.spark)
@@ -3580,7 +3581,7 @@ object Lowering {
           }.toMap
         def low(o: BoundOperand): Column = nodeCol.getOrElse(o, o match {
           case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-          case BoundOperand.BFunc(f2, args)  => lowerFunc(f2, args, low)
+          case BoundOperand.BFunc(f2, args)  => Functions.lower(f2, args, low)
           case BoundOperand.BCase(bs, els)   => caseCol(bs, els, low)
           case BoundOperand.BCast(x, t)      => low(x).cast(t.spark)
           case BoundOperand.BTryCast(x, t)   => low(x).try_cast(t.spark)
@@ -4375,7 +4376,7 @@ object Lowering {
         }
         els.fold(chained)(x => chained.otherwise(operand(x)))
       case BoundOperand.BArith(ch, l, r) => arith(ch, operand(l), operand(r))
-      case BoundOperand.BFunc(f, args)   => lowerFunc(f, args, operand)
+      case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, operand)
       case BoundOperand.BCast(x, t)      => operand(x).cast(t.spark)
       case BoundOperand.BTryCast(x, t)   => operand(x).try_cast(t.spark)
       case v: BoundOperand.BSubVal =>
@@ -4585,33 +4586,19 @@ object Lowering {
     // nothing a statically planned round doesn't. The BASE materialization
     // above and the caller's final read of `acc` keep AQE — those are the
     // one-shot, potentially large plans where it earns its stage jobs.
-    // Conf mutation assumes the SINGLE-THREADED driver of the gate /
-    // bench shape: a query planned concurrently on this session during
-    // the loop would silently see AQE off / a clamped width, and two
-    // interleaved fixpoints could restore each other's values. Callers
-    // that plan queries from multiple threads must isolate the loop in
-    // a cloned session (spark.newSession() shares state, isolates conf).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val aqeBefore = spark.conf.get(aqeKey, "true")
-    val partsBefore = spark.conf.get(partsKey)
-    // Static stand-in for AQE's partition coalescing inside the loop: the
-    // shuffle width derives from the MEASURED row counts flowing through
-    // the fixpoint (base rows as the step-input proxy, refreshed with each
-    // block's delta count; ~2M rows per partition), capped at the session
-    // parallelism — scale-adaptive, never a local constant. A recursion
-    // over a 1B-row base keeps the cluster-default width; the gate's
-    // hundreds-of-rows frontier gets 1 instead of 32 near-empty tasks per
-    // exchange (measured: 2,595 tasks for 36 KiB of shuffle without this).
-    def loopWidth(rows: Long): Int = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, rows / 2000000L + 1L)).toInt
-    // every conf set sits INSIDE the try — the count() action below can
-    // fail (task failure, cancellation), and the finally must always see
-    // a session it can restore (ADVICE r15)
-    try {
-    spark.conf.set(aqeKey, "false")
+    // The conf is scoped by Fixpoint.withConfRestored (restored also when
+    // an action fails; see there for the single-threaded assumption).
+    // The loop's shuffle width derives from the MEASURED row counts
+    // (base rows as the step-input proxy, refreshed with each block's
+    // delta count) — Fixpoint.loopWidth (measured: 2,595 tasks for 36 KiB
+    // of shuffle without it at the gate's hundreds-of-rows frontier).
+    def loopWidth(rows: Long): String =
+      Fixpoint.loopWidth(spark, rows).toString
+    val partsKey = Fixpoint.PartitionsKey
+    Fixpoint.withConfRestored(spark, Fixpoint.AqeKey, partsKey) {
+    spark.conf.set(Fixpoint.AqeKey, "false")
     val baseRows = acc.count()
-    spark.conf.set(partsKey, loopWidth(baseRows).toString)
+    spark.conf.set(partsKey, loopWidth(baseRows))
     while (!done) {
       it += Unroll
       if (it > maxIter) throw new IllegalStateException(
@@ -4642,7 +4629,7 @@ object Lowering {
           frontier = next
           blocks += 1
           if (blocks % CkptEvery == 0) acc = materializeOnce(acc, eager = true)
-          spark.conf.set(partsKey, loopWidth(math.max(baseRows, n)).toString)
+          spark.conf.set(partsKey, loopWidth(math.max(baseRows, n)))
         }
       } else {
         // coalesce BEFORE the checkpoint: a union of K deltas carries
@@ -4667,14 +4654,10 @@ object Lowering {
             // collapses a bounded union, nothing deeper
             acc = materializeOnce(acc, eager = true)
           if (keep < Unroll) done = true // an empty step ended the chain
-          spark.conf.set(partsKey,
-            loopWidth(math.max(baseRows, counts.values.sum)).toString)
+          spark.conf.set(partsKey, loopWidth(math.max(baseRows, counts.values.sum)))
         }
       }
     }
-    } finally {
-      spark.conf.set(aqeKey, aqeBefore)
-      spark.conf.set(partsKey, partsBefore)
     }
     acc
   }
@@ -4791,27 +4774,6 @@ object Lowering {
     case (true, Some(e))  => ilike(c, lit(pat), lit(e.toString))
   }
 
-  /** Calls whose result IS JSON text — their values embed raw inside
-    * json_object/json_array (the JSON type propagates, DuckDB parity).
-    */
-  private val JsonProducing = Set("json_object", "json_array",
-    "json_merge_patch", "json_extract", "json_extract_path", "json_quote")
-
-  /** One scalar as JSON text: to_json(array(x)) with the brackets
-    * stripped — exact JSON escaping, and a NULL element stays 'null'
-    * (array elements survive where to_json drops NULL struct fields).
-    */
-  private def jsonScalarText(c: Column): Column = {
-    val j = to_json(array(c))
-    j.substr(lit(2), length(j) - 2)
-  }
-
-  private def jsonValueText(o: BoundOperand,
-      rec: BoundOperand => Column): Column = o match {
-    case BoundOperand.BFunc(jf, _) if JsonProducing(jf) => rec(o)
-    case _ => jsonScalarText(rec(o))
-  }
-
   private[sql] def cmpCols(op: Ast.CmpOp, lc: Column, rc: Column): Column = op match {
     case Ast.CmpOp.Eq  => lc === rc
     case Ast.CmpOp.Neq => lc =!= rc
@@ -4874,23 +4836,17 @@ object Lowering {
         .otherwise(lit(true))
   }
 
-  /** Scalar function lowering (arity pre-checked by the analyzer). The
-    * recursion callback keeps the caller's column resolution (qualified /
-    * grouped / bare). concat lowers as concat_ws("") — NULL arguments act
-    * as empty strings, matching SQL/DuckDB concat, where Spark's concat
-    * would NULL the whole result.
-    */
   /** Lower a lambda body: parameters resolve through `env`, everything
     * else recurses with the env threaded (so nested higher-order calls
     * extend it) and bottoms out in the caller's operand lowerer.
     */
-  private def lowerLambdaBody(o: BoundOperand, env: Map[String, Column],
+  private[sql] def lowerLambdaBody(o: BoundOperand, env: Map[String, Column],
       outer: BoundOperand => Column): Column = {
     def low(x: BoundOperand): Column = x match {
       case BoundOperand.BLambdaVar(n, _) => env.getOrElse(n,
         sys.error(s"unreachable: unbound lambda parameter $n"))
       case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-      case BoundOperand.BFunc(f, as)     => lowerFunc(f, as, low)
+      case BoundOperand.BFunc(f, as)     => Functions.lower(f, as, low)
       case BoundOperand.BCast(y, t)      => low(y).cast(t.spark)
       case BoundOperand.BTryCast(y, t)   => low(y).try_cast(t.spark)
       case BoundOperand.BCase(bs, els) =>
@@ -4902,1152 +4858,6 @@ object Lowering {
     }
     low(o)
   }
-
-  private def lowerFunc(name: String, args: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = (name, args) match {
-    case ("upper", Seq(a))  => upper(rec(a))
-    case ("lower", Seq(a))  => lower(rec(a))
-    case ("trim", Seq(a))   => trim(rec(a))
-    case ("length", Seq(a)) => length(rec(a))
-    case ("abs", Seq(a))    => abs(rec(a))
-    case ("year", Seq(a))   => year(rec(a))
-    case ("month", Seq(a))  => month(rec(a))
-    case ("day", Seq(a))    => dayofmonth(rec(a))
-    case ("round", Seq(a))  => round(rec(a), 0)
-    case ("round", Seq(a, BoundOperand.BLit(Lit.LitLong(n)))) => round(rec(a), n.toInt)
-    case ("substr", Seq(a, p)) =>
-      // to-end form: the remaining length is bounded by the full length
-      val c = rec(a)
-      c.substr(rec(p), length(c))
-    case ("substr", Seq(a, p, l)) => rec(a).substr(rec(p), rec(l))
-    case ("coalesce", as) => coalesce(as.map(rec): _*)
-    case ("concat", as)   => concat_ws("", as.map(rec): _*)
-    // the || operator: NULL-propagating, unlike the concat() function
-    case ("||", as)       => concat(as.map(rec): _*)
-    case ("replace", Seq(a, b, c)) => replace(rec(a), rec(b), rec(c))
-    // math batch 5: trig/rounding parity with the reference dialect —
-    // libm last-ulp differences across engines are absorbed by the
-    // query-side round() contract (FIXTURES.md)
-    case ("sin", Seq(a))     => sin(rec(a))
-    case ("cos", Seq(a))     => cos(rec(a))
-    case ("tan", Seq(a))     => tan(rec(a))
-    case ("asin", Seq(a))    => asin(rec(a))
-    case ("acos", Seq(a))    => acos(rec(a))
-    case ("atan", Seq(a))    => atan(rec(a))
-    case ("atan2", Seq(a, b)) => atan2(rec(a), rec(b))
-    case ("cot", Seq(a))     => lit(1.0) / tan(rec(a))
-    case ("degrees", Seq(a)) => degrees(rec(a))
-    case ("radians", Seq(a)) => radians(rec(a))
-    case ("pi", Seq())       => lit(math.Pi)
-    case ("cbrt", Seq(a))    => cbrt(rec(a))
-    case ("factorial", Seq(a)) => factorial(rec(a).cast("int"))
-    case ("isnan", Seq(a))   =>
-      // NULL-propagating like DuckDB's (Spark's isnan reads NULL→false)
-      val c = rec(a); when(c.isNull, lit(null).cast("boolean")).otherwise(isnan(c))
-    case ("isinf", Seq(a))   =>
-      val c = rec(a)
-      c === lit(Double.PositiveInfinity) || c === lit(Double.NegativeInfinity)
-    case ("isfinite", Seq(a)) =>
-      val c = rec(a)
-      when(c.isNull, lit(null).cast("boolean")).otherwise(
-        !isnan(c) && c =!= lit(Double.PositiveInfinity) &&
-          c =!= lit(Double.NegativeInfinity))
-    case ("log", Seq(a))     => log10(rec(a)) // DuckDB: log(x) is log10
-    case ("log", Seq(BoundOperand.BLit(b), x)) =>
-      val base = b match {
-        case Lit.LitLong(n)   => n.toDouble
-        case Lit.LitDouble(v) => v
-        case other => sys.error(s"unreachable log base $other")
-      }
-      log(base, rec(x))
-    case ("starts_with", Seq(a, b)) => rec(a).startsWith(rec(b))
-    case ("ends_with", Seq(a, b))   => rec(a).endsWith(rec(b))
-    case ("contains", Seq(a, b))    => rec(a).contains(rec(b))
-    case ("printf", BoundOperand.BLit(Lit.LitString(fmt)) +: rest) =>
-      format_string(fmt, rest.map(rec): _*)
-    case ("strftime", Seq(a, BoundOperand.BLit(Lit.LitString(fmt)))) =>
-      val javaFmt = Analyzer.StrftimeTokens.replaceAllIn(fmt,
-        m => Analyzer.StrftimeMap(m.matched))
-      date_format(rec(a), javaFmt)
-    case ("strptime", Seq(a, BoundOperand.BLit(Lit.LitString(fmt)))) =>
-      val javaFmt = Analyzer.StrftimeTokens.replaceAllIn(fmt,
-        m => Analyzer.StrftimeMap(m.matched))
-      to_timestamp(rec(a), javaFmt)
-    // try_strptime: NULL on an unparseable input instead of raising
-    case ("try_strptime", Seq(a, BoundOperand.BLit(Lit.LitString(fmt)))) =>
-      val javaFmt = Analyzer.StrftimeTokens.replaceAllIn(fmt,
-        m => Analyzer.StrftimeMap(m.matched))
-      try_to_timestamp(rec(a), lit(javaFmt))
-    case ("to_timestamp", Seq(a))     => timestamp_seconds(rec(a))
-    case ("regexp_matches", Seq(a, b)) => regexp_like(rec(a), rec(b))
-    case ("list_min" | "array_min", Seq(a)) => array_min(rec(a))
-    case ("list_max" | "array_max", Seq(a)) => array_max(rec(a))
-    case ("list_sum", Seq(a)) =>
-      // NULL elements skip; an empty (or all-NULL) list reads NULL —
-      // the head-seeded fold makes both fall out (null seed over [])
-      val c = filter(rec(a), x => x.isNotNull)
-      aggregate(slice(c, lit(2), greatest(size(c) - 1, lit(0))),
-        try_element_at(c, lit(1)), (acc, x) => acc + x)
-    case ("bit_count", Seq(a)) => bit_count(rec(a))
-    // list_aggregate sugar targets (sum/min/max route to the dedicated
-    // cases above; these two are rebind-only forms)
-    case ("list_avg", Seq(a)) =>
-      // NULL elements skip; empty / all-NULL reads NULL (0/0 → NULL
-      // via try_divide — DuckDB parity)
-      val nn = filter(rec(a), x => x.isNotNull)
-      try_divide(
-        aggregate(slice(nn, lit(2), greatest(size(nn) - 1, lit(0))),
-          try_element_at(nn, lit(1)).cast("double"), (acc, x) => acc + x),
-        size(nn))
-    case ("list_count", Seq(a)) =>
-      size(filter(rec(a), x => x.isNotNull)).cast("long")
-    case ("concat_ws", BoundOperand.BLit(Lit.LitString(sep)) +: rest) =>
-      concat_ws(sep, rest.map(rec): _*)
-    case ("gcd", Seq(a, b)) =>
-      graft.functions.NumericFunctions.gcd(rec(a).cast("long"), rec(b).cast("long"))
-    case ("lcm", Seq(a, b)) =>
-      graft.functions.NumericFunctions.lcm(rec(a).cast("long"), rec(b).cast("long"))
-    // list batch: DuckDB surface onto Spark's codegen'd array natives.
-    // list_unique counts DISTINCT NON-NULL elements (DuckDB semantics);
-    // list_prepend takes (elem, list) — note the DuckDB argument order.
-    // DuckDB 1.0's list_zip: zip to the LONGEST list, short lists pad
-    // NULL — Spark's arrays_zip has identical pad semantics. Elements
-    // are DuckDB-unnamed tuples addressed POSITIONALLY via 1-based
-    // struct_extract, so Spark's internal field naming is irrelevant
-    // (GetStructField below is ordinal-based).
-    case ("list_zip", as) if as.length >= 2 =>
-      arrays_zip(as.map(rec): _*)
-    case ("struct_extract", Seq(a, BoundOperand.BLit(Lit.LitLong(i)))) =>
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.GetStructField(
-          org.apache.spark.sql.graftbridge.Bridge.expression(rec(a)),
-          i.toInt - 1))
-    // by-name field access (named structs; the analyzer canonicalized
-    // the key against the struct's field list)
-    case ("struct_extract", Seq(a, BoundOperand.BLit(Lit.LitString(k)))) =>
-      rec(a).getField(k)
-    // container JSON serialization (struct/list — probed byte-identical
-    // with DuckDB for null-free nested containers; null struct fields
-    // diverge and are analyzer-documented)
-    case ("to_json", Seq(a)) => to_json(rec(a))
-    // map surface: literal, constructor, and DuckDB's list-returning
-    // subscript ([] when the key is absent — a NULL value still reads
-    // [null], which is why element_at alone wouldn't do)
-    case ("__map_lit", as) =>
-      if (as.isEmpty) map_from_arrays(array(), array())
-      else org.apache.spark.sql.functions.map(as.map(rec): _*)
-    case ("map", Seq(k, v)) => map_from_arrays(rec(k), rec(v))
-    case ("map_extract", Seq(m, k)) =>
-      val mc = rec(m)
-      val kc = rec(k)
-      when(map_contains_key(mc, kc), array(element_at(mc, kc)))
-        .otherwise(slice(array(element_at(mc, kc)), 1, 0))
-    case ("map_keys", Seq(m))   => map_keys(rec(m))
-    case ("map_values", Seq(m)) => map_values(rec(m))
-    case ("cardinality", Seq(m)) => size(rec(m)).cast("long")
-    // element_at(map, k) is DuckDB's map-subscript alias: a LIST of the
-    // value, [] when the key is absent — identical to map_extract
-    case ("element_at", Seq(m, k)) =>
-      val mc = rec(m)
-      val kc = rec(k)
-      when(map_contains_key(mc, kc), array(element_at(mc, kc)))
-        .otherwise(slice(array(element_at(mc, kc)), 1, 0))
-    // map_entries: Spark's native emits the same {key, value} structs
-    case ("map_entries", Seq(m)) => map_entries(rec(m))
-    // map_concat (DuckDB probed: LAST map wins on duplicate keys, key
-    // order is first appearance) — composed deterministically instead
-    // of relying on Spark's mapKeyDedupPolicy session flag: fold maps
-    // pairwise, keys = first-appearance distinct union, value = right
-    // map's when it has the key
-    case ("map_concat", ms) if ms.length >= 2 =>
-      ms.map(rec).reduceLeft { (a, b) =>
-        val keys = array_distinct(concat(map_keys(a), map_keys(b)))
-        map_from_arrays(keys, transform(keys, k =>
-          when(map_contains_key(b, k), element_at(b, k))
-            .otherwise(element_at(a, k))))
-      }
-    // named struct literal: keys interleave as string literals —
-    // Spark's named struct columns carry the field names exactly
-    case ("struct_pack", as) if as.length % 2 == 0 =>
-      struct(as.grouped(2).map {
-        case Seq(BoundOperand.BLit(Lit.LitString(k)), v) => rec(v).as(k)
-        case other => sys.error(s"unreachable struct_pack shape $other")
-      }.toSeq: _*)
-    case ("list_reverse", Seq(a)) => reverse(rec(a))
-    case ("flatten", Seq(a))      => flatten(rec(a))
-    case ("list_unique", Seq(a)) =>
-      size(array_distinct(filter(rec(a), x => x.isNotNull))).cast("long")
-    case ("list_append", Seq(a, b))  => array_append(rec(a), rec(b))
-    case ("list_prepend", Seq(a, b)) => array_prepend(rec(b), rec(a))
-    case ("list_intersect", Seq(a, b)) =>
-      // DuckDB's output order is unspecified — sort for determinism
-      array_sort(array_intersect(rec(a), rec(b)))
-    case ("list_has_any", Seq(a, b)) => arrays_overlap(rec(a), rec(b))
-    case ("list_has_all", Seq(a, b)) =>
-      // every NON-NULL element of b appears in a (DuckDB skips NULLs)
-      forall(filter(rec(b), x => x.isNotNull),
-        x => array_contains(rec(a), x))
-    case ("regexp_extract_all", a +: BoundOperand.BLit(Lit.LitString(pat)) +: rest) =>
-      // DuckDB defaults to group 0 (the whole match) — Spark's own
-      // default is 1, so the index is always passed explicitly
-      val grp = rest match {
-        case Seq(BoundOperand.BLit(Lit.LitLong(g))) => g.toInt
-        case _                                      => 0
-      }
-      regexp_extract_all(rec(a), lit(pat), lit(grp))
-    case ("octet_length", Seq(a)) => octet_length(rec(a))
-    case ("bit_length", Seq(a))   => bit_length(rec(a))
-    case ("sha256", Seq(a))       => sha2(rec(a), 256)
-    case ("to_base", Seq(a, BoundOperand.BLit(Lit.LitLong(b)))) =>
-      conv(rec(a).cast("long"), 10, b.toInt)
-    // DuckDB's json_extract_string onto Spark's get_json_object — the
-    // same $.path subset, string result, NULL on a miss on both engines
-    case ("json_extract_string", Seq(a, BoundOperand.BLit(Lit.LitString(pth)))) =>
-      get_json_object(rec(a), pth)
-    // DuckDB's time_bucket: epoch-aligned fixed-width buckets — exact
-    // micros arithmetic (floor-aligned for pre-origin instants too).
-    // EVERY non-month width aligns to the TimescaleDB origin Monday
-    // 2000-01-03 (empirically probed: 7-hour buckets at
-    // 2000-01-01 10:00 → 06:00, which only the -03 origin produces;
-    // widths dividing 48 h can't tell the origins apart)
-    case ("time_bucket", Seq(BoundOperand.BInterval(n, u), a)) =>
-      val widthMicros = n * (u.toLowerCase match {
-        case "second" => 1L
-        case "minute" => 60L
-        case "hour"   => 3600L
-        case "day"    => 86400L
-        case _ /* week */ => 604800L
-      }) * 1000000L
-      val origin = 946857600000000L
-      val um = unix_micros(rec(a).cast("timestamp"))
-      val off = ((um - origin) % widthMicros + widthMicros) % widthMicros
-      timestamp_micros(um - off)
-    case ("unicode", Seq(a)) =>
-      // DuckDB: codepoint of the first character, -1 for the empty string
-      val c = rec(a)
-      when(length(c) === 0, lit(-1)).otherwise(ascii(c))
-    case ("ifnull", Seq(a, b)) => coalesce(rec(a), rec(b))
-    case ("hamming" | "mismatches", Seq(a, b)) =>
-      graft.functions.StringFunctions.hamming(rec(a), rec(b))
-    case ("jaccard", Seq(a, b)) =>
-      graft.functions.StringFunctions.jaccard(rec(a), rec(b))
-    // string-similarity family (codegen'd expressions like hamming):
-    // full Damerau-Levenshtein with the alphabet table, classic Jaro,
-    // Jaro-Winkler with the unconditional prefix boost (DuckDB probed)
-    case ("damerau_levenshtein", Seq(a, b)) =>
-      graft.functions.StringFunctions.damerau(rec(a), rec(b))
-    case ("jaro_similarity", Seq(a, b)) =>
-      graft.functions.StringFunctions.jaro(rec(a), rec(b))
-    case ("jaro_winkler_similarity", Seq(a, b)) =>
-      graft.functions.StringFunctions.jaroWinkler(rec(a), rec(b))
-    // continued in lowerFunc2 — the single (name, args) match outgrew
-    // the JVM 64KB method bytecode limit (round-12 verdict #4); the
-    // split is POSITIONAL at case boundaries, so case order (and thus
-    // dispatch semantics) is exactly the pre-split order.
-    case _ => lowerFunc2(name, args, rec)
-  }
-
-  /** Continuation of lowerFunc (method-size split, part 2 of 3). */
-  private def lowerFunc2(name: String, args: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = (name, args) match {
-    case ("strip_accents", Seq(a)) =>
-      graft.functions.StringFunctions.stripAccents(rec(a))
-    case ("nfc_normalize", Seq(a)) =>
-      graft.functions.StringFunctions.nfcNormalize(rec(a))
-    // ord is DuckDB's unicode() alias (probed: ord('') = -1 like unicode,
-    // where ascii('') = 0)
-    case ("ord", Seq(a)) =>
-      val c = rec(a)
-      when(length(c) === 0, lit(-1)).otherwise(ascii(c))
-    // format_bytes: binary units, value TRUNCATED (not rounded) to one
-    // decimal — in TWO stages (DuckDB probed: 17406450 bytes is 16.6000
-    // MiB by direct division but prints '16.5 MiB': the byte count is
-    // first integer-divided down to the previous unit — 16998 KiB — and
-    // only that integer feeds the final one-decimal truncating division
-    // by 1024). 1945 → '1.8 KiB'; < 1024 prints 'N bytes'
-    case ("format_bytes", Seq(a)) =>
-      val x = rec(a).cast("double")
-      def scaled(k: Int): Column = {
-        val inter = signum(x) * floor(abs(x) / math.pow(1024.0, k - 1))
-        val t = signum(x) * floor(abs(inter) * 10 / 1024.0) / 10
-        format_string("%.1f", t)
-      }
-      val units = Seq("KiB", "MiB", "GiB", "TiB", "PiB")
-      val kib = lit(1024.0)
-      units.zipWithIndex.foldRight(
-        concat(rec(a).cast("string"),
-          when(abs(x) === 1.0, lit(" byte")).otherwise(lit(" bytes")))) {
-        case ((u, i), els) =>
-          val k = i + 1
-          val upper = pow(kib, k + 1)
-          if (u == "PiB")
-            when(abs(x) >= pow(kib, k), concat(scaled(k), lit(s" $u")))
-              .otherwise(els)
-          else
-            when(abs(x) >= pow(kib, k) && abs(x) < upper,
-              concat(scaled(k), lit(s" $u"))).otherwise(els)
-      }
-    // ---- wave 9: environment / misc scalars ----
-    // encode/decode: VARCHAR ⇄ its UTF-8 bytes. decode of invalid UTF-8
-    // substitutes U+FFFD here where DuckDB errors (documented posture —
-    // a cast can't raise mid-codegen without losing the fast path)
-    case ("encode", Seq(a)) => rec(a).cast("binary")
-    case ("decode", Seq(a)) => rec(a).cast("string")
-    case ("epoch_ns", Seq(a)) =>
-      unix_micros(rec(a).cast("timestamp")) * lit(1000L)
-    case ("nextafter", Seq(a, b)) =>
-      graft.functions.NumericFunctions.nextafter(
-        rec(a).cast("double"), rec(b).cast("double"))
-    case ("map_from_entries", Seq(a)) => map_from_entries(rec(a))
-    case ("struct_insert", as) =>
-      as.tail.grouped(2).foldLeft(rec(as.head)) {
-        case (c, Seq(BoundOperand.BLit(Lit.LitString(k)), v)) =>
-          c.withField(k, rec(v))
-        case other => sys.error(s"unreachable struct_insert shape $other")
-      }
-    // error('msg') raises with the user's message (DuckDB wraps it as
-    // "Invalid Input Error: msg"; the wrapper text is engine-specific)
-    case ("error", Seq(a)) => raise_error(rec(a).cast("string")).cast("string")
-    // json_quote: serialize ONE value — ride to_json of a 1-element
-    // array and strip the brackets (escaping comes out exactly JSON's)
-    case ("json_quote", Seq(a)) => jsonScalarText(rec(a))
-    // DuckDB's escape makes ANY following char literal; Spark's LIKE
-    // rejects an escape before anything but % _ or itself. For literal
-    // patterns, strip the no-op escapes (the char is literal in LIKE
-    // anyway) so both engines accept the same pattern.
-    case (lef @ ("like_escape" | "ilike_escape" | "not_like_escape" |
-                 "not_ilike_escape"),
-          Seq(a, b, BoundOperand.BLit(Lit.LitString(e)))) =>
-      val pat = b match {
-        case BoundOperand.BLit(Lit.LitString(p)) if e.nonEmpty =>
-          val ec = e.head
-          val sb = new StringBuilder
-          var i = 0
-          while (i < p.length) {
-            if (p(i) == ec && i + 1 < p.length) {
-              val c = p(i + 1)
-              if (c == '%' || c == '_' || c == ec) { sb.append(ec); () }
-              sb.append(c)
-              i += 2
-            } else { sb.append(p(i)); i += 1 }
-          }
-          lit(sb.toString)
-        case _ => rec(b)
-      }
-      lef match {
-        case "like_escape"      => like(rec(a), pat, lit(e))
-        case "ilike_escape"     => ilike(rec(a), pat, lit(e))
-        case "not_like_escape"  => !like(rec(a), pat, lit(e))
-        case _                  => !ilike(rec(a), pat, lit(e))
-      }
-    case ("current_date", Seq())   => current_date()
-    case ("now", Seq())            => current_timestamp()
-    // environment introspection: the in-memory defaults — DuckDB's own
-    // answers for an unnamed session; version is honest (engine-specific)
-    case ("current_database", Seq()) => lit("memory")
-    case ("current_schema", Seq())   => lit("main")
-    case ("version", Seq())          => lit("v1.0.0-graft")
-    case ("uuid", Seq())             => expr("uuid()")
-    case ("random", Seq())           => rand()
-    // md5_number_lower/upper: the digest's last/first 8 bytes read as a
-    // LITTLE-ENDIAN unsigned 64-bit number (DuckDB probed against
-    // hashlib) — reverse the hex byte pairs, conv(…,16,10) is unsigned,
-    // DECIMAL(20,0) carries the full range
-    // md5_number: the FULL 128-bit signed little-endian value — no Spark
-    // integer carrier fits (DECIMAL(38,0) < 2^128), so it renders as the
-    // HUGEINT's decimal text via a codegen'd BigInteger expression
-    case ("md5_number", Seq(a)) =>
-      graft.functions.StringFunctions.md5Number(rec(a).cast("string"))
-    case (fn9 @ ("md5_number_lower" | "md5_number_upper"), Seq(a)) =>
-      val h = md5(rec(a).cast("string"))
-      val positions =
-        if (fn9 == "md5_number_lower") Seq(31, 29, 27, 25, 23, 21, 19, 17)
-        else Seq(15, 13, 11, 9, 7, 5, 3, 1)
-      val beHex = concat(positions.map(i => h.substr(lit(i), lit(2))): _*)
-      conv(beHex, 16, 10).cast("decimal(20,0)")
-    // formatReadableDecimalSize: format_bytes' base-1000 sibling
-    // (KB/MB/…; same truncate-to-one-decimal rule)
-    case ("formatreadabledecimalsize", Seq(a)) =>
-      val x = rec(a).cast("double")
-      def scaled(k: Int): Column = {
-        val v = x / math.pow(1000.0, k)
-        val t = signum(v) * floor(abs(v) * 10) / 10
-        format_string("%.1f", t)
-      }
-      val units = Seq("kB", "MB", "GB", "TB", "PB") // DuckDB's lowercase k
-      val kb = lit(1000.0)
-      units.zipWithIndex.foldRight(
-        concat(rec(a).cast("string"),
-          when(abs(x) === 1.0, lit(" byte")).otherwise(lit(" bytes")))) {
-        case ((u, i), els) =>
-          val k = i + 1
-          if (u == "PB")
-            when(abs(x) >= pow(kb, k), concat(scaled(k), lit(s" $u")))
-              .otherwise(els)
-          else
-            when(abs(x) >= pow(kb, k) && abs(x) < pow(kb, k + 1),
-              concat(scaled(k), lit(s" $u"))).otherwise(els)
-      }
-    // bar(x, min, max [, width=80]): full blocks + one floor'd eighth
-    // block, NEGATIVE fractions render EMPTY but fractions above 1 CLAMP
-    // to a full-width bar (DuckDB 1.0 probed: bar(15,0,10,10) = 10 full
-    // blocks), and the space padding counts BYTES (each block char is
-    // 3 UTF-8 bytes)
-    case ("bar", as) if as.length == 3 || as.length == 4 =>
-      val x = rec(as(0)).cast("double")
-      val w = as.lift(3).map(rec(_).cast("double")).getOrElse(lit(80.0))
-      val frac = (x - rec(as(1)).cast("double")) /
-        (rec(as(2)).cast("double") - rec(as(1)).cast("double"))
-      val blocksExact = when(frac < 0, lit(0.0))
-        .when(frac > 1, w).otherwise(frac * w)
-      val full = floor(blocksExact).cast("int")
-      val eighth = floor((blocksExact - full) * 8).cast("int")
-      val eighthChar = element_at(
-        array(Seq("", "▏", "▎", "▍", "▌", "▋",
-          "▊", "▉").map(lit): _*), eighth + 1)
-      val body = concat(
-        call_function("repeat", lit("█"), full), eighthChar)
-      val byteLen = (full + when(eighth > 0, 1).otherwise(0)) * 3
-      concat(body, call_function("repeat", lit(" "),
-        greatest(w.cast("int") - byteLen, lit(0))))
-    // to_days(n)-family INTERVAL constructors (column-capable where the
-    // literal syntax is parse-time-fixed); placement enforced by the
-    // analyzer, so these only ever feed temporal + / −
-    case (ivf, Seq(n0)) if Analyzer.IntervalFuncs(ivf) =>
-      val n = rec(n0)
-      val z = lit(0)
-      ivf match {
-        case "to_years"    => make_interval(n.cast("int"))
-        case "to_decades"  => make_interval((n * 10).cast("int"))
-        case "to_centuries" => make_interval((n * 100).cast("int"))
-        case "to_millennia" => make_interval((n * 1000).cast("int"))
-        case "to_quarters" => make_interval(z, (n * 3).cast("int"))
-        case "to_months"   => make_interval(z, n.cast("int"))
-        case "to_weeks"    => make_interval(z, z, n.cast("int"))
-        case "to_days"     => make_interval(z, z, z, n.cast("int"))
-        case "to_hours"    => make_interval(z, z, z, z, n.cast("int"))
-        case "to_minutes"  => make_interval(z, z, z, z, z, n.cast("int"))
-        case "to_seconds"  =>
-          make_interval(z, z, z, z, z, z, n.cast("decimal(18,6)"))
-        case "to_milliseconds" =>
-          make_interval(z, z, z, z, z, z,
-            (n.cast("decimal(18,3)") / 1000).cast("decimal(18,6)"))
-        case "to_microseconds" =>
-          make_interval(z, z, z, z, z, z,
-            (n.cast("decimal(18,0)") / 1000000).cast("decimal(18,6)"))
-        case other => sys.error(s"unreachable interval constructor $other")
-      }
-    // age(a, b): Postgres/DuckDB symbolic interval — full months by
-    // field subtraction with a day/time borrow (NOT months_between,
-    // whose month-end fractions diverge at clamped anchors), then the
-    // day count and time-of-day remainder against the month-shifted
-    // anchor. age lowers to DuckDB's RENDERED text (the value CAST TO
-    // VARCHAR reads — typeof remains a documented divergence);
-    // date_part(unit, age(…)) fuses into __age_part and never
-    // materializes the interval.
-    case ("age" | "__age_part", _) =>
-      val (unitOpt, a, b) = (name, args) match {
-        case ("age", Seq(x, y)) => (None, x, y)
-        case ("__age_part",
-            Seq(BoundOperand.BLit(Lit.LitString(u)), x, y)) =>
-          (Some(u.toLowerCase), x, y)
-        case other => sys.error(s"unreachable age shape $other")
-      }
-      val x0 = rec(a).cast("timestamp")
-      val y0 = rec(b).cast("timestamp")
-      val neg = x0 < y0
-      // Postgres timestamp_age borrow algebra lives in ONE compact
-      // native expression (graft.functions.AgeParts) — the Column-DSL
-      // version re-inlined the whole chain at every one of the ~20
-      // references below, and six age() calls per SELECT turned that
-      // into seconds of Catalyst analysis time (round-11 verdict #2).
-      val parts = {
-        import org.apache.spark.sql.graftbridge.Bridge
-        Bridge.column(graft.functions.AgeParts(
-          Bridge.expression(x0), Bridge.expression(y0)))
-      }
-      val us = parts.getField("micros")
-      val d = parts.getField("days")
-      val m = parts.getField("months")
-      unitOpt match {
-        case Some(u) =>
-          // Column './' is fractional — the parts are non-negative
-          // pre-sign, so floor-divide is exact integer division
-          def idiv(c: Column, k: Long): Column = floor(c / k).cast("long")
-          val mag = u match {
-            case "year"   => idiv(m, 12L)
-            case "month"  => m % 12L
-            case "day"    => d
-            case "hour"   => idiv(us, 3600000000L)
-            case "minute" => idiv(us % 3600000000L, 60000000L)
-            case _        => idiv(us % 60000000L, 1000000L)
-          }
-          when(x0.isNull || y0.isNull, lit(null).cast("long"))
-            .otherwise(when(neg, -mag).otherwise(mag))
-        case None =>
-          val sign = when(neg, lit("-")).otherwise(lit(""))
-          def seg(n: Column, word: String): Column =
-            when(n =!= 0, concat(sign, n.cast("string"), lit(s" $word"),
-              when(n =!= 1, lit("s")).otherwise(lit("")))).otherwise(lit(""))
-          def idiv(c: Column, k: Long): Column = floor(c / k).cast("long")
-          val h = idiv(us, 3600000000L)
-          val mi = idiv(us % 3600000000L, 60000000L)
-          val sec = idiv(us % 60000000L, 1000000L)
-          val frac = us % 1000000L
-          val timeStr = concat(sign,
-            format_string("%02d:%02d:%02d", h.cast("int"), mi.cast("int"),
-              sec.cast("int")),
-            when(frac =!= 0,
-              concat(lit("."), rtrim(format_string("%06d", frac.cast("int")),
-                "0"))).otherwise(lit("")))
-          val parts = array(
-            seg(idiv(m, 12L), "year"), seg(m % 12L, "month"), seg(d, "day"),
-            when(us =!= 0, timeStr).otherwise(lit("")))
-          val joined = array_join(array_remove(parts, ""), " ")
-          when(x0.isNull || y0.isNull, lit(null).cast("string"))
-            .otherwise(when(joined === "", lit("00:00:00")).otherwise(joined))
-      }
-    // array_cross_product: 3-element vectors only (raises like DuckDB)
-    case ("array_cross_product", Seq(a, b)) =>
-      val (ac, bc) = (rec(a).cast("array<double>"), rec(b).cast("array<double>"))
-      when(size(ac) =!= 3 || size(bc) =!= 3,
-        raise_error(lit("array_cross_product requires two 3-element vectors")))
-        .otherwise(array(
-          element_at(ac, 2) * element_at(bc, 3) - element_at(ac, 3) * element_at(bc, 2),
-          element_at(ac, 3) * element_at(bc, 1) - element_at(ac, 1) * element_at(bc, 3),
-          element_at(ac, 1) * element_at(bc, 2) - element_at(ac, 2) * element_at(bc, 1)))
-    // timezone parts of a naive TIMESTAMP read 0 (DuckDB probed — the
-    // engine's timestamps are session-naive like the fixtures')
-    // TIME / TIMESTAMPTZ family — its own method: lowerFunc is at the
-    // JVM 64KB method-size limit
-    case (ftz, as) if Lowering.TimeTzFuncs(ftz) => lowerTimeTz(ftz, as, rec)
-    // ENUM plumbing — same split
-    case (fe, as) if Lowering.EnumFuncs(fe) => lowerEnum(fe, as, rec)
-    // half-to-even double rounding (DuckDB's DOUBLE -> integer cast)
-    case ("__rint", Seq(a)) => call_function("rint", rec(a))
-    // UNION (tagged sum) carrier plumbing — same split
-    case (fu, as) if Lowering.UnionFuncs(fu) => lowerUnion(fu, as, rec)
-    case ("timezone" | "timezone_hour" | "timezone_minute", Seq(a)) =>
-      when(rec(a).cast("timestamp").isNull, lit(null).cast("int"))
-        .otherwise(lit(0))
-    // hash: 64-bit value hash — ENGINE-SPECIFIC values (Spark's
-    // xxhash64 here vs DuckDB's own); spec-only surface
-    case ("hash", Seq(a)) => xxhash64(rec(a))
-    // setseed: VOID no-op — a distributed engine has no global RNG to
-    // reseed; rand() seeds per-partition
-    case ("setseed", Seq(a)) => lit(null).cast("string")
-    // fdiv/fmod: floor division / floor modulo as DOUBLE (DuckDB
-    // probed: fdiv(-7,2) = -4, fmod(-7,3) = 2; x/0 and x%0 read NULL)
-    case ("fdiv", Seq(a, b)) =>
-      floor(try_divide(rec(a).cast("double"), rec(b).cast("double")))
-        .cast("double")
-    case ("fmod", Seq(a, b)) =>
-      val (xd, yd) = (rec(a).cast("double"), rec(b).cast("double"))
-      xd - yd * floor(try_divide(xd, yd))
-    // BIT functions over '0'/'1' bitstrings (the BIT type is carried as
-    // VARCHAR — DuckDB renders BIT as the bitstring text, so values
-    // hash-identically); get_bit/set_bit index 0-based from the LEFT,
-    // out-of-range raises like DuckDB
-    case ("get_bit", Seq(b0, i0)) =>
-      val b = rec(b0); val i = rec(i0).cast("int")
-      when(i < 0 || i >= length(b), raise_error(concat(
-        lit("bit index "), i.cast("string"),
-        lit(" out of valid range (0.."), (length(b) - 1).cast("string"),
-        lit(")")))).otherwise(b.substr(i + 1, lit(1)).cast("int"))
-    case ("set_bit", Seq(b0, i0, v0)) =>
-      val b = rec(b0); val i = rec(i0).cast("int")
-      val v = rec(v0).cast("int")
-      when(i < 0 || i >= length(b), raise_error(concat(
-        lit("bit index "), i.cast("string"),
-        lit(" out of valid range (0.."), (length(b) - 1).cast("string"),
-        lit(")"))))
-        .when(v =!= 0 && v =!= 1,
-          raise_error(lit("set_bit value must be 0 or 1")))
-        .otherwise(concat(b.substr(lit(1), i), v.cast("string"),
-          b.substr(i + 2, length(b))))
-    // bit_position(search, source): 1-based leftmost match, 0 absent
-    case ("bit_position", Seq(n0, h0)) =>
-      instr(rec(h0), rec(n0)).cast("int")
-    // bitstring(s, len): left-pad with '0' to len; len below the input
-    // length raises like DuckDB
-    case ("bitstring", Seq(b0, l0)) =>
-      val b = rec(b0); val l = rec(l0).cast("int")
-      when(l < length(b), raise_error(
-        lit("bitstring: length must be equal or larger than input string")))
-        .otherwise(call_function("lpad", b, l, lit("0")))
-    // from_json / json_transform: JSON text → TYPED values under a
-    // structure literal. Spark's from_json is type-strict where DuckDB
-    // casts eagerly ("1" → BIGINT 1, 1.9 → INTEGER 2), so the parse
-    // runs with STRING leaves and each leaf then casts with DuckDB's
-    // JSON semantics: integers take the exact-long route when the text
-    // is integral, the double+half-away-round route otherwise; lax
-    // forms read NULL on a failed cast, strict forms raise.
-    case (fj @ ("from_json" | "from_json_strict"),
-        Seq(j, BoundOperand.BLit(Lit.LitString(st)))) =>
-      val tpe = Analyzer.parseJsonStructure(st)
-        .fold(e => sys.error(s"unreachable from_json structure: $e"), identity)
-      def stringLeaves(t: SqlType): org.apache.spark.sql.types.DataType = t match {
-        case SqlType.SqlStruct(fs) => org.apache.spark.sql.types.StructType(
-          fs.map { case (n, ft) =>
-            org.apache.spark.sql.types.StructField(n, stringLeaves(ft)) })
-        case SqlType.SqlArray(e) =>
-          org.apache.spark.sql.types.ArrayType(stringLeaves(e))
-        case _ => org.apache.spark.sql.types.StringType
-      }
-      val strict = fj == "from_json_strict"
-      def castLeaf(c: Column, t: SqlType): Column = {
-        val lax = t match {
-          case SqlType.SqlBigInt | SqlType.SqlInt | SqlType.SqlSmallInt =>
-            // the double route rounds HALF-TO-EVEN like DuckDB's JSON
-            // casts (probed: 2.5→2, 1.5→2, 0.5→0, -2.5→-2) — rint, not
-            // the half-away rule decimal casts use
-            val viaDouble = c.try_cast(org.apache.spark.sql.types.DoubleType)
-            val rounded = call_function("rint", viaDouble)
-            coalesce(c.try_cast(org.apache.spark.sql.types.LongType),
-              rounded.try_cast(org.apache.spark.sql.types.LongType)).cast(t.spark)
-          case SqlType.SqlBool =>
-            // JSON booleans arrive as 'true'/'false' text
-            when(lower(c) === "true", lit(true))
-              .when(lower(c) === "false", lit(false))
-              .otherwise(lit(null).cast("boolean"))
-          case other => c.try_cast(other.spark)
-        }
-        if (!strict) lax
-        else when(c.isNotNull && lax.isNull, raise_error(concat(
-          lit(s"from_json_strict: failed to cast value to ${t.render}: "),
-          c)).cast(t.spark)).otherwise(lax)
-      }
-      def typed(c: Column, t: SqlType): Column = t match {
-        case SqlType.SqlStruct(fs) =>
-          when(c.isNull, lit(null).cast(t.spark)).otherwise(
-            struct(fs.map { case (n, ft) =>
-              typed(c.getField(n), ft).as(n) }: _*))
-        case SqlType.SqlArray(e) =>
-          transform(c, x => typed(x, e))
-        case scalar => castLeaf(c, scalar)
-      }
-      typed(from_json(rec(j), stringLeaves(tpe)), tpe)
-    // JSON document algebra (Jackson tree walks; DuckDB 1.0 probed)
-    case ("json_merge_patch", Seq(a, b)) =>
-      graft.functions.JsonFunctions.mergePatch(
-        rec(a).cast("string"), rec(b).cast("string"))
-    case ("json_structure", Seq(a)) =>
-      graft.functions.JsonFunctions.structure(rec(a).cast("string"))
-    case ("json_contains", Seq(a, b)) =>
-      graft.functions.JsonFunctions.jsonContains(
-        rec(a).cast("string"), rec(b).cast("string"))
-    // grapheme-cluster string functions (UTS #29 segmentation — Java's
-    // \X regex matches DuckDB's utf8proc clusters; ZWJ-emoji verified)
-    case ("length_grapheme", Seq(a)) =>
-      graft.functions.StringFunctions.lengthGrapheme(rec(a))
-    case ("left_grapheme", Seq(a, n)) =>
-      graft.functions.StringFunctions.leftGrapheme(rec(a), rec(n).cast("long"))
-    case ("right_grapheme", Seq(a, n)) =>
-      graft.functions.StringFunctions.rightGrapheme(rec(a), rec(n).cast("long"))
-    case ("substring_grapheme", Seq(a, st, ln)) =>
-      graft.functions.StringFunctions.substringGrapheme(
-        rec(a), rec(st).cast("long"), rec(ln).cast("long"))
-    // fused-loop vector expressions (the ANN operators' DotProduct /
-    // L2Distance); unequal dimensions raise like DuckDB
-    case ("list_dot_product" | "list_inner_product", Seq(a, b)) =>
-      val (ac, bc) = (rec(a).cast("array<double>"), rec(b).cast("array<double>"))
-      when(size(ac) =!= size(bc),
-        raise_error(lit("list dimensions must be equal")))
-        .otherwise(graft.functions.VectorFunctions.dot(ac, bc))
-    case ("list_distance", Seq(a, b)) =>
-      val (ac, bc) = (rec(a).cast("array<double>"), rec(b).cast("array<double>"))
-      when(size(ac) =!= size(bc),
-        raise_error(lit("list dimensions must be equal")))
-        .otherwise(graft.functions.VectorFunctions.l2dist(ac, bc))
-    case ("list_cosine_similarity", Seq(a, b)) =>
-      val (ac, bc) = (rec(a).cast("array<double>"), rec(b).cast("array<double>"))
-      when(size(ac) =!= size(bc),
-        raise_error(lit("list dimensions must be equal")))
-        .otherwise(graft.functions.VectorFunctions.cosine(ac, bc))
-    // list utility family (DuckDB probed semantics):
-    //   list_select: 1-based positions; 0 and out-of-range read NULL
-    //   list_where: mask filter; a NULL mask entry raises like DuckDB
-    //   list_resize: truncate or NULL-pad to n
-    //   list_grade_up: 1-based indexes that would sort ascending,
-    //     stable, NULLs last
-    //   list_reverse_sort: descending, NULLs last (Spark's sort_array
-    //     desc places NULLs last too)
-    //   list_any_value: first non-NULL element
-    case ("list_select", Seq(a, idx)) =>
-      val arr = rec(a)
-      transform(rec(idx), i =>
-        org.apache.spark.sql.functions.get(arr, i.cast("int") - 1))
-    case ("list_where", Seq(a, m)) =>
-      val mask = rec(m)
-      when(exists(mask, _.isNull), raise_error(lit(
-        "list_where: NULLs are not allowed as mask elements")))
-        .otherwise(transform(
-          filter(zip_with(rec(a), mask, (x, keep) =>
-            struct(x.as("v"), keep.as("k"))), s => s.getField("k")),
-          s => s.getField("v")))
-    case ("list_resize", Seq(a, n)) =>
-      val arr = rec(a)
-      val nn = rec(n).cast("int")
-      when(size(arr) >= nn, slice(arr, lit(1), greatest(nn, lit(0))))
-        .otherwise(concat(arr,
-          transform(sequence(lit(1), nn - size(arr)), _ =>
-            org.apache.spark.sql.functions.get(arr, lit(-1)))))
-    case ("list_grade_up", Seq(a)) =>
-      val arr = rec(a)
-      val zipped = zip_with(arr,
-        sequence(lit(1L), size(arr).cast("long")),
-        (v, i) => struct(v.as("v"), i.as("i")))
-      val nn = array_sort(filter(zipped, s => s.getField("v").isNotNull))
-      val nulls = filter(zipped, s => s.getField("v").isNull)
-      transform(concat(nn, nulls), s => s.getField("i"))
-    case ("list_reverse_sort", Seq(a)) => sort_array(rec(a), asc = false)
-    case ("list_any_value", Seq(a)) =>
-      org.apache.spark.sql.functions.get(
-        filter(rec(a), x => x.isNotNull), lit(0))
-    // date_diff('part', a, b): DuckDB counts PART-boundary crossings —
-    // exact integer arithmetic on both engines (day: date difference;
-    // month/year: calendar component differences; hour/minute/second:
-    // epoch-quotient differences, positive-epoch contract)
-    case ("date_diff", Seq(BoundOperand.BLit(Lit.LitString(u)), a, b)) =>
-      val (s0, e0) = (rec(a), rec(b))
-      (u.toLowerCase match {
-        case "day"   => datediff(e0, s0)
-        case "month" =>
-          (year(e0) * 12 + month(e0)) - (year(s0) * 12 + month(s0))
-        case "year"  => year(e0) - year(s0)
-        case "hour"   => (e0.cast("long") / 3600).cast("long") -
-          (s0.cast("long") / 3600).cast("long")
-        case "minute" => (e0.cast("long") / 60).cast("long") -
-          (s0.cast("long") / 60).cast("long")
-        case _ /* second */ => e0.cast("long") - s0.cast("long")
-      }).cast("long")
-    // `a // b` with two INTEGER legs (the analyzer reroutes float legs
-    // to plain division — DuckDB probed): truncating-toward-zero
-    // division; x // 0 reads NULL, the engine's established division
-    // posture (DuckDB raises there — documented divergence, same class
-    // as x / 0)
-    case ("__intdiv", Seq(a, b)) =>
-      try_divide(rec(a).cast("long"), rec(b).cast("long")).cast("long")
-    // ---- JSON family (DuckDB 1.0 probed) ----
-    // json_extract returns JSON TEXT — strings stay quoted ("x"), so
-    // Spark's get_json_object (which unquotes) can't express it; the
-    // variant route can: to_json(variant_get(parse_json(j), path)).
-    // Paths accept '$.a[1]', '/a/b' JSON-pointer, and bare-key forms
-    // (all probed), normalized to the $ form at lowering.
-    case ("json_extract" | "json_extract_path",
-        Seq(a, BoundOperand.BLit(Lit.LitString(p)))) =>
-      to_json(variant_get(parse_json(rec(a)), jsonDollarPath(p), "variant"))
-    case ("json_array_length", Seq(a)) =>
-      json_array_length(rec(a)).cast("long")
-    case ("json_array_length", Seq(a, BoundOperand.BLit(Lit.LitString(p)))) =>
-      json_array_length(get_json_object(rec(a), jsonDollarPath(p))).cast("long")
-    case ("json_keys", Seq(a)) => json_object_keys(rec(a))
-    case ("json_valid", Seq(a)) => try_parse_json(rec(a)).isNotNull
-    // json_type name mapping (probed): OBJECT/ARRAY/VARCHAR/BOOLEAN/
-    // NULL, integers read UBIGINT when non-negative, all other numerics
-    // DOUBLE. schema_of_variant supplies the Spark-side class; a
-    // scale-0 DECIMAL is an integer that overflowed BIGINT.
-    case ("json_type", Seq(a)) =>
-      val v = parse_json(rec(a))
-      val sch = schema_of_variant(v)
-      val num = variant_get(v, "$", "double")
-      when(sch.startsWith("OBJECT"), lit("OBJECT"))
-        .when(sch.startsWith("ARRAY"), lit("ARRAY"))
-        .when(sch === "STRING", lit("VARCHAR"))
-        .when(sch === "BOOLEAN", lit("BOOLEAN"))
-        .when(sch === "VOID", lit("NULL"))
-        .when(sch === "BIGINT" || sch.rlike("^DECIMAL\\([0-9]+,0\\)$"),
-          when(num >= 0, lit("UBIGINT")).otherwise(lit("BIGINT")))
-        .otherwise(lit("DOUBLE"))
-    // json_object / json_array: built by concat so the JSON TYPE
-    // PROPAGATES — a nested json_array/json_object/json_extract value
-    // embeds raw where the old to_json(named_struct) route quoted it
-    // as a string ('{"a":[0,2]}', not '{"a":"[0,2]"}'); NULL values
-    // read null (DuckDB probed — Spark's to_json would omit the field).
-    // Scalar serialization rides to_json(array(x)) with the brackets
-    // stripped (exact JSON escaping, arrays keep null elements).
-    case ("json_object", as) if as.length % 2 == 0 =>
-      val parts = as.grouped(2).map { pair =>
-        val Seq(BoundOperand.BLit(Lit.LitString(key)), v) = pair: @unchecked
-        concat(jsonScalarText(lit(key)), lit(":"), jsonValueText(v, rec))
-      }.toSeq
-      if (parts.isEmpty) lit("{}")
-      else concat(lit("{") +: parts.flatMap(p => Seq(lit(","), p)).tail :+ lit("}"): _*)
-    case ("json_array", as) =>
-      if (as.isEmpty) lit("[]")
-      else concat(lit("[") +:
-        as.map(v => jsonValueText(v, rec)).flatMap(p => Seq(lit(","), p)).tail :+
-        lit("]"): _*)
-    // wave-8 scalar batch (all DuckDB 1.0 probed)
-    // bin: binary text of an integer (Spark's native bin matches;
-    // DuckDB's string-input form — per-byte expansion — is not taken,
-    // the analyzer admits numerics only via the cast below)
-    case ("bin", Seq(a)) => bin(rec(a).cast("long"))
-    // unbin: '0101…' → packed BLOB, left-padded to whole bytes
-    // (hex(unbin('101')) = '05'); composed: bits → long → hex →
-    // left-pad to 2·⌈len/8⌉ digits → unhex
-    case ("unbin", Seq(a)) =>
-      val s = rec(a)
-      val digits = ceil(length(s).cast("double") / 8).cast("int") * 2
-      unhex(lpad(hex(conv(s, 2, 10).cast("long")), digits, lit("0")))
-    case ("to_base64", Seq(a)) => base64(rec(a).cast("binary"))
-    case ("from_base64", Seq(a)) => unbase64(rec(a))
-    case ("xor", Seq(a, b)) =>
-      rec(a).cast("long").bitwiseXOR(rec(b).cast("long"))
-    // regexp_escape: every char outside [A-Za-z0-9_] gets a backslash
-    // (RE2 QuoteMeta, probed: space/comma/slash all escaped)
-    case ("regexp_escape", Seq(a)) =>
-      regexp_replace(rec(a), lit("([^A-Za-z0-9_])"), lit("\\\\$1"))
-    // millisecond/microsecond INCLUDE the seconds component (DuckDB
-    // probed: 10:30:45.123456 → ms 45123, µs 45123456); epoch minutes
-    // are 60-aligned so a positive-epoch modulus is exact
-    case ("microsecond", Seq(a)) =>
-      (unix_micros(rec(a).cast("timestamp")) % 60000000L).cast("int")
-    case ("millisecond", Seq(a)) =>
-      ((unix_micros(rec(a).cast("timestamp")) % 60000000L) / 1000L).cast("int")
-    case ("decade", Seq(a)) => floor(year(rec(a)).cast("double") / 10).cast("int")
-    case ("millennium", Seq(a)) =>
-      ceil(year(rec(a)).cast("double") / 1000).cast("int")
-    // weekday: Sunday = 0 … Saturday = 6 (Spark's dayofweek is Sun = 1)
-    case ("weekday", Seq(a)) => (dayofweek(rec(a)) - 1).cast("int")
-    // yearweek: ISO year · 100 + ISO week (202403 for 2024-01-15)
-    case ("yearweek", Seq(a)) =>
-      val d = rec(a)
-      val iso = (dayofweek(d) + 5) % 7 + 1
-      (year(date_add(d.cast("date"), (lit(4) - iso).cast("int"))) * 100 +
-        weekofyear(d)).cast("int")
-    // julian day number as a double (julian(2000-01-01) = 2451545.0)
-    case ("julian", Seq(a)) =>
-      (datediff(rec(a).cast("date"), lit(java.sql.Date.valueOf("2000-01-01")))
-        + lit(2451545)).cast("double")
-    case ("era", Seq(a)) =>
-      when(year(rec(a)) > 0, lit(1)).otherwise(lit(0))
-    // wave-7 scalar batch (all DuckDB 1.0 probed)
-    case ("dayname", Seq(a))   => date_format(rec(a), "EEEE")
-    case ("monthname", Seq(a)) => date_format(rec(a), "MMMM")
-    // even: round away from zero to the next EVEN integer
-    // (2.5 → 4, -2.5 → -4, 3 → 4, 2 → 2)
-    case ("even", Seq(a)) =>
-      val x = rec(a).cast("double")
-      signum(x) * ceil(abs(x) / 2) * 2
-    // signbit: negative reads true; DuckDB 1.0 reads FALSE for -0.0
-    // (probed), so a plain < 0 matches
-    case ("signbit", Seq(a)) => rec(a) < lit(0)
-    case ("gamma", Seq(a)) =>
-      graft.functions.NumericFunctions.gamma(rec(a).cast("double"))
-    case ("lgamma", Seq(a)) =>
-      graft.functions.NumericFunctions.lgamma(rec(a).cast("double"))
-    // trunc: toward zero (2.7 → 2, -2.7 → -2)
-    case ("trunc", Seq(a)) =>
-      val x = rec(a).cast("double")
-      signum(x) * floor(abs(x))
-    // round_even = banker's rounding — Spark's bround is exactly that
-    case ("round_even", Seq(a)) => bround(rec(a).cast("double"), 0)
-    case _ => lowerFunc3(name, args, rec)
-  }
-
-  /** Continuation of lowerFunc (method-size split, part 3 of 3). */
-  private def lowerFunc3(name: String, args: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = (name, args) match {
-    case ("round_even", Seq(a, BoundOperand.BLit(Lit.LitLong(n)))) =>
-      bround(rec(a).cast("double"), n.toInt)
-    case ("century", Seq(a)) => ceil(year(rec(a)).cast("double") / 100).cast("int")
-    // isodow: Monday = 1 … Sunday = 7 (Spark's dayofweek is Sunday = 1)
-    case ("isodow", Seq(a)) =>
-      ((dayofweek(rec(a)) + 5) % 7 + 1).cast("int")
-    case ("week" | "weekofyear", Seq(a)) => weekofyear(rec(a))
-    case ("dayofmonth", Seq(a)) => dayofmonth(rec(a))
-    // isoyear: the year of the ISO week = the year of that week's
-    // Thursday (date + (4 − isodow) days)
-    case ("isoyear", Seq(a)) =>
-      val d = rec(a)
-      val iso = (dayofweek(d) + 5) % 7 + 1
-      year(date_add(d.cast("date"), (lit(4) - iso).cast("int")))
-    case ("prefix", Seq(a, b)) => rec(a).startsWith(rec(b))
-    case ("suffix", Seq(a, b)) => rec(a).endsWith(rec(b))
-    // regexp_full_match: the anchored form of regexp_matches
-    case ("regexp_full_match", Seq(a, b)) =>
-      regexp_like(rec(a), concat(lit("^(?:"), rec(b), lit(")$")))
-    case ("floor", Seq(a))    => floor(rec(a))
-    case ("ceil", Seq(a))     => ceil(rec(a))
-    case ("sqrt", Seq(a))     => sqrt(rec(a))
-    case ("power", Seq(a, b)) => pow(rec(a), rec(b))
-    case ("instr", Seq(a, b)) => instr(rec(a), rec(b))
-    case ("mod", Seq(a, b))   => try_mod(rec(a), rec(b)) // mod(x,0) NULL
-    // days from b to a (Spark argument order: end, start)
-    case ("datediff", Seq(a, b)) => datediff(rec(a), rec(b))
-    // date ± integer days (analyzer rebinds of DATE arithmetic)
-    case ("date_add_days", Seq(a, b)) => date_add(rec(a), rec(b).cast("int"))
-    case ("date_sub_days", Seq(a, b)) => date_sub(rec(a), rec(b).cast("int"))
-    case ("date_trunc", Seq(BoundOperand.BLit(Lit.LitString(u)), b)) =>
-      date_trunc(u.toLowerCase, rec(b))
-    case ("ltrim", Seq(a))   => ltrim(rec(a))
-    case ("rtrim", Seq(a))   => rtrim(rec(a))
-    // DuckDB/Postgres-parity prefix/suffix take: a NEGATIVE n drops |n|
-    // characters from the opposite end (Spark's own left/right return ''
-    // there, so these lower as substr algebra instead)
-    case ("left", Seq(a, n0)) =>
-      val c = rec(a); val n = rec(n0).cast("int")
-      c.substr(lit(1), when(n >= 0, n).otherwise(greatest(length(c) + n, lit(0))))
-    case ("right", Seq(a, n0)) =>
-      val c = rec(a); val n = rec(n0).cast("int")
-      val start = when(n >= 0, greatest(length(c) - n + 1, lit(1))).otherwise(-n + 1)
-      c.substr(start, length(c))
-    case ("translate", Seq(a, BoundOperand.BLit(Lit.LitString(from)),
-        BoundOperand.BLit(Lit.LitString(to)))) => translate(rec(a), from, to)
-    case ("date_part", Seq(BoundOperand.BLit(Lit.LitString(u)), b)) =>
-      u.toLowerCase match {
-        case "year" => year(rec(b)).cast("int")
-        case "quarter" => quarter(rec(b)).cast("int")
-        case "month" => month(rec(b)).cast("int")
-        case "day" => dayofmonth(rec(b)).cast("int")
-        case "hour" => hour(rec(b)).cast("int")
-        case "minute" => minute(rec(b)).cast("int")
-        case "week" => weekofyear(rec(b)).cast("int") // ISO week, both engines
-        // DuckDB dow: Sunday=0; Spark dayofweek: Sunday=1
-        case "dow" | "dayofweek" => (dayofweek(rec(b)) - 1).cast("int")
-        case "doy" | "dayofyear" => dayofyear(rec(b)).cast("int")
-        // seconds since epoch with fraction (DuckDB epoch is DOUBLE);
-        // cast(timestamp as double) IS fractional epoch seconds in Spark
-        case "epoch" => rec(b).cast("timestamp").cast("double")
-        case _ => second(rec(b)).cast("int")
-      }
-    case ("make_date", Seq(y, m, d)) => make_date(rec(y), rec(m), rec(d))
-    // trim-characters forms. A literal chars argument uses the functions
-    // API; a non-literal one (a column / expression) builds the same
-    // Catalyst StringTrim* node through the bridge — both codegen'd.
-    case ("trim", Seq(a, BoundOperand.BLit(Lit.LitString(ch))))  => trim(rec(a), ch)
-    case ("ltrim", Seq(a, BoundOperand.BLit(Lit.LitString(ch)))) => ltrim(rec(a), ch)
-    case ("rtrim", Seq(a, BoundOperand.BLit(Lit.LitString(ch)))) => rtrim(rec(a), ch)
-    // ---- list/array functions (DuckDB surface onto Spark natives) ----
-    case ("list_value", as) => array(as.map(rec): _*)
-    case ("len" | "array_length", Seq(a)) => size(rec(a))
-    // 1-based; 0 → NULL, negative indexes from the end, OOB → NULL
-    // (DuckDB list_extract semantics; try_element_at gives the OOB NULL,
-    // the CASE guards index 0 — evaluated lazily, so 0 never reaches it)
-    case ("list_extract" | "list_element", Seq(a, i)) =>
-      when(rec(i) === 0, lit(null))
-        .otherwise(try_element_at(rec(a), rec(i).cast("int")))
-    case ("list_contains" | "array_contains", Seq(a, e)) =>
-      array_contains(rec(a), rec(e))
-    // DuckDB's list_distinct drops NULLs and has no order guarantee;
-    // compact-then-distinct preserves first occurrence (sort explicitly
-    // when order matters)
-    case ("list_distinct" | "array_distinct", Seq(a)) =>
-      array_distinct(array_compact(rec(a)))
-    // ascending, NULLs LAST (DuckDB's default == Spark array_sort's)
-    case ("list_sort" | "array_sort", Seq(a)) => array_sort(rec(a))
-    // directional sort: DESC via sort-ascending + reverse (NULLs land
-    // FIRST on DESC — DuckDB's default NULLS LAST for DESC differs only
-    // when NULL elements are present; avoid NULL elements where parity
-    // matters, same caveat as list_distinct ordering)
-    case ("list_sort" | "array_sort",
-        Seq(a, BoundOperand.BLit(Lit.LitString(dr)))) =>
-      if (dr.equalsIgnoreCase("desc")) reverse(array_sort(rec(a)))
-      else array_sort(rec(a))
-    // list higher-order functions: Spark's codegen'd transform/filter/
-    // aggregate with the lambda body lowered under a parameter
-    // environment (captured columns resolve through `rec`, so the
-    // lambda works in scan, join and post-aggregation scopes alike)
-    case ("list_transform", Seq(a, BoundOperand.BLambda(ps, body))) =>
-      transform(rec(a), x => lowerLambdaBody(body, Map(ps.head -> x), rec))
-    case ("list_filter", Seq(a, BoundOperand.BLambda(ps, body))) =>
-      filter(rec(a), x => lowerLambdaBody(body, Map(ps.head -> x), rec)
-        .cast("boolean"))
-    case ("list_reduce", Seq(a, BoundOperand.BLambda(ps, body))) =>
-      // DuckDB folds the list with its FIRST element as the seed (an
-      // empty list errors there; here it reads NULL — documented)
-      val c = rec(a)
-      aggregate(
-        slice(c, lit(2), greatest(size(c) - 1, lit(0))),
-        try_element_at(c, lit(1)),
-        (acc, x) => lowerLambdaBody(body,
-          Map(ps.head -> acc, ps(1) -> x), rec))
-    case ("array_to_string", Seq(a, BoundOperand.BLit(Lit.LitString(sep)))) =>
-      array_join(rec(a), sep)
-    // literal separator, split LITERALLY (DuckDB string_split is not a
-    // regex) — quote it against Spark's regex split
-    case ("string_split" | "string_to_array" | "split",
-        Seq(a, BoundOperand.BLit(Lit.LitString(sep)))) =>
-      split(rec(a), java.util.regex.Pattern.quote(sep))
-    // the REGEX split (literal pattern, passed through un-quoted)
-    case ("regexp_split_to_array",
-        Seq(a, BoundOperand.BLit(Lit.LitString(pat)))) =>
-      split(rec(a), pat)
-    // 1-based position, 0 when absent (both engines)
-    case ("list_position" | "array_position", Seq(a, e)) =>
-      array_position(rec(a), rec(e))
-    case ("list_concat" | "array_concat", Seq(a, b)) => concat(rec(a), rec(b))
-    // l[a:b] — 1-based, both ends inclusive (DuckDB bracket slice)
-    case ("list_slice", Seq(a, i, j)) =>
-      slice(rec(a), rec(i), rec(j) - rec(i) + lit(1))
-    // s[i] / s[a:b] — DuckDB's STRING subscript/slice (1-based,
-    // inclusive; index 0 reads the empty string, negatives count from
-    // the end via substr's own semantics)
-    case ("str_extract", Seq(a, i)) =>
-      val ic = rec(i).cast("int")
-      when(ic === 0, lit("")).otherwise(rec(a).substr(ic, lit(1)))
-    // s[a:b]: DuckDB normalizes a NEGATIVE bound n to len + n + 1
-    // (so -1 is the last char, inclusive), then clamps lo to 1 and hi
-    // to len; hi < lo reads '' (probed: 'hello'[2:-1]='ello',
-    // [-3:-1]='llo', [-100:2]='he', [2:0]='')
-    case ("str_slice", Seq(a, i, j)) =>
-      val s = rec(a)
-      val len = length(s)
-      val i0 = rec(i).cast("int"); val j0 = rec(j).cast("int")
-      val lo = greatest(when(i0 < 0, len + i0 + 1).otherwise(i0), lit(1))
-      val hi = least(when(j0 < 0, len + j0 + 1).otherwise(j0), len)
-      when(hi < lo, lit("")).otherwise(s.substr(lo, hi - lo + lit(1)))
-    // explode: Spark's Generate — valid only as a top-level projection
-    // item (analyzer-enforced); drops empty/NULL rows like DuckDB
-    case ("unnest", Seq(a)) => explode(rec(a))
-    case ("trim", Seq(a, ch)) =>
-      graft.functions.TrimExprs.trimCol(rec(a), rec(ch), "both")
-    case ("ltrim", Seq(a, ch)) =>
-      graft.functions.TrimExprs.trimCol(rec(a), rec(ch), "leading")
-    case ("rtrim", Seq(a, ch)) =>
-      graft.functions.TrimExprs.trimCol(rec(a), rec(ch), "trailing")
-    case ("reverse", Seq(a)) => reverse(rec(a))
-    case ("md5", Seq(a))     => md5(rec(a).cast("binary"))
-    case ("levenshtein", Seq(a, b)) => levenshtein(rec(a), rec(b))
-    // DuckDB chr() takes any unicode CODEPOINT; Spark's char() is
-    // mod-256 ASCII (chr(769) would silently read '')
-    case ("chr", Seq(a)) =>
-      graft.functions.StringFunctions.chrCodepoint(rec(a).cast("bigint"))
-    case ("ascii", Seq(a))    => ascii(rec(a))
-    case ("to_hex", Seq(a))   => hex(rec(a))
-    // hex/unhex/from_hex: Spark's natives are parity-exact with DuckDB
-    // (probed: uppercase digits, string→byte hex, two's-complement
-    // 64-bit for negative integers)
-    case ("hex", Seq(a))      => hex(rec(a))
-    case ("unhex" | "from_hex", Seq(a)) => unhex(rec(a))
-    // format('{} and {}', a, b) — fmt-style with sequential {} and
-    // positional {n} placeholders, {{ }} escapes (the analyzer rejects
-    // {:spec} forms). Desugars into one codegen'd concat: concat is
-    // NULL-propagating, which IS DuckDB's rule (format with any NULL
-    // argument reads NULL, probed).
-    case ("format", BoundOperand.BLit(Lit.LitString(fmt)) +: rest) =>
-      val pieces = scala.collection.mutable.ArrayBuffer.empty[Column]
-      val sb = new StringBuilder
-      var next = 0
-      var i = 0
-      while (i < fmt.length) {
-        val c = fmt.charAt(i)
-        if (c == '{' && i + 1 < fmt.length && fmt.charAt(i + 1) == '{') {
-          sb.append('{'); i += 2
-        } else if (c == '}' && i + 1 < fmt.length && fmt.charAt(i + 1) == '}') {
-          sb.append('}'); i += 2
-        } else if (c == '{') {
-          val close = fmt.indexOf('}', i)
-          val inner = fmt.substring(i + 1, close)
-          val idx = if (inner.isEmpty) { next += 1; next - 1 } else inner.toInt
-          if (sb.nonEmpty) { pieces += lit(sb.toString); sb.clear() }
-          pieces += rec(rest(idx)).cast("string")
-          i = close + 1
-        } else { sb.append(c); i += 1 }
-      }
-      if (sb.nonEmpty) pieces += lit(sb.toString)
-      if (pieces.isEmpty) lit("") else concat(pieces.toSeq: _*)
-    // path helpers (DuckDB probed: parse_path('/a/b/c.txt') =
-    // ['/', 'a', 'b', 'c.txt']; parse_dirname = first component,
-    // parse_filename = last (optionally extension-trimmed),
-    // parse_dirpath = the path minus the final component)
-    case ("parse_path", Seq(a)) =>
-      val p = rec(a)
-      val parts = filter(split(p, "/"), x => x =!= "")
-      when(p.startsWith("/"), concat(array(lit("/")), parts))
-        .otherwise(parts)
-    case ("parse_dirname", Seq(a)) =>
-      val p = rec(a)
-      val parts = filter(split(p, "/"), x => x =!= "")
-      when(p.startsWith("/"), lit("/"))
-        .otherwise(coalesce(
-          org.apache.spark.sql.functions.get(parts, lit(0)), lit("")))
-    case ("parse_filename", as) if as.nonEmpty =>
-      val p = rec(as.head)
-      val base = element_at(filter(split(p, "/"), x => x =!= ""), -1)
-      val trimExt = as.lift(1) match {
-        case Some(BoundOperand.BLit(Lit.LitBool(b))) => b
-        case _                                       => false
-      }
-      if (trimExt) regexp_replace(base, "\\.[^.]*$", "") else base
-    case ("parse_dirpath", Seq(a)) =>
-      regexp_replace(rec(a), "/+[^/]*/*$", "")
-    case ("epoch_ms", Seq(a)) => unix_millis(rec(a).cast("timestamp"))
-    // epoch family: DuckDB's epoch() is fractional SECONDS as DOUBLE
-    // (a timestamp→double cast in Spark is exactly that); epoch_us is
-    // exact integer micros
-    case ("epoch", Seq(a))    => rec(a).cast("timestamp").cast("double")
-    case ("epoch_us", Seq(a)) => unix_micros(rec(a).cast("timestamp"))
-    case ("make_timestamp", as) if as.length == 6 =>
-      make_timestamp(rec(as(0)), rec(as(1)), rec(as(2)), rec(as(3)),
-        rec(as(4)), rec(as(5)).cast("decimal(16,6)"))
-    // DuckDB's sign returns an integer -1/0/1; Spark's signum a double
-    case ("sign", Seq(a))    => signum(rec(a)).cast("int")
-    case ("exp", Seq(a))     => exp(rec(a))
-    case ("ln", Seq(a))      => log(rec(a))
-    case ("log10", Seq(a))   => log10(rec(a))
-    case ("log2", Seq(a))    => log2(rec(a))
-    case ("last_day", Seq(a)) => last_day(rec(a))
-    case ("quarter", Seq(a)) => quarter(rec(a))
-    case ("hour", Seq(a))    => hour(rec(a))
-    case ("minute", Seq(a))  => minute(rec(a))
-    case ("second", Seq(a))  => second(rec(a))
-    case ("nullif", Seq(a, b)) =>
-      val c = rec(a)
-      when(c === rec(b), lit(null)).otherwise(c)
-    case ("repeat", Seq(a, BoundOperand.BLit(Lit.LitLong(n)))) =>
-      repeat(rec(a), n.toInt)
-    case ("lpad", Seq(a, BoundOperand.BLit(Lit.LitLong(n)),
-        BoundOperand.BLit(Lit.LitString(p)))) => lpad(rec(a), n.toInt, p)
-    case ("rpad", Seq(a, BoundOperand.BLit(Lit.LitLong(n)),
-        BoundOperand.BLit(Lit.LitString(p)))) => rpad(rec(a), n.toInt, p)
-    // Spark's split takes a REGEX: quote the literal separator; an
-    // out-of-range index — and even a NULL input — reads '' (DuckDB
-    // split_part semantics, which never returns NULL). Negative indexes
-    // count from the end (probed DuckDB 1.0: -1 is the last part,
-    // out-of-range and 0 read ''): element 0-based size+n, and get()
-    // already yields NULL for any out-of-range position.
-    case ("split_part", Seq(a, BoundOperand.BLit(Lit.LitString(sep)),
-        BoundOperand.BLit(Lit.LitLong(n)))) =>
-      val arr = split(rec(a), java.util.regex.Pattern.quote(sep))
-      val idx =
-        if (n >= 1) lit(n.toInt - 1)
-        else org.apache.spark.sql.functions.size(arr) + lit(n.toInt)
-      coalesce(org.apache.spark.sql.functions.get(arr, idx), lit(""))
-    // DuckDB semantics: FIRST match only unless the 'g' flag; 'i'
-    // prepends (?i) to the pattern (works for dynamic patterns via
-    // concat); replacement backrefs are \1-style, translated in the
-    // codegen'd RegexpReplaceDuck expression
-    case ("regexp_replace", Seq(a, b, c)) =>
-      graft.functions.StringFunctions.regexpReplaceDuck(
-        rec(a), rec(b), rec(c), global = false)
-    case ("regexp_replace", Seq(a, b, c,
-        BoundOperand.BLit(Lit.LitString(flags)))) =>
-      val pat = if (flags.contains('i')) concat(lit("(?i)"), rec(b)) else rec(b)
-      graft.functions.StringFunctions.regexpReplaceDuck(
-        rec(a), pat, rec(c), global = flags.contains('g'))
-    case ("regexp_extract", Seq(a, BoundOperand.BLit(Lit.LitString(pat)))) =>
-      regexp_extract(rec(a), pat, 0)
-    case ("regexp_extract", Seq(a, BoundOperand.BLit(Lit.LitString(pat)),
-        BoundOperand.BLit(Lit.LitLong(g)))) =>
-      regexp_extract(rec(a), pat, g.toInt)
-    case ("greatest", as) => greatest(as.map(rec): _*)
-    case ("least", as)    => least(as.map(rec): _*)
-    case other => sys.error(s"unreachable function ${other._1}/${other._2.length}")
-  }
-
-  /** Normalize DuckDB's three JSON path spellings onto the $-form the
-    * Spark functions take: '$.a[1]' stays, '/a/1' JSON-pointer becomes
-    * '$.a[1]' (numeric segments index arrays), a bare key prefixes '$.'.
-    */
-  private def jsonDollarPath(p: String): String =
-    if (p.startsWith("$")) p
-    else if (p.startsWith("/"))
-      "$" + p.split("/").drop(1).map(seg =>
-        if (seg.nonEmpty && seg.forall(_.isDigit)) s"[$seg]"
-        else s".$seg").mkString
-    else s"$$.$p"
 
   private[sql] def arith(op: Char, lc: Column, rc: Column): Column = op match {
     case '+' => lc + rc
@@ -6072,7 +4882,7 @@ object Lowering {
       case BoundOperand.BArith(op, l, r) =>
         arith(op, lowerOperandWith(l, colOf), lowerOperandWith(r, colOf))
       case BoundOperand.BFunc(f, args) =>
-        lowerFunc(f, args, lowerOperandWith(_, colOf))
+        Functions.lower(f, args, lowerOperandWith(_, colOf))
       case BoundOperand.BCase(bs, els) =>
         caseCol(bs, els, lowerOperandWith(_, colOf))
       case BoundOperand.BCast(x, t) => lowerOperandWith(x, colOf).cast(t.spark)
@@ -6102,124 +4912,6 @@ object Lowering {
     * years, months, weeks, days, hours, mins, secs). Column arithmetic
     * then adds/subtracts it from a date/timestamp directly.
     */
-  /** TIME / TIMESTAMPTZ function family, split out of lowerFunc (which
-    * sits at the JVM 64KB method-size limit).
-    */
-  private[sql] val TimeTzFuncs: Set[String] = Set("make_time",
-    "__time_plus", "__time_minus", "__tz_to_tz", "__tz_to_naive",
-    "__tstz_text", "__ts_to_time")
-
-  private def lowerTimeTz(f: String, as: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = (f, as) match {
-    // make_time(h, m, s): seconds take a fraction (DECIMAL micros)
-    case ("make_time", Seq(h, m, sec)) =>
-      call_function("make_time", rec(h).cast("int"), rec(m).cast("int"),
-        rec(sec).cast("decimal(16,6)"))
-    // TIME +/- sub-day interval: Spark's TIME takes DayTimeInterval
-    // operands (make_dt_interval), not the calendar make_interval the
-    // generic interval lowering builds
-    case (tpm @ ("__time_plus" | "__time_minus"), Seq(t, iv)) =>
-      val z = lit(0)
-      val dt = iv match {
-        case BoundOperand.BFunc("to_hours", Seq(n)) =>
-          make_dt_interval(z, rec(n).cast("int"))
-        case BoundOperand.BFunc("to_minutes", Seq(n)) =>
-          make_dt_interval(z, z, rec(n).cast("int"))
-        case BoundOperand.BFunc("to_seconds", Seq(n)) =>
-          make_dt_interval(z, z, z, rec(n).cast("decimal(16,6)"))
-        case BoundOperand.BFunc("to_milliseconds", Seq(n)) =>
-          make_dt_interval(z, z, z,
-            (rec(n).cast("decimal(16,3)") / 1000).cast("decimal(16,6)"))
-        case BoundOperand.BFunc("to_microseconds", Seq(n)) =>
-          make_dt_interval(z, z, z,
-            (rec(n).cast("decimal(16,0)") / 1000000).cast("decimal(16,6)"))
-        case BoundOperand.BInterval(n, "hour")   => make_dt_interval(z, lit(n))
-        case BoundOperand.BInterval(n, "minute") => make_dt_interval(z, z, lit(n))
-        case BoundOperand.BInterval(n, "second") =>
-          make_dt_interval(z, z, z, lit(java.math.BigDecimal.valueOf(n)))
-        case other => sys.error(s"unreachable TIME interval shape $other")
-      }
-      if (tpm == "__time_plus") rec(t) + dt else rec(t) - dt
-    // timezone(tz, naive)/naive AT TIME ZONE tz: interpret the naive
-    // wall time IN tz -> instant (TIMESTAMPTZ); Spark's to_utc_timestamp
-    // is exactly this under the pinned UTC session zone
-    case ("__tz_to_tz", Seq(tz, x)) =>
-      to_utc_timestamp(rec(x).cast("timestamp"), rec(tz).cast("string"))
-    // timezone(tz, tstz)/tstz AT TIME ZONE tz: the tz wall time of the
-    // instant, as a NAIVE timestamp
-    case ("__tz_to_naive", Seq(tz, x)) =>
-      from_utc_timestamp(rec(x), rec(tz).cast("string"))
-    // TIMESTAMPTZ::VARCHAR appends the session (+00) offset like DuckDB
-    case ("__tstz_text", Seq(a)) =>
-      concat(rec(a).cast("string"), lit("+00"))
-    // TIMESTAMP::TIME — time-of-day via the rendered micros (Spark has
-    // no native timestamp->time cast yet)
-    case ("__ts_to_time", Seq(a)) =>
-      date_format(rec(a), "HH:mm:ss.SSSSSS")
-        .cast(graft.sql.SqlType.SqlTime.spark)
-    case other => sys.error(s"unreachable time/tz function $other")
-  }
-
-  /** ENUM plumbing (positional ordering / validated casts), split out
-    * of lowerFunc like the time/tz family.
-    */
-  private[sql] val EnumFuncs: Set[String] =
-    Set("__enum_pos", "__enum_cast", "__enum_try_cast", "__enum_from_pos")
-
-  private def lowerEnum(f: String, as: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = {
-    def vals(b: BoundOperand): Seq[String] = b match {
-      case BoundOperand.BLit(Lit.LitString(vs)) => vs.split('\u0001').toSeq
-      case other => sys.error(s"unreachable enum value list $other")
-    }
-    (f, as) match {
-      // 1-based definition position (the enum's sort key); a non-member
-      // reads NULL here — the validated cast is the raising surface
-      case ("__enum_pos", Seq(x, vl)) =>
-        val arr = array(vals(vl).map(lit): _*)
-        val p = array_position(arr, rec(x))
-        when(p > 0, p.cast("int")).otherwise(lit(null).cast("int"))
-      // text -> ENUM with DuckDB's conversion-error surface
-      case ("__enum_cast", Seq(x, vl)) =>
-        val vs = vals(vl)
-        val c = rec(x)
-        when(c.isNull || c.isin(vs: _*), c)
-          .otherwise(raise_error(concat(
-            lit("Conversion Error: Could not convert string '"), c,
-            lit(s"' to ENUM(${vs.map(v => s"'$v'").mkString(", ")})")))
-            .cast("string"))
-      // try_cast's NULL-on-miss variant of the validated ENUM cast
-      case ("__enum_try_cast", Seq(x, vl)) =>
-        val c = rec(x)
-        when(c.isin(vals(vl): _*), c).otherwise(lit(null).cast("string"))
-      // position -> value (min/max over enum aggregate the position)
-      case ("__enum_from_pos", Seq(p, vl)) =>
-        element_at(array(vals(vl).map(lit): _*), rec(p).cast("int"))
-      case other => sys.error(s"unreachable enum function $other")
-    }
-  }
-
-  /** UNION carrier plumbing: struct(tag, member…) where only the
-    * active member is non-NULL.
-    */
-  private[sql] val UnionFuncs: Set[String] =
-    Set("union_value", "union_tag", "union_extract", "__union_make")
-
-  private def lowerUnion(f: String, as: Seq[BoundOperand],
-      rec: BoundOperand => Column): Column = (f, as) match {
-    case ("union_value", Seq(BoundOperand.BLit(Lit.LitString(k)), v)) =>
-      struct(lit(k).as("tag"), rec(v).as(k))
-    case ("union_tag", Seq(u)) => rec(u).getField("tag")
-    case ("union_extract", Seq(u, BoundOperand.BLit(Lit.LitString(k)))) =>
-      rec(u).getField(k)
-    case ("__union_make",
-          BoundOperand.BLit(Lit.LitString(spec)) +: tag +: vs) =>
-      val names = spec.split('\u0001').toSeq
-      struct((rec(tag).as("tag") +: names.zip(vs).map {
-        case (n, v) => rec(v).as(n) }): _*)
-    case other => sys.error(s"unreachable union function $other")
-  }
-
   private def intervalCol(n: Long, unit: String): Column = {
     val z = lit(0)
     unit match {
@@ -6239,7 +4931,7 @@ object Lowering {
     case BoundOperand.BInterval(n, u) => intervalCol(n, u)
     case BoundOperand.BLit(l) => lowerLit(l)
     case BoundOperand.BArith(op, l, r) => arith(op, lowerOperand(l), lowerOperand(r))
-    case BoundOperand.BFunc(f, args)   => lowerFunc(f, args, lowerOperand)
+    case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, lowerOperand)
     case BoundOperand.BCase(bs, els)   => caseCol(bs, els, lowerOperand)
     case BoundOperand.BCast(x, t)      => lowerOperand(x).cast(t.spark)
     case BoundOperand.BTryCast(x, t)   => lowerOperand(x).try_cast(t.spark)
@@ -6310,7 +5002,7 @@ object Lowering {
   private def bareOperand(o: BoundOperand): Column = o match {
     case BoundOperand.BCol(c)          => col(c.attr.name)
     case BoundOperand.BArith(op, l, r) => arith(op, bareOperand(l), bareOperand(r))
-    case BoundOperand.BFunc(f, args)   => lowerFunc(f, args, bareOperand)
+    case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, bareOperand)
     case BoundOperand.BCase(bs, els)   => caseCol(bs, els, bareOperand)
     case BoundOperand.BCast(x, t)      => bareOperand(x).cast(t.spark)
     case BoundOperand.BTryCast(x, t)   => bareOperand(x).try_cast(t.spark)

@@ -260,106 +260,6 @@ object Parser {
     "mean", "arbitrary", "kahan_sum", "sumkahan", "approx_count_distinct")
   private val winFuncs = Set("row_number", "rank", "dense_rank", "lag", "lead",
     "first_value", "last_value", "nth_value", "ntile", "percent_rank", "cume_dist")
-  private val scalarFuncs = Set("upper", "lower", "trim", "length", "abs",
-    "round", "substr", "substring", "coalesce", "concat",
-    "year", "month", "day",
-    "replace", "floor", "ceil", "ceiling", "sqrt", "power", "pow",
-    "instr", "mod", "datediff", "date_trunc",
-    "ltrim", "rtrim", "reverse", "md5", "sign",
-    "exp", "ln", "log10", "log2",
-    "last_day", "quarter", "hour", "minute", "second",
-    "nullif", "repeat", "lpad", "rpad", "split_part",
-    "greatest", "least", "regexp_replace", "regexp_extract",
-    "left", "right", "translate", "strpos", "ifnull",
-    "date_part", "make_date",
-    "len", "array_length", "list_contains", "array_contains",
-    "list_extract", "list_element", "list_distinct", "array_distinct",
-    "list_sort", "array_sort", "array_to_string", "string_split",
-    "string_to_array", "split", "list_position", "array_position",
-    "list_concat", "array_concat", "list_value", "list_slice", "unnest",
-    "levenshtein", "chr", "ascii", "to_hex", "epoch_ms",
-    "regexp_split_to_array",
-    "list_transform", "array_transform", "list_filter", "array_filter",
-    "list_reduce",
-    "sin", "cos", "tan", "asin", "acos", "atan", "atan2", "cot",
-    "degrees", "radians", "pi", "cbrt", "factorial", "log",
-    "isnan", "isfinite", "isinf", "bit_count",
-    "starts_with", "ends_with", "contains", "printf", "strftime",
-    "strptime", "regexp_matches", "to_timestamp",
-    "list_min", "list_max", "list_sum", "array_min", "array_max",
-    "gcd", "lcm", "octet_length", "bit_length", "sha256", "unicode",
-    "ifnull", "hamming", "jaccard", "date_diff",
-    "regexp_extract_all", "to_base", "json_extract_string", "time_bucket",
-    "list_reverse", "flatten", "list_append", "list_prepend",
-    "list_unique", "list_intersect", "list_has_any", "list_has_all",
-    "list_zip", "struct_extract", "to_json",
-    "concat_ws", "list_aggregate", "strlen", "lcase", "ucase",
-    "map", "map_extract", "map_keys", "map_values", "cardinality",
-    "epoch", "epoch_us", "make_timestamp", "date_add",
-    "list_cosine_similarity", "list_distance", "list_dot_product",
-    "list_inner_product",
-    "damerau_levenshtein", "jaro_similarity", "jaro_winkler_similarity",
-    "mismatches", "strip_accents", "nfc_normalize", "ord", "format_bytes",
-    "list_select", "list_where", "list_resize", "list_grade_up",
-    "list_reverse_sort", "list_any_value",
-    "map_entries", "map_concat", "element_at", "format",
-    "parse_path", "parse_dirname", "parse_filename", "parse_dirpath",
-    "hex", "unhex", "from_hex",
-    "dayname", "monthname", "even", "signbit", "gamma", "lgamma",
-    "trunc", "round_even", "century", "isodow", "week", "weekofyear",
-    "dayofmonth", "isoyear", "prefix", "suffix", "regexp_full_match",
-    // wave 8: canonical additions
-    "bin", "unbin", "to_base64", "base64", "from_base64", "xor",
-    "regexp_escape", "try_strptime", "millisecond", "microsecond",
-    "decade", "millennium", "weekday", "yearweek", "julian", "era",
-    // wave 8: pure aliases (rebound in the analyzer)
-    "array_cat", "list_cat", "array_extract", "array_has", "list_has",
-    "array_indexof", "list_indexof", "array_slice", "array_unique",
-    "array_value", "list_pack", "array_zip", "array_aggregate",
-    "array_aggr", "array_grade_up", "array_resize", "array_reverse_sort",
-    "array_select", "array_where", "array_cosine_similarity",
-    "array_distance", "array_dot_product", "array_inner_product",
-    "array_to_json", "greatest_common_divisor", "least_common_multiple",
-    "datepart", "datetrunc", "datesub", "date_sub", "str_split",
-    "str_split_regex", "string_split_regex", "editdist3",
-    "list_apply", "array_apply", "array_reduce",
-    // JSON family
-    "json_extract", "json_extract_path", "json_extract_path_text",
-    "json_array_length", "json_keys", "json_valid", "json_type",
-    "json_object", "json_array", "row_to_json",
-    // wave 9: environment / misc scalars + list-function bare aliases
-    "typeof", "encode", "decode", "epoch_ns", "nextafter",
-    "map_from_entries", "struct_insert", "bar", "error", "json_quote",
-    "like_escape", "ilike_escape", "not_like_escape", "not_ilike_escape",
-    "md5_number_lower", "md5_number_upper", "md5_number",
-    "enum_range", "enum_first", "enum_last", "enum_code",
-    "union_value", "union_tag", "union_extract",
-    "make_time", "current_date", "today", "now", "get_current_timestamp",
-    "transaction_timestamp", "current_database", "current_schema",
-    "version", "uuid", "gen_random_uuid", "random",
-    "grade_up", "reduce", "apply", "filter", "aggregate",
-    "formatreadablesize", "formatreadabledecimalsize",
-    // wave 9: INTERVAL constructors (column-capable, unlike literals)
-    "to_years", "to_quarters", "to_months", "to_weeks", "to_days",
-    "to_hours", "to_minutes", "to_seconds", "to_milliseconds",
-    "to_microseconds", "to_decades", "to_centuries", "to_millennia",
-    // wave 9: grapheme-cluster string functions
-    "length_grapheme", "left_grapheme", "right_grapheme",
-    "substring_grapheme",
-    // wave 9: JSON document algebra
-    "json_merge_patch", "json_structure", "json_contains",
-    // wave 9: sequences (substituted at statement time)
-    "nextval", "currval",
-    // wave 9b: operator function-forms + floor division/mod + BIT ops
-    "add", "subtract", "multiply", "divide", "fdiv", "fmod",
-    "get_bit", "set_bit", "bit_position", "bitstring",
-    // wave 9b: JSON -> typed values
-    "from_json", "from_json_strict", "json_transform",
-    "json_transform_strict",
-    // wave 9c: remaining catalog closures
-    "array_cross_product", "to_binary", "from_binary", "unpivot_list",
-    "timezone", "timezone_hour", "timezone_minute", "hash", "setseed",
-    "age")
   private def reserved(s: String): Boolean = reservedWords(s.toLowerCase)
 
   /** FROM-position file readers → formats (DuckDB's read_* family;
@@ -1559,7 +1459,7 @@ object Parser {
               // column name. Detected by a 3-token lookahead so ordinary
               // calls fall through to the operand grammar untouched.
               case TIdent(f, _) if (aggFuncs(f.toLowerCase) ||
-                  scalarFuncs(f.toLowerCase)) && {
+                  Functions.callable(f.toLowerCase)) && {
                 val save = p.i; p.next()
                 val isColumnsCall = (p.peek match {
                   case TSym("(", _) => p.next()
@@ -3987,22 +3887,15 @@ object Parser {
           }
         _ <- p.eatSym(")")
       } yield Operand.FuncCall("substr", args)
-    case TIdent(f, _) if scalarFuncs(f.toLowerCase) && {
+    case TIdent(f, _) if Functions.callable(f.toLowerCase) && {
         // function only when '(' follows — otherwise a column named e.g.
         // `length` still resolves
         val save = p.i; p.next()
         val isCall = p.peek match { case TSym("(", _) => true; case _ => false }
         p.i = save; isCall
       } =>
-      val fn0 = f.toLowerCase
-      val fn = fn0 match {
-        case "substring" => "substr"
-        case "ceiling"   => "ceil"
-        case "pow"       => "power"
-        case "strpos"    => "instr"   // position-of-substring synonyms
-        case "ifnull"    => "coalesce" // two-arg coalesce synonym
-        case other       => other
-      }
+      // aliases resolve in the analyzer, through the same catalog
+      val fn = f.toLowerCase
       p.next()
       for {
         _ <- p.eatSym("(")

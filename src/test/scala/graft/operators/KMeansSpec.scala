@@ -69,4 +69,14 @@ class KMeansSpec extends AnyFunSuite {
     // by design; the probe structure must still find a solid fraction
     assert(recall >= 0.4, s"recall $recall (${ivf.size} ivf vs ${brute.size} brute)")
   }
+
+  test("empty input or k <= 0 fails at the call with a clear message") {
+    val empty = emb.filter(lit(false))
+    val e1 = intercept[IllegalArgumentException](
+      KMeans.train(empty, "vec_id", "e", k = 4, iters = 2))
+    assert(e1.getMessage.contains("non-empty training input"))
+    val e2 = intercept[IllegalArgumentException](
+      KMeans.train(emb, "vec_id", "e", k = 0, iters = 2))
+    assert(e2.getMessage.contains("k >= 1"))
+  }
 }

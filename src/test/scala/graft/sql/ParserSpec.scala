@@ -199,4 +199,18 @@ class ParserSpec extends AnyFunSuite {
     parseErr("DELETE t")
     parseErr("UPDATE t SET")
   }
+
+  test("list_aggr parses and binds exactly like list_aggregate") {
+    val lists = Analyzer.TableDesc("t", Seq(Analyzer.AttributeDesc("l",
+      SqlType.SqlArray(SqlType.SqlBigInt))))
+    object cat extends Analyzer.Catalog {
+      def resolve(t: String): Option[Analyzer.TableDesc] =
+        if (t.equalsIgnoreCase("t")) Some(lists) else None
+    }
+    def bound(fn: String) = Analyzer.analyze(
+      parseOk(s"SELECT $fn(l, 'sum') AS s FROM t"), cat)
+      .fold(e => fail(s"$fn: ${e.msg}"), identity)
+    assert(bound("list_aggr") == bound("list_aggregate"))
+    assert(bound("array_aggr") == bound("list_aggregate"))
+  }
 }

@@ -1,13 +1,10 @@
 #!/bin/bash
-# Run graft.Verify directly from the compiled classpath (no sbt lock),
-# mirroring build.sbt's JDK17 add-opens. Usage: run_verify.sh <sf> <out> [names]
-OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-  java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-  java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-  java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-  java.base/sun.util.calendar; do OPENS="$OPENS --add-opens $p=ALL-UNNAMED"; done
-exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$@"
+# Run graft.Verify from the compiled classpath (no sbt lock) through the
+# shared launcher. Usage: run_verify.sh <sf> <out> [names]
+# Relative <sf>/<out> paths resolve against the caller's directory (the
+# launcher runs from the repository root).
+[ $# -ge 2 ] || { echo "usage: $0 <sf> <out> [names]" >&2; exit 2; }
+sf=$(realpath -m "$1")
+out=$(realpath -m "$2")
+shift 2
+exec "$(dirname "$0")/run_tool.sh" graft.Verify "$sf" "$out" "$@"
