@@ -127,157 +127,39 @@ object Lowering {
           distinctWinEligible(f, args, fr)
         case _ => false
       }
-      // unpartitioned unordered aggregate windows take the broadcast
-      // rewrite in the pre-attach path (outputCols-time Columns can't
-      // inject the join)
-      val hasGlobalAggWin = (q.projection ++ q.qualifyWins).exists {
-        case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-          isGlobalAggWin(f, args, parts, ord, frame)
-        case _ => false
-      }
-      // unpartitioned ORDERED windows pre-attach as distributed prefix
-      // scans (the outputCols-time Column API can't rewrite the frame)
-      val hasGlobalOrdWin = (q.projection ++ q.qualifyWins).exists {
-        case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-          isGlobalOrderedWin(f, args, parts, ord, frame) ||
-            isGlobalDistinctWin(f, args, parts, ord, frame) ||
-            isGlobalShiftWin(f, args, parts, ord) ||
-            isGlobalBoundedRowsWin(f, args, parts, ord, frame) ||
-            isGlobalIgnoreNullsShiftWin(f, args, parts, ord) ||
-            isGlobalWholeExWin(f, args, parts, ord, frame) ||
-            isGlobalBigShiftWin(f, args, parts, ord) ||
-            isGlobalDistinctAheadWin(f, args, parts, ord, frame) ||
-            isGlobalBigInShiftWin(f, args, parts, ord)
-        case _ => false
+      // unpartitioned windows the bucketed operator or the OVER ()
+      // broadcast rewrite computes pre-attach (outputCols-time Columns
+      // can't rewrite the frame or inject the join)
+      val opL: BoundOperand => Column = lowerOperandWith(_, qcol)
+      val classified = (q.projection ++ q.qualifyWins).collect {
+        case w: BoundItem.BIWin => w -> GlobalWindows.classify(w.alias,
+          w.func, w.args, w.partitionBy, w.orderBy, w.frame, opL)
       }
       val winsPre = q.qualify.isDefined || donNeedsWins ||
         hasGroupsFrames || hasDistinctRunning || q.qualifyWins.nonEmpty ||
-        hasGlobalAggWin || hasGlobalOrdWin
+        classified.exists(_._2.nonEmpty)
       val baseQ =
         if (!winsPre) base1
         else {
-          val winItems = (q.projection ++ q.qualifyWins).collect {
-            case w: BoundItem.BIWin => w
-          }
-          val (globalWins, rest0) = winItems.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-              isGlobalAggWin(f, args, parts, ord, frame)
-            case _ => false
-          }
-          val (gowWins, rest1) = rest0.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-              isGlobalOrderedWin(f, args, parts, ord, frame) ||
-                isGlobalDistinctWin(f, args, parts, ord, frame)
-            case _ => false
-          }
-          val (shiftWins, rest2) = rest1.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-              isGlobalShiftWin(f, args, parts, ord) ||
-                isGlobalBoundedRowsWin(f, args, parts, ord, frame)
-            case _ => false
-          }
-          val (ginWins, rest3) = rest2.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, _) =>
-              isGlobalIgnoreNullsShiftWin(f, args, parts, ord)
-            case _ => false
-          }
-          val (wexWins, rest4) = rest3.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-              isGlobalWholeExWin(f, args, parts, ord, frame)
-            case _ => false
-          }
-          val (gbsWins, rest5) = rest4.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, _) =>
-              isGlobalBigShiftWin(f, args, parts, ord)
-            case _ => false
-          }
-          val (gmaWins, rest6) = rest5.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, frame) =>
-              isGlobalDistinctAheadWin(f, args, parts, ord, frame)
-            case _ => false
-          }
-          val (gbiWins, windowWins) = rest6.partition {
-            case BoundItem.BIWin(f, args, parts, ord, _, _) =>
-              isGlobalBigInShiftWin(f, args, parts, ord)
-            case _ => false
-          }
-          // ALL global-machinery classes go through the shared-bucketing
-          // coordinator: one range bucketing per distinct ORDER spec,
-          // items of the same spec share it ACROSS classes. DISTINCT
-          // items pre-attach their first-occurrence mask (value-
+          // DISTINCT items pre-attach their first-occurrence mask (value-
           // partitioned window — distributed at any NDV) and become an
-          // ordinary running aggregate over the mask.
-          val opL: BoundOperand => Column = lowerOperandWith(_, qcol)
-          def ordColsOf(w: BoundItem.BIWin): Seq[(Column, Ast.SortDir)] =
-            w.orderBy.map { case (o, dir) => (opL(o), dir) }
-          val gowReqs = gowWins.collect { case w: BoundItem.BIWin =>
-            if (isGlobalDistinctWin(w.func, w.args, w.partitionBy,
-                w.orderBy, w.frame))
-              GowReq(w.alias, if (w.func == "mean") "avg" else w.func,
-                None, w.orderBy, ordColsOf(w), w.frame,
-                Some(distinctMaskColumn(w.args, Nil, w.orderBy, opL, qcol)))
-            else
-              GowReq(w.alias, w.func, w.args.headOption.map(opL),
-                w.orderBy, ordColsOf(w), w.frame)
-          }
-          val gswReqs = shiftWins.collect { case w: BoundItem.BIWin =>
-            GswReq(ghostWinOf(w.alias, w.func, w.args, w.frame, opL),
-              w.orderBy, ordColsOf(w))
-          }
-          val ginReqs = ginWins.collect { case w: BoundItem.BIWin =>
-            val argsR = w.args.dropRight(1) // strip the sentinel
-            GinReq(w.alias, w.func, opL(argsR.head),
-              shiftOffset(argsR), shiftDefaultAny(argsR),
-              w.orderBy, ordColsOf(w))
-          }
-          val gwxReqs = wexWins.collect { case w: BoundItem.BIWin =>
-            GwxReq(w.alias, w.func, w.args.headOption.map(opL),
-              w.frame.get, w.orderBy, ordColsOf(w))
-          }
-          val gbsReqs = gbsWins.collect { case w: BoundItem.BIWin =>
-            GbsReq(w.alias, w.func, opL(w.args.head),
-              shiftOffset(w.args), shiftDefaultAny(w.args),
-              w.orderBy, ordColsOf(w))
-          }
-          val gmaReqs = gmaWins.collect { case w: BoundItem.BIWin =>
-            GmaReq(w.alias, if (w.func == "mean") "avg" else w.func,
-              distinctMaskColumn(w.args, Nil, w.orderBy, opL, qcol),
-              w.frame.get.hi.toInt, w.orderBy, ordColsOf(w))
-          }
-          val gbiReqs = gbiWins.collect { case w: BoundItem.BIWin =>
-            val argsR = w.args.dropRight(1) // strip the sentinel
-            GbiReq(w.alias, w.func, opL(argsR.head),
-              shiftOffset(argsR), shiftDefaultAny(argsR),
-              w.orderBy, ordColsOf(w))
-          }
-          val baseGbi = attachGlobalWinGroups(spark, base1,
-            gowReqs, gswReqs, ginReqs, gwxReqs, gbsReqs, gmaReqs, gbiReqs)
-          val withWins0 = windowWins.foldLeft(baseGbi) {
-            case (d, BoundItem.BIWin(f, args, parts, ord, a, frame)) =>
-              val rk = if (frame.exists(_.groups)) Some(s"__grk_$a") else None
-              val mk = if (distinctWinEligible(f, args, frame))
-                Some(s"__dmk_$a") else None
-              val d1 = rk.fold(d)(n => d.withColumn(n, groupsRankColumn(
-                parts, ord, lowerOperandWith(_, qcol), qcol)))
-              val d2 = mk.fold(d1)(n => d1.withColumn(n, distinctMaskColumn(
-                args, parts, ord, lowerOperandWith(_, qcol), qcol)))
-              d2.withColumn(a, windowColumn(f, args, parts, ord, frame,
-                  lowerOperandWith(_, qcol), qcol, rk.map(col), mk.map(col)))
-                .drop(rk.toSeq ++ mk.toSeq: _*)
-          }
-          // global-agg windows: ONE 1-row aggregate over the pre-window
-          // frame (identical row set), broadcast cross-joined back
-          val withWins =
-            if (globalWins.isEmpty) withWins0
-            else {
-              val aggs = globalWins.map {
-                case BoundItem.BIWin(f, args, _, _, a, _) =>
-                  globalAggCol(f, args, lowerOperandWith(_, qcol)).as(a)
-                case _ => sys.error("unreachable: BIWin partition")
-              }
-              withWins0.crossJoin(broadcast(
-                base1.agg(aggs.head, aggs.tail: _*)))
+          // ordinary running aggregate over the mask
+          val withWins = GlobalWindows.attach(base1,
+              classified.flatMap(_._2)) { d =>
+            classified.collect { case (w, None) => w }.foldLeft(d) {
+              case (d, BoundItem.BIWin(f, args, parts, ord, a, frame)) =>
+                val rk = if (frame.exists(_.groups)) Some(s"__grk_$a") else None
+                val mk = if (distinctWinEligible(f, args, frame))
+                  Some(s"__dmk_$a") else None
+                val d1 = rk.fold(d)(n => d.withColumn(n, groupsRankColumn(
+                  parts, ord, opL, qcol)))
+                val d2 = mk.fold(d1)(n => d1.withColumn(n, distinctMaskColumn(
+                  args, parts, ord, opL)))
+                d2.withColumn(a, windowColumn(f, args, parts, ord, frame,
+                    opL, qcol, rk.map(col), mk.map(col)))
+                  .drop(rk.toSeq ++ mk.toSeq: _*)
             }
+          }
           q.qualify.fold(withWins) { qe =>
             if (!BoundExpr.containsSub(qe))
               withWins.filter(lowerExprWith(qe, lowerOperandWith(_, qcol)))
@@ -748,126 +630,39 @@ object Lowering {
         else {
           val n = s"__dmk_$tag"
           winRanks += n -> distinctMaskColumn(args, parts, ord,
-            aggScopeOperand, bc => col(groupOut(bc)))
+            aggScopeOperand)
           Some(col(n))
         }
-      // unpartitioned unordered aggregate windows (sum(count(*)) OVER ())
-      // split off to the broadcast rewrite; unpartitioned ORDERED ones
-      // to the distributed prefix scan (operands lower ONCE in all
-      // three cases: aggScopeOperand registers hidden aggregates as a
-      // side effect, BEFORE the agg assembles)
-      // Gow/Gsw/Gin/Gwx/Gbs/Gma/Gbi request structs are file-level —
-      // shared with the plain-projection lowering path and executed by
-      // attachGlobalWinGroups over one bucketing per ORDER spec
-      sealed trait WinL
-      final case class WinLBroadcast(c: Column) extends WinL
-      final case class WinLGow(g: GowReq) extends WinL
-      final case class WinLGsw(g: GswReq) extends WinL
-      final case class WinLGin(g: GinReq) extends WinL
-      final case class WinLGwx(g: GwxReq) extends WinL
-      final case class WinLGbs(g: GbsReq) extends WinL
-      final case class WinLGma(g: GmaReq) extends WinL
-      final case class WinLGbi(g: GbiReq) extends WinL
-      final case class WinLCol(c: Column) extends WinL
-      def lowerWin(name: String, f: String, args: Seq[BoundOperand],
-          parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-          frame: Option[Ast.WinFrame], tag: String): WinL =
-        if (isGlobalAggWin(f, args, parts, ord, frame))
-          WinLBroadcast(globalAggCol(f, args, aggScopeOperand))
-        else if (isGlobalOrderedWin(f, args, parts, ord, frame))
-          WinLGow(GowReq(name, f, args.headOption.map(aggScopeOperand),
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }, frame))
-        else if (isGlobalDistinctWin(f, args, parts, ord, frame))
-          WinLGow(GowReq(name, if (f == "mean") "avg" else f, None,
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }, frame,
-            Some(distinctMaskColumn(args, Nil, ord, aggScopeOperand,
-              bc => col(groupOut(bc))))))
-        else if (isGlobalShiftWin(f, args, parts, ord) ||
-            isGlobalBoundedRowsWin(f, args, parts, ord, frame))
-          WinLGsw(GswReq(ghostWinOf(name, f, args, frame, aggScopeOperand),
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        else if (isGlobalIgnoreNullsShiftWin(f, args, parts, ord)) {
-          val argsR = args.dropRight(1) // strip the sentinel
-          WinLGin(GinReq(name, f, aggScopeOperand(argsR.head),
-            shiftOffset(argsR), shiftDefaultAny(argsR),
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        }
-        else if (isGlobalWholeExWin(f, args, parts, ord, frame))
-          WinLGwx(GwxReq(name, f, args.headOption.map(aggScopeOperand),
-            frame.get, ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        else if (isGlobalBigShiftWin(f, args, parts, ord))
-          WinLGbs(GbsReq(name, f, aggScopeOperand(args.head),
-            shiftOffset(args), shiftDefaultAny(args),
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        else if (isGlobalDistinctAheadWin(f, args, parts, ord, frame))
-          WinLGma(GmaReq(name, if (f == "mean") "avg" else f,
-            distinctMaskColumn(args, Nil, ord, aggScopeOperand,
-              bc => col(groupOut(bc))),
-            frame.get.hi.toInt,
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        else if (isGlobalBigInShiftWin(f, args, parts, ord)) {
-          val argsR = args.dropRight(1) // strip the sentinel
-          WinLGbi(GbiReq(name, f, aggScopeOperand(argsR.head),
-            shiftOffset(argsR), shiftDefaultAny(argsR),
-            ord, ord.map { case (o, d) => (aggScopeOperand(o), d) }))
-        }
-        else WinLCol(windowColumn(f, args, parts, ord, frame,
-          aggScopeOperand, bc => col(groupOut(bc)),
-          withRank(frame, parts, ord, tag),
-          withMask(f, args, frame, parts, ord, tag)))
-      val winLowered: Seq[(String, WinL)] =
-        q.projection.zipWithIndex.collect {
-          case (BoundItem.BIWin(f, args, parts, ord, _, frame), i) =>
-            s"__w_$i" -> lowerWin(s"__w_$i", f, args, parts, ord, frame,
-              i.toString)
-        }
-      val winItems: Seq[(String, Column)] =
-        winLowered.collect { case (n, WinLCol(c)) => n -> c }
-      val winGlobals: Seq[(String, Column)] =
-        winLowered.collect { case (n, WinLBroadcast(c)) => n -> c }
-      val winGows: Seq[GowReq] =
-        winLowered.collect { case (_, WinLGow(g)) => g }
-      val winGsws: Seq[GswReq] =
-        winLowered.collect { case (_, WinLGsw(g)) => g }
-      val winGins: Seq[GinReq] =
-        winLowered.collect { case (_, WinLGin(g)) => g }
-      val winGwxs: Seq[GwxReq] =
-        winLowered.collect { case (_, WinLGwx(g)) => g }
-      val winGbss: Seq[GbsReq] =
-        winLowered.collect { case (_, WinLGbs(g)) => g }
-      val winGmas: Seq[GmaReq] =
-        winLowered.collect { case (_, WinLGma(g)) => g }
-      val winGbis: Seq[GbiReq] =
-        winLowered.collect { case (_, WinLGbi(g)) => g }
+      // unpartitioned windows (sum(count(*)) OVER (), rank() OVER (ORDER
+      // BY count(*))) go to GlobalWindows; operands lower ONCE either
+      // way (aggScopeOperand registers hidden aggregates as a side
+      // effect, BEFORE the agg assembles).
       // QUALIFY in aggregate scope: hidden inline-OVER window items
       // compute like projection windows (args register hidden aggregates
       // NOW) and attach under their generated aliases; the predicate
       // lowers NOW too — window aliases read the attached columns,
       // everything else resolves post-aggregation
-      val qwinLowered: Seq[(String, WinL)] =
-        q.qualifyWins.collect {
+      def lowerWin(name: String, f: String, args: Seq[BoundOperand],
+          parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
+          frame: Option[Ast.WinFrame], tag: String)
+          : (String, Either[GlobalWindows.Req, Column]) =
+        name -> GlobalWindows.classify(name, f, args, parts, ord, frame,
+          aggScopeOperand).toLeft(windowColumn(f, args, parts, ord, frame,
+            aggScopeOperand, bc => col(groupOut(bc)),
+            withRank(frame, parts, ord, tag),
+            withMask(f, args, frame, parts, ord, tag)))
+      val winLowered: Seq[(String, Either[GlobalWindows.Req, Column])] =
+        q.projection.zipWithIndex.collect {
+          case (BoundItem.BIWin(f, args, parts, ord, _, frame), i) =>
+            lowerWin(s"__w_$i", f, args, parts, ord, frame, i.toString)
+        } ++ q.qualifyWins.collect {
           case BoundItem.BIWin(f, args, parts, ord, a, frame) =>
-            a.toLowerCase -> lowerWin(a.toLowerCase, f, args, parts, ord,
-              frame, s"q_$a")
+            lowerWin(a.toLowerCase, f, args, parts, ord, frame, s"q_$a")
         }
-      val qwinItems: Seq[(String, Column)] =
-        qwinLowered.collect { case (n, WinLCol(c)) => n -> c }
-      val qwinGlobals: Seq[(String, Column)] =
-        qwinLowered.collect { case (n, WinLBroadcast(c)) => n -> c }
-      val qwinGows: Seq[GowReq] =
-        qwinLowered.collect { case (_, WinLGow(g)) => g }
-      val qwinGsws: Seq[GswReq] =
-        qwinLowered.collect { case (_, WinLGsw(g)) => g }
-      val qwinGins: Seq[GinReq] =
-        qwinLowered.collect { case (_, WinLGin(g)) => g }
-      val qwinGwxs: Seq[GwxReq] =
-        qwinLowered.collect { case (_, WinLGwx(g)) => g }
-      val qwinGbss: Seq[GbsReq] =
-        qwinLowered.collect { case (_, WinLGbs(g)) => g }
-      val qwinGmas: Seq[GmaReq] =
-        qwinLowered.collect { case (_, WinLGma(g)) => g }
-      val qwinGbis: Seq[GbiReq] =
-        qwinLowered.collect { case (_, WinLGbi(g)) => g }
+      val winItems: Seq[(String, Column)] =
+        winLowered.collect { case (n, Right(c)) => n -> c }
+      val winReqs: Seq[GlobalWindows.Req] =
+        winLowered.collect { case (_, Left(r)) => r }
       def qualifyOp(o: BoundOperand): Column = o match {
         case BoundOperand.BOut(n, _) => col(qualifyWinAliasCol(n.toLowerCase))
         case BoundOperand.BArith(ch, l, r) =>
@@ -1285,35 +1080,17 @@ object Lowering {
       // window columns compute over the aggregated (and HAVING-filtered)
       // frame, BEFORE the final ORDER BY — the window's own exchange
       // must not disturb the result ordering
-      val withWins = {
-        // unpartitioned global-machinery windows over the grouped frame:
-        // the shared-bucketing coordinator attaches their columns (ONE
-        // range bucketing per distinct ORDER spec, shared across every
-        // machinery class); operand Columns were lowered at collect
-        // time, so hidden aggregates registered before the agg assembled
-        val groupedG = attachGlobalWinGroups(spark, grouped,
-          winGows ++ qwinGows, winGsws ++ qwinGsws, winGins ++ qwinGins,
-          winGwxs ++ qwinGwxs, winGbss ++ qwinGbss, winGmas ++ qwinGmas,
-          winGbis ++ qwinGbis)
-        val windowed =
-          if (winItems.isEmpty && qwinItems.isEmpty) groupedG
-          else {
-            val preRanked =
-              if (winRanks.isEmpty) groupedG
-              else groupedG.select(col("*") +: winRanks.toSeq.map {
-                case (n, c) => c.as(n) }: _*)
-            preRanked.select(col("*") +: (winItems ++ qwinItems).map {
+      val withWins = GlobalWindows.attach(grouped, winReqs) { groupedG =>
+        if (winItems.isEmpty) groupedG
+        else {
+          val preRanked =
+            if (winRanks.isEmpty) groupedG
+            else groupedG.select(col("*") +: winRanks.toSeq.map {
               case (n, c) => c.as(n) }: _*)
-              .drop(winRanks.toSeq.map(_._1): _*)
-          }
-        // global-agg windows: one 1-row aggregate over the grouped frame
-        // (the same rows the windows see), broadcast cross-joined back —
-        // no single-partition window exchange
-        val globals = winGlobals ++ qwinGlobals
-        if (globals.isEmpty) windowed
-        else windowed.crossJoin(broadcast(grouped.agg(
-          globals.head._2.as(globals.head._1),
-          globals.tail.map { case (n, c) => c.as(n) }: _*)))
+          preRanked.select(col("*") +: winItems.map {
+            case (n, c) => c.as(n) }: _*)
+            .drop(winRanks.toSeq.map(_._1): _*)
+        }
       }
       // QUALIFY filters the windowed aggregate result before
       // DISTINCT/ORDER BY (clause order); hidden window columns die at
@@ -1379,54 +1156,6 @@ object Lowering {
       .partitionBy(parts.map(opLower): _*)
       .orderBy(ord.map { case (op, dir) => sortCol(opLower(op), dir) }: _*))
 
-  /** Is this an unpartitioned ORDERED window the distributed prefix
-    * scan can compute — global ranks (`rank() OVER (ORDER BY …)`) and
-    * running aggregates over a total order? Without the rewrite Spark
-    * plans these as Exchange SinglePartition: every row through one
-    * task. Eligible: ranking functions (row_number/rank/dense_rank/
-    * percent_rank/cume_dist — frameless by analysis) and the
-    * decomposable aggregates over PREFIX frames (default RANGE
-    * UNBOUNDED PRECEDING..CURRENT ROW, or explicit UNBOUNDED..CURRENT),
-    * with no DISTINCT / IGNORE NULLS sentinel, no GROUPS/EXCLUDE/
-    * temporal frame (those keep their dedicated lowerings).
-    */
-  private def isGlobalOrderedWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean =
-    parts.isEmpty && ord.nonEmpty &&
-      (Set("row_number", "rank", "dense_rank", "percent_rank",
-        "cume_dist")(f) ||
-        // ntile needs only the global row_number + grand total the scan
-        // already computes (literal positive tile count — the dedicated
-        // lowering requires the same shape)
-        (f == "ntile" && (args.headOption match {
-          case Some(BoundOperand.BLit(Lit.LitLong(n))) => n > 0
-          case _                                       => false
-        })) ||
-        (Set("count", "sum", "avg", "min", "max")(f) &&
-          frame.forall(fr => !fr.groups && fr.exclude == "none" &&
-            !fr.temporal && fr.lo == Long.MinValue && fr.hi == 0L))) &&
-      !args.exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      }
-
-  /** Attach one ORDER-spec group of unpartitioned ordered windows as a
-    * DISTRIBUTED PREFIX SCAN: range-partition by the order, evaluate
-    * each window INSIDE its bucket (all buckets parallel), aggregate
-    * one totals row per bucket, take the exclusive prefix of the totals
-    * over bucket ids (≤ shuffle-partition-count rows — the only
-    * single-partition step, and it is scale-free), broadcast the
-    * offsets back and combine: ranks add the preceding-bucket row
-    * count (dense_rank its distinct-key count — exact because the
-    * range partitioner keeps equal keys in ONE bucket), count/sum
-    * offsets add, min/max combine via null-skipping least/greatest,
-    * avg decomposes into sum/count, percent_rank/cume_dist divide by
-    * the broadcast grand total. Items: (output name, function, lowered
-    * argument, frame).
-    */
-  private val gowTag = new java.util.concurrent.atomic.AtomicInteger
-
   /** Sub-plans recorded at materialization boundaries, for the
     * plan-audit sweep: a (local)checkpoint replaces its upstream plan
     * with a Scan ExistingRDD leaf, so everything above the boundary
@@ -1475,415 +1204,12 @@ object Lowering {
       } else df.localCheckpoint(eager))
   }
 
-  /** Per-class requests for the global-window machinery — one ORDER
-    * spec key (`ordKey`, the bound AST — groupable) plus the lowered
-    * order columns and the class-specific payload. Built by both
-    * lowering paths (plain projection and aggregate scope) and executed
-    * together by attachGlobalWinGroups so every class of one ORDER spec
-    * shares a single range bucketing.
-    */
-  private final case class GowReq(name: String, func: String,
-      arg: Option[Column], ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)], frame: Option[Ast.WinFrame],
-      /** DISTINCT running items: the first-occurrence mask to
-        * pre-attach; the scan then aggregates the mask column.
-        */
-      mask: Option[Column] = None)
-  private final case class GswReq(ghost: GhostWin,
-      ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-  private final case class GinReq(name: String, func: String, x: Column,
-      k: Int, dflt: Any, ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-  private final case class GwxReq(name: String, func: String,
-      arg: Option[Column], frame: Ast.WinFrame,
-      ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-  private final case class GbsReq(name: String, func: String, x: Column,
-      k: Int, dflt: Any, ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-  private final case class GmaReq(name: String, func: String, mask: Column,
-      h: Int, ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-  private final case class GbiReq(name: String, func: String, x: Column,
-      k: Int, dflt: Any, ordKey: Seq[(BoundOperand, Ast.SortDir)],
-      ordCols: Seq[(Column, Ast.SortDir)])
-
-  /** Attach EVERY global-window machinery class over ONE shared range
-    * bucketing per distinct ORDER spec (guide §2.4 — operations keyed
-    * the same way share one exchange). Before round 16 each class
-    * re-bucketed the frame separately — range-boundary sampling pass +
-    * full range shuffle + checkpoint per class; q_dialect_win_global_rest
-    * paid 4 bucketings of the same input, i.e. 3 redundant full-data
-    * range shuffles at 100 TB. The coordinator attaches the order keys
-    * and the DISTINCT first-occurrence masks (value-partitioned windows
-    * — they must precede the range shuffle so the shuffle carries one
-    * bit, not the recomputation), buckets ONCE, hands every class the
-    * same materialized bucketing, and drops the shared scratch at the
-    * end. Reversed consumers (big IGNORE-NULLS leads) read the same
-    * bucketing backwards instead of re-bucketing by the reversed spec.
-    */
-  private def attachGlobalWinGroups(spark: SparkSession, df0: DataFrame,
-      gows: Seq[GowReq], gsws: Seq[GswReq], gins: Seq[GinReq],
-      gwxs: Seq[GwxReq], gbss: Seq[GbsReq], gmas: Seq[GmaReq],
-      gbis: Seq[GbiReq]): DataFrame = {
-    val keys: Seq[Seq[(BoundOperand, Ast.SortDir)]] =
-      (gows.map(_.ordKey) ++ gsws.map(_.ordKey) ++ gins.map(_.ordKey) ++
-        gwxs.map(_.ordKey) ++ gbss.map(_.ordKey) ++ gmas.map(_.ordKey) ++
-        gbis.map(_.ordKey)).distinct
-    keys.foldLeft(df0) { (d0, key) =>
-      val ko = gows.filter(_.ordKey == key)
-      val ks = gsws.filter(_.ordKey == key)
-      val ki = gins.filter(_.ordKey == key)
-      val kx = gwxs.filter(_.ordKey == key)
-      val kb = gbss.filter(_.ordKey == key)
-      val km = gmas.filter(_.ordKey == key)
-      val kj = gbis.filter(_.ordKey == key)
-      val ordCols: Seq[(Column, Ast.SortDir)] =
-        (ko.map(_.ordCols) ++ ks.map(_.ordCols) ++ ki.map(_.ordCols) ++
-          kx.map(_.ordCols) ++ kb.map(_.ordCols) ++ km.map(_.ordCols) ++
-          kj.map(_.ordCols)).head
-      val tag = s"__gsh${gowTag.incrementAndGet()}"
-      val pidN = s"${tag}_pid"
-      val ordNames = ordCols.indices.map(i => s"${tag}_o$i")
-      val gowMasks: Seq[(String, Column)] = ko.flatMap(g =>
-        g.mask.map(m => s"__gdm_${g.name}" -> m))
-      val gmaMasks: Seq[(String, Column)] = km.zipWithIndex.map {
-        case (g, i) => s"${tag}_gm$i" -> g.mask }
-      // big-shift / big-IGNORE-NULLS argument columns ride the shared
-      // bucketing too (their self-joins read them from the shared
-      // materialized frame)
-      val gbsX = kb.indices.map(i => s"${tag}_bx$i")
-      val gbiX = kj.indices.map(i => s"${tag}_ix$i")
-      val gbiC = kj.indices.map(i => s"${tag}_ic$i")
-      val rnN = s"${tag}_rn"
-      val withOrd = d0.select(col("*") +:
-        (ordCols.zipWithIndex.map { case ((c, _), i) =>
-          c.as(ordNames(i)) } ++
-          (gowMasks ++ gmaMasks).map { case (n, c) => c.as(n) } ++
-          kb.zipWithIndex.map { case (g, i) => g.x.as(gbsX(i)) } ++
-          kj.zipWithIndex.map { case (g, i) => g.x.as(gbiX(i)) }): _*)
-      val ordE = ordCols.zipWithIndex.map { case ((_, dir), i) =>
-        sortCol(col(ordNames(i)), dir) }
-      val nParts = spark.sessionState.conf.numShufflePartitions
-      // ONE materialization per ORDER spec: every class's in-bucket
-      // windows, per-bucket totals, ghost/candidate extraction and
-      // self-joins must see the SAME bucketing (RangePartitioner seeds
-      // its boundary sampling by RDD id, so two independent evaluations
-      // can place boundaries differently)
-      val bucketed = materializeOnce(withOrd
-        .repartitionByRange(nParts, ordE: _*)
-        .withColumn(pidN, spark_partition_id()))
-      val bk = BucketCols(pidN, ordNames, ordCols.map(_._2))
-      var f = bucketed
-      // ONE forward prefix-scan invocation: the user's ordered windows,
-      // the big shifts' global row number and the big-IGNORE-NULLS
-      // lags' non-null ranks all share its per-bucket totals and
-      // broadcast offsets; lead ranks ride ONE reversed invocation over
-      // the same bucketing
-      val rowsPrefix = Ast.WinFrame(range = false,
-        lo = Long.MinValue, hi = 0L)
-      val kjIdx = kj.zipWithIndex
-      val kjLag = kjIdx.filter(_._1.func == "lag")
-      val kjLead = kjIdx.filter(_._1.func == "lead")
-      val fwdItems: Seq[(String, String, Option[Column],
-          Option[Ast.WinFrame])] =
-        ko.map { g =>
-          (g.name, g.func,
-            g.mask.map(_ => col(s"__gdm_${g.name}")).orElse(g.arg),
-            g.frame)
-        } ++
-          (if (kb.nonEmpty)
-            Seq((rnN, "row_number", None: Option[Column],
-              None: Option[Ast.WinFrame])) else Nil) ++
-          kjLag.map { case (_, i) =>
-            (gbiC(i), "count", Some(col(gbiX(i))): Option[Column],
-              Some(rowsPrefix): Option[Ast.WinFrame]) }
-      if (fwdItems.nonEmpty)
-        f = attachGlobalOrderedWins(spark, f, bk, fwdItems)
-      if (kjLead.nonEmpty)
-        f = attachGlobalOrderedWins(spark, f, bk,
-          kjLead.map { case (_, i) =>
-            (gbiC(i), "count", Some(col(gbiX(i))): Option[Column],
-              Some(rowsPrefix): Option[Ast.WinFrame]) }, reversed = true)
-      if (kb.nonEmpty || kj.nonEmpty) {
-        // ONE materialization serves every self-join: ranks/row numbers
-        // must read identically on both join sides (in-bucket ties)
-        val mat = materializeOnce(f)
-        f = mat
-        if (kb.nonEmpty)
-          f = bigShiftJoins(mat, f, rnN, gbsX,
-            kb.map(g => (g.name, g.func, g.x, g.k, g.dflt)))
-        if (kj.nonEmpty)
-          f = bigInShiftJoins(mat, f, gbiX, gbiC,
-            kj.map(g => (g.name, g.func, g.x, g.k, g.dflt)))
-      }
-      if (ks.nonEmpty)
-        f = attachGlobalShiftWins(spark, f, bk, ks.map(_.ghost))
-      if (ki.nonEmpty)
-        f = attachGlobalIgnoreNullsShifts(spark, f, bk,
-          ki.map(g => (g.name, g.func, g.x, g.k, g.dflt)))
-      if (kx.nonEmpty)
-        f = attachGlobalWholeExWins(spark, f, bk,
-          kx.map(g => (g.name, g.func, g.arg, g.frame)))
-      if (km.nonEmpty)
-        f = attachGlobalMaskAheadWins(spark, f, bk,
-          km.zipWithIndex.map { case (g, i) =>
-            (g.name, g.func, col(s"${tag}_gm$i"), g.h) })
-      f.drop((pidN +: ordNames) ++
-        gowMasks.map(_._1) ++ gmaMasks.map(_._1) ++
-        gbsX ++ gbiX ++ gbiC ++ (if (kb.nonEmpty) Seq(rnN) else Nil): _*)
-    }
-  }
-
-  /** The SHARED range bucketing's column handles: one bucketing per
-    * distinct ORDER spec, reused by every global-window machinery class
-    * of that spec (guide §2.4 — operations keyed the same way share one
-    * exchange). The frame a class receives already carries the bucket
-    * id (`pidN` — spark_partition_id materialized at checkpoint time,
-    * so the row→bucket mapping is frozen no matter how later operators
-    * move rows physically) and the named order-key columns.
-    */
-  private final case class BucketCols(pidN: String, ordNames: Seq[String],
-      dirs: Seq[Ast.SortDir]) {
-    def ordE: Seq[Column] = ordNames.zip(dirs).map { case (n, d) =>
-      sortCol(col(n), d) }
-    /** Exact complement of the bucketing order: flips direction AND
-      * null placement (sortCol places None-nulls LAST in both
-      * directions, so the complement needs an explicit NULLS FIRST).
-      * Reversed consumers (big IGNORE-NULLS leads) read the SAME
-      * bucketing backwards — reversed in-bucket order + descending
-      * bucket-id offsets — instead of re-bucketing by the reversed
-      * spec.
-      */
-    def ordRevExact: Seq[Column] = ordNames.zip(dirs).map { case (n, d) =>
-      sortCol(col(n),
-        Ast.SortDir(!d.desc, Some(!d.nullsFirst.getOrElse(false)))) }
-  }
-
-  private def attachGlobalOrderedWins(spark: SparkSession, df0: DataFrame,
-      bk: BucketCols,
-      items: Seq[(String, String, Option[Column], Option[Ast.WinFrame])],
-      reversed: Boolean = false)
-      : DataFrame = {
-    val tag = s"__gow${gowTag.incrementAndGet()}"
-    val pidN = bk.pidN
-    val ordNames = bk.ordNames
-    val bucketed = df0
-    val ordE = if (reversed) bk.ordRevExact else bk.ordE
-    // default window frame over an ordered spec IS the RANGE prefix
-    // (peers included) — identical to the unpartitioned default
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    val wRows = wIn.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding, 0L)
-    // exclusive prefix over the per-bucket totals: bucket ids ascend in
-    // the bucketing's own order, so a REVERSED consumer takes them
-    // descending
-    val wPre = org.apache.spark.sql.expressions.Window
-      .orderBy(if (reversed) col(pidN).desc else col(pidN).asc)
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1L)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc)
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val needCnt = items.exists(it => Set("row_number", "rank",
-      "percent_rank", "cume_dist", "ntile")(it._2))
-    val needDk = items.exists(_._2 == "dense_rank")
-    val needN = items.exists(it => Set("percent_rank", "cume_dist",
-      "ntile")(it._2))
-    def rowsFrame(fr: Option[Ast.WinFrame]) = fr.exists(f => !f.range)
-    // (in-bucket cols, per-bucket totals, prefix offsets, final combiner)
-    val parts4: Seq[(Seq[Column], Seq[Column], Seq[Column], Column)] =
-      items.zipWithIndex.map { case ((_, f, arg, frame), j) =>
-        def inN(c: String) = s"${tag}_in${j}_$c"
-        def totN(c: String) = s"${tag}_t${j}_$c"
-        def offN(c: String) = s"${tag}_f${j}_$c"
-        val offCnt = coalesce(col(s"${tag}_offcnt"), lit(0L))
-        lazy val nTot = col(s"${tag}_ntot")
-        f match {
-          case "row_number" | "rank" =>
-            val rk = if (f == "rank") rank() else row_number()
-            (Seq(rk.over(wIn).cast("long").as(inN("r"))), Nil, Nil,
-              col(inN("r")) + offCnt)
-          case "dense_rank" =>
-            (Seq(dense_rank().over(wIn).cast("long").as(inN("r"))), Nil, Nil,
-              col(inN("r")) + coalesce(col(s"${tag}_offdk"), lit(0L)))
-          case "percent_rank" =>
-            (Seq(rank().over(wIn).cast("long").as(inN("r"))), Nil, Nil,
-              when(nTot === 1L, lit(0.0)).otherwise(
-                (col(inN("r")) + offCnt - 1L).cast("double") / (nTot - 1L)))
-          case "cume_dist" =>
-            (Seq(count(lit(1)).over(wIn).cast("long").as(inN("c"))), Nil, Nil,
-              (col(inN("c")) + offCnt).cast("double") / nTot)
-          case "ntile" =>
-            // tile count n, grand total N: r = N % n oversized tiles of
-            // q+1 rows (q = N div n), then n-r tiles of q rows — Spark's
-            // NTile semantics from the broadcast N and the global
-            // row_number alone. Integral floor-division goes through
-            // decimal so it stays exact past 2^53 rows; the q=0 branch
-            // (N < n → every row in an oversized tile) never reaches the
-            // otherwise-divisor, which is guarded anyway (ANSI mode).
-            val n = arg.get.cast("long")
-            def ldiv(a: Column, b: Column): Column =
-              ((a - a % b).cast("decimal(38,0)") / b).cast("long")
-            (Seq(row_number().over(wIn).cast("long").as(inN("r"))), Nil, Nil, {
-              val rn = col(inN("r")) + offCnt
-              val r = nTot % n
-              val q = ldiv(nTot, n)
-              val cut = r * (q + 1L)
-              when(rn <= cut, ldiv(rn - 1L, q + 1L) + 1L)
-                .otherwise(r + ldiv(rn - cut - 1L,
-                  greatest(q, lit(1L))) + 1L)
-                .cast("int")
-            })
-          case "count" =>
-            val a = arg.getOrElse(lit(1))
-            val w = if (rowsFrame(frame)) wRows else wIn
-            (Seq(count(a).over(w).as(inN("c"))),
-              Seq(count(a).as(totN("c"))),
-              Seq(sum(col(totN("c"))).over(wPre).as(offN("c"))),
-              coalesce(col(offN("c")), lit(0L)) + col(inN("c")))
-          case "sum" =>
-            val w = if (rowsFrame(frame)) wRows else wIn
-            (Seq(sum(arg.get).over(w).as(inN("s"))),
-              Seq(sum(arg.get).as(totN("s"))),
-              Seq(sum(col(totN("s"))).over(wPre).as(offN("s"))),
-              coalesce(col(offN("s")) + col(inN("s")),
-                col(offN("s")), col(inN("s"))))
-          case "min" =>
-            val w = if (rowsFrame(frame)) wRows else wIn
-            (Seq(min(arg.get).over(w).as(inN("m"))),
-              Seq(min(arg.get).as(totN("m"))),
-              Seq(min(col(totN("m"))).over(wPre).as(offN("m"))),
-              least(col(offN("m")), col(inN("m"))))
-          case "max" =>
-            val w = if (rowsFrame(frame)) wRows else wIn
-            (Seq(max(arg.get).over(w).as(inN("m"))),
-              Seq(max(arg.get).as(totN("m"))),
-              Seq(max(col(totN("m"))).over(wPre).as(offN("m"))),
-              greatest(col(offN("m")), col(inN("m"))))
-          case "avg" =>
-            val w = if (rowsFrame(frame)) wRows else wIn
-            (Seq(sum(arg.get).over(w).as(inN("s")),
-              count(arg.get).over(w).as(inN("c"))),
-              Seq(sum(arg.get).as(totN("s")), count(arg.get).as(totN("c"))),
-              Seq(sum(col(totN("s"))).over(wPre).as(offN("s")),
-                sum(col(totN("c"))).over(wPre).as(offN("c"))),
-              {
-                val cnt = coalesce(col(offN("c")), lit(0L)) + col(inN("c"))
-                val sm = coalesce(col(offN("s")) + col(inN("s")),
-                  col(offN("s")), col(inN("s")))
-                when(cnt === 0L, lit(null)).otherwise(sm.cast("double") / cnt)
-              })
-          case other => sys.error(s"unreachable global ordered window $other")
-        }
-      }
-    val withIn = bucketed.select(col("*") +: parts4.flatMap(_._1): _*)
-    // every item class contributes at least one total (ranks need cnt,
-    // dense_rank dk, aggregates their own), so totAggs is never empty
-    val totAggs =
-      (if (needCnt || needN) Seq(count(lit(1)).as(s"${tag}_cnt")) else Nil) ++
-        (if (needDk) Seq(count_distinct(
-          struct(ordNames.map(col): _*)).as(s"${tag}_dk")) else Nil) ++
-        parts4.flatMap(_._2)
-    val totals = bucketed.groupBy(col(pidN))
-      .agg(totAggs.head, totAggs.tail: _*)
-    val offCols =
-      (if (needCnt || needN)
-        Seq(sum(col(s"${tag}_cnt")).over(wPre).as(s"${tag}_offcnt")) else Nil) ++
-        (if (needN)
-          Seq(sum(col(s"${tag}_cnt")).over(wAll).as(s"${tag}_ntot")) else Nil) ++
-        (if (needDk)
-          Seq(sum(col(s"${tag}_dk")).over(wPre).as(s"${tag}_offdk")) else Nil) ++
-        parts4.flatMap(_._3)
-    val offsets = totals.select(col(pidN) +: offCols: _*)
-    val joined = withIn.join(broadcast(offsets), Seq(pidN), "left_outer")
-    val finals = items.zipWithIndex.map { case ((alias, _, _, _), j) =>
-      parts4(j)._4.as(alias) }
-    // the shared pid / order-key columns stay — the NEXT machinery
-    // class of this ORDER spec reads the same bucketing; the
-    // coordinator drops them once, at the end
-    val dropNames =
-      items.indices.flatMap(j => Seq("r", "c", "s", "m").map(c =>
-        s"${tag}_in${j}_$c")) ++
-      Seq(s"${tag}_offcnt", s"${tag}_ntot", s"${tag}_offdk") ++
-      items.indices.flatMap(j => Seq("c", "s", "m").map(c =>
-        s"${tag}_f${j}_$c"))
-    joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** Is this an unpartitioned lag/lead the ghost-row prefix scan can
-    * compute? Plain non-negative literal offsets only — IGNORE NULLS
-    * needs unbounded lookback and takes the carry-array lowering
-    * (attachGlobalIgnoreNullsShifts).
-    */
-  private def isGlobalShiftWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)]): Boolean =
-    parts.isEmpty && ord.nonEmpty && (f == "lag" || f == "lead") &&
-      !args.exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      } &&
-      (args.lift(1) match {
-        case None => true
-        case Some(BoundOperand.BLit(Lit.LitLong(n))) => n >= 0 && n <= 1000
-        case _ => false
-      })
-
-  /** Is this an unpartitioned decomposable aggregate — or a value
-    * function (first_value/last_value/nth_value) — over a BOUNDED ROWS
-    * frame (`sum(x) OVER (ORDER BY … ROWS BETWEEN 5 PRECEDING AND
-    * CURRENT ROW)`)? The frame only reaches max(-lo, hi) rows away, so
-    * the same ghost-row replication that serves lag/lead makes the
-    * in-bucket frame exact: every global row within the halo of a real
-    * row is a real-or-ghost row of its bucket, in global order. Halo
-    * capped like lag's offset; RANGE value-distance frames have an
-    * unbounded row halo and keep the dedicated lowering. Value functions
-    * may carry IGNORE NULLS (it only ever reads rows INSIDE the bounded
-    * frame, so the halo still covers the lookback — unlike lag/lead
-    * IGNORE NULLS, whose lookback a NULL run makes unbounded); EXCLUDE
-    * keeps the dedicated lowering for them (no prefix/suffix
-    * decomposition exists for positional picks).
-    */
-  private def isGlobalBoundedRowsWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean = {
-    val ign = args.lastOption.contains(
-      BoundOperand.BLit(Lit.LitString(Ast.IgnoreNullsSentinel)))
-    val argsR = if (ign) args.dropRight(1) else args
-    def noSentinel = !argsR.exists {
-      case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-      case _ => false
-    }
-    val dist = args.lastOption.contains(
-      BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel)))
-    parts.isEmpty && ord.nonEmpty &&
-      frame.exists(fr => !fr.range && !fr.groups && !fr.temporal &&
-        fr.lo != Long.MinValue && fr.hi != Long.MaxValue &&
-        fr.lo >= -1000L && fr.hi <= 1000L && fr.lo <= fr.hi) &&
-      ((Set("count", "sum", "avg", "min", "max")(f) && !ign && noSentinel) ||
-        // DISTINCT aggregates: the dedicated per-frame collect_set fold
-        // is frame-bounded state, so it rides the same ghosts (the set
-        // only ever collects rows INSIDE the bounded frame)
-        (dist && Set("count", "sum", "avg", "mean")(f) &&
-          frame.exists(_.exclude == "none")) ||
-        (Set("first_value", "last_value")(f) && noSentinel &&
-          argsR.length == 1 && frame.exists(_.exclude == "none")) ||
-        (f == "nth_value" && noSentinel && frame.exists(_.exclude == "none") &&
-          (argsR.lift(1) match {
-            case Some(BoundOperand.BLit(Lit.LitLong(n))) => n > 0
-            case _                                       => false
-          })))
-  }
-
   /** lag/lead offset: optional second literal argument, default 1.
-    * The ONE extraction shared by the ghost-row and dedicated window
-    * lowerings (ADVICE r14 — two copies risked drifting apart).
+    * The ONE extraction shared by the bucketed (GlobalWindows) and
+    * dedicated window lowerings (ADVICE r14 — two copies risked drifting
+    * apart).
     */
-  private def shiftOffset(args: Seq[BoundOperand]): Int = args.lift(1) match {
+  private[sql] def shiftOffset(args: Seq[BoundOperand]): Int = args.lift(1) match {
     case Some(BoundOperand.BLit(Lit.LitLong(n))) => n.toInt
     case _ => 1
   }
@@ -1895,7 +1221,7 @@ object Lowering {
     * java.sql carriers); only a non-literal default falls to NULL, and
     * the analyzer rejects those forms before lowering.
     */
-  private def shiftDefaultAny(args: Seq[BoundOperand]): Any =
+  private[sql] def shiftDefaultAny(args: Seq[BoundOperand]): Any =
     args.lift(2) match {
       case Some(BoundOperand.BLit(l)) => l match {
         case Lit.LitLong(v)        => v
@@ -1910,811 +1236,6 @@ object Lowering {
       }
       case _ => null
     }
-
-  /** One ghost-window item: the column builder receives the in-bucket
-    * window spec (partitioned by bucket id, ordered by the global
-    * order) and the in-bucket peer-partition keys (bucket id ++ order
-    * key columns — for EXCLUDE's peer-group windows); kLag/kLead say
-    * how many rows backward/forward its expression can reach — the halo
-    * the ghost replication must cover.
-    */
-  private final case class GhostWin(alias: String, kLag: Int, kLead: Int,
-      build: (org.apache.spark.sql.expressions.WindowSpec,
-        Seq[Column]) => Column)
-
-  /** Unpartitioned ROW-bounded windows over a total order — lag/lead
-    * and aggregates over bounded ROWS frames — without the
-    * single-partition window: range-bucket by the order, then give each
-    * bucket GHOST ROWS — the last k rows of every EARLIER bucket (for
-    * backward reach; the first k of every LATER bucket for forward), a
-    * ≤ P·k-row frame replicated with a tiny theta join. Ghosts sort
-    * ahead of (behind) every real row of their target bucket, so the
-    * in-bucket expression lands on true global neighbors: the global
-    * last-k of any prefix is always contained in the per-bucket last-k
-    * union, and when the whole prefix is shorter than k the in-bucket
-    * frame runs off the sequence start — exactly the global semantics
-    * (shift defaults apply there; bounded frames truncate there). Ghost
-    * rows are dropped after the windows evaluate.
-    */
-  /** GhostWin for one eligible item: lag/lead (isGlobalShiftWin) or an
-    * aggregate over a bounded ROWS frame (isGlobalBoundedRowsWin).
-    * Operands lower NOW through opLower (in aggregate scope that
-    * registers hidden aggregates as a side effect — before the agg
-    * assembles).
-    */
-  private def ghostWinOf(alias: String, f: String, args: Seq[BoundOperand],
-      frame: Option[Ast.WinFrame],
-      opLower: BoundOperand => Column): GhostWin =
-    if (f == "lag" || f == "lead") {
-      val x = opLower(args.head)
-      val k = shiftOffset(args)
-      val dflt = shiftDefaultAny(args)
-      if (f == "lag") GhostWin(alias, k, 0, (w, _) => lag(x, k, dflt).over(w))
-      else GhostWin(alias, 0, k, (w, _) => lead(x, k, dflt).over(w))
-    } else if (args.lastOption.contains(
-        BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel)))) {
-      // DISTINCT aggregate over a bounded ROWS frame: the per-frame
-      // collect_set fold of the dedicated lowering, run over the
-      // ghosted in-bucket frame — identical column construction
-      // (LONG/decimal/double fold seed by operand type), frame-bounded
-      // set state
-      val fr = frame.getOrElse(
-        sys.error("unreachable: bounded ghost window without a frame"))
-      val argsR = args.dropRight(1)
-      val x = opLower(argsR.head)
-      val zero = inputSqlType(argsR.head) match {
-        case Some(SqlType.SqlBigInt | SqlType.SqlInt |
-                  SqlType.SqlSmallInt) => lit(0L)
-        case Some(SqlType.SqlDecimal(_, s)) => lit(0L).cast(s"decimal(38,$s)")
-        case _ => lit(0d)
-      }
-      GhostWin(alias, math.max(0L, -fr.lo).toInt, math.max(0L, fr.hi).toInt,
-        (w, _) => {
-          val cs = collect_set(x).over(w.rowsBetween(fr.lo, fr.hi))
-          f match {
-            case "count" => size(cs).cast("long")
-            case _ =>
-              val s = org.apache.spark.sql.functions.aggregate(
-                cs, zero, (a, v) => a + v)
-              if (f == "sum") when(size(cs) > 0, s)
-              else when(size(cs) > 0, s / size(cs))
-          }
-        })
-    } else if (Set("first_value", "last_value", "nth_value")(f)) {
-      // positional picks over a bounded ROWS frame: IGNORE NULLS only
-      // ever reads rows INSIDE the frame, so the bounded halo covers it
-      val ign = args.lastOption.contains(
-        BoundOperand.BLit(Lit.LitString(Ast.IgnoreNullsSentinel)))
-      val argsR = if (ign) args.dropRight(1) else args
-      val fr = frame.getOrElse(
-        sys.error("unreachable: bounded ghost window without a frame"))
-      val x = opLower(argsR.head)
-      val pick = f match {
-        case "first_value" => first(x, ign)
-        case "last_value"  => last(x, ign)
-        case _ =>
-          val n = argsR(1) match {
-            case BoundOperand.BLit(Lit.LitLong(v)) => v.toInt
-            case other => sys.error(s"unreachable nth_value offset $other")
-          }
-          nth_value(x, n, ign)
-      }
-      GhostWin(alias, math.max(0L, -fr.lo).toInt, math.max(0L, fr.hi).toInt,
-        (w, _) => pick.over(w.rowsBetween(fr.lo, fr.hi)))
-    } else {
-      val fr = frame.getOrElse(
-        sys.error("unreachable: bounded ghost window without a frame"))
-      val cOpt = args.headOption.map(opLower)
-      val agg = (f, cOpt) match {
-        case ("count", None)    => count(lit(1))
-        case ("count", Some(c)) => count(c)
-        case ("sum", Some(c))   => sum(c)
-        case ("avg", Some(c))   => avg(c)
-        case ("min", Some(c))   => min(c)
-        case ("max", Some(c))   => max(c)
-        case other => sys.error(s"unreachable ghost aggregate $other")
-      }
-      val exclMode =
-        if (fr.lo <= 0L && fr.hi >= 0L) fr.exclude else "none"
-      GhostWin(alias, math.max(0L, -fr.lo).toInt, math.max(0L, fr.hi).toInt,
-        (w1, peerKeys) =>
-          if (exclMode == "none") agg.over(w1.rowsBetween(fr.lo, fr.hi))
-          // EXCLUDE over the ghosted frame: peer groups partition by
-          // (bucket id, order keys) — exact in-bucket, because equal
-          // order keys land in ONE range bucket and ghosts never share
-          // a key with their target bucket's real rows
-          else exclusionCol(f, cOpt, fr, w1.rowsBetween(fr.lo, fr.hi),
-            w1, peerKeys, exclMode))
-    }
-
-  private def attachGlobalShiftWins(spark: SparkSession, df0: DataFrame,
-      bk: BucketCols,
-      items: Seq[GhostWin]): DataFrame = {
-    val tag = s"__gsw${gowTag.incrementAndGet()}"
-    val pidN = bk.pidN
-    val ghostN = s"${tag}_ghost"
-    val ordNames = bk.ordNames
-    val ordE = bk.ordE
-    // the SHARED bucketing is already materialized — candidate
-    // extraction and the shift windows read the same frozen buckets;
-    // only the ghost marker is new (row-local, rides the lazy plan)
-    val bucketed = df0.withColumn(ghostN, lit(false))
-    val maxLag = items.map(_.kLag).foldLeft(0)(math.max)
-    val maxLead = items.map(_.kLead).foldLeft(0)(math.max)
-    val pids = bucketed.select(col(pidN).as(s"${tag}_tp")).distinct()
-    // last-k per bucket (lag candidates): in-bucket row_number over the
-    // REVERSED order; first-k per bucket (lead candidates): the order
-    // itself. Reversal = flipping each key's direction AND null order.
-    def revSort(c: Column, d: Ast.SortDir): Column = {
-      val desc = !d.desc
-      val nf = d.nullsFirst.map(!_)
-      sortCol(c, Ast.SortDir(desc, nf))
-    }
-    val ordRev = bk.dirs.zipWithIndex.map { case (d, i) =>
-      revSort(col(ordNames(i)), d) }
-    val edgeN = s"${tag}_edge"
-    def edgeRows(k: Int, tail: Boolean): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(pidN)).orderBy((if (tail) ordRev else ordE): _*)
-      bucketed.withColumn(edgeN, row_number().over(w))
-        .filter(col(edgeN) <= k).drop(edgeN)
-    }
-    // replicate candidates to every LATER (lag) / EARLIER (lead) bucket
-    def replicated(k: Int, tail: Boolean): Option[DataFrame] =
-      if (k == 0) None
-      else Some(edgeRows(k, tail)
-        // broadcast the ≤P-row bucket-id frame explicitly: its stats
-        // descend from the materialized RDD scan (size unknown), so
-        // without the hint the theta join can plan as CartesianProduct
-        .join(broadcast(pids), if (tail) col(pidN) < col(s"${tag}_tp")
-                               else col(pidN) > col(s"${tag}_tp"))
-        .withColumn(pidN, col(s"${tag}_tp")).drop(s"${tag}_tp")
-        .withColumn(ghostN, lit(true)))
-    val unioned = Seq(replicated(maxLag, tail = true),
-      replicated(maxLead, tail = false)).flatten
-      .foldLeft(bucketed)(_ unionByName _)
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    // ghosts cover every cross-bucket neighbor, so the in-bucket
-    // expression runs off the sequence EXACTLY at the global boundary —
-    // shift defaults (coerced by Spark to the input's type) apply there
-    // and only there; bounded frames truncate there; a neighbor whose
-    // VALUE is NULL keeps NULL
-    val shifted = unioned.select(col("*") +: items.map { it =>
-      it.build(wIn, col(pidN) +: ordNames.map(col)).as(it.alias)
-    }: _*)
-    // pid / order keys stay for the next class of this ORDER spec
-    shifted.filter(!col(ghostN)).drop(ghostN)
-  }
-
-  /** Is this an unpartitioned aggregate over a WHOLE-INPUT frame
-    * (`ORDER BY … ROWS/RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-    * FOLLOWING`) WITH frame exclusion? Without exclusion the order is
-    * immaterial and isGlobalAggWin's broadcast rewrite applies; with
-    * EXCLUDE the result varies per row but still decomposes into
-    * scale-free pieces: global totals (broadcast) minus the row/peer
-    * contribution for count/sum/avg, and for the non-subtractable
-    * min/max a before-peers/after-peers split — in-bucket windows plus
-    * exclusive prefix AND suffix offsets over the ≤P-row per-bucket
-    * totals (the same machinery as the distributed prefix scan, run in
-    * both directions). The analyzer has already restricted the surface:
-    * EXCLUDE only on the five decomposable aggregates, GROUP/TIES only
-    * on RANGE frames with ORDER BY, min/max EXCLUDE over RANGE only on
-    * a single integral key (which the in-bucket rangeBetween windows
-    * need too).
-    */
-  private def isGlobalWholeExWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean =
-    parts.isEmpty && ord.nonEmpty &&
-      Set("count", "sum", "avg", "min", "max")(f) &&
-      !args.exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      } &&
-      frame.exists(fr => !fr.groups && !fr.temporal &&
-        fr.lo == Long.MinValue && fr.hi == Long.MaxValue &&
-        fr.exclude != "none") &&
-      (!(Set("min", "max")(f) && frame.exists(_.range)) || ord.length == 1)
-
-  /** Attach one ORDER-spec group of unpartitioned whole-input EXCLUDE
-    * windows, distributed. Per item over the shared range bucketing:
-    *
-    *  - count/sum/avg: the global aggregate assembles from per-bucket
-    *    totals (exclusive prefix + own + exclusive suffix — two ≤P-row
-    *    windows over the totals frame), then the excluded contribution
-    *    subtracts columnar exactly like exclusionCol: CURRENT ROW
-    *    subtracts the row, GROUP the peer-group aggregate (an in-bucket
-    *    window over bucket id + order keys — exact because equal keys
-    *    land in one range bucket), TIES the peers minus the row; an
-    *    all-excluded frame yields SQL NULL via the count guard.
-    *  - min/max don't subtract — they split into before/after parts:
-    *    in-bucket prefix/suffix windows (ROWS for row exclusion, RANGE
-    *    for peer exclusion on the single integral key) combined with
-    *    the earlier/later buckets' totals via null-skipping
-    *    least/greatest; RANGE + EXCLUDE CURRENT ROW adds the
-    *    peer-group-minus-self combine (in-bucket, ordered by the value
-    *    — any total order covers all-but-self), TIES adds the row's own
-    *    value back.
-    *
-    * Items: (output name, function, lowered argument, frame).
-    */
-  private def attachGlobalWholeExWins(spark: SparkSession, df0: DataFrame,
-      bk: BucketCols,
-      items: Seq[(String, String, Option[Column], Ast.WinFrame)])
-      : DataFrame = {
-    val tag = s"__gwx${gowTag.incrementAndGet()}"
-    val pidN = bk.pidN
-    val ordNames = bk.ordNames
-    val ordE = bk.ordE
-    val giN = s"${tag}_gi"
-    val idxN = s"${tag}_ix"
-    val wIn0 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    // min/max split into before/after parts, and BOTH directions must
-    // be EXPANDING frames: Spark's (bounded-start, UnboundedFollowing)
-    // frame recomputes the aggregate from scratch every time the lower
-    // bound moves — O(bucket²); the scale probe measured the suffix
-    // windows super-linear (α≈1.1, 65 s at sf1). So the bucketing
-    // materializes an in-bucket PEER-GROUP index (dense_rank — for
-    // RANGE peer exclusion; never NULL, unlike the value key, whose
-    // NULL rows Spark's range frame collapses to the null peer group
-    // even under an UNBOUNDED bound — fuzz probe caught the
-    // divergence) and a unique ROW index (row_number — for ROWS row
-    // exclusion), and the after-part runs as a PREFIX frame over the
-    // REVERSED index: an exact complement (the index is unique/peer
-    // -consistent, so ties cannot reshuffle between the two sorts),
-    // incremental in both directions.
-    val needGi = items.exists { case (_, f, _, fr) =>
-      Set("min", "max")(f) && fr.range }
-    val needIdx = items.exists { case (_, f, _, _) => Set("min", "max")(f) }
-    // the shared bucketing is already materialized; the peer-group and
-    // row indexes are deterministic in-bucket windows over the frozen
-    // buckets, consumed only by the withIn subtree below — they ride
-    // its lazy plan (per-bucket totals read df0 directly)
-    val preGi =
-      if (needGi) df0.withColumn(giN, dense_rank().over(wIn0))
-      else df0
-    val bucketed =
-      if (needIdx) preGi.withColumn(idxN, row_number().over(wIn0))
-      else preGi
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(col(idxN).asc)
-    val wInRev = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(col(idxN).desc)
-    val wGi = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(col(giN).asc)
-    val wGiRev = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(col(giN).desc)
-    val peerKeys = col(pidN) +: ordNames.map(col)
-    val wPeer = org.apache.spark.sql.expressions.Window
-      .partitionBy(peerKeys: _*)
-    val unb = org.apache.spark.sql.expressions.Window.unboundedPreceding
-    val unf = org.apache.spark.sql.expressions.Window.unboundedFollowing
-    val wPre = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc).rowsBetween(unb, -1L)
-    val wSuf = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc).rowsBetween(1L, unf)
-    def nz2(a: Column, b: Column): Column = coalesce(a + b, a, b)
-    // (in-bucket cols, per-bucket totals, pre+suf offsets over totals,
-    // final combiner)
-    val parts4: Seq[(Seq[Column], Seq[Column], Seq[Column], Column)] =
-      items.zipWithIndex.map { case ((_, f, cOpt, fr), j) =>
-        def inN(c: String) = s"${tag}_in${j}_$c"
-        def totN(c: String) = s"${tag}_t${j}_$c"
-        def offN(c: String) = s"${tag}_f${j}_$c"
-        val mode = fr.exclude
-        val needPeerAgg = mode == "group" || mode == "ties"
-        lazy val selfCnt = cOpt.fold(lit(1L))(_.isNotNull.cast("long"))
-        def gCnt = coalesce(col(offN("pc")), lit(0L)) + col(totN("c")) +
-          coalesce(col(offN("sc")), lit(0L))
-        def gSum = nz2(nz2(col(offN("ps")), col(totN("s"))), col(offN("ss")))
-        def cntTot = cOpt.fold(count(lit(1)))(count(_))
-        def cntSub = mode match {
-          case "current" => selfCnt
-          case "group"   => col(inN("gc"))
-          case _         => col(inN("gc")) - selfCnt // ties
-        }
-        def sumSub(x: Column) = mode match {
-          case "current" => coalesce(x, lit(0))
-          case "group"   => coalesce(col(inN("gs")), lit(0))
-          case _         => coalesce(col(inN("gs")), lit(0)) -
-            coalesce(x, lit(0)) // ties
-        }
-        f match {
-          case "count" =>
-            (if (needPeerAgg) Seq(cntTot.over(wPeer).as(inN("gc"))) else Nil,
-              Seq(cntTot.as(totN("c"))),
-              Seq(sum(col(totN("c"))).over(wPre).as(offN("pc")),
-                sum(col(totN("c"))).over(wSuf).as(offN("sc"))),
-              gCnt - cntSub)
-          case "sum" | "avg" =>
-            val x = cOpt.get
-            val in = if (needPeerAgg)
-              Seq(sum(x).over(wPeer).as(inN("gs")),
-                count(x).over(wPeer).as(inN("gc"))) else Nil
-            val excl = when(gCnt - cntSub === 0L, lit(null))
-            ((in,
-              Seq(sum(x).as(totN("s")), count(x).as(totN("c"))),
-              Seq(sum(col(totN("s"))).over(wPre).as(offN("ps")),
-                sum(col(totN("s"))).over(wSuf).as(offN("ss")),
-                sum(col(totN("c"))).over(wPre).as(offN("pc")),
-                sum(col(totN("c"))).over(wSuf).as(offN("sc"))),
-              if (f == "sum") excl.otherwise(gSum - sumSub(x))
-              else excl.otherwise((gSum - sumSub(x)) / (gCnt - cntSub))))
-          case _ => // min | max
-            val x = cOpt.get
-            val isMin = f == "min"
-            def agg(c: Column) = if (isMin) min(c) else max(c)
-            def cmb(cs: Seq[Column]) =
-              if (isMin) least(cs: _*) else greatest(cs: _*)
-            val (wp, ws) =
-              if (fr.range) (wGi.rangeBetween(unb, -1L),
-                wGiRev.rangeBetween(unb, -1L))
-              else (wIn.rowsBetween(unb, -1L), wInRev.rowsBetween(unb, -1L))
-            // all-but-self within the peer group: prefix frames over
-            // the unique row index in BOTH directions (any total order
-            // covers all-but-self; the expanding shape keeps a
-            // pathological giant peer group incremental too)
-            val pes = if (fr.range && mode == "current") {
-              val pwA = org.apache.spark.sql.expressions.Window
-                .partitionBy(peerKeys: _*).orderBy(col(idxN).asc)
-              val pwD = org.apache.spark.sql.expressions.Window
-                .partitionBy(peerKeys: _*).orderBy(col(idxN).desc)
-              Seq(cmb(Seq(agg(x).over(pwA.rowsBetween(unb, -1L)),
-                agg(x).over(pwD.rowsBetween(unb, -1L)))).as(inN("e")))
-            } else Nil
-            val base = Seq(col(offN("p")), col(inN("p")),
-              col(inN("s")), col(offN("s")))
-            (Seq(agg(x).over(wp).as(inN("p")),
-              agg(x).over(ws).as(inN("s"))) ++ pes,
-              Seq(agg(x).as(totN("m"))),
-              Seq(agg(col(totN("m"))).over(wPre).as(offN("p")),
-                agg(col(totN("m"))).over(wSuf).as(offN("s"))),
-              mode match {
-                case "current" if fr.range => cmb(base :+ col(inN("e")))
-                case "current" | "group"   => cmb(base)
-                case _                     => cmb(base :+ x) // ties
-              })
-        }
-      }
-    val withIn = bucketed.select(col("*") +: parts4.flatMap(_._1): _*)
-    val totAggs = parts4.flatMap(_._2)
-    val totals = df0.groupBy(col(pidN)).agg(totAggs.head, totAggs.tail: _*)
-    // offsets AND the own-bucket totals ride the same broadcast join
-    val offsets = totals.select(
-      col(pidN) +: (parts4.flatMap(_._3) ++
-        totals.columns.filter(_ != pidN).map(col)): _*)
-    val joined = withIn.join(broadcast(offsets), Seq(pidN), "left_outer")
-    val finals = items.zipWithIndex.map { case ((alias, _, _, _), j) =>
-      parts4(j)._4.as(alias) }
-    val dropNames = Seq(giN, idxN) ++
-      items.indices.flatMap(j =>
-        Seq("gc", "gs", "p", "s", "e").map(c => s"${tag}_in${j}_$c") ++
-          Seq("c", "s", "m").map(c => s"${tag}_t${j}_$c") ++
-          Seq("pc", "sc", "ps", "ss", "p", "s").map(c => s"${tag}_f${j}_$c"))
-    joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** Is this an unpartitioned lag/lead with a LARGE literal offset
-    * (> 1000 — past the ghost-replication halo cap, where replicating
-    * P·k edge rows stops being "tiny")? Computable at ANY offset as a
-    * distributed equi-join: attach the global row number (the prefix
-    * scan), then join each row with the row numbered rn∓k — a hash
-    * join on a unique key, no replication, no single partition.
-    * Plain shifts only (IGNORE NULLS needs the k-th non-null, not the
-    * k-th row — its > 1000 offsets keep the dedicated lowering,
-    * documented in SCALE.md).
-    */
-  private def isGlobalBigShiftWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)]): Boolean =
-    parts.isEmpty && ord.nonEmpty && (f == "lag" || f == "lead") &&
-      !args.exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      } &&
-      (args.lift(1) match {
-        case Some(BoundOperand.BLit(Lit.LitLong(n))) => n > 1000
-        case _ => false
-      })
-
-  /** Attach one ORDER-spec group of large-offset unpartitioned shifts:
-    * global row number (distributed prefix scan, materialized once so
-    * both join sides read the same bucketing-derived numbering), then
-    * one compact equi-join per distinct (direction, offset) carrying
-    * the shifted values plus a hit marker — a join miss is the true
-    * global boundary where the default applies; a null VALUE at a hit
-    * row stays null. Items: (name, lag|lead, lowered arg, offset,
-    * default).
-    */
-  /** The self-join half of the large-offset shift lowering: `mat` is
-    * the SHARED materialized frame carrying the global row number
-    * (`rnN`) and the item argument columns (`xNames`) — one compact
-    * equi-join per distinct (direction, offset), right side read from
-    * `mat`, left side chained from `d` (which may already carry other
-    * classes' outputs). rnN / xNames stay for the coordinator to drop.
-    */
-  private def bigShiftJoins(mat: DataFrame, d0: DataFrame, rnN: String,
-      xNames: Seq[String],
-      items: Seq[(String, String, Column, Int, Any)]): DataFrame = {
-    val tag = s"__gbs${gowTag.incrementAndGet()}"
-    val byShift = items.zipWithIndex.groupBy { case ((_, f, _, k, _), _) =>
-      (f, k) }.toSeq.sortBy { case ((f, k), _) => (f, k) }
-    val joined = byShift.foldLeft(d0) { case (d, ((f, k), its)) =>
-      val jk = s"${tag}_jk_${f}_$k"
-      val hit = s"${tag}_h_${f}_$k"
-      val delta = if (f == "lag") k.toLong else -k.toLong
-      val right = mat.select(
-        (col(rnN) + delta).as(jk) +: lit(true).as(hit) +:
-          its.map { case (_, i) => col(xNames(i)).as(s"${tag}_v$i") }: _*)
-      d.join(right, col(rnN) === col(jk), "left_outer").drop(jk)
-    }
-    val finals = items.zipWithIndex.map { case ((alias, f, _, k, dflt), i) =>
-      val vt = joined.schema(s"${tag}_v$i").dataType
-      when(col(s"${tag}_h_${f}_$k").isNotNull, col(s"${tag}_v$i"))
-        .otherwise(lit(dflt).cast(vt)).as(alias)
-    }
-    val dropNames = items.indices.map(i => s"${tag}_v$i") ++
-      byShift.map { case ((f, k), _) => s"${tag}_h_${f}_$k" }
-    joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** Is this an unpartitioned lag/lead IGNORE NULLS with a LARGE
-    * literal offset (> 1000 — past the carry-array cap)? The k-th
-    * non-null is a JOIN, not a window: the inclusive running count of
-    * non-nulls (distributed prefix scan over an explicit ROWS frame)
-    * ranks every non-null row uniquely, and row cur wants the non-null
-    * ranked cPrev − k + 1, where cPrev is cur's inclusive count minus
-    * its own non-null flag. Lead mirrors through the TRUE-reversed
-    * order (direction and null placement both flip). A join miss is
-    * the global boundary where the default applies.
-    */
-  private def isGlobalBigInShiftWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)]): Boolean =
-    parts.isEmpty && ord.nonEmpty && (f == "lag" || f == "lead") &&
-      args.lastOption.contains(
-        BoundOperand.BLit(Lit.LitString(Ast.IgnoreNullsSentinel))) &&
-      (args.dropRight(1).lift(1) match {
-        case Some(BoundOperand.BLit(Lit.LitLong(n))) => n > 1000
-        case _ => false
-      })
-
-  /** Attach large-offset IGNORE NULLS shifts (see
-    * isGlobalBigInShiftWin). Items: (name, lag|lead, lowered arg,
-    * offset, default). One rank column per item over the shared
-    * bucketing (forward order for lags, true-reversed for leads),
-    * materialized once; one compact equi-join per item against its own
-    * non-null rows keyed by their rank.
-    */
-  /** The self-join half of the large-offset IGNORE NULLS shift
-    * lowering: `mat` is the SHARED materialized frame carrying each
-    * item's argument column (`xNames`) and its non-null rank column
-    * (`cNames` — forward running count for lags, reversed for leads,
-    * both computed by the shared prefix-scan invocations). One compact
-    * equi-join per item against its own non-null rows keyed by their
-    * rank. xNames / cNames stay for the coordinator to drop.
-    */
-  private def bigInShiftJoins(mat: DataFrame, d0: DataFrame,
-      xNames: Seq[String], cNames: Seq[String],
-      items: Seq[(String, String, Column, Int, Any)]): DataFrame = {
-    val tag = s"__gbi${gowTag.incrementAndGet()}"
-    val joined = items.zipWithIndex.foldLeft(d0) {
-      case (d, ((_, _, _, k, _), i)) =>
-        val jk = s"${tag}_jk$i"
-        val hit = s"${tag}_h$i"
-        val cPrev = col(cNames(i)) - col(xNames(i)).isNotNull.cast("long")
-        val right = mat.filter(col(xNames(i)).isNotNull)
-          .select(col(cNames(i)).as(jk), lit(true).as(hit),
-            col(xNames(i)).as(s"${tag}_v$i"))
-        d.join(right, cPrev - (k - 1).toLong === col(jk), "left_outer")
-          .drop(jk)
-    }
-    val finals = items.zipWithIndex.map { case ((alias, _, _, _, dflt), i) =>
-      val vt = joined.schema(s"${tag}_v$i").dataType
-      when(col(s"${tag}_h$i").isNotNull, col(s"${tag}_v$i"))
-        .otherwise(lit(dflt).cast(vt)).as(alias)
-    }
-    val dropNames = items.indices.flatMap(i =>
-      Seq(s"${tag}_v$i", s"${tag}_h$i"))
-    joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** Is this an unpartitioned DISTINCT running aggregate whose prefix
-    * frame LOOKS AHEAD (`f(DISTINCT x) OVER (ORDER BY … ROWS BETWEEN
-    * UNBOUNDED PRECEDING AND h FOLLOWING)`)? Every value in such a
-    * frame still has its first global occurrence INSIDE the frame, so
-    * the pre-attached first-occurrence mask turns it into an ordinary
-    * count/sum/avg over [start, cur+h] — which decomposes like the
-    * prefix scan WITH a bounded lookahead: earlier buckets contribute
-    * through exclusive-prefix totals, the in-bucket window runs
-    * [bucket start, cur+h] where the rows past the bucket edge are
-    * lead ghosts. Halo capped like the other ghost paths; RANGE
-    * lookahead (value distance) keeps the dedicated lowering.
-    */
-  private def isGlobalDistinctAheadWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean =
-    parts.isEmpty && ord.nonEmpty &&
-      args.lastOption.contains(
-        BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel))) &&
-      Set("count", "sum", "avg", "mean")(f) &&
-      frame.exists(fr => !fr.range && !fr.groups && !fr.temporal &&
-        fr.exclude == "none" && fr.lo == Long.MinValue &&
-        fr.hi > 0L && fr.hi != Long.MaxValue && fr.hi <= 1000L)
-
-  /** Attach one ORDER-spec group of DISTINCT look-ahead runnings (see
-    * isGlobalDistinctAheadWin). Items: (name, count|sum|avg, mask
-    * column, h). The in-bucket [bucket start, cur+h] windows evaluate
-    * over the ghost-extended union (first-maxH rows of every later
-    * bucket, ≤ P·h replicated rows — sorted strictly after the target
-    * bucket's real rows, so the prefix part never sees them); the
-    * per-bucket totals aggregate REAL rows only; the frame truncates
-    * at the global end exactly where the ghosts run out.
-    */
-  private def attachGlobalMaskAheadWins(spark: SparkSession, df0: DataFrame,
-      bk: BucketCols,
-      items: Seq[(String, String, Column, Int)]): DataFrame = {
-    val tag = s"__gmaw${gowTag.incrementAndGet()}"
-    val pidN = bk.pidN
-    val ghostN = s"${tag}_ghost"
-    val ordE = bk.ordE
-    // the first-occurrence masks were attached BEFORE the shared range
-    // shuffle by the coordinator (they're value-partitioned windows);
-    // items carry their column refs, so only the ghost marker is new
-    val bucketed = df0.withColumn(ghostN, lit(false))
-    val maxLead = items.map(_._4).max
-    val unb = org.apache.spark.sql.expressions.Window.unboundedPreceding
-    val pids = bucketed.select(col(pidN).as(s"${tag}_tp")).distinct()
-    val edgeN = s"${tag}_edge"
-    val wHead = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    val heads = bucketed.withColumn(edgeN, row_number().over(wHead))
-      .filter(col(edgeN) <= maxLead).drop(edgeN)
-      .join(broadcast(pids), col(pidN) > col(s"${tag}_tp"))
-      .withColumn(pidN, col(s"${tag}_tp")).drop(s"${tag}_tp")
-      .withColumn(ghostN, lit(true))
-    val unioned = bucketed.unionByName(heads)
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    val inCols = items.zipWithIndex.flatMap { case ((_, f, m, h), i) =>
-      val w = wIn.rowsBetween(unb, h.toLong)
-      (if (f != "count") Seq(sum(m).over(w).as(s"${tag}_is$i")) else Nil) ++
-        (if (f != "sum") Seq(count(m).over(w).as(s"${tag}_ic$i")) else Nil)
-    }
-    val withIn = unioned.select(col("*") +: inCols: _*).filter(!col(ghostN))
-    val totAggs = items.zipWithIndex.flatMap { case ((_, f, m, _), i) =>
-      (if (f != "count")
-        Seq(sum(m).as(s"${tag}_ts$i")) else Nil) ++
-        (if (f != "sum")
-          Seq(count(m).as(s"${tag}_tc$i")) else Nil)
-    }
-    val totals = df0.groupBy(col(pidN)).agg(totAggs.head, totAggs.tail: _*)
-    val wPre = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc).rowsBetween(unb, -1L)
-    val offCols = items.zipWithIndex.flatMap { case ((_, f, _, _), i) =>
-      (if (f != "count") Seq(sum(col(s"${tag}_ts$i")).over(wPre)
-        .as(s"${tag}_fs$i")) else Nil) ++
-        (if (f != "sum") Seq(sum(col(s"${tag}_tc$i")).over(wPre)
-          .as(s"${tag}_fc$i")) else Nil)
-    }
-    val offsets = totals.select(col(pidN) +: offCols: _*)
-    val joined = withIn.join(broadcast(offsets), Seq(pidN), "left_outer")
-    val finals = items.zipWithIndex.map { case ((alias, f, _, _), i) =>
-      lazy val sm = coalesce(col(s"${tag}_fs$i") + col(s"${tag}_is$i"),
-        col(s"${tag}_fs$i"), col(s"${tag}_is$i"))
-      lazy val cnt = coalesce(col(s"${tag}_fc$i"), lit(0L)) +
-        col(s"${tag}_ic$i")
-      (f match {
-        case "count" => cnt
-        case "sum"   => sm
-        // the distributed DISTINCT avg divides the exact sum by the
-        // exact count in DOUBLE, like the prefix-scan avg — gates cast
-        case _ => when(cnt === 0L, lit(null))
-          .otherwise(sm.cast("double") / cnt)
-      }).as(alias)
-    }
-    val dropNames = Seq(ghostN) ++
-      items.indices.flatMap(i => Seq(s"${tag}_is$i", s"${tag}_ic$i",
-        s"${tag}_fs$i", s"${tag}_fc$i"))
-    joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** Is this an unpartitioned lag/lead IGNORE NULLS the carry-array
-    * prefix scan can compute? Literal offsets 1..1000 (offset 0 and
-    * non-literal shapes keep the dedicated lowering). The lookback is
-    * UNBOUNDED — a run of NULLs can span any number of buckets — so the
-    * ghost halo can't cover it; attachGlobalIgnoreNullsShifts bounds it
-    * with per-bucket last-k-non-null summaries instead.
-    */
-  private def isGlobalIgnoreNullsShiftWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)]): Boolean =
-    parts.isEmpty && ord.nonEmpty && (f == "lag" || f == "lead") &&
-      args.lastOption.contains(
-        BoundOperand.BLit(Lit.LitString(Ast.IgnoreNullsSentinel))) &&
-      !args.dropRight(1).exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      } &&
-      (args.dropRight(1).lift(1) match {
-        case None => true
-        case Some(BoundOperand.BLit(Lit.LitLong(n))) => n >= 1 && n <= 1000
-        case _ => false
-      })
-
-  /** Unpartitioned lag/lead IGNORE NULLS over a total order, without the
-    * single-partition window. Any run of NULLs can span buckets, so the
-    * lookback is unbounded and ghost rows can't cover it. Instead: each
-    * bucket aggregates its last-k (first-k for lead) NON-NULL values per
-    * item as a sorted (index, value) array; the ≤P-row totals frame
-    * prefix-concatenates earlier buckets' arrays (suffix for lead) and
-    * keeps the k nearest — the per-bucket CARRY, broadcast back. Each
-    * row then combines: if its own bucket holds ≥k non-nulls before it,
-    * the in-bucket IGNORE NULLS shift answers; otherwise the shortfall
-    * indexes the carry from its near end, and where the carry is short
-    * too the row is within k non-nulls of the true global boundary — the
-    * default applies. Exact because the k nearest preceding non-nulls of
-    * any prefix are contained in (per-bucket last-k union), the same
-    * containment that drives the ghost rows.
-    */
-  private def attachGlobalIgnoreNullsShifts(spark: SparkSession,
-      df0: DataFrame, bk: BucketCols,
-      items: Seq[(String, String, Column, Int, Any)]): DataFrame = {
-    val tag = s"__gin${gowTag.incrementAndGet()}"
-    val pidN = bk.pidN
-    val gidxN = s"${tag}_gidx"
-    val ordNames = bk.ordNames
-    val xN = items.indices.map(j => s"${tag}_x$j")
-    val cntN = items.indices.map(j => s"${tag}_c$j")
-    val arrN = items.indices.map(j => s"${tag}_a$j")
-    val carN = items.indices.map(j => s"${tag}_k$j")
-    // the shared bucketing is already materialized; the item argument
-    // columns are row-local expressions that ride its lazy plan
-    val bucketed = df0.select(col("*") +: items.zipWithIndex.map {
-      case ((_, _, x, _, _), j) => x.as(xN(j)) }: _*)
-    val ordE = bk.ordE
-    val ordRev = bk.dirs.zipWithIndex.map { case (d, i) =>
-      sortCol(col(ordNames(i)), Ast.SortDir(!d.desc, d.nullsFirst.map(!_))) }
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordE: _*)
-    val wInRev = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN)).orderBy(ordRev: _*)
-    val ub = org.apache.spark.sql.expressions.Window.unboundedPreceding
-    val uf = org.apache.spark.sql.expressions.Window.unboundedFollowing
-    // in-bucket index (orders the collected candidates globally within
-    // their bucket) + per-item non-null counts: before the row for lag,
-    // after it for lead — both also select the last-k/first-k candidates
-    // the after-count computes as whole-bucket total minus inclusive
-    // prefix — Spark's (1, UnboundedFollowing) frame re-aggregates per
-    // row (O(bucket²); the WinScaleProbe sweep measured that frame
-    // shape super-linear in the whole-input EXCLUDE lowering)
-    val wPart = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(pidN))
-    val withIdx = bucketed.select(col("*") +:
-      (row_number().over(wIn).as(gidxN) +:
-        items.zipWithIndex.map { case ((_, f, _, _, _), j) =>
-          val x = col(xN(j))
-          if (f == "lag")
-            count(x).over(wIn.rowsBetween(ub, -1L)).as(cntN(j))
-          else
-            (count(x).over(wPart) -
-              count(x).over(wIn.rowsBetween(ub, 0L))).as(cntN(j))
-        }): _*)
-    // candidate flag rides a REVERSED-order running count for lag (the
-    // bucket's last k non-nulls) / the forward count for lead (first k);
-    // the when() keeps only candidates, collect_list drops the rest
-    val withCand = withIdx.select(col("*") +:
-      items.zipWithIndex.map { case ((_, f, _, k, _), j) =>
-        val x = col(xN(j))
-        val tailCnt =
-          if (f == "lag") count(x).over(wInRev.rowsBetween(ub, 0L))
-          else count(x).over(wIn.rowsBetween(ub, 0L))
-        when(x.isNotNull && tailCnt <= k,
-          struct(col(gidxN).as("i"), x.as("v"))).as(s"${tag}_s$j")
-      }: _*)
-    val totals = withCand.groupBy(col(pidN)).agg(
-      sort_array(collect_list(col(s"${tag}_s0"))).as(arrN(0)),
-      items.indices.drop(1).map(j =>
-        sort_array(collect_list(col(s"${tag}_s$j"))).as(arrN(j))): _*)
-    val wPre = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc).rowsBetween(ub, -1L)
-    val wSuf = org.apache.spark.sql.expressions.Window
-      .orderBy(col(pidN).asc).rowsBetween(1L, uf)
-    // carry: earlier (later) buckets' candidate arrays concatenated in
-    // bucket order — flatten preserves it — then the k nearest kept;
-    // ≤ P arrays of ≤ k elements each through the single-partition
-    // totals window, scale-free
-    val offsets = totals.select(col(pidN) +:
-      items.zipWithIndex.map { case ((_, f, _, k, _), j) =>
-        // collect_list over an empty frame yields an empty array (never
-        // NULL), so bucket 0 / the last bucket flatten to an empty carry
-        val fl =
-          if (f == "lag") flatten(collect_list(col(arrN(j))).over(wPre))
-          else flatten(collect_list(col(arrN(j))).over(wSuf))
-        val kept =
-          if (f == "lag")
-            slice(fl, greatest(lit(1), size(fl) - k + 1), lit(k))
-          else slice(fl, lit(1), lit(k))
-        kept.as(carN(j))
-      }: _*)
-    val joined = withIdx.join(broadcast(offsets), Seq(pidN), "left_outer")
-    val finals = items.zipWithIndex.map { case ((alias, f, _, k, dflt), j) =>
-      val x = col(xN(j))
-      val xType = bucketed.schema(xN(j)).dataType
-      val dfltC = lit(dflt).cast(xType)
-      val carry = col(carN(j))
-      val need = (lit(k) - col(cntN(j))).cast("int")
-      val inShift =
-        (if (f == "lag") lag(x, k, null, ignoreNulls = true)
-         else lead(x, k, null, ignoreNulls = true)).over(wIn)
-      val fromCarry =
-        if (f == "lag")
-          element_at(carry, (size(carry) - need + 1)).getField("v")
-        else element_at(carry, need).getField("v")
-      when(col(cntN(j)) >= k, inShift)
-        .otherwise(when(size(carry) >= need, fromCarry).otherwise(dfltC))
-        .as(alias)
-    }
-    joined.select(col("*") +: finals: _*)
-      .drop((Seq(gidxN) ++ xN ++ cntN ++ carN): _*)
-  }
-
-  /** Is `f(x) OVER ()` — no PARTITION BY, no ORDER BY, no frame — a
-    * decomposable plain aggregate? Such a window computes ONE value over
-    * the whole input but forces every row through a single partition
-    * (Spark warns "No Partition Defined"); the attach step rewrites it
-    * to a 1-row global aggregate broadcast-joined back: identical value
-    * on every row, no single-partition exchange — the percent-of-total
-    * idiom stays scalable at any input cardinality.
-    *
-    * An ORDERED window whose explicit frame is WHOLE-INPUT (`ORDER BY …
-    * ROWS/RANGE/GROUPS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
-    * FOLLOWING`, no EXCLUDE) computes the same single value — the order
-    * is immaterial to an unbounded frame — so it takes the same rewrite
-    * instead of Spark's single-partition ordered window.
-    */
-  private def isGlobalAggWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean = {
-    // DISTINCT makes no difference to the rewrite's shape — the 1-row
-    // global aggregate just uses the distinct aggregate forms (min/max
-    // DISTINCT are no-ops); IGNORE NULLS keeps its dedicated lowering
-    val dist = args.lastOption.contains(
-      BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel)))
-    val argsR = if (dist) args.dropRight(1) else args
-    parts.isEmpty &&
-      ((ord.isEmpty && frame.isEmpty) ||
-        frame.exists(fr => !fr.temporal && fr.lo == Long.MinValue &&
-          fr.hi == Long.MaxValue && fr.exclude == "none")) &&
-      (Set("count", "sum", "avg", "min", "max")(f) ||
-        (dist && f == "mean")) &&
-      (if (dist) argsR.lengthCompare(1) == 0 else argsR.lengthCompare(1) <= 0) &&
-      !argsR.exists {
-        case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
-        case _ => false
-      }
-  }
-
-  private def globalAggCol(f: String, args: Seq[BoundOperand],
-      opLower: BoundOperand => Column): Column = {
-    val dist = args.lastOption.contains(
-      BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel)))
-    val argsR = if (dist) args.dropRight(1) else args
-    lazy val x = opLower(argsR.head)
-    (f, dist) match {
-      case ("count", false) =>
-        if (argsR.isEmpty) count(lit(1)) else count(x)
-      case ("count", true)        => count_distinct(x)
-      case ("sum", false)         => sum(x)
-      case ("sum", true)          => sum_distinct(x)
-      case ("avg" | "mean", true) =>
-        // all-NULL input → 0 distinct values → NULL, never a divide
-        val c = count_distinct(x)
-        when(c === 0L, lit(null)).otherwise(sum_distinct(x) / c)
-      case ("avg", false)         => avg(x)
-      case ("min", _)             => min(x)
-      case _                      => max(x)
-    }
-  }
 
   /** Is `f(DISTINCT x) OVER w` rewritable to the scalable masked-running
     * form? Requires a PREFIX frame — no explicit frame (default running
@@ -2733,24 +1254,6 @@ object Lowering {
       Set("count", "sum", "avg", "mean")(f) &&
       frame.forall(_.lo == Long.MinValue)
 
-  /** Is `f(DISTINCT x) OVER (ORDER BY …)` — unpartitioned — computable
-    * by composing the first-occurrence mask with the distributed prefix
-    * scan? The mask's own window partitions by the VALUE (distributed at
-    * any NDV), and a value's first global occurrence lies inside every
-    * prefix frame that contains the value, so the scan's ordinary
-    * running count/sum/avg over the mask IS the DISTINCT aggregate —
-    * with no Exchange SinglePartition anywhere. Prefix-to-current frames
-    * only (the scan's aggregate shape); hi > 0 keeps the dedicated
-    * masked lowering.
-    */
-  private def isGlobalDistinctWin(f: String, args: Seq[BoundOperand],
-      parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame]): Boolean =
-    parts.isEmpty && ord.nonEmpty &&
-      distinctWinEligible(f, args, frame) &&
-      frame.forall(fr => !fr.groups && fr.exclude == "none" &&
-        !fr.temporal && fr.lo == Long.MinValue && fr.hi == 0L)
-
   /** The first-occurrence mask: x where this row is the first occurrence
     * of value x within its window partition (in window order), NULL
     * otherwise. count/sum/avg of the mask over a prefix frame ≡ the
@@ -2761,9 +1264,9 @@ object Lowering {
     * ATTACHED as a column before the main window evaluates (Spark
     * rejects nested window expressions).
     */
-  private def distinctMaskColumn(args: Seq[BoundOperand],
+  private[sql] def distinctMaskColumn(args: Seq[BoundOperand],
       parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      opLower: BoundOperand => Column, colOf: BoundCol => Column): Column = {
+      opLower: BoundOperand => Column): Column = {
     val x = opLower(args.head)
     val wf0 = org.apache.spark.sql.expressions.Window
       .partitionBy(parts.map(opLower) :+ x: _*)
@@ -2848,6 +1351,33 @@ object Lowering {
       if (fr.groups || fr.range) w1.rangeBetween(tb(fr.lo), tb(fr.hi))
       else w1.rowsBetween(fr.lo, fr.hi)
     }
+    // the TRUE-reversed order spec (direction AND null placement flip)
+    // for tie-safe RANGE whole-tail suffixes — see exclusionCol
+    def wRev =
+      if (ord.nonEmpty && !frame.exists(_.groups) && !temporalRange)
+        Some(w0.orderBy(ord.map { case (op, dir) =>
+          sortCol(opLower(op), Ast.SortDir(!dir.desc,
+            Some(!dir.nullsFirst.getOrElse(false)))) }: _*))
+      else None
+    framedWindowColumn(f, args, frame, w, w1,
+      parts.map(opLower) ++ ord.map(o => opLower(o._1)), opLower,
+      distinctMask, wRev)
+  }
+
+  /** The window function `f(args)` over the framed spec `w` (`w1`: the
+    * same spec unframed, `pwKeys`: the peer-group keys and `revOrd` the
+    * reversed spec, both only for frame exclusion — see exclusionCol).
+    * Shared by windowColumn and the bucketed halo (GlobalWindows), which
+    * passes its in-bucket spec and peer keys.
+    */
+  private[sql] def framedWindowColumn(f: String, args: Seq[BoundOperand],
+      frame: Option[Ast.WinFrame],
+      w: org.apache.spark.sql.expressions.WindowSpec,
+      w1: org.apache.spark.sql.expressions.WindowSpec,
+      pwKeys: => Seq[Column], opLower: BoundOperand => Column,
+      distinctMask: Option[Column] = None,
+      revOrd: => Option[org.apache.spark.sql.expressions.WindowSpec] = None)
+      : Column = {
     // DISTINCT arrives as a sentinel trailing argument. Prefix frames
     // (the scale-relevant shape) take the masked-running path: an
     // ordinary count/sum/avg over the pre-attached first-occurrence
@@ -2953,18 +1483,8 @@ object Lowering {
     val exclMode = frame.filter(fr => fr.lo <= 0L && fr.hi >= 0L)
       .map(_.exclude).getOrElse("none")
     if (exclMode == "none") fn.over(w)
-    else {
-      // the TRUE-reversed order spec (direction AND null placement
-      // flip) for tie-safe RANGE whole-tail suffixes — see exclusionCol
-      val wRev =
-        if (ord.nonEmpty && !frame.exists(_.groups) && !temporalRange)
-          Some(w0.orderBy(ord.map { case (op, dir) =>
-            sortCol(opLower(op), Ast.SortDir(!dir.desc,
-              Some(!dir.nullsFirst.getOrElse(false)))) }: _*))
-        else None
-      exclusionCol(f, argsR.headOption.map(opLower), frame.get, w, w1,
-        parts.map(opLower) ++ ord.map(o => opLower(o._1)), exclMode, wRev)
-    }
+    else exclusionCol(f, argsR.headOption.map(opLower), frame.get, w, w1,
+      pwKeys, exclMode, revOrd)
   }
 
   /** Frame-exclusion lowering, shared by the dedicated window path and
@@ -3497,7 +2017,7 @@ object Lowering {
         // lazy local checkpoint: the bucketing feeds both the in-bucket
         // windows and the per-bucket totals — RangePartitioner's
         // RDD-id-seeded boundary sampling must not run twice (see
-        // attachGlobalOrderedWins)
+        // materializeOnce)
         val bucketed = materializeOnce(unioned
           .repartitionByRange(nParts, ordExprs: _*)
           .withColumn(pidN, spark_partition_id()))
@@ -3509,59 +2029,13 @@ object Lowering {
           .orderBy(col(pidN).asc)
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding, -1L)
-        // per node: (running columns in-bucket, per-bucket totals,
-        // exclusive-prefix offsets, final combiner over run+off columns)
-        def runN(j: Int, c: String) = s"${name}_run${j}_$c"
-        def totN(j: Int, c: String) = s"${name}_tot${j}_$c"
-        def offN(j: Int, c: String) = s"${name}_off${j}_$c"
-        val parts: Seq[(Seq[Column], Seq[Column], Seq[Column], Column)] =
-          nodes.zipWithIndex.map { case ((f, _), j) =>
-            val a = col(s"${name}_a$j")
-            f match {
-              case "count" => (
-                Seq(count(a).over(wB).as(runN(j, "c"))),
-                Seq(count(a).as(totN(j, "c"))),
-                Seq(sum(col(totN(j, "c"))).over(wP).as(offN(j, "c"))),
-                coalesce(col(offN(j, "c")), lit(0L)) + col(runN(j, "c")))
-              case "sum" => (
-                Seq(sum(a).over(wB).as(runN(j, "s"))),
-                Seq(sum(a).as(totN(j, "s"))),
-                Seq(sum(col(totN(j, "s"))).over(wP).as(offN(j, "s"))),
-                coalesce(col(offN(j, "s")) + col(runN(j, "s")),
-                  col(offN(j, "s")), col(runN(j, "s"))))
-              case "min" => (
-                Seq(min(a).over(wB).as(runN(j, "m"))),
-                Seq(min(a).as(totN(j, "m"))),
-                Seq(min(col(totN(j, "m"))).over(wP).as(offN(j, "m"))),
-                least(col(offN(j, "m")), col(runN(j, "m"))))
-              case "max" => (
-                Seq(max(a).over(wB).as(runN(j, "m"))),
-                Seq(max(a).as(totN(j, "m"))),
-                Seq(max(col(totN(j, "m"))).over(wP).as(offN(j, "m"))),
-                greatest(col(offN(j, "m")), col(runN(j, "m"))))
-              case "avg" => (
-                Seq(sum(a).over(wB).as(runN(j, "s")),
-                  count(a).over(wB).as(runN(j, "c"))),
-                Seq(sum(a).as(totN(j, "s")), count(a).as(totN(j, "c"))),
-                Seq(sum(col(totN(j, "s"))).over(wP).as(offN(j, "s")),
-                  sum(col(totN(j, "c"))).over(wP).as(offN(j, "c"))),
-                {
-                  val cnt = coalesce(col(offN(j, "c")), lit(0L)) +
-                    col(runN(j, "c"))
-                  val sm = coalesce(col(offN(j, "s")) + col(runN(j, "s")),
-                    col(offN(j, "s")), col(runN(j, "s")))
-                  when(cnt === 0L, lit(null)).otherwise(
-                    sm.cast("double") / cnt)
-                })
-              case other => sys.error(s"unreachable running aggregate $other")
-            }
-          }
-        val withRun = bucketed.select(col("*") +: parts.flatMap(_._1): _*)
-        val totAggs = parts.flatMap(_._2)
-        val totals = bucketed.groupBy(col(pidN))
-          .agg(totAggs.head, totAggs.tail: _*)
-        val offsets = totals.select(col(pidN) +: parts.flatMap(_._3): _*)
-        withRun.join(broadcast(offsets), Seq(pidN), "left_outer")
+        val parts = nodes.zipWithIndex.map { case ((f, _), j) =>
+          GlobalWindows.running(f, col(s"${name}_a$j"), wB, wP,
+            (p, c) => s"${name}_$p${j}_$c")
+        }
+        GlobalWindows.carry(
+            bucketed.select(col("*") +: parts.flatMap(_._1): _*), bucketed,
+            pidN, parts.flatMap(_._2), parts.flatMap(_._3))
           .select(col("*") +: parts.zipWithIndex.map { case (p, j) =>
             p._4.as(s"${name}_r$j") }: _*)
           .filter(col(tagN))

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * gen_scale.py offsets per replica, so the gates themselves do not
   * grow with the fixture and cannot measure scaling. Each probe wraps
   * its window in a one-row aggregate so Catalyst cannot prune the
-  * window away.
+  * window away; that row prints next to the timings (every distinct
+  * value across the reps), so two builds compare value parity too.
   *
   * Usage: WinScaleProbe <sfDir> [reps]
   */
@@ -77,13 +78,15 @@ object WinScaleProbe {
           "(ORDER BY o_totalprice DESC) AS rk FROM orders) t"))
 
     for ((name, sql) <- probes) {
-      val ts = (1 to reps).map { _ =>
+      val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        db.select(sql).fold(e => sys.error(e.msg), _.collect())
-        (System.nanoTime() - t0) / 1e9
+        val rows = db.select(sql).fold(e => sys.error(e.msg), _.collect())
+        ((System.nanoTime() - t0) / 1e9, rows.map(_.mkString(",")).mkString(";"))
       }
+      val ts = runs.map(_._1)
       println(f"$name%-24s median=${ts.sorted.apply(ts.length / 2)}%6.2f  " +
-        s"all=${ts.map(t => f"$t%.2f").mkString(",")}")
+        s"all=${ts.map(t => f"$t%.2f").mkString(",")}  " +
+        s"value=${runs.map(_._2).distinct.mkString(" | ")}")
     }
     spark.stop()
   }

@@ -5201,6 +5201,35 @@ class DialectSpec extends AnyFunSuite {
       (5, 2, 3, 5), (6, 2, 3, 6), (7, 3, 4, 7), (8, 3, 5, 8)), r.toString)
   }
 
+  test("global windows: a NULL-ordered second key reverses exactly across buckets") {
+    // (a, b) with b ∈ {0, NULL}: unspecified NULL placement is LAST in
+    // both directions, so the reversed order a bucket's halo and
+    // IGNORE NULLS candidates are cut from must flip it to FIRST. 16
+    // rows over 4 shuffle partitions put bucket edges between (a, NULL)
+    // and (a+1, 0), where a NULL-blind reversal picks (a, 0) instead.
+    val db = freshDb()
+    db.query("CREATE TABLE gno (a INT, b INT, v INT)")
+    db.query("INSERT INTO gno VALUES " + (1 to 8).map(a =>
+      s"($a, 0, ${10 * a}), ($a, NULL, ${10 * a + 5})").mkString(", "))
+    for ((ord, as) <- Seq("a, b" -> (1 to 8), "a DESC, b" -> (8 to 1 by -1))) {
+      val r = db.select(s"SELECT a, b, lag(v) OVER (ORDER BY $ord) AS l, " +
+        s"lag(v IGNORE NULLS) OVER (ORDER BY $ord) AS li, " +
+        s"sum(v) OVER (ORDER BY $ord ROWS BETWEEN 1 PRECEDING AND " +
+        "CURRENT ROW) AS s FROM gno").fold(e => fail(e.msg), _.collect())
+        .map(x => ((x.getInt(0), if (x.isNullAt(1)) None else Some(x.getInt(1))),
+          Seq(2, 3, 4).map(i => if (x.isNullAt(i)) None
+            else Some(x.get(i).toString.toLong)))).toMap
+      // the rows in window order and the value each one sees before it
+      val seq = as.flatMap(a => Seq((a, Some(0)) -> 10L * a,
+        (a, None) -> (10L * a + 5)))
+      val expected = seq.zipWithIndex.map { case ((key, v), i) =>
+        val prev = if (i == 0) None else Some(seq(i - 1)._2)
+        key -> Seq(prev, prev, Some(v + prev.getOrElse(0L)))
+      }.toMap
+      assert(r == expected, ord)
+    }
+  }
+
   test("reliable checkpoint: identical results with graft.reliableCheckpoint=true") {
     // the prefix-scan / ghost / carry / fixpoint paths materialize their
     // shared frames through materializeOnce; with the session switch on
