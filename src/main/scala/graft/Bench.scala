@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      // events.ts is parquet timestamp[ns]; Spark has no nanos timestamp —
-      // read as long and let graft.Tables.events() convert to micros.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus("4")
+    val spark = LocalSession(cpus, "WARN")
     // Warm-up: run every query once at the smallest fixture (if present)
     // so JIT + whole-stage-codegen compilation happen outside the timed
     // runs; the timed numbers then measure the operators, not the JVM.

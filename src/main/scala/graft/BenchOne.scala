@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Focused bench for regression attribution: run ONLY the named queries,
   * in the given order, REPS timed passes after one warm-up pass, with the
@@ -13,16 +12,8 @@ object BenchOne {
       .getOrElse(sys.error("usage: BenchOne q_a,q_b[,…] [reps]"))
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus("32")
+    val spark = LocalSession(cpus, "WARN")
     val qs = names.map(n => n -> SparkEntry.queries(n))
     def releaseCaches(): Unit = {
       graft.queries.Dedup.releaseShingles(spark)

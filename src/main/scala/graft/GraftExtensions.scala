@@ -37,8 +37,12 @@ object GraftExtensions {
       "graft_md5p60", exprs => Md5Prefix60(exprs(0)), "built-in")
   }
 
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  /** Sessions already registered — held weakly, so a session the caller
+    * drops is not kept reachable by having been passed to `ensure`.
+    */
+  private val registered = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
 
   /** Idempotent per-session registration for library call sites whose
     * expr() strings reference graft functions.

@@ -126,9 +126,12 @@ object Analyzer {
     final case class BOut(name: String, tpe: SqlType) extends BoundOperand
     /** Ordered aggregate: string_agg(v, sep ORDER BY keys) — the keys'
       * shared direction rides on each pair (analyzer enforces equality).
+      * The carrier of every call form but the plain one (see
+      * [[Aggregates.Syntax]]); `distinct` = string_agg/array_agg(DISTINCT …).
       */
     final case class BOrderedAgg(func: String, arg: BoundOperand, sep: String,
-        order: Seq[(BoundOperand, Boolean)]) extends BoundOperand
+        order: Seq[(BoundOperand, Boolean)], distinct: Boolean = false)
+      extends BoundOperand
 
     /** A scalar subquery as a general operand (inside arithmetic /
       * functions / CASE values). Uncorrelated: one broadcast 1-row
@@ -360,7 +363,7 @@ object Analyzer {
     case BoundOperand.BCol(c)         => Seq(c)
     case BoundOperand.BArith(_, l, r) => operandColsDeep(l) ++ operandColsDeep(r)
     case BoundOperand.BAgg(_, arg, _) => arg.toSeq.flatMap(operandColsDeep)
-    case BoundOperand.BOrderedAgg(_, arg, _, ord) =>
+    case BoundOperand.BOrderedAgg(_, arg, _, ord, _) =>
       operandColsDeep(arg) ++ ord.flatMap(k => operandColsDeep(k._1))
     case BoundOperand.BFunc(_, args)  => args.flatMap(operandColsDeep)
     case BoundOperand.BCast(x, _)     => operandColsDeep(x)
@@ -1237,31 +1240,11 @@ object Analyzer {
     case BoundOperand.BLambda(_, b)    => operandType(b)
     case BoundOperand.BLambdaVar(_, t) => t
     case BoundOperand.BTryCast(_, t)   => t
-    case BoundOperand.BAgg(f, arg, _) => aggType(f, arg)
+    case BoundOperand.BAgg(f, arg, _) => aggType(f, arg.toSeq)
     case BoundOperand.BCast(_, t) => t
     case BoundOperand.BOut(_, t)  => t
-    case BoundOperand.BOrderedAgg("string_agg" | "string_agg_distinct",
-      _, _, _) => SqlType.SqlVarChar(65535)
-    case BoundOperand.BOrderedAgg("percentile_cont_list", _, _, _) =>
-      SqlType.SqlArray(SqlType.SqlDouble)
-    case BoundOperand.BOrderedAgg("percentile_disc_list", _, _, _) =>
-      SqlType.SqlArray(SqlType.SqlDouble) // BCast re-types to the arg type
-    case BoundOperand.BOrderedAgg("count_distinct", _, _, _) => SqlType.SqlBigInt
-    case BoundOperand.BOrderedAgg("bitstring_agg", _, _, _) =>
-      SqlType.SqlVarChar(65535)
-    case BoundOperand.BOrderedAgg("regr_count", _, _, _) => SqlType.SqlBigInt
-    case BoundOperand.BOrderedAgg("regr_slope" | "regr_intercept" |
-        "regr_r2" | "regr_avgx" | "regr_avgy" | "regr_sxx" | "regr_sxy" |
-        "regr_syy", _, _, _) => SqlType.SqlDouble
-    case BoundOperand.BOrderedAgg("corr" | "covar_pop" | "covar_samp" |
-        "percentile_cont", _, _, _) => SqlType.SqlDouble
-    case BoundOperand.BOrderedAgg("array_agg" | "array_agg_distinct",
-        arg, _, _) =>
-      SqlType.SqlArray(operandType(arg))
-    case BoundOperand.BOrderedAgg("min_topn" | "max_topn" |
-        "arg_min_topn" | "arg_max_topn", arg, _, _) =>
-      SqlType.SqlArray(operandType(arg)) // top-n LIST variants
-    case BoundOperand.BOrderedAgg(_, arg, _, _) => operandType(arg) // arg_min/max
+    // percentile_disc(_list) BCasts re-type to the argument's type
+    case BoundOperand.BOrderedAgg(f, arg, _, _, _) => aggType(f, Seq(arg))
   }
 
   /** DuckDB parity: CAST(<float/decimal> AS <integer type>) ROUNDS
@@ -1383,37 +1366,12 @@ object Analyzer {
       })
     }
 
-  /** The output type of a window item (shared by derived-table schema
-    * derivation and QUALIFY alias resolution).
+  /** The output type of an aggregate call or window item (window
+    * arguments may carry trailing sentinels; entries type from the
+    * leading ones).
     */
-  private def winItemType(f: String, args: Seq[BoundOperand]): SqlType = f match {
-    case "row_number" | "rank" | "dense_rank" | "ntile" => SqlType.SqlInt
-    case "string_agg" => SqlType.SqlVarChar(65535)
-    case "array_agg"  => SqlType.SqlArray(operandType(args.head))
-    case "percent_rank" | "cume_dist" => SqlType.SqlDouble
-    case "lag" | "lead" | "first_value" | "last_value" | "nth_value" => operandType(args.head)
-    case other => aggType(other, args.headOption)
-  }
-
-  private def aggType(f: String, arg: Option[BoundOperand]): SqlType = f match {
-    case "count"    => SqlType.SqlBigInt
-    case "grouping" => SqlType.SqlInt
-    case "avg" | "stddev" | "variance" | "median" |
-         "skewness" | "kurtosis" | "entropy" | "mad" |
-         "product" | "fsum" | "favg" | "sem" |
-         "stddev_pop" | "stddev_samp" | "var_pop" | "var_samp" |
-         "kurtosis_pop" => SqlType.SqlDouble
-    case "approx_count_distinct" => SqlType.SqlBigInt
-    case "histogram" =>
-      SqlType.SqlMap(arg.map(operandType).getOrElse(SqlType.SqlInt),
-        SqlType.SqlBigInt)
-    case "sum" => arg.map(operandType) match {
-      case Some(SqlType.SqlDouble) => SqlType.SqlDouble
-      case Some(SqlType.SqlDecimal(_, sc)) => SqlType.SqlDecimal(38, sc)
-      case _                       => SqlType.SqlBigInt
-    }
-    case _ => arg.map(operandType).getOrElse(SqlType.SqlBigInt) // min/max
-  }
+  private def aggType(f: String, args: Seq[BoundOperand]): SqlType =
+    Aggregates(f).result(args, operandType)
 
   /** The output attributes of a bound subquery used as a derived table.
     * Names must be explicit and unique: a plain column keeps its name,
@@ -1439,11 +1397,11 @@ object Analyzer {
       val named: Either[AnalyzerError, (String, SqlType)] = it match {
         case BoundItem.BICol(c, a)    => Right((a.getOrElse(c.attr.name), c.attr.sqlType))
         case BoundItem.BIExpr(op, a)  => Right((a, operandType(op)))
-        case BoundItem.BIAgg(f, arg, Some(a), _) => Right((a, aggType(f, arg)))
+        case BoundItem.BIAgg(f, arg, Some(a), _) => Right((a, aggType(f, arg.toSeq)))
         case BoundItem.BIAgg(f, _, None, _) =>
           Left(BadSubquery(s"derived-table column $f(…) needs an AS name"))
         case BoundItem.BIWin(f, args, _, _, a, _) =>
-          Right((a, winItemType(f, args)))
+          Right((a, aggType(f, args)))
         case BoundItem.BISub(sub, a, _, _, _) => Right((a, scalarOutputType(sub)))
       }
       named match {
@@ -1463,13 +1421,8 @@ object Analyzer {
   private def scalarOutputType(sub: BoundSelect): SqlType = sub.projection.head match {
     case BoundItem.BICol(c, _)         => c.attr.sqlType
     case BoundItem.BIExpr(op, _)       => operandType(op)
-    case BoundItem.BIAgg(f, arg, _, _) => aggType(f, arg)
-    case BoundItem.BIWin(f, args, _, _, _, _) => f match {
-      case "row_number" | "rank" | "dense_rank" | "ntile" => SqlType.SqlInt
-      case "percent_rank" | "cume_dist" => SqlType.SqlDouble
-      case "lag" | "lead" | "first_value" | "last_value" | "nth_value" => operandType(args.head)
-      case other => aggType(other, args.headOption)
-    }
+    case BoundItem.BIAgg(f, arg, _, _) => aggType(f, arg.toSeq)
+    case BoundItem.BIWin(f, args, _, _, _, _) => aggType(f, args)
     case BoundItem.BISub(inner, _, _, _, _) => scalarOutputType(inner)
   }
 
@@ -2908,11 +2861,7 @@ object Analyzer {
             !excl.exists(_.equalsIgnoreCase(r.name)))
         if (kept.isEmpty)
           return Left(BadFunction(s"$f(COLUMNS(…)) matched no columns"))
-        val aggNames = Set("count", "sum", "min", "max", "avg", "stddev",
-          "variance", "median", "mode", "bool_and", "bool_or", "bit_and",
-          "bit_or", "bit_xor", "skewness", "kurtosis", "entropy", "mad",
-          "histogram", "product")
-        if (aggNames(f)) {
+        if (Aggregates.syntaxOf(f).contains(Aggregates.Syntax.Plain)) {
           if (extra.nonEmpty)
             return Left(BadFunction(
               s"$f(COLUMNS(…)) takes no extra arguments"))
@@ -3090,7 +3039,7 @@ object Analyzer {
       case Operand.DefaultVal => Left(BadFunction(
         "DEFAULT is only valid as a plain item of INSERT … VALUES"))
       case Operand.AggCall(f, arg, dist) if allowAgg =>
-        if (dist && f != "count" && f != "sum" && f != "avg")
+        if (dist && !Aggregates(f).distinct)
           Left(BadAggregate(s"$f(DISTINCT ...) is not supported"))
         else arg match {
           case None    => Right(BoundOperand.BAgg(f, None, dist))
@@ -3143,50 +3092,35 @@ object Analyzer {
             bsub.limit.exists(_ <= 1L)
         } yield BoundOperand.BSubVal(bsub, guard = !staticOne, pairs)
       case Operand.OrderedAgg(f, arg, sep, ord, dist) if allowAgg =>
+        val d = Aggregates(f)
         for {
           barg <- bindOp(arg, allowAgg = false)
+          _ <- (d.arg, operandType(barg)) match {
+            case (Aggregates.ArgType.Text, t) if !t.isInstanceOf[SqlType.SqlVarChar] =>
+              Left(BadAggregate(
+                s"$f aggregates strings — CAST the argument (got ${t.render})"))
+            case (Aggregates.ArgType.Numeric, t) if !numericTypes(t) =>
+              Left(BadAggregate(s"$f takes a numeric argument (got ${t.render})"))
+            case _ => Right(())
+          }
+          // DISTINCT dedups VALUES, so a collect's sort key must BE the
+          // value — any other key is ambiguous (which key survives per
+          // value?)
           _ <-
-            if (f != "string_agg" ||
-                operandType(barg).isInstanceOf[SqlType.SqlVarChar]) Right(())
-            else Left(BadAggregate(
-              s"$f aggregates strings — CAST the argument (got ${operandType(barg).render})"))
-          // DISTINCT dedups VALUES, so the sort key must BE the value —
-          // any other key is ambiguous (which key survives per value?)
-          _ <-
-            if (!dist || f == "count_distinct") Right(()) // inherent
-            else if (f != "string_agg" && f != "array_agg")
+            if (!dist) Right(())
+            else if (!d.distinct)
               Left(BadAggregate(s"$f(DISTINCT …) is not supported"))
-            else if (ord.length == 1 && ord.head._1 == arg) Right(())
+            else if (d.syntax != Aggregates.Syntax.Collect ||
+                (ord.length == 1 && ord.head._1 == arg)) Right(())
             else Left(BadAggregate(
               s"$f(DISTINCT x …) requires ORDER BY x (the value itself)"))
           bord <- ord.foldLeft[Either[AnalyzerError, Vector[(BoundOperand, Boolean)]]](
             Right(Vector.empty)) { case (acc, (k, d)) =>
             acc.flatMap(v => bindOp(k, allowAgg = false).map(b => v :+ (b -> d)))
           }
-          _ <-
-            if (f != "percentile_disc" && f != "percentile_disc_list" &&
-                f != "percentile_cont_list") Right(())
-            else operandType(barg) match {
-              case SqlType.SqlBigInt | SqlType.SqlInt | SqlType.SqlSmallInt |
-                   SqlType.SqlDouble | SqlType.SqlReal |
-                   SqlType.SqlDecimal(_, _) => Right(())
-              case t => Left(BadAggregate(
-                s"$f takes a numeric argument (got ${t.render})"))
-            }
         } yield {
-          val node = BoundOperand.BOrderedAgg(
-            if (dist && (f == "string_agg" || f == "array_agg"))
-              s"${f}_distinct"
-            else f, barg, sep, bord)
-          // discrete percentile returns one of the ARGUMENT's values;
-          // Spark's PercentileDisc computes in double, so cast back to
-          // the argument type (DuckDB returns the input type) — exact,
-          // since the selected value IS an input value
-          if (f == "percentile_disc")
-            BoundOperand.BCast(node, operandType(barg))
-          else if (f == "percentile_disc_list")
-            BoundOperand.BCast(node, SqlType.SqlArray(operandType(barg)))
-          else node
+          val node = BoundOperand.BOrderedAgg(f, barg, sep, bord, dist)
+          if (d.recast) BoundOperand.BCast(node, aggType(f, Seq(barg))) else node
         }
       case Operand.OrderedAgg(f, _, _, _, _) =>
         Left(BadAggregate(s"$f(...) is not valid in this context"))
@@ -3768,16 +3702,11 @@ object Analyzer {
         }
       case SelectItem.SAgg(f, None, a, dist) => Right(BoundItem.BIAgg(f, None, a, dist))
       case SelectItem.SAgg(f, Some(r), a, dist) =>
-        if (dist && f != "count" && f != "sum" && f != "avg")
+        if (dist && !Aggregates(f).distinct)
           Left(BadAggregate(s"$f(DISTINCT ...) is not supported"))
         else bindOp(r, allowAgg = false).flatMap { b =>
-          val numericAgg =
-            Set("sum", "avg", "stddev", "variance", "median",
-              "skewness", "kurtosis", "mad", "product", "fsum", "favg",
-              "sem", "stddev_pop", "stddev_samp", "var_pop", "var_samp",
-              "kurtosis_pop")(f)
           val badCol = b match {
-            case BoundOperand.BCol(c) if numericAgg &&
+            case BoundOperand.BCol(c) if Aggregates(f).numeric &&
               !numericTypes(c.attr.sqlType) => Some(c)
             case _ => None
           }
@@ -3794,10 +3723,9 @@ object Analyzer {
         // post-binding (rejected in aggregate scope)
         bindOp(op, allowAgg = true, allowSub = true).map(BoundItem.BIExpr(_, a))
       case SelectItem.SWin(f, args0, parts, ord, a, frame, _) =>
-        val ranking = Set("row_number", "rank", "dense_rank",
-          "ntile", "percent_rank", "cume_dist")(f)
-        val shifting = f == "lag" || f == "lead"
-        val positional = f == "first_value" || f == "last_value" || f == "nth_value"
+        val d = Aggregates(f)
+        val noFrame = d.kind == Aggregates.Kind.Ranking ||
+          d.kind == Aggregates.Kind.Shift
         // DISTINCT rides as a sentinel trailing argument (count/sum/
         // avg(DISTINCT x) OVER): strip before arity checks, re-append
         // after binding — the lowering folds a per-frame collect_set
@@ -3809,67 +3737,27 @@ object Analyzer {
         val ignoreNulls = args1.lastOption.contains(
           Operand.Literal(Lit.LitString(IgnoreNullsSentinel)))
         val args = if (ignoreNulls) args1.dropRight(1) else args1
+        val argErr = d.winArgs(args)
         for {
           _ <-
-            if (ignoreNulls && !shifting && !positional)
+            if (ignoreNulls && d.kind != Aggregates.Kind.Shift &&
+                d.kind != Aggregates.Kind.Positional)
               Left(BadFunction(s"$f does not take IGNORE NULLS"))
-            else if (f == "grouping")
-              Left(BadFunction("grouping() is not a window function"))
-            else if (f == "skewness" || f == "kurtosis" ||
-                f == "entropy" || f == "mad" || f == "histogram" ||
-                f == "product" || f == "sem")
+            else if (d.kind == Aggregates.Kind.GroupOnly)
               Left(BadFunction(
                 s"$f is not supported in window position (group scope only)"))
-            else if ((ranking || shifting) && ord.isEmpty)
+            // ranking, shifts and the windowed collects need an order (an
+            // unordered distributed collect would be nondeterministic)
+            else if ((noFrame || d.ordered) && ord.isEmpty)
               Left(BadFunction(s"$f requires ORDER BY in its OVER clause"))
-            else if (f == "ntile" && !(args.length == 1 && (args.head match {
-              case Operand.Literal(Lit.LitLong(n)) => n > 0
-              case _ => false
-            })))
-              Left(BadFunction("ntile takes one positive integer literal"))
-            else if (ranking && f != "ntile" && args.nonEmpty)
-              Left(BadFunction(s"$f() takes no arguments"))
-            else if (shifting && (args.isEmpty || args.length > 3))
-              Left(BadFunction(s"$f takes a value, an optional offset and an optional default"))
-            else if (shifting && args.length >= 2 && !(args(1) match {
-              case Operand.Literal(Lit.LitLong(_)) => true
-              case _ => false
-            }))
-              Left(BadFunction(s"$f offset must be an integer literal"))
-            else if (shifting && args.length == 3 && !args(2).isInstanceOf[Operand.Literal])
-              Left(BadFunction(s"$f default must be a literal"))
-            else if (f == "nth_value" && !(args.length == 2 && (args(1) match {
-              case Operand.Literal(Lit.LitLong(n)) => n > 0
-              case _ => false
-            })))
+            else if (d.unordered && (ord.nonEmpty || frame.isDefined))
               Left(BadFunction(
-                "nth_value takes a value and a positive integer literal"))
-            else if (positional && f != "nth_value" && args.length != 1)
-              Left(BadFunction(s"$f takes exactly one argument"))
-            // windowed ordered aggregates: value (+ separator literal
-            // for string_agg, carried as a trailing argument); the OVER
-            // clause MUST order — an unordered distributed collect
-            // would be nondeterministic
-            else if ((f == "string_agg" || f == "array_agg") && ord.isEmpty)
-              Left(BadFunction(
-                s"windowed $f requires ORDER BY in its OVER clause"))
-            else if (f == "string_agg" && !(args.length == 2 && (args(1) match {
-              case Operand.Literal(Lit.LitString(_)) => true
-              case _ => false
-            })))
-              Left(BadFunction(
-                "string_agg takes a value and a literal separator"))
-            else if (f == "array_agg" && args.length != 2) // value + '' sep
-              Left(BadFunction("array_agg takes one argument"))
-            else if (!ranking && !shifting && !positional && args.isEmpty && f != "count")
-              Left(BadFunction(s"windowed $f requires an argument"))
-            else if (!ranking && !shifting && !positional &&
-                f != "string_agg" && f != "array_agg" && args.length > 1)
-              Left(BadFunction(s"windowed $f takes one argument"))
+                s"$f takes neither ORDER BY nor a frame in its OVER clause"))
+            else if (argErr.isDefined) Left(BadFunction(argErr.get))
             // an explicit frame needs an order, and only makes sense
             // for aggregates and first/last_value (SQL ignores it for
             // ranking and shift functions — reject rather than ignore)
-            else if (frame.isDefined && (ranking || shifting))
+            else if (frame.isDefined && noFrame)
               Left(BadFunction(s"$f does not take a window frame"))
             else if (frame.isDefined && ord.isEmpty)
               Left(BadFunction("a window frame requires ORDER BY in the OVER clause"))
@@ -3900,8 +3788,7 @@ object Analyzer {
           // RANGE frame (under ROWS a peer group can straddle the frame
           // boundary) and an ORDER BY (peers are order-key equals)
           _ <-
-            if (frame.exists(_.exclude != "none") &&
-                !Set("sum", "count", "avg", "min", "max")(f))
+            if (frame.exists(_.exclude != "none") && !d.decomposable)
               Left(BadFunction(
                 s"EXCLUDE supports sum/count/avg/min/max (got $f)"))
             else if (frame.exists(fr =>
@@ -3923,7 +3810,7 @@ object Analyzer {
               Left(BadFunction(
                 "INTERVAL RANGE bounds require a single date/timestamp " +
                   "ORDER BY key"))
-            else if (Set("min", "max")(f) &&
+            else if (d.kind == Aggregates.Kind.Extremum &&
                 frame.exists(fr => fr.exclude != "none" && fr.range) &&
                 !(ord.length == 1 && (bord.headOption.map(b =>
                   operandType(b._1)) match {
@@ -4037,7 +3924,7 @@ object Analyzer {
                 case _ => Nil
               }
               nodes.find { case (f, dist) =>
-                dist || !Set("sum", "count", "avg", "min", "max")(f)
+                dist || !Aggregates(f).decomposable
               } match {
                 case Some((f, _)) => Left(BadSubquery(
                   "an inequality-correlated scalar subquery supports " +
@@ -4060,7 +3947,7 @@ object Analyzer {
       _ <- Right {
         hiddenWinScope = qwins.collect {
           case BoundItem.BIWin(f, wargs, _, _, a, _) =>
-            a.toLowerCase -> winItemType(f, wargs)
+            a.toLowerCase -> aggType(f, wargs)
         }.toMap
       }
       proj <- projItems.foldLeft[Either[AnalyzerError, Vector[BoundItem]]](Right(Vector.empty)) {
@@ -4521,7 +4408,7 @@ object Analyzer {
           }
           val winTypes: Map[String, SqlType] = (proj ++ qwins).collect {
             case BoundItem.BIWin(f, wargs, _, _, a, _) =>
-              a.toLowerCase -> winItemType(f, wargs)
+              a.toLowerCase -> aggType(f, wargs)
           }.toMap
           if (winTypes.isEmpty)
             Left(BadFunction(
@@ -4725,7 +4612,7 @@ object Analyzer {
               BoundOperand.exprOperands(c).exists(inOp) || inOp(v) } ||
               els.exists(inOp)
           case BoundOperand.BAgg(_, a, _)      => a.exists(inOp)
-          case BoundOperand.BOrderedAgg(_, a, _, ks) =>
+          case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
             inOp(a) || ks.exists(k => inOp(k._1))
           case _ => false
         }
@@ -4779,7 +4666,7 @@ object Analyzer {
                   BoundOperand.exprOperands(cc).exists(c) || c(v) } ||
                   els.exists(c)
               case BoundOperand.BAgg(_, a, _)   => a.exists(c)
-              case BoundOperand.BOrderedAgg(_, a, _, ks) =>
+              case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
                 c(a) || ks.exists(k => c(k._1))
               case _ => false
             }
@@ -4788,7 +4675,7 @@ object Analyzer {
         // inside an aggregate's ARGUMENT (any nesting) = bad
         def inAggArg(o: BoundOperand): Boolean = o match {
           case BoundOperand.BAgg(_, a, _) => a.exists(contains)
-          case BoundOperand.BOrderedAgg(_, a, _, ks) =>
+          case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
             contains(a) || ks.exists(k => contains(k._1))
           case BoundOperand.BArith(_, l, r) => inAggArg(l) || inAggArg(r)
           case BoundOperand.BFunc(_, as)    => as.exists(inAggArg)

@@ -5,8 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential-fuzz dump: generate FuzzGen's fixture + N random queries,
   * run them through the dialect engine, and write
   *   outDir/script.sql     — the shared DDL/INSERT script
@@ -52,12 +50,7 @@ object FuzzDump {
     val outDir = Paths.get(if (args.length > 2) args(2) else "/tmp/fuzz_out")
     Files.createDirectories(outDir)
 
-    val spark = SparkSession.builder()
-      .appName("graft-fuzz").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("8", "WARN")
 
     val db = new GraftDatabase(spark,
       Files.createTempDirectory("graft-fuzz-wh").toString)

@@ -128,8 +128,9 @@ private[sql] object GlobalWindows {
     val dist = trailing(Ast.DistinctSentinel)
     val argsR = if (ign || dist) args.dropRight(1) else args
     val plain = !sentinel(args)
-    val agg5 = Set("count", "sum", "avg", "min", "max")(f)
-    val distAgg = dist && Set("count", "sum", "avg", "mean")(f)
+    val d = Aggregates(f)
+    val agg5 = d.decomposable
+    val distAgg = dist && d.kind == Aggregates.Kind.Running
     val exclNone = frame.exists(_.exclude == "none")
     def unbounded(fr: Ast.WinFrame) = !fr.temporal &&
       fr.lo == Long.MinValue && fr.hi == Long.MaxValue
@@ -145,34 +146,31 @@ private[sql] object GlobalWindows {
       fr.lo >= -HaloCap && fr.hi <= HaloCap && fr.lo <= fr.hi)
     def bucketed(kind: Kind): Option[Req] =
       Some(Bucketed(ord, ord.map { case (o, d) => (opLower(o), d) }, kind))
-    def avgName = if (f == "mean") "avg" else f
     if (parts.nonEmpty) None
     else if (!ign && ((ord.isEmpty && frame.isEmpty) ||
         frame.exists(fr => unbounded(fr) && fr.exclude == "none")) &&
-        (agg5 || (dist && f == "mean")) && !sentinel(argsR) &&
+        agg5 && !sentinel(argsR) &&
         (if (dist) argsR.lengthCompare(1) == 0 else argsR.lengthCompare(1) <= 0))
-      Some(Whole(name, wholeAgg(f, argsR, dist, opLower)))
+      Some(Whole(name, Aggregates.lower(f, Aggregates.Call(argsR, dist), opLower)))
     else if (ord.isEmpty) None
-    else if (plain && (Set("row_number", "rank", "dense_rank",
-        "percent_rank", "cume_dist")(f) ||
-        (f == "ntile" && literal(args.headOption).exists(_ > 0)) ||
+    else if (plain && (d.kind == Aggregates.Kind.Ranking ||
         (agg5 && prefix(ahead = false))))
       bucketed(Scan(name, f, args.headOption.map(opLower), frame))
     else if (distAgg && prefix(ahead = true))
-      bucketed(Scan(name, avgName, None, frame,
+      bucketed(Scan(name, f, None, frame,
         Some(Lowering.distinctMaskColumn(args, Nil, ord, opLower))))
-    else if ((f == "lag" || f == "lead") && (plain || (ign &&
+    else if (d.kind == Aggregates.Kind.Shift && (plain || (ign &&
         !sentinel(argsR))) && offset.exists(n => n >= (if (ign) 1 else 0)))
       bucketed(Shift(name, f, opLower(argsR.head), Lowering.shiftOffset(argsR),
         Lowering.shiftDefaultAny(argsR), ign))
     else if (boundedRows && ((agg5 && plain) || (distAgg && exclNone) ||
         (!dist && !sentinel(argsR) && exclNone &&
-          ((Set("first_value", "last_value")(f) && argsR.length == 1) ||
-            (f == "nth_value" && literal(argsR.lift(1)).exists(_ > 0))))))
+          d.kind == Aggregates.Kind.Positional)))
       bucketed(framedWin(name, f, args, frame.get, opLower))
     else if (agg5 && plain && frame.exists(fr => unbounded(fr) &&
         !fr.groups && fr.exclude != "none") &&
-        (!(Set("min", "max")(f) && frame.exists(_.range)) || ord.length == 1))
+        (!(d.kind == Aggregates.Kind.Extremum && frame.exists(_.range)) ||
+          ord.length == 1))
       bucketed(WholeExclude(name, f, args.headOption.map(opLower), frame.get))
     else None
   }
@@ -784,28 +782,5 @@ private[sql] object GlobalWindows {
           Seq("c", "s", "m").map(c => s"${tag}_t${j}_$c") ++
           Seq("pc", "sc", "ps", "ss", "p", "s").map(c => s"${tag}_f${j}_$c"))
     joined.select(col("*") +: finals: _*).drop(dropNames: _*)
-  }
-
-  /** The 1-row aggregate of a whole-input item (`argsR` without the
-    * DISTINCT sentinel): DISTINCT takes the distinct aggregate forms
-    * (min/max DISTINCT are the plain ones).
-    */
-  private def wholeAgg(f: String, argsR: Seq[BoundOperand], dist: Boolean,
-      opLower: BoundOperand => Column): Column = {
-    lazy val x = opLower(argsR.head)
-    (f, dist) match {
-      case ("count", false) =>
-        if (argsR.isEmpty) count(lit(1)) else count(x)
-      case ("count", true)        => count_distinct(x)
-      case ("sum", false)         => sum(x)
-      case ("sum", true)          => sum_distinct(x)
-      case ("avg" | "mean", true) =>
-        // all-NULL input → 0 distinct values → NULL, never a divide
-        val c = count_distinct(x)
-        when(c === 0L, lit(null)).otherwise(sum_distinct(x) / c)
-      case ("avg", false)         => avg(x)
-      case ("min", _)             => min(x)
-      case _                      => max(x)
-    }
   }
 }

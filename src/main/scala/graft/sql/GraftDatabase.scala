@@ -3,6 +3,7 @@ package graft.sql
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -1158,7 +1159,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     * by construction; >10k distinct values is an error, not a plan.
     */
   private def pivotStmt(t: Ast.PivotTree): Either[QueryError, QueryResult] = {
-    import org.apache.spark.sql.functions.{avg, col, count, lit, max, min, sum}
+    import org.apache.spark.sql.functions.col
     readableDesc(t.table).flatMap { desc =>
       def need(c: String): Either[QueryError, String] =
         desc.attr(c).map(_.name).toRight(AnalyzeFailed(UnboundAttribute(c)))
@@ -1166,15 +1167,17 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         onC <- need(t.on)
         gbC <- t.groupBy.foldLeft[Either[QueryError, Vector[String]]](
           Right(Vector.empty)) { (acc, c) => acc.flatMap(v => need(c).map(v :+ _)) }
-        aggc <- (t.aggFunc, t.aggCol) match {
-          case ("count", None)    => Right(count(lit(1)))
-          case ("count", Some(c)) => need(c).map(n => count(col(n)))
-          case ("sum", Some(c))   => need(c).map(n => sum(col(n)))
-          case ("min", Some(c))   => need(c).map(n => min(col(n)))
-          case ("max", Some(c))   => need(c).map(n => max(col(n)))
-          case ("avg", Some(c))   => need(c).map(n => avg(col(n)))
-          case (f, _) => Left(AnalyzeFailed(BadFunction(
-            s"PIVOT USING takes sum/count/min/max/avg, got $f")))
+        arg <- t.aggCol.fold[Either[QueryError, Seq[BoundOperand]]](Right(Nil))(c =>
+          desc.attr(c).map(a => Seq(BoundOperand.BCol(BoundCol(desc.name, a))))
+            .toRight(AnalyzeFailed(UnboundAttribute(c))))
+        // a decomposable aggregate (count(*) the only argument-less one),
+        // through the catalog's lowering
+        aggc <- Aggregates.lookup(t.aggFunc)
+            .filter(d => d.decomposable && (arg.nonEmpty || d.name == "count")) match {
+          case Some(d) => Right(d.lower(Aggregates.Call(arg),
+            Lowering.lowerOperandWith(_, bc => col(bc.attr.name)), identity))
+          case None => Left(AnalyzeFailed(BadFunction(
+            s"PIVOT USING takes sum/count/min/max/avg, got ${t.aggFunc}")))
         }
       } yield {
         val df = readTable(desc)
@@ -3064,13 +3067,17 @@ object Repl {
     Iterator.continually(scala.io.StdIn.readLine("graft> "))
       .takeWhile(l => l != null && l.trim != "\\q")
       .filter(_.trim.nonEmpty)
-      .foreach { line =>
-        db.query(line) match {
-          case Left(err)            => println(s"error: ${err.msg}")
-          case Right(db.Done(msg))  => println(msg)
-          case Right(db.Rows(df))   => df.show(100, truncate = false)
-        }
-      }
+      .foreach(step(db, _))
     spark.stop()
   }
+
+  /** Run one statement and print its result, or `error: <message>` when
+    * it is rejected or throws: a failing statement never ends the shell.
+    */
+  def step(db: GraftDatabase, line: String): Unit =
+    try db.query(line) match {
+      case Left(err)           => println(s"error: ${err.msg}")
+      case Right(db.Done(msg)) => println(msg)
+      case Right(db.Rows(df))  => df.show(100, truncate = false)
+    } catch { case NonFatal(e) => println(s"error: ${e.getMessage}") }
 }

@@ -3,8 +3,6 @@ package graft.sql
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-introspection dump for the cross-engine check harness
   * (tools/check_introspection.py): replay a shared DDL script into a
   * fresh warehouse, run the fixed introspection queries below, write
@@ -40,13 +38,7 @@ object IntrospectDump {
 
   def main(args: Array[String]): Unit = {
     val (ddlPath, outDir) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("2", "WARN")
     val db = new GraftDatabase(spark,
       Files.createTempDirectory("graft-introspect").toString)
     Files.readAllLines(Paths.get(ddlPath)).asScala

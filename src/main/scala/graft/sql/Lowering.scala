@@ -290,116 +290,11 @@ object Lowering {
         i -> name
       }.toMap
       // aggregate over a full expression: sum(a * (1 - b)) lowers the
-      // argument with qualified (pre-aggregation) column resolution;
-      // DISTINCT forms map to the engine's distinct aggregates (min/max
-      // over a distinct set are the plain min/max)
-      def aggCol(f: String, arg: Option[BoundOperand], dist: Boolean): Column =
-        (f, arg) match {
-          case ("count", None)            => count(lit(1))
-          case ("count", Some(a)) if dist => count_distinct(lowerOperandWith(a, qcol))
-          case ("count", Some(a))         => count(lowerOperandWith(a, qcol))
-          case ("sum", Some(a)) if dist   => sum_distinct(lowerOperandWith(a, qcol))
-          case ("sum", Some(a))           => sum(lowerOperandWith(a, qcol))
-          case ("min", Some(a))           => min(lowerOperandWith(a, qcol))
-          case ("max", Some(a))           => max(lowerOperandWith(a, qcol))
-          // avg(DISTINCT) composed from the native distinct aggregates
-          // (one distinct-aggregate state, exactly SQL semantics)
-          case ("avg", Some(a)) if dist =>
-            sum_distinct(lowerOperandWith(a, qcol)) /
-              count_distinct(lowerOperandWith(a, qcol))
-          case ("avg", Some(a))           => avg(lowerOperandWith(a, qcol))
-          case ("stddev", Some(a))        => stddev(lowerOperandWith(a, qcol))
-          case ("variance", Some(a))      => variance(lowerOperandWith(a, qcol))
-          case ("median", Some(a))        => median(lowerOperandWith(a, qcol))
-          case ("mode", Some(a))          => mode(lowerOperandWith(a, qcol))
-          case ("bool_and", Some(a))      => bool_and(lowerOperandWith(a, qcol))
-          case ("bool_or", Some(a))       => bool_or(lowerOperandWith(a, qcol))
-          case ("bit_and", Some(a))       => bit_and(lowerOperandWith(a, qcol))
-          case ("bit_or", Some(a))        => bit_or(lowerOperandWith(a, qcol))
-          case ("bit_xor", Some(a))       => bit_xor(lowerOperandWith(a, qcol))
-          // int on both engines (Spark's native grouping() is a tinyint)
-          case ("grouping", Some(a))      => grouping(lowerOperandWith(a, qcol)).cast("int")
-          // DuckDB's skewness/kurtosis are the SAMPLE-corrected G1/G2
-          // where Spark's natives are population g1/g2 — compose the
-          // correction from count(x) (probed: G1 = g1·√(n(n-1))/(n-2),
-          // G2 = ((n+1)·g2+6)(n-1)/((n-2)(n-3)); n too small or a
-          // constant input reads NULL on both engines — try_divide for
-          // the n cutoffs, isnan→NULL for zero variance)
-          // entropy counts equality classes — the string cast is
-          // equality-preserving within a column's type; mad runs over
-          // doubles (DuckDB's integer mad is DOUBLE too)
-          // any_value: the first non-NULL (DuckDB reads scan order;
-          // Spark's is plan-order nondeterministic — identical when the
-          // group's values agree, which is the only gate-checkable form)
-          case ("any_value", Some(a)) =>
-            org.apache.spark.sql.functions.any_value(
-              lowerOperandWith(a, qcol), lit(true))
-          // fsum/favg: DuckDB's compensated-sum spellings — plain
-          // sum/avg here (probed on a cancellation fixture: DuckDB 1.0's
-          // fsum matched its own sum bit-for-bit, so aliasing is
-          // value-exact against the oracle)
-          case ("fsum", Some(a)) =>
-            sum(lowerOperandWith(a, qcol).cast("double"))
-          case ("favg", Some(a)) =>
-            avg(lowerOperandWith(a, qcol).cast("double"))
-          // sem: standard error of the mean — DuckDB's is the
-          // POPULATION form stddev_pop/√n (probed against both
-          // stddev variants on grouped fixtures)
-          case ("sem", Some(a)) =>
-            val c = lowerOperandWith(a, qcol)
-            stddev_pop(c) / sqrt(count(c).cast("double"))
-          // population/sample variance family: Spark natives share
-          // DuckDB's formulas exactly
-          case ("stddev_pop", Some(a))  => stddev_pop(lowerOperandWith(a, qcol))
-          case ("stddev_samp", Some(a)) => stddev_samp(lowerOperandWith(a, qcol))
-          case ("var_pop", Some(a))     => var_pop(lowerOperandWith(a, qcol))
-          case ("var_samp", Some(a))    => var_samp(lowerOperandWith(a, qcol))
-          // kurtosis_pop is the POPULATION g2 — Spark's native kurtosis
-          // directly (the dialect's plain kurtosis applies the sample
-          // correction on top)
-          case ("kurtosis_pop", Some(a)) =>
-            val g = kurtosis(lowerOperandWith(a, qcol))
-            when(isnan(g), lit(null)).otherwise(g)
-          // approx_count_distinct: Spark's HLL++ — estimates are
-          // sketch-specific (no DuckDB oracle; spec-bounded ±5% like
-          // the stats NDV gate)
-          case ("approx_count_distinct", Some(a)) =>
-            approx_count_distinct(lowerOperandWith(a, qcol))
-          case ("entropy", Some(a)) =>
-            graft.functions.StatAggregates.entropy(
-              lowerOperandWith(a, qcol).cast("string"))
-          case ("mad", Some(a)) =>
-            graft.functions.StatAggregates.mad(
-              lowerOperandWith(a, qcol).cast("double"))
-          case ("product", Some(a)) =>
-            graft.functions.StatAggregates.product(
-              lowerOperandWith(a, qcol).cast("double"))
-          // histogram: value→count map with keys sorted ascending
-          // (DuckDB probed; NULLs skipped, all-NULL group reads NULL).
-          // One collect_list of aggregate state; the count-per-distinct
-          // fold is a codegen'd expression over it — same O(group)
-          // memory DuckDB's hash-based histogram pays.
-          case ("histogram", Some(a)) =>
-            val lst = collect_list(lowerOperandWith(a, qcol))
-            when(size(lst) === 0, lit(null)).otherwise(
-              map_from_entries(transform(array_sort(array_distinct(lst)),
-                k => struct(k.as("key"),
-                  size(filter(lst, v => v === k)).cast("long").as("value")))))
-          case ("skewness", Some(a)) =>
-            val c = lowerOperandWith(a, qcol)
-            val n = count(c).cast("double")
-            val g = skewness(c) * try_divide(sqrt(n * (n - 1)), n - 2)
-            when(isnan(g), lit(null)).otherwise(g)
-          case ("kurtosis", Some(a)) =>
-            val c = lowerOperandWith(a, qcol)
-            val n = count(c).cast("double")
-            val g = try_divide(((n + 1) * kurtosis(c) + 6) * (n - 1),
-              (n - 2) * (n - 3))
-            when(isnan(g), lit(null)).otherwise(g)
-          case other                      => sys.error(s"unreachable aggregate $other")
-        }
+      // argument with qualified (pre-aggregation) column resolution
+      def aggNodeCol(node: BoundOperand): Column =
+        Aggregates.lowerNode(node, lowerOperandWith(_, qcol))
       val aggExprs = aggItems.map { case (f, arg, dist, _, i) =>
-        aggCol(f, arg, dist).as(aggName(i)) }
+        aggNodeCol(BoundOperand.BAgg(f, arg, dist)).as(aggName(i)) }
       // HAVING / ORDER BY / computed-projection aggregates compute as
       // hidden columns next to the projected ones; the final projection
       // drops them
@@ -450,7 +345,7 @@ object Lowering {
           val name = s"__h_${havingAggs.length}"
           havingAggs += ((a, name))
           col(name)
-        case a @ BoundOperand.BOrderedAgg(_, _, _, _) =>
+        case a @ BoundOperand.BOrderedAgg(_, _, _, _, _) =>
           val name = s"__h_${havingAggs.length}"
           havingAggs += ((a, name))
           col(name)
@@ -689,186 +584,6 @@ object Lowering {
       val qualifyFilter: Option[Column] = q.qualify.collect {
         case qe if !BoundExpr.containsSub(qe) => lowerExprWith(qe, qualifyOp)
       }
-      // ordered aggregate (string_agg ORDER BY): collect (keys, value)
-      // pairs — NULL values skipped like SQL — sort the group's array
-      // once (struct comparison = lexicographic by key position), then
-      // join. The group buffers exactly once, the same cost any engine
-      // pays for an ordered string aggregate.
-      def orderedAggCol(arg: BoundOperand, sep: String,
-          ord: Seq[(BoundOperand, Boolean)]): Column = {
-        val v = lowerOperandWith(arg, qcol)
-        if (ord.isEmpty) string_agg(v, lit(sep))
-        else {
-          val pair = struct(ord.zipWithIndex.map { case ((k, _), i) =>
-            lowerOperandWith(k, qcol).as(s"k$i") } :+ v.as("v"): _*)
-          val sorted = array_sort(collect_list(when(v.isNotNull, pair)))
-          val dir = if (ord.head._2) reverse(sorted) else sorted
-          array_join(transform(dir, x => x.getField("v")), sep)
-        }
-      }
-      def aggNodeCol(node: BoundOperand): Column = node match {
-        case BoundOperand.BAgg(f, arg, dist) => aggCol(f, arg, dist)
-        // the value at the key's extremum: Spark's min_by/max_by — one
-        // (value, key) pair of aggregate state per group
-        // DuckDB's arg_min/arg_max SKIP rows whose VALUE is NULL
-        // (probed); Spark's min_by/max_by would return the NULL — a
-        // NULLed key takes such rows out of the extremum competition.
-        // The _null variants keep them (plain min_by/max_by).
-        case BoundOperand.BOrderedAgg("arg_min", arg, _, Seq((k, _))) =>
-          val v = lowerOperandWith(arg, qcol)
-          min_by(v, when(v.isNotNull, lowerOperandWith(k, qcol)))
-        case BoundOperand.BOrderedAgg("arg_max", arg, _, Seq((k, _))) =>
-          val v = lowerOperandWith(arg, qcol)
-          max_by(v, when(v.isNotNull, lowerOperandWith(k, qcol)))
-        case BoundOperand.BOrderedAgg("arg_min_null", arg, _, Seq((k, _))) =>
-          min_by(lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-        case BoundOperand.BOrderedAgg("arg_max_null", arg, _, Seq((k, _))) =>
-          max_by(lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-        // top-n list variants (DuckDB ≥1.1's min/max(x, n) and
-        // arg_min/arg_max(x, v, n)): a LIST of the n extreme values /
-        // the values at the n extreme keys, NULL inputs skipped. One
-        // collect_list of aggregate state + a codegen'd sort/slice —
-        // the same O(group) state class as the exact mad/median/
-        // histogram aggregates (n is a small literal; a bounded-heap
-        // Aggregator would cap state at O(n) per partial, the upgrade
-        // path if top-n ever runs over very large groups).
-        case BoundOperand.BOrderedAgg("min_topn", arg, sep, _) =>
-          slice(array_sort(collect_list(lowerOperandWith(arg, qcol))),
-            1, sep.toInt)
-        case BoundOperand.BOrderedAgg("max_topn", arg, sep, _) =>
-          slice(reverse(array_sort(collect_list(lowerOperandWith(arg, qcol)))),
-            1, sep.toInt)
-        case BoundOperand.BOrderedAgg("arg_min_topn", arg, sep, Seq((k, _))) =>
-          val kc = lowerOperandWith(k, qcol)
-          val pairs = collect_list(when(kc.isNotNull,
-            struct(kc.as("k"), lowerOperandWith(arg, qcol).as("v"))))
-          slice(transform(array_sort(pairs), x => x.getField("v")),
-            1, sep.toInt)
-        case BoundOperand.BOrderedAgg("arg_max_topn", arg, sep, Seq((k, _))) =>
-          val kc = lowerOperandWith(k, qcol)
-          val pairs = collect_list(when(kc.isNotNull,
-            struct(kc.as("k"), lowerOperandWith(arg, qcol).as("v"))))
-          slice(transform(reverse(array_sort(pairs)), x => x.getField("v")),
-            1, sep.toInt)
-        // bitstring_agg(x, lo, hi): a '0'/'1' string of length hi−lo+1
-        // with bit (x − lo) set per group member, leftmost = lo (DuckDB
-        // probed: (1,3,8) in [1,8] → '10100001'). One collect_set of
-        // aggregate state + a codegen'd membership fold.
-        case BoundOperand.BOrderedAgg("bitstring_agg", arg, sep, _) =>
-          val Array(lo, hi) = sep.split(",").map(_.toLong)
-          val got = collect_set(lowerOperandWith(arg, qcol).cast("long"))
-          array_join(transform(sequence(lit(lo), lit(hi)), i =>
-            when(array_contains(got, i), lit("1")).otherwise(lit("0"))), "")
-        // count(DISTINCT a, b, …): Spark's native multi-column distinct
-        // count — one distinct-aggregate over the tuple, rows with ANY
-        // null component skipped (SQL semantics on both engines)
-        case BoundOperand.BOrderedAgg("count_distinct", arg, _, ord) =>
-          count_distinct(lowerOperandWith(arg, qcol),
-            ord.map { case (k, _) => lowerOperandWith(k, qcol) }: _*)
-        // approx_quantile/reservoir_quantile: Spark's approx_percentile
-        // sketch (estimates are sketch-specific — no cross-engine
-        // oracle; spec-bounded like the HLL gate); the literal fraction
-        // rides the sep slot
-        case BoundOperand.BOrderedAgg("approx_quantile", arg, q, Nil) =>
-          approx_percentile(lowerOperandWith(arg, qcol),
-            lit(q.toDouble), lit(10000))
-        // two-argument statistical aggregates (value + key on the
-        // OrderedAgg carrier); one pass of Spark's native agg state
-        case BoundOperand.BOrderedAgg("corr", arg, _, Seq((k, _))) =>
-          corr(lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-        case BoundOperand.BOrderedAgg("covar_pop", arg, _, Seq((k, _))) =>
-          covar_pop(lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-        case BoundOperand.BOrderedAgg("covar_samp", arg, _, Seq((k, _))) =>
-          covar_samp(lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-        // linear-regression family: Spark's natives match DuckDB's
-        // standard definitions exactly (probed all nine on shared data)
-        case BoundOperand.BOrderedAgg(rf, arg, _, Seq((k, _)))
-            if rf.startsWith("regr_") =>
-          val (y, x) = (lowerOperandWith(arg, qcol), lowerOperandWith(k, qcol))
-          rf match {
-            case "regr_slope"     => regr_slope(y, x)
-            case "regr_intercept" => regr_intercept(y, x)
-            case "regr_r2"        => regr_r2(y, x)
-            case "regr_count"     => regr_count(y, x)
-            case "regr_avgx"      => regr_avgx(y, x)
-            case "regr_avgy"      => regr_avgy(y, x)
-            case "regr_sxx"       => regr_sxx(y, x)
-            case "regr_sxy"       => regr_sxy(y, x)
-            case _                => regr_syy(y, x)
-          }
-        // exact interpolated percentile (Spark's percentile == the
-        // standard's percentile_cont; DESC was folded to 1-p at parse)
-        case BoundOperand.BOrderedAgg("percentile_cont", arg, pstr, Seq()) =>
-          call_function("percentile",
-            lowerOperandWith(arg, qcol), lit(pstr.toDouble))
-        // exact DISCRETE percentile — the smallest input value whose
-        // cume_dist ≥ p (DuckDB's quantile_disc) — Catalyst's native
-        // PercentileDisc aggregate through the bridge (Spark exposes it
-        // as parser-only WITHIN GROUP syntax, no function wrapper); the
-        // analyzer casts the double result back to the argument's type
-        case BoundOperand.BOrderedAgg("percentile_disc", arg, pstr, Seq()) =>
-          val (p, rev) = pstr.split('|') match {
-            case Array(v, _) => (v.toDouble, true)
-            case Array(v)    => (v.toDouble, false)
-          }
-          import org.apache.spark.sql.graftbridge.Bridge
-          Bridge.column(
-            org.apache.spark.sql.catalyst.expressions.aggregate
-              .PercentileDisc(
-                Bridge.expression(lowerOperandWith(arg, qcol)),
-                org.apache.spark.sql.catalyst.expressions.Literal(p),
-                reverse = rev)
-              .toAggregateExpression())
-        // array_agg(v ORDER BY k…): the string_agg collect-sort shape
-        // minus the join — NULL values KEPT (DuckDB keeps them; only
-        // string_agg skips), one group buffer, sorted once. NULL *keys*
-        // sort first ascending (Spark struct ordering) — DuckDB puts
-        // them last; avoid null ordering keys where parity matters.
-        case BoundOperand.BOrderedAgg("array_agg", arg, _, ord) =>
-          val v = lowerOperandWith(arg, qcol)
-          val pair = struct(ord.zipWithIndex.map { case ((k, _), i) =>
-            lowerOperandWith(k, qcol).as(s"k$i") } :+ v.as("v"): _*)
-          val sorted = array_sort(collect_list(pair))
-          val dir = if (ord.head._2) reverse(sorted) else sorted
-          transform(dir, x => x.getField("v"))
-        // DISTINCT forms: dedup the collected group before the one sort
-        // (the analyzer pinned ORDER BY to the value, so dedup-then-sort
-        // is well-defined); struct wrapper keeps NULL values collectable
-        case BoundOperand.BOrderedAgg("array_agg_distinct", arg, _, ord) =>
-          val v = lowerOperandWith(arg, qcol)
-          val sorted = array_sort(array_distinct(
-            collect_list(struct(v.as("v")))))
-          val dir = if (ord.head._2) reverse(sorted) else sorted
-          transform(dir, x => x.getField("v"))
-        case BoundOperand.BOrderedAgg("string_agg_distinct", arg, sep, ord) =>
-          val v = lowerOperandWith(arg, qcol)
-          val sorted = array_sort(array_distinct(
-            collect_list(when(v.isNotNull, struct(v.as("v"))))))
-          val dir = if (ord.head._2) reverse(sorted) else sorted
-          array_join(transform(dir, x => x.getField("v")), sep)
-        // LIST-of-fractions percentiles: one sort state, a list result.
-        // cont: Spark's exact percentile takes an array of percentages
-        // natively; disc: one native PercentileDisc per fraction over
-        // the same column, assembled with array() — Spark fuses the
-        // aggregate states into one pass
-        case BoundOperand.BOrderedAgg("percentile_cont_list", arg, ps, Seq()) =>
-          call_function("percentile", lowerOperandWith(arg, qcol),
-            array(ps.split(',').toSeq.map(s => lit(s.toDouble)): _*))
-        case BoundOperand.BOrderedAgg("percentile_disc_list", arg, ps, Seq()) =>
-          import org.apache.spark.sql.graftbridge.Bridge
-          val c = lowerOperandWith(arg, qcol)
-          array(ps.split(',').toSeq.map { s =>
-            Bridge.column(
-              org.apache.spark.sql.catalyst.expressions.aggregate
-                .PercentileDisc(Bridge.expression(c),
-                  org.apache.spark.sql.catalyst.expressions.Literal(s.toDouble),
-                  reverse = false)
-                .toAggregateExpression())
-          }: _*)
-        case BoundOperand.BOrderedAgg(_, arg, sep, ord) =>
-          orderedAggCol(arg, sep, ord)
-        case other => sys.error(s"unreachable hidden aggregate $other")
-      }
       val hiddenExprs = havingAggs.map { case (node, name) =>
         aggNodeCol(node).as(name) }
       val allAggs = aggExprs ++ hiddenExprs
@@ -917,52 +632,22 @@ object Lowering {
             case Ast.GroupingSpec.Rollup | Ast.GroupingSpec.Cube => true
             case Ast.GroupingSpec.Sets(sets) => sets.exists(_.isEmpty)
           }
-          // The grand-total row's value per aggregate on EMPTY input.
-          // Probed against DuckDB (round 14): EVERY aggregate yields
-          // NULL over an empty set except the count family (0), the
-          // synthesized grouping marker (1) and entropy (0.0) — so NULL
-          // is the default and the exceptions are explicit. This covers
-          // the ordered aggregates too (string_agg, quantile family,
-          // histogram, arg_min/max: all NULL).
-          def emptyColOf(f: String,
-              dt: org.apache.spark.sql.types.DataType): Option[Column] =
-            f match {
-              case "count" | "count_distinct" | "approx_count_distinct" =>
-                Some(lit(0L).cast(dt))
-              case "grouping" => Some(lit(1).cast(dt))
-              case "entropy"  => Some(lit(0.0).cast(dt))
-              // NULL only for aggregates PROBED against DuckDB (r14);
-              // an unprobed aggregate returns None → the patch row is
-              // skipped entirely (fail-safe: Spark's empty-Expand
-              // behavior, never a silently-wrong grand total — ADVICE
-              // r14 flagged the unguarded NULL default)
-              case "sum" | "avg" | "mean" | "min" | "max" | "stddev" |
-                   "stddev_samp" | "stddev_pop" | "variance" | "var_samp" |
-                   "var_pop" | "median" | "mode" | "string_agg" |
-                   "group_concat" | "listagg" | "array_agg" | "list" |
-                   "first" | "last" | "any_value" | "arg_min" | "arg_max" |
-                   "min_by" | "max_by" | "bit_and" | "bit_or" | "bit_xor" |
-                   "bool_and" | "bool_or" | "product" | "corr" |
-                   "covar_pop" | "covar_samp" | "skewness" | "kurtosis" |
-                   "mad" | "histogram" | "quantile" | "quantile_cont" |
-                   "quantile_disc" | "approx_quantile" |
-                   "reservoir_quantile" | "percentile_cont" |
-                   "percentile_disc" | "percentile_cont_list" |
-                   "percentile_disc_list" | "bitstring_agg" | "favg" |
-                   "fsum" | "sumkahan" | "kahan_sum" | "geomean" |
-                   "geometric_mean" =>
-                Some(lit(null).cast(dt))
-              case _ => None
-            }
+          // The grand-total row's value per aggregate on EMPTY input: the
+          // catalog's probed empty-group value (NULL for nearly every
+          // aggregate; the count family 0, the grouping marker 1, entropy
+          // 0.0). An unprobed aggregate has none and the patch row is
+          // skipped entirely (fail-safe: Spark's empty-Expand behavior,
+          // never a silently-wrong grand total).
           val emptyFs: Seq[(String, String)] =
             aggItems.map { case (f, _, _, _, i) => aggName(i) -> f } ++
               havingAggs.map { case (node, n) => n -> (node match {
-                case BoundOperand.BAgg(f, _, _)           => f
-                case BoundOperand.BOrderedAgg(f, _, _, _) => f
-                case _                                    => "?"
+                case BoundOperand.BAgg(f, _, _)              => f
+                case BoundOperand.BOrderedAgg(f, _, _, _, _) => f
+                case other => sys.error(s"unreachable hidden aggregate $other")
               }) }
           val patchable = emptyFs.map { case (n, f) =>
-            emptyColOf(f, expanded.schema(n).dataType).map(n -> _) }
+            Aggregates(f).empty.map(v =>
+              n -> lit(v).cast(expanded.schema(n).dataType)) }
           if (!hasEmptySet || patchable.exists(_.isEmpty)) expanded
           else {
             val patchVals = patchable.flatten.toMap
@@ -1251,7 +936,7 @@ object Lowering {
       frame: Option[Ast.WinFrame]): Boolean =
     args.lastOption.contains(
       BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel))) &&
-      Set("count", "sum", "avg", "mean")(f) &&
+      Aggregates(f).kind == Aggregates.Kind.Running &&
       frame.forall(_.lo == Long.MinValue)
 
   /** The first-occurrence mask: x where this row is the first occurrence
@@ -1391,7 +1076,7 @@ object Lowering {
     val distinctAgg = args.lastOption.contains(
       BoundOperand.BLit(Lit.LitString(Ast.DistinctSentinel)))
     val args1 = if (distinctAgg) args.dropRight(1) else args
-    if (distinctAgg && Set("count", "sum", "avg", "mean")(f)) {
+    if (distinctAgg && Aggregates(f).kind == Aggregates.Kind.Running) {
       distinctMask match {
         case Some(m) =>
           f match {
@@ -1429,49 +1114,6 @@ object Lowering {
     val ignoreNulls = args1.lastOption.contains(
       BoundOperand.BLit(Lit.LitString(Ast.IgnoreNullsSentinel)))
     val argsR = if (ignoreNulls) args1.dropRight(1) else args1
-    def shiftN: Int = shiftOffset(argsR)
-    def shiftDefault: Any = shiftDefaultAny(argsR)
-    // windowed ordered aggregates: a running collect over the frame —
-    // within-frame order IS the window's sort order (Spark evaluates
-    // ordered-window rows in sort sequence). The struct wrap keeps NULL
-    // values collectable for array_agg (DuckDB keeps them; string_agg
-    // skips, so its wrap filters first).
-    if (f == "string_agg" || f == "array_agg") {
-      val v = opLower(argsR.head)
-      val sep = argsR.lift(1) match {
-        case Some(BoundOperand.BLit(Lit.LitString(x))) => x
-        case _                                         => ""
-      }
-      val wrapped =
-        if (f == "string_agg") collect_list(when(v.isNotNull, struct(v.as("v"))))
-        else collect_list(struct(v.as("v")))
-      val vals = transform(wrapped.over(w), x => x.getField("v"))
-      return if (f == "string_agg") array_join(vals, sep) else vals
-    }
-    val fn = (f, argsR) match {
-      case ("row_number", _)     => row_number()
-      case ("rank", _)           => rank()
-      case ("dense_rank", _)     => dense_rank()
-      case ("percent_rank", _)   => percent_rank()
-      case ("cume_dist", _)      => cume_dist()
-      case ("ntile", Seq(BoundOperand.BLit(Lit.LitLong(n)))) => ntile(n.toInt)
-      case ("lag", x +: _)       => lag(opLower(x), shiftN, shiftDefault, ignoreNulls)
-      case ("lead", x +: _)      => lead(opLower(x), shiftN, shiftDefault, ignoreNulls)
-      case ("first_value", Seq(x)) => first(opLower(x), ignoreNulls)
-      case ("last_value", Seq(x))  => last(opLower(x), ignoreNulls)
-      case ("nth_value", Seq(x, BoundOperand.BLit(Lit.LitLong(n)))) =>
-        nth_value(opLower(x), n.toInt, ignoreNulls)
-      case ("count", Seq())      => count(lit(1))
-      case ("count", Seq(x))     => count(opLower(x))
-      case ("sum", Seq(x))       => sum(opLower(x))
-      case ("min", Seq(x))       => min(opLower(x))
-      case ("max", Seq(x))       => max(opLower(x))
-      case ("avg", Seq(x))       => avg(opLower(x))
-      case ("stddev", Seq(x))    => stddev(opLower(x))
-      case ("variance", Seq(x))  => variance(opLower(x))
-      case ("median", Seq(x))    => median(opLower(x))
-      case other                 => sys.error(s"unreachable window function $other")
-    }
     // Frame exclusion: when the frame statically contains the current
     // row (lo ≤ 0 ≤ hi — for RANGE that also means it contains the
     // whole peer group), the excluded contribution subtracts columnar
@@ -1480,9 +1122,14 @@ object Lowering {
     // the peer-group aggregate (one extra window over partition + order
     // keys — same shuffle, peers are sort-adjacent); TIES subtracts the
     // peers but adds the current row back.
+    // Otherwise the catalog's lowering, each aggregate leaf over the
+    // frame; windowed collects run in the frame's sort order (Spark
+    // evaluates ordered-window rows in sort sequence).
     val exclMode = frame.filter(fr => fr.lo <= 0L && fr.hi >= 0L)
       .map(_.exclude).getOrElse("none")
-    if (exclMode == "none") fn.over(w)
+    if (exclMode == "none")
+      Aggregates.lower(f, Aggregates.Call(argsR, ignoreNulls = ignoreNulls),
+        opLower, _.over(w))
     else exclusionCol(f, argsR.headOption.map(opLower), frame.get, w, w1,
       pwKeys, exclMode, revOrd)
   }
@@ -1599,26 +1246,6 @@ object Lowering {
     }
   }
 
-  /** One aggregate call as a Column under the caller's operand
-    * resolution (shared by aggregate LATERAL frames; the grouped SELECT
-    * lowering additionally handles grouping()).
-    */
-  private def aggCallCol(f: String, arg: Option[BoundOperand], dist: Boolean,
-      opLower: BoundOperand => Column): Column = (f, arg) match {
-    case ("count", None)            => count(lit(1))
-    case ("count", Some(a)) if dist => count_distinct(opLower(a))
-    case ("count", Some(a))         => count(opLower(a))
-    case ("sum", Some(a)) if dist   => sum_distinct(opLower(a))
-    case ("sum", Some(a))           => sum(opLower(a))
-    case ("min", Some(a))           => min(opLower(a))
-    case ("max", Some(a))           => max(opLower(a))
-    case ("avg", Some(a))           => avg(opLower(a))
-    case ("stddev", Some(a))        => stddev(opLower(a))
-    case ("variance", Some(a))      => variance(opLower(a))
-    case ("median", Some(a))        => median(opLower(a))
-    case other                      => sys.error(s"unreachable aggregate $other")
-  }
-
   /** Fuse a correlated aggregate LATERAL into the enclosing join group:
     * per-key aggregate over the body's core, COMPLETED over the distinct
     * outer keys observed in the enclosing frame (left join + the
@@ -1639,7 +1266,8 @@ object Lowering {
     val core = combine(spark, l.sub, source, Set.empty, None)
     val aggExprs = l.sub.projection.zipWithIndex.map {
       case (BoundItem.BIAgg(f, arg, _, dist), i) =>
-        aggCallCol(f, arg, dist, lowerOperandWith(_, qcolOf)).as(s"__pa$i")
+        Aggregates.lowerNode(BoundOperand.BAgg(f, arg, dist),
+          lowerOperandWith(_, qcolOf)).as(s"__pa$i")
       case other => sys.error(s"unreachable aggregate LATERAL item $other")
     }
     val keyCols = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
@@ -1652,8 +1280,7 @@ object Lowering {
       "left_outer")
     val outCols = l.sub.projection.zipWithIndex.map {
       case (BoundItem.BIAgg(f, _, Some(a), _), i) =>
-        val c = perKey(s"__pa$i")
-        (if (f == "count") coalesce(c, lit(0L)) else c).as(a)
+        Aggregates.completed(f, perKey(s"__pa$i")).as(a)
       case other => sys.error(s"unreachable aggregate LATERAL item $other")
     } ++ l.hiddenKeys.zipWithIndex.map { case (hk, i) => col(s"__ok$i").as(hk) }
     val frame = completed.select(outCols: _*).alias(bt.binding)
@@ -1869,31 +1496,29 @@ object Lowering {
     val keyCols = pairs.zipWithIndex.map { case ((_, ic), k) =>
       qcolOf(ic).as(s"$keyPrefix$k") }
     // count() over an empty correlated set is 0, not NULL — the classic
-    // COUNT decorrelation trap. The coalesce wraps the POST-left-join
-    // column reference, so unmatched outer keys read 0 too.
+    // COUNT decorrelation trap. The empty-group value wraps the POST-left-
+    // join column reference, so unmatched outer keys read it too.
     val (subAgg, scalar) = sub.projection.head match {
       case BoundItem.BIAgg(f, arg, _, dist) =>
-        val g = core.groupBy(keyCols: _*).agg(
-          aggCallCol(f, arg, dist, lowerOperandWith(_, qcolOf)).as(scalarName))
-        (g, if (f == "count") coalesce(g(scalarName), lit(0L)) else g(scalarName))
+        val g = core.groupBy(keyCols: _*).agg(Aggregates.lowerNode(
+          BoundOperand.BAgg(f, arg, dist), lowerOperandWith(_, qcolOf)).as(scalarName))
+        (g, Aggregates.completed(f, g(scalarName)))
       case BoundItem.BIExpr(op, _) =>
         // an expression OVER aggregate calls (0.2 * avg(x), the TPC-H
         // Q17 shape): each distinct aggregate node computes as a hidden
         // per-key column, the expression projects over them post-join
         val nodes = Analyzer.BoundOperand.aggNodes(op).distinct
-        val hidden = nodes.zipWithIndex.map {
-          case (BoundOperand.BAgg(f, arg, dist), i) =>
-            aggCallCol(f, arg, dist, lowerOperandWith(_, qcolOf))
-              .as(s"${scalarName}_a$i")
-          case other => sys.error(s"unreachable aggregate node $other")
+        val hidden = nodes.zipWithIndex.map { case (n, i) =>
+          Aggregates.lowerNode(n, lowerOperandWith(_, qcolOf))
+            .as(s"${scalarName}_a$i")
         }
         val g = core.groupBy(keyCols: _*).agg(hidden.head, hidden.tail: _*)
         val nodeCol: Map[BoundOperand, Column] = nodes.zipWithIndex.map {
           case (n, i) =>
             val c = g(s"${scalarName}_a$i")
             n -> (n match {
-              case BoundOperand.BAgg("count", _, _) => coalesce(c, lit(0L))
-              case _                                => c
+              case BoundOperand.BAgg(f, _, _) => Aggregates.completed(f, c)
+              case _                          => c
             })
         }.toMap
         def low(o: BoundOperand): Column = nodeCol.getOrElse(o, o match {
@@ -1986,16 +1611,12 @@ object Lowering {
           .orderBy(ordExprs: _*)
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding, 0L)
-        val resCols = nodes.zipWithIndex.map { case ((f, _), j) =>
-          val a = col(s"${name}_a$j")
-          (f match {
-            case "count" => count(a)
-            case "sum"   => sum(a)
-            case "avg"   => avg(a)
-            case "min"   => min(a)
-            case "max"   => max(a)
-            case other   => sys.error(s"unreachable running aggregate $other")
-          }).over(w).as(s"${name}_r$j")
+        // each node's argument is pre-projected as its `_a` column
+        // (count(*) as the indicator, counted like a value)
+        val resCols = nodes.zipWithIndex.map { case ((f, arg), j) =>
+          val x = arg.getOrElse(BoundOperand.BLit(Lit.LitLong(1L)))
+          Aggregates.lower(f, Aggregates.Call(Seq(x)), _ => col(s"${name}_a$j"),
+            _.over(w)).as(s"${name}_r$j")
         }
         unioned.select(col("*") +: resCols: _*)
           .filter(col(tagN))
@@ -3412,7 +3033,7 @@ object Lowering {
     case BoundOperand.BOut(n, _)       => col(n)
     case BoundOperand.BAgg(f, _, _) =>
       sys.error(s"aggregate $f(...) outside aggregate scope")
-    case BoundOperand.BOrderedAgg(f, _, _, _) =>
+    case BoundOperand.BOrderedAgg(f, _, _, _, _) =>
       sys.error(s"$f(...) is only supported in the SELECT list / HAVING " +
         "of an aggregated query")
   }

@@ -251,15 +251,11 @@ object Parser {
     "merge", "using", "matched", "window", "natural", "semi", "anti",
     "asof", "returning")
 
-  private val aggFuncs = Set("count", "sum", "min", "max", "avg",
-    "stddev", "variance", "median", "grouping",
-    "mode", "bool_and", "bool_or", "bit_and", "bit_or", "bit_xor",
-    "skewness", "kurtosis", "entropy", "mad", "histogram", "product",
-    "any_value", "fsum", "favg", "sem",
-    "stddev_pop", "stddev_samp", "var_pop", "var_samp", "kurtosis_pop",
-    "mean", "arbitrary", "kahan_sum", "sumkahan", "approx_count_distinct")
-  private val winFuncs = Set("row_number", "rank", "dense_rank", "lag", "lead",
-    "first_value", "last_value", "nth_value", "ntile", "percent_rank", "cume_dist")
+  /** Does the spelling `f` name an aggregate or window function taking
+    * the call grammar `s` (the catalog decides)?
+    */
+  private def aggSyntax(f: String, s: Aggregates.Syntax): Boolean =
+    Aggregates.syntaxOf(f.toLowerCase).contains(s)
   private def reserved(s: String): Boolean = reservedWords(s.toLowerCase)
 
   /** FROM-position file readers → formats (DuckDB's read_* family;
@@ -1458,7 +1454,7 @@ object Parser {
               // one output item per matched column, named with the bare
               // column name. Detected by a 3-token lookahead so ordinary
               // calls fall through to the operand grammar untouched.
-              case TIdent(f, _) if (aggFuncs(f.toLowerCase) ||
+              case TIdent(f, _) if (aggSyntax(f, Aggregates.Syntax.Plain) ||
                   Functions.callable(f.toLowerCase)) && {
                 val save = p.i; p.next()
                 val isColumnsCall = (p.peek match {
@@ -1502,12 +1498,12 @@ object Parser {
                     loop(Vector.empty)
                   }
                   _ <- p.eatSym(")")
-                } yield SelectItem.SColumnsFn(f.toLowerCase, sel._1, sel._2,
-                  extra): SelectItem
+                } yield SelectItem.SColumnsFn(Aggregates.canonical(f.toLowerCase),
+                  sel._1, sel._2, extra): SelectItem
               // `rank() OVER (…) - 1 AS x` routes through the operand
               // grammar below (the hidden-window sink); only a whole-item
               // window call takes the direct path
-              case TIdent(f, _) if winFuncs(f.toLowerCase) &&
+              case TIdent(f, _) if aggSyntax(f, Aggregates.Syntax.Window) &&
                   !p.winCallInExpression =>
                 p.next()
                 for {
@@ -1591,8 +1587,8 @@ object Parser {
                     // in-call ORDER BY would be ambiguous); the
                     // separator rides as a literal trailing argument
                     case Operand.OrderedAgg(f, arg, sep, ord, false)
-                        if p.isKw("over") &&
-                          (f == "string_agg" || f == "array_agg") =>
+                        if p.isKw("over") && Aggregates.lookup(f)
+                          .exists(_.syntax == Aggregates.Syntax.Collect) =>
                       if (ord.nonEmpty) Left(ParseError(
                         s"windowed $f takes its order from the OVER clause",
                         start))
@@ -1603,8 +1599,7 @@ object Parser {
                     // is a no-op). The sentinel rides as a trailing
                     // argument like IGNORE NULLS.
                     case Operand.AggCall(f, arg, true) if p.isKw("over") =>
-                      if (!Set("count", "sum", "avg", "mean", "min",
-                          "max")(f.toLowerCase))
+                      if (!Aggregates.lookup(f).exists(_.decomposable))
                         Left(ParseError(s"DISTINCT windowed $f is not " +
                           "supported (count/sum/avg/min/max are)", start))
                       else winItem(f, arg.toSeq :+ (Operand.Literal(
@@ -3258,8 +3253,9 @@ object Parser {
     // QUALIFY scope: an inline `fn(args) OVER (spec)` call desugars into
     // a hidden window item, replaced by its generated-alias reference
     case TIdent(f, _) if p.winSink != null &&
-        (winFuncs(f.toLowerCase) || aggFuncs(f.toLowerCase)) && p.aheadOverCall =>
-      val fn = f.toLowerCase
+        (aggSyntax(f, Aggregates.Syntax.Window) ||
+          aggSyntax(f, Aggregates.Syntax.Plain)) && p.aheadOverCall =>
+      val fn = Aggregates.canonical(f.toLowerCase)
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3273,9 +3269,8 @@ object Parser {
             // windowColumn lowers over a per-frame collect_set
             val distinctE: Either[ParseError, Boolean] = p.peek match {
               case TIdent(d, dpos) if d.equalsIgnoreCase("distinct") &&
-                  aggFuncs(fn) =>
-                if (!Set("count", "sum", "avg", "mean", "min",
-                    "max")(fn))
+                  aggSyntax(fn, Aggregates.Syntax.Plain) =>
+                if (!Aggregates(fn).decomposable)
                   Left(ParseError(s"DISTINCT windowed $fn is not " +
                     "supported (count/sum/avg/min/max are)", dpos))
                 else { p.next(); Right(true) }
@@ -3349,15 +3344,8 @@ object Parser {
         distinct = false)
     // arg_min/arg_max (min_by/max_by): the value at the key's extremum —
     // rides the OrderedAgg node (value + one ordering key, no separator)
-    case TIdent(f, _) if allowAgg && Set("arg_min", "arg_max", "min_by",
-        "max_by", "argmin", "argmax", "arg_min_null",
-        "arg_max_null")(f.toLowerCase) =>
-      val fn = f.toLowerCase match {
-        case "arg_min_null" | "arg_max_null" => f.toLowerCase
-        case l if l.startsWith("arg_min") || l == "min_by" ||
-          l == "argmin" => "arg_min"
-        case _ => "arg_max"
-      }
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.ArgExtreme) =>
+      val fn = Aggregates.canonical(f.toLowerCase)
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3368,7 +3356,7 @@ object Parser {
         // LIST of the x values at the n smallest/largest v. n rides the
         // separator slot as a literal.
         topn <- p.peek match {
-          case TSym(",", _) =>
+          case TSym(",", _) if !fn.endsWith("_null") =>
             p.next()
             p.peek match {
               case TInt(n, _) if n >= 1 => p.next(); Right(Some(n))
@@ -3387,7 +3375,7 @@ object Parser {
     // bitstring_agg(x, lo, hi): literal integer bounds compile into the
     // membership fold; rides the OrderedAgg carrier with "lo,hi" in the
     // separator slot
-    case TIdent(f, _) if allowAgg && f.equalsIgnoreCase("bitstring_agg") =>
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Bits) =>
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3410,8 +3398,7 @@ object Parser {
     // approx_quantile/reservoir_quantile(x, q): sketch estimates (no
     // cross-engine oracle — t-digest vs Spark's variant of KLL); the
     // literal fraction rides the carrier's sep slot
-    case TIdent(f, _) if allowAgg && (f.equalsIgnoreCase("approx_quantile") ||
-        f.equalsIgnoreCase("reservoir_quantile")) =>
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Fraction) =>
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3432,12 +3419,8 @@ object Parser {
         distinct = false)
     // two-argument statistical aggregates: corr(y, x), covar_pop(y, x),
     // covar_samp(y, x) — ride the OrderedAgg carrier (value + one key)
-    case TIdent(f, _) if allowAgg &&
-        Set("corr", "covar_pop", "covar_samp",
-          "regr_slope", "regr_intercept", "regr_r2", "regr_count",
-          "regr_avgx", "regr_avgy", "regr_sxx", "regr_sxy",
-          "regr_syy")(f.toLowerCase) =>
-      val fn = f.toLowerCase
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Pair) =>
+      val fn = Aggregates.canonical(f.toLowerCase)
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3450,9 +3433,8 @@ object Parser {
     // standard ordered-set aggregates; cont DESC folds to 1-p (exact for
     // the interpolated form), disc DESC carries a reverse flag in the
     // carrier's sep field (discrete selection is not symmetric in p)
-    case TIdent(f, _) if allowAgg && (f.equalsIgnoreCase("percentile_cont") ||
-        f.equalsIgnoreCase("percentile_disc")) =>
-      val fn = f.toLowerCase
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.WithinGroup) =>
+      val fn = Aggregates.canonical(f.toLowerCase)
       val start = p.peek.pos
       p.next()
       for {
@@ -3488,11 +3470,9 @@ object Parser {
             p0.toString + (if (desc) "|desc" else ""), Nil, distinct = false)
     // quantile_cont/quantile_disc(x, q) — DuckDB's call forms (argument
     // order flipped vs the standard syntax above)
-    case TIdent(f, _) if allowAgg && (f.equalsIgnoreCase("quantile_cont") ||
-        f.equalsIgnoreCase("quantile_disc") || f.equalsIgnoreCase("quantile")) =>
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Quantile) =>
       // bare quantile IS quantile_disc in DuckDB
-      val fn = if (f.equalsIgnoreCase("quantile_cont")) "percentile_cont"
-               else "percentile_disc"
+      val fn = Aggregates.canonical(f.toLowerCase)
       val start = p.peek.pos
       p.next()
       def fraction(): Either[ParseError, Double] = (p.peek match {
@@ -3532,15 +3512,13 @@ object Parser {
     // string_agg / listagg: value, string-literal separator, optional
     // intra-group ORDER BY (all keys must share one direction — the
     // lowering sorts the collected group once)
-    case TIdent(f, _) if allowAgg &&
-        (f.equalsIgnoreCase("string_agg") || f.equalsIgnoreCase("listagg") ||
-         f.equalsIgnoreCase("group_concat") ||
-         f.equalsIgnoreCase("array_agg") || f.equalsIgnoreCase("list")) =>
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Collect) =>
       // array_agg/list: same ordered-aggregate carrier, no separator; the
       // intra-group ORDER BY is REQUIRED (an unordered distributed
       // collect would be nondeterministic — DuckDB preserves input order,
       // which a shuffled engine cannot)
-      val isArray = f.equalsIgnoreCase("array_agg") || f.equalsIgnoreCase("list")
+      val fn = Aggregates.canonical(f.toLowerCase)
+      val isArray = fn == "array_agg"
       val start = p.peek.pos
       p.next()
       for {
@@ -3594,7 +3572,6 @@ object Parser {
               "call (a distributed collect has no input order)", start))
           else Right(())
         res <- {
-          val fn = if (isArray) "array_agg" else "string_agg"
           val overParen = p.winSink != null && p.isKw("over") && {
             val save = p.i; p.next()
             val isP = p.peek match { case TSym("(", _) => true; case _ => false }
@@ -3622,16 +3599,11 @@ object Parser {
           }
         }
       } yield res
-    case TIdent(f, _) if allowAgg && aggFuncs(f.toLowerCase) =>
+    case TIdent(f, _) if allowAgg && aggSyntax(f, Aggregates.Syntax.Plain) =>
       // aggregate over a full (non-aggregate) expression: sum(a * b),
       // optionally DISTINCT: count(DISTINCT x), sum(DISTINCT x).
       // DuckDB aggregate synonyms rebind onto canonical names here.
-      val fn = f.toLowerCase match {
-        case "mean"                   => "avg"
-        case "arbitrary"              => "any_value"
-        case "kahan_sum" | "sumkahan" => "fsum"
-        case x                        => x
-      }
+      val fn = Aggregates.canonical(f.toLowerCase)
       p.next()
       for {
         _ <- p.eatSym("(")
@@ -3648,7 +3620,7 @@ object Parser {
         // of the n smallest/largest values. n rides the OrderedAgg
         // separator slot as a literal (it compiles into the expression).
         topn <-
-          if ((fn == "min" || fn == "max") && !distinct && (p.peek match {
+          if (Aggregates(fn).kind == Aggregates.Kind.Extremum && !distinct && (p.peek match {
             case TSym(",", _) => true
             case _            => false
           })) {

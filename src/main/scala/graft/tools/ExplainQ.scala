@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the physical plan of SparkEntry queries — the
   * per-operator audit loop (broadcast vs shuffle joins, PushedFilters,
   * ReadSchema pruning, WholeStageCodegen spans).
@@ -11,13 +9,7 @@ object ExplainQ {
   def main(args: Array[String]): Unit = {
     val (names, dirs) = args.partition(a => !a.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("8", "ERROR")
     for (q <- names) {
       println(s"===== $q =====")
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: HOST-NOISE-FREE cost attribution. Runs SparkEntry queries
   * and reports scheduled jobs, stages, tasks and shuffle bytes — all
@@ -16,14 +15,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("32", "ERROR")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val shufW = new AtomicLong; val shufR = new AtomicLong

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -36,22 +35,14 @@ object PlanAudit {
     val outFile = args.headOption.getOrElse("PLANS.json")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = graft.LocalSession.cpus("4")
+    val spark = graft.LocalSession(cpus, "ERROR", Seq(
       // audit the fully-ensured STATIC plan: with AQE on, executedPlan
       // is an AdaptiveSparkPlanExec whose inputPlan predates
       // EnsureRequirements — the very exchanges this tool audits are
       // missing from it. AQE only merges/skips exchanges at runtime,
       // never adds one, so the non-AQE plan is the conservative view.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.adaptive.enabled" -> "false"))
 
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => a.inputPlan
@@ -121,15 +112,7 @@ object PlanAudit {
       Audit(allowed, bad.result(), cart.result(), None, shrink)
     }
 
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.sql.FuzzDump.jsonStr
 
     def merge(a: Audit, b: Audit): Audit = Audit(
       (a.allowed.keySet ++ b.allowed.keySet).map(k =>
@@ -169,16 +152,16 @@ object PlanAudit {
     val nViol = entries.map(e => e._2.violations.length + e._2.cartesians.length).sum
     val nErr = entries.count(_._2.err.isDefined)
     val body = entries.map { case (n, a) =>
-      val al = a.allowed.toSeq.sorted.map { case (k, v) => s"${jq(k)}:$v" }
+      val al = a.allowed.toSeq.sorted.map { case (k, v) => s"${jsonStr(k)}:$v" }
         .mkString("{", ",", "}")
-      val vi = a.violations.map(jq).mkString("[", ",", "]")
-      val ca = a.cartesians.map(jq).mkString("[", ",", "]")
-      s"${jq(n)}:{" + s""""allowed":$al,"violations":$vi,"cartesians":$ca""" +
+      val vi = a.violations.map(jsonStr).mkString("[", ",", "]")
+      val ca = a.cartesians.map(jsonStr).mkString("[", ",", "]")
+      s"${jsonStr(n)}:{" + s""""allowed":$al,"violations":$vi,"cartesians":$ca""" +
         (if (a.shrinking > 0) s""","shrinking":${a.shrinking}""" else "") +
-        a.err.map(e => s""","err":${jq(e)}""").getOrElse("") + "}"
+        a.err.map(e => s""","err":${jsonStr(e)}""").getOrElse("") + "}"
     }.mkString(",\n  ")
     val nShrink = entries.map(_._2.shrinking).sum
-    val json = s"""{"summary":{"queries":${entries.length},"violations":$nViol,"errors":$nErr,"shrinking":$nShrink,"sf":${jq(sfDir)}},
+    val json = s"""{"summary":{"queries":${entries.length},"violations":$nViol,"errors":$nErr,"shrinking":$nShrink,"sf":${jsonStr(sfDir)}},
   "allow_classes":["prefix_totals","agg_final","limit","topk_window","tiny_literal"],
   "queries":{
   $body

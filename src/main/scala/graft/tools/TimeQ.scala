@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time individual SparkEntry queries with a warm JVM.
   * Usage: TimeQ <comma-separated-query-names> <sfDir>
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("32", "WARN")
     graft.SparkEntry.queries("q_scan_project")(spark, args(1)).count() // warmup
     for (q <- args(0).split(",")) {
       for (i <- 1 to 2) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-exponent probes for the round-15 distributed window
   * lowerings (big-offset shifts, IGNORE NULLS rank joins, whole-input
   * EXCLUDE, DISTINCT look-ahead, ghosted value functions), run over
@@ -18,14 +16,8 @@ object WinScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.LocalSession.cpus("32")
+    val spark = graft.LocalSession(cpus, "ERROR")
     val db = new graft.sql.GraftDatabase(spark,
       java.nio.file.Files.createTempDirectory("wsp").toString)
     db.registerParquet("orders", s"$sfDir/orders.parquet")
