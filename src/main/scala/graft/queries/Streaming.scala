@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -54,10 +55,20 @@ object Streaming {
     */
   private def boundedSource(df: DataFrame, key: String, d: String,
       nFiles: Int): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_" +
-      s"${key}_p${nFiles}_${Integer.toHexString(d.hashCode)}"
-    if (!Files.exists(Paths.get(s"$dir/_SUCCESS")))
+    val tmp = System.getProperty("java.io.tmpdir")
+    val fixture = Integer.toHexString(d.hashCode)
+    val name = s"graft_stream_${key}_p${nFiles}_$fixture"
+    val dir = s"$tmp/$name"
+    if (!Files.exists(Paths.get(s"$dir/_SUCCESS"))) {
+      // a copy of the same slice under another file count is never read
+      // again: remove it rather than accumulate (copies of other fixture
+      // dirs stay — another scale factor still reads them)
+      val sibling = s"graft_stream_${java.util.regex.Pattern.quote(key)}_p\\d+_$fixture"
+      Option(new java.io.File(tmp).listFiles()).toSeq.flatten
+        .filter(f => f.getName != name && f.getName.matches(sibling))
+        .foreach(f => FileUtils.deleteDirectory(f))
       df.repartition(nFiles).write.mode("overwrite").parquet(dir)
+    }
     dir
   }
 

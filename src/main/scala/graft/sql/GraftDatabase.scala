@@ -1,10 +1,12 @@
 package graft.sql
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import Analyzer._
@@ -16,9 +18,11 @@ import Analyzer._
   * Storage: each table is a directory of parquet files under the warehouse
   * dir; INSERT appends new files (the Spark-native replacement for the
   * reference's slotted-page heap + buffer manager, which is HOW not WHAT —
-  * SURVEY.md §1.4). Catalog metadata (incl. VARCHAR max lengths, which
-  * parquet cannot carry) persists as a JSON sidecar, replacing the
-  * reference's bootstrap catalog segments (catalog/mod.rs:9-37).
+  * SURVEY.md §1.4). The catalog (schemas, ENUM types, tables with their
+  * declared types such as VARCHAR max lengths, which parquet cannot
+  * carry, views, materialized views, macros and sequences) persists as
+  * one JSON document, `warehouse.json`, replacing the reference's
+  * bootstrap catalog segments (catalog/mod.rs:9-37).
   *
   * At scale: appends are new parquet files (no rewrite), reads are
   * partition-parallel scans with pushdown; the facade never collects data
@@ -72,7 +76,22 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     * catalog so allocated ids stay monotone across reopen.
     */
   private final case class SeqState(start: Long, inc: Long, minv: Long,
-      maxv: Long, cycle: Boolean, var current: Option[Long])
+      maxv: Long, cycle: Boolean, var current: Option[Long]) {
+    /** The value the next nextval hands out: one overflow-safe step (a
+      * Long overflow IS out of bounds — the default bounds are
+      * Long.MaxValue/MinValue themselves), wrapped under CYCLE; None
+      * once a non-cycle sequence is exhausted.
+      */
+    def next: Option[Long] = current match {
+      case None => Some(start)
+      case Some(c) =>
+        val stepped =
+          try Some(Math.addExact(c, inc))
+          catch { case _: ArithmeticException => None }
+        stepped.filter(v => v >= minv && v <= maxv).orElse(
+          if (cycle) Some(if (inc > 0) minv else maxv) else None)
+    }
+  }
   private val sequences = mutable.LinkedHashMap.empty[String, SeqState]
 
   // named types (CREATE TYPE … AS ENUM): name -> value domain
@@ -89,7 +108,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private val schemas = mutable.Set.empty[String]
 
   /** CREATE TEMP TABLE names: fully materialized like any table, but
-    * filtered out of catalog.json — they vanish on reopen (their data
+    * filtered out of the catalog document — they vanish on reopen (their data
     * directory is wiped by the next same-named CREATE). One namespace:
     * a temp table cannot shadow an existing permanent one (DuckDB's
     * separate temp schema is a documented divergence).
@@ -128,14 +147,17 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     case Lit.LitBool(v)      => v.toString
     case Lit.LitDate(d)      => s"DATE '$d'"
     case Lit.LitTimestamp(t) => s"TIMESTAMP '$t'"
-    case _                   => "NULL"
+    case Lit.LitTime(t)      => s"TIME '$t'"
+    // the text is UTC-normalized; without an offset it reads as UTC
+    case Lit.LitTimestampTz(t) => s"TIMESTAMPTZ '$t'"
+    case Lit.LitNull         => "NULL"
   }
 
   private def exportDb(dir: String): Either[QueryError, QueryResult] = {
     def litSql(l: Lit): String = renderLit(l)
     def createSql(d: TableDesc): String = {
       val cols = d.attributes.map { a =>
-        s"${a.name} ${renderType(a.sqlType)}" +
+        s"${a.name} ${a.sqlType.render}" +
           a.generated.map(g => s" GENERATED ALWAYS AS ($g)").getOrElse("") +
           a.default.map(l => s" DEFAULT ${litSql(l)}").getOrElse("") +
           (if (a.nullable) "" else " NOT NULL")
@@ -145,6 +167,10 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         s" CLUSTERED BY ($c) INTO $n BUCKETS" }.getOrElse("")
       s"CREATE TABLE ${d.name} (${(cols ++ checks).mkString(", ")})$bucket"
     }
+    val exhausted = sequences.collectFirst { case (n, st) if st.next.isEmpty => n }
+    if (exhausted.isDefined)
+      return Left(ViewError(s"EXPORT DATABASE failed: sequence " +
+        s"'${exhausted.get}' is exhausted (CREATE SEQUENCE cannot restart it)"))
     try {
       Files.createDirectories(Paths.get(dir))
       val owned = tables.keys.toSeq.sorted
@@ -185,7 +211,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           s"'${v.replace("'", "''")}'").mkString(", ")});"
       }
       sequences.foreach { case (n, st) =>
-        val start = st.current.map(_ + st.inc).getOrElse(st.start)
+        val start = st.next.get
         val bounds =
           (if (st.minv != Long.MinValue) s" MINVALUE ${st.minv}" else "") +
           (if (st.maxv != Long.MaxValue) s" MAXVALUE ${st.maxv}" else "")
@@ -311,21 +337,15 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   /** USE <schema>: the session's default schema. Unqualified table and
     * view names resolve current-schema-first, then main (DuckDB's
     * search path); CREATEs land in the current schema. Session-scoped
-    * like DuckDB — not persisted. Declared BEFORE the load* calls
-    * below: constructor statements run in order, and the loaders go
-    * through resolution paths that read currentSchema — a later
-    * declaration would leave them running against null.
+    * like DuckDB — not persisted. Declared BEFORE the loadCatalog call
+    * below: constructor statements run in order, and the view replay
+    * goes through resolution paths that read currentSchema — a later
+    * declaration would leave it running against null.
     */
   private var currentSchema: String = "main"
 
   Files.createDirectories(Paths.get(warehouse))
-  loadSchemas()
-  loadNamedTypes()
-  loadMacros()
   loadCatalog()
-  loadViews()
-  loadMatViews()
-  loadSequences()
 
   /** Qualify an unqualified relation name into the current schema
     * (CREATE-side: where a new relation LANDS under USE).
@@ -788,7 +808,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       // OR REPLACE drops an existing same-named relation (whatever its
       // kind) before the plain create; IF NOT EXISTS no-ops when one
       // exists. The stored view/matview SQL keeps the full statement —
-      // loadViews/loadMatViews unwrap the mode on replay.
+      // loadCatalog unwraps the mode on replay.
       case Ast.CreateModeTree(inner, orReplace, ifNotExists) =>
         val name = (inner match {
           case Ast.CreateViewTree(n, _)       => n
@@ -835,7 +855,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
             (if (isTable) "SELECT" else "expression")))
         else {
           macros(n) = Parser.MacroDef(ps, body, isTable)
-          saveMacros()
+          saveCatalog()
           Right(Done(s"created macro $n"))
         }
       case Ast.DropMacroTree(n, ife) =>
@@ -843,7 +863,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           if (ife) Right(Done(s"macro '$n' absent, skipped"))
           else Left(ViewError(s"macro '$n' does not exist"))
         } else {
-          macros.remove(n); saveMacros()
+          macros.remove(n); saveCatalog()
           Right(Done(s"dropped macro $n"))
         }
       case t: Ast.PivotTree          => pivotStmt(t)
@@ -904,7 +924,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           if (ine) Right(Done(s"schema '$n' already exists, skipped"))
           else Left(ViewError(s"schema '$n' already exists"))
         } else {
-          schemas += n; saveSchemas()
+          schemas += n; saveCatalog()
           Right(Done(s"created schema $n"))
         }
       case Ast.DropSchemaTree(n, ife, cascade) =>
@@ -930,7 +950,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
             firstErr match {
               case Some(e) => Left(e)
               case None =>
-                schemas -= n; saveSchemas()
+                schemas -= n; saveCatalog()
                 Right(Done(s"dropped schema $n"))
             }
           }
@@ -1403,13 +1423,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
             .cast(a.sqlType.spark).as(a.name)
         }: _*), desc)
         val before = statistics.get(desc.name).map(_.rowCount).getOrElse(0L)
-        desc.bucket match {
-          case Some(_) =>
-            ensureCatalogTable(desc)
-            aligned.write.mode("append").insertInto(catName(desc.name))
-          case None =>
-            aligned.write.mode("append").parquet(dataPath(desc.name))
-        }
+        appendTo(desc, aligned)
         val after = statistics.markStale(desc, readTable(desc))
         Right(Done(
           s"copied ${after - before} row(s) into ${desc.name} from ${t.path}"))
@@ -1581,27 +1595,6 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   // ---- named types (CREATE TYPE … AS ENUM) ----
 
-  private def typesPath = Paths.get(s"$warehouse/types.json")
-
-  private def saveNamedTypes(): Unit = {
-    val lines = namedTypes.map { case (n, e) =>
-      // \u0001-joined values: the ENUM member text may contain commas
-      s"$n\u0001${e.values.mkString("\u0001")}"
-    }
-    Files.write(typesPath, lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def loadNamedTypes(): Unit = {
-    if (!Files.exists(typesPath)) return
-    Files.readAllLines(typesPath).asScala.filter(_.nonEmpty).foreach { l =>
-      l.split('\u0001') match {
-        case Array(n, vs @ _*) if vs.nonEmpty =>
-          namedTypes(n) = SqlType.SqlEnum(vs.toVector)
-        case _ => () // corrupted line: skip rather than brick the catalog
-      }
-    }
-  }
-
   private def createEnumType(name: String, values: Vector[String],
       ifNotExists: Boolean): Either[QueryError, QueryResult] = {
     if (namedTypes.contains(name)) {
@@ -1610,7 +1603,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       return Left(ViewError(s"type '$name' already exists"))
     }
     namedTypes(name) = SqlType.SqlEnum(values)
-    saveNamedTypes()
+    saveCatalog()
     Right(Done(s"created type $name"))
   }
 
@@ -1628,24 +1621,12 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         s"type '$name' is used by table '${t.name}'"))
       case None =>
         namedTypes.remove(name)
-        saveNamedTypes()
+        saveCatalog()
         Right(Done(s"dropped type $name"))
     }
   }
 
   // ---- schemas (CREATE SCHEMA) ----
-
-  private def schemasPath = Paths.get(s"$warehouse/schemas.txt")
-
-  private def saveSchemas(): Unit =
-    Files.write(schemasPath,
-      schemas.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-
-  private def loadSchemas(): Unit = {
-    if (!Files.exists(schemasPath)) return
-    Files.readAllLines(schemasPath).asScala.filter(_.nonEmpty)
-      .foreach(schemas += _)
-  }
 
   /** The schema part of a qualified table name, when it names a schema
     * that does not exist (creation guard).
@@ -1657,63 +1638,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       case _ => None
     }
 
-  // ---- scalar macros (CREATE MACRO … AS expr) ----
-
-  private def macrosPath = Paths.get(s"$warehouse/macros.json")
-
-  private def saveMacros(): Unit = {
-    // \u0001 joins fields, \u0002 joins params, \u0003 marks a default
-    val lines = macros.map { case (n, m) =>
-      val ps = m.params.map { case (pn, d) =>
-        pn + d.map("\u0003" + _).getOrElse("") }.mkString("\u0002")
-      s"$n\u0001$ps\u0001${m.table}\u0001${m.body.replace("\n", " ")}"
-    }
-    Files.write(macrosPath, lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def loadMacros(): Unit = {
-    if (!Files.exists(macrosPath)) return
-    Files.readAllLines(macrosPath).asScala.filter(_.nonEmpty).foreach { l =>
-      l.split('\u0001') match {
-        case Array(n, ps, tbl, body) =>
-          val params = if (ps.isEmpty) Vector.empty
-            else ps.split('\u0002').toVector.map { pd =>
-              pd.split('\u0003') match {
-                case Array(pn, d) => pn -> Some(d)
-                case Array(pn)    => pn -> None
-                case _            => pd -> None
-              }
-            }
-          macros(n) = Parser.MacroDef(params, body, tbl.toBoolean)
-        case _ => () // corrupted line: skip rather than brick the catalog
-      }
-    }
-  }
-
   // ---- sequences: driver-side named counters (DuckDB surface) ----
-
-  private def sequencesPath = Paths.get(s"$warehouse/sequences.json")
-
-  private def saveSequences(): Unit = {
-    val lines = sequences.map { case (n, s) =>
-      s"$n,${s.start},${s.inc},${s.minv},${s.maxv},${s.cycle}," +
-        s.current.map(_.toString).getOrElse("")
-    }
-    Files.write(sequencesPath, lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def loadSequences(): Unit = {
-    if (!Files.exists(sequencesPath)) return
-    Files.readAllLines(sequencesPath).asScala.filter(_.nonEmpty).foreach { l =>
-      l.split(",", -1) match {
-        case Array(n, st, inc, mn, mx, cy, cur) =>
-          sequences(n) = SeqState(st.toLong, inc.toLong, mn.toLong,
-            mx.toLong, cy.toBoolean,
-            if (cur.isEmpty) None else Some(cur.toLong))
-        case _ => () // corrupted line: skip rather than brick the catalog
-      }
-    }
-  }
 
   private def createSequence(t: Ast.CreateSequenceTree)
       : Either[QueryError, QueryResult] = {
@@ -1735,14 +1660,14 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       return Left(ViewError(
         s"START value ($start) must lie in [$minv, $maxv]"))
     sequences(t.name) = SeqState(start, inc, minv, maxv, t.cycle, None)
-    saveSequences()
+    saveCatalog()
     Right(Done(s"created sequence ${t.name}"))
   }
 
   private def dropSequence(name: String,
       ifExists: Boolean): Either[QueryError, QueryResult] =
     if (sequences.remove(name).isDefined) {
-      saveSequences()
+      saveCatalog()
       Right(Done(s"dropped sequence $name"))
     } else if (ifExists) Right(Done(s"sequence '$name' does not exist, skipped"))
     else Left(ViewError(s"sequence '$name' does not exist"))
@@ -1751,25 +1676,11 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     sequences.get(name.toLowerCase) match {
       case None => Left(ViewError(s"sequence '$name' does not exist"))
       case Some(s) =>
-        // overflow-safe step: a Long overflow IS out-of-bounds (the
-        // default bounds are Long.MaxValue/MinValue themselves)
-        val next: Option[Long] = s.current match {
-          case None => Some(s.start)
-          case Some(c) =>
-            try Some(Math.addExact(c, s.inc))
-            catch { case _: ArithmeticException => None }
-        }
-        next match {
-          case Some(v) if v <= s.maxv && v >= s.minv =>
+        s.next match {
+          case Some(v) =>
             s.current = Some(v)
-            saveSequences()
             Right(v)
-          case _ if s.cycle =>
-            val wrapped = if (s.inc > 0) s.minv else s.maxv
-            s.current = Some(wrapped)
-            saveSequences()
-            Right(wrapped)
-          case _ => Left(ViewError(
+          case None => Left(ViewError(
             s"nextval: reached the ${if (s.inc > 0) "maximum" else "minimum"} " +
               s"value of sequence \"$name\""))
         }
@@ -1790,18 +1701,22 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     * which is also what INSERT … VALUES expression rows desugar to):
     * rows left-to-right, items left-to-right, exactly DuckDB's order.
     * Anywhere else the calls survive to the analyzer's pointed reject.
+    * The catalog saves once per statement that allocated a value, even
+    * when a later call fails, so allocated ids stay monotone across
+    * reopen.
     */
   private final class SeqSubstErr(val err: QueryError) extends RuntimeException
   private def substituteSequences(tree: ParseTree)
       : Either[QueryError, ParseTree] = {
     if (sequences.isEmpty) return Right(tree)
+    var allocated = false
     def walkOp(o: Ast.Operand): Ast.Operand = o match {
       case Ast.Operand.FuncCall(f,
           Seq(Ast.Operand.Literal(Lit.LitString(sn))))
           if f == "nextval" || f == "currval" =>
         val v = (if (f == "nextval") seqNext(sn) else seqCurr(sn)) match {
           case Left(e)  => throw new SeqSubstErr(e)
-          case Right(x) => x
+          case Right(x) => allocated ||= f == "nextval"; x
         }
         Ast.Operand.Literal(Lit.LitLong(v))
       case Ast.Operand.FuncCall(f, as) =>
@@ -1832,11 +1747,10 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     }
     try Right(walkTop(tree))
     catch { case e: SeqSubstErr => Left(e.err) }
+    finally if (allocated) saveCatalog()
   }
 
   // ---- stored views: named queries substituted like CTEs ----
-
-  private def viewsPath = Paths.get(s"$warehouse/views.json")
 
   private def createView(name: String, body: ParseTree,
       stmt: String): Either[QueryError, QueryResult] = {
@@ -1857,15 +1771,13 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           // right catalog key (a view created under USE work stores as
           // work.v, not v)
           viewSql(name) = stmtWithName(stmt, name)
-          saveViews()
+          saveCatalog()
           Right(Done(s"created view $name"))
       }
     }
   }
 
   // ---- materialized views: CTAS + a refreshable stored definition ----
-
-  private def matviewsPath = Paths.get(s"$warehouse/matviews.json")
 
   private def createMatView(name: String, body: ParseTree,
       bucket: Option[(String, Int)], stmt: String): Either[QueryError, QueryResult] = {
@@ -1883,7 +1795,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           val r = execute(boundCtas)
           matviews(name.toLowerCase) = substituted
           matviewSql(name.toLowerCase) = stmtWithName(stmt, name)
-          saveMatViews()
+          saveCatalog()
           r match {
             case Done(msg) => Right(Done(msg.replace("created table",
               "created materialized view")))
@@ -1919,91 +1831,21 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private def dropMatView(name: String, ifExists: Boolean): Either[QueryError, QueryResult] =
     if (matviews.remove(name).isDefined) {
       matviewSql.remove(name)
-      saveMatViews()
+      saveCatalog()
       // drop the backing table through the ordinary DROP path
       Right(execute(BoundDrop(name, tables.get(name))))
     } else if (ifExists) Right(Done(s"materialized view '$name' does not exist, skipped"))
     else Left(ViewError(s"materialized view '$name' does not exist"))
 
-  private def saveMatViews(): Unit = {
-    val enc = java.util.Base64.getEncoder
-    val lines = matviewSql.values.map(s => enc.encodeToString(s.getBytes("UTF-8")))
-    Files.write(matviewsPath, lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  /** Reload definitions only — the DATA is already on disk under the
-    * catalog entry the original CTAS wrote.
-    */
-  private def loadMatViews(): Unit = {
-    if (!Files.exists(matviewsPath)) return
-    // bodies may reference CREATE TYPE names; a stale thread-local from
-    // another database on this thread must not resolve them instead
-    Parser.setNamedTypes(namedTypes.toMap)
-    val dec = java.util.Base64.getDecoder
-    Files.readAllLines(matviewsPath).asScala.filter(_.nonEmpty).foreach { l =>
-      val stmt = new String(dec.decode(l), "UTF-8")
-      val parsed = Parser.parse(stmt).map {
-        case Ast.CreateModeTree(inner, _, _) => inner // replay the plain create
-        case other                           => other
-      }
-      parsed match {
-        case Right(Ast.CreateMatViewTree(name, body, _)) =>
-          matviews(name) = Parser.substituteViews(body, viewsForResolve)
-          matviewSql(name) = stmt
-        case _ => () // corrupted line: skip rather than brick the catalog
-      }
-    }
-  }
-
   private def dropView(name: String, ifExists: Boolean): Either[QueryError, QueryResult] =
     if (views.remove(name).isDefined) {
       viewSql.remove(name)
-      saveViews()
+      saveCatalog()
       Right(Done(s"dropped view '$name'"))
     } else if (ifExists) Right(Done(s"view '$name' does not exist, skipped"))
     else if (tables.contains(name))
       Left(ViewError(s"'$name' is a table — use DROP TABLE"))
     else Left(ViewError(s"view '$name' does not exist"))
-
-  /** Persist the original CREATE VIEW statements (base64, one per line —
-    * statement text may contain anything) and replay them on load.
-    */
-  private def saveViews(): Unit = {
-    val enc = java.util.Base64.getEncoder
-    val lines = viewSql.values.map(s =>
-      enc.encodeToString(s.getBytes("UTF-8")))
-    Files.write(viewsPath, lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def loadViews(): Unit = {
-    if (!Files.exists(viewsPath)) return
-    Parser.setNamedTypes(namedTypes.toMap) // see loadMatViews
-    val dec = java.util.Base64.getDecoder
-    Files.readAllLines(viewsPath).asScala.filter(_.nonEmpty).foreach { l =>
-      val stmt = new String(dec.decode(l), "UTF-8")
-      val parsed = Parser.parse(stmt).map {
-        case Ast.CreateModeTree(inner, _, _) => inner // replay the plain create
-        case other                           => other
-      }
-      parsed match {
-        case Right(Ast.CreateViewTree(name, body)) =>
-          // replay in creation order; earlier views substitute into
-          // later. A schema-qualified view also resolves its schema's
-          // views by BARE name (its creation search path).
-          val s = if (name.contains('.'))
-            name.substring(0, name.indexOf('.')) else "main"
-          val extra =
-            if (s == "main") Map.empty[String, ParseTree]
-            else views.collect {
-              case (k, v) if k.startsWith(s + ".") =>
-                k.stripPrefix(s + ".") -> pinViewBody(k, v)
-            }.toMap
-          views(name) = Parser.substituteViews(body, viewsForResolve ++ extra)
-          viewSql(name) = stmt
-        case _ => () // corrupted line: skip rather than brick the catalog
-      }
-    }
-  }
 
   /** Convenience for SELECTs in tests: query + unwrap. */
   def select(sql: String): Either[QueryError, DataFrame] = query(sql).map {
@@ -2035,13 +1877,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       saveCatalog()
       d
     })
-    desc.bucket match {
-      case Some(_) =>
-        ensureCatalogTable(desc)
-        df.write.mode("append").insertInto(catName(desc.name))
-      case None =>
-        df.write.mode("append").parquet(dataPath(desc.name))
-    }
+    appendTo(desc, df)
     statistics.markStale(desc, readTable(desc))
   }
 
@@ -2096,6 +1932,16 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private def ensureCatalogTable(desc: TableDesc): Unit =
     if (desc.bucket.isDefined && !spark.catalog.tableExists(catName(desc.name)))
       spark.sql(bucketDdl(catName(desc.name), desc, dataPath(desc.name)))
+
+  /** Append a frame to a warehouse table: catalog-routed when bucketed,
+    * so the new files are hash-bucketed on disk; plain parquet files
+    * otherwise.
+    */
+  private def appendTo(desc: TableDesc, df: DataFrame): Unit =
+    if (desc.bucket.isDefined) {
+      ensureCatalogTable(desc)
+      df.write.mode("append").insertInto(catName(desc.name))
+    } else df.write.mode("append").parquet(dataPath(desc.name))
 
   private def readTable(desc: TableDesc): DataFrame =
     externalFormat.get(desc.name) match {
@@ -2272,13 +2118,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         else aligned
       val before = statistics.get(desc.name).map(_.rowCount).getOrElse(0L)
       val srcW = enforceNotNull(src, desc)
-      desc.bucket match {
-        case Some(_) =>
-          ensureCatalogTable(desc)
-          srcW.write.mode("append").insertInto(catName(desc.name))
-        case None =>
-          srcW.write.mode("append").parquet(dataPath(desc.name))
-      }
+      appendTo(desc, srcW)
       val after = statistics.markStale(desc, readTable(desc))
       if (returning) Rows(srcW) // post-materialization image
       else Done(s"inserted ${after - before} row(s) into ${desc.name}")
@@ -2297,14 +2137,9 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       val desc = TableDesc(name, attrs, bucket)
       tables(desc.name) = desc
       Files.createDirectories(Paths.get(s"$warehouse/data/${desc.name}"))
-      ensureCatalogTable(desc)
       statistics.initTable(desc)
       saveCatalog()
-      val named = df.toDF(attrs.map(_.name): _*)
-      desc.bucket match {
-        case Some(_) => named.write.mode("append").insertInto(catName(desc.name))
-        case None    => named.write.mode("append").parquet(dataPath(desc.name))
-      }
+      appendTo(desc, df.toDF(attrs.map(_.name): _*))
       val n = statistics.markStale(desc, readTable(desc))
       Done(s"created table ${desc.name} with $n row(s)")
 
@@ -2315,16 +2150,8 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       // literal NULLs were analysis-checked, but generated columns
       // materialize (and NOT NULL over them re-checks) and CHECK
       // constraints evaluate in the frame pass
-      val df = enforceNotNull(
-        spark.createDataFrame(rdd, desc.sparkSchema), desc)
-      desc.bucket match {
-        case Some(_) =>
-          // catalog-routed insert so the write is hash-bucketed on disk
-          ensureCatalogTable(desc)
-          df.write.mode("append").insertInto(catName(desc.name))
-        case None =>
-          df.write.mode("append").parquet(dataPath(desc.name))
-      }
+      appendTo(desc, enforceNotNull(
+        spark.createDataFrame(rdd, desc.sparkSchema), desc))
       statistics.recordInsert(desc, rows)
       Done(s"inserted ${rows.length} row(s) into ${desc.name}")
 
@@ -2332,11 +2159,9 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       tables(desc.name) = desc
       // a fresh CREATE starts empty: wipe orphaned data files (a TEMP
       // table from a prior session leaves its directory behind because
-      // it is filtered out of catalog.json, not dropped)
+      // it is filtered out of the catalog document, not dropped)
       val createDirP = Paths.get(s"$warehouse/data/${desc.name}")
-      if (Files.exists(createDirP))
-        Files.walk(createDirP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      FileUtils.deleteDirectory(createDirP.toFile)
       Files.createDirectories(createDirP)
       ensureCatalogTable(desc)
       statistics.initTable(desc)
@@ -2422,10 +2247,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       tables.remove(name)
       tempTables -= name
       statistics.dropTable(name)
-      val dirP = Paths.get(dataPath(name))
-      if (Files.exists(dirP))
-        Files.walk(dirP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      FileUtils.deleteDirectory(new java.io.File(dataPath(name)))
       saveCatalog()
       Done(s"dropped table '$name'")
 
@@ -2782,10 +2604,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         }
     }
     val dirP = Paths.get(dir)
-    if (Files.exists(dirP)) {
-      Files.walk(dirP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    FileUtils.deleteDirectory(dirP.toFile)
     Files.move(Paths.get(tmp), dirP)
     if (desc.bucket.isDefined) spark.sql(s"REFRESH TABLE ${catName(desc.name)}")
     val fresh = readTable(desc)
@@ -2889,162 +2708,204 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     tree
   }
 
-  // ---- catalog persistence (JSON sidecar) ----
-  private def catalogPath = Paths.get(s"$warehouse/catalog.json")
+  // ---- catalog persistence: one document, warehouse.json ----
 
-  private def renderType(t: SqlType): String = t.render
-  /** Inverse of SqlType.render for catalog round-trips — must cover
-    * EVERY renderable type (arrays/structs/maps recursively): a table
-    * whose type can't parse back would brick the whole warehouse at
-    * the next open.
-    */
-  private def parseType(s0: String): SqlType = {
-    val s = s0.trim
-    // split a parenthesized list on TOP-LEVEL commas only
-    def splitTop(inner: String): Seq[String] = {
-      val out = Vector.newBuilder[String]
-      val sb = new StringBuilder
-      var depth = 0
-      inner.foreach {
-        case ',' if depth == 0 => out += sb.toString; sb.clear()
-        case c =>
-          if (c == '(') depth += 1 else if (c == ')') depth -= 1
-          sb += c
-      }
-      out += sb.toString
-      out.result()
-    }
-    val vc = "VARCHAR\\((\\d+)\\)".r
-    val vb = "VARBINARY\\((\\d+)\\)".r
-    val dec = "DECIMAL\\((\\d+),(\\d+)\\)".r
-    if (s.endsWith("[]")) SqlType.SqlArray(parseType(s.dropRight(2)))
-    else if (s.startsWith("MAP(") && s.endsWith(")")) {
-      val kv = splitTop(s.stripPrefix("MAP(").stripSuffix(")"))
-      require(kv.length == 2, s"bad catalog MAP type $s")
-      SqlType.SqlMap(parseType(kv(0)), parseType(kv(1)))
-    }
-    else if (s.startsWith("STRUCT(") && s.endsWith(")")) {
-      val fields = splitTop(s.stripPrefix("STRUCT(").stripSuffix(")"))
-        .map { f0 =>
-          val f = f0.trim
-          val sp = f.indexOf(' ')
-          require(sp > 0, s"bad catalog STRUCT field '$f'")
-          f.substring(0, sp) -> parseType(f.substring(sp + 1))
-        }
-      SqlType.SqlStruct(fields.toVector)
-    }
-    else s match {
-      case "BIGINT"    => SqlType.SqlBigInt
-      case "INT"       => SqlType.SqlInt
-      case "SMALLINT"  => SqlType.SqlSmallInt
-      case "DOUBLE"    => SqlType.SqlDouble
-      case "REAL"      => SqlType.SqlReal
-      case "TIMESTAMP" => SqlType.SqlTimestamp
-      case "TIMESTAMPTZ" => SqlType.SqlTimestampTz
-      case "TIME"      => SqlType.SqlTime
-      case "DATE"      => SqlType.SqlDate
-      case "BOOLEAN"   => SqlType.SqlBool
-      case dec(p, sc)  => SqlType.SqlDecimal(p.toInt, sc.toInt)
-      case u if u.startsWith("UNION(") && u.endsWith(")") =>
-        val ms = splitTop(u.stripPrefix("UNION(").stripSuffix(")"))
-          .map { f0 =>
-            val f = f0.trim
-            val sp = f.indexOf(' ')
-            require(sp > 0, s"bad catalog UNION member '$f'")
-            f.substring(0, sp) -> parseType(f.substring(sp + 1))
-          }
-        SqlType.SqlUnion(ms.toVector)
-      case e if e.startsWith("ENUM(") && e.endsWith(")") =>
-        val vals = splitTop(e.stripPrefix("ENUM(").stripSuffix(")"))
-          .map(_.trim.stripPrefix("'").stripSuffix("'").replace("''", "'"))
-        SqlType.SqlEnum(vals.toVector)
-      case vc(n)       => SqlType.SqlVarChar(n.toInt)
-      case vb(n)       => SqlType.SqlVarBinary(n.toInt)
-      case other       => sys.error(s"bad catalog type $other")
-    }
-  }
+  private def catalogPath = Paths.get(s"$warehouse/warehouse.json")
+  // lazy: the constructor's loadCatalog call runs before this line would
+  private lazy val catalogJson = new ObjectMapper()
 
-  /** DEFAULT literals round-trip as (kind, escaped value) pairs. */
+  /** DEFAULT literals as (kind, text) pairs. */
   private def litKV(l: Lit): (String, String) = l match {
-    case Lit.LitLong(v)      => ("long", v.toString)
-    case Lit.LitDouble(v)    => ("double", v.toString)
-    case Lit.LitString(s)    => ("string", s)
-    case Lit.LitDate(s)      => ("date", s)
-    case Lit.LitTimestamp(s) => ("timestamp", s)
-    case Lit.LitBool(v)      => ("bool", v.toString)
-    case Lit.LitNull         => ("null", "")
+    case Lit.LitLong(v)        => ("long", v.toString)
+    case Lit.LitDouble(v)      => ("double", v.toString)
+    case Lit.LitString(s)      => ("string", s)
+    case Lit.LitDate(s)        => ("date", s)
+    case Lit.LitTimestamp(s)   => ("timestamp", s)
+    case Lit.LitTime(s)        => ("time", s)
+    case Lit.LitTimestampTz(s) => ("timestamptz", s)
+    case Lit.LitBool(v)        => ("bool", v.toString)
+    case Lit.LitNull           => ("null", "")
   }
   private def litOfKV(k: String, v: String): Lit = k match {
-    case "long"      => Lit.LitLong(v.toLong)
-    case "double"    => Lit.LitDouble(v.toDouble)
-    case "string"    => Lit.LitString(v)
-    case "date"      => Lit.LitDate(v)
-    case "timestamp" => Lit.LitTimestamp(v)
-    case "bool"      => Lit.LitBool(v.toBoolean)
-    case _           => Lit.LitNull
+    case "long"        => Lit.LitLong(v.toLong)
+    case "double"      => Lit.LitDouble(v.toDouble)
+    case "string"      => Lit.LitString(v)
+    case "date"        => Lit.LitDate(v)
+    case "timestamp"   => Lit.LitTimestamp(v)
+    case "time"        => Lit.LitTime(v)
+    case "timestamptz" => Lit.LitTimestampTz(v)
+    case "bool"        => Lit.LitBool(v.toBoolean)
+    case "null"        => Lit.LitNull
+    case other => throw new IllegalArgumentException(s"unknown DEFAULT kind '$other'")
   }
 
+  /** Write the whole catalog — every mutation calls this — to a temp
+    * file moved into place, so an interrupted write leaves the previous
+    * document intact. Column types are `SqlType.render` text; views and
+    * materialized views are their statements, replayed at open.
+    * Temporary, external and attached tables are left out.
+    */
   private def saveCatalog(): Unit = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
+    val doc = catalogJson.createObjectNode()
+    val schemaArr = doc.putArray("schemas")
+    schemas.toSeq.sorted.foreach(n => schemaArr.add(n))
+    val typeArr = doc.putArray("types")
+    namedTypes.foreach { case (n, e) =>
+      val vs = typeArr.addObject().put("name", n).putArray("values")
+      e.values.foreach(v => vs.add(v))
     }
-    val lines = tables.values.filterNot(t => external.contains(t.name) ||
-      tempTables.contains(t.name)).map { t =>
-      val attrs = t.attributes
-        .map { a =>
-          val d = a.default.map(litKV).map { case (k, v) =>
-            s""","default":{"k":"$k","v":"${esc(v)}"}""" }.getOrElse("")
-          val g = a.generated.map(x => s""","gen":"${esc(x)}"""").getOrElse("")
-          s"""{"name":"${a.name}","type":"${renderType(a.sqlType)}","nullable":${a.nullable}$d$g}"""
-        }
-        .mkString("[", ",", "]")
-      val bucket = t.bucket
-        .map { case (c, n) => s""","bucket":{"col":"$c","n":$n}""" }
-        .getOrElse("")
-      val checks =
-        if (t.checks.isEmpty) ""
-        else t.checks.map(c => s""""${esc(c)}"""").mkString(""","checks":[""", ",", "]")
-      s"""{"table":"${t.name}","attributes":$attrs$bucket$checks}"""
+    val tableArr = doc.putArray("tables")
+    tables.values.filterNot(t => external.contains(t.name) ||
+        tempTables.contains(t.name)).foreach { t =>
+      val o = tableArr.addObject().put("name", t.name)
+      val cols = o.putArray("columns")
+      t.attributes.foreach { a =>
+        val c = cols.addObject().put("name", a.name)
+          .put("type", a.sqlType.render).put("nullable", a.nullable)
+        a.default.map(litKV).foreach { case (k, v) =>
+          c.putObject("default").put("kind", k).put("value", v) }
+        a.generated.foreach(g => c.put("generated", g))
+      }
+      t.bucket.foreach { case (col, n) =>
+        o.putObject("bucket").put("column", col).put("buckets", n) }
+      val checkArr = o.putArray("checks")
+      t.checks.foreach(c => checkArr.add(c))
     }
-    Files.write(catalogPath, lines.mkString("\n").getBytes("UTF-8"))
+    val viewArr = doc.putArray("views")
+    viewSql.values.foreach(v => viewArr.add(v))
+    val matviewArr = doc.putArray("matviews")
+    matviewSql.values.foreach(v => matviewArr.add(v))
+    val macroArr = doc.putArray("macros")
+    macros.foreach { case (n, m) =>
+      val ps = macroArr.addObject().put("name", n).put("table", m.table)
+        .put("body", m.body).putArray("params")
+      m.params.foreach { case (pn, d) =>
+        val po = ps.addObject().put("name", pn)
+        d.foreach(x => po.put("default", x))
+      }
+    }
+    val seqArr = doc.putArray("sequences")
+    sequences.foreach { case (n, q) =>
+      val o = seqArr.addObject().put("name", n).put("start", q.start)
+        .put("increment", q.inc).put("min", q.minv).put("max", q.maxv)
+        .put("cycle", q.cycle)
+      q.current.foreach(c => o.put("current", c))
+    }
+    val tmp = Paths.get(s"$catalogPath.tmp")
+    catalogJson.writerWithDefaultPrettyPrinter().writeValue(tmp.toFile, doc)
+    Files.move(tmp, catalogPath, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Read the catalog document at open. An entry that does not decode
+    * fails the open, naming the file and the entry. A warehouse holding
+    * only the per-kind catalog files of earlier versions fails naming
+    * them: no reader for those formats is kept.
+    */
   private def loadCatalog(): Unit = {
-    if (!Files.exists(catalogPath)) return
-    val attrRe = ("""\{"name":"([^"]+)","type":"([^"]+)","nullable":(true|false)""" +
-      """(?:,"default":\{"k":"([a-z]+)","v":"((?:[^"\\]|\\.)*)"\})?""" +
-      """(?:,"gen":"((?:[^"\\]|\\.)*)")?\}""").r
-    val tableReB =
-      """\{"table":"([^"]+)","attributes":\[(.*?)\],"bucket":\{"col":"([^"]+)","n":(\d+)\}(?:,"checks":\[(.*)\])?\}""".r
-    val tableRe = """\{"table":"([^"]+)","attributes":\[(.*?)\](?:,"checks":\[(.*)\])?\}""".r
-    val checkStrRe = """"((?:[^"\\]|\\.)*)"""".r
-    def unesc(s: String) = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        if (s(i) == '\\' && i + 1 < s.length) { sb += s(i + 1); i += 2 }
-        else { sb += s(i); i += 1 }
+    if (!Files.exists(catalogPath)) {
+      val legacy = Seq("catalog.json", "types.json", "schemas.txt",
+        "macros.json", "sequences.json", "views.json", "matviews.json")
+        .filter(f => Files.exists(Paths.get(s"$warehouse/$f")))
+      if (legacy.nonEmpty) throw new IllegalStateException(
+        s"warehouse '$warehouse' holds catalog files of an earlier format " +
+          s"(${legacy.mkString(", ")}) and no $catalogPath; only the one " +
+          "catalog document is read")
+      return
+    }
+    def fail(what: String, e: Throwable): Nothing =
+      throw new IllegalStateException(
+        s"cannot open catalog $catalogPath: $what: ${e.getMessage}", e)
+    def field(o: JsonNode, k: String, ok: JsonNode => Boolean,
+        kind: String): JsonNode = {
+      val v = o.get(k)
+      require(v != null && ok(v), s"field '$k' is missing or not $kind")
+      v
+    }
+    def str(v: JsonNode): String = {
+      require(v.isTextual, s"$v is not a string")
+      v.textValue
+    }
+    def text(o: JsonNode, k: String) = field(o, k, _.isTextual, "a string").textValue
+    def optText(o: JsonNode, k: String) = Option(o.get(k)).map(_ => text(o, k))
+    def long(o: JsonNode, k: String) = field(o, k,
+      v => v.isIntegralNumber && v.canConvertToLong, "an integer").longValue
+    def bool(o: JsonNode, k: String) = field(o, k, _.isBoolean, "a boolean").booleanValue
+    def items(o: JsonNode, k: String): Seq[JsonNode] =
+      field(o, k, _.isArray, "an array").asScala.toSeq
+    val doc =
+      try catalogJson.readTree(catalogPath.toFile)
+      catch { case NonFatal(e) => fail("not a JSON document", e) }
+    def each(k: String)(decode: JsonNode => Unit): Unit = {
+      val entries =
+        try items(doc, k) catch { case NonFatal(e) => fail(s"section '$k'", e) }
+      entries.zipWithIndex.foreach { case (e, i) =>
+        val label = Option(if (e.isTextual) e else e.get("name"))
+          .filter(_.isTextual).map(n => s" '${n.textValue.take(60)}'").getOrElse("")
+        try decode(e) catch { case NonFatal(x) => fail(s"$k[$i]$label", x) }
       }
-      sb.toString
     }
-    def attrsOf(attrs: String): Seq[AttributeDesc] =
-      attrRe.findAllMatchIn(attrs).map { m =>
-        val dflt = Option(m.group(4)).map(k => litOfKV(k, unesc(m.group(5))))
-        AttributeDesc(m.group(1), parseType(m.group(2)), m.group(3).toBoolean,
-          default = dflt, generated = Option(m.group(6)).map(unesc))
-      }.toSeq
-    def checksOf(g: String): Seq[String] =
-      Option(g).toSeq.flatMap(cs =>
-        checkStrRe.findAllMatchIn(cs).map(m => unesc(m.group(1))).toSeq)
-    Files.readAllLines(catalogPath).asScala.filter(_.nonEmpty).foreach {
-      case tableReB(name, attrs, bCol, bN, chks) =>
-        // the session-catalog entry re-registers lazily on first read
-        tables(name) = TableDesc(name, attrsOf(attrs), Some((bCol, bN.toInt)),
-          checksOf(chks))
-      case tableRe(name, attrs, chks) =>
-        tables(name) = TableDesc(name, attrsOf(attrs), None, checksOf(chks))
-      case line => sys.error(s"bad catalog line: $line")
+    def replayed(stmt: String): ParseTree = Parser.parse(stmt) match {
+      case Right(Ast.CreateModeTree(inner, _, _)) => inner // the plain create
+      case Right(t) => t
+      case Left(err) => throw new IllegalArgumentException(err.toString)
     }
+    each("schemas")(e => schemas += str(e))
+    each("types")(e => namedTypes(text(e, "name")) =
+      SqlType.SqlEnum(items(e, "values").map(str).toVector))
+    each("macros")(e => macros(text(e, "name")) = Parser.MacroDef(
+      items(e, "params").map(p => text(p, "name") -> optText(p, "default")).toVector,
+      text(e, "body"), bool(e, "table")))
+    each("tables") { e =>
+      val name = text(e, "name")
+      val attrs = items(e, "columns").map { c =>
+        val tpe = text(c, "type")
+        AttributeDesc(text(c, "name"), Parser.parseTypeText(tpe).fold(err =>
+          throw new IllegalArgumentException(
+            s"column '${text(c, "name")}' type '$tpe': ${err.msg}"), identity),
+          bool(c, "nullable"),
+          Option(c.get("default")).map(d => litOfKV(text(d, "kind"), text(d, "value"))),
+          optText(c, "generated"))
+      }
+      // a bucketed table's session-catalog entry re-registers lazily on
+      // first read
+      tables(name) = TableDesc(name, attrs,
+        Option(e.get("bucket")).map(b =>
+          (text(b, "column"), long(b, "buckets").toInt)),
+        items(e, "checks").map(str))
+    }
+    // view bodies may name CREATE TYPE types; a stale thread-local from
+    // another database on this thread must not resolve them instead
+    Parser.setNamedTypes(namedTypes.toMap)
+    each("views")(e => replayed(str(e)) match {
+      case Ast.CreateViewTree(name, body) =>
+        // replay in creation order; earlier views substitute into
+        // later. A schema-qualified view also resolves its schema's
+        // views by BARE name (its creation search path).
+        val s = if (name.contains('.'))
+          name.substring(0, name.indexOf('.')) else "main"
+        val extra =
+          if (s == "main") Map.empty[String, ParseTree]
+          else views.collect {
+            case (k, v) if k.startsWith(s + ".") =>
+              k.stripPrefix(s + ".") -> pinViewBody(k, v)
+          }.toMap
+        views(name) = Parser.substituteViews(body, viewsForResolve ++ extra)
+        viewSql(name) = str(e)
+      case _ => throw new IllegalArgumentException("not a CREATE VIEW statement")
+    })
+    // materialized views reload their definitions only — the data is on
+    // disk under the table entry the original CTAS wrote
+    each("matviews")(e => replayed(str(e)) match {
+      case Ast.CreateMatViewTree(name, body, _) =>
+        matviews(name) = Parser.substituteViews(body, viewsForResolve)
+        matviewSql(name) = str(e)
+      case _ => throw new IllegalArgumentException(
+        "not a CREATE MATERIALIZED VIEW statement")
+    })
+    each("sequences")(e => sequences(text(e, "name")) = SeqState(
+      long(e, "start"), long(e, "increment"), long(e, "min"), long(e, "max"),
+      bool(e, "cycle"), Option(e.get("current")).map(_ => long(e, "current"))))
   }
 }
 

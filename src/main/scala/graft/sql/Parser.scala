@@ -5142,25 +5142,26 @@ object Parser {
               }
               _ <- p.eatSym(")")
             } yield SqlType.SqlVarChar(n)
-          // UNION(name TYPE, …) — DuckDB's tagged sum type
-          case "union" =>
+          case "varbinary" =>
             for {
               _ <- p.eatSym("(")
-              members <- {
-                def loop(acc: Vector[(String, SqlType)])
-                    : Either[ParseError, Vector[(String, SqlType)]] =
-                  p.ident().flatMap { mn =>
-                    parseType(p).flatMap { mt =>
-                      p.peek match {
-                        case TSym(",", _) => p.next(); loop(acc :+ (mn -> mt))
-                        case _            => Right(acc :+ (mn -> mt))
-                      }
-                    }
-                  }
-                loop(Vector.empty)
+              n <- p.peek match {
+                case TInt(v, _) if v > 0 && v <= 65535 => p.next(); Right(v.toInt)
+                case t => Left(ParseError("expected VARBINARY length", t.pos))
               }
               _ <- p.eatSym(")")
-            } yield SqlType.SqlUnion(members)
+            } yield SqlType.SqlVarBinary(n)
+          case "map" =>
+            for {
+              _ <- p.eatSym("(")
+              k <- parseType(p)
+              _ <- p.eatSym(",")
+              v <- parseType(p)
+              _ <- p.eatSym(")")
+            } yield SqlType.SqlMap(k, v)
+          // UNION(name TYPE, …) — DuckDB's tagged sum type
+          case "union"  => parseMembers(p).map(SqlType.SqlUnion)
+          case "struct" => parseMembers(p).map(SqlType.SqlStruct)
           // anonymous inline ENUM('a', 'b') type (DuckDB)
           case "enum" =>
             for {
@@ -5207,6 +5208,44 @@ object Parser {
       t
     }
   }
+
+  /** `(name TYPE, …)` of a STRUCT or UNION. A member name is a bare word
+    * (reserved words included: the position is unambiguous) or a quoted
+    * string, the form `SqlType.render` gives any other name.
+    */
+  private def parseMembers(p: P): Either[ParseError, Vector[(String, SqlType)]] = {
+    def loop(acc: Vector[(String, SqlType)])
+        : Either[ParseError, Vector[(String, SqlType)]] = {
+      val name = p.peek match {
+        case TIdent(s, _) => p.next(); Right(s)
+        case TStr(s, _)   => p.next(); Right(s)
+        case t            => Left(ParseError("expected member name", t.pos))
+      }
+      name.flatMap(mn => parseType(p).flatMap { mt =>
+        p.peek match {
+          case TSym(",", _) => p.next(); loop(acc :+ (mn -> mt))
+          case _            => Right(acc :+ (mn -> mt))
+        }
+      })
+    }
+    for {
+      _ <- p.eatSym("(")
+      ms <- loop(Vector.empty)
+      _ <- p.eatSym(")")
+    } yield ms
+  }
+
+  /** A type's text (a column type stored in the warehouse catalog) as a
+    * SqlType: the one inverse of `SqlType.render`.
+    */
+  def parseTypeText(s: String): Either[ParseError, SqlType] =
+    lex(s).flatMap { toks =>
+      val p = new P(toks, s)
+      parseType(p).flatMap(t => p.peek match {
+        case TEnd(_) => Right(t)
+        case tk => Left(ParseError("type not parsed fully", tk.pos))
+      })
+    }
 
   /** CLUSTERED BY (col) INTO n BUCKETS — shared by CREATE TABLE and CTAS. */
   private def parseBucketClause(p: P): Either[ParseError, Option[(String, Int)]] =

@@ -91,13 +91,24 @@ object SqlType {
     def spark: DataType = StructType(
       StructField("tag", StringType) +:
         members.map { case (n, t) => StructField(n, t.spark) })
-    def render = s"UNION(${members.map { case (n, t) => s"$n ${t.render}" }.mkString(", ")})"
+    def render = s"UNION${membersSql(members)}"
   }
   final case class SqlStruct(fields: Vector[(String, SqlType)]) extends SqlType {
     def spark: DataType =
       StructType(fields.map { case (n, t) => StructField(n, t.spark) })
-    def render = s"STRUCT(${fields.map { case (n, t) => s"$n ${t.render}" }.mkString(", ")})"
+    def render = s"STRUCT${membersSql(fields)}"
   }
+
+  /** `(name TYPE, …)` of a STRUCT or UNION, each name as the type
+    * grammar reads it back: a plain identifier bare, any other name as a
+    * quoted string.
+    */
+  private def membersSql(ms: Vector[(String, SqlType)]): String =
+    ms.map { case (n, t) =>
+      val name =
+        if (n.matches("[A-Za-z_][A-Za-z0-9_]*")) n else s"'${n.replace("'", "''")}'"
+      s"$name ${t.render}"
+    }.mkString("(", ", ", ")")
 
   def fromSpark(dt: DataType): SqlType = dt match {
     case LongType         => SqlBigInt

@@ -44,6 +44,25 @@ class QueriesSpec extends AnyFunSuite {
         TimeSeries.defs, Streaming.defs).map(_.size).sum)
   }
 
+  test("a bounded stream source removes its copies under other file counts") {
+    import java.nio.file.{Files, Paths}
+    val tmp = System.getProperty("java.io.tmpdir")
+    val fixture = Integer.toHexString(sf.hashCode)
+    val stale = Paths.get(tmp, s"graft_stream_docs_p7_$fixture")
+    val otherFixture = Paths.get(tmp, "graft_stream_docs_p7_0")
+    Files.createDirectories(stale)
+    Files.createDirectories(otherFixture)
+    // without its _SUCCESS marker the current copy is written again
+    val current = Paths.get(tmp, s"graft_stream_docs_p32_$fixture")
+    Files.deleteIfExists(current.resolve("_SUCCESS"))
+    try {
+      assert(SparkEntry.queries("q_stream_dedup_replay")(spark, sf).count() > 0)
+      assert(Files.exists(current.resolve("_SUCCESS")))
+      assert(!Files.exists(stale))
+      assert(Files.exists(otherFixture)) // another scale factor's copy stays
+    } finally Files.deleteIfExists(otherFixture)
+  }
+
   test("entry (flagship) returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

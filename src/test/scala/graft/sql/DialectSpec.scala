@@ -2243,6 +2243,10 @@ class DialectSpec extends AnyFunSuite {
     // CTAS carrying struct/map columns persists those types too
     run("CREATE TABLE nested AS SELECT MAP {'k': 1} AS m, " +
       "{'a': 1, 'b': 'x'} AS st, [[1, 2], [3]] AS ll")
+    // the nested types and VARBINARY are declarable in DDL as well
+    run("CREATE TABLE bin (b VARBINARY(8), m MAP(VARCHAR(5), INT[]), " +
+      "st STRUCT(a INT, 'my field' VARCHAR(3)), u UNION(n INT, s VARCHAR(4)))")
+    run("INSERT INTO bin VALUES (NULL, NULL, NULL, NULL)")
     // a FRESH database over the same warehouse must load every type
     // (a miss here bricks the whole warehouse at open)
     val db2 = new GraftDatabase(spark, wh)
@@ -2250,6 +2254,17 @@ class DialectSpec extends AnyFunSuite {
       .fold(e => fail(e.msg), _.count()) == 1L)
     assert(db2.select("SELECT m['k'] AS v, struct_extract(st, 'a') AS a " +
       "FROM nested").fold(e => fail(e.msg), _.count()) == 1L)
+    // EXPORT → IMPORT: the exported DDL spells every type in the grammar
+    // IMPORT parses, so the imported tables carry the same columns
+    val dir = Files.createTempDirectory("graft-types-export").toString
+    db2.query(s"EXPORT DATABASE '$dir'").fold(e => fail(e.msg), identity)
+    val db3 = freshDb()
+    db3.query(s"IMPORT DATABASE '$dir'").fold(e => fail(e.msg), identity)
+    for (t <- Seq("alltypes", "nested", "bin"))
+      assert(db3.catalogTables(t).attributes == db.catalogTables(t).attributes, t)
+    assert(db3.select("SELECT m['k'] AS v FROM nested")
+      .fold(e => fail(e.msg), _.collect().toSeq.map(_.getSeq[Int](0))) ==
+      Seq(Seq(1)))
   }
 
   test("ANALYZE rebuilds statistics; SET/RESET acknowledge as no-ops") {

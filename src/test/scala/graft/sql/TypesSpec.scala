@@ -62,6 +62,27 @@ class TypesSpec extends AnyFunSuite {
     assert(Convert(L.LitLong(1), SqlVarChar(5)).isLeft)
   }
 
+  test("every SqlType renders to text the parser's type grammar reads back equal") {
+    val scalars = Seq(SqlBigInt, SqlInt, SqlSmallInt, SqlDouble, SqlReal,
+      SqlTimestamp, SqlTimestampTz, SqlTime, SqlDate, SqlBool,
+      SqlDecimal(10, 2), SqlDecimal(38, 0), SqlVarChar(20), SqlVarChar(65535),
+      SqlVarBinary(8), SqlEnum(Vector("it's", "a,b", "plain")))
+    // plain, spaced, upper-case, reserved-word and quote-bearing names
+    val members = Vector("plain" -> SqlInt, "my field" -> SqlVarChar(5),
+      "Upper" -> SqlDouble, "key" -> SqlBigInt, "it's" -> SqlBool)
+    val nested = Seq(
+      SqlArray(SqlArray(SqlInt)),
+      SqlMap(SqlVarChar(10), SqlMap(SqlInt, SqlArray(SqlDouble))),
+      SqlStruct(members), SqlUnion(members),
+      SqlStruct(Vector("inner" -> SqlStruct(members), "u" -> SqlUnion(members),
+        "m" -> SqlMap(SqlInt, SqlStruct(members)))),
+      SqlUnion(Vector("Inner Union" -> SqlUnion(members),
+        "l" -> SqlArray(SqlStruct(members)))),
+      SqlMap(SqlEnum(Vector("x", "y")), SqlArray(SqlUnion(members))))
+    for (t <- scalars ++ scalars.map(SqlArray) ++ nested)
+      assert(Parser.parseTypeText(t.render) == Right(t), t.render)
+  }
+
   test("null converts to anything (nullable attributes)") {
     for (t <- Seq(SqlBigInt, SqlInt, SqlSmallInt, SqlVarChar(1), SqlVarBinary(1)))
       assert(Convert(L.LitNull, t) == Right(null))
