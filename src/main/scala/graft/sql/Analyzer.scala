@@ -96,34 +96,82 @@ object Analyzer {
   final case class BoundCol(binding: String, attr: AttributeDesc) {
     def render: String = s"$binding.${attr.name}"
   }
-  sealed trait BoundOperand
+  /** A bound expression node: an operand or a predicate. Each node type
+    * defines its `children` once (see [[TreeNode]]); typing and binding
+    * keep their per-node logic.
+    */
+  sealed trait BoundNode extends TreeNode[BoundNode]
+  object BoundNode {
+    /** Does the tree contain an aggregate call? A subquery's aggregates
+      * are its own.
+      */
+    def containsAgg(n: BoundNode): Boolean = n.exists {
+      case _: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg => true
+      case _: BoundOperand.BSubVal                            => false
+    }
+
+    /** Aggregate call nodes of a tree (CASE conditions included) — the
+      * hidden-column units of an expression-over-aggregates projection.
+      */
+    def aggNodes(n: BoundNode): Seq[BoundOperand] = n.collect {
+      case a: BoundOperand.BAgg        => Seq(a)
+      case a: BoundOperand.BOrderedAgg => Seq(a)
+    }
+
+    /** Does the tree contain a subquery (scalar operand or predicate)? */
+    def hasSubquery(n: BoundNode): Boolean = n.exists { case _: Subquery => true }
+  }
+
+  /** A node carrying a subquery body and its decorrelated equality pairs
+    * (outer col, inner col) — neither is a child.
+    */
+  sealed trait Subquery extends BoundNode {
+    def sub: BoundSelect
+    def pairs: Seq[(BoundCol, BoundCol)]
+  }
+
+  sealed trait BoundOperand extends BoundNode
   object BoundOperand {
-    final case class BCol(c: BoundCol) extends BoundOperand
-    final case class BLit(l: Lit) extends BoundOperand
+    /** An operand without child nodes. */
+    sealed trait Leaf extends BoundOperand { def children: Seq[BoundNode] = Nil }
+    final case class BCol(c: BoundCol) extends Leaf
+    final case class BLit(l: Lit) extends Leaf
     /** Aggregate operand — HAVING / ORDER BY / computed-projection scope.
       * `distinct` = COUNT/SUM(DISTINCT …).
       */
     final case class BAgg(func: String, arg: Option[BoundOperand],
-        distinct: Boolean = false) extends BoundOperand
-    final case class BArith(op: Char, l: BoundOperand, r: BoundOperand) extends BoundOperand
+        distinct: Boolean = false) extends BoundOperand {
+      def children = arg.toSeq
+    }
+    final case class BArith(op: Char, l: BoundOperand, r: BoundOperand) extends BoundOperand {
+      def children = Seq(l, r)
+    }
     /** Scalar function call over bound arguments (arity pre-checked). */
-    final case class BFunc(name: String, args: Seq[BoundOperand]) extends BoundOperand
+    final case class BFunc(name: String, args: Seq[BoundOperand]) extends BoundOperand {
+      def children = args
+    }
     /** Searched CASE over bound branches. */
     final case class BCase(branches: Seq[(BoundExpr, BoundOperand)],
-        elseOp: Option[BoundOperand]) extends BoundOperand
+        elseOp: Option[BoundOperand]) extends BoundOperand {
+      def children = branches.flatMap { case (c, v) => Seq(c, v) } ++ elseOp
+    }
     /** CAST(operand AS type) — lowers to Spark's cast. */
-    final case class BCast(op: BoundOperand, tpe: SqlType) extends BoundOperand
+    final case class BCast(op: BoundOperand, tpe: SqlType) extends BoundOperand {
+      def children = Seq(op)
+    }
     /** TRY_CAST — NULL on conversion failure (Spark's try_cast). */
-    final case class BTryCast(op: BoundOperand, tpe: SqlType) extends BoundOperand
+    final case class BTryCast(op: BoundOperand, tpe: SqlType) extends BoundOperand {
+      def children = Seq(op)
+    }
     /** Calendar interval literal (valid only beside + / - against a
       * date/timestamp operand — enforced at binding).
       */
-    final case class BInterval(n: Long, unit: String) extends BoundOperand
+    final case class BInterval(n: Long, unit: String) extends Leaf
     /** A reference to a computed OUTPUT column by its projected name —
       * QUALIFY scope only (window aliases resolve to the precomputed
       * window column, which the lowering attaches before the filter).
       */
-    final case class BOut(name: String, tpe: SqlType) extends BoundOperand
+    final case class BOut(name: String, tpe: SqlType) extends Leaf
     /** Ordered aggregate: string_agg(v, sep ORDER BY keys) — the keys'
       * shared direction rides on each pair (analyzer enforces equality).
       * The carrier of every call form but the plain one (see
@@ -131,7 +179,9 @@ object Analyzer {
       */
     final case class BOrderedAgg(func: String, arg: BoundOperand, sep: String,
         order: Seq[(BoundOperand, Boolean)], distinct: Boolean = false)
-      extends BoundOperand
+      extends BoundOperand {
+      def children = arg +: order.map(_._1)
+    }
 
     /** A scalar subquery as a general operand (inside arithmetic /
       * functions / CASE values). Uncorrelated: one broadcast 1-row
@@ -141,11 +191,12 @@ object Analyzer {
       * frame left-joined on the decorrelated equalities — never
       * per-row re-execution. Valid in SELECT-item expressions, WHERE
       * and (uncorrelated) HAVING; rejected inside aggregate arguments
-      * and in GROUP/ORDER BY.
+      * and in GROUP/ORDER BY. The inequality's operands (`ineq`) are
+      * not children: they straddle the outer and the subquery scope.
       */
     final case class BSubVal(sub: BoundSelect, guard: Boolean,
         pairs: Seq[(BoundCol, BoundCol)] = Nil,
-        ineq: Option[CorrIneq] = None) extends BoundOperand
+        ineq: Option[CorrIneq] = None) extends Leaf with Subquery
 
     /** A bound lambda (list higher-order function argument): params
       * resolve to BLambdaVar references in the body; everything else in
@@ -153,76 +204,11 @@ object Analyzer {
       * lower as ordinary references inside Spark's lambda).
       */
     final case class BLambda(params: Seq[String],
-        body: BoundOperand) extends BoundOperand
+        body: BoundOperand) extends BoundOperand {
+      def children = Seq(body)
+    }
     /** A lambda parameter reference, typed as the list's element type. */
-    final case class BLambdaVar(name: String, tpe: SqlType) extends BoundOperand
-
-    /** Does the operand tree contain an aggregate call? */
-    def containsAgg(o: BoundOperand): Boolean = o match {
-      case _: BAgg          => true
-      case _: BOrderedAgg   => true
-      case BArith(_, l, r)  => containsAgg(l) || containsAgg(r)
-      case BFunc(_, args)   => args.exists(containsAgg)
-      case BCast(x, _)      => containsAgg(x)
-      case BTryCast(x, _)   => containsAgg(x)
-      case BLambda(_, b)    => containsAgg(b)
-      case BCase(bs, els) =>
-        bs.exists { case (c, v) => exprOperands(c).exists(containsAgg) || containsAgg(v) } ||
-          els.exists(containsAgg)
-      case _                => false
-    }
-
-    /** Aggregate call nodes of an operand tree (CASE conditions
-      * included) — the hidden-column units of an expression-over-
-      * aggregates projection.
-      */
-    def aggNodes(o: BoundOperand): Seq[BoundOperand] = o match {
-      case a: BAgg          => Seq(a)
-      case a: BOrderedAgg   => Seq(a)
-      case BArith(_, l, r)  => aggNodes(l) ++ aggNodes(r)
-      case BFunc(_, args)   => args.flatMap(aggNodes)
-      case BCast(x, _)      => aggNodes(x)
-      case BTryCast(x, _)   => aggNodes(x)
-      case BLambda(_, b)    => aggNodes(b)
-      case BCase(bs, els) =>
-        bs.flatMap { case (c, v) =>
-          exprOperands(c).flatMap(aggNodes) ++ aggNodes(v) } ++
-          els.toSeq.flatMap(aggNodes)
-      case _                => Nil
-    }
-
-    /** Does the operand tree contain a subquery (CASE conditions
-      * included)?
-      */
-    def operandHasSub(o: BoundOperand): Boolean = o match {
-      case BCase(bs, els) =>
-        bs.exists { case (c, v) =>
-          BoundExpr.containsSub(c) || operandHasSub(v) } ||
-          els.exists(operandHasSub)
-      case BArith(_, l, r) => operandHasSub(l) || operandHasSub(r)
-      case BFunc(_, args)  => args.exists(operandHasSub)
-      case BCast(x, _)     => operandHasSub(x)
-      case BTryCast(x, _)  => operandHasSub(x)
-      case BAgg(_, arg, _) => arg.exists(operandHasSub)
-      case BLambda(_, b)   => operandHasSub(b)
-      case _: BSubVal      => true
-      case _               => false
-    }
-
-    /** Direct operands of an expression tree (subquery bodies excluded). */
-    def exprOperands(e: BoundExpr): Seq[BoundOperand] = e match {
-      case BoundExpr.BAnd(l, r)     => exprOperands(l) ++ exprOperands(r)
-      case BoundExpr.BOr(l, r)      => exprOperands(l) ++ exprOperands(r)
-      case BoundExpr.BNot(x)        => exprOperands(x)
-      case BoundExpr.BIsNull(o, _)  => Seq(o)
-      case BoundExpr.BLike(o, _, _, _, _) => Seq(o)
-      case BoundExpr.BCmp(_, l, r)  => Seq(l, r)
-      case BoundExpr.BInSub(o, _, _, _)     => Seq(o)
-      case BoundExpr.BRowInSub(os, _, _, _)    => os
-      case BoundExpr.BExists(_, _, _, _)    => Nil
-      case BoundExpr.BCmpSub(_, o, _, _, _) => Seq(o)
-      case BoundExpr.BQuantSub(_, o, _, _, _) => Seq(o)
-    }
+    final case class BLambdaVar(name: String, tpe: SqlType) extends Leaf
   }
   /** One correlated NON-equality conjunct of a scalar-aggregate subquery
     * (running-total bodies: … WHERE o2.k = o.k AND o2.t <= o.t),
@@ -234,15 +220,27 @@ object Analyzer {
   final case class CorrIneq(op: CmpOp, outerOp: BoundOperand,
       innerOp: BoundOperand)
 
-  sealed trait BoundExpr
+  sealed trait BoundExpr extends BoundNode
   object BoundExpr {
-    final case class BAnd(l: BoundExpr, r: BoundExpr) extends BoundExpr
-    final case class BOr(l: BoundExpr, r: BoundExpr) extends BoundExpr
-    final case class BCmp(op: CmpOp, l: BoundOperand, r: BoundOperand) extends BoundExpr
-    final case class BNot(e: BoundExpr) extends BoundExpr
-    final case class BIsNull(o: BoundOperand, negated: Boolean) extends BoundExpr
+    final case class BAnd(l: BoundExpr, r: BoundExpr) extends BoundExpr {
+      def children = Seq(l, r)
+    }
+    final case class BOr(l: BoundExpr, r: BoundExpr) extends BoundExpr {
+      def children = Seq(l, r)
+    }
+    final case class BCmp(op: CmpOp, l: BoundOperand, r: BoundOperand) extends BoundExpr {
+      def children = Seq(l, r)
+    }
+    final case class BNot(e: BoundExpr) extends BoundExpr {
+      def children = Seq(e)
+    }
+    final case class BIsNull(o: BoundOperand, negated: Boolean) extends BoundExpr {
+      def children = Seq(o)
+    }
     final case class BLike(o: BoundOperand, pattern: String, negated: Boolean,
-        ci: Boolean = false, escape: Option[Char] = None) extends BoundExpr
+        ci: Boolean = false, escape: Option[Char] = None) extends BoundExpr {
+      def children = Seq(o)
+    }
     /** [NOT] IN (SELECT …): lowers to left-semi/anti join. `pairs` are the
       * decorrelated equality conjuncts (outer col, inner col) pulled out of
       * the subquery's WHERE into the join condition; empty = uncorrelated.
@@ -250,7 +248,10 @@ object Analyzer {
       * NULL probe against a non-empty set, makes the predicate non-TRUE.
       */
     final case class BInSub(o: BoundOperand, sub: BoundSelect,
-        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean) extends BoundExpr
+        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean)
+      extends BoundExpr with Subquery {
+      def children = Seq(o)
+    }
     /** [NOT] EXISTS (SELECT …): left-semi/anti join on the decorrelated
       * equality pairs (uncorrelated = constant-condition semi join against
       * a one-row frame). `residual` = correlated NON-equality conjuncts
@@ -262,7 +263,9 @@ object Analyzer {
       */
     final case class BExists(sub: BoundSelect,
         pairs: Seq[(BoundCol, BoundCol)], negated: Boolean,
-        residual: Seq[BoundExpr] = Nil) extends BoundExpr
+        residual: Seq[BoundExpr] = Nil) extends BoundExpr with Subquery {
+      def children = Nil
+    }
     /** Scalar comparison subquery — broadcast join of the one-row frame +
       * filter. `guard = false` when one row is a static fact (group-less
       * aggregate, or LIMIT ≤ 1); otherwise the lowering enforces the
@@ -273,7 +276,10 @@ object Analyzer {
       * by construction, so no guard).
       */
     final case class BCmpSub(op: CmpOp, o: BoundOperand, sub: BoundSelect,
-        guard: Boolean, pairs: Seq[(BoundCol, BoundCol)] = Nil) extends BoundExpr
+        guard: Boolean, pairs: Seq[(BoundCol, BoundCol)] = Nil)
+      extends BoundExpr with Subquery {
+      def children = Seq(o)
+    }
     /** Quantified comparison — <probe> <cmp> ANY/ALL (SELECT …) for the
       * combinations that don't desugar to [NOT] IN. Lowers as a facts
       * frame (count, non-null count, min, max — grouped by the
@@ -284,7 +290,10 @@ object Analyzer {
       * NULL, and the empty set reads FALSE for ANY / TRUE for ALL.
       */
     final case class BQuantSub(op: CmpOp, o: BoundOperand, sub: BoundSelect,
-        all: Boolean, pairs: Seq[(BoundCol, BoundCol)] = Nil) extends BoundExpr
+        all: Boolean, pairs: Seq[(BoundCol, BoundCol)] = Nil)
+      extends BoundExpr with Subquery {
+      def children = Seq(o)
+    }
     /** (a, b, …) IN (SELECT …) — row-value membership: ONE left-semi
       * join on every component equality plus the decorrelated pairs.
       * Positive top-level WHERE conjuncts only (analyzer-enforced), so
@@ -292,24 +301,15 @@ object Analyzer {
       * filtering false.
       */
     final case class BRowInSub(os: Seq[BoundOperand], sub: BoundSelect,
-        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean) extends BoundExpr
+        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean)
+      extends BoundExpr with Subquery {
+      def children = os
+    }
 
-    /** Does the bound expression contain a subquery? Operand positions
-      * (CASE conditions) are traversed too.
-      */
-    def containsSub(e: BoundExpr): Boolean = e match {
-      case BAnd(l, r)   => containsSub(l) || containsSub(r)
-      case BOr(l, r)    => containsSub(l) || containsSub(r)
-      case BNot(x)      => containsSub(x)
-      case _: BInSub    => true
-      case _: BRowInSub => true
-      case _: BExists   => true
-      case _: BCmpSub   => true
-      case _: BQuantSub => true
-      case BCmp(_, l, r) =>
-        BoundOperand.operandHasSub(l) || BoundOperand.operandHasSub(r)
-      case BIsNull(o, _)        => BoundOperand.operandHasSub(o)
-      case BLike(o, _, _, _, _) => BoundOperand.operandHasSub(o)
+    /** The AND-tree flattened into its conjuncts (OR subtrees stay whole). */
+    def conjuncts(e: BoundExpr): Seq[BoundExpr] = e match {
+      case BAnd(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other      => Seq(other)
     }
   }
 
@@ -339,60 +339,24 @@ object Analyzer {
         alias: String, frame: Option[WinFrame] = None) extends BoundItem
   }
 
-  /** All columns referenced by an operand tree (aggregate arguments are
-    * NOT traversed — they are exempt from group-scope checks).
+  /** The columns a tree references in its own scope: column operands
+    * plus each subquery's outer-facing correlation columns (its pairs,
+    * and an EXISTS's residual outer columns). Aggregate arguments are not
+    * traversed — they are exempt from group-scope checks.
     */
-  def operandCols(o: BoundOperand): Seq[BoundCol] = o match {
-    case BoundOperand.BCol(c)         => Seq(c)
-    case BoundOperand.BArith(_, l, r) => operandCols(l) ++ operandCols(r)
-    case BoundOperand.BFunc(_, args)  => args.flatMap(operandCols)
-    case BoundOperand.BCast(x, _)     => operandCols(x)
-    case BoundOperand.BTryCast(x, _)  => operandCols(x)
-    case BoundOperand.BCase(bs, els) =>
-      bs.flatMap { case (c, v) => exprCols(c) ++ operandCols(v) } ++
-        els.toSeq.flatMap(operandCols)
-    case BoundOperand.BSubVal(_, _, pairs, _) => pairs.map(_._1)
-    case BoundOperand.BLambda(_, b)   => operandCols(b)
-    case _                            => Nil
+  def columnsOf(n: BoundNode): Seq[BoundCol] = n.collect {
+    case BoundOperand.BCol(c) => Seq(c)
+    case _: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg => Nil
+    case BoundExpr.BExists(sub, ps, _, res) =>
+      ps.map(_._1) ++ residualOuterCols(sub, res)
+    case q: Subquery => q.children.flatMap(columnsOf) ++ q.pairs.map(_._1)
   }
 
-  /** Like operandCols but traverses into aggregate arguments too (scope
+  /** Every column operand of a tree, aggregate arguments included (scope
     * leak detection in decorrelation).
     */
-  private def operandColsDeep(o: BoundOperand): Seq[BoundCol] = o match {
-    case BoundOperand.BCol(c)         => Seq(c)
-    case BoundOperand.BArith(_, l, r) => operandColsDeep(l) ++ operandColsDeep(r)
-    case BoundOperand.BAgg(_, arg, _) => arg.toSeq.flatMap(operandColsDeep)
-    case BoundOperand.BOrderedAgg(_, arg, _, ord, _) =>
-      operandColsDeep(arg) ++ ord.flatMap(k => operandColsDeep(k._1))
-    case BoundOperand.BFunc(_, args)  => args.flatMap(operandColsDeep)
-    case BoundOperand.BCast(x, _)     => operandColsDeep(x)
-    case BoundOperand.BTryCast(x, _)  => operandColsDeep(x)
-    case BoundOperand.BCase(bs, els) =>
-      bs.flatMap { case (c, v) =>
-        BoundOperand.exprOperands(c).flatMap(operandColsDeep) ++ operandColsDeep(v)
-      } ++ els.toSeq.flatMap(operandColsDeep)
-    case BoundOperand.BLambda(_, b)   => operandColsDeep(b)
-    case _                            => Nil
-  }
-
-  /** All columns referenced directly by an expression tree (subquery
-    * bodies are NOT traversed — only their outer-facing operands/pairs).
-    */
-  def exprCols(e: BoundExpr): Seq[BoundCol] = e match {
-    case BoundExpr.BAnd(l, r)       => exprCols(l) ++ exprCols(r)
-    case BoundExpr.BOr(l, r)        => exprCols(l) ++ exprCols(r)
-    case BoundExpr.BNot(x)          => exprCols(x)
-    case BoundExpr.BIsNull(o, _)    => operandCols(o)
-    case BoundExpr.BLike(o, _, _, _, _) => operandCols(o)
-    case BoundExpr.BCmp(_, l, r)    => operandCols(l) ++ operandCols(r)
-    case BoundExpr.BInSub(o, _, ps, _) => operandCols(o) ++ ps.map(_._1)
-    case BoundExpr.BRowInSub(os, _, ps, _) => os.flatMap(operandCols) ++ ps.map(_._1)
-    case BoundExpr.BExists(s, ps, _, res) =>
-      ps.map(_._1) ++ residualOuterCols(s, res)
-    case BoundExpr.BCmpSub(_, o, _, _, ps) => operandCols(o) ++ ps.map(_._1)
-    case BoundExpr.BQuantSub(_, o, _, _, ps) => operandCols(o) ++ ps.map(_._1)
-  }
+  private def columnsDeep(n: BoundNode): Seq[BoundCol] =
+    n.collect { case BoundOperand.BCol(c) => Seq(c) }
 
   /** ASOF JOIN ON decomposition. The ON must contain exactly one
     * inequality conjunct whose sides split cleanly into a step-side
@@ -405,20 +369,16 @@ object Analyzer {
     */
   def asofParts(on: BoundExpr, stepB: String)
       : Either[String, (BoundOperand, Boolean)] = {
-    def conjuncts(e: BoundExpr): Seq[BoundExpr] = e match {
-      case BoundExpr.BAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other                => Seq(other)
-    }
     // Some(true) = operand reads the step table only; Some(false) = the
     // outer side only; None = mixed or constant (unusable as a side)
     def side(o: BoundOperand): Option[Boolean] = {
-      val bs = operandCols(o).map(_.binding).toSet
+      val bs = columnsOf(o).map(_.binding).toSet
       if (bs.isEmpty) None
       else if (bs == Set(stepB)) Some(true)
       else if (!bs(stepB)) Some(false)
       else None
     }
-    val ineqs = conjuncts(on).flatMap {
+    val ineqs = BoundExpr.conjuncts(on).flatMap {
       case BoundExpr.BCmp(op, l, r) if op == CmpOp.Ge || op == CmpOp.Gt ||
           op == CmpOp.Le || op == CmpOp.Lt =>
         (side(l), side(r)) match {
@@ -476,12 +436,8 @@ object Analyzer {
       ineq: AsofIneq, stepOnly: Seq[BoundExpr], fallback: Boolean)
 
   def asofDecompose(on: BoundExpr, stepB: String): Option[AsofParts] = {
-    def conjuncts(e: BoundExpr): Seq[BoundExpr] = e match {
-      case BoundExpr.BAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other                => Seq(other)
-    }
     def side(o: BoundOperand): Option[Boolean] = {
-      val bs = operandCols(o).map(_.binding).toSet
+      val bs = columnsOf(o).map(_.binding).toSet
       if (bs.isEmpty) None
       else if (bs == Set(stepB)) Some(true)
       else if (!bs(stepB)) Some(false)
@@ -494,10 +450,10 @@ object Analyzer {
     def residual(c: BoundExpr): Unit = {
       // step-only (or constant) conjuncts prefilter the step side;
       // anything reading the outer side needs the candidate-join fallback
-      val bs = exprCols(c).map(_.binding).toSet
+      val bs = columnsOf(c).map(_.binding).toSet
       if (bs.subsetOf(Set(stepB))) stepOnly += c else fallback = true
     }
-    for (c <- conjuncts(on)) c match {
+    for (c <- BoundExpr.conjuncts(on)) c match {
       case BoundExpr.BCmp(CmpOp.Eq, l, r) =>
         (side(l), side(r)) match {
           case (Some(false), Some(true)) => eqs += ((l, r))
@@ -529,43 +485,20 @@ object Analyzer {
     if (res.isEmpty) Nil
     else {
       val inner = (sub.tables ++ sub.joinSteps.map(_.table)).map(_.binding).toSet
-      res.flatMap(exprCols).filterNot(c => inner(c.binding))
+      res.flatMap(columnsOf).filterNot(c => inner(c.binding))
     }
   }
 
   /** Any residual-carrying EXISTS in the tree (operand CASE conditions
     * included; subquery BODIES excluded — they validate themselves).
     * Residual correlation is only lowerable as a semi/anti-join
-    * condition, i.e. for a top-level WHERE conjunct; these walkers let
-    * the analyzer reject it everywhere else (under OR/NOT, in CASE, in
+    * condition, i.e. for a top-level WHERE conjunct; this lets the
+    * analyzer reject it everywhere else (under OR/NOT, in CASE, in
     * projection/QUALIFY scope) instead of risking marker-join row
     * duplication.
     */
-  private def hasResidualExists(x: BoundExpr): Boolean = x match {
-    case BoundExpr.BAnd(l, r) => hasResidualExists(l) || hasResidualExists(r)
-    case BoundExpr.BOr(l, r)  => hasResidualExists(l) || hasResidualExists(r)
-    case BoundExpr.BNot(y)    => hasResidualExists(y)
-    case BoundExpr.BExists(_, _, _, res) => res.nonEmpty
-    case BoundExpr.BCmp(_, l, r) =>
-      opHasResidualExists(l) || opHasResidualExists(r)
-    case BoundExpr.BIsNull(o, _)        => opHasResidualExists(o)
-    case BoundExpr.BLike(o, _, _, _, _) => opHasResidualExists(o)
-    case BoundExpr.BInSub(o, _, _, _)   => opHasResidualExists(o)
-    case BoundExpr.BRowInSub(os, _, _, _)  => os.exists(opHasResidualExists)
-    case BoundExpr.BCmpSub(_, o, _, _, _)   => opHasResidualExists(o)
-    case BoundExpr.BQuantSub(_, o, _, _, _) => opHasResidualExists(o)
-  }
-  private def opHasResidualExists(o: BoundOperand): Boolean = o match {
-    case BoundOperand.BCase(bs, els) =>
-      bs.exists { case (c, v) => hasResidualExists(c) || opHasResidualExists(v) } ||
-        els.exists(opHasResidualExists)
-    case BoundOperand.BArith(_, l, r) =>
-      opHasResidualExists(l) || opHasResidualExists(r)
-    case BoundOperand.BFunc(_, args)  => args.exists(opHasResidualExists)
-    case BoundOperand.BCast(x, _)     => opHasResidualExists(x)
-    case BoundOperand.BAgg(_, arg, _) => arg.exists(opHasResidualExists)
-    case _ => false
-  }
+  private def hasResidualExists(n: BoundNode): Boolean =
+    n.exists { case BoundExpr.BExists(_, _, _, res) => res.nonEmpty }
 
   private val residualPositionError = BadSubquery(
     "EXISTS with a correlated non-equality conjunct is only supported " +
@@ -576,11 +509,7 @@ object Analyzer {
     */
   private def validateResidualWhere(e: BoundExpr)
       : Either[AnalyzerError, Unit] = {
-    def conj(x: BoundExpr): Seq[BoundExpr] = x match {
-      case BoundExpr.BAnd(l, r) => conj(l) ++ conj(r)
-      case o                    => Seq(o)
-    }
-    if (conj(e).exists(c =>
+    if (BoundExpr.conjuncts(e).exists(c =>
         !c.isInstanceOf[BoundExpr.BExists] && hasResidualExists(c)))
       Left(residualPositionError)
     else Right(())
@@ -616,31 +545,27 @@ object Analyzer {
     inner ++= sub.tables.map(_.binding)
     inner ++= sub.joinSteps.map(_.table.binding)
     def isOuter(c: BoundCol) = !inner(c.binding)
-    def conj(e: BoundExpr): Seq[BoundExpr] = e match {
-      case BoundExpr.BAnd(l, r) => conj(l) ++ conj(r)
-      case other                => Seq(other)
-    }
     val nonPredCols: Seq[BoundCol] =
       sub.projection.flatMap {
         case BoundItem.BICol(c, _)      => Seq(c)
-        case BoundItem.BIExpr(op, _)    => operandColsDeep(op)
-        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(operandColsDeep)
+        case BoundItem.BIExpr(op, _)    => columnsDeep(op)
+        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(columnsDeep)
         case BoundItem.BIWin(_, args, parts, ord, _, _) =>
-          (args ++ parts).flatMap(operandColsDeep) ++
-            ord.flatMap(o => operandColsDeep(o._1))
+          (args ++ parts).flatMap(columnsDeep) ++
+            ord.flatMap(o => columnsDeep(o._1))
         // a scalar item's own correlation keys: if any points past THIS
         // subquery's scope, the outer-col check below rejects (depth-2
         // correlation through a projection item is not decorrelated)
         case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
-          iqo.toSeq.flatMap(x => operandColsDeep(x.outerOp))
+          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
       } ++ sub.groupBy.flatMap {
         case BoundGroupKey.GKCol(c)      => Seq(c)
-        case BoundGroupKey.GKExpr(op, _) => operandColsDeep(op)
+        case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
       } ++ sub.orderBy.flatMap {
-        case (BoundOrderKey.OKOperand(op), _) => operandColsDeep(op)
+        case (BoundOrderKey.OKOperand(op), _) => columnsDeep(op)
         case (BoundOrderKey.OKOutput(_), _)   => Nil
-      } ++ sub.having.toSeq.flatMap(exprCols) ++
-        sub.joinSteps.flatMap(js => exprCols(js.on))
+      } ++ sub.having.toSeq.flatMap(columnsOf) ++
+        sub.joinSteps.flatMap(js => columnsOf(js.on))
     nonPredCols.find(isOuter) match {
       case Some(c) => Left(BadSubquery(
         s"correlated reference ${c.render} is only supported as an equality in the subquery's WHERE"))
@@ -652,7 +577,7 @@ object Analyzer {
         val extraSteps = Vector.newBuilder[BoundJoinStep]
         val extraDerived = Map.newBuilder[String, BoundQuery]
         val queue = scala.collection.mutable.Queue.empty[BoundExpr]
-        queue ++= sub.predicate.map(conj).getOrElse(Nil)
+        queue ++= sub.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
         // merge a nested subquery's body into this one (existential
         // flattening); its conjuncts re-enter the queue so deeper nesting
         // flattens level by level
@@ -673,7 +598,7 @@ object Analyzer {
           extraTables ++= isub.tables
           extraSteps ++= isub.joinSteps
           extraDerived ++= isub.derived
-          queue ++= isub.predicate.map(conj).getOrElse(Nil)
+          queue ++= isub.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
           inEq.foreach(kept += _)
           for ((oc, ic) <- ipairs) {
             if (isOuter(oc)) pairs += ((oc, ic))
@@ -691,11 +616,11 @@ object Analyzer {
             // column the grouped key lowers to
             case BoundExpr.BCmp(CmpOp.Eq, BoundOperand.BCol(ic), op)
                 if !isOuter(ic) && exprKeys.contains(op) &&
-                  operandCols(op).forall(isOuter) =>
+                  columnsOf(op).forall(isOuter) =>
               pairs += ((exprKeys(op), ic))
             case BoundExpr.BCmp(CmpOp.Eq, op, BoundOperand.BCol(ic))
                 if !isOuter(ic) && exprKeys.contains(op) &&
-                  operandCols(op).forall(isOuter) =>
+                  columnsOf(op).forall(isOuter) =>
               pairs += ((exprKeys(op), ic))
             case BoundExpr.BExists(isub, ipairs, false, ires)
                 if ipairs.exists(p => isOuter(p._1)) =>
@@ -707,7 +632,7 @@ object Analyzer {
               queue ++= ires
             case BoundExpr.BInSub(o, isub, ipairs, false)
                 if ipairs.exists(p => isOuter(p._1)) &&
-                  operandCols(o).forall(c => !isOuter(c)) =>
+                  columnsOf(o).forall(c => !isOuter(c)) =>
               // x IN (SELECT v …) under existence ≡ ∃ row with x = v
               val inVal = isub.projection.head match {
                 case BoundItem.BICol(ic, _)   => BoundOperand.BCol(ic)
@@ -719,12 +644,12 @@ object Analyzer {
               flatten(isub, ipairs,
                 Some(BoundExpr.BCmp(CmpOp.Eq, o, inVal))).foreach(e => return Left(e))
             case other =>
-              exprCols(other).find(isOuter) match {
+              columnsOf(other).find(isOuter) match {
                 case Some(cc) =>
                   // a correlated NON-equality conjunct (l2.k <> l1.k,
                   // inner > outer, …): where the consumer is a semi/anti
                   // join it simply rides the join condition as a residual
-                  if (allowResidual && !BoundExpr.containsSub(other))
+                  if (allowResidual && !BoundNode.hasSubquery(other))
                     residual += other
                   else return Left(BadSubquery(
                     s"correlated reference ${cc.render} is only supported as a " +
@@ -816,7 +741,7 @@ object Analyzer {
       distinctOn: Seq[BoundOperand] = Nil) extends BoundQuery {
     def isAggregate: Boolean = groupBy.nonEmpty || projection.exists {
       case _: BoundItem.BIAgg           => true
-      case BoundItem.BIExpr(op, _)      => BoundOperand.containsAgg(op)
+      case BoundItem.BIExpr(op, _)      => BoundNode.containsAgg(op)
       case _                            => false
     }
   }
@@ -899,40 +824,36 @@ object Analyzer {
     inner ++= sub.tables.map(_.binding)
     inner ++= sub.joinSteps.map(_.table.binding)
     def isOuter(c: BoundCol) = !inner(c.binding)
-    def conj(e: BoundExpr): Seq[BoundExpr] = e match {
-      case BoundExpr.BAnd(l, r) => conj(l) ++ conj(r)
-      case other                => Seq(other)
-    }
     val nonPredCols: Seq[BoundCol] =
       sub.projection.flatMap {
         case BoundItem.BICol(c, _)         => Seq(c)
-        case BoundItem.BIExpr(op, _)       => operandColsDeep(op)
-        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(operandColsDeep)
+        case BoundItem.BIExpr(op, _)       => columnsDeep(op)
+        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(columnsDeep)
         case BoundItem.BIWin(_, args, parts, ord, _, _) =>
-          (args ++ parts).flatMap(operandColsDeep) ++
-            ord.flatMap(o => operandColsDeep(o._1))
+          (args ++ parts).flatMap(columnsDeep) ++
+            ord.flatMap(o => columnsDeep(o._1))
         case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
-          iqo.toSeq.flatMap(x => operandColsDeep(x.outerOp))
+          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
       } ++ sub.groupBy.flatMap {
         case BoundGroupKey.GKCol(c)      => Seq(c)
-        case BoundGroupKey.GKExpr(op, _) => operandColsDeep(op)
+        case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
       } ++ sub.orderBy.flatMap {
-        case (BoundOrderKey.OKOperand(op), _) => operandColsDeep(op)
+        case (BoundOrderKey.OKOperand(op), _) => columnsDeep(op)
         case (BoundOrderKey.OKOutput(_), _)   => Nil
-      } ++ sub.having.toSeq.flatMap(exprCols) ++
-        sub.joinSteps.flatMap(js => exprCols(js.on))
+      } ++ sub.having.toSeq.flatMap(columnsOf) ++
+        sub.joinSteps.flatMap(js => columnsOf(js.on))
     nonPredCols.find(isOuter) match {
       case Some(c) => Left(BadSubquery(
         s"a LATERAL reference (${c.render}) is only supported as an equality in the body's WHERE"))
       case None =>
         val pairs = Vector.newBuilder[(BoundCol, BoundCol)]
         val kept = Vector.newBuilder[BoundExpr]
-        for (c <- sub.predicate.map(conj).getOrElse(Nil)) c match {
+        for (c <- sub.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)) c match {
           case BoundExpr.BCmp(CmpOp.Eq, BoundOperand.BCol(a), BoundOperand.BCol(b))
               if isOuter(a) != isOuter(b) =>
             if (isOuter(a)) pairs += ((a, b)) else pairs += ((b, a))
           case other =>
-            exprCols(other).find(isOuter) match {
+            columnsOf(other).find(isOuter) match {
               case Some(cc) => return Left(BadSubquery(
                 s"a LATERAL reference (${cc.render}) is only supported as a " +
                   "top-level equality conjunct"))
@@ -1426,45 +1347,21 @@ object Analyzer {
     case BoundItem.BISub(inner, _, _, _, _) => scalarOutputType(inner)
   }
 
-  /** Every subquery in an operand tree, CASE conditions included — a
-    * miss here would skip the pre-append materialization for a
-    * self-referencing INSERT or under-count recursive self-references.
+  /** Every subquery in a tree, CASE conditions included — a miss here
+    * would skip the pre-append materialization for a self-referencing
+    * INSERT or under-count recursive self-references.
     */
-  private def opSubsOf(o: BoundOperand): Seq[BoundSelect] = o match {
-    case BoundOperand.BCase(bs, els) =>
-      bs.flatMap { case (c, v) => exprSubsOf(c) ++ opSubsOf(v) } ++
-        els.toSeq.flatMap(opSubsOf)
-    case BoundOperand.BArith(_, l, r) => opSubsOf(l) ++ opSubsOf(r)
-    case BoundOperand.BFunc(_, as)    => as.flatMap(opSubsOf)
-    case BoundOperand.BCast(x, _)     => opSubsOf(x)
-    case BoundOperand.BAgg(_, arg, _) => arg.toSeq.flatMap(opSubsOf)
-    case BoundOperand.BSubVal(sub, _, _, _) => Seq(sub)
-    case _                            => Nil
-  }
-
-  /** Every subquery in an expression tree (operand positions included). */
-  private def exprSubsOf(x: BoundExpr): Seq[BoundSelect] = x match {
-    case BoundExpr.BAnd(l, r) => exprSubsOf(l) ++ exprSubsOf(r)
-    case BoundExpr.BOr(l, r)  => exprSubsOf(l) ++ exprSubsOf(r)
-    case BoundExpr.BNot(y)    => exprSubsOf(y)
-    case BoundExpr.BInSub(o, sub, _, _)     => opSubsOf(o) :+ sub
-    case BoundExpr.BRowInSub(os, sub, _, _)    => os.flatMap(opSubsOf) :+ sub
-    case BoundExpr.BExists(sub, _, _, _)    => Seq(sub)
-    case BoundExpr.BCmpSub(_, o, sub, _, _) => opSubsOf(o) :+ sub
-    case BoundExpr.BQuantSub(_, o, sub, _, _) => opSubsOf(o) :+ sub
-    case BoundExpr.BCmp(_, l, r)  => opSubsOf(l) ++ opSubsOf(r)
-    case BoundExpr.BIsNull(o, _)  => opSubsOf(o)
-    case BoundExpr.BLike(o, _, _, _, _) => opSubsOf(o)
-  }
+  private def subqueriesOf(n: BoundNode): Seq[BoundSelect] =
+    n.collect { case q: Subquery => q.children.flatMap(subqueriesOf) :+ q.sub }
 
   /** Every expression-position subquery of a SELECT (WHERE, HAVING and
     * projection items).
     */
   private[sql] def exprSubqueriesOf(s: BoundSelect): Seq[BoundSelect] =
-    (s.predicate.toSeq ++ s.having.toSeq).flatMap(exprSubsOf) ++
+    (s.predicate.toSeq ++ s.having.toSeq).flatMap(subqueriesOf) ++
       s.projection.flatMap {
         case BoundItem.BISub(sub, _, _, _, _) => Seq(sub)
-        case BoundItem.BIExpr(op, _)       => opSubsOf(op)
+        case BoundItem.BIExpr(op, _)       => subqueriesOf(op)
         case _                             => Nil
       }
 
@@ -1508,20 +1405,14 @@ object Analyzer {
     */
   def referencedTables(q: BoundQuery): Set[String] = q match {
     case s: BoundSelect =>
-      val subs = (s.predicate.toSeq ++ s.having.toSeq).flatMap(exprSubsOf)
       // derived tables (FROM-list subqueries) contribute the tables THEY
       // read, not their synthetic alias TableDesc — otherwise
       // INSERT INTO t SELECT * FROM (SELECT * FROM t) d misses the
       // self-reference and skips the pre-append materialization
-      val projSubs = s.projection.flatMap {
-        case BoundItem.BISub(sub, _, _, _, _) => Seq(sub)
-        case BoundItem.BIExpr(op, _)       => opSubsOf(op)
-        case _                             => Nil
-      }
       val derivedNames = s.derived.keysIterator.map(_.toLowerCase).toSet
       (s.tables ++ s.joinSteps.map(_.table)).map(_.desc.name)
         .filterNot(n => derivedNames.contains(n.toLowerCase)).toSet ++
-        (subs ++ projSubs).flatMap(referencedTables) ++
+        exprSubqueriesOf(s).flatMap(referencedTables) ++
         s.derived.values.flatMap(referencedTables)
     case u: BoundUnion =>
       referencedTables(u.first) ++ u.rest.flatMap(r => referencedTables(r._2))
@@ -1667,7 +1558,7 @@ object Analyzer {
                   Seq(FTable(TableRef(tname, None))), None), cat).flatMap { bs =>
                   val bad = bs.isAggregate || bs.projection.exists {
                     case _: BoundItem.BIWin | _: BoundItem.BISub => true
-                    case BoundItem.BIExpr(op, _) => BoundOperand.operandHasSub(op)
+                    case BoundItem.BIExpr(op, _) => BoundNode.hasSubquery(op)
                     case _ => false
                   }
                   if (bad) Left(BadFunction(
@@ -1857,53 +1748,28 @@ object Analyzer {
         Seq(FTable(TableRef(desc.name, None))), Some(e)),
       new Catalog { def resolve(t: String) = if (t.equalsIgnoreCase(desc.name)) Some(desc) else None }
     ).map(_.predicate.get).flatMap { b =>
-      if (BoundExpr.containsSub(b))
+      if (BoundNode.hasSubquery(b))
         Left(BadSubquery("subqueries are not supported in DELETE/UPDATE predicates"))
       else Right(b)
     }
 
-  /** Parse-level subquery detection on a DML WHERE — decides whether the
-    * predicate can lower as a plain filter or needs the row-id rewrite.
-    */
   /** A row-value IN reachable through a marker position (under OR/NOT):
     * the per-mask compatibility joins grow 2^k, so the component count
     * is capped. Correlated probes ride the same frames with the
     * decorrelated keys as extra grouping columns.
     */
-  private def rowInMarkerIssue(e: BoundExpr): Option[String] = e match {
-    case BoundExpr.BAnd(l, r) => rowInMarkerIssue(l).orElse(rowInMarkerIssue(r))
-    case BoundExpr.BOr(l, r)  => rowInMarkerIssue(l).orElse(rowInMarkerIssue(r))
-    case BoundExpr.BNot(x)    => rowInMarkerIssue(x)
-    case BoundExpr.BRowInSub(os, _, _, _) =>
-      if (os.length > 3)
-        Some("row-value IN here supports at most 3 components " +
-          "(the null-aware decomposition grows 2^k)")
-      else None
-    case _ => None
-  }
+  private def rowInMarkerIssue(e: BoundExpr): Option[String] = e.collect {
+    case BoundExpr.BRowInSub(os, _, _, _) if os.length > 3 =>
+      Seq("row-value IN here supports at most 3 components " +
+        "(the null-aware decomposition grows 2^k)")
+  }.headOption
 
-  private def parseExprHasSub(e: Expr): Boolean = e match {
-    case Expr.And(l, r) => parseExprHasSub(l) || parseExprHasSub(r)
-    case Expr.Or(l, r)  => parseExprHasSub(l) || parseExprHasSub(r)
-    case Expr.Not(x)    => parseExprHasSub(x)
-    case Expr.InSubquery(_, _, _) | Expr.RowInSubquery(_, _, _) |
-         Expr.Exists(_, _) |
-         Expr.CmpSubquery(_, _, _) | Expr.QuantSubquery(_, _, _, _) => true
-    case Expr.Cmp(_, l, r)   => parseOpHasSub(l) || parseOpHasSub(r)
-    case Expr.IsNull(o, _)   => parseOpHasSub(o)
-    case Expr.Like(o, _, _, _, _) => parseOpHasSub(o)
-  }
-  private def parseOpHasSub(o: Operand): Boolean = o match {
-    case Operand.Arith(_, l, r)  => parseOpHasSub(l) || parseOpHasSub(r)
-    case Operand.FuncCall(_, as) => as.exists(parseOpHasSub)
-    case Operand.Cast(x, _)      => parseOpHasSub(x)
-    case Operand.TryCast(x, _)   => parseOpHasSub(x)
-    case Operand.Lambda(_, b)    => parseOpHasSub(b)
-    case Operand.CaseWhen(bs, els) =>
-      bs.exists { case (c, v) => parseExprHasSub(c) || parseOpHasSub(v) } ||
-        els.exists(parseOpHasSub)
-    case _: Operand.ScalarSub    => true
-    case _ => false
+  /** Parse-level subquery detection on a DML WHERE — decides whether the
+    * predicate can lower as a plain filter or needs the row-id rewrite.
+    */
+  private def parseHasSub(n: Ast.Node): Boolean = n.exists {
+    case _: Operand.ScalarSub | _: Expr.InSubquery | _: Expr.RowInSubquery |
+         _: Expr.Exists | _: Expr.CmpSubquery | _: Expr.QuantSubquery => true
   }
 
   /** The row-id match select for a subquery-bearing DML WHERE: the target
@@ -1935,7 +1801,7 @@ object Analyzer {
       case Some(desc) =>
         d.where match {
           case None    => Right(BoundDelete(desc, None))
-          case Some(e) if parseExprHasSub(e) =>
+          case Some(e) if parseHasSub(e) =>
             matchedSelect(desc, e, cat).map(ms => BoundDelete(desc, None, Some(ms)))
           case Some(e) => bindSingleTableExpr(desc, e).map(b => BoundDelete(desc, Some(b)))
         }
@@ -1952,7 +1818,7 @@ object Analyzer {
       new Catalog { def resolve(t: String) =
         if (t.equalsIgnoreCase(desc.name)) Some(desc) else None }
     ).flatMap(_.projection.head match {
-      case BoundItem.BIExpr(b, _) if BoundOperand.containsAgg(b) =>
+      case BoundItem.BIExpr(b, _) if BoundNode.containsAgg(b) =>
         Left(BadAggregate("aggregates are not valid in UPDATE SET"))
       case BoundItem.BIExpr(b, _) => Right(b)
       case other => Left(BadFunction(s"unexpected SET value $other"))
@@ -2040,39 +1906,12 @@ object Analyzer {
         // frame on either join side and still reject toward WHEN … AND.
         // SET / INSERT values ride the BSubVal machinery (uncorrelated =
         // one broadcast 1-row frame; correlated = per-key aggregate).
-        def onConj(e: Expr): Seq[Expr] = e match {
-          case Expr.And(l, r) => onConj(l) ++ onConj(r)
-          case other          => Seq(other)
-        }
-        def opRefs(o: Operand): Seq[ColRef] = o match {
-          case Operand.Col(r)          => Seq(r)
-          case Operand.Arith(_, l, r)  => opRefs(l) ++ opRefs(r)
-          case Operand.FuncCall(_, as) => as.flatMap(opRefs)
-          case Operand.Cast(x, _)      => opRefs(x)
-          case Operand.TryCast(x, _)   => opRefs(x)
-          case Operand.Lambda(_, b)    => opRefs(b)
-          case Operand.CaseWhen(bs, els) =>
-            bs.flatMap { case (c, v) => exprRefs(c) ++ opRefs(v) } ++
-              els.toSeq.flatMap(opRefs)
-          case _ => Nil // literals / intervals / subquery internals
-        }
-        def exprRefs(e: Expr): Seq[ColRef] = e match {
-          case Expr.And(l, r)           => exprRefs(l) ++ exprRefs(r)
-          case Expr.Or(l, r)            => exprRefs(l) ++ exprRefs(r)
-          case Expr.Not(x)              => exprRefs(x)
-          case Expr.Cmp(_, l, r)        => opRefs(l) ++ opRefs(r)
-          case Expr.IsNull(o, _)        => opRefs(o)
-          case Expr.Like(o, _, _, _, _) => opRefs(o)
-          case Expr.InSubquery(o, _, _) => opRefs(o)
-          case Expr.RowInSubquery(os, _, _)   => os.flatMap(opRefs)
-          case Expr.Exists(_, _)              => Nil
-          case Expr.CmpSubquery(_, l, _)      => opRefs(l)
-          case Expr.QuantSubquery(_, l, _, _) => opRefs(l)
-        }
-        val onConjs = onConj(m.on)
-        val onSubConjs = onConjs.zipWithIndex.filter(c => parseExprHasSub(c._1))
+        def refsOf(n: Ast.Node): Seq[ColRef] =
+          n.collect { case Operand.Col(r) => Seq(r) }
+        val onConjs = Expr.conjuncts(m.on)
+        val onSubConjs = onConjs.zipWithIndex.filter(c => parseHasSub(c._1))
         for ((c, _) <- onSubConjs) {
-          val rs = exprRefs(c)
+          val rs = refsOf(c)
           if (rs.exists(_.binding.exists(_.equalsIgnoreCase(talias))))
             return Left(BadSubquery(
               "a MERGE ON subquery conjunct may reference only SOURCE " +
@@ -2086,7 +1925,7 @@ object Analyzer {
         val onRewritten: Expr =
           if (onSubConjs.isEmpty) m.on
           else {
-            val plain = onConjs.filterNot(parseExprHasSub)
+            val plain = onConjs.filterNot(parseHasSub)
             val helperEqs = onSubConjs.map { case (_, i) =>
               Expr.Cmp(CmpOp.Eq,
                 Operand.Col(ColRef(Some(salias), s"__moncnd_$i")),
@@ -2292,7 +2131,7 @@ object Analyzer {
         u.where match {
           case None    => Right(BoundUpdate(desc, sets.result(), None,
             subSets = subSets.result()))
-          case Some(e) if parseExprHasSub(e) =>
+          case Some(e) if parseHasSub(e) =>
             matchedSelect(desc, e, cat).map(ms =>
               BoundUpdate(desc, sets.result(), None, Some(ms), subSets.result()))
           case Some(e) => bindSingleTableExpr(desc, e).map(b =>
@@ -2745,46 +2584,8 @@ object Analyzer {
     // predicate instantiated per matched column (the same match rules
     // as the select-item forms: partial regex, EXCLUDE validated).
     def expandColumnsWhere(e0: Expr): Either[AnalyzerError, Expr] = {
-      def conjuncts(x: Expr): Seq[Expr] = x match {
-        case Expr.And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other          => Seq(other)
-      }
-      def opCols(o: Operand): Option[Operand.ColumnsAll] = o match {
-        case c: Operand.ColumnsAll   => Some(c)
-        case Operand.Arith(_, l, r)  => opCols(l).orElse(opCols(r))
-        case Operand.FuncCall(_, as) => as.flatMap(opCols(_)).headOption
-        case Operand.Cast(x, _)      => opCols(x)
-        case Operand.TryCast(x, _)   => opCols(x)
-        case _                       => None
-      }
-      def exprCols(x: Expr): Option[Operand.ColumnsAll] = x match {
-        case Expr.Cmp(_, l, r)          => opCols(l).orElse(opCols(r))
-        case Expr.IsNull(o, _)          => opCols(o)
-        case Expr.Like(o, _, _, _, _)   => opCols(o)
-        case Expr.Not(i)                => exprCols(i)
-        case Expr.Or(l, r)              => exprCols(l).orElse(exprCols(r))
-        case Expr.And(l, r)             => exprCols(l).orElse(exprCols(r))
-        case _                          => None
-      }
-      def substOp(o: Operand, r: ColRef): Operand = o match {
-        case _: Operand.ColumnsAll   => Operand.Col(r)
-        case Operand.Arith(c, l, rr) => Operand.Arith(c, substOp(l, r), substOp(rr, r))
-        case Operand.FuncCall(f, as) => Operand.FuncCall(f, as.map(substOp(_, r)))
-        case Operand.Cast(x, t)      => Operand.Cast(substOp(x, r), t)
-        case Operand.TryCast(x, t)   => Operand.TryCast(substOp(x, r), t)
-        case other                   => other
-      }
-      def substExpr(x: Expr, r: ColRef): Expr = x match {
-        case Expr.Cmp(op, l, rr)  => Expr.Cmp(op, substOp(l, r), substOp(rr, r))
-        case Expr.IsNull(o, n)    => Expr.IsNull(substOp(o, r), n)
-        case Expr.Like(o, p2, n, ci, esc) => Expr.Like(substOp(o, r), p2, n, ci, esc)
-        case Expr.Not(i)          => Expr.Not(substExpr(i, r))
-        case Expr.Or(l, rr)       => Expr.Or(substExpr(l, r), substExpr(rr, r))
-        case Expr.And(l, rr)      => Expr.And(substExpr(l, r), substExpr(rr, r))
-        case other                => other
-      }
-      val parts = conjuncts(e0).map { c =>
-        exprCols(c) match {
+      val parts = Expr.conjuncts(e0).map { c =>
+        c.collect { case ca: Operand.ColumnsAll => Seq(ca) }.headOption match {
           case None => Right(c)
           case Some(Operand.ColumnsAll(pat, excl)) =>
             val base = expandAll.collect { case SelectItem.SCol(r, _) => r }
@@ -2803,7 +2604,9 @@ object Analyzer {
                 !excl.exists(_.equalsIgnoreCase(r.name)))
             if (kept.isEmpty)
               Left(BadFunction("WHERE COLUMNS(…) matched no columns"))
-            else Right(kept.map(r => substExpr(c, r)).reduce(Expr.And(_, _)))
+            else Right(kept.map(r => c.transform {
+              case _: Operand.ColumnsAll => Operand.Col(r)
+            }).reduce(Expr.And(_, _)))
         }
       }
       parts.collectFirst { case Left(e) => Left(e) }.getOrElse(
@@ -3078,10 +2881,10 @@ object Analyzer {
             else bsub.projection.head match {
               case _: BoundItem.BIAgg => Right(())
               case BoundItem.BIExpr(op, _)
-                  if BoundOperand.containsAgg(op) &&
-                    operandCols(op).isEmpty &&
-                    !BoundOperand.operandHasSub(op) &&
-                    BoundOperand.aggNodes(op)
+                  if BoundNode.containsAgg(op) &&
+                    columnsOf(op).isEmpty &&
+                    !BoundNode.hasSubquery(op) &&
+                    BoundNode.aggNodes(op)
                       .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
                 Right(())
               case _ => Left(BadSubquery(
@@ -3204,11 +3007,11 @@ object Analyzer {
                     r
                   }
                   _ <-
-                    if (!BoundOperand.operandHasSub(bbody)) Right(())
+                    if (!BoundNode.hasSubquery(bbody)) Right(())
                     else Left(BadSubquery(
                       "subqueries are not supported inside a lambda body"))
                   _ <-
-                    if (!BoundOperand.containsAgg(bbody)) Right(())
+                    if (!BoundNode.containsAgg(bbody)) Right(())
                     else Left(BadAggregate(
                       "aggregates are not valid inside a lambda body"))
                 } yield BoundOperand.BFunc(listName,
@@ -3611,10 +3414,10 @@ object Analyzer {
                 // TPC-H Q17 shape): every column ref sits inside an
                 // aggregate argument, every aggregate is a plain call
                 case BoundItem.BIExpr(op, _)
-                    if BoundOperand.containsAgg(op) &&
-                      operandCols(op).isEmpty &&
-                      !BoundOperand.operandHasSub(op) &&
-                      BoundOperand.aggNodes(op)
+                    if BoundNode.containsAgg(op) &&
+                      columnsOf(op).isEmpty &&
+                      !BoundNode.hasSubquery(op) &&
+                      BoundNode.aggNodes(op)
                         .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
                   Right(())
                 case _ => Left(BadSubquery(
@@ -3857,7 +3660,7 @@ object Analyzer {
                 .map(_.binding).toSet
               // Some(true) = all column refs inner; Some(false) = all outer
               def sideOf(o: BoundOperand): Option[Boolean] = {
-                val cs = operandColsDeep(o)
+                val cs = columnsDeep(o)
                 if (cs.isEmpty) None
                 else if (cs.forall(c => innerB(c.binding))) Some(true)
                 else if (cs.forall(c => !innerB(c.binding))) Some(false)
@@ -3900,10 +3703,10 @@ object Analyzer {
               // TPC-H Q17 shape): every column ref sits inside an
               // aggregate argument, every aggregate is a plain call
               case BoundItem.BIExpr(op, _)
-                  if BoundOperand.containsAgg(op) &&
-                    operandCols(op).isEmpty &&
-                    !BoundOperand.operandHasSub(op) &&
-                    BoundOperand.aggNodes(op)
+                  if BoundNode.containsAgg(op) &&
+                    columnsOf(op).isEmpty &&
+                    !BoundNode.hasSubquery(op) &&
+                    BoundNode.aggNodes(op)
                       .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
                 Right(())
               case _ => Left(BadSubquery(
@@ -3918,7 +3721,7 @@ object Analyzer {
               val nodes: Seq[(String, Boolean)] = bsub.projection.head match {
                 case BoundItem.BIAgg(f, _, _, dist) => Seq((f, dist))
                 case BoundItem.BIExpr(op, _) =>
-                  BoundOperand.aggNodes(op).collect {
+                  BoundNode.aggNodes(op).collect {
                     case BoundOperand.BAgg(f, _, dist) => (f, dist)
                   }
                 case _ => Nil
@@ -3968,10 +3771,10 @@ object Analyzer {
       // projection-scope subqueries (CASE conditions etc.) never take
       // residual correlation — no semi/anti join exists there
       _ <- proj.collectFirst {
-        case BoundItem.BIExpr(op, _) if opHasResidualExists(op) => ()
-        case BoundItem.BIAgg(_, Some(a), _, _) if opHasResidualExists(a) => ()
+        case BoundItem.BIExpr(op, _) if hasResidualExists(op) => ()
+        case BoundItem.BIAgg(_, Some(a), _, _) if hasResidualExists(a) => ()
         case BoundItem.BIWin(_, args, _, _, _, _)
-            if args.exists(opHasResidualExists) => ()
+            if args.exists(hasResidualExists) => ()
       } match {
         case Some(_) => Left(residualPositionError)
         case None    => Right(())
@@ -4000,7 +3803,7 @@ object Analyzer {
             beE.flatMap { be =>
               val visible = (innerTables ++ stepTables.take(k + 1))
                 .map(_.binding).toSet -- (semiAntiB - bt.binding)
-              exprCols(be).find(c => !visible(c.binding)) match {
+              columnsOf(be).find(c => !visible(c.binding)) match {
                 case Some(c) => Left(UnboundBinding(c.binding))
                 case None =>
                   val asofOk: Either[AnalyzerError, Unit] =
@@ -4056,7 +3859,7 @@ object Analyzer {
               }
             case expr =>
               bindOp(expr, allowAgg = false).flatMap { bop =>
-                if (BoundOperand.containsAgg(bop))
+                if (BoundNode.containsAgg(bop))
                   Left(BadAggregate("cannot GROUP BY an aggregate"))
                 else {
                   // adopt the alias of a structurally equal projection item
@@ -4078,7 +3881,7 @@ object Analyzer {
       _ <- {
         val isAgg = group.nonEmpty || proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }
         if (!isAgg) {
@@ -4086,7 +3889,7 @@ object Analyzer {
           // (hidden inline-OVER windows included)
           (proj ++ qwins).collectFirst {
             case BoundItem.BIWin(f, args, _, ord, _, _)
-                if (args ++ ord.map(_._1)).exists(BoundOperand.containsAgg) => f
+                if (args ++ ord.map(_._1)).exists(BoundNode.containsAgg) => f
           } match {
             case Some(f) => Left(BadAggregate(
               s"window $f over an aggregate requires GROUP BY"))
@@ -4100,7 +3903,7 @@ object Analyzer {
         // aggregate over the GROUPED frame — keys validated there)
         else if (proj.exists {
           case BoundItem.BISub(_, _, _, _, Some(io)) =>
-            BoundOperand.containsAgg(io.outerOp)
+            BoundNode.containsAgg(io.outerOp)
           case _ => false
         })
           Left(BadSubquery(
@@ -4110,7 +3913,7 @@ object Analyzer {
         // conditions) of an aggregated query lower through the
         // post-aggregation MarkerScope keyed on GROUP BY output columns;
         // their probe columns and decorrelation keys flow through
-        // operandCols/exprCols below, so the grouped-columns check
+        // columnsOf/columnsOf below, so the grouped-columns check
         // enforces that every outer reference is a GROUP BY key
         else {
           def grouped(c: BoundCol) = groupCols.exists(g =>
@@ -4119,13 +3922,13 @@ object Analyzer {
             group.collect { case BoundGroupKey.GKExpr(op, _) => op }.toSet
           // a window operand that IS a group expression resolves to the
           // grouped key; otherwise its bare columns must be grouped
-          // (aggregate arguments are exempt — operandCols skips them)
+          // (aggregate arguments are exempt — columnsOf skips them)
           def winOpCols(op: BoundOperand): Seq[BoundCol] =
-            if (groupExprOps.contains(op)) Nil else operandCols(op)
+            if (groupExprOps.contains(op)) Nil else columnsOf(op)
           (proj ++ qwins).flatMap {
             case BoundItem.BICol(c, _)   => Seq(c)
             case BoundItem.BIExpr(op, a) if !groupAliases(a.toLowerCase) =>
-              operandCols(op)
+              columnsOf(op)
             case BoundItem.BIWin(_, args, parts, ord, _, _) =>
               (parts ++ args ++ ord.map(_._1)).flatMap(winOpCols)
             case _                       => Nil
@@ -4164,13 +3967,13 @@ object Analyzer {
       _ <- {
         val isAgg = group.nonEmpty || proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }
         if (!isAgg)
           // a non-aggregate query cannot sort by an aggregate call
           order.collectFirst {
-            case (BoundOrderKey.OKOperand(op), _) if BoundOperand.containsAgg(op) => op
+            case (BoundOrderKey.OKOperand(op), _) if BoundNode.containsAgg(op) => op
           } match {
             case Some(_) => Left(BadAggregate(
               "ORDER BY aggregate requires GROUP BY or an aggregate projection"))
@@ -4184,9 +3987,9 @@ object Analyzer {
           order.collectFirst {
             case (BoundOrderKey.OKOperand(op), _)
                 if !groupExprOps.contains(op) &&
-                  operandCols(op).exists(c => !groupCols.exists(g =>
+                  columnsOf(op).exists(c => !groupCols.exists(g =>
                     g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))) =>
-              operandCols(op).find(c => !groupCols.exists(g =>
+              columnsOf(op).find(c => !groupCols.exists(g =>
                 g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))).get
           } match {
             case Some(c) => Left(NotInGroupBy(c.render))
@@ -4199,7 +4002,7 @@ object Analyzer {
         case Some(e0) =>
           if (group.isEmpty && !proj.exists {
             case _: BoundItem.BIAgg      => true
-            case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+            case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
             case _                       => false
           })
             Left(BadAggregate("HAVING requires GROUP BY or aggregates"))
@@ -4209,7 +4012,7 @@ object Analyzer {
             // (HAVING n > 5 for count(*) AS n — the DuckDB extension);
             // real columns win, and aggregate arguments are not rewritten
             def isColumn(n: String) = tables.exists(_.desc.attr(n).isDefined)
-            def substOp(o: Operand): Operand = o match {
+            val aliasRule: PartialFunction[Operand, Operand] = {
               case Operand.Col(ColRef(None, n)) if !isColumn(n) =>
                 projItems.collectFirst {
                   case SelectItem.SAgg(f, arg, Some(a), d) if a.equalsIgnoreCase(n) =>
@@ -4217,31 +4020,17 @@ object Analyzer {
                   case SelectItem.SExpr(op, a) if a.equalsIgnoreCase(n) => op
                   case SelectItem.SCol(ref, Some(a)) if a.equalsIgnoreCase(n) =>
                     Operand.Col(ref)
-                }.getOrElse(o)
-              case Operand.Arith(c, l, r) => Operand.Arith(c, substOp(l), substOp(r))
-              case Operand.FuncCall(f, as) => Operand.FuncCall(f, as.map(substOp))
-              case Operand.CaseWhen(bs, els) => Operand.CaseWhen(
-                bs.map { case (c, v) => (substE(c), substOp(v)) }, els.map(substOp))
-              case other => other
-            }
-            def substE(e: Expr): Expr = e match {
-              case Expr.And(l, r) => Expr.And(substE(l), substE(r))
-              case Expr.Or(l, r)  => Expr.Or(substE(l), substE(r))
-              case Expr.Not(x)    => Expr.Not(substE(x))
-              case Expr.Cmp(op, l, r)  => Expr.Cmp(op, substOp(l), substOp(r))
-              case Expr.IsNull(o, neg) => Expr.IsNull(substOp(o), neg)
-              case Expr.Like(o, p, n, ci, esc) => Expr.Like(substOp(o), p, n, ci, esc)
-              case Expr.CmpSubquery(op, l, sub) => Expr.CmpSubquery(op, substOp(l), sub)
-              case Expr.QuantSubquery(op, l, sub, all) =>
-                Expr.QuantSubquery(op, substOp(l), sub, all)
-              case other => other
+                }.getOrElse(Operand.Col(ColRef(None, n)))
+              // aggregate arguments and lambda bodies keep their names
+              case keep @ (_: Operand.AggCall | _: Operand.OrderedAgg |
+                  _: Operand.Lambda) => keep
             }
             havingGkExprKeys = group.collect {
               case BoundGroupKey.GKExpr(op, a) =>
                 op -> BoundCol("", AttributeDesc(a, operandType(op)))
             }.toMap
             havingMarkerOk = true
-            val r = bindExpr(substE(e0), allowAgg = true).map(Some(_))
+            val r = bindExpr(e0.transform(aliasRule), allowAgg = true).map(Some(_))
             havingMarkerOk = false
             r
           }
@@ -4251,27 +4040,11 @@ object Analyzer {
       _ <- having match {
         case None => Right(())
         case Some(h) =>
-          def opCols(o: BoundOperand): Seq[BoundCol] = o match {
-            case BoundOperand.BCol(c)         => Seq(c)
-            case BoundOperand.BArith(_, l, r) => opCols(l) ++ opCols(r)
-            case BoundOperand.BFunc(_, as)    => as.flatMap(opCols)
-            case BoundOperand.BCast(x, _)     => opCols(x)
-            case _                            => Nil
+          val bare = h.collect {
+            case BoundOperand.BCol(c) => Seq(c)
+            case _: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg => Nil
           }
-          def cols(x: BoundExpr): Seq[BoundCol] = x match {
-            case BoundExpr.BAnd(l, r) => cols(l) ++ cols(r)
-            case BoundExpr.BOr(l, r)  => cols(l) ++ cols(r)
-            case BoundExpr.BNot(e)    => cols(e)
-            case BoundExpr.BIsNull(o, _)  => opCols(o)
-            case BoundExpr.BLike(o, _, _, _, _) => opCols(o)
-            case BoundExpr.BCmp(_, l, r)  => opCols(l) ++ opCols(r)
-            case BoundExpr.BInSub(o, _, _, _)  => opCols(o)
-            case BoundExpr.BRowInSub(os, _, _, _) => os.flatMap(opCols)
-            case BoundExpr.BExists(_, _, _, _) => Nil
-            case BoundExpr.BCmpSub(_, o, _, _, _) => opCols(o)
-            case BoundExpr.BQuantSub(_, o, _, _, _) => opCols(o)
-          }
-          cols(h).find(c => !groupCols.exists(g =>
+          bare.find(c => !groupCols.exists(g =>
             g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))) match {
             case Some(c) => Left(NotInGroupBy(c.render))
             case None    => Right(())
@@ -4284,35 +4057,11 @@ object Analyzer {
       _ <- having match {
         case None => Right(())
         case Some(h) =>
-          def walkOp(o: BoundOperand): Seq[BoundCol] = o match {
-            case BoundOperand.BCase(bs, els) =>
-              bs.flatMap { case (c, v) => walk(c) ++ walkOp(v) } ++
-                els.toSeq.flatMap(walkOp)
-            case BoundOperand.BArith(_, l, r) => walkOp(l) ++ walkOp(r)
-            case BoundOperand.BFunc(_, as)    => as.flatMap(walkOp)
-            case BoundOperand.BCast(x, _)     => walkOp(x)
-            case BoundOperand.BTryCast(x, _)  => walkOp(x)
-            case BoundOperand.BSubVal(_, _, ps, _) => ps.map(_._1)
-            case _ => Nil
+          // every subquery's pairs, CASE conditions included
+          def keys(n: BoundNode): Seq[BoundCol] = n.collect {
+            case q: Subquery => q.children.flatMap(keys) ++ q.pairs.map(_._1)
           }
-          def walk(x: BoundExpr): Seq[BoundCol] = x match {
-            case BoundExpr.BAnd(l, r) => walk(l) ++ walk(r)
-            case BoundExpr.BOr(l, r)  => walk(l) ++ walk(r)
-            case BoundExpr.BNot(y)    => walk(y)
-            case BoundExpr.BCmpSub(_, o, _, _, ps) => walkOp(o) ++ ps.map(_._1)
-            case BoundExpr.BInSub(o, _, ps, _)     => walkOp(o) ++ ps.map(_._1)
-            case BoundExpr.BRowInSub(os, _, ps, _) => os.flatMap(walkOp) ++ ps.map(_._1)
-            case BoundExpr.BExists(_, ps, _, _)    => ps.map(_._1)
-            case BoundExpr.BQuantSub(_, o, _, _, ps) => walkOp(o) ++ ps.map(_._1)
-            // subqueries nested in CASE conditions/values (the HAVING
-            // marker path) carry their decorrelation keys through the
-            // operand tree
-            case BoundExpr.BCmp(_, l, r) => walkOp(l) ++ walkOp(r)
-            case BoundExpr.BIsNull(o, _) => walkOp(o)
-            case BoundExpr.BLike(o, _, _, _, _) => walkOp(o)
-            case _ => Nil
-          }
-          walk(h).find(c => !(
+          keys(h).find(c => !(
             (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) ||
               groupCols.exists(g =>
                 g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))
@@ -4348,7 +4097,7 @@ object Analyzer {
         if (s.groupSpec.isEmpty) Right(())
         else if (!proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }) Left(BadAggregate(
           "ROLLUP/CUBE/GROUPING SETS requires an aggregate in the projection"))
@@ -4356,32 +4105,19 @@ object Analyzer {
       // grouping(col) marks subtotal rows — only meaningful under
       // ROLLUP/CUBE/GROUPING SETS, and only over a grouping key
       _ <- {
-        def aggsIn(o: BoundOperand): Seq[BoundOperand.BAgg] = o match {
-          case a: BoundOperand.BAgg => a +: a.arg.toSeq.flatMap(aggsIn)
-          case BoundOperand.BArith(_, l, r) => aggsIn(l) ++ aggsIn(r)
-          case BoundOperand.BFunc(_, as)    => as.flatMap(aggsIn)
-          case BoundOperand.BCast(x, _)     => aggsIn(x)
-          case BoundOperand.BCase(bs, els) =>
-            bs.flatMap { case (c, v) =>
-              BoundOperand.exprOperands(c).flatMap(aggsIn) ++ aggsIn(v)
-            } ++ els.toSeq.flatMap(aggsIn)
-          case _ => Nil
-        }
-        val all = proj.flatMap {
-          case BoundItem.BIAgg(f, arg, _, d) =>
-            Seq(BoundOperand.BAgg(f, arg, d))
-          case BoundItem.BIExpr(op, _) => aggsIn(op)
+        def argsIn(n: BoundNode): Seq[Option[BoundOperand]] =
+          n.collect { case BoundOperand.BAgg("grouping", arg, _) => Seq(arg) }
+        val groupingArgs = proj.flatMap {
+          case BoundItem.BIAgg(f, arg, _, d) => argsIn(BoundOperand.BAgg(f, arg, d))
+          case BoundItem.BIExpr(op, _) => argsIn(op)
           case BoundItem.BIWin(_, args, _, ord, _, _) =>
-            (args ++ ord.map(_._1)).flatMap(aggsIn)
+            (args ++ ord.map(_._1)).flatMap(argsIn)
           case _ => Nil
-        } ++ having.toSeq.flatMap(h =>
-          BoundOperand.exprOperands(h).flatMap(aggsIn)) ++
+        } ++ having.toSeq.flatMap(argsIn) ++
           order.flatMap {
-            case (BoundOrderKey.OKOperand(op), _) => aggsIn(op)
+            case (BoundOrderKey.OKOperand(op), _) => argsIn(op)
             case _ => Nil
           }
-        val groupingArgs =
-          all.collect { case BoundOperand.BAgg("grouping", arg, _) => arg }
         if (groupingArgs.isEmpty) Right(())
         else if (s.groupSpec.isEmpty) Left(BadAggregate(
           "grouping() requires GROUP BY ROLLUP/CUBE/GROUPING SETS"))
@@ -4403,7 +4139,7 @@ object Analyzer {
         case Some(e0) =>
           val isAgg = group.nonEmpty || proj.exists {
             case _: BoundItem.BIAgg      => true
-            case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+            case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
             case _                       => false
           }
           val winTypes: Map[String, SqlType] = (proj ++ qwins).collect {
@@ -4423,63 +4159,41 @@ object Analyzer {
               s"QUALIFY window alias '${winTypes.keys.find(a =>
                 tables.exists(_.desc.attr(a).isDefined)).get}' shadows an input column"))
           else {
-              // in aggregate scope the predicate's non-window operands
-              // resolve post-aggregation: aggregate calls become hidden
-              // agg columns, bare columns must be GROUP BY keys
-              // (validated below, like HAVING)
-              def qOp(o: Operand): Either[AnalyzerError, BoundOperand] = o match {
-                case Operand.Col(ColRef(None, n)) if winTypes.contains(n.toLowerCase) =>
-                  Right(BoundOperand.BOut(n.toLowerCase, winTypes(n.toLowerCase)))
-                case Operand.Arith(c2, l, r) =>
-                  for { bl <- qOp(l); br <- qOp(r) }
-                    yield BoundOperand.BArith(c2, bl, br)
-                case Operand.Cast(x, t) => qOp(x).map(BoundOperand.BCast(_, t))
-                case other => bindOp(other, allowAgg = isAgg)
+            // window aliases bind as output references through the hidden-
+            // window scope. In aggregate scope the other operands resolve
+            // post-aggregation — aggregate calls become hidden agg columns,
+            // bare columns must be GROUP BY keys (validated below, like
+            // HAVING) — and subqueries ride HAVING's marker machinery:
+            // correlation keys must be GROUP BY keys, markers join the
+            // WINDOWED frame. No semi/anti join exists here, so an EXISTS
+            // residual rejects.
+            val outerWins = hiddenWinScope
+            hiddenWinScope = winTypes
+            if (isAgg) {
+              havingGkExprKeys = group.collect {
+                case BoundGroupKey.GKExpr(op, a2) =>
+                  op -> BoundCol("", AttributeDesc(a2, operandType(op)))
+              }.toMap
+              havingMarkerOk = true
+            }
+            try bindExpr(e0, allowAgg = isAgg).flatMap { bp =>
+              // QUALIFY's comparisons type-check strictly: a window output
+              // against an incomparable value would fail at run time
+              val incomparable = bp.collect {
+                case BoundExpr.BCmp(_, l, r)
+                    if !SqlType.comparable(operandType(l), operandType(r)) =>
+                  Seq(NotComparable(operandType(l), operandType(r)))
+                case _: BoundOperand => Nil
               }
-              def qE(x: Expr): Either[AnalyzerError, BoundExpr] = x match {
-                case Expr.And(l, r) =>
-                  for { a <- qE(l); b <- qE(r) } yield BoundExpr.BAnd(a, b)
-                case Expr.Or(l, r) =>
-                  for { a <- qE(l); b <- qE(r) } yield BoundExpr.BOr(a, b)
-                case Expr.Not(y)         => qE(y).map(BoundExpr.BNot.apply)
-                case Expr.IsNull(o, neg) => qOp(o).map(BoundExpr.BIsNull(_, neg))
-                case Expr.Like(o, pat, neg, ci, esc) =>
-                  qOp(o).map(BoundExpr.BLike(_, pat, neg, ci, esc))
-                case Expr.Cmp(op2, l, r) =>
-                  for {
-                    bl <- qOp(l)
-                    br <- qOp(r)
-                    _ <-
-                      if (SqlType.comparable(operandType(bl), operandType(br)))
-                        Right(())
-                      else Left(NotComparable(operandType(bl), operandType(br)))
-                  } yield BoundExpr.BCmp(op2, bl, br)
-                // subqueries over non-aggregated queries ride the same
-                // marker machinery as WHERE conjuncts (3VL under NOT/OR),
-                // joined onto the WINDOWED frame at lowering; probes bind
-                // against the input tables (not window aliases)
-                case sq @ (_: Expr.InSubquery | _: Expr.Exists |
-                    _: Expr.CmpSubquery | _: Expr.QuantSubquery |
-                    _: Expr.RowInSubquery) =>
-                  if (isAgg) {
-                    // aggregate scope: the same post-aggregation marker
-                    // machinery as HAVING — correlation keys must be
-                    // GROUP BY keys (validated below), probes may
-                    // aggregate; markers join the WINDOWED frame
-                    havingGkExprKeys = group.collect {
-                      case BoundGroupKey.GKExpr(op, a2) =>
-                        op -> BoundCol("", AttributeDesc(a2, operandType(op)))
-                    }.toMap
-                    havingMarkerOk = true
-                    val r = bindExpr(sq, allowAgg = true, topLevel = true)
-                    havingMarkerOk = false
-                    r
-                  }
-                  else bindExpr(sq, allowAgg = false, topLevel = true)
+              rowInMarkerIssue(bp) match {
+                case Some(m) => Left(BadSubquery(m))
+                case None if hasResidualExists(bp) => Left(residualPositionError)
+                case None => incomparable.headOption.toLeft(Some(bp))
               }
-              qE(e0).flatMap(bp => rowInMarkerIssue(bp)
-                .fold[Either[AnalyzerError, BoundExpr]](Right(bp))(m =>
-                  Left(BadSubquery(m)))).map(Some(_))
+            } finally {
+              hiddenWinScope = outerWins
+              havingMarkerOk = false
+            }
           }
       }
       // QUALIFY bare columns in aggregate scope must be GROUP BY keys
@@ -4488,40 +4202,12 @@ object Analyzer {
       _ <- qualifyPred match {
         case Some(qp) if group.nonEmpty || proj.exists {
               case _: BoundItem.BIAgg      => true
-              case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+              case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
               case _                       => false
             } =>
-          def opCols(o: BoundOperand): Seq[BoundCol] = o match {
-            case BoundOperand.BCol(c)         => Seq(c)
-            case BoundOperand.BArith(_, l, r) => opCols(l) ++ opCols(r)
-            case BoundOperand.BFunc(_, as)    => as.flatMap(opCols)
-            case BoundOperand.BCast(x, _)     => opCols(x)
-            case BoundOperand.BTryCast(x, _)  => opCols(x)
-            // a scalar-subquery operand's decorrelation keys join
-            // post-aggregation too
-            case BoundOperand.BSubVal(_, _, ps, _) => ps.map(_._1)
-            case BoundOperand.BCase(bs, els) =>
-              bs.flatMap { case (c2, v) => cols(c2) ++ opCols(v) } ++
-                els.toSeq.flatMap(opCols)
-            case _                            => Nil
-          }
-          def cols(x: BoundExpr): Seq[BoundCol] = x match {
-            case BoundExpr.BAnd(l, r)     => cols(l) ++ cols(r)
-            case BoundExpr.BOr(l, r)      => cols(l) ++ cols(r)
-            case BoundExpr.BNot(y)        => cols(y)
-            case BoundExpr.BIsNull(o, _)  => opCols(o)
-            case BoundExpr.BLike(o, _, _, _, _) => opCols(o)
-            case BoundExpr.BCmp(_, l, r)  => opCols(l) ++ opCols(r)
-            // subquery probes and decorrelation keys join post-
-            // aggregation — must be GROUP BY keys like HAVING's
-            case BoundExpr.BInSub(o, _, ps, _) => opCols(o) ++ ps.map(_._1)
-            case BoundExpr.BRowInSub(os, _, ps, _) =>
-              os.flatMap(opCols) ++ ps.map(_._1)
-            case BoundExpr.BExists(_, ps, _, _) => ps.map(_._1)
-            case BoundExpr.BCmpSub(_, o, _, _, ps) => opCols(o) ++ ps.map(_._1)
-            case BoundExpr.BQuantSub(_, o, _, _, ps) => opCols(o) ++ ps.map(_._1)
-          }
-          cols(qp).find(c => !(
+          // subquery probes and decorrelation keys join post-aggregation
+          // too — they must be GROUP BY keys like HAVING's
+          columnsOf(qp).find(c => !(
             (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) ||
               groupCols.exists(g =>
                 g.binding == c.binding &&
@@ -4538,7 +4224,7 @@ object Analyzer {
       don <- {
         val isAgg = group.nonEmpty || proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }
         if (s.distinctOn.isEmpty) Right(Vector.empty[BoundOperand])
@@ -4553,7 +4239,7 @@ object Analyzer {
           val badAggKey =
             if (!isAgg) None
             else keys.flatMap(k =>
-              if (groupExprOps.contains(k)) Nil else operandCols(k))
+              if (groupExprOps.contains(k)) Nil else columnsOf(k))
               .find(c => !groupCols.exists(g => g.binding == c.binding &&
                 g.attr.name.equalsIgnoreCase(c.attr.name)))
           def orderKeyOperand(k: BoundOrderKey): Option[BoundOperand] = k match {
@@ -4602,22 +4288,8 @@ object Analyzer {
       // Spark allows one generator per projection; DuckDB zips several,
       // a semantic we don't replicate). Anywhere else rejects loudly.
       _ <- {
-        def inOp(o: BoundOperand): Boolean = o match {
-          case BoundOperand.BFunc("unnest", _) => true
-          case BoundOperand.BFunc(_, as)       => as.exists(inOp)
-          case BoundOperand.BArith(_, l, r)    => inOp(l) || inOp(r)
-          case BoundOperand.BCast(x, _)        => inOp(x)
-          case BoundOperand.BCase(bs, els) =>
-            bs.exists { case (c, v) =>
-              BoundOperand.exprOperands(c).exists(inOp) || inOp(v) } ||
-              els.exists(inOp)
-          case BoundOperand.BAgg(_, a, _)      => a.exists(inOp)
-          case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
-            inOp(a) || ks.exists(k => inOp(k._1))
-          case _ => false
-        }
-        def inExpr(e: BoundExpr): Boolean =
-          BoundOperand.exprOperands(e).exists(inOp)
+        def inOp(n: BoundNode): Boolean =
+          n.exists { case BoundOperand.BFunc("unnest", _) => true }
         var roots = 0
         var nested = false
         proj.foreach {
@@ -4630,8 +4302,8 @@ object Analyzer {
           case _ => ()
         }
         val elsewhere =
-          pred.exists(inExpr) || having.exists(inExpr) ||
-            qualifyPred.exists(inExpr) ||
+          pred.exists(inOp) || having.exists(inOp) ||
+            qualifyPred.exists(inOp) ||
             group.exists {
               case BoundGroupKey.GKExpr(op, _) => inOp(op)
               case _ => false
@@ -4654,40 +4326,13 @@ object Analyzer {
       // GROUP BY / ORDER BY / QUALIFY / window positions (no marker
       // frame joins there)
       _ <- {
-        def contains(o: BoundOperand): Boolean =
-          BoundOperand.operandHasSub(o) && {
-            def c(x: BoundOperand): Boolean = x match {
-              case _: BoundOperand.BSubVal      => true
-              case BoundOperand.BArith(_, l, r) => c(l) || c(r)
-              case BoundOperand.BFunc(_, as)    => as.exists(c)
-              case BoundOperand.BCast(y, _)     => c(y)
-              case BoundOperand.BCase(bs, els) =>
-                bs.exists { case (cc, v) =>
-                  BoundOperand.exprOperands(cc).exists(c) || c(v) } ||
-                  els.exists(c)
-              case BoundOperand.BAgg(_, a, _)   => a.exists(c)
-              case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
-                c(a) || ks.exists(k => c(k._1))
-              case _ => false
-            }
-            c(o)
-          }
+        def contains(n: BoundNode): Boolean =
+          n.exists { case _: BoundOperand.BSubVal => true }
         // inside an aggregate's ARGUMENT (any nesting) = bad
-        def inAggArg(o: BoundOperand): Boolean = o match {
-          case BoundOperand.BAgg(_, a, _) => a.exists(contains)
-          case BoundOperand.BOrderedAgg(_, a, _, ks, _) =>
-            contains(a) || ks.exists(k => contains(k._1))
-          case BoundOperand.BArith(_, l, r) => inAggArg(l) || inAggArg(r)
-          case BoundOperand.BFunc(_, as)    => as.exists(inAggArg)
-          case BoundOperand.BCast(y, _)     => inAggArg(y)
-          case BoundOperand.BCase(bs, els) =>
-            bs.exists { case (cc, v) =>
-              BoundOperand.exprOperands(cc).exists(inAggArg) || inAggArg(v) } ||
-              els.exists(inAggArg)
-          case _ => false
+        def inAggArg(n: BoundNode): Boolean = n.exists {
+          case a @ (_: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg) =>
+            a.children.exists(contains)
         }
-        def exprBad(e: BoundExpr): Boolean =
-          BoundOperand.exprOperands(e).exists(inAggArg)
         val badProj = proj.exists {
           case BoundItem.BIExpr(op, _)     => inAggArg(op)
           case BoundItem.BIAgg(_, a, _, _) => a.exists(contains)
@@ -4696,8 +4341,8 @@ object Analyzer {
           case _ => false
         }
         val badOther =
-          pred.exists(exprBad) || having.exists(exprBad) ||
-            qualifyPred.exists(exprBad) ||
+          pred.exists(inAggArg) || having.exists(inAggArg) ||
+            qualifyPred.exists(inAggArg) ||
             group.exists {
               case BoundGroupKey.GKExpr(op, _) => contains(op)
               case _ => false
@@ -4714,26 +4359,16 @@ object Analyzer {
         // their own walks; projections are validated here — the bare-
         // column check exempts subquery machinery, so pairs get an
         // explicit pass)
-        def corrKeys(o: BoundOperand): Seq[BoundCol] = o match {
-          case BoundOperand.BSubVal(_, _, ps, _)  => ps.map(_._1)
-          case BoundOperand.BArith(_, l, r)    => corrKeys(l) ++ corrKeys(r)
-          case BoundOperand.BFunc(_, as)       => as.flatMap(corrKeys)
-          case BoundOperand.BCast(y, _)        => corrKeys(y)
-          case BoundOperand.BCase(bs, els) =>
-            bs.flatMap { case (cc, v) =>
-              BoundOperand.exprOperands(cc).flatMap(corrKeys) ++ corrKeys(v) } ++
-              els.toSeq.flatMap(corrKeys)
-          case _ => Nil
-        }
         val aggScoped = group.nonEmpty || proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }
         val badCorrKey =
           if (!aggScoped) None
           else proj.flatMap {
-            case BoundItem.BIExpr(op, _) => corrKeys(op)
+            case BoundItem.BIExpr(op, _) =>
+              op.collect { case v: BoundOperand.BSubVal => v.pairs.map(_._1) }
             case _ => Nil
           }.find(c => !groupCols.exists(g =>
             g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name)))
@@ -4756,7 +4391,7 @@ object Analyzer {
       projF <- {
         val aggScope = group.nonEmpty || proj.exists {
           case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundOperand.containsAgg(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
           case _                       => false
         }
         if (!aggScope) Right(proj)
@@ -4772,7 +4407,7 @@ object Analyzer {
           rewritten.flatMap {
             case BoundItem.BIExpr(BoundOperand.BSubVal(_, _, ps, io), _) =>
               ps.map(_._1) ++
-                io.toSeq.flatMap(iq => operandColsDeep(iq.outerOp))
+                io.toSeq.flatMap(iq => columnsDeep(iq.outerOp))
             case _ => Nil
           }.find(c => !groupCols.exists(g => g.binding == c.binding &&
             g.attr.name.equalsIgnoreCase(c.attr.name))) match {

@@ -84,57 +84,105 @@ object Ast {
     case object NotDist extends CmpOp { val sql = "IS NOT DISTINCT FROM" }
   }
 
-  sealed trait Operand
+  /** A parse-side expression node: an operand or a predicate. Each node
+    * type defines its children once, as the rebuild `mapChildren`;
+    * `children` reads them off it.
+    */
+  sealed trait Node extends TreeNode[Node] {
+    /** This node with each operand child replaced through `op` and each
+      * predicate child through `ex`.
+      */
+    def mapChildren(op: Operand => Operand, ex: Expr => Expr): Node
+    final def children: Seq[Node] = {
+      val b = Vector.newBuilder[Node]
+      mapChildren(o => { b += o; o }, e => { b += e; e })
+      b.result()
+    }
+  }
+
+  sealed trait Operand extends Node {
+    def mapChildren(op: Operand => Operand, ex: Expr => Expr): Operand
+    /** Top-down rewrite: an operand where `rule` is defined is replaced
+      * by its result (and not descended); every other node rebuilds over
+      * its rewritten children.
+      */
+    final def transform(rule: PartialFunction[Operand, Operand]): Operand =
+      rule.applyOrElse(this,
+        (o: Operand) => o.mapChildren(_.transform(rule), _.transform(rule)))
+  }
   object Operand {
-    final case class Col(ref: ColRef) extends Operand
-    final case class Literal(lit: Lit) extends Operand
+    /** An operand without child nodes. */
+    sealed trait Leaf extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr): Operand = this
+    }
+    final case class Col(ref: ColRef) extends Leaf
+    final case class Literal(lit: Lit) extends Leaf
     /** The DEFAULT keyword as an INSERT VALUES item — substituted with
       * the target column's default literal (or NULL) at analysis; any
       * other position rejects loudly.
       */
-    case object DefaultVal extends Operand
+    case object DefaultVal extends Leaf
     /** Aggregate call over an optional expression argument (None =
       * count(*)) — valid in the SELECT list, HAVING and ORDER BY.
       * `distinct` = COUNT/SUM(DISTINCT …).
       */
     final case class AggCall(func: String, arg: Option[Operand],
-        distinct: Boolean = false) extends Operand
+        distinct: Boolean = false) extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        copy(arg = arg.map(op))
+    }
     /** Binary arithmetic (+ - * / %) over operands, usual precedence. */
-    final case class Arith(op: Char, l: Operand, r: Operand) extends Operand
+    final case class Arith(op: Char, l: Operand, r: Operand) extends Operand {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) =
+        copy(l = o(l), r = o(r))
+    }
     /** Scalar function call: upper/lower/trim/length/abs/round/substr/
       * coalesce/concat over operand arguments (arity checked in analysis).
       */
-    final case class FuncCall(name: String, args: Seq[Operand]) extends Operand
+    final case class FuncCall(name: String, args: Seq[Operand]) extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        copy(args = args.map(op))
+    }
     /** Searched CASE: WHEN <pred> THEN <operand> … [ELSE <operand>] END.
       * The simple form (CASE <subject> WHEN <value> …) desugars in the
       * parser to subject = value predicates.
       */
     final case class CaseWhen(branches: Seq[(Expr, Operand)],
-        elseOp: Option[Operand]) extends Operand
+        elseOp: Option[Operand]) extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        CaseWhen(branches.map { case (c, v) => (ex(c), op(v)) }, elseOp.map(op))
+    }
     /** CAST(<operand> AS <type>) — SQL's checked conversion (Spark cast
       * semantics: out-of-range numerics overflow ANSI-style, bad string
       * parses are NULL like DuckDB's TRY_CAST-adjacent behavior).
       */
-    final case class Cast(op: Operand, tpe: SqlType) extends Operand
+    final case class Cast(op: Operand, tpe: SqlType) extends Operand {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) = copy(op = o(op))
+    }
     /** TRY_CAST(x AS type) — NULL instead of an error on a failed
       * conversion (Spark's try_cast, DuckDB's TRY_CAST).
       */
-    final case class TryCast(op: Operand, tpe: SqlType) extends Operand
+    final case class TryCast(op: Operand, tpe: SqlType) extends Operand {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) = copy(op = o(op))
+    }
     /** INTERVAL '<n>' <unit> — a calendar interval (unit normalized to
       * singular: year/month/week/day/hour/minute/second), valid only as
       * the right operand of + / - against a date/timestamp.
       */
-    final case class Interval(n: Long, unit: String) extends Operand
+    final case class Interval(n: Long, unit: String) extends Leaf
     /** `(SELECT …)` as an operand — today only in UPDATE SET value
       * position (`SET x = (SELECT …)`); the analyzer rejects it
       * elsewhere. One column; at most one row per (correlation) key.
       */
-    final case class ScalarSub(sub: SelectTree) extends Operand
+    final case class ScalarSub(sub: SelectTree) extends Leaf
     /** A lambda argument of a list higher-order function:
       * `x -> expr` / `(acc, x) -> expr`. Valid only as an argument of
       * list_transform / list_filter / list_reduce (analyzer-enforced).
       */
-    final case class Lambda(params: Seq[String], body: Operand) extends Operand
+    final case class Lambda(params: Seq[String], body: Operand) extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        copy(body = op(body))
+    }
     /** COLUMNS(* [EXCLUDE (…)]) / COLUMNS('re') as an OPERAND (DuckDB's
       * WHERE-clause form): a predicate conjunct containing one expands
       * into the AND of the predicate instantiated per matched column.
@@ -142,33 +190,58 @@ object Ast {
       * leftovers pointedly.
       */
     final case class ColumnsAll(pattern: Option[String],
-        excl: Seq[String]) extends Operand
+        excl: Seq[String]) extends Leaf
     /** An ordered aggregate: string_agg(v, 'sep' [ORDER BY k [DESC], …]).
       * Carries its own intra-group ordering — the lowering sorts the
       * collected group by the keys before joining.
       */
     final case class OrderedAgg(func: String, arg: Operand, sep: String,
-        order: Seq[(Operand, Boolean)], distinct: Boolean) extends Operand
+        order: Seq[(Operand, Boolean)], distinct: Boolean) extends Operand {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        copy(arg = op(arg), order = order.map { case (k, d) => (op(k), d) })
+    }
   }
 
-  sealed trait Expr
+  sealed trait Expr extends Node {
+    def mapChildren(op: Operand => Operand, ex: Expr => Expr): Expr
+    /** [[Operand.transform]] applied to every operand of the predicate. */
+    final def transform(rule: PartialFunction[Operand, Operand]): Expr =
+      mapChildren(_.transform(rule), _.transform(rule))
+  }
   object Expr {
-    final case class And(l: Expr, r: Expr) extends Expr
-    final case class Or(l: Expr, r: Expr) extends Expr
-    final case class Cmp(op: CmpOp, l: Operand, r: Operand) extends Expr
+    final case class And(l: Expr, r: Expr) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        And(ex(l), ex(r))
+    }
+    final case class Or(l: Expr, r: Expr) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        Or(ex(l), ex(r))
+    }
+    final case class Cmp(op: CmpOp, l: Operand, r: Operand) extends Expr {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) =
+        copy(l = o(l), r = o(r))
+    }
     /** NOT <expr> — SQL 3VL (NOT NULL → NULL). */
-    final case class Not(e: Expr) extends Expr
+    final case class Not(e: Expr) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = Not(ex(e))
+    }
     /** <operand> IS [NOT] NULL. */
-    final case class IsNull(o: Operand, negated: Boolean) extends Expr
+    final case class IsNull(o: Operand, negated: Boolean) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = copy(o = op(o))
+    }
     /** <operand> [NOT] LIKE/ILIKE '<pattern>' [ESCAPE '<c>'] (%/_
       * wildcards, standard SQL; `ci` = ILIKE, case-insensitive). */
     final case class Like(o: Operand, pattern: String, negated: Boolean,
-        ci: Boolean = false, escape: Option[Char] = None) extends Expr
+        ci: Boolean = false, escape: Option[Char] = None) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = copy(o = op(o))
+    }
     /** <operand> [NOT] IN (SELECT …) — subquery membership, lowered as a
       * left-semi/left-anti join; equality-correlated inner predicates pull
       * into the join condition (decorrelation).
       */
-    final case class InSubquery(o: Operand, sub: SelectTree, negated: Boolean) extends Expr
+    final case class InSubquery(o: Operand, sub: SelectTree, negated: Boolean) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = copy(o = op(o))
+    }
     /** (a, b, …) IN (SELECT …) — row-value membership, lowered as one
       * left-semi join on every component equality. Positive, top-level
       * WHERE conjuncts only: under NOT (or negated) the per-component
@@ -176,16 +249,23 @@ object Ast {
       * rather than risk a wrong answer.
       */
     final case class RowInSubquery(os: Seq[Operand], sub: SelectTree,
-        negated: Boolean) extends Expr
+        negated: Boolean) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
+        copy(os = os.map(op))
+    }
     /** [NOT] EXISTS (SELECT …) — lowered as a left-semi/left-anti join;
       * equality-correlated inner predicates become the join condition.
       */
-    final case class Exists(sub: SelectTree, negated: Boolean) extends Expr
+    final case class Exists(sub: SelectTree, negated: Boolean) extends Expr {
+      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = this
+    }
     /** <operand> <cmp> (SELECT …) — scalar comparison subquery: a
       * group-less aggregate or LIMIT ≤ 1 subquery is one row statically;
       * anything else gets a runtime one-row guard.
       */
-    final case class CmpSubquery(op: CmpOp, l: Operand, sub: SelectTree) extends Expr
+    final case class CmpSubquery(op: CmpOp, l: Operand, sub: SelectTree) extends Expr {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) = copy(l = o(l))
+    }
     /** <operand> <cmp> ANY/SOME/ALL (SELECT …) — quantified comparison.
       * `= ANY` / `<> ALL` desugar in the parser to [NOT] IN; the rest
       * lower as a min/max/count facts frame + a three-valued predicate
@@ -194,7 +274,15 @@ object Ast {
       * for ALL).
       */
     final case class QuantSubquery(op: CmpOp, l: Operand, sub: SelectTree,
-        all: Boolean) extends Expr
+        all: Boolean) extends Expr {
+      def mapChildren(o: Operand => Operand, ex: Expr => Expr) = copy(l = o(l))
+    }
+
+    /** The AND-tree flattened into its conjuncts (OR subtrees stay whole). */
+    def conjuncts(e: Expr): Seq[Expr] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other     => Seq(other)
+    }
     // BETWEEN and IN (literal list) desugar in the parser:
     // x BETWEEN a AND b → x >= a AND x <= b; x IN (a, b) → x = a OR x = b
   }

@@ -171,11 +171,20 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     if (exhausted.isDefined)
       return Left(ViewError(s"EXPORT DATABASE failed: sequence " +
         s"'${exhausted.get}' is exhausted (CREATE SEQUENCE cannot restart it)"))
+    val owned = tables.keys.toSeq.sorted
+      .filterNot(k => external.contains(k) || tempTables.contains(k))
+      .filterNot(k => matviews.contains(k)) // matviews replay their DDL
+    // schema.sql spells column names unquoted (the dialect has no quoted
+    // identifiers): a name it cannot read back would fail the IMPORT
+    val unreadable = owned.iterator.flatMap(k => tables(k).attributes
+      .find(a => !Parser.isBareIdentifier(a.name)).map(a => (k, a.name)))
+    if (unreadable.hasNext) {
+      val (t, c) = unreadable.next()
+      return Left(ViewError(s"EXPORT DATABASE failed: column '$c' of table " +
+        s"'$t' is not an identifier the dialect can read back"))
+    }
     try {
       Files.createDirectories(Paths.get(dir))
-      val owned = tables.keys.toSeq.sorted
-        .filterNot(k => external.contains(k) || tempTables.contains(k))
-        .filterNot(k => matviews.contains(k)) // matviews replay their DDL
       // flattening a multi-line statement onto one schema.sql line must
       // strip `--` comments FIRST (quote-aware) — otherwise a comment
       // inside the definition would swallow the rest of the flattened
@@ -2627,7 +2636,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     if (s.tables.length < 2 || s.derived.nonEmpty) return Nil
     s.tables.foreach(bt => ensureStats(bt.desc))
     val perTable: Map[String, Seq[Analyzer.BoundExpr]] =
-      s.predicate.map(Lowering.conjuncts).getOrElse(Nil)
+      s.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
         .flatMap(c => Lowering.singleBinding(c).map(_ -> c))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     s.tables.map { bt =>
@@ -2687,7 +2696,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       st.flatMap(_.ndv(bc.attr.name))
         .getOrElse(st.map(x => math.max(x.rowCount, 1L)).getOrElse(1L))
     }
-    val edges = s.predicate.map(Lowering.conjuncts).getOrElse(Nil).flatMap {
+    val edges = s.predicate.map(BoundExpr.conjuncts).getOrElse(Nil).flatMap {
       // only edges inside the inner-join group: a conjunct touching an
       // outer-joined (or correlated) binding is not DP-reorderable
       case BoundExpr.BCmp(Ast.CmpOp.Eq, BoundOperand.BCol(a), BoundOperand.BCol(b))

@@ -87,13 +87,13 @@ object Lowering {
       // core BEFORE projection and the final select projects them away
       val projMs: Option[MarkerScope] =
         if (!q.projection.exists {
-          case BoundItem.BIExpr(op, _) => BoundOperand.operandHasSub(op)
+          case BoundItem.BIExpr(op, _) => BoundNode.hasSubquery(op)
           case _ => false
         }) None
         else {
-          val ms = new MarkerScope(spark, source, "p", qcol, lowerOperandWith(_, qcol))
+          val ms = new MarkerScope(spark, source, "p", qcol, columnLeaf(qcol))
           q.projection.foreach {
-            case BoundItem.BIExpr(op, _) => ms.registerOp(op)
+            case BoundItem.BIExpr(op, _) => ms.register(op)
             case _ => ()
           }
           Some(ms)
@@ -161,18 +161,18 @@ object Lowering {
             }
           }
           q.qualify.fold(withWins) { qe =>
-            if (!BoundExpr.containsSub(qe))
-              withWins.filter(lowerExprWith(qe, lowerOperandWith(_, qcol)))
+            if (!BoundNode.hasSubquery(qe))
+              withWins.filter(lowerTree(qe, columnLeaf(qcol)))
             else {
               // subqueries in QUALIFY: the WHERE mixed-conjunct marker
               // machinery applied to the WINDOWED frame — marker frames
               // left-join in, the predicate filters once, markers drop
               val ms = new MarkerScope(spark, source, "ql", qcol,
-                lowerOperandWith(_, qcol))
+                columnLeaf(qcol))
               ms.register(qe)
               val joined = ms.joins.foldLeft(withWins) { case (d, (f, on)) =>
                 d.join(f, on, "left_outer") }
-              joined.filter(ms.pred(qe)).drop(ms.drops.toSeq: _*)
+              joined.filter(ms.lower(qe)).drop(ms.drops.toSeq: _*)
             }
           }
         }
@@ -199,7 +199,7 @@ object Lowering {
           .filter(col("__don") === 1).drop("__don")
       }
       def projOperand(op: BoundOperand): Column =
-        projMs.fold(lowerOperandWith(op, qcol))(_.operand(op))
+        projMs.fold(lowerOperandWith(op, qcol))(_.lower(op))
       def outputCols: Seq[Column] = q.projection.zipWithIndex.map {
         case (BoundItem.BISub(_, a, _, _, _), i) => scalarCol(i).as(a)
         case (BoundItem.BICol(bc, a), _)  => qcol(bc).as(outName(bc, a))
@@ -318,7 +318,16 @@ object Lowering {
         } ++ q.qualifyWins.collect {
           case BoundItem.BIWin(_, _, _, _, a, _) => a.toLowerCase -> a.toLowerCase
         }).toMap
-      def havingOperand(o: BoundOperand): Column = o match {
+      // post-aggregation resolution: group keys by grouped name,
+      // aggregate calls as hidden agg columns (registered as they lower),
+      // scalar-subquery operands as broadcast 1-row frames joined after
+      // aggregation
+      def hiddenAgg(a: BoundOperand): Column = {
+        val name = s"__h_${havingAggs.length}"
+        havingAggs += ((a, name))
+        col(name)
+      }
+      val havingLeaf: PartialFunction[BoundNode, Column] = {
         case v @ BoundOperand.BSubVal(sub, guard, _, None) =>
           // correlated forms are analyzer-rejected in aggregate scope
           Option(subValCols.get(v)).getOrElse {
@@ -334,21 +343,8 @@ object Lowering {
             c
           }
         case BoundOperand.BCol(c) => col(groupOut(c))
-        case BoundOperand.BLit(l) => lowerLit(l)
-        case BoundOperand.BInterval(n, u) => intervalCol(n, u)
-        case BoundOperand.BArith(op, l, r) => arith(op, havingOperand(l), havingOperand(r))
-        case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, havingOperand)
-        case BoundOperand.BCase(bs, els)   => caseCol(bs, els, havingOperand)
-        case BoundOperand.BCast(x, t)      => havingOperand(x).cast(t.spark)
-        case BoundOperand.BTryCast(x, t)   => havingOperand(x).try_cast(t.spark)
-        case a @ BoundOperand.BAgg(_, _, _) =>
-          val name = s"__h_${havingAggs.length}"
-          havingAggs += ((a, name))
-          col(name)
-        case a @ BoundOperand.BOrderedAgg(_, _, _, _, _) =>
-          val name = s"__h_${havingAggs.length}"
-          havingAggs += ((a, name))
-          col(name)
+        case a: BoundOperand.BAgg        => hiddenAgg(a)
+        case a: BoundOperand.BOrderedAgg => hiddenAgg(a)
         case BoundOperand.BOut(n, _) =>
           // a hidden-window output reference: the window column attaches
           // between aggregation and the final projection (withWins), so
@@ -357,38 +353,22 @@ object Lowering {
           // windows; analyzer scope)
           col(qualifyWinAliasCol(n.toLowerCase))
       }
-      def havingCol(e: BoundExpr): Column = e match {
-        case BoundExpr.BAnd(l, r) => havingCol(l) && havingCol(r)
-        case BoundExpr.BOr(l, r)  => havingCol(l) || havingCol(r)
-        case BoundExpr.BNot(x)    => !havingCol(x)
-        case BoundExpr.BIsNull(o, neg) =>
-          val c = havingOperand(o)
-          if (neg) c.isNotNull else c.isNull
-        case BoundExpr.BLike(o, pat, neg, ci, esc) =>
-          val c = likeCol(havingOperand(o), pat, ci, esc)
-          if (neg) !c else c
-        case BoundExpr.BInSub(_, _, _, _) | BoundExpr.BExists(_, _, _, _) =>
-          sys.error("unreachable: analyzer rejects IN/EXISTS in HAVING")
-        case BoundExpr.BCmpSub(_, _, _, _, _) |
-             BoundExpr.BQuantSub(_, _, _, _, _) =>
-          sys.error("unreachable: subquery HAVING conjuncts lower as joins")
-        case BoundExpr.BCmp(op, l, r) =>
-          cmpCols(op, havingOperand(l), havingOperand(r))
-      }
+      def havingOperand(o: BoundOperand): Column = lowerTree(o, havingLeaf)
       // HAVING splits into plain conjuncts (a post-aggregation filter) and
       // scalar-subquery conjuncts (each a broadcast join of its 1-row
       // frame after aggregation). The subquery operands register their
       // hidden aggregate columns NOW — before agg() assembles.
-      val havingConjs = q.having.map(conjuncts).getOrElse(Nil)
+      val havingConjs = q.having.map(BoundExpr.conjuncts).getOrElse(Nil)
       val (havingWithSub, havingPlainConjs) =
-        havingConjs.partition(BoundExpr.containsSub)
+        havingConjs.partition(BoundNode.hasSubquery)
       // pure top-level subquery conjuncts take the semi/anti path; mixed
       // ones (subqueries under OR) get boolean-marker joins
       val (havingSubConjs, havingMixedConjs) = havingWithSub.partition {
         case _: BoundExpr.BInSub | _: BoundExpr.BExists | _: BoundExpr.BCmpSub => true
         case _ => false
       }
-      val havingCond = havingPlainConjs.map(havingCol).reduceOption(_ && _)
+      val havingCond = havingPlainConjs.map(lowerTree(_, havingLeaf))
+        .reduceOption(_ && _)
       // probe operands lower NOW (registering hidden aggregate columns
       // before the agg assembles); the joins themselves fold in after
       // aggregation + plain-HAVING filtering
@@ -418,9 +398,9 @@ object Lowering {
       // are captured for application after aggregation
       val havingMixedPlans = havingMixedConjs.zipWithIndex.map { case (c0, t) =>
         val ms = new MarkerScope(spark, source, s"h$t",
-          bc => col(groupOut(bc)), havingOperand)
+          bc => col(groupOut(bc)), havingLeaf)
         ms.register(c0)
-        (ms.joins.toSeq, ms.pred(c0), ms.drops.toSeq)
+        (ms.joins.toSeq, ms.lower(c0), ms.drops.toSeq)
       }
       // computed projections in aggregate scope (count(*) * 2 AS n2):
       // their aggregate calls become hidden agg columns — registered into
@@ -453,16 +433,16 @@ object Lowering {
         q.projection.zipWithIndex.collect {
           case (BoundItem.BIExpr(op, a), i)
               if !groupExprAliases(a.toLowerCase) && !ineqIdx(i) &&
-                BoundOperand.operandHasSub(op) =>
+                BoundNode.hasSubquery(op) =>
             val ms = new MarkerScope(spark, source, s"px$i",
-              bc => col(groupOut(bc)), havingOperand)
-            ms.registerOp(op)
+              bc => col(groupOut(bc)), havingLeaf)
+            ms.register(op)
             i -> ms
         }.toMap
       val exprCols: Map[Int, Column] = q.projection.zipWithIndex.collect {
         case (BoundItem.BIExpr(op, a), i) if !ineqIdx(i) =>
           i -> (if (groupExprAliases(a.toLowerCase)) col(a).as(a)
-                else projMarkers.get(i).map(_.operand(op).as(a))
+                else projMarkers.get(i).map(_.lower(op).as(a))
                   .getOrElse(havingOperand(op).as(a)))
       }.toMap
       // ORDER BY keys in aggregate scope lower NOW so their aggregate
@@ -470,13 +450,14 @@ object Lowering {
       // aliases resolve to post-aggregation column names, operands go
       // through havingOperand (group keys by grouped name, aggregates as
       // hidden agg columns)
-      // an operand that IS a group expression resolves to the grouped key
+      // a subtree that IS a group expression resolves to the grouped key
       // column (recomputing would reference pre-agg inputs); everything
-      // else goes through havingOperand
-      def aggScopeOperand(op: BoundOperand): Column =
-        q.groupBy.collectFirst {
-          case BoundGroupKey.GKExpr(gop, a) if gop == op => col(a)
-        }.getOrElse(havingOperand(op))
+      // else resolves like havingOperand
+      val aggScopeLeaf: PartialFunction[BoundNode, Column] =
+        Function.unlift((n: BoundNode) => q.groupBy.collectFirst {
+          case BoundGroupKey.GKExpr(gop, a) if gop == n => col(a)
+        }) orElse havingLeaf
+      def aggScopeOperand(op: BoundOperand): Column = lowerTree(op, aggScopeLeaf)
       val orderCols: Seq[(Column, Ast.SortDir)] = q.orderBy.map { case (k, desc) =>
         val c = k match {
           case BoundOrderKey.OKOutput(n) =>
@@ -558,14 +539,6 @@ object Lowering {
         winLowered.collect { case (n, Right(c)) => n -> c }
       val winReqs: Seq[GlobalWindows.Req] =
         winLowered.collect { case (_, Left(r)) => r }
-      def qualifyOp(o: BoundOperand): Column = o match {
-        case BoundOperand.BOut(n, _) => col(qualifyWinAliasCol(n.toLowerCase))
-        case BoundOperand.BArith(ch, l, r) =>
-          arith(ch, qualifyOp(l), qualifyOp(r))
-        case BoundOperand.BCast(x, t)    => qualifyOp(x).cast(t.spark)
-        case BoundOperand.BTryCast(x, t) => qualifyOp(x).try_cast(t.spark)
-        case other                       => aggScopeOperand(other)
-      }
       // subquery-bearing QUALIFY over an aggregated query: the
       // post-aggregation marker machinery, registered NOW (probe
       // aggregates become hidden agg columns before the agg assembles),
@@ -575,14 +548,14 @@ object Lowering {
       // their hidden agg columns before the agg assembles, exactly like
       // the HAVING mixed-conjunct plans
       val qualifyMarkers: Option[(MarkerScope, Column)] = q.qualify.collect {
-        case qe if BoundExpr.containsSub(qe) =>
+        case qe if BoundNode.hasSubquery(qe) =>
           val ms = new MarkerScope(spark, source, "qla",
-            bc => col(groupOut(bc)), qualifyOp)
+            bc => col(groupOut(bc)), aggScopeLeaf)
           ms.register(qe)
-          (ms, ms.pred(qe))
+          (ms, ms.lower(qe))
       }
       val qualifyFilter: Option[Column] = q.qualify.collect {
-        case qe if !BoundExpr.containsSub(qe) => lowerExprWith(qe, qualifyOp)
+        case qe if !BoundNode.hasSubquery(qe) => lowerTree(qe, aggScopeLeaf)
       }
       val hiddenExprs = havingAggs.map { case (node, name) =>
         aggNodeCol(node).as(name) }
@@ -1348,7 +1321,7 @@ object Lowering {
               sub.distinctOn.isEmpty && sub.having.isEmpty &&
               sub.qualify.isEmpty && sub.limit.isEmpty &&
               sub.offset.isEmpty && sub.derived.isEmpty &&
-              !sub.predicate.exists(BoundExpr.containsSub) &&
+              !sub.predicate.exists(BoundNode.hasSubquery) &&
               sub.projection.forall {
                 case BoundItem.BICol(c, a) =>
                   a.forall(_.equalsIgnoreCase(c.attr.name))
@@ -1507,13 +1480,13 @@ object Lowering {
         // an expression OVER aggregate calls (0.2 * avg(x), the TPC-H
         // Q17 shape): each distinct aggregate node computes as a hidden
         // per-key column, the expression projects over them post-join
-        val nodes = Analyzer.BoundOperand.aggNodes(op).distinct
+        val nodes = Analyzer.BoundNode.aggNodes(op).distinct
         val hidden = nodes.zipWithIndex.map { case (n, i) =>
           Aggregates.lowerNode(n, lowerOperandWith(_, qcolOf))
             .as(s"${scalarName}_a$i")
         }
         val g = core.groupBy(keyCols: _*).agg(hidden.head, hidden.tail: _*)
-        val nodeCol: Map[BoundOperand, Column] = nodes.zipWithIndex.map {
+        val nodeCol: Map[BoundNode, Column] = nodes.zipWithIndex.map {
           case (n, i) =>
             val c = g(s"${scalarName}_a$i")
             n -> (n match {
@@ -1521,18 +1494,7 @@ object Lowering {
               case _                          => c
             })
         }.toMap
-        def low(o: BoundOperand): Column = nodeCol.getOrElse(o, o match {
-          case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-          case BoundOperand.BFunc(f2, args)  => Functions.lower(f2, args, low)
-          case BoundOperand.BCase(bs, els)   => caseCol(bs, els, low)
-          case BoundOperand.BCast(x, t)      => low(x).cast(t.spark)
-          case BoundOperand.BTryCast(x, t)   => low(x).try_cast(t.spark)
-          case BoundOperand.BLit(l2)         => lowerLit(l2)
-          case BoundOperand.BInterval(n2, u) => intervalCol(n2, u)
-          case other => sys.error(
-            s"unreachable operand in correlated scalar expression: $other")
-        })
-        (g, low(op))
+        (g, lowerTree(op, nodeCol))
       case _ => sys.error("unreachable: analyzer requires a single aggregate call")
     }
     val keyCond = (outer: BoundCol => Column) => pairs.zipWithIndex
@@ -1572,7 +1534,7 @@ object Lowering {
     val nodes: Seq[(String, Option[BoundOperand])] = sub.projection.head match {
       case BoundItem.BIAgg(f, arg, _, _) => Seq((f, arg))
       case BoundItem.BIExpr(op, _) =>
-        Analyzer.BoundOperand.aggNodes(op).distinct.map {
+        Analyzer.BoundNode.aggNodes(op).distinct.map {
           case BoundOperand.BAgg(f, arg, _) => (f, arg)
           case other => sys.error(s"unreachable aggregate node $other")
         }
@@ -1670,22 +1632,11 @@ object Lowering {
     val scalar = sub.projection.head match {
       case BoundItem.BIAgg(_, _, _, _) => ran(s"${name}_r0")
       case BoundItem.BIExpr(op, _) =>
-        val nodeCol: Map[BoundOperand, Column] =
-          Analyzer.BoundOperand.aggNodes(op).distinct.zipWithIndex.map {
+        val nodeCol: Map[BoundNode, Column] =
+          Analyzer.BoundNode.aggNodes(op).distinct.zipWithIndex.map {
             case (n2, j) => (n2: BoundOperand) -> ran(s"${name}_r$j")
           }.toMap
-        def low(o: BoundOperand): Column = nodeCol.getOrElse(o, o match {
-          case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-          case BoundOperand.BFunc(f2, args)  => Functions.lower(f2, args, low)
-          case BoundOperand.BCase(bs, els)   => caseCol(bs, els, low)
-          case BoundOperand.BCast(x, t)      => low(x).cast(t.spark)
-          case BoundOperand.BTryCast(x, t)   => low(x).try_cast(t.spark)
-          case BoundOperand.BLit(l2)         => lowerLit(l2)
-          case BoundOperand.BInterval(n2, u) => intervalCol(n2, u)
-          case other => sys.error(
-            s"unreachable operand in running scalar expression: $other")
-        })
-        low(op)
+        lowerTree(op, nodeCol)
       case _ => sys.error("unreachable: analyzer requires a single aggregate call")
     }
     (joined, scalar)
@@ -1732,7 +1683,7 @@ object Lowering {
     val base =
       if (base0.nonEmpty) base0
       else Seq(spark.range(0L, 1L, 1L, 1).toDF().drop("id"))
-    val allConj: Seq[BoundExpr] = q.predicate.map(conjuncts).getOrElse(Nil)
+    val allConj: Seq[BoundExpr] = q.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
     // subquery conjuncts — IN/EXISTS/scalar comparisons — lower as joins
     // AFTER the plain filter/join phase. A PURE top-level subquery
     // conjunct takes the efficient semi/anti-join path; a MIXED conjunct
@@ -1743,7 +1694,7 @@ object Lowering {
            _: BoundExpr.BRowInSub => true
       case _ => false
     }
-    val (mixedSubConjs, conj0) = restConj.partition(BoundExpr.containsSub)
+    val (mixedSubConjs, conj0) = restConj.partition(BoundNode.hasSubquery)
     // a conjunct that references an outer-joined table must evaluate AFTER
     // that join (it would be unresolvable — and wrong — before it). And
     // once any RIGHT/FULL step can null-extend the INNER group's side,
@@ -1757,14 +1708,14 @@ object Lowering {
     val (conj1, postOuterConj) =
       if (leftNullExtending) (Nil, conj0)
       else conj0.partition(c =>
-        Analyzer.exprCols(c).map(_.binding).toSet.subsetOf(innerB))
+        Analyzer.columnsOf(c).map(_.binding).toSet.subsetOf(innerB))
     // LATERAL key equalities are JOIN conditions of the leading FROM
     // group: they always apply here — deferring them past a RIGHT/FULL
     // step would filter that step's null-extended rows away
     val conj2 = conj1 ++ q.lateralConjs
     // conjuncts reading an aggregate-lateral column wait for its join
     val (aggLatConj, conj) = conj2.partition(c =>
-      Analyzer.exprCols(c).exists(x => aggLatB(x.binding)))
+      Analyzer.columnsOf(c).exists(x => aggLatB(x.binding)))
     // equi-conjunct across two bindings → usable as an explicit join cond
     def equiSides(c: BoundExpr): Option[(String, String)] = c match {
       case BoundExpr.BCmp(Ast.CmpOp.Eq, BoundOperand.BCol(a), BoundOperand.BCol(b))
@@ -2048,7 +1999,7 @@ object Lowering {
           // condition (the TPC-H Q21 shape).
           val innerB = (sub.tables ++ sub.joinSteps.map(_.table))
             .map(_.binding).toSet
-          val rcols = residual.flatMap(Analyzer.exprCols)
+          val rcols = residual.flatMap(Analyzer.columnsOf)
             .filter(c => innerB(c.binding)).distinct
           val subDf = core.select(
             pairs.zipWithIndex.map { case ((_, ic), k) =>
@@ -2063,7 +2014,7 @@ object Lowering {
           val cond = (pairs.zipWithIndex
             .map { case ((oc, _), k) => qcolOf(oc) === subDf(s"__c$k") } ++
             residual.map(e =>
-              lowerExprWith(e, op => lowerOperandWith(op, rres))))
+              lowerTree(e, columnLeaf(rres))))
             .reduce(_ && _)
           df.join(subDf, cond, joinType)
         }
@@ -2138,7 +2089,7 @@ object Lowering {
     */
   private final class MarkerScope(spark: SparkSession,
       source: BoundTable => DataFrame, tag: String,
-      outerKey: BoundCol => Column, opResolve: BoundOperand => Column) {
+      outerKey: BoundCol => Column, scope: PartialFunction[BoundNode, Column]) {
     val joins = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Column)]
     val drops = scala.collection.mutable.ArrayBuffer.empty[String]
     private val predOf = new java.util.IdentityHashMap[BoundExpr, Column]()
@@ -2157,16 +2108,13 @@ object Lowering {
           lit(null).cast("boolean"))
         .otherwise(lit(false))
 
-    /** Register every subquery under `e` as marker joins. `obs` = an
-      * enclosing NOT makes NULL-vs-FALSE observable, forcing 3VL markers.
+    /** Register every subquery under `n` as marker joins. `obs` = an
+      * enclosing NOT makes NULL-vs-FALSE observable, forcing 3VL markers;
+      * a CASE's WHEN condition consumes TRUE-vs-non-TRUE like a filter,
+      * so below an operand `obs` resets (a nested NOT sets it again).
       */
-    def register(e: BoundExpr, obs: Boolean = false): Unit = e match {
-      case BoundExpr.BAnd(l, r) => register(l, obs); register(r, obs)
-      case BoundExpr.BOr(l, r)  => register(l, obs); register(r, obs)
-      case BoundExpr.BNot(x)    => register(x, obs = true)
-      case BoundExpr.BIsNull(o, _)        => registerOp(o)
-      case BoundExpr.BLike(o, _, _, _, _) => registerOp(o)
-      case BoundExpr.BCmp(_, l, r)        => registerOp(l); registerOp(r)
+    def register(n: BoundNode, obs: Boolean = false): Unit = n match {
+      case BoundExpr.BNot(x) => register(x, obs = true)
       case s @ BoundExpr.BExists(sub, pairs, neg, residual) =>
         require(residual.isEmpty, "unreachable: analyzer restricts " +
           "residual EXISTS to top-level WHERE conjuncts")
@@ -2187,8 +2135,8 @@ object Lowering {
         predOf.put(s, if (neg) !p else p)
       case s @ BoundExpr.BInSub(o, sub, pairs, neg) =>
         val m = fresh()
-        registerOp(o)
-        val probe = operand(o)
+        register(o)
+        val probe = lower(o)
         // NULL-vs-FALSE is observable for NOT IN (the negation flips
         // FALSE to TRUE but keeps NULL) and under any enclosing NOT
         val three = neg || obs
@@ -2254,8 +2202,8 @@ object Lowering {
         // CORRELATED probes ride the same frames with the decorrelated
         // inner keys as EXTRA grouping/join columns — the per-outer-key
         // set semantics fall out of the grouping, still 1:1 left joins.
-        os.foreach(registerOp)
-        val probes = os.map(operand)
+        os.foreach(register(_))
+        val probes = os.map(lower)
         val k = os.length
         val kp = pairs.length
         val m = fresh()
@@ -2356,8 +2304,8 @@ object Lowering {
           .otherwise(lit(false))
         predOf.put(s, if (neg) !p else p)
       case s @ BoundExpr.BCmpSub(op, o, sub, guard, pairs) =>
-        registerOp(o)
-        val probe = operand(o)
+        register(o)
+        val probe = lower(o)
         if (pairs.isEmpty) {
           val subDf0 = lowerSelect(spark, sub, source)
           if (guard) predOf.put(s, cmpCols(op, probe, guardedScalarLit(subDf0)))
@@ -2377,8 +2325,8 @@ object Lowering {
           predOf.put(s, cmpCols(op, probe, scalar))
         }
       case s @ BoundExpr.BQuantSub(op, o, sub, all, pairs) =>
-        registerOp(o)
-        val probe = operand(o)
+        register(o)
+        val probe = lower(o)
         val m = fresh()
         val factsCols = Seq(s"${m}_n", s"${m}_nn", s"${m}_mn", s"${m}_mx")
         if (pairs.isEmpty) {
@@ -2412,20 +2360,6 @@ object Lowering {
         }
         drops ++= factsCols
         predOf.put(s, quantPred(op, all, probe, m))
-    }
-
-    /** Register subqueries inside an operand tree (CASE conditions). A
-      * WHEN condition consumes TRUE-vs-non-TRUE like a filter, so `obs`
-      * resets — a nested NOT inside the condition sets it again.
-      */
-    def registerOp(o: BoundOperand): Unit = o match {
-      case BoundOperand.BCase(bs, els) =>
-        bs.foreach { case (c, v) => register(c); registerOp(v) }
-        els.foreach(registerOp)
-      case BoundOperand.BArith(_, l, r) => registerOp(l); registerOp(r)
-      case BoundOperand.BFunc(_, args)  => args.foreach(registerOp)
-      case BoundOperand.BCast(x, _)     => registerOp(x)
-      case BoundOperand.BTryCast(x, _)  => registerOp(x)
       // a scalar subquery as a VALUE: correlated = one per-key aggregate
       // frame left-joined on the decorrelated equalities; uncorrelated =
       // a guarded literal (one bounded job, no join) or one broadcast
@@ -2450,35 +2384,20 @@ object Lowering {
             opValOf.put(v, col(m))
           }
         }
-      case _ => ()
+      case o: BoundOperand => o.children.foreach(register(_))
+      case e               => e.children.foreach(register(_, obs))
     }
 
-    /** Lower a predicate with the registered markers substituted. */
-    def pred(e: BoundExpr): Column =
-      Option(predOf.get(e)).getOrElse(e match {
-        case BoundExpr.BAnd(l, r) => pred(l) && pred(r)
-        case BoundExpr.BOr(l, r)  => pred(l) || pred(r)
-        case BoundExpr.BNot(x)    => !pred(x)
-        case other                => lowerExprWith(other, operand)
-      })
-
-    /** Lower an operand with marker-aware CASE conditions. */
-    def operand(o: BoundOperand): Column = o match {
-      case BoundOperand.BCase(bs, els) =>
-        val first = when(pred(bs.head._1), operand(bs.head._2))
-        val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
-          acc.when(pred(c), operand(v))
-        }
-        els.fold(chained)(x => chained.otherwise(operand(x)))
-      case BoundOperand.BArith(ch, l, r) => arith(ch, operand(l), operand(r))
-      case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, operand)
-      case BoundOperand.BCast(x, t)      => operand(x).cast(t.spark)
-      case BoundOperand.BTryCast(x, t)   => operand(x).try_cast(t.spark)
+    /** Lower a predicate or operand with the registered markers
+      * substituted, everything else resolved through `scope`.
+      */
+    def lower(n: BoundNode): Column = lowerTree(n, leaf)
+    private val leaf = ({
+      case e: BoundExpr if predOf.containsKey(e) => predOf.get(e)
       case v: BoundOperand.BSubVal =>
         Option(opValOf.get(v)).getOrElse(
           sys.error("unreachable: scalar-subquery operand was not registered"))
-      case other                         => opResolve(other)
-    }
+    }: PartialFunction[BoundNode, Column]).orElse(scope)
   }
 
   /** A WHERE conjunct with subqueries in general position (under OR,
@@ -2487,11 +2406,12 @@ object Lowering {
   private def applyMixedSubConjunct(spark: SparkSession, df0: DataFrame,
       cond: BoundExpr, source: BoundTable => DataFrame, tag: Int): DataFrame = {
     def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
-    val ms = new MarkerScope(spark, source, tag.toString, qcolOf, lowerOperand)
+    val ms = new MarkerScope(spark, source, tag.toString, qcolOf,
+      columnLeaf(qcolOf))
     ms.register(cond)
     val joined = ms.joins.foldLeft(df0) { case (d, (f, on)) =>
       d.join(f, on, "left_outer") }
-    joined.filter(ms.pred(cond)).drop(ms.drops.toSeq: _*)
+    joined.filter(ms.lower(cond)).drop(ms.drops.toSeq: _*)
   }
 
   /** Per-top-level-query lowering scope: reference counts of
@@ -2806,40 +2726,64 @@ object Lowering {
     limit.fold(off)(n => off.limit(math.min(n, Int.MaxValue.toLong).toInt))
   }
 
-  def lowerExpr(e: BoundExpr): Column = lowerExprWith(e, lowerOperand)
+  def lowerExpr(e: BoundExpr): Column = lowerTree(e, columnLeaf(qualified))
 
-  /** Expression lowering parameterized by the operand lowerer, so the
-    * same predicate tree evaluates under qualified (scan/join), grouped
-    * (HAVING/ORDER BY) or bare (DML/sample) column resolution — CASE
-    * conditions inherit whichever scope their operand sits in.
+  /** The one structural lowering of a bound expression tree. `leaf` is
+    * tried first at every node — predicate or operand — and resolves
+    * what the caller's scope decides: qualified or bare columns, grouped
+    * output names, aggregate nodes, registered markers, window outputs,
+    * lambda variables. Every other node lowers here, its children under
+    * the same `leaf`; CASE conditions inherit the scope of their operand.
     */
-  def lowerExprWith(e: BoundExpr, opLower: BoundOperand => Column): Column = e match {
-    case BoundExpr.BAnd(l, r) => lowerExprWith(l, opLower) && lowerExprWith(r, opLower)
-    case BoundExpr.BOr(l, r)  => lowerExprWith(l, opLower) || lowerExprWith(r, opLower)
-    case BoundExpr.BNot(x)    => !lowerExprWith(x, opLower) // SQL 3VL: NOT NULL → NULL
-    case BoundExpr.BIsNull(o, neg) =>
-      val c = opLower(o)
-      if (neg) c.isNotNull else c.isNull
-    case BoundExpr.BLike(o, pat, neg, ci, esc) =>
-      val c = likeCol(opLower(o), pat, ci, esc)
-      if (neg) !c else c
-    case BoundExpr.BInSub(_, _, _, _) | BoundExpr.BExists(_, _, _, _) |
-        BoundExpr.BCmpSub(_, _, _, _, _) | BoundExpr.BQuantSub(_, _, _, _, _) |
-        BoundExpr.BRowInSub(_, _, _, _) =>
-      sys.error("subquery conjuncts lower as joins, not Column expressions")
-    case BoundExpr.BCmp(op, l, r) =>
-      cmpCols(op, opLower(l), opLower(r))
+  private[sql] def lowerTree(n: BoundNode,
+      leaf: PartialFunction[BoundNode, Column]): Column = {
+    val low: BoundOperand => Column = lowerTree(_, leaf)
+    def pred(e: BoundExpr): Column = lowerTree(e, leaf)
+    leaf.applyOrElse[BoundNode, Column](n, {
+      case BoundOperand.BLit(l)          => lowerLit(l)
+      case BoundOperand.BInterval(k, u)  => intervalCol(k, u)
+      case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
+      case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, low)
+      case BoundOperand.BCast(x, t)      => low(x).cast(t.spark)
+      case BoundOperand.BTryCast(x, t)   => low(x).try_cast(t.spark)
+      case BoundOperand.BCase(bs, els) =>
+        val first = when(pred(bs.head._1), low(bs.head._2))
+        val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
+          acc.when(pred(c), low(v))
+        }
+        els.fold(chained)(e => chained.otherwise(low(e)))
+      case BoundOperand.BAgg(f, _, _) =>
+        sys.error(s"aggregate $f(...) outside aggregate scope")
+      case BoundOperand.BOrderedAgg(f, _, _, _, _) =>
+        sys.error(s"$f(...) is only supported in the SELECT list / HAVING " +
+          "of an aggregated query")
+      case BoundExpr.BAnd(l, r) => pred(l) && pred(r)
+      case BoundExpr.BOr(l, r)  => pred(l) || pred(r)
+      case BoundExpr.BNot(x)    => !pred(x) // SQL 3VL: NOT NULL → NULL
+      case BoundExpr.BIsNull(o, neg) =>
+        val c = low(o)
+        if (neg) c.isNotNull else c.isNull
+      case BoundExpr.BLike(o, pat, neg, ci, esc) =>
+        val c = likeCol(low(o), pat, ci, esc)
+        if (neg) !c else c
+      case BoundExpr.BCmp(op, l, r) => cmpCols(op, low(l), low(r))
+      case _: Subquery =>
+        sys.error("subqueries lower as joins or markers, not Column expressions")
+      case other => sys.error(s"unreachable: $other has no lowering in this scope")
+    })
   }
 
-  /** CASE chain: when/when/…/otherwise under the caller's resolution. */
-  private def caseCol(bs: Seq[(BoundExpr, BoundOperand)], els: Option[BoundOperand],
-      rec: BoundOperand => Column): Column = {
-    val first = when(lowerExprWith(bs.head._1, rec), rec(bs.head._2))
-    val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
-      acc.when(lowerExprWith(c, rec), rec(v))
-    }
-    els.fold(chained)(e => chained.otherwise(rec(e)))
+  /** Scan/join-scope resolution: columns through `colOf`; an output
+    * reference (a QUALIFY window alias) reads the window column already
+    * attached under its name.
+    */
+  private[sql] def columnLeaf(colOf: BoundCol => Column)
+      : PartialFunction[BoundNode, Column] = {
+    case BoundOperand.BCol(c)    => colOf(c)
+    case BoundOperand.BOut(n, _) => col(n)
   }
+
+  private def qualified(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
 
   /** Apply an ORDER BY direction — ASC/DESC with optional explicit NULLS
     * FIRST/LAST (None keeps Spark's default: NULLS FIRST for ASC, LAST
@@ -2931,27 +2875,19 @@ object Lowering {
         .otherwise(lit(true))
   }
 
-  /** Lower a lambda body: parameters resolve through `env`, everything
-    * else recurses with the env threaded (so nested higher-order calls
-    * extend it) and bottoms out in the caller's operand lowerer.
+  /** Lower a lambda body: parameters resolve through `env`; a subtree
+    * that reads none of them lowers in the enclosing scope (`outer`), so
+    * nested higher-order calls see the parameters of every lambda around
+    * them.
     */
   private[sql] def lowerLambdaBody(o: BoundOperand, env: Map[String, Column],
       outer: BoundOperand => Column): Column = {
-    def low(x: BoundOperand): Column = x match {
-      case BoundOperand.BLambdaVar(n, _) => env.getOrElse(n,
-        sys.error(s"unreachable: unbound lambda parameter $n"))
-      case BoundOperand.BArith(ch, l, r) => arith(ch, low(l), low(r))
-      case BoundOperand.BFunc(f, as)     => Functions.lower(f, as, low)
-      case BoundOperand.BCast(y, t)      => low(y).cast(t.spark)
-      case BoundOperand.BTryCast(y, t)   => low(y).try_cast(t.spark)
-      case BoundOperand.BCase(bs, els) =>
-        val first = when(lowerExprWith(bs.head._1, low), low(bs.head._2))
-        val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
-          acc.when(lowerExprWith(c, low), low(v)) }
-        els.fold(chained)(e => chained.otherwise(low(e)))
-      case other => outer(other)
-    }
-    low(o)
+    def readsParam(n: BoundNode): Boolean =
+      n.exists { case BoundOperand.BLambdaVar(v, _) => env.contains(v) }
+    lowerTree(o, {
+      case BoundOperand.BLambdaVar(v, _) if env.contains(v) => env(v)
+      case x: BoundOperand if !readsParam(x) => outer(x)
+    })
   }
 
   private[sql] def arith(op: Char, lc: Column, rc: Column): Column = op match {
@@ -2972,21 +2908,7 @@ object Lowering {
     * single-table DML).
     */
   private[sql] def lowerOperandWith(o: BoundOperand, colOf: BoundCol => Column): Column =
-    o match {
-      case BoundOperand.BCol(c) => colOf(c)
-      case BoundOperand.BArith(op, l, r) =>
-        arith(op, lowerOperandWith(l, colOf), lowerOperandWith(r, colOf))
-      case BoundOperand.BFunc(f, args) =>
-        Functions.lower(f, args, lowerOperandWith(_, colOf))
-      case BoundOperand.BCase(bs, els) =>
-        caseCol(bs, els, lowerOperandWith(_, colOf))
-      case BoundOperand.BCast(x, t) => lowerOperandWith(x, colOf).cast(t.spark)
-      case BoundOperand.BTryCast(x, t) => lowerOperandWith(x, colOf).try_cast(t.spark)
-      // an output-column reference (QUALIFY): the window column is
-      // already attached at this name, bare resolution
-      case BoundOperand.BOut(n, _) => col(n)
-      case other => lowerOperand(other)
-    }
+    lowerTree(o, columnLeaf(colOf))
 
   private[sql] def lowerLit(l: Lit): Column = l match {
     case Lit.LitLong(v)      => lit(v)
@@ -3021,86 +2943,31 @@ object Lowering {
     }
   }
 
-  private def lowerOperand(o: BoundOperand): Column = o match {
-    case BoundOperand.BCol(c) => col(s"${c.binding}.${c.attr.name}")
-    case BoundOperand.BInterval(n, u) => intervalCol(n, u)
-    case BoundOperand.BLit(l) => lowerLit(l)
-    case BoundOperand.BArith(op, l, r) => arith(op, lowerOperand(l), lowerOperand(r))
-    case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, lowerOperand)
-    case BoundOperand.BCase(bs, els)   => caseCol(bs, els, lowerOperand)
-    case BoundOperand.BCast(x, t)      => lowerOperand(x).cast(t.spark)
-    case BoundOperand.BTryCast(x, t)   => lowerOperand(x).try_cast(t.spark)
-    case BoundOperand.BOut(n, _)       => col(n)
-    case BoundOperand.BAgg(f, _, _) =>
-      sys.error(s"aggregate $f(...) outside aggregate scope")
-    case BoundOperand.BOrderedAgg(f, _, _, _, _) =>
-      sys.error(s"$f(...) is only supported in the SELECT list / HAVING " +
-        "of an aggregated query")
-  }
+  private def lowerOperand(o: BoundOperand): Column = lowerOperandWith(o, qualified)
 
   // ---- predicate decomposition for statistics (reference
   //      analyzer/mod.rs:98-186 splits WHERE into per-table selections) ----
-
-  /** Flatten the AND-tree into conjuncts (OR subtrees stay whole). */
-  def conjuncts(e: BoundExpr): Seq[BoundExpr] = e match {
-    case BoundExpr.BAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other                => Seq(other)
-  }
 
   /** The single table binding a conjunct touches, if exactly one. A
     * subquery conjunct is never single-table (it cannot run against a
     * sample, so the estimator must skip it).
     */
-  def singleBinding(e: BoundExpr): Option[String] = {
-    var hasSub = false
-    def opCols(o: BoundOperand): Seq[String] = o match {
-      case BoundOperand.BCol(c)         => Seq(c.binding)
-      case BoundOperand.BArith(_, l, r) => opCols(l) ++ opCols(r)
-      case BoundOperand.BFunc(_, args)  => args.flatMap(opCols)
-      case BoundOperand.BCast(x, _)     => opCols(x)
-      case BoundOperand.BTryCast(x, _)  => opCols(x)
-      case BoundOperand.BCase(bs, els) =>
-        bs.flatMap { case (c, v) => cols(c) ++ opCols(v) } ++ els.toSeq.flatMap(opCols)
-      case _                            => Nil
-    }
-    def cols(x: BoundExpr): Seq[String] = x match {
-      case BoundExpr.BAnd(l, r) => cols(l) ++ cols(r)
-      case BoundExpr.BOr(l, r)  => cols(l) ++ cols(r)
-      case BoundExpr.BNot(y)    => cols(y)
-      case BoundExpr.BIsNull(o, _)  => opCols(o)
-      case BoundExpr.BLike(o, _, _, _, _) => opCols(o)
-      case BoundExpr.BCmp(_, l, r)  => opCols(l) ++ opCols(r)
-      case BoundExpr.BInSub(_, _, _, _)  => hasSub = true; Nil
-      case BoundExpr.BRowInSub(_, _, _, _)  => hasSub = true; Nil
-      case BoundExpr.BExists(_, _, _, _) => hasSub = true; Nil
-      case BoundExpr.BCmpSub(_, _, _, _, _) => hasSub = true; Nil
-      case BoundExpr.BQuantSub(_, _, _, _, _) => hasSub = true; Nil
-    }
-    val found = cols(e).distinct
-    if (hasSub) None
-    else found match {
+  def singleBinding(e: BoundExpr): Option[String] =
+    if (BoundNode.hasSubquery(e)) None
+    else columnsOf(e).map(_.binding).distinct match {
       case Seq(one) => Some(one)
       case _        => None
     }
-  }
+
+  private def bare(bc: BoundCol): Column = col(bc.attr.name)
 
   /** Lower a single-table conjunct with UNQUALIFIED column names, for
     * evaluation against that table's sample or a DML image (reference
     * executes selections against its reservoir sample the same way,
     * planner/bottomup.rs:111-168).
     */
-  def lowerExprBare(e: BoundExpr): Column = lowerExprWith(e, bareOperand)
+  def lowerExprBare(e: BoundExpr): Column = lowerTree(e, columnLeaf(bare))
 
   /** A single operand with unqualified columns (UPDATE SET values). */
-  def lowerOperandBare(o: BoundOperand): Column = bareOperand(o)
-
-  private def bareOperand(o: BoundOperand): Column = o match {
-    case BoundOperand.BCol(c)          => col(c.attr.name)
-    case BoundOperand.BArith(op, l, r) => arith(op, bareOperand(l), bareOperand(r))
-    case BoundOperand.BFunc(f, args)   => Functions.lower(f, args, bareOperand)
-    case BoundOperand.BCase(bs, els)   => caseCol(bs, els, bareOperand)
-    case BoundOperand.BCast(x, t)      => bareOperand(x).cast(t.spark)
-    case BoundOperand.BTryCast(x, t)   => bareOperand(x).try_cast(t.spark)
-    case other                         => lowerOperand(other)
-  }
+  def lowerOperandBare(o: BoundOperand): Column = lowerOperandWith(o, bare)
 }

@@ -258,6 +258,13 @@ object Parser {
     Aggregates.syntaxOf(f.toLowerCase).contains(s)
   private def reserved(s: String): Boolean = reservedWords(s.toLowerCase)
 
+  /** Does `s` read back as an unquoted identifier — the lexer's
+    * identifier shape, and no reserved word?
+    */
+  def isBareIdentifier(s: String): Boolean =
+    s.nonEmpty && (s.head.isLetter || s.head == '_') &&
+      s.forall(c => c.isLetterOrDigit || c == '_') && !reserved(s)
+
   /** FROM-position file readers → formats (DuckDB's read_* family;
     * the *_auto forms are aliases — schema inference is the only mode).
     */
@@ -1013,28 +1020,8 @@ object Parser {
   /** Parse-level aggregate detection (GROUP BY ALL desugars to the
     * non-aggregate SELECT items at parse time).
     */
-  private def operandHasAgg(o: Operand): Boolean = o match {
-    case Operand.AggCall(_, _, _)         => true
-    case Operand.OrderedAgg(_, _, _, _, _) => true
-    case Operand.Arith(_, l, r)   => operandHasAgg(l) || operandHasAgg(r)
-    case Operand.FuncCall(_, as)  => as.exists(operandHasAgg)
-    case Operand.Cast(x, _)       => operandHasAgg(x)
-    case Operand.TryCast(x, _)    => operandHasAgg(x)
-    case Operand.Lambda(_, b)     => operandHasAgg(b)
-    case Operand.CaseWhen(bs, els) =>
-      bs.exists { case (c, v) => exprHasAgg(c) || operandHasAgg(v) } ||
-        els.exists(operandHasAgg)
-    case _ => false
-  }
-  private def exprHasAgg(e: Expr): Boolean = e match {
-    case Expr.And(l, r)       => exprHasAgg(l) || exprHasAgg(r)
-    case Expr.Or(l, r)        => exprHasAgg(l) || exprHasAgg(r)
-    case Expr.Not(x)          => exprHasAgg(x)
-    case Expr.Cmp(_, l, r)    => operandHasAgg(l) || operandHasAgg(r)
-    case Expr.IsNull(o, _)    => operandHasAgg(o)
-    case Expr.Like(o, _, _, _, _) => operandHasAgg(o)
-    case _ => false
-  }
+  private def operandHasAgg(o: Operand): Boolean =
+    o.exists { case _: Operand.AggCall | _: Operand.OrderedAgg => true }
 
   /** DuckDB star modifiers: `* EXCLUDE (col, …)` / `* REPLACE (expr AS
     * col, …)` / `* RENAME (old AS new, …)`, in any order (contextual
@@ -4328,47 +4315,16 @@ object Parser {
     Right(sql)
   }
 
-  /** Splits a script on top-level `;` (outside quotes and comments)
-    * into trimmed non-empty statements — multi-statement input runs
-    * each in order through the ordinary query path.
+  /** Splits a script at the lexer's `;` tokens into trimmed non-empty
+    * statements — multi-statement input runs each in order through the
+    * ordinary query path. Text that does not lex stays whole, so the
+    * parser reports the error.
     */
   def splitStatements(sql: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    val n = sql.length
-    var i = 0
-    var start = 0
-    def emit(end: Int): Unit = {
-      val s = sql.substring(start, end).trim
-      if (s.nonEmpty) out += s
-    }
-    while (i < n) {
-      sql(i) match {
-        case '\'' =>
-          i += 1
-          var done = false
-          while (i < n && !done) {
-            if (sql(i) == '\'') {
-              if (i + 1 < n && sql(i + 1) == '\'') i += 2
-              else { done = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          i += 1
-          while (i < n && sql(i) != '"') i += 1
-          if (i < n) i += 1
-        case '-' if i + 1 < n && sql(i + 1) == '-' =>
-          while (i < n && sql(i) != '\n') i += 1
-        case '/' if i + 1 < n && sql(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(sql(i) == '*' && sql(i + 1) == '/')) i += 1
-          i = math.min(n, i + 2)
-        case ';' =>
-          emit(i); i += 1; start = i
-        case _ => i += 1
-      }
-    }
-    emit(n)
-    out.result()
+    val cuts = lex(sql).fold(_ => Vector.empty[Int],
+      _.collect { case TSym(";", at) => at })
+    (-1 +: cuts).zip(cuts :+ sql.length).map { case (from, until) =>
+      sql.substring(from + 1, until).trim }.filter(_.nonEmpty)
   }
 
   /** stub = true replaces every known-macro call with `(0)` instead of

@@ -3187,6 +3187,14 @@ class DialectSpec extends AnyFunSuite {
     assert(db.query("SELECT list_transform(id, x -> x) AS l FROM people").isLeft)
   }
 
+  test("a nested lambda body reads the enclosing lambda's parameter") {
+    val db = freshDb()
+    val r = db.select("SELECT list_transform([1, 2], " +
+      "x -> list_transform([10, 20], y -> x + y)) AS z")
+      .fold(e => fail(e.msg), identity).collect().head
+    assert(r.getSeq[Seq[Int]](0) == Seq(Seq(11, 21), Seq(12, 22)))
+  }
+
   test("row-value IN under OR, NOT and CASE — exact 3VL markers") {
     val db = freshDb()
     def run(sql: String): Unit = db.query(sql) match {
@@ -5659,6 +5667,15 @@ class DialectSpec extends AnyFunSuite {
     // maintenance statements: accepted, loudly no-op'd
     assert(db.query("CHECKPOINT").isRight)
     assert(db.query("VACUUM ANALYZE").isRight)
+  }
+
+  test("a `;` inside a nested block comment does not end the statement") {
+    val db = freshDb()
+    db.query("CREATE TABLE nb (k INT); INSERT INTO nb VALUES (1), (2)")
+      .fold(e => fail(e.msg), identity)
+    val r = db.select("SELECT k AS x /* a /* b */ ; */ FROM nb")
+      .fold(e => fail(e.msg), identity).collect()
+    assert(r.map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
   }
 
   test("SET VARIABLE / getvariable: literals, expressions, scoping") {

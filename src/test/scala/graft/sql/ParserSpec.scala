@@ -26,6 +26,16 @@ class ParserSpec extends AnyFunSuite {
     parseErr("SELECT a FROM test /* open")
   }
 
+  test("scripts split at the lexer's `;` tokens") {
+    val nested = "SELECT k AS x /* a /* b */ ; */ FROM t"
+    assert(Parser.splitStatements(nested) == Vector(nested))
+    assert(Parser.splitStatements("SELECT 'a;b' AS v; SELECT 2 AS w -- c; d\n;") ==
+      Vector("SELECT 'a;b' AS v", "SELECT 2 AS w -- c; d"))
+    // text that does not lex stays whole, so the parser reports its error
+    val open = "SELECT 1; SELECT /* open ;"
+    assert(Parser.splitStatements(open) == Vector(open))
+  }
+
   test("select columns from table") {
     assert(parseOk("SELECT a, b FROM test") ==
       SelectTree(Some(Seq(SCol(ColRef(None, "a")), SCol(ColRef(None, "b")))),

@@ -141,6 +141,20 @@ class WarehouseCatalogSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("EXPORT DATABASE rejects a column name the dialect cannot read back") {
+    for (col <- Seq("my col", "key")) {
+      val src = freshWh() + "/src.parquet"
+      spark.range(2).selectExpr("id AS ok", s"id AS `$col`").write.parquet(src)
+      val db = new GraftDatabase(spark, freshWh())
+      run(db, s"CREATE TABLE imp AS SELECT * FROM read_parquet('$src')")
+      db.query(s"EXPORT DATABASE '${freshWh()}'") match {
+        case Left(e) =>
+          assert(e.msg.contains("'imp'") && e.msg.contains(s"'$col'"), e.msg)
+        case Right(r) => fail(s"exported $r")
+      }
+    }
+  }
+
   test("EXPORT DATABASE of a sequence at its bound") {
     // an exhausted non-cycle sequence has no next value to restart from
     val db = new GraftDatabase(spark, freshWh())

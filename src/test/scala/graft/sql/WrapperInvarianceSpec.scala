@@ -1,0 +1,197 @@
+package graft.sql
+
+import java.nio.file.Files
+
+import scala.util.{Failure, Success, Try}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession
+
+/** Analyzer checks and operand lowerings see through every wrapper: for
+  * each check, the bare operand and its CAST, TRY_CAST, CASE, function
+  * call and arithmetic wrappings give the same outcome — the same
+  * rejection message, or the same rows (Spark's own answer over the same
+  * data where Spark has the syntax). No statement throws.
+  */
+class WrapperInvarianceSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkTestSession.spark
+
+  private lazy val db: GraftDatabase = {
+    val d = new GraftDatabase(spark,
+      Files.createTempDirectory("graft-wrap").toString)
+    for (sql <- Seq(
+        "CREATE TABLE t (k INT, g INT, v INT)",
+        "INSERT INTO t VALUES (1, 1, 10), (1, 1, 20), (2, 2, 5), (3, 2, 7)",
+        "CREATE TABLE u (k INT, v INT)",
+        "INSERT INTO u VALUES (1, 1), (1, 2), (1, 3), (2, 1)"))
+      d.query(sql).fold(e => fail(s"$sql -> ${e.msg}"), _ => ())
+    d
+  }
+
+  // Spark twins of t and u, for the checks whose rows Spark can answer
+  private lazy val twins: Unit = {
+    import spark.implicits._
+    Seq((1, 1, 10), (1, 1, 20), (2, 2, 5), (3, 2, 7)).toDF("k", "g", "v")
+      .createOrReplaceTempView("wrap_t")
+    Seq((1, 1), (1, 2), (1, 3), (2, 1)).toDF("k", "v")
+      .createOrReplaceTempView("wrap_u")
+  }
+
+  private val wrappings = Seq(
+    "CAST(%s AS INTEGER)", "TRY_CAST(%s AS INTEGER)",
+    "CASE WHEN 1 = 1 THEN %s END", "abs(%s)", "%s + 0")
+
+  /** A rejection message, or the sorted rows. */
+  private def outcome(sql: String): Either[String, Seq[String]] =
+    Try(db.select(sql).map(_.collect().map(_.toString).toSeq.sorted)) match {
+      case Success(r) => r.left.map(_.msg)
+      case Failure(e) => fail(s"$sql threw $e")
+    }
+
+  /** `template` with its `@` hole filled by the bare operand and by each
+    * wrapping of it; every form must give `expected`.
+    */
+  private def invariant(template: String, operand: String,
+      expected: Either[String, Seq[String]]): Unit =
+    for (form <- operand +: wrappings.map(_.format(operand))) {
+      val sql = template.replace("@", form)
+      assert(outcome(sql) == expected, sql)
+    }
+
+  private def rejected(sql: String): String =
+    outcome(sql).swap.getOrElse(fail(s"$sql was accepted"))
+
+  private def sparkRows(sql: String): Seq[String] = {
+    twins
+    spark.sql(sql).collect().map(_.toString).toSeq.sorted
+  }
+
+  test("HAVING grouped-column check") {
+    val t = "SELECT g FROM t GROUP BY g HAVING @ > 0"
+    invariant(t, "v", Left(rejected(t.replace("@", "v"))))
+    invariant("SELECT g FROM t GROUP BY g HAVING @ = 1",
+      "CASE WHEN v > 6 THEN 1 ELSE 0 END", Left(rejected(t.replace("@", "v"))))
+  }
+
+  test("HAVING TRY_CAST(v AS INTEGER) > 0 rejects like HAVING v > 0") {
+    assert(rejected("SELECT g FROM t GROUP BY g HAVING TRY_CAST(v AS INTEGER) > 0") ==
+      rejected("SELECT g FROM t GROUP BY g HAVING v > 0"))
+  }
+
+  test("HAVING CASE WHEN v > 6 THEN 1 ELSE 0 END = 1 rejects like HAVING v > 6") {
+    assert(rejected("SELECT g FROM t GROUP BY g " +
+      "HAVING CASE WHEN v > 6 THEN 1 ELSE 0 END = 1") ==
+      rejected("SELECT g FROM t GROUP BY g HAVING v > 6"))
+  }
+
+  private val residualCase = "CASE WHEN EXISTS (SELECT u.k FROM u " +
+    "WHERE u.k = t.k AND u.v <= t.v) THEN 1 ELSE 0 END"
+
+  test("residual-EXISTS position check") {
+    val t = "SELECT k FROM t WHERE @ = 1 OR k = 3"
+    invariant(t, residualCase, Left(rejected(t.replace("@", residualCase))))
+  }
+
+  test("TRY_CAST over a residual EXISTS under OR rejects like CAST") {
+    assert(rejected(s"SELECT k FROM t WHERE TRY_CAST($residualCase AS INTEGER) " +
+      "= 1 OR k = 3") ==
+      rejected(s"SELECT k FROM t WHERE CAST($residualCase AS INTEGER) = 1 OR k = 3"))
+  }
+
+  test("unnest placement check") {
+    val top = outcome("SELECT unnest([1, 2]) AS x")
+    assert(top == Right(Seq("[1]", "[2]")))
+    for (w <- wrappings) {
+      val sql = s"SELECT ${w.format("unnest([1, 2])")} AS x"
+      assert(outcome(sql) ==
+        Left("bad function call: unnest(...) is only valid as a top-level SELECT item"),
+        sql)
+    }
+  }
+
+  test("SELECT TRY_CAST(unnest([1, 2]) AS INTEGER) rejects like CAST") {
+    assert(rejected("SELECT TRY_CAST(unnest([1, 2]) AS INTEGER) AS x") ==
+      rejected("SELECT CAST(unnest([1, 2]) AS INTEGER) AS x"))
+  }
+
+  test("scalar subquery in an aggregate argument") {
+    val t = "SELECT g, sum(@) AS s FROM t GROUP BY g"
+    val sub = "(SELECT max(v) FROM u)"
+    invariant(t, sub, Left(rejected(t.replace("@", sub))))
+  }
+
+  test("sum(TRY_CAST((SELECT max(v) FROM u) AS INTEGER)) rejects like sum((SELECT …))") {
+    assert(rejected("SELECT g, sum(TRY_CAST((SELECT max(v) FROM u) AS INTEGER)) AS s " +
+      "FROM t GROUP BY g") ==
+      rejected("SELECT g, sum((SELECT max(v) FROM u)) AS s FROM t GROUP BY g"))
+  }
+
+  test("grouping() without ROLLUP") {
+    val t = "SELECT g, @ AS x, count(*) AS c FROM t GROUP BY g"
+    invariant(t, "grouping(k)", Left(rejected(t.replace("@", "grouping(k)"))))
+  }
+
+  test("TRY_CAST(grouping(k) AS INTEGER) without ROLLUP rejects like grouping(k)") {
+    assert(rejected("SELECT g, TRY_CAST(grouping(k) AS INTEGER) AS x, " +
+      "count(*) AS c FROM t GROUP BY g") ==
+      rejected("SELECT g, grouping(k) AS x, count(*) AS c FROM t GROUP BY g"))
+  }
+
+  private def recursive(cond: String): String =
+    "WITH RECURSIVE r AS (SELECT k AS n FROM t WHERE k = 1 UNION ALL " +
+      s"SELECT n + 1 AS n FROM r WHERE n < 5 AND $cond) SELECT n FROM r"
+
+  test("recursive self-reference inside a subquery") {
+    val sub = "(SELECT count(*) AS c FROM r)"
+    invariant(recursive("@ = 1"), sub, Left(rejected(recursive(s"$sub = 1"))))
+  }
+
+  test("recursive TRY_CAST((SELECT count(*) FROM r)) rejects like CAST") {
+    val sub = "(SELECT count(*) AS c FROM r)"
+    assert(rejected(recursive(s"TRY_CAST($sub AS INTEGER) = 1")) ==
+      rejected(recursive(s"CAST($sub AS INTEGER) = 1")))
+  }
+
+  private def multi(t: String, u: String, pred: String): String =
+    s"SELECT t.k, u.v FROM $t, $u WHERE t.k = u.k AND t.v > $pred"
+
+  test("multi-table WHERE with a scalar-subquery operand") {
+    val expected = sparkRows(multi("wrap_t t", "wrap_u u",
+      "(SELECT max(v) FROM wrap_u) + 5"))
+    assert(expected.length == 6)
+    invariant(multi("t", "u", "@ + 5"), "(SELECT max(v) FROM u)", Right(expected))
+  }
+
+  test("t.v > (SELECT max(v) FROM u) + 5 over two tables returns Spark's rows") {
+    assert(outcome(multi("t", "u", "(SELECT max(v) FROM u) + 5")) ==
+      Right(sparkRows(multi("wrap_t t", "wrap_u u",
+        "(SELECT max(v) FROM wrap_u) + 5"))))
+  }
+
+  private val rowScope =
+    "SELECT k, v, row_number() OVER (ORDER BY v) AS rn FROM t QUALIFY "
+  private val groupScope = "SELECT g, count(*) AS c, " +
+    "row_number() OVER (ORDER BY g) AS rn FROM t GROUP BY g QUALIFY "
+
+  for ((scope, name) <- Seq(rowScope -> "row", groupScope -> "GROUP BY")) {
+    test(s"QUALIFY window alias, $name scope") {
+      val expected = outcome(scope + "rn = 2")
+      assert(expected.exists(_.length == 1), expected)
+      invariant(scope + "@ = 2", "rn", expected)
+      for (pred <- Seq("abs(rn - 2) = 0",
+          "CASE WHEN rn = 2 THEN true ELSE false END"))
+        assert(outcome(scope + pred) == expected, pred)
+      // an incomparable window comparison rejects at analysis
+      assert(outcome(scope + "rn = 'x'").isLeft)
+    }
+
+    test(s"QUALIFY abs(rn - 2) = 0 and TRY_CAST(rn AS INTEGER) = 2, $name scope") {
+      val cast = outcome(scope + "CAST(rn AS INTEGER) = 2")
+      assert(cast.isRight, cast)
+      assert(outcome(scope + "abs(rn - 2) = 0") == cast)
+      assert(outcome(scope + "TRY_CAST(rn AS INTEGER) = 2") == cast)
+    }
+  }
+}
