@@ -3458,10 +3458,13 @@ object Analyzer {
             case (BoundOperand.BCol(a), BoundOperand.BCol(b)) =>
               if (SqlType.comparable(a.attr.sqlType, b.attr.sqlType)) Right(())
               else Left(NotComparable(a.attr.sqlType, b.attr.sqlType))
-            case (BoundOperand.BCol(a), BoundOperand.BLit(lit)) => checkLitCmp(a, lit)
-            case (BoundOperand.BLit(lit), BoundOperand.BCol(b)) => checkLitCmp(b, lit)
-            // aggregate operands: results are numeric (or arg-typed for
-            // min/max); Catalyst casts the comparison
+            // a column or computed operand against a literal; aggregate
+            // operands are numeric (or arg-typed for min/max) and
+            // Catalyst casts their comparison
+            case (o, BoundOperand.BLit(lit)) if computed(o) =>
+              checkLitCmp(operandType(o), lit)
+            case (BoundOperand.BLit(lit), o) if computed(o) =>
+              checkLitCmp(operandType(o), lit)
             case _ => Right(())
           }
         } yield {
@@ -4439,7 +4442,13 @@ object Analyzer {
       lateralConjs.toSeq, qualifyPred, qwins, don)
   }
 
-  private def checkLitCmp(c: BoundCol, lit: Lit): Either[AnalyzerError, Unit] = (lit, c.attr.sqlType) match {
+  /** An operand whose type decides a comparison with a literal: anything
+    * but a literal or an aggregate.
+    */
+  private def computed(o: BoundOperand): Boolean =
+    !o.isInstanceOf[BoundOperand.BLit] && !BoundNode.containsAgg(o)
+
+  private def checkLitCmp(t: SqlType, lit: Lit): Either[AnalyzerError, Unit] = (lit, t) match {
     case (Lit.LitNull, _) => Right(())
     case (Lit.LitLong(_), t) if SqlType.comparable(SqlType.SqlBigInt, t) => Right(())
     case (Lit.LitDouble(_), t) if SqlType.comparable(SqlType.SqlDouble, t) => Right(())

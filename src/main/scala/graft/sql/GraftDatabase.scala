@@ -1976,8 +1976,9 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private def lowerOneSelect(s: BoundSelect,
       source: Analyzer.BoundTable => DataFrame): DataFrame = {
     val ests = estimateBindings(s)
-    Lowering.lowerSelect(spark, s, source,
-      chooseBroadcastSides(ests), planJoinOrder(s, ests))
+    val plan = planJoinOrder(s, ests)
+    Lowering.lowerSelect(spark, s, source, chooseBroadcastSides(ests),
+      plan.map(_._1), plan.map(_._2))
   }
 
   /** Lower any readable query form (SELECT or set-op chain) to a frame —
@@ -2002,6 +2003,19 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         st.ndv(c).getOrElse(math.max(st.rowCount, 1L)))
     }
 
+  /** Unpartitioned windows whose input the statistics bound by this many
+    * rows run as Spark's own window on one task; 0 keeps every non-empty
+    * input on the bucketed operator.
+    */
+  private[graft] var oneTaskRows: Long = GlobalWindows.OneTaskRows
+
+  /** The statistics one query's lowering reads: table row counts only
+    * while fresh, so the window choice never starts a Spark job.
+    */
+  private def scopeStats = Lowering.ScopeStats(asofHook,
+    t => statistics.get(t).filterNot(_ => statistics.isStale(t)).map(_.rowCount),
+    oneTaskRows)
+
   /** Statistics an estimator can use: a table without any (external
     * parquet) gets a one-pass rebuild — rowcount + HLL sketches + bottom-k
     * sample — and one left stale by a rewrite rebuilds once.
@@ -2012,7 +2026,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   private def lowerQuery(q: BoundQuery): DataFrame = {
     val source: Analyzer.BoundTable => DataFrame = bt => readTable(bt.desc)
-    Lowering.withQueryScope(q, source, asofHook) {
+    Lowering.withQueryScope(q, source, scopeStats) {
       q match {
         case s: BoundSelect => lowerOneSelect(s, source)
         case u: BoundUnion =>
@@ -2273,7 +2287,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       proj: Option[Analyzer.BoundSelect]): QueryResult = (r, proj) match {
     case (Rows(df), Some(bs)) =>
       val src: Analyzer.BoundTable => DataFrame = _ => df
-      Rows(Lowering.withQueryScope(bs, src, asofHook) { lowerOneSelect(bs, src) })
+      Rows(Lowering.withQueryScope(bs, src, scopeStats) { lowerOneSelect(bs, src) })
     case _ => r
   }
 
@@ -2308,7 +2322,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           .localCheckpoint()
         val src: Analyzer.BoundTable => DataFrame = bt =>
           if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
-        val rids = Lowering.withQueryScope(ms, src, asofHook) { lowerOneSelect(ms, src) }
+        val rids = Lowering.withQueryScope(ms, src, scopeStats) { lowerOneSelect(ms, src) }
           .withColumnRenamed("__lkrid", "__delrid")
         (withId.join(rids, col("__lkrid") === col("__delrid"), "left_anti")
           .drop("__lkrid"),
@@ -2344,7 +2358,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           (withId, pred.map(Lowering.lowerExprBare).getOrElse(lit(true)),
             if (needRid) Seq("__lkrid") else Seq.empty[String])
         case Some(ms) =>
-          val rids = Lowering.withQueryScope(ms, src, asofHook) { lowerOneSelect(ms, src) }
+          val rids = Lowering.withQueryScope(ms, src, scopeStats) { lowerOneSelect(ms, src) }
             .withColumnRenamed("__lkrid", "__updrid").withColumn("__upd", lit(true))
           val joined = withId.join(rids,
             col("__lkrid") === col("__updrid"), "left_outer")
@@ -2360,7 +2374,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       helperCols ++= helperCols0
       val subVals: Seq[(AttributeDesc, org.apache.spark.sql.Column)] =
         subSets.zipWithIndex.map { case ((attr, vs), i) =>
-          val vdf = Lowering.withQueryScope(vs, src, asofHook) { lowerOneSelect(vs, src) }
+          val vdf = Lowering.withQueryScope(vs, src, scopeStats) { lowerOneSelect(vs, src) }
             .withColumnRenamed("__lkrid", s"__svrid_$i")
             .withColumnRenamed("__sv", s"__sv_$i")
           df = df.join(vdf, col("__lkrid") === col(s"__svrid_$i"), "left_outer")
@@ -2407,7 +2421,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         .localCheckpoint()
       val src: Analyzer.BoundTable => DataFrame = bt =>
         if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
-      val m = Lowering.withQueryScope(matchedSel, src, asofHook) {
+      val m = Lowering.withQueryScope(matchedSel, src, scopeStats) {
         lowerOneSelect(matchedSel, src) }
       // SQL standard: more than one source row matching one target row
       // is an error — one bounded probe over the join's key multiset
@@ -2464,7 +2478,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       val image =
         if (iPlans.isEmpty || insertSel.isEmpty) survivors
         else {
-          val ins0 = Lowering.withQueryScope(insertSel.get, src, asofHook) {
+          val ins0 = Lowering.withQueryScope(insertSel.get, src, scopeStats) {
             lowerOneSelect(insertSel.get, src) }
           val notMatched = col("__mtgt").isNull
           val iIdx = iPlans.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
@@ -2686,7 +2700,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   @volatile var lastJoinOrder: Option[Seq[String]] = None
 
   private def planJoinOrder(s: BoundSelect,
-      ests: Seq[(String, Long)]): Option[JoinOrder.Tree] = {
+      ests: Seq[(String, Long)]): Option[(JoinOrder.Tree, Long)] = {
     if (ests.length < 2) { lastJoinOrder = None; return None }
     val cards = ests.map(_._2.toDouble).toArray
     val idx = s.tables.map(_.binding).zipWithIndex.toMap
@@ -2714,7 +2728,8 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     val tree = JoinOrder.plan(s.tables.length, i => cards(i), edges)
     lastJoinOrder = tree.map(t =>
       JoinOrder.leafOrder(t).map(i => s.tables(i).binding))
-    tree
+    // the planned join's estimated rows bound its windows' input
+    tree.map(t => (t, JoinOrder.rows(t.mask, i => cards(i), edges).toLong))
   }
 
   // ---- catalog persistence: one document, warehouse.json ----

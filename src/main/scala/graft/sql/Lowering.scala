@@ -33,8 +33,13 @@ object Lowering {
   def lowerSelect(spark: SparkSession, q: BoundSelect,
       source: BoundTable => DataFrame,
       broadcastBindings: Set[String] = Set.empty,
-      joinPlan: Option[JoinOrder.Tree] = None): DataFrame = {
+      joinPlan: Option[JoinOrder.Tree] = None,
+      joinRows: Option[Long] = None): DataFrame = {
     val filtered0 = combine(spark, q, source, broadcastBindings, joinPlan)
+    // unpartitioned windows over an input the statistics bound small
+    // run as Spark's own window (GlobalWindows.OneTaskRows)
+    val windowRows = inputRows(q, source, joinRows)
+    val oneTaskWins = oneTask(windowRows)
 
     // Output naming: the user's AS alias wins; otherwise bare attribute
     // name when unique across the projection, binding_attr when duplicated
@@ -62,7 +67,7 @@ object Lowering {
           // inequality-correlated scalar aggregate → union-merge running
           // window (one sort shuffle, no candidate fan-out)
           val (joined, c) = correlatedRunningAgg(spark, df, sub, pairs, iq,
-            source, s"__ps_$i", qcol)
+            source, s"__ps_$i", qcol, windowRows)
           (joined, m + (i -> c))
         case ((df, m), (BoundItem.BISub(sub, _, guard, pairs, None), i)) =>
           val name = s"__ps_$i"
@@ -132,8 +137,9 @@ object Lowering {
       // can't rewrite the frame or inject the join)
       val opL: BoundOperand => Column = lowerOperandWith(_, qcol)
       val classified = (q.projection ++ q.qualifyWins).collect {
-        case w: BoundItem.BIWin => w -> GlobalWindows.classify(w.alias,
-          w.func, w.args, w.partitionBy, w.orderBy, w.frame, opL)
+        case w: BoundItem.BIWin => w -> (if (oneTaskWins) None
+          else GlobalWindows.classify(w.alias, w.func, w.args,
+            w.partitionBy, w.orderBy, w.frame, opL))
       }
       val winsPre = q.qualify.isDefined || donNeedsWins ||
         hasGroupsFrames || hasDistinctRunning || q.qualifyWins.nonEmpty ||
@@ -522,8 +528,9 @@ object Lowering {
           parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
           frame: Option[Ast.WinFrame], tag: String)
           : (String, Either[GlobalWindows.Req, Column]) =
-        name -> GlobalWindows.classify(name, f, args, parts, ord, frame,
-          aggScopeOperand).toLeft(windowColumn(f, args, parts, ord, frame,
+        name -> (if (oneTaskWins) None
+          else GlobalWindows.classify(name, f, args, parts, ord, frame,
+            aggScopeOperand)).toLeft(windowColumn(f, args, parts, ord, frame,
             aggScopeOperand, bc => col(groupOut(bc)),
             withRank(frame, parts, ord, tag),
             withMask(f, args, frame, parts, ord, tag)))
@@ -731,7 +738,7 @@ object Lowering {
       val grouped = ineqItems.foldLeft(groupedSv) {
         case (acc, (i, sub, ps, iq, _)) =>
           val (joined, scalar) = correlatedRunningAgg(spark, acc, sub, ps,
-            iq, source, s"__piq_$i", bc => col(groupOut(bc)))
+            iq, source, s"__piq_$i", bc => col(groupOut(bc)), windowRows)
           ineqScalarOf(i) = scalar
           joined
       }
@@ -1017,9 +1024,10 @@ object Lowering {
           sortCol(opLower(op), Ast.SortDir(!dir.desc,
             Some(!dir.nullsFirst.getOrElse(false)))) }: _*))
       else None
-    framedWindowColumn(f, args, frame, w, w1,
+    val c = framedWindowColumn(f, args, frame, w, w1,
       parts.map(opLower) ++ ord.map(o => opLower(o._1)), opLower,
       distinctMask, wRev)
+    GlobalWindows.asBucketed(f, args, parts, ord, frame, c)
   }
 
   /** The window function `f(args)` over the framed spec `w` (`w1`: the
@@ -1289,6 +1297,17 @@ object Lowering {
     */
   type AsofStatsHook = (String, String, Option[Column]) => Option[(Long, Long)]
   val noAsofStats: AsofStatsHook = (_, _, _) => None
+
+  /** What a database's statistics tell the lowering, carried per query
+    * by [[withQueryScope]]: `asof` chooses the ASOF lowering;
+    * `tableRows` is a base table's row count while its statistics are
+    * fresh (None when stale or absent; a driver read, never a Spark
+    * job); unpartitioned windows whose input that bounds by
+    * `oneTaskRows` run as Spark's own window on one task (see
+    * GlobalWindows.OneTaskRows).
+    */
+  final case class ScopeStats(asof: AsofStatsHook,
+      tableRows: String => Option[Long], oneTaskRows: Long)
   /** Last ASOF lowering chosen ("union_merge" | "candidate") — tests. */
   @volatile var lastAsofChoice: Option[String] = None
   /** Avg step rows per key group at or below which the candidate join
@@ -1336,7 +1355,7 @@ object Lowering {
       }
       keyCols.length == p.eqPairs.length && {
         val hook =
-          Option(scopeTL.get()).map(_.statsHook).getOrElse(noAsofStats)
+          Option(scopeTL.get()).map(_.stats.asof).getOrElse(noAsofStats)
         val stats = keyCols.flatMap(hook(tname, _, pred))
         stats.length == keyCols.length && {
           val rows = stats.head._1.toDouble
@@ -1525,7 +1544,8 @@ object Lowering {
   private def correlatedRunningAgg(spark: SparkSession, df: DataFrame,
       sub: BoundSelect, pairs: Seq[(BoundCol, BoundCol)],
       iq: Analyzer.CorrIneq, source: BoundTable => DataFrame,
-      name: String, qcolOuter: BoundCol => Column): (DataFrame, Column) = {
+      name: String, qcolOuter: BoundCol => Column,
+      outerRows: Option[Long]): (DataFrame, Column) = {
     def qcolSub(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
     val core = combine(spark, sub, source, Set.empty, None)
     val kN = pairs.indices.map(j => s"${name}_k$j")
@@ -1565,9 +1585,13 @@ object Lowering {
     val ordExprs = Seq(
       (if (asc) col(tN).asc_nulls_first else col(tN).desc_nulls_first),
       tie.asc)
+    // the union holds the outer tags and the inner rows
+    val unionRows = for (o <- outerRows; i <- inputRows(sub, source, None))
+      yield o + i
     val ran =
-      if (kN.nonEmpty) {
-        // equality keys partition the running window — scales on its own
+      if (kN.nonEmpty || oneTask(unionRows)) {
+        // equality keys partition the running window — scales on its
+        // own; without keys, a small union is one task
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(kN.map(col): _*)
           .orderBy(ordExprs: _*)
@@ -1585,9 +1609,10 @@ object Lowering {
           .select(kN.map(col) ++ Seq(col(tN)) ++
             nodes.indices.map(j => col(s"${name}_r$j")): _*)
       } else {
-        // NO equality keys: an unpartitioned running window would plan
-        // as Exchange SinglePartition — every inner row through one
-        // task, the classic 100×-scale killer. Instead, a DISTRIBUTED
+        // NO equality keys over a large or unknown union: an
+        // unpartitioned running window would plan as Exchange
+        // SinglePartition — every inner row through one task, the
+        // classic 100×-scale killer. Instead, a DISTRIBUTED
         // PREFIX SCAN: range-partition by the running order, run the
         // prefix window INSIDE each bucket (parallel), aggregate one
         // total row per bucket (tiny), take the EXCLUSIVE prefix of
@@ -2425,7 +2450,7 @@ object Lowering {
     * would freeze round one).
     */
   private final class QueryScope(val rootSource: BoundTable => DataFrame,
-      val statsHook: AsofStatsHook) {
+      val stats: ScopeStats) {
     val refCount = scala.collection.mutable.Map.empty[Analyzer.BoundQuery, Int]
     val memo = scala.collection.mutable.Map.empty[Analyzer.BoundQuery, DataFrame]
   }
@@ -2436,13 +2461,35 @@ object Lowering {
 
   def withQueryScope[T](q: Analyzer.BoundQuery,
       source: BoundTable => DataFrame,
-      statsHook: AsofStatsHook = noAsofStats)(f: => T): T = {
-    val sc = new QueryScope(source, statsHook)
+      stats: ScopeStats)(f: => T): T = {
+    val sc = new QueryScope(source, stats)
     countDerivedRefs(q, sc.refCount)
     val prev = scopeTL.get()
     scopeTL.set(sc)
     try f finally scopeTL.set(prev)
   }
+
+  /** Bound on the rows a SELECT's windows read, from driver-resident
+    * statistics only: a single base table's fresh row count (filters
+    * only remove rows), or `joinRows`, the join planner's estimate for
+    * a multi-table FROM. Unknown: derived tables and CTEs, outer-join
+    * steps, grouping sets, stale tables, tables without statistics, and
+    * a fixpoint step's rebound source.
+    */
+  private def inputRows(q: BoundSelect, source: BoundTable => DataFrame,
+      joinRows: Option[Long]): Option[Long] = {
+    val sc = scopeTL.get()
+    if (sc == null || (sc.rootSource ne source) || q.derived.nonEmpty ||
+        q.joinSteps.nonEmpty || q.groupSpec.nonEmpty) None
+    else q.tables match {
+      case Seq(bt) => sc.stats.tableRows(bt.desc.name)
+      case _       => joinRows
+    }
+  }
+
+  /** Do unpartitioned windows over at most `rows` rows run on one task? */
+  private def oneTask(rows: Option[Long]): Boolean =
+    Option(scopeTL.get()).exists(sc => rows.exists(_ <= sc.stats.oneTaskRows))
 
   private def countDerivedRefs(q: Analyzer.BoundQuery,
       acc: scala.collection.mutable.Map[Analyzer.BoundQuery, Int]): Unit = q match {

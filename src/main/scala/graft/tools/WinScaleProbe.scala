@@ -9,6 +9,8 @@ package graft.tools
   * its window in a one-row aggregate so Catalyst cannot prune the
   * window away; that row prints next to the timings (every distinct
   * value across the reps), so two builds compare value parity too.
+  * The probes measure the bucketed operator, which the database would
+  * otherwise skip for inputs its statistics bound small.
   *
   * Usage: WinScaleProbe <sfDir> [reps]
   */
@@ -21,6 +23,7 @@ object WinScaleProbe {
     val db = new graft.sql.GraftDatabase(spark,
       java.nio.file.Files.createTempDirectory("wsp").toString)
     db.registerParquet("orders", s"$sfDir/orders.parquet")
+    db.oneTaskRows = 0
 
     val probes = Seq(
       "big_shift" ->

@@ -71,6 +71,17 @@ class AnalyzerSpec extends AnyFunSuite {
     assert(err("SELECT name FROM people p, cars c WHERE p.name = c.id").isInstanceOf[NotComparable])
   }
 
+  test("type check: a computed operand against an incomparable literal") {
+    for (op <- Seq("id + 1", "abs(id)", "CAST(id AS INTEGER)")) {
+      assert(err(s"SELECT name FROM people WHERE $op = 'x'")
+        .isInstanceOf[NotComparable], op)
+      assert(err(s"SELECT name FROM people WHERE 'x' < $op")
+        .isInstanceOf[NotComparable], op)
+    }
+    assert(analyzeSql("SELECT name FROM people WHERE id + 1 = 2").isRight)
+    assert(analyzeSql("SELECT name FROM people WHERE upper(name) = 'X'").isRight)
+  }
+
   test("mixed-width integer comparison allowed (types.rs:51-70)") {
     assert(analyzeSql("SELECT name FROM people p, cars c WHERE p.age = c.id").isRight)
   }

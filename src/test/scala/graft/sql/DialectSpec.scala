@@ -19,6 +19,18 @@ class DialectSpec extends AnyFunSuite {
   private def freshDb(): GraftDatabase =
     new GraftDatabase(spark, Files.createTempDirectory("graft-wh").toString)
 
+  /** A global-window pin on both paths, each on a fresh database: pinned
+    * to the bucketed operator (`bucketed`: its plan shape is asserted)
+    * and at the default threshold, where the small tables run as Spark's
+    * own window on one task. Every value assertion holds on both.
+    */
+  private def onBothWindowPaths(body: (GraftDatabase, Boolean) => Unit): Unit =
+    for (bucketed <- Seq(true, false)) {
+      val db = freshDb()
+      if (bucketed) db.oneTaskRows = 0
+      body(db, bucketed)
+    }
+
   private def demoDb(): GraftDatabase = {
     val db = freshDb()
     def run(sql: String): Unit = db.query(sql) match {
@@ -4900,273 +4912,305 @@ class DialectSpec extends AnyFunSuite {
     assert(a == Seq((1, 1), (2, 1), (3, 2), (4, 2), (6, 3)))
   }
 
-  test("global ordered windows: distributed prefix scan (ranks, running aggs)") {
+  test("a computed operand against an incomparable literal fails at analysis") {
     val db = freshDb()
-    db.query("CREATE TABLE go (id INT, v INT)")
-    db.query("INSERT INTO go VALUES (1, 10), (2, 10), (3, 5), (4, NULL), (5, 7)")
-    // order by v (engine default: NULLS LAST): 5(id3), 7(id5), 10(id1),
-    // 10(id2) — tied — then NULL(id4)
-    val df = db.select("SELECT id, rank() OVER (ORDER BY v) AS rk, " +
-      "dense_rank() OVER (ORDER BY v) AS dr, " +
-      "row_number() OVER (ORDER BY v, id) AS rn, " +
-      "sum(v) OVER (ORDER BY v, id) AS rs, " +
-      "count(v) OVER (ORDER BY v, id) AS rc, " +
-      "round(percent_rank() OVER (ORDER BY v), 3) AS pr, " +
-      "round(cume_dist() OVER (ORDER BY v), 3) AS cd " +
-      "FROM go ORDER BY id").fold(e => fail(e.msg), identity)
-    // the bucketed frame reads back as one materialized RDD scan — the
-    // unpartitioned windows never plan an all-rows single partition
-    assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
-    val r = df.collect().map(x => (x.getInt(0),
-      x.getLong(1), x.getLong(2), x.getLong(3),
-      if (x.isNullAt(4)) -1L else x.getLong(4), x.getLong(5),
-      x.getDouble(6), x.getDouble(7))).toSeq
-    assert(r == Seq(
-      (1, 3L, 3L, 3L, 22L, 3L, 0.5, 0.8),
-      (2, 3L, 3L, 4L, 32L, 4L, 0.5, 0.8),
-      (3, 1L, 1L, 1L, 5L, 1L, 0.0, 0.2),
-      (4, 5L, 4L, 5L, 32L, 4L, 1.0, 1.0),
-      (5, 2L, 2L, 2L, 12L, 2L, 0.25, 0.4)))
-    // unpartitioned lag/lead take the ghost-row path: order (v, id)
-    // NULLS LAST → 5(id3), 7(id5), 10(id1), 10(id2), NULL(id4).
-    // lag2 with default -99 fires only at the true global start; a
-    // neighbor whose VALUE is NULL stays NULL (id4's successor-less
-    // lead keeps the default path apart from null values)
-    val sh = db.select("SELECT id, lag(v, 2, -99) OVER (ORDER BY v, id) AS l2, " +
-      "lead(v) OVER (ORDER BY v, id) AS ld FROM go ORDER BY id")
-      .fold(e => fail(e.msg), _.collect())
-      .map(x => (x.getInt(0),
-        if (x.isNullAt(1)) null else x.get(1).toString.toInt,
-        if (x.isNullAt(2)) null else x.get(2).toString.toInt)).toSeq
-    assert(sh == Seq(
-      (1, 5, 10), (2, 7, null), (3, -99, 7), (4, 10, null), (5, -99, 10)),
-      sh.toString)
+    db.query("CREATE TABLE cl (k INT, v INT, s VARCHAR(4))")
+    db.query("INSERT INTO cl VALUES (1, 10, 'x'), (2, 20, 'y')")
+    def msg(sql: String): String = db.select(sql).fold(_.msg, df =>
+      fail(s"$sql analyzed; collect gives ${df.collect().toSeq}"))
+    val column = msg("SELECT k, v FROM cl WHERE k = 'x'")
+    assert(column.contains("not comparable"), column)
+    for (op <- Seq("k + 1", "abs(k)", "CAST(k + 0 AS INTEGER)"))
+      assert(msg(s"SELECT k, v FROM cl WHERE $op = 'x'").contains("not comparable"), op)
+    def rows(sql: String) = db.select(sql).fold(e => fail(e.msg), _.collect())
+      .map(_.getInt(0)).toSeq
+    assert(rows("SELECT k FROM cl WHERE k + 1 = 2") == Seq(1))
+    assert(rows("SELECT k FROM cl WHERE upper(s) = 'X'") == Seq(1))
+  }
+
+  test("global ordered windows: distributed prefix scan (ranks, running aggs)") {
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE go (id INT, v INT)")
+      db.query("INSERT INTO go VALUES (1, 10), (2, 10), (3, 5), (4, NULL), (5, 7)")
+      // order by v (engine default: NULLS LAST): 5(id3), 7(id5), 10(id1),
+      // 10(id2) — tied — then NULL(id4)
+      val df = db.select("SELECT id, rank() OVER (ORDER BY v) AS rk, " +
+        "dense_rank() OVER (ORDER BY v) AS dr, " +
+        "row_number() OVER (ORDER BY v, id) AS rn, " +
+        "sum(v) OVER (ORDER BY v, id) AS rs, " +
+        "count(v) OVER (ORDER BY v, id) AS rc, " +
+        "round(percent_rank() OVER (ORDER BY v), 3) AS pr, " +
+        "round(cume_dist() OVER (ORDER BY v), 3) AS cd " +
+        "FROM go ORDER BY id").fold(e => fail(e.msg), identity)
+      // the bucketed frame reads back as one materialized RDD scan — the
+      // unpartitioned windows never plan an all-rows single partition
+      if (bucketed) assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+      val r = df.collect().map(x => (x.getInt(0),
+        x.getLong(1), x.getLong(2), x.getLong(3),
+        if (x.isNullAt(4)) -1L else x.getLong(4), x.getLong(5),
+        x.getDouble(6), x.getDouble(7))).toSeq
+      assert(r == Seq(
+        (1, 3L, 3L, 3L, 22L, 3L, 0.5, 0.8),
+        (2, 3L, 3L, 4L, 32L, 4L, 0.5, 0.8),
+        (3, 1L, 1L, 1L, 5L, 1L, 0.0, 0.2),
+        (4, 5L, 4L, 5L, 32L, 4L, 1.0, 1.0),
+        (5, 2L, 2L, 2L, 12L, 2L, 0.25, 0.4)))
+      // unpartitioned lag/lead take the ghost-row path: order (v, id)
+      // NULLS LAST → 5(id3), 7(id5), 10(id1), 10(id2), NULL(id4).
+      // lag2 with default -99 fires only at the true global start; a
+      // neighbor whose VALUE is NULL stays NULL (id4's successor-less
+      // lead keeps the default path apart from null values)
+      val sh = db.select("SELECT id, lag(v, 2, -99) OVER (ORDER BY v, id) AS l2, " +
+        "lead(v) OVER (ORDER BY v, id) AS ld FROM go ORDER BY id")
+        .fold(e => fail(e.msg), _.collect())
+        .map(x => (x.getInt(0),
+          if (x.isNullAt(1)) null else x.get(1).toString.toInt,
+          if (x.isNullAt(2)) null else x.get(2).toString.toInt)).toSeq
+      assert(sh == Seq(
+        (1, 5, 10), (2, 7, null), (3, -99, 7), (4, 10, null), (5, -99, 10)),
+        sh.toString)
+    }
   }
 
   test("global aggregate windows rewrite to a broadcast join (no single-partition window)") {
-    val db = freshDb()
-    db.query("CREATE TABLE gw (g INT, v INT)")
-    db.query("INSERT INTO gw VALUES (1, 10), (1, 20), (2, 5), (2, NULL)")
-    // row scope: sum(v) OVER () — every row sees the grand total
-    val r = db.select("SELECT g, v, sum(v) OVER () AS total FROM gw " +
-      "ORDER BY g, v NULLS FIRST").fold(e => fail(e.msg), identity)
-    val plan = r.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(r.collect().map(_.getLong(2)).toSeq == Seq(35L, 35L, 35L, 35L))
-    // aggregate scope: the percent-of-total denominator takes the same
-    // rewrite; the rank window (ordered) stays a real window
-    val a = db.select("SELECT g, count(*) AS n, " +
-      "(count(*) * 100 - sum(count(*)) OVER ()) AS rel, " +
-      "rank() OVER (ORDER BY g) AS rk FROM gw GROUP BY g ORDER BY g")
-      .fold(e => fail(e.msg), identity)
-    val aplan = a.queryExecution.executedPlan.toString
-    assert(aplan.contains("BroadcastNestedLoopJoin"), aplan)
-    assert(a.collect().map(_.getLong(2)).toSeq == Seq(196L, 196L))
-    // empty input: the broadcast join preserves zero rows
-    db.query("CREATE TABLE gw0 (v INT)")
-    val e = db.select("SELECT v, count(v) OVER () AS c FROM gw0")
-      .fold(e2 => fail(e2.msg), _.collect())
-    assert(e.isEmpty)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gw (g INT, v INT)")
+      db.query("INSERT INTO gw VALUES (1, 10), (1, 20), (2, 5), (2, NULL)")
+      // row scope: sum(v) OVER () — every row sees the grand total
+      val r = db.select("SELECT g, v, sum(v) OVER () AS total FROM gw " +
+        "ORDER BY g, v NULLS FIRST").fold(e => fail(e.msg), identity)
+      val plan = r.queryExecution.executedPlan.toString
+      if (bucketed) assert(!plan.contains("Window"), plan)
+      if (bucketed) assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+      assert(r.collect().map(_.getLong(2)).toSeq == Seq(35L, 35L, 35L, 35L))
+      // aggregate scope: the percent-of-total denominator takes the same
+      // rewrite; the rank window (ordered) stays a real window
+      val a = db.select("SELECT g, count(*) AS n, " +
+        "(count(*) * 100 - sum(count(*)) OVER ()) AS rel, " +
+        "rank() OVER (ORDER BY g) AS rk FROM gw GROUP BY g ORDER BY g")
+        .fold(e => fail(e.msg), identity)
+      val aplan = a.queryExecution.executedPlan.toString
+      if (bucketed) assert(aplan.contains("BroadcastNestedLoopJoin"), aplan)
+      assert(a.collect().map(_.getLong(2)).toSeq == Seq(196L, 196L))
+      // empty input: the broadcast join preserves zero rows
+      db.query("CREATE TABLE gw0 (v INT)")
+      val e = db.select("SELECT v, count(v) OVER () AS c FROM gw0")
+        .fold(e2 => fail(e2.msg), _.collect())
+      assert(e.isEmpty)
+    }
   }
 
   test("global DISTINCT running + bounded ROWS frames: distributed (mask/ghosts)") {
-    val db = freshDb()
-    db.query("CREATE TABLE gd (id INT, v INT)")
-    db.query("INSERT INTO gd VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
-      "(5, 7), (6, 5)")
-    // DISTINCT running: distinct-so-far sets by id are {10}, {10},
-    // {10,5}, {10,5} (NULL never joins), {10,5,7}, {10,5,7}
-    val df = db.select("SELECT id, " +
-      "count(DISTINCT v) OVER (ORDER BY id) AS dc, " +
-      "sum(DISTINCT v) OVER (ORDER BY id) AS ds, " +
-      "round(CAST(avg(DISTINCT v) OVER (ORDER BY id) AS DOUBLE), 3) AS da, " +
-      "sum(v) OVER (ORDER BY id ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS sw, " +
-      "sum(v) OVER (ORDER BY id ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING " +
-      "EXCLUDE CURRENT ROW) AS sx " +
-      "FROM gd ORDER BY id").fold(e => fail(e.msg), identity)
-    // scale pin: the DISTINCT runnings ride the first-occurrence mask +
-    // prefix scan, the bounded frames ride ghost rows — the final stage
-    // reads materialized bucketings (RDD scans with the bucket-id
-    // column), never an all-rows single-partition window
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    assert(plan.contains("_pid"), plan)
-    val r = df.collect().map(x => (x.getInt(0), x.getLong(1),
-      if (x.isNullAt(2)) -1L else x.getLong(2), x.getDouble(3),
-      if (x.isNullAt(4)) -1L else x.getLong(4),
-      if (x.isNullAt(5)) -1L else x.getLong(5))).toSeq
-    assert(r == Seq(
-      (1, 1L, 10L, 10.0, 10L, 10L),
-      (2, 1L, 10L, 10.0, 20L, 15L),
-      (3, 2L, 15L, 7.5, 15L, 10L),
-      (4, 2L, 15L, 7.5, 5L, 12L),
-      (5, 3L, 22L, 7.333, 7L, 5L),
-      (6, 3L, 22L, 7.333, 12L, 7L)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gd (id INT, v INT)")
+      db.query("INSERT INTO gd VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
+        "(5, 7), (6, 5)")
+      // DISTINCT running: distinct-so-far sets by id are {10}, {10},
+      // {10,5}, {10,5} (NULL never joins), {10,5,7}, {10,5,7}
+      val df = db.select("SELECT id, " +
+        "count(DISTINCT v) OVER (ORDER BY id) AS dc, " +
+        "sum(DISTINCT v) OVER (ORDER BY id) AS ds, " +
+        "round(CAST(avg(DISTINCT v) OVER (ORDER BY id) AS DOUBLE), 3) AS da, " +
+        "sum(v) OVER (ORDER BY id ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS sw, " +
+        "sum(v) OVER (ORDER BY id ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING " +
+        "EXCLUDE CURRENT ROW) AS sx " +
+        "FROM gd ORDER BY id").fold(e => fail(e.msg), identity)
+      // scale pin: the DISTINCT runnings ride the first-occurrence mask +
+      // prefix scan, the bounded frames ride ghost rows — the final stage
+      // reads materialized bucketings (RDD scans with the bucket-id
+      // column), never an all-rows single-partition window
+      val plan = df.queryExecution.executedPlan.toString
+      if (bucketed) {
+        assert(plan.contains("ExistingRDD"), plan)
+        assert(plan.contains("_pid"), plan)
+      }
+      val r = df.collect().map(x => (x.getInt(0), x.getLong(1),
+        if (x.isNullAt(2)) -1L else x.getLong(2), x.getDouble(3),
+        if (x.isNullAt(4)) -1L else x.getLong(4),
+        if (x.isNullAt(5)) -1L else x.getLong(5))).toSeq
+      assert(r == Seq(
+        (1, 1L, 10L, 10.0, 10L, 10L),
+        (2, 1L, 10L, 10.0, 20L, 15L),
+        (3, 2L, 15L, 7.5, 15L, 10L),
+        (4, 2L, 15L, 7.5, 5L, 12L),
+        (5, 3L, 22L, 7.333, 7L, 5L),
+        (6, 3L, 22L, 7.333, 12L, 7L)), r.toString)
+    }
   }
 
   test("global value functions over bounded ROWS frames: ghost rows") {
-    val db = freshDb()
-    db.query("CREATE TABLE gv (id INT, v INT)")
-    db.query("INSERT INTO gv VALUES (1, 10), (2, NULL), (3, 5), " +
-      "(4, NULL), (5, 7), (6, 2)")
-    // 6 rows across 4 shuffle partitions: nearly every frame crosses a
-    // bucket boundary through the ghosts. fv's frame sits entirely in
-    // the past (empty for id 1-2 → NULL); lvi IGNORE NULLS skips the
-    // NULL rows INSIDE the frame only; nv needs the frame's 2nd row
-    val df = db.select("SELECT id, " +
-      "first_value(v) OVER (ORDER BY id " +
-      "ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING) AS fv, " +
-      "last_value(v IGNORE NULLS) OVER (ORDER BY id " +
-      "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS lvi, " +
-      "nth_value(v, 2) OVER (ORDER BY id " +
-      "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS nv " +
-      "FROM gv ORDER BY id").fold(e => fail(e.msg), identity)
-    // scale pin: positional picks ride the materialized ghost bucketing
-    // (RDD scan + bucket-id column), never an all-rows single-partition
-    // window exchange
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    assert(plan.contains("_pid"), plan)
-    assert(!plan.contains("Exchange SinglePartition"), plan)
-    val r = df.collect().map(x => (x.getInt(0),
-      if (x.isNullAt(1)) null else x.get(1).toString.toInt,
-      if (x.isNullAt(2)) null else x.get(2).toString.toInt,
-      if (x.isNullAt(3)) null else x.get(3).toString.toInt)).toSeq
-    // fv: frames {} {} {1} {1,2} {2,3} {3,4} → -,-,10,10,NULL(v2),5
-    // lvi: last non-null of {1},{1,2},{1..3},{2..4},{3..5},{4..6}
-    // nv (RESPECT NULLS): 2nd row of {1,2},{1..3},{2..4},{3..5},{4..6},{5,6}
-    assert(r == Seq(
-      (1, null, 10, null),
-      (2, null, 10, null),
-      (3, 10, 5, 5),
-      (4, 10, 5, null),
-      (5, null, 7, 7),
-      (6, 5, 2, 2)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gv (id INT, v INT)")
+      db.query("INSERT INTO gv VALUES (1, 10), (2, NULL), (3, 5), " +
+        "(4, NULL), (5, 7), (6, 2)")
+      // 6 rows across 4 shuffle partitions: nearly every frame crosses a
+      // bucket boundary through the ghosts. fv's frame sits entirely in
+      // the past (empty for id 1-2 → NULL); lvi IGNORE NULLS skips the
+      // NULL rows INSIDE the frame only; nv needs the frame's 2nd row
+      val df = db.select("SELECT id, " +
+        "first_value(v) OVER (ORDER BY id " +
+        "ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING) AS fv, " +
+        "last_value(v IGNORE NULLS) OVER (ORDER BY id " +
+        "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS lvi, " +
+        "nth_value(v, 2) OVER (ORDER BY id " +
+        "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS nv " +
+        "FROM gv ORDER BY id").fold(e => fail(e.msg), identity)
+      // scale pin: positional picks ride the materialized ghost bucketing
+      // (RDD scan + bucket-id column), never an all-rows single-partition
+      // window exchange
+      val plan = df.queryExecution.executedPlan.toString
+      if (bucketed) {
+        assert(plan.contains("ExistingRDD"), plan)
+        assert(plan.contains("_pid"), plan)
+        assert(!plan.contains("Exchange SinglePartition"), plan)
+      }
+      val r = df.collect().map(x => (x.getInt(0),
+        if (x.isNullAt(1)) null else x.get(1).toString.toInt,
+        if (x.isNullAt(2)) null else x.get(2).toString.toInt,
+        if (x.isNullAt(3)) null else x.get(3).toString.toInt)).toSeq
+      // fv: frames {} {} {1} {1,2} {2,3} {3,4} → -,-,10,10,NULL(v2),5
+      // lvi: last non-null of {1},{1,2},{1..3},{2..4},{3..5},{4..6}
+      // nv (RESPECT NULLS): 2nd row of {1,2},{1..3},{2..4},{3..5},{4..6},{5,6}
+      assert(r == Seq(
+        (1, null, 10, null),
+        (2, null, 10, null),
+        (3, 10, 5, 5),
+        (4, 10, 5, null),
+        (5, null, 7, 7),
+        (6, 5, 2, 2)), r.toString)
+    }
   }
 
   test("global whole-input EXCLUDE frames: totals ± peer contribution") {
-    val db = freshDb()
-    db.query("CREATE TABLE gx (id INT, k INT, v INT)")
-    db.query("INSERT INTO gx VALUES (1, 1, 10), (2, 1, NULL), (3, 2, 5), " +
-      "(4, 2, 5), (5, 3, 7), (6, 3, 2)")
-    // total sum(v) = 29 over 5 non-nulls; k-groups: 1→{10,NULL}, 2→{5,5},
-    // 3→{7,2}
-    val df = db.select("SELECT id, " +
-      "sum(v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS s, " +
-      "min(v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS m, " +
-      "sum(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE GROUP) AS sg, " +
-      "min(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE GROUP) AS mg, " +
-      "count(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE TIES) AS ct, " +
-      "min(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
-      "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS mc " +
-      "FROM gx ORDER BY id").fold(e => fail(e.msg), identity)
-    // scale pin: the windows ride the materialized range bucketings (RDD
-    // scans with the bucket-id column); the only single-partition steps
-    // are the prefix/suffix windows over the ≤P-row per-bucket totals
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    assert(plan.contains("_pid"), plan)
-    val r = df.collect().map(x => (x.getInt(0),
-      if (x.isNullAt(1)) null else x.get(1).toString.toInt,
-      if (x.isNullAt(2)) null else x.get(2).toString.toInt,
-      if (x.isNullAt(3)) null else x.get(3).toString.toInt,
-      if (x.isNullAt(4)) null else x.get(4).toString.toInt,
-      x.getLong(5),
-      if (x.isNullAt(6)) null else x.get(6).toString.toInt)).toSeq
-    assert(r == Seq(
-      (1, 19, 2, 19, 2, 5L, 2),
-      (2, 29, 2, 19, 2, 4L, 2),
-      (3, 24, 2, 19, 2, 4L, 2),
-      (4, 24, 2, 19, 2, 4L, 2),
-      (5, 22, 2, 20, 5, 4L, 2),
-      (6, 27, 5, 20, 5, 4L, 5)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gx (id INT, k INT, v INT)")
+      db.query("INSERT INTO gx VALUES (1, 1, 10), (2, 1, NULL), (3, 2, 5), " +
+        "(4, 2, 5), (5, 3, 7), (6, 3, 2)")
+      // total sum(v) = 29 over 5 non-nulls; k-groups: 1→{10,NULL}, 2→{5,5},
+      // 3→{7,2}
+      val df = db.select("SELECT id, " +
+        "sum(v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS s, " +
+        "min(v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS m, " +
+        "sum(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE GROUP) AS sg, " +
+        "min(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE GROUP) AS mg, " +
+        "count(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE TIES) AS ct, " +
+        "min(v) OVER (ORDER BY k RANGE BETWEEN UNBOUNDED PRECEDING AND " +
+        "UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS mc " +
+        "FROM gx ORDER BY id").fold(e => fail(e.msg), identity)
+      // scale pin: the windows ride the materialized range bucketings (RDD
+      // scans with the bucket-id column); the only single-partition steps
+      // are the prefix/suffix windows over the ≤P-row per-bucket totals
+      val plan = df.queryExecution.executedPlan.toString
+      if (bucketed) {
+        assert(plan.contains("ExistingRDD"), plan)
+        assert(plan.contains("_pid"), plan)
+      }
+      val r = df.collect().map(x => (x.getInt(0),
+        if (x.isNullAt(1)) null else x.get(1).toString.toInt,
+        if (x.isNullAt(2)) null else x.get(2).toString.toInt,
+        if (x.isNullAt(3)) null else x.get(3).toString.toInt,
+        if (x.isNullAt(4)) null else x.get(4).toString.toInt,
+        x.getLong(5),
+        if (x.isNullAt(6)) null else x.get(6).toString.toInt)).toSeq
+      assert(r == Seq(
+        (1, 19, 2, 19, 2, 5L, 2),
+        (2, 29, 2, 19, 2, 4L, 2),
+        (3, 24, 2, 19, 2, 4L, 2),
+        (4, 24, 2, 19, 2, 4L, 2),
+        (5, 22, 2, 20, 5, 4L, 2),
+        (6, 27, 5, 20, 5, 4L, 5)), r.toString)
+    }
   }
 
   test("global whole-input EXCLUDE over an aggregated frame") {
-    val db = freshDb()
-    db.query("CREATE TABLE gxa (g INT, v INT)")
-    db.query("INSERT INTO gxa VALUES (1, 10), (1, 20), (2, 5), (2, 5), " +
-      "(3, 7), (3, NULL)")
-    // grouped frame: g→count: 1→2, 2→2, 3→2; sums 30, 10, 7.
-    // each group's window: total count 6 minus own 2 = 4;
-    // min(sum) except current row over {30,10,7}
-    val r = db.select("SELECT g, count(*) AS n, " +
-      "sum(count(*)) OVER (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING " +
-      "AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS oc, " +
-      "min(sum(v)) OVER (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING " +
-      "AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS om " +
-      "FROM gxa GROUP BY g ORDER BY g").fold(e => fail(e.msg), _.collect())
-      .map(x => (x.getInt(0), x.getLong(1), x.getLong(2),
-        x.getLong(3))).toSeq
-    assert(r == Seq((1, 2L, 4L, 7L), (2, 2L, 4L, 7L), (3, 2L, 4L, 10L)),
-      r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gxa (g INT, v INT)")
+      db.query("INSERT INTO gxa VALUES (1, 10), (1, 20), (2, 5), (2, 5), " +
+        "(3, 7), (3, NULL)")
+      // grouped frame: g→count: 1→2, 2→2, 3→2; sums 30, 10, 7.
+      // each group's window: total count 6 minus own 2 = 4;
+      // min(sum) except current row over {30,10,7}
+      val r = db.select("SELECT g, count(*) AS n, " +
+        "sum(count(*)) OVER (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING " +
+        "AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS oc, " +
+        "min(sum(v)) OVER (ORDER BY g ROWS BETWEEN UNBOUNDED PRECEDING " +
+        "AND UNBOUNDED FOLLOWING EXCLUDE CURRENT ROW) AS om " +
+        "FROM gxa GROUP BY g ORDER BY g").fold(e => fail(e.msg), _.collect())
+        .map(x => (x.getInt(0), x.getLong(1), x.getLong(2),
+          x.getLong(3))).toSeq
+      assert(r == Seq((1, 2L, 4L, 7L), (2, 2L, 4L, 7L), (3, 2L, 4L, 10L)),
+        r.toString)
+    }
   }
 
   test("global big-offset shifts: row-number equi-join, no single partition") {
-    val db = freshDb()
-    db.query("CREATE TABLE gb (id INT, v INT)")
-    db.query("INSERT INTO gb SELECT i AS id, i * 10 AS v FROM range(1, 2001) r(i)")
-    val df = db.select("SELECT id, lag(v, 1500, -1) OVER (ORDER BY id) AS lg, " +
-      "lead(v, 1999) OVER (ORDER BY id) AS ld FROM gb ORDER BY id")
-      .fold(e => fail(e.msg), identity)
-    // scale pin: offsets past the ghost halo cap run as a hash join on
-    // the materialized prefix-scan row number — the only
-    // single-partition step is the ≤P-row totals window inside the scan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    val r = df.collect()
-    assert(r.length == 2000)
-    // row 1500 is the last default; 1501 sees row 1's value
-    val lg = r.map(x => x.getInt(1))
-    assert(lg(1499) == -1 && lg(1500) == 10 && lg(1999) == 5000, lg.take(5).toSeq)
-    // lead 1999: only row 1 has a partner (row 2000)
-    assert(r(0).getInt(2) == 20000 && r(1).isNullAt(2), r(0).toString)
-    // IGNORE NULLS past the carry cap: the k-th non-null is an
-    // equi-join on the non-null rank (ids divisible by 3 are NULL →
-    // 1334 non-nulls; lag 1100 IGNORE NULLS first lands at the row
-    // whose prefix holds 1100 non-nulls)
-    db.query("CREATE TABLE gbn (id INT, v INT)")
-    db.query("INSERT INTO gbn SELECT i AS id, CASE WHEN i % 3 = 0 " +
-      "THEN NULL ELSE i * 10 END AS v FROM range(1, 2001) r(i)")
-    val rn = db.select("SELECT sum(CASE WHEN lg IS NULL THEN 0 ELSE lg " +
-      "END) AS s1, count(lg) AS c1 FROM (SELECT lag(v, 1100 IGNORE NULLS) " +
-      "OVER (ORDER BY id) AS lg FROM gbn) t")
-      .fold(e => fail(e.msg), _.collect()).head
-    assert((rn.getLong(0), rn.getLong(1)) == (615420L, 351L), rn.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gb (id INT, v INT)")
+      db.query("INSERT INTO gb SELECT i AS id, i * 10 AS v FROM range(1, 2001) r(i)")
+      val df = db.select("SELECT id, lag(v, 1500, -1) OVER (ORDER BY id) AS lg, " +
+        "lead(v, 1999) OVER (ORDER BY id) AS ld FROM gb ORDER BY id")
+        .fold(e => fail(e.msg), identity)
+      // scale pin: offsets past the ghost halo cap run as a hash join on
+      // the materialized prefix-scan row number — the only
+      // single-partition step is the ≤P-row totals window inside the scan
+      val plan = df.queryExecution.executedPlan.toString
+      if (bucketed) assert(plan.contains("ExistingRDD"), plan)
+      val r = df.collect()
+      assert(r.length == 2000)
+      // row 1500 is the last default; 1501 sees row 1's value
+      val lg = r.map(x => x.getInt(1))
+      assert(lg(1499) == -1 && lg(1500) == 10 && lg(1999) == 5000, lg.take(5).toSeq)
+      // lead 1999: only row 1 has a partner (row 2000)
+      assert(r(0).getInt(2) == 20000 && r(1).isNullAt(2), r(0).toString)
+      // IGNORE NULLS past the carry cap: the k-th non-null is an
+      // equi-join on the non-null rank (ids divisible by 3 are NULL →
+      // 1334 non-nulls; lag 1100 IGNORE NULLS first lands at the row
+      // whose prefix holds 1100 non-nulls)
+      db.query("CREATE TABLE gbn (id INT, v INT)")
+      db.query("INSERT INTO gbn SELECT i AS id, CASE WHEN i % 3 = 0 " +
+        "THEN NULL ELSE i * 10 END AS v FROM range(1, 2001) r(i)")
+      val rn = db.select("SELECT sum(CASE WHEN lg IS NULL THEN 0 ELSE lg " +
+        "END) AS s1, count(lg) AS c1 FROM (SELECT lag(v, 1100 IGNORE NULLS) " +
+        "OVER (ORDER BY id) AS lg FROM gbn) t")
+        .fold(e => fail(e.msg), _.collect()).head
+      assert((rn.getLong(0), rn.getLong(1)) == (615420L, 351L), rn.toString)
+    }
   }
 
   test("global DISTINCT: look-ahead frames, OVER (), whole-input") {
-    val db = freshDb()
-    db.query("CREATE TABLE gm (id INT, v INT)")
-    db.query("INSERT INTO gm VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
-      "(5, 5), (6, 7), (7, 10), (8, NULL)")
-    // distinct-so-far-plus-2-ahead by id: {10}∪ahead{10,5}→2, … the
-    // mask's first occurrences sit at ids 1,3,6; dct/dsw are the
-    // broadcast global distinct aggregate (3 values: 10,5,7 → 22)
-    val df = db.select("SELECT id, " +
-      "count(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
-      "PRECEDING AND 2 FOLLOWING) AS dc, " +
-      "sum(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
-      "PRECEDING AND 1 FOLLOWING) AS ds, " +
-      "count(DISTINCT v) OVER () AS dct, " +
-      "sum(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
-      "PRECEDING AND UNBOUNDED FOLLOWING) AS dsw " +
-      "FROM gm ORDER BY id").fold(e => fail(e.msg), identity)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), plan)
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan) // OVER () rewrite
-    val r = df.collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2),
-      x.getLong(3), x.getLong(4))).toSeq
-    assert(r == Seq(
-      (1, 2L, 10L, 3L, 22L), (2, 2L, 15L, 3L, 22L), (3, 2L, 15L, 3L, 22L),
-      (4, 3L, 15L, 3L, 22L), (5, 3L, 22L, 3L, 22L), (6, 3L, 22L, 3L, 22L),
-      (7, 3L, 22L, 3L, 22L), (8, 3L, 22L, 3L, 22L)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gm (id INT, v INT)")
+      db.query("INSERT INTO gm VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
+        "(5, 5), (6, 7), (7, 10), (8, NULL)")
+      // distinct-so-far-plus-2-ahead by id: {10}∪ahead{10,5}→2, … the
+      // mask's first occurrences sit at ids 1,3,6; dct/dsw are the
+      // broadcast global distinct aggregate (3 values: 10,5,7 → 22)
+      val df = db.select("SELECT id, " +
+        "count(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
+        "PRECEDING AND 2 FOLLOWING) AS dc, " +
+        "sum(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
+        "PRECEDING AND 1 FOLLOWING) AS ds, " +
+        "count(DISTINCT v) OVER () AS dct, " +
+        "sum(DISTINCT v) OVER (ORDER BY id ROWS BETWEEN UNBOUNDED " +
+        "PRECEDING AND UNBOUNDED FOLLOWING) AS dsw " +
+        "FROM gm ORDER BY id").fold(e => fail(e.msg), identity)
+      val plan = df.queryExecution.executedPlan.toString
+      if (bucketed) {
+        assert(plan.contains("ExistingRDD"), plan)
+        assert(plan.contains("BroadcastNestedLoopJoin"), plan) // OVER () rewrite
+      }
+      val r = df.collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2),
+        x.getLong(3), x.getLong(4))).toSeq
+      assert(r == Seq(
+        (1, 2L, 10L, 3L, 22L), (2, 2L, 15L, 3L, 22L), (3, 2L, 15L, 3L, 22L),
+        (4, 3L, 15L, 3L, 22L), (5, 3L, 22L, 3L, 22L), (6, 3L, 22L, 3L, 22L),
+        (7, 3L, 22L, 3L, 22L), (8, 3L, 22L, 3L, 22L)), r.toString)
+    }
   }
 
   test("CASE with a NULL first branch types from the value branch") {
@@ -5187,101 +5231,105 @@ class DialectSpec extends AnyFunSuite {
   }
 
   test("global IGNORE NULLS shifts: per-bucket carry arrays") {
-    val db = freshDb()
-    db.query("CREATE TABLE gi (id INT, v INT)")
-    db.query("INSERT INTO gi VALUES (1, NULL), (2, 3), (3, NULL), " +
-      "(4, NULL), (5, 8), (6, NULL)")
-    // 6 rows across 4 shuffle partitions: most buckets hold 1-2 rows,
-    // so nearly every shift crosses buckets through the carry
-    val r = db.select("SELECT id, " +
-      "lag(v IGNORE NULLS) OVER (ORDER BY id) AS l1, " +
-      "lag(v, 2, -1 IGNORE NULLS) OVER (ORDER BY id) AS l2, " +
-      "lead(v IGNORE NULLS) OVER (ORDER BY id) AS d1 " +
-      "FROM gi ORDER BY id").fold(e => fail(e.msg), _.collect())
-      .map(x => (x.getInt(0),
-        if (x.isNullAt(1)) null else x.get(1).toString.toInt,
-        if (x.isNullAt(2)) null else x.get(2).toString.toInt,
-        if (x.isNullAt(3)) null else x.get(3).toString.toInt)).toSeq
-    // non-null values in id order: 3 (id2), 8 (id5)
-    assert(r == Seq(
-      (1, null, -1, 3), (2, null, -1, 8), (3, 3, -1, 8),
-      (4, 3, -1, 8), (5, 3, -1, null), (6, 8, 3, null)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gi (id INT, v INT)")
+      db.query("INSERT INTO gi VALUES (1, NULL), (2, 3), (3, NULL), " +
+        "(4, NULL), (5, 8), (6, NULL)")
+      // 6 rows across 4 shuffle partitions: most buckets hold 1-2 rows,
+      // so nearly every shift crosses buckets through the carry
+      val r = db.select("SELECT id, " +
+        "lag(v IGNORE NULLS) OVER (ORDER BY id) AS l1, " +
+        "lag(v, 2, -1 IGNORE NULLS) OVER (ORDER BY id) AS l2, " +
+        "lead(v IGNORE NULLS) OVER (ORDER BY id) AS d1 " +
+        "FROM gi ORDER BY id").fold(e => fail(e.msg), _.collect())
+        .map(x => (x.getInt(0),
+          if (x.isNullAt(1)) null else x.get(1).toString.toInt,
+          if (x.isNullAt(2)) null else x.get(2).toString.toInt,
+          if (x.isNullAt(3)) null else x.get(3).toString.toInt)).toSeq
+      // non-null values in id order: 3 (id2), 8 (id5)
+      assert(r == Seq(
+        (1, null, -1, 3), (2, null, -1, 8), (3, 3, -1, 8),
+        (4, 3, -1, 8), (5, 3, -1, null), (6, 8, 3, null)), r.toString)
+    }
   }
 
   test("global ntile: broadcast total + global row number, distributed") {
-    val db = freshDb()
-    db.query("CREATE TABLE gn (id INT)")
-    db.query("INSERT INTO gn VALUES (1), (2), (3), (4), (5), (6), (7), (8)")
-    // N=8, n=3: r = 2 oversized tiles of 3, then one tile of 2
-    val df = db.select("SELECT id, ntile(3) OVER (ORDER BY id) AS t3, " +
-      "ntile(5) OVER (ORDER BY id) AS t5, " +
-      "ntile(20) OVER (ORDER BY id) AS tb FROM gn ORDER BY id")
-      .fold(e => fail(e.msg), identity)
-    assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
-    val r = df.collect().map(x => (x.getInt(0), x.getInt(1), x.getInt(2),
-      x.getInt(3))).toSeq
-    assert(r == Seq((1, 1, 1, 1), (2, 1, 1, 2), (3, 1, 2, 3), (4, 2, 2, 4),
-      (5, 2, 3, 5), (6, 2, 3, 6), (7, 3, 4, 7), (8, 3, 5, 8)), r.toString)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE gn (id INT)")
+      db.query("INSERT INTO gn VALUES (1), (2), (3), (4), (5), (6), (7), (8)")
+      // N=8, n=3: r = 2 oversized tiles of 3, then one tile of 2
+      val df = db.select("SELECT id, ntile(3) OVER (ORDER BY id) AS t3, " +
+        "ntile(5) OVER (ORDER BY id) AS t5, " +
+        "ntile(20) OVER (ORDER BY id) AS tb FROM gn ORDER BY id")
+        .fold(e => fail(e.msg), identity)
+      if (bucketed) assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+      val r = df.collect().map(x => (x.getInt(0), x.getInt(1), x.getInt(2),
+        x.getInt(3))).toSeq
+      assert(r == Seq((1, 1, 1, 1), (2, 1, 1, 2), (3, 1, 2, 3), (4, 2, 2, 4),
+        (5, 2, 3, 5), (6, 2, 3, 6), (7, 3, 4, 7), (8, 3, 5, 8)), r.toString)
+    }
   }
 
   test("global windows: a NULL-ordered second key reverses exactly across buckets") {
-    // (a, b) with b ∈ {0, NULL}: unspecified NULL placement is LAST in
-    // both directions, so the reversed order a bucket's halo and
-    // IGNORE NULLS candidates are cut from must flip it to FIRST. 16
-    // rows over 4 shuffle partitions put bucket edges between (a, NULL)
-    // and (a+1, 0), where a NULL-blind reversal picks (a, 0) instead.
-    val db = freshDb()
-    db.query("CREATE TABLE gno (a INT, b INT, v INT)")
-    db.query("INSERT INTO gno VALUES " + (1 to 8).map(a =>
-      s"($a, 0, ${10 * a}), ($a, NULL, ${10 * a + 5})").mkString(", "))
-    for ((ord, as) <- Seq("a, b" -> (1 to 8), "a DESC, b" -> (8 to 1 by -1))) {
-      val r = db.select(s"SELECT a, b, lag(v) OVER (ORDER BY $ord) AS l, " +
-        s"lag(v IGNORE NULLS) OVER (ORDER BY $ord) AS li, " +
-        s"sum(v) OVER (ORDER BY $ord ROWS BETWEEN 1 PRECEDING AND " +
-        "CURRENT ROW) AS s FROM gno").fold(e => fail(e.msg), _.collect())
-        .map(x => ((x.getInt(0), if (x.isNullAt(1)) None else Some(x.getInt(1))),
-          Seq(2, 3, 4).map(i => if (x.isNullAt(i)) None
-            else Some(x.get(i).toString.toLong)))).toMap
-      // the rows in window order and the value each one sees before it
-      val seq = as.flatMap(a => Seq((a, Some(0)) -> 10L * a,
-        (a, None) -> (10L * a + 5)))
-      val expected = seq.zipWithIndex.map { case ((key, v), i) =>
-        val prev = if (i == 0) None else Some(seq(i - 1)._2)
-        key -> Seq(prev, prev, Some(v + prev.getOrElse(0L)))
-      }.toMap
-      assert(r == expected, ord)
+    onBothWindowPaths { (db, bucketed) =>
+      // (a, b) with b ∈ {0, NULL}: unspecified NULL placement is LAST in
+      // both directions, so the reversed order a bucket's halo and
+      // IGNORE NULLS candidates are cut from must flip it to FIRST. 16
+      // rows over 4 shuffle partitions put bucket edges between (a, NULL)
+      // and (a+1, 0), where a NULL-blind reversal picks (a, 0) instead.
+      db.query("CREATE TABLE gno (a INT, b INT, v INT)")
+      db.query("INSERT INTO gno VALUES " + (1 to 8).map(a =>
+        s"($a, 0, ${10 * a}), ($a, NULL, ${10 * a + 5})").mkString(", "))
+      for ((ord, as) <- Seq("a, b" -> (1 to 8), "a DESC, b" -> (8 to 1 by -1))) {
+        val r = db.select(s"SELECT a, b, lag(v) OVER (ORDER BY $ord) AS l, " +
+          s"lag(v IGNORE NULLS) OVER (ORDER BY $ord) AS li, " +
+          s"sum(v) OVER (ORDER BY $ord ROWS BETWEEN 1 PRECEDING AND " +
+          "CURRENT ROW) AS s FROM gno").fold(e => fail(e.msg), _.collect())
+          .map(x => ((x.getInt(0), if (x.isNullAt(1)) None else Some(x.getInt(1))),
+            Seq(2, 3, 4).map(i => if (x.isNullAt(i)) None
+              else Some(x.get(i).toString.toLong)))).toMap
+        // the rows in window order and the value each one sees before it
+        val seq = as.flatMap(a => Seq((a, Some(0)) -> 10L * a,
+          (a, None) -> (10L * a + 5)))
+        val expected = seq.zipWithIndex.map { case ((key, v), i) =>
+          val prev = if (i == 0) None else Some(seq(i - 1)._2)
+          key -> Seq(prev, prev, Some(v + prev.getOrElse(0L)))
+        }.toMap
+        assert(r == expected, ord)
+      }
     }
   }
 
   test("reliable checkpoint: identical results with graft.reliableCheckpoint=true") {
-    // the prefix-scan / ghost / carry / fixpoint paths materialize their
-    // shared frames through materializeOnce; with the session switch on
-    // they go to the fault-tolerant checkpoint dir (survives executor
-    // loss on a real cluster) — values must be IDENTICAL either way
-    val db = freshDb()
-    db.query("CREATE TABLE rc (id INT, v INT)")
-    db.query("INSERT INTO rc VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
-      "(5, 7), (6, 2), (7, 9), (8, NULL)")
-    val sql = "SELECT id, rank() OVER (ORDER BY v) AS rk, " +
-      "sum(v) OVER (ORDER BY v, id) AS rs, " +
-      "lag(v, 2, -9) OVER (ORDER BY v, id) AS lg, " +
-      "lag(v IGNORE NULLS) OVER (ORDER BY id) AS lin, " +
-      "sum(DISTINCT v) OVER (ORDER BY id) AS ds " +
-      "FROM rc ORDER BY id"
-    val rec = "WITH RECURSIVE t AS (SELECT 1 AS n UNION ALL " +
-      "SELECT n + 1 AS n FROM t WHERE n < 12) SELECT sum(n) AS s FROM t"
-    def rows(q: String) = db.select(q).fold(e => fail(e.msg), _.collect()).toSeq
-    val base = rows(sql)
-    val baseRec = rows(rec)
-    spark.conf.set("graft.reliableCheckpoint", "true")
-    try {
-      assert(rows(sql) == base)
-      assert(rows(rec) == baseRec)
-      // determinism across recomputation: reliable blocks re-read the
-      // SAME materialized bucketing, so a second evaluation of the same
-      // query agrees row-for-row
-      assert(rows(sql) == base)
-    } finally spark.conf.unset("graft.reliableCheckpoint")
+    onBothWindowPaths { (db, bucketed) =>
+      // the prefix-scan / ghost / carry / fixpoint paths materialize their
+      // shared frames through materializeOnce; with the session switch on
+      // they go to the fault-tolerant checkpoint dir (survives executor
+      // loss on a real cluster) — values must be IDENTICAL either way
+      db.query("CREATE TABLE rc (id INT, v INT)")
+      db.query("INSERT INTO rc VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
+        "(5, 7), (6, 2), (7, 9), (8, NULL)")
+      val sql = "SELECT id, rank() OVER (ORDER BY v) AS rk, " +
+        "sum(v) OVER (ORDER BY v, id) AS rs, " +
+        "lag(v, 2, -9) OVER (ORDER BY v, id) AS lg, " +
+        "lag(v IGNORE NULLS) OVER (ORDER BY id) AS lin, " +
+        "sum(DISTINCT v) OVER (ORDER BY id) AS ds " +
+        "FROM rc ORDER BY id"
+      val rec = "WITH RECURSIVE t AS (SELECT 1 AS n UNION ALL " +
+        "SELECT n + 1 AS n FROM t WHERE n < 12) SELECT sum(n) AS s FROM t"
+      def rows(q: String) = db.select(q).fold(e => fail(e.msg), _.collect()).toSeq
+      val base = rows(sql)
+      val baseRec = rows(rec)
+      spark.conf.set("graft.reliableCheckpoint", "true")
+      try {
+        assert(rows(sql) == base)
+        assert(rows(rec) == baseRec)
+        // determinism across recomputation: reliable blocks re-read the
+        // SAME materialized bucketing, so a second evaluation of the same
+        // query agrees row-for-row
+        assert(rows(sql) == base)
+      } finally spark.conf.unset("graft.reliableCheckpoint")
+    }
   }
 
   test("ROLLUP/CUBE over empty input still emit the grand-total row") {
@@ -5370,57 +5418,60 @@ class DialectSpec extends AnyFunSuite {
   }
 
   test("inequality-correlated scalar-subquery items over an aggregated query") {
-    val db = freshDb()
-    db.query("CREATE TABLE ia (g INT, v INT)")
-    db.query("INSERT INTO ia VALUES (1, 10), (1, 20), (3, 5), (NULL, 9)")
-    db.query("CREATE TABLE ib (w INT)")
-    db.query("INSERT INTO ib VALUES (1), (2), (3), (4)")
-    // post-aggregation running count: per group key g, how many ib.w < g*2
-    // (g=1 → w<2 → 1; g=3 → w<6 → 4; g NULL → UNKNOWN → 0)
-    val r = db.select("SELECT g, count(*) AS n, " +
-      "(SELECT count(*) FROM ib WHERE w < g * 2) AS c " +
-      "FROM ia GROUP BY g ORDER BY g NULLS LAST")
-      .fold(e => fail(e.msg), _.collect())
-    assert(r.map(x => (if (x.isNullAt(0)) -99 else x.getInt(0),
-      x.getLong(1), x.getLong(2))).toSeq ==
-      Seq((1, 2L, 1L), (3, 1L, 4L), (-99, 1L, 0L)))
-    // mixed: equality on the group key + inequality on a group-key expr
-    db.query("CREATE TABLE ic (k INT, z INT)")
-    db.query("INSERT INTO ic VALUES (1, 100), (1, 5), (3, 7), (3, 1)")
-    val m = db.select("SELECT g, sum(v) AS sv, " +
-      "(SELECT sum(z) FROM ic WHERE ic.k = ia.g AND ic.z > g) AS sz " +
-      "FROM ia GROUP BY g ORDER BY g NULLS LAST")
-      .fold(e => fail(e.msg), _.collect())
-    // g=1: z in {100,5} with z>1 → 105; g=3: z in {7,1} with z>3 → 7
-    assert(m.map(x => (if (x.isNullAt(0)) -99 else x.getInt(0),
-      if (x.isNullAt(2)) -1L else x.getLong(2))).toSeq ==
-      Seq((1, 105L), (3, 7L), (-99, -1L)))
-    // scale pin: with NO equality keys the running aggregate lowers as
-    // a distributed prefix scan (range buckets + per-bucket windows +
-    // broadcast offsets) — never an Exchange SinglePartition carrying
-    // the inner rows
-    val plan = db.select("SELECT g, count(*) AS n, " +
-      "(SELECT count(*) FROM ib WHERE w < g * 2) AS c " +
-      "FROM ia GROUP BY g").fold(e => fail(e.msg), identity)
-      .queryExecution.executedPlan.toString
-    // the bucketed (range-partitioned + pid-stamped) frame materializes
-    // once behind a lazy local checkpoint — the plan reads it as an RDD
-    // scan carrying the bucket-id column, and the in-bucket window
-    // partitions on it
-    assert(plan.contains("ExistingRDD"), plan)
-    assert(plan.contains("_pid"), plan)
-    // at most ONE single-partition exchange survives: the exclusive
-    // prefix over the per-bucket TOTALS (≤ shuffle-partition-count rows
-    // — scale-free); the inner rows themselves ride the range buckets
-    assert(plan.sliding("Exchange SinglePartition".length)
-      .count(_ == "Exchange SinglePartition") <= 1, plan)
-    // the ineq outer side must be group-key-only…
-    assert(db.select("SELECT g, count(*), " +
-      "(SELECT count(*) FROM ib WHERE w < v) AS c FROM ia GROUP BY g").isLeft)
-    // …and ORDER BY cannot reference the running item's alias
-    assert(db.select("SELECT g, count(*) AS n, " +
-      "(SELECT count(*) FROM ib WHERE w < g) AS c " +
-      "FROM ia GROUP BY g ORDER BY c").isLeft)
+    onBothWindowPaths { (db, bucketed) =>
+      db.query("CREATE TABLE ia (g INT, v INT)")
+      db.query("INSERT INTO ia VALUES (1, 10), (1, 20), (3, 5), (NULL, 9)")
+      db.query("CREATE TABLE ib (w INT)")
+      db.query("INSERT INTO ib VALUES (1), (2), (3), (4)")
+      // post-aggregation running count: per group key g, how many ib.w < g*2
+      // (g=1 → w<2 → 1; g=3 → w<6 → 4; g NULL → UNKNOWN → 0)
+      val r = db.select("SELECT g, count(*) AS n, " +
+        "(SELECT count(*) FROM ib WHERE w < g * 2) AS c " +
+        "FROM ia GROUP BY g ORDER BY g NULLS LAST")
+        .fold(e => fail(e.msg), _.collect())
+      assert(r.map(x => (if (x.isNullAt(0)) -99 else x.getInt(0),
+        x.getLong(1), x.getLong(2))).toSeq ==
+        Seq((1, 2L, 1L), (3, 1L, 4L), (-99, 1L, 0L)))
+      // mixed: equality on the group key + inequality on a group-key expr
+      db.query("CREATE TABLE ic (k INT, z INT)")
+      db.query("INSERT INTO ic VALUES (1, 100), (1, 5), (3, 7), (3, 1)")
+      val m = db.select("SELECT g, sum(v) AS sv, " +
+        "(SELECT sum(z) FROM ic WHERE ic.k = ia.g AND ic.z > g) AS sz " +
+        "FROM ia GROUP BY g ORDER BY g NULLS LAST")
+        .fold(e => fail(e.msg), _.collect())
+      // g=1: z in {100,5} with z>1 → 105; g=3: z in {7,1} with z>3 → 7
+      assert(m.map(x => (if (x.isNullAt(0)) -99 else x.getInt(0),
+        if (x.isNullAt(2)) -1L else x.getLong(2))).toSeq ==
+        Seq((1, 105L), (3, 7L), (-99, -1L)))
+      // scale pin: with NO equality keys the running aggregate lowers as
+      // a distributed prefix scan (range buckets + per-bucket windows +
+      // broadcast offsets) — never an Exchange SinglePartition carrying
+      // the inner rows
+      val plan = db.select("SELECT g, count(*) AS n, " +
+        "(SELECT count(*) FROM ib WHERE w < g * 2) AS c " +
+        "FROM ia GROUP BY g").fold(e => fail(e.msg), identity)
+        .queryExecution.executedPlan.toString
+      // the bucketed (range-partitioned + pid-stamped) frame materializes
+      // once behind a lazy local checkpoint — the plan reads it as an RDD
+      // scan carrying the bucket-id column, and the in-bucket window
+      // partitions on it
+      if (bucketed) {
+        assert(plan.contains("ExistingRDD"), plan)
+        assert(plan.contains("_pid"), plan)
+        // at most ONE single-partition exchange survives: the exclusive
+        // prefix over the per-bucket TOTALS (≤ shuffle-partition-count rows
+        // — scale-free); the inner rows themselves ride the range buckets
+        assert(plan.sliding("Exchange SinglePartition".length)
+          .count(_ == "Exchange SinglePartition") <= 1, plan)
+      }
+      // the ineq outer side must be group-key-only…
+      assert(db.select("SELECT g, count(*), " +
+        "(SELECT count(*) FROM ib WHERE w < v) AS c FROM ia GROUP BY g").isLeft)
+      // …and ORDER BY cannot reference the running item's alias
+      assert(db.select("SELECT g, count(*) AS n, " +
+        "(SELECT count(*) FROM ib WHERE w < g) AS c " +
+        "FROM ia GROUP BY g ORDER BY c").isLeft)
+    }
   }
 
   test("USE schema: search path, create landing, shadowing") {

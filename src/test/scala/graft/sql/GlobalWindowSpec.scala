@@ -3,6 +3,7 @@ package graft.sql
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -12,7 +13,8 @@ import graft.operators.Fixpoint
 /** Differential pins for the bucketed unpartitioned-window operator
   * (GlobalWindows): every kind it computes — prefix scan, halo, IGNORE
   * NULLS carry, whole-input EXCLUDE, rank join — against Spark's own
-  * single-partition window over the same rows, at 1, 4 and 7 buckets.
+  * single-partition window over the same rows, at 1, 4 and 7 buckets,
+  * and the one-task path a small table takes (Spark's own window).
   * The reference spells every NULL placement out (the engine's default
   * is NULLS LAST in both directions) and breaks ties on the unique `id`.
   */
@@ -35,7 +37,15 @@ class GlobalWindowSpec extends AnyFunSuite {
     spark.read.parquet(path).createOrReplaceTempView("gws_ref")
     val d = new GraftDatabase(spark, Files.createTempDirectory("graft-wh").toString)
     d.registerParquet("t", path)
+    // a known row count: at the default threshold t runs on one task
+    d.statistics.injectStats("t", rows.length)
     d
+  }
+
+  /** `body` with the database pinned to the bucketed operator. */
+  private def bucketed[T](body: => T): T = {
+    db.oneTaskRows = 0
+    try body finally db.oneTaskRows = GlobalWindows.OneTaskRows
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -46,18 +56,28 @@ class GlobalWindowSpec extends AnyFunSuite {
       case x                       => x.toString
     }.mkString("|")).sorted
 
-  /** The engine's `sql` equals Spark's `reference` at every bucket count. */
+  /** The engine's `sql` equals Spark's `reference` on the one-task path
+    * and at every bucket count, with the same result schema on every
+    * path.
+    */
   private def same(sql: String, reference: String): Unit = {
     val engine = db // registers the reference view too
     val expected = rows(spark.sql(reference))
+    def check(path: String): StructType = {
+      val df = engine.select(sql).fold(e => fail(s"$sql -> ${e.msg}"), identity)
+      val got = rows(df)
+      val diff = got.zip(expected).filter { case (g, e) => g != e }
+      if (got.length != expected.length || diff.nonEmpty)
+        fail(s"$path: ${got.length} rows vs ${expected.length}, " +
+          s"first differences (engine, spark): ${diff.take(3)}")
+      df.schema
+    }
+    val oneTask = check("one task")
     for (p <- Seq(1, 4, 7))
       Fixpoint.withConfRestored(spark, Fixpoint.PartitionsKey) {
         spark.conf.set(Fixpoint.PartitionsKey, p.toLong)
-        val got = engine.select(sql).fold(e => fail(s"$sql -> ${e.msg}"), rows)
-        val diff = got.zip(expected).filter { case (g, e) => g != e }
-        if (got.length != expected.length || diff.nonEmpty)
-          fail(s"$p buckets: ${got.length} rows vs ${expected.length}, " +
-            s"first differences (engine, spark): ${diff.take(3)}")
+        val types = bucketed(check(s"$p buckets"))
+        assert(types == oneTask, s"$p buckets: $types vs one task: $oneTask")
       }
   }
 
@@ -226,10 +246,66 @@ class GlobalWindowSpec extends AnyFunSuite {
         plans.length - 1)
     }
     // one bucketing, materialized once plus once for the rank join
-    val (one, m1) = bucketing(s"SELECT id, $kinds FROM t")
+    val (one, m1) = bucketed(bucketing(s"SELECT id, $kinds FROM t"))
     assert(one.size == 1 && m1 == 2, (one, m1))
-    val (two, m2) = bucketing(s"SELECT id, $kinds, " +
-      "rank() OVER (ORDER BY k DESC) AS rk FROM t")
+    val (two, m2) = bucketed(bucketing(s"SELECT id, $kinds, " +
+      "rank() OVER (ORDER BY k DESC) AS rk FROM t"))
     assert(two.size == 2 && m2 == 3, (two, m2))
+    // on one task: no bucketing and nothing materialized
+    assert(bucketing(s"SELECT id, $kinds FROM t") == ((Set.empty[String], 0)))
+  }
+
+  test("the row count in the driver chooses one task or the buckets, with no job") {
+    val d = new GraftDatabase(spark, Files.createTempDirectory("graft-wh").toString)
+    d.query("CREATE TABLE ev (id BIGINT, kind INT, amount BIGINT, note VARCHAR(8))")
+    // 4,800 rows by INSERT: the statistics stay fresh
+    for (b <- 0 until 6)
+      d.query("INSERT INTO ev VALUES " + (0 until 800).map { i =>
+        val id = b * 800 + i
+        val amount = if (id % 8 == 0) "NULL" else (id * 37 % 1000).toString
+        val note = if (id % 3 == 0) "NULL" else s"'n${id % 5}'"
+        s"($id, ${id % 20}, $amount, $note)"
+      }.mkString(", ")).fold(e => fail(e.msg), identity)
+    // the ingest benchmark's window template
+    val sql = "SELECT id, rn, rs, lg, ld, nt, fv, lv FROM (SELECT id, " +
+      "row_number() OVER (ORDER BY id) AS rn, " +
+      "sum(amount) OVER (ORDER BY id) AS rs, " +
+      "lag(amount, 2050) OVER (ORDER BY id) AS lg, " +
+      "lead(kind, 1050) OVER (ORDER BY id) AS ld, " +
+      "ntile(55) OVER (ORDER BY id) AS nt, " +
+      "first_value(note IGNORE NULLS) OVER (ORDER BY id) AS fv, " +
+      "last_value(note IGNORE NULLS) OVER (ORDER BY id) AS lv " +
+      "FROM ev) x WHERE rn % 85 = 3"
+    val sc = spark.sparkContext
+    // (jobs while the statement is built, bucket ids in its plan, rows)
+    def run(): (Int, Boolean, Seq[String]) = {
+      val (df, built) = JobCounter.jobsDuring(sc)(
+        d.select(sql).fold(e => fail(e.msg), identity))
+      val bucketIds = "__gsh\\d+_pid".r
+        .findFirstIn(df.queryExecution.executedPlan.toString).nonEmpty
+      (built, bucketIds, rows(df))
+    }
+    val (built, bucketIds, oneTask) = run()
+    assert(built == 0 && !bucketIds, (built, bucketIds))
+    assert(oneTask.length == 57, oneTask.length)
+    val (_, ran) = JobCounter.jobsDuring(sc)(
+      d.select(sql).fold(e => fail(e.msg), _.collect()))
+    assert(ran <= 2, s"$ran jobs to run the windows on one task")
+    // pinned to the buckets: the jobs the bucketed build starts itself
+    d.oneTaskRows = 0
+    val (pinned, pinnedIds, pinnedRows) = try run()
+      finally d.oneTaskRows = GlobalWindows.OneTaskRows
+    assert(pinnedIds && pinned > 0 && pinnedRows == oneTask, pinned)
+    // one row past the threshold: the buckets, the same rows, and no job
+    // beyond the bucketed build's own to make the choice
+    d.statistics.injectStats("ev", GlobalWindows.OneTaskRows + 1)
+    assert(run() == ((pinned, true, oneTask)))
+    // a DELETE (here of no row) leaves the statistics stale: the bound
+    // is unknown
+    d.statistics.injectStats("ev", 4800)
+    d.query("DELETE FROM ev WHERE id < 0").fold(e => fail(e.msg), identity)
+    assert(d.statistics.isStale("ev"))
+    val (_, staleIds, staleRows) = run()
+    assert(staleIds && staleRows == oneTask, staleIds)
   }
 }
