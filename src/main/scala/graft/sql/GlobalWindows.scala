@@ -35,7 +35,8 @@ import Analyzer._
   * The operator runs only where the window input may be large: when
   * driver-resident statistics bound that input by [[OneTaskRows]], every
   * item is Spark's own window, on one task, typed as this operator would
-  * type it ([[asBucketed]]).
+  * type it ([[asBucketed]]), except the sums and averages this operator
+  * types its own way ([[retyped]]).
   */
 private[sql] object GlobalWindows {
 
@@ -49,47 +50,75 @@ private[sql] object GlobalWindows {
     * one sort on one task and no job while the statement is built,
     * against the range bucketing's sampling job and two lazy
     * checkpoints. The lowering bounds the input from driver-resident
-    * statistics only (a single base table's fresh row count, a join's
-    * planned estimate); an unknown or larger bound takes this operator.
+    * statistics only (the product of the FROM tables' row counts); an
+    * unknown or larger bound takes this operator.
     *
-    * Sweep (local[4] on a 4-vCPU host, the ingest benchmark's window
-    * template over generated parquet, median ms of 3 warm runs, the
-    * same rows on both paths):
+    * The value is chosen, not a measured crossover. Sweep (local[4] on
+    * a 4-vCPU host, 3 GB driver heap, the ingest benchmark's window
+    * template over generated parquet, median ms of 3 warm runs, 1 at
+    * 1.6·10^7; the same rows on both paths; peak task execution memory
+    * and bytes spilled from Spark's task metrics):
     *
-    * | Rows    | One task | Bucketed |
-    * |---------|----------|----------|
-    * | 5·10^3  |      249 |      902 |
-    * | 5·10^4  |      323 |    1,152 |
-    * | 2·10^5  |      581 |    2,001 |
-    * | 10^6    |    1,916 |    7,156 |
-    * | 4·10^6  |    7,722 |   30,279 |
+    * | Rows     | One task | Bucketed | One task's peak | One task spilled |
+    * |----------|----------|----------|-----------------|------------------|
+    * | 5·10^3   |      417 |    1,016 |           17 MB |                0 |
+    * | 5·10^4   |      307 |    1,196 |           19 MB |                0 |
+    * | 2·10^5   |      505 |    2,020 |           25 MB |                0 |
+    * | 10^6     |    1,841 |    5,884 |          101 MB |                0 |
+    * | 4·10^6   |    6,099 |   22,461 |          369 MB |                0 |
+    * | 8·10^6   |   12,855 |   53,063 |          738 MB |                0 |
+    * | 1.6·10^7 |   31,864 |  125,706 |        1,460 MB |           343 MB |
     *
-    * One task stays faster at every size measured on four cores; the cap
-    * keeps one task's sort bounded, and wider machines gain more from
-    * the buckets.
+    * On four cores one task was faster at every size; at 1.6·10^7 rows
+    * its sort spills. 10^6 rows keeps that sort near 100 MB, a
+    * sixteenth of the size that spilled, on any heap the test and
+    * benchmark harnesses give the driver (2 GB or more). Machines with
+    * more cores, where the buckets spread wider, were not measured.
     */
   val OneTaskRows = 1000000L
 
-  /** `c`, Spark's own window for the item, typed as this operator types
-    * it, so the result type does not depend on the input's size: the
+  /** Spark's own window for the item, typed as this operator types it,
+    * so the result type does not depend on the input's size: the
     * buckets compute the row counters as an in-bucket rank plus a
     * carried count (BIGINT, where Spark's are INT), and the other
     * ranking functions and whole-input frames with EXCLUDE from
-    * broadcast totals (nullable). `classify` names the item's class; its
-    * operands lower to placeholders, so nothing registers twice.
+    * broadcast totals (nullable). None where no retyping makes the two
+    * agree ([[retyped]]): such an item keeps this operator at any input
+    * size. `classify` names the item's class; its operands lower to
+    * placeholders, so nothing registers twice.
     */
   def asBucketed(f: String, args: Seq[BoundOperand],
       parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame], c: Column): Column = {
-    def nullable = Bridge.column(KnownNullable(Bridge.expression(c)))
+      frame: Option[Ast.WinFrame]): Option[Column => Column] = {
+    def nullable(c: Column) = Bridge.column(KnownNullable(Bridge.expression(c)))
     classify("", f, args, parts, ord, frame, _ => lit(null)) match {
+      case Some(Bucketed(_, _, Scan(_, g, _, _, _))) if retyped(g, args.headOption) =>
+        None
+      case Some(Bucketed(_, _, WholeExclude(_, g, _, _)))
+          if retyped(g, args.headOption) => None
       case Some(Bucketed(_, _, Scan(_, g, _, _, _)))
           if Aggregates(g).kind == Aggregates.Kind.Ranking =>
-        if (Set("row_number", "rank", "dense_rank")(g)) c.cast("long")
-        else nullable
-      case Some(Bucketed(_, _, _: WholeExclude)) => nullable
-      case _ => c
+        Some(if (Set("row_number", "rank", "dense_rank")(g)) _.cast("long")
+          else nullable)
+      case Some(Bucketed(_, _, _: WholeExclude)) => Some(nullable)
+      case _ => Some(identity)
     }
+  }
+
+  /** Does the carry type `f(arg)` unlike Spark's own aggregate? A sum
+    * or avg over a DECIMAL argument, or one whose type the lowering
+    * cannot tell: the carry adds sums of sums (DECIMAL(p+21, s) where
+    * Spark's sum is DECIMAL(p+10, s)) and divides an average in double
+    * or in decimal, where Spark's average rounds to DECIMAL(p+4, s+4).
+    */
+  def retyped(f: String, arg: Option[BoundOperand]): Boolean = {
+    def notDecimal(a: BoundOperand): Boolean = a match {
+      case BoundOperand.BAgg("count", _, _) => true
+      case BoundOperand.BAgg("sum" | "avg" | "min" | "max", Some(x), _) =>
+        notDecimal(x)
+      case _ => Lowering.inputSqlType(a).exists(!_.isInstanceOf[SqlType.SqlDecimal])
+    }
+    Set("sum", "avg")(f) && !arg.exists(notDecimal)
   }
 
   /** One window item this operator computes. */
@@ -163,12 +192,13 @@ private[sql] object GlobalWindows {
     *  - whole-input frames with EXCLUDE over the aggregates (min/max over
     *    RANGE on a single order key only).
     * A window the engine rewrote internally (any other `__` sentinel
-    * argument) keeps Spark's window.
+    * argument) keeps Spark's window, and so does, `oneTask`, every item
+    * Spark's window types as this operator would ([[asBucketed]]).
     */
   def classify(name: String, f: String, args: Seq[BoundOperand],
       parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
-      frame: Option[Ast.WinFrame],
-      opLower: BoundOperand => Column): Option[Req] = {
+      frame: Option[Ast.WinFrame], opLower: BoundOperand => Column,
+      oneTask: Boolean = false): Option[Req] = {
     def sentinel(as: Seq[BoundOperand]): Boolean = as.exists {
       case BoundOperand.BLit(Lit.LitString(s)) => s.startsWith("__")
       case _ => false
@@ -200,7 +230,8 @@ private[sql] object GlobalWindows {
       fr.lo >= -HaloCap && fr.hi <= HaloCap && fr.lo <= fr.hi)
     def bucketed(kind: Kind): Option[Req] =
       Some(Bucketed(ord, ord.map { case (o, d) => (opLower(o), d) }, kind))
-    if (parts.nonEmpty) None
+    if (parts.nonEmpty ||
+        (oneTask && asBucketed(f, args, parts, ord, frame).isDefined)) None
     else if (!ign && ((ord.isEmpty && frame.isEmpty) ||
         frame.exists(fr => unbounded(fr) && fr.exclude == "none")) &&
         agg5 && !sentinel(argsR) &&

@@ -1976,9 +1976,8 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private def lowerOneSelect(s: BoundSelect,
       source: Analyzer.BoundTable => DataFrame): DataFrame = {
     val ests = estimateBindings(s)
-    val plan = planJoinOrder(s, ests)
-    Lowering.lowerSelect(spark, s, source, chooseBroadcastSides(ests),
-      plan.map(_._1), plan.map(_._2))
+    Lowering.lowerSelect(spark, s, source,
+      chooseBroadcastSides(ests), planJoinOrder(s, ests))
   }
 
   /** Lower any readable query form (SELECT or set-op chain) to a frame —
@@ -2003,18 +2002,12 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         st.ndv(c).getOrElse(math.max(st.rowCount, 1L)))
     }
 
-  /** Unpartitioned windows whose input the statistics bound by this many
-    * rows run as Spark's own window on one task; 0 keeps every non-empty
-    * input on the bucketed operator.
+  /** The statistics one query's lowering reads. A table's row count is
+    * exact even while its statistics are stale (every write keeps it),
+    * so the window choice reads it and never starts a Spark job.
     */
-  private[graft] var oneTaskRows: Long = GlobalWindows.OneTaskRows
-
-  /** The statistics one query's lowering reads: table row counts only
-    * while fresh, so the window choice never starts a Spark job.
-    */
-  private def scopeStats = Lowering.ScopeStats(asofHook,
-    t => statistics.get(t).filterNot(_ => statistics.isStale(t)).map(_.rowCount),
-    oneTaskRows)
+  private val scopeStats = Lowering.ScopeStats(asofHook,
+    t => statistics.get(t).map(_.rowCount))
 
   /** Statistics an estimator can use: a table without any (external
     * parquet) gets a one-pass rebuild — rowcount + HLL sketches + bottom-k
@@ -2700,7 +2693,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   @volatile var lastJoinOrder: Option[Seq[String]] = None
 
   private def planJoinOrder(s: BoundSelect,
-      ests: Seq[(String, Long)]): Option[(JoinOrder.Tree, Long)] = {
+      ests: Seq[(String, Long)]): Option[JoinOrder.Tree] = {
     if (ests.length < 2) { lastJoinOrder = None; return None }
     val cards = ests.map(_._2.toDouble).toArray
     val idx = s.tables.map(_.binding).zipWithIndex.toMap
@@ -2728,8 +2721,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     val tree = JoinOrder.plan(s.tables.length, i => cards(i), edges)
     lastJoinOrder = tree.map(t =>
       JoinOrder.leafOrder(t).map(i => s.tables(i).binding))
-    // the planned join's estimated rows bound its windows' input
-    tree.map(t => (t, JoinOrder.rows(t.mask, i => cards(i), edges).toLong))
+    tree
   }
 
   // ---- catalog persistence: one document, warehouse.json ----

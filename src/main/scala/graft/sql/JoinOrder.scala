@@ -67,10 +67,20 @@ object JoinOrder {
       reach == mask
     }
 
-    // subset cardinality, computed once per subset
+    // subset cardinality: Π base × Π sel over internal edges —
+    // order-independent, computed once per subset
     val card = new Array[Double]((1 << n))
     var m = 1L
-    while (m <= full) { card(m.toInt) = rows(m, baseCard, edges); m += 1 }
+    while (m <= full) {
+      var c = 1.0
+      var i = 0
+      while (i < n) { if ((m & (1L << i)) != 0) c *= math.max(baseCard(i), 1.0); i += 1 }
+      edges.foreach { e =>
+        if ((m & (1L << e.a)) != 0 && (m & (1L << e.b)) != 0) c *= e.sel
+      }
+      card(m.toInt) = math.max(c, 1.0)
+      m += 1
+    }
 
     val cost = new Array[Double]((1 << n))
     val best = new Array[Tree](1 << n)
@@ -133,22 +143,6 @@ object JoinOrder {
     if (planned.exists(_ == null)) return None
     val ordered = planned.sortBy(t => card(t.mask.toInt))
     Some(ordered.reduceLeft((a, b) => Node(a, b, a.mask | b.mask)))
-  }
-
-  /** Estimated rows of joining the tables in `mask`: Π base × Π sel
-    * over the edges inside it — order-independent, at least 1.
-    */
-  def rows(mask: Long, baseCard: Int => Double, edges: Seq[Edge]): Double = {
-    var c = 1.0
-    var b = mask
-    while (b != 0) {
-      c *= math.max(baseCard(java.lang.Long.numberOfTrailingZeros(b)), 1.0)
-      b &= b - 1
-    }
-    edges.foreach { e =>
-      if ((mask & (1L << e.a)) != 0 && (mask & (1L << e.b)) != 0) c *= e.sel
-    }
-    math.max(c, 1.0)
   }
 
   /** Flatten a tree to the left-to-right leaf order (for tests/logging). */

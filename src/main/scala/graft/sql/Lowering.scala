@@ -33,12 +33,11 @@ object Lowering {
   def lowerSelect(spark: SparkSession, q: BoundSelect,
       source: BoundTable => DataFrame,
       broadcastBindings: Set[String] = Set.empty,
-      joinPlan: Option[JoinOrder.Tree] = None,
-      joinRows: Option[Long] = None): DataFrame = {
+      joinPlan: Option[JoinOrder.Tree] = None): DataFrame = {
     val filtered0 = combine(spark, q, source, broadcastBindings, joinPlan)
     // unpartitioned windows over an input the statistics bound small
     // run as Spark's own window (GlobalWindows.OneTaskRows)
-    val windowRows = inputRows(q, source, joinRows)
+    val windowRows = inputRows(q, source)
     val oneTaskWins = oneTask(windowRows)
 
     // Output naming: the user's AS alias wins; otherwise bare attribute
@@ -137,9 +136,8 @@ object Lowering {
       // can't rewrite the frame or inject the join)
       val opL: BoundOperand => Column = lowerOperandWith(_, qcol)
       val classified = (q.projection ++ q.qualifyWins).collect {
-        case w: BoundItem.BIWin => w -> (if (oneTaskWins) None
-          else GlobalWindows.classify(w.alias, w.func, w.args,
-            w.partitionBy, w.orderBy, w.frame, opL))
+        case w: BoundItem.BIWin => w -> GlobalWindows.classify(w.alias,
+          w.func, w.args, w.partitionBy, w.orderBy, w.frame, opL, oneTaskWins)
       }
       val winsPre = q.qualify.isDefined || donNeedsWins ||
         hasGroupsFrames || hasDistinctRunning || q.qualifyWins.nonEmpty ||
@@ -528,9 +526,8 @@ object Lowering {
           parts: Seq[BoundOperand], ord: Seq[(BoundOperand, Ast.SortDir)],
           frame: Option[Ast.WinFrame], tag: String)
           : (String, Either[GlobalWindows.Req, Column]) =
-        name -> (if (oneTaskWins) None
-          else GlobalWindows.classify(name, f, args, parts, ord, frame,
-            aggScopeOperand)).toLeft(windowColumn(f, args, parts, ord, frame,
+        name -> GlobalWindows.classify(name, f, args, parts, ord, frame,
+          aggScopeOperand, oneTaskWins).toLeft(windowColumn(f, args, parts, ord, frame,
             aggScopeOperand, bc => col(groupOut(bc)),
             withRank(frame, parts, ord, tag),
             withMask(f, args, frame, parts, ord, tag)))
@@ -947,7 +944,7 @@ object Lowering {
     * DOUBLE fold, the pre-existing behavior) whenever the operand's
     * type isn't locally decidable.
     */
-  private def inputSqlType(o: BoundOperand): Option[SqlType] = {
+  private[sql] def inputSqlType(o: BoundOperand): Option[SqlType] = {
     def integral(t: SqlType): Boolean = t match {
       case SqlType.SqlBigInt | SqlType.SqlInt | SqlType.SqlSmallInt => true
       case _ => false
@@ -1027,7 +1024,7 @@ object Lowering {
     val c = framedWindowColumn(f, args, frame, w, w1,
       parts.map(opLower) ++ ord.map(o => opLower(o._1)), opLower,
       distinctMask, wRev)
-    GlobalWindows.asBucketed(f, args, parts, ord, frame, c)
+    GlobalWindows.asBucketed(f, args, parts, ord, frame).fold(c)(_(c))
   }
 
   /** The window function `f(args)` over the framed spec `w` (`w1`: the
@@ -1300,14 +1297,12 @@ object Lowering {
 
   /** What a database's statistics tell the lowering, carried per query
     * by [[withQueryScope]]: `asof` chooses the ASOF lowering;
-    * `tableRows` is a base table's row count while its statistics are
-    * fresh (None when stale or absent; a driver read, never a Spark
-    * job); unpartitioned windows whose input that bounds by
-    * `oneTaskRows` run as Spark's own window on one task (see
-    * GlobalWindows.OneTaskRows).
+    * `tableRows` is a base table's exact row count (None without
+    * statistics; a driver read, never a Spark job), which bounds the
+    * input of its unpartitioned windows (GlobalWindows.OneTaskRows).
     */
   final case class ScopeStats(asof: AsofStatsHook,
-      tableRows: String => Option[Long], oneTaskRows: Long)
+      tableRows: String => Option[Long])
   /** Last ASOF lowering chosen ("union_merge" | "candidate") — tests. */
   @volatile var lastAsofChoice: Option[String] = None
   /** Avg step rows per key group at or below which the candidate join
@@ -1586,12 +1581,14 @@ object Lowering {
       (if (asc) col(tN).asc_nulls_first else col(tN).desc_nulls_first),
       tie.asc)
     // the union holds the outer tags and the inner rows
-    val unionRows = for (o <- outerRows; i <- inputRows(sub, source, None))
+    val unionRows = for (o <- outerRows; i <- inputRows(sub, source))
       yield o + i
     val ran =
-      if (kN.nonEmpty || oneTask(unionRows)) {
+      if (kN.nonEmpty || (oneTask(unionRows) &&
+          nodes.forall { case (f, a) => !GlobalWindows.retyped(f, a) })) {
         // equality keys partition the running window — scales on its
-        // own; without keys, a small union is one task
+        // own; without keys, a small union is one task unless the
+        // carry types an aggregate its own way
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(kN.map(col): _*)
           .orderBy(ordExprs: _*)
@@ -2470,26 +2467,25 @@ object Lowering {
   }
 
   /** Bound on the rows a SELECT's windows read, from driver-resident
-    * statistics only: a single base table's fresh row count (filters
-    * only remove rows), or `joinRows`, the join planner's estimate for
-    * a multi-table FROM. Unknown: derived tables and CTEs, outer-join
-    * steps, grouping sets, stale tables, tables without statistics, and
-    * a fixpoint step's rebound source.
+    * statistics only: the product of its FROM tables' row counts (an
+    * inner join or a filter never yields more). Unknown: derived tables
+    * and CTEs, outer-join steps, grouping sets, tables without
+    * statistics, and a fixpoint step's rebound source.
     */
-  private def inputRows(q: BoundSelect, source: BoundTable => DataFrame,
-      joinRows: Option[Long]): Option[Long] = {
+  private def inputRows(q: BoundSelect,
+      source: BoundTable => DataFrame): Option[Long] = {
     val sc = scopeTL.get()
     if (sc == null || (sc.rootSource ne source) || q.derived.nonEmpty ||
         q.joinSteps.nonEmpty || q.groupSpec.nonEmpty) None
-    else q.tables match {
-      case Seq(bt) => sc.stats.tableRows(bt.desc.name)
-      case _       => joinRows
+    else q.tables.foldLeft(Option(1L)) { (acc, bt) =>
+      for (a <- acc; n <- sc.stats.tableRows(bt.desc.name))
+        yield if (n != 0 && a > Long.MaxValue / n) Long.MaxValue else a * n
     }
   }
 
   /** Do unpartitioned windows over at most `rows` rows run on one task? */
   private def oneTask(rows: Option[Long]): Boolean =
-    Option(scopeTL.get()).exists(sc => rows.exists(_ <= sc.stats.oneTaskRows))
+    rows.exists(_ <= GlobalWindows.OneTaskRows)
 
   private def countDerivedRefs(q: Analyzer.BoundQuery,
       acc: scala.collection.mutable.Map[Analyzer.BoundQuery, Int]): Unit = q match {

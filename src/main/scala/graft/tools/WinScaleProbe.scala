@@ -9,8 +9,9 @@ package graft.tools
   * its window in a one-row aggregate so Catalyst cannot prune the
   * window away; that row prints next to the timings (every distinct
   * value across the reps), so two builds compare value parity too.
-  * The probes measure the bucketed operator, which the database would
-  * otherwise skip for inputs its statistics bound small.
+  * `orders` is registered without statistics, and no probe joins it
+  * (a join would build them), so no window input has a row bound and
+  * every probe measures the bucketed operator.
   *
   * Usage: WinScaleProbe <sfDir> [reps]
   */
@@ -23,7 +24,6 @@ object WinScaleProbe {
     val db = new graft.sql.GraftDatabase(spark,
       java.nio.file.Files.createTempDirectory("wsp").toString)
     db.registerParquet("orders", s"$sfDir/orders.parquet")
-    db.oneTaskRows = 0
 
     val probes = Seq(
       "big_shift" ->

@@ -19,17 +19,20 @@ class DialectSpec extends AnyFunSuite {
   private def freshDb(): GraftDatabase =
     new GraftDatabase(spark, Files.createTempDirectory("graft-wh").toString)
 
-  /** A global-window pin on both paths, each on a fresh database: pinned
-    * to the bucketed operator (`bucketed`: its plan shape is asserted)
-    * and at the default threshold, where the small tables run as Spark's
-    * own window on one task. Every value assertion holds on both.
+  /** A global-window pin on both paths, each on a fresh database: the
+    * bucketed operator (`bucketed`: its plan shape is asserted) and the
+    * default, where the small tables run as Spark's own window on one
+    * task. Every value assertion holds on both.
     */
   private def onBothWindowPaths(body: (GraftDatabase, Boolean) => Unit): Unit =
-    for (bucketed <- Seq(true, false)) {
-      val db = freshDb()
-      if (bucketed) db.oneTaskRows = 0
-      body(db, bucketed)
-    }
+    for (bucketed <- Seq(true, false)) body(freshDb(), bucketed)
+
+  /** On the bucketed path, every table of `db` counts one row past the
+    * one-task threshold; a body calls this once its tables are filled.
+    */
+  private def pinBuckets(db: GraftDatabase, bucketed: Boolean): Unit =
+    if (bucketed) db.catalogTables.keys.foreach(
+      db.statistics.injectStats(_, GlobalWindows.OneTaskRows + 1))
 
   private def demoDb(): GraftDatabase = {
     val db = freshDb()
@@ -4932,6 +4935,7 @@ class DialectSpec extends AnyFunSuite {
     onBothWindowPaths { (db, bucketed) =>
       db.query("CREATE TABLE go (id INT, v INT)")
       db.query("INSERT INTO go VALUES (1, 10), (2, 10), (3, 5), (4, NULL), (5, 7)")
+      pinBuckets(db, bucketed)
       // order by v (engine default: NULLS LAST): 5(id3), 7(id5), 10(id1),
       // 10(id2) — tied — then NULL(id4)
       val df = db.select("SELECT id, rank() OVER (ORDER BY v) AS rk, " +
@@ -4976,6 +4980,7 @@ class DialectSpec extends AnyFunSuite {
     onBothWindowPaths { (db, bucketed) =>
       db.query("CREATE TABLE gw (g INT, v INT)")
       db.query("INSERT INTO gw VALUES (1, 10), (1, 20), (2, 5), (2, NULL)")
+      pinBuckets(db, bucketed)
       // row scope: sum(v) OVER () — every row sees the grand total
       val r = db.select("SELECT g, v, sum(v) OVER () AS total FROM gw " +
         "ORDER BY g, v NULLS FIRST").fold(e => fail(e.msg), identity)
@@ -5005,6 +5010,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gd (id INT, v INT)")
       db.query("INSERT INTO gd VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
         "(5, 7), (6, 5)")
+      pinBuckets(db, bucketed)
       // DISTINCT running: distinct-so-far sets by id are {10}, {10},
       // {10,5}, {10,5} (NULL never joins), {10,5,7}, {10,5,7}
       val df = db.select("SELECT id, " +
@@ -5043,6 +5049,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gv (id INT, v INT)")
       db.query("INSERT INTO gv VALUES (1, 10), (2, NULL), (3, 5), " +
         "(4, NULL), (5, 7), (6, 2)")
+      pinBuckets(db, bucketed)
       // 6 rows across 4 shuffle partitions: nearly every frame crosses a
       // bucket boundary through the ghosts. fv's frame sits entirely in
       // the past (empty for id 1-2 → NULL); lvi IGNORE NULLS skips the
@@ -5086,6 +5093,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gx (id INT, k INT, v INT)")
       db.query("INSERT INTO gx VALUES (1, 1, 10), (2, 1, NULL), (3, 2, 5), " +
         "(4, 2, 5), (5, 3, 7), (6, 3, 2)")
+      pinBuckets(db, bucketed)
       // total sum(v) = 29 over 5 non-nulls; k-groups: 1→{10,NULL}, 2→{5,5},
       // 3→{7,2}
       val df = db.select("SELECT id, " +
@@ -5132,6 +5140,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gxa (g INT, v INT)")
       db.query("INSERT INTO gxa VALUES (1, 10), (1, 20), (2, 5), (2, 5), " +
         "(3, 7), (3, NULL)")
+      pinBuckets(db, bucketed)
       // grouped frame: g→count: 1→2, 2→2, 3→2; sums 30, 10, 7.
       // each group's window: total count 6 minus own 2 = 4;
       // min(sum) except current row over {30,10,7}
@@ -5152,6 +5161,7 @@ class DialectSpec extends AnyFunSuite {
     onBothWindowPaths { (db, bucketed) =>
       db.query("CREATE TABLE gb (id INT, v INT)")
       db.query("INSERT INTO gb SELECT i AS id, i * 10 AS v FROM range(1, 2001) r(i)")
+      pinBuckets(db, bucketed)
       val df = db.select("SELECT id, lag(v, 1500, -1) OVER (ORDER BY id) AS lg, " +
         "lead(v, 1999) OVER (ORDER BY id) AS ld FROM gb ORDER BY id")
         .fold(e => fail(e.msg), identity)
@@ -5174,6 +5184,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gbn (id INT, v INT)")
       db.query("INSERT INTO gbn SELECT i AS id, CASE WHEN i % 3 = 0 " +
         "THEN NULL ELSE i * 10 END AS v FROM range(1, 2001) r(i)")
+      pinBuckets(db, bucketed)
       val rn = db.select("SELECT sum(CASE WHEN lg IS NULL THEN 0 ELSE lg " +
         "END) AS s1, count(lg) AS c1 FROM (SELECT lag(v, 1100 IGNORE NULLS) " +
         "OVER (ORDER BY id) AS lg FROM gbn) t")
@@ -5187,6 +5198,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gm (id INT, v INT)")
       db.query("INSERT INTO gm VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
         "(5, 5), (6, 7), (7, 10), (8, NULL)")
+      pinBuckets(db, bucketed)
       // distinct-so-far-plus-2-ahead by id: {10}∪ahead{10,5}→2, … the
       // mask's first occurrences sit at ids 1,3,6; dct/dsw are the
       // broadcast global distinct aggregate (3 values: 10,5,7 → 22)
@@ -5235,6 +5247,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gi (id INT, v INT)")
       db.query("INSERT INTO gi VALUES (1, NULL), (2, 3), (3, NULL), " +
         "(4, NULL), (5, 8), (6, NULL)")
+      pinBuckets(db, bucketed)
       // 6 rows across 4 shuffle partitions: most buckets hold 1-2 rows,
       // so nearly every shift crosses buckets through the carry
       val r = db.select("SELECT id, " +
@@ -5257,6 +5270,7 @@ class DialectSpec extends AnyFunSuite {
     onBothWindowPaths { (db, bucketed) =>
       db.query("CREATE TABLE gn (id INT)")
       db.query("INSERT INTO gn VALUES (1), (2), (3), (4), (5), (6), (7), (8)")
+      pinBuckets(db, bucketed)
       // N=8, n=3: r = 2 oversized tiles of 3, then one tile of 2
       val df = db.select("SELECT id, ntile(3) OVER (ORDER BY id) AS t3, " +
         "ntile(5) OVER (ORDER BY id) AS t5, " +
@@ -5280,6 +5294,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE gno (a INT, b INT, v INT)")
       db.query("INSERT INTO gno VALUES " + (1 to 8).map(a =>
         s"($a, 0, ${10 * a}), ($a, NULL, ${10 * a + 5})").mkString(", "))
+      pinBuckets(db, bucketed)
       for ((ord, as) <- Seq("a, b" -> (1 to 8), "a DESC, b" -> (8 to 1 by -1))) {
         val r = db.select(s"SELECT a, b, lag(v) OVER (ORDER BY $ord) AS l, " +
           s"lag(v IGNORE NULLS) OVER (ORDER BY $ord) AS li, " +
@@ -5309,6 +5324,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("CREATE TABLE rc (id INT, v INT)")
       db.query("INSERT INTO rc VALUES (1, 10), (2, 10), (3, 5), (4, NULL), " +
         "(5, 7), (6, 2), (7, 9), (8, NULL)")
+      pinBuckets(db, bucketed)
       val sql = "SELECT id, rank() OVER (ORDER BY v) AS rk, " +
         "sum(v) OVER (ORDER BY v, id) AS rs, " +
         "lag(v, 2, -9) OVER (ORDER BY v, id) AS lg, " +
@@ -5423,6 +5439,7 @@ class DialectSpec extends AnyFunSuite {
       db.query("INSERT INTO ia VALUES (1, 10), (1, 20), (3, 5), (NULL, 9)")
       db.query("CREATE TABLE ib (w INT)")
       db.query("INSERT INTO ib VALUES (1), (2), (3), (4)")
+      pinBuckets(db, bucketed)
       // post-aggregation running count: per group key g, how many ib.w < g*2
       // (g=1 → w<2 → 1; g=3 → w<6 → 4; g NULL → UNKNOWN → 0)
       val r = db.select("SELECT g, count(*) AS n, " +
@@ -5435,6 +5452,7 @@ class DialectSpec extends AnyFunSuite {
       // mixed: equality on the group key + inequality on a group-key expr
       db.query("CREATE TABLE ic (k INT, z INT)")
       db.query("INSERT INTO ic VALUES (1, 100), (1, 5), (3, 7), (3, 1)")
+      pinBuckets(db, bucketed)
       val m = db.select("SELECT g, sum(v) AS sv, " +
         "(SELECT sum(z) FROM ic WHERE ic.k = ia.g AND ic.z > g) AS sz " +
         "FROM ia GROUP BY g ORDER BY g NULLS LAST")

@@ -22,30 +22,41 @@ class GlobalWindowSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
-  // 300 rows (fixed seed): unique id, a nullable second order key k with
-  // many ties, a nullable value v
+  private val tRows = 300
+
+  // tRows rows (fixed seed): unique id, a nullable second order key k
+  // with many ties, a nullable value v and a DECIMAL(10,2) m, NULL with v
   private lazy val db: GraftDatabase = {
     val rnd = new scala.util.Random(20261017L)
     def maybe(p: Int, x: => Int): Any = if (rnd.nextInt(p) == 0) null else x
-    val rows = (1 to 300).map(id =>
-      Row(id, maybe(6, rnd.nextInt(25)), maybe(4, rnd.nextInt(200) - 50)))
+    val rows = (1 to tRows).map { id =>
+      val k = maybe(6, rnd.nextInt(25))
+      val v = maybe(4, rnd.nextInt(200) - 50)
+      Row(id, k, v, v match {
+        case v: Int => java.math.BigDecimal.valueOf(v * 37L + id, 2)
+        case _      => null
+      })
+    }
     val schema = StructType(Seq(StructField("id", IntegerType, false),
-      StructField("k", IntegerType), StructField("v", IntegerType)))
+      StructField("k", IntegerType), StructField("v", IntegerType),
+      StructField("m", DecimalType(10, 2))))
     val path = Files.createTempDirectory("gws").resolve("t.parquet").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       .write.parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("gws_ref")
     val d = new GraftDatabase(spark, Files.createTempDirectory("graft-wh").toString)
     d.registerParquet("t", path)
-    // a known row count: at the default threshold t runs on one task
-    d.statistics.injectStats("t", rows.length)
+    // a known row count: t runs on one task
+    d.statistics.injectStats("t", tRows)
     d
   }
 
-  /** `body` with the database pinned to the bucketed operator. */
+  /** `body` with t one row past the one-task threshold: the bucketed
+    * operator.
+    */
   private def bucketed[T](body: => T): T = {
-    db.oneTaskRows = 0
-    try body finally db.oneTaskRows = GlobalWindows.OneTaskRows
+    db.statistics.injectStats("t", GlobalWindows.OneTaskRows + 1)
+    try body finally db.statistics.injectStats("t", tRows)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -203,6 +214,37 @@ class GlobalWindowSpec extends AnyFunSuite {
           "FOLLOWING AND UNBOUNDED FOLLOWING))")))
   }
 
+  test("DECIMAL sums and averages keep the buckets' types on every path") {
+    // the carry adds sums of sums and divides a running average in
+    // double, so these items take the buckets at any input size
+    val whole = "BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+    val nn = "IF(m IS NULL, 0, 1)"
+    val cs = "collect_set(m) OVER (ORDER BY %s)"
+    sameItems(
+      byKId -> both("sum(m) OVER (ORDER BY %s)"),
+      byK -> ("avg(m) OVER (ORDER BY %s)" -> ("CAST(sum(m) OVER (ORDER BY " +
+        "%s) AS DOUBLE) / NULLIF(count(m) OVER (ORDER BY %s), 0)")),
+      byKDescId -> ("sum(DISTINCT m) OVER (ORDER BY %s)" -> (s"IF(size($cs) " +
+        s"= 0, NULL, aggregate($cs, CAST(0 AS DECIMAL(38,2)), (a, x) -> a + x))")),
+      byKId -> (s"sum(m) OVER (ORDER BY %s ROWS $whole EXCLUDE CURRENT ROW)" ->
+        s"IF(count(m) OVER () - $nn = 0, NULL, sum(m) OVER () - coalesce(m, 0))"),
+      byKId -> both("sum(m) OVER (ORDER BY %s ROWS BETWEEN 2 PRECEDING " +
+        "AND 1 FOLLOWING)"),
+      byKId -> both("avg(m) OVER ()"))
+    // aggregate scope: a running sum and average of sums
+    same("SELECT k, sum(sum(m)) OVER (ORDER BY k) AS rs, " +
+      "avg(sum(m)) OVER (ORDER BY k) AS ra FROM t GROUP BY k",
+      "SELECT k, sum(sum(m)) OVER w AS rs, CAST(sum(sum(m)) OVER w AS " +
+        "DOUBLE) / NULLIF(count(sum(m)) OVER w, 0) AS ra FROM gws_ref " +
+        "GROUP BY k WINDOW w AS (ORDER BY k ASC NULLS LAST)")
+    // the keyless correlated running average: the inner rows before each
+    // id, over the same carry
+    same("SELECT id, (SELECT avg(m) FROM t t2 WHERE t2.id < t.id) AS a FROM t",
+      "SELECT id, CAST(sum(m) OVER w AS DOUBLE) / NULLIF(count(m) OVER w, 0) " +
+        "AS a FROM gws_ref WINDOW w AS (ORDER BY id ROWS BETWEEN UNBOUNDED " +
+        "PRECEDING AND 1 PRECEDING)")
+  }
+
   test("aggregate scope and QUALIFY run the same operator") {
     same("SELECT k, count(*) AS n, " +
       "rank() OVER (ORDER BY count(*) DESC, k) AS rk, " +
@@ -278,34 +320,33 @@ class GlobalWindowSpec extends AnyFunSuite {
       "FROM ev) x WHERE rn % 85 = 3"
     val sc = spark.sparkContext
     // (jobs while the statement is built, bucket ids in its plan, rows)
-    def run(): (Int, Boolean, Seq[String]) = {
+    def run(sql: String): (Int, Boolean, Seq[String]) = {
       val (df, built) = JobCounter.jobsDuring(sc)(
         d.select(sql).fold(e => fail(e.msg), identity))
       val bucketIds = "__gsh\\d+_pid".r
         .findFirstIn(df.queryExecution.executedPlan.toString).nonEmpty
       (built, bucketIds, rows(df))
     }
-    val (built, bucketIds, oneTask) = run()
+    val (built, bucketIds, oneTask) = run(sql)
     assert(built == 0 && !bucketIds, (built, bucketIds))
     assert(oneTask.length == 57, oneTask.length)
     val (_, ran) = JobCounter.jobsDuring(sc)(
       d.select(sql).fold(e => fail(e.msg), _.collect()))
     assert(ran <= 2, s"$ran jobs to run the windows on one task")
-    // pinned to the buckets: the jobs the bucketed build starts itself
-    d.oneTaskRows = 0
-    val (pinned, pinnedIds, pinnedRows) = try run()
-      finally d.oneTaskRows = GlobalWindows.OneTaskRows
-    assert(pinnedIds && pinned > 0 && pinnedRows == oneTask, pinned)
-    // one row past the threshold: the buckets, the same rows, and no job
-    // beyond the bucketed build's own to make the choice
+    // one row past the threshold: the buckets and the same rows
     d.statistics.injectStats("ev", GlobalWindows.OneTaskRows + 1)
-    assert(run() == ((pinned, true, oneTask)))
-    // a DELETE (here of no row) leaves the statistics stale: the bound
-    // is unknown
-    d.statistics.injectStats("ev", 4800)
+    val (pinned, pinnedIds, pinnedRows) = run(sql)
+    assert(pinnedIds && pinned > 0 && pinnedRows == oneTask, pinned)
+    // no job beyond the bucketed build's own to make the choice: as many
+    // as over a derived table, whose size is unknown
+    assert(run(sql.replace("FROM ev)", "FROM (SELECT * FROM ev) e)")) ==
+      ((pinned, true, oneTask)))
+    // a DELETE (here of no row) leaves the statistics stale with an exact
+    // row count, and a table made by CREATE TABLE AS has one too: one task
     d.query("DELETE FROM ev WHERE id < 0").fold(e => fail(e.msg), identity)
     assert(d.statistics.isStale("ev"))
-    val (_, staleIds, staleRows) = run()
-    assert(staleIds && staleRows == oneTask, staleIds)
+    assert(run(sql) == ((0, false, oneTask)))
+    d.query("CREATE TABLE ev2 AS SELECT * FROM ev").fold(e => fail(e.msg), identity)
+    assert(run(sql.replace("FROM ev)", "FROM ev2)")) == ((0, false, oneTask)))
   }
 }
