@@ -40,6 +40,7 @@ object Md5Hash {
   }
 }
 
+/** `graft_md5p60(x)` accepts strings only: a BINARY argument fails the type check. */
 case class Md5Prefix60(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   override def prettyName: String = "graft_md5p60"

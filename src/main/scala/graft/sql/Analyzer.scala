@@ -313,30 +313,72 @@ object Analyzer {
     }
   }
 
-  /** A bound SELECT-list entry: plain column or aggregate call, with the
-    * user's AS alias when given.
+  /** A bound SELECT-list entry: plain column, computed expression,
+    * aggregate call, window call or scalar subquery, with the user's AS
+    * alias. Each kind defines once what it evaluates (`operands`), what
+    * it is called (`name`) and, where it is one, its row value; every
+    * position check and correlated-body lowering reads these.
     */
-  sealed trait BoundItem
+  sealed trait BoundItem {
+    /** Every operand the item evaluates in the SELECT's own scope: a
+      * column, an expression, an aggregate call, a window's arguments,
+      * partition keys and order keys. A scalar subquery item has none —
+      * its body, pairs and inequality belong to the subquery scope, as
+      * [[TreeNode]] leaves them out of `children`.
+      */
+    def operands: Seq[BoundOperand]
+    /** The AS name: mandatory for computed items; a plain column or an
+      * aggregate call may go without (the lowering then names it).
+      */
+    def name: Option[String]
+    /** The name a derived table or LATERAL body exposes the item under
+      * (None only for an unaliased aggregate call).
+      */
+    def columnName: Option[String] = name
+    /** The item as one row-level operand: a plain column or an
+      * expression (None for aggregate, window and subquery items).
+      */
+    def rowValue: Option[BoundOperand] = None
+  }
   object BoundItem {
-    final case class BICol(c: BoundCol, alias: Option[String] = None) extends BoundItem
+    final case class BICol(c: BoundCol, alias: Option[String] = None) extends BoundItem {
+      def operands = Seq(BoundOperand.BCol(c))
+      def name = alias
+      override def columnName = Some(alias.getOrElse(c.attr.name))
+      override def rowValue = Some(BoundOperand.BCol(c))
+    }
     final case class BIAgg(func: String, arg: Option[BoundOperand],
-        alias: Option[String] = None, distinct: Boolean = false) extends BoundItem
+        alias: Option[String] = None, distinct: Boolean = false) extends BoundItem {
+      def call: BoundOperand = BoundOperand.BAgg(func, arg, distinct)
+      def operands = Seq(call)
+      def name = alias
+    }
     /** Computed projection (arithmetic), named by its mandatory alias. */
-    final case class BIExpr(op: BoundOperand, alias: String) extends BoundItem
+    final case class BIExpr(op: BoundOperand, alias: String) extends BoundItem {
+      def operands = Seq(op)
+      def name = Some(alias)
+      override def rowValue = Some(op)
+    }
     /** Scalar subquery projection item. `pairs` = decorrelated equality
       * keys (outer col, inner col) — empty for the uncorrelated form;
       * `guard` = the one-row contract needs a runtime probe.
       */
     final case class BISub(sub: BoundSelect, alias: String,
         guard: Boolean, pairs: Seq[(BoundCol, BoundCol)],
-        ineq: Option[CorrIneq] = None) extends BoundItem
+        ineq: Option[CorrIneq] = None) extends BoundItem {
+      def operands = Nil
+      def name = Some(alias)
+    }
     /** Window item: ranking function, lag/lead, or windowed aggregate
       * over a partition/order spec, named by its mandatory alias.
       * Row-level — does NOT make the query aggregate-scoped.
       */
     final case class BIWin(func: String, args: Seq[BoundOperand],
         partitionBy: Seq[BoundOperand], orderBy: Seq[(BoundOperand, SortDir)],
-        alias: String, frame: Option[WinFrame] = None) extends BoundItem
+        alias: String, frame: Option[WinFrame] = None) extends BoundItem {
+      def operands = args ++ partitionBy ++ orderBy.map(_._1)
+      def name = Some(alias)
+    }
   }
 
   /** The columns a tree references in its own scope: column operands
@@ -352,53 +394,17 @@ object Analyzer {
     case q: Subquery => q.children.flatMap(columnsOf) ++ q.pairs.map(_._1)
   }
 
+  /** Whether `cols` holds `c` (names compare case-insensitively within
+    * a binding).
+    */
+  private def containsCol(cols: Seq[BoundCol], c: BoundCol): Boolean =
+    cols.exists(g => g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))
+
   /** Every column operand of a tree, aggregate arguments included (scope
     * leak detection in decorrelation).
     */
   private def columnsDeep(n: BoundNode): Seq[BoundCol] =
     n.collect { case BoundOperand.BCol(c) => Seq(c) }
-
-  /** ASOF JOIN ON decomposition. The ON must contain exactly one
-    * inequality conjunct whose sides split cleanly into a step-side
-    * operand (columns of the joined table only) and an outer-side operand
-    * (no step columns); remaining conjuncts join as-is (DuckDB requires
-    * them to be equalities — we accept any step-local predicate, a
-    * superset). Returns (step-side inequality operand, pickLargest):
-    * pickLargest = the match is the greatest step-side value meeting the
-    * bound (`outer >= step` / `outer > step`), else the smallest.
-    */
-  def asofParts(on: BoundExpr, stepB: String)
-      : Either[String, (BoundOperand, Boolean)] = {
-    // Some(true) = operand reads the step table only; Some(false) = the
-    // outer side only; None = mixed or constant (unusable as a side)
-    def side(o: BoundOperand): Option[Boolean] = {
-      val bs = columnsOf(o).map(_.binding).toSet
-      if (bs.isEmpty) None
-      else if (bs == Set(stepB)) Some(true)
-      else if (!bs(stepB)) Some(false)
-      else None
-    }
-    val ineqs = BoundExpr.conjuncts(on).flatMap {
-      case BoundExpr.BCmp(op, l, r) if op == CmpOp.Ge || op == CmpOp.Gt ||
-          op == CmpOp.Le || op == CmpOp.Lt =>
-        (side(l), side(r)) match {
-          case (Some(false), Some(true)) => // outer <op> step
-            Seq(AsofIneq(l, r, pickLargest = op == CmpOp.Ge || op == CmpOp.Gt,
-              strict = op == CmpOp.Gt || op == CmpOp.Lt))
-          case (Some(true), Some(false)) => // step <op> outer
-            Seq(AsofIneq(r, l, pickLargest = op == CmpOp.Le || op == CmpOp.Lt,
-              strict = op == CmpOp.Gt || op == CmpOp.Lt))
-          case _ => Seq.empty
-        }
-      case _ => Seq.empty
-    }
-    ineqs match {
-      case Seq(one) => Right((one.stepOp, one.pickLargest))
-      case Seq() => Left("ASOF JOIN requires one inequality (<, <=, >, >=) " +
-        "between an outer operand and a joined-table operand in its ON")
-      case _ => Left("ASOF JOIN takes exactly one inequality in its ON")
-    }
-  }
 
   /** strftime C tokens → Java datetime patterns (shared with the
     * lowering); any other % token — or a bare letter, which Java would
@@ -426,16 +432,25 @@ object Analyzer {
   final case class AsofIneq(outerOp: BoundOperand, stepOp: BoundOperand,
       pickLargest: Boolean, strict: Boolean)
 
-  /** Decompose an ASOF ON for the union-merge lowering: equality pairs
-    * (outer operand, step operand), the single inequality, step-only
-    * residual conjuncts (prefilter the step side), and whether any
-    * conjunct reads the outer side outside an equality/the inequality
-    * (those need the candidate-join fallback).
+  /** An ASOF ON, decomposed: equality pairs (outer operand, step
+    * operand), the single inequality, step-only residual conjuncts
+    * (prefilter the step side), and whether any conjunct reads the outer
+    * side outside an equality/the inequality (those need the
+    * candidate-join fallback).
     */
   final case class AsofParts(eqPairs: Seq[(BoundOperand, BoundOperand)],
       ineq: AsofIneq, stepOnly: Seq[BoundExpr], fallback: Boolean)
 
-  def asofDecompose(on: BoundExpr, stepB: String): Option[AsofParts] = {
+  /** ASOF JOIN ON decomposition. The ON must contain exactly one
+    * inequality conjunct whose sides split cleanly into a step-side
+    * operand (columns of the joined table only) and an outer-side operand
+    * (no step columns); remaining conjuncts join as-is (DuckDB requires
+    * them to be equalities — we accept any step-local predicate, a
+    * superset).
+    */
+  def asofDecompose(on: BoundExpr, stepB: String): Either[String, AsofParts] = {
+    // Some(true) = operand reads the step table only; Some(false) = the
+    // outer side only; None = mixed or constant (unusable as a side)
     def side(o: BoundOperand): Option[Boolean] = {
       val bs = columnsOf(o).map(_.binding).toSet
       if (bs.isEmpty) None
@@ -473,9 +488,12 @@ object Analyzer {
         }
       case other => residual(other)
     }
-    val ins = ineqs.result()
-    if (ins.length != 1) None
-    else Some(AsofParts(eqs.result(), ins.head, stepOnly.result(), fallback))
+    ineqs.result() match {
+      case Seq(one) => Right(AsofParts(eqs.result(), one, stepOnly.result(), fallback))
+      case Seq() => Left("ASOF JOIN requires one inequality (<, <=, >, >=) " +
+        "between an outer operand and a joined-table operand in its ON")
+      case _ => Left("ASOF JOIN takes exactly one inequality in its ON")
+    }
   }
 
   /** The outer-scope columns of an EXISTS's residual conjuncts: every
@@ -515,6 +533,48 @@ object Analyzer {
     else Right(())
   }
 
+  /** The body contract of a correlated scalar subquery: a group-less
+    * aggregate projecting one aggregate call, or an expression OVER
+    * aggregate calls (0.2 * avg(x), the TPC-H Q17 shape) whose every
+    * column ref sits inside an aggregate argument and whose every
+    * aggregate is a plain call.
+    */
+  private def correlatedScalarBody(bsub: BoundSelect): Either[AnalyzerError, Unit] =
+    if (!bsub.isAggregate || bsub.groupBy.nonEmpty)
+      Left(BadSubquery("a correlated scalar subquery must be a group-less aggregate"))
+    else bsub.projection.head match {
+      case _: BoundItem.BIAgg => Right(())
+      case BoundItem.BIExpr(op, _)
+          if BoundNode.containsAgg(op) && columnsOf(op).isEmpty &&
+            !BoundNode.hasSubquery(op) &&
+            BoundNode.aggNodes(op).forall(_.isInstanceOf[BoundOperand.BAgg]) =>
+        Right(())
+      case _ => Left(BadSubquery(
+        "a correlated scalar subquery must project a single aggregate call"))
+    }
+
+  /** The columns a subquery reads outside its WHERE — projection,
+    * grouping, ordering, HAVING and join-step ON — which decorrelation
+    * requires to be its own. A scalar item contributes its correlation
+    * keys: one pointing past this subquery's scope rejects (depth-2
+    * correlation through a projection item is not decorrelated).
+    */
+  private def nonPredicateCols(sub: BoundSelect): Seq[BoundCol] =
+    sub.projection.flatMap { it =>
+      it.operands.flatMap(columnsDeep) ++ (it match {
+        case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
+          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
+        case _ => Nil
+      })
+    } ++ sub.groupBy.flatMap {
+      case BoundGroupKey.GKCol(c)      => Seq(c)
+      case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
+    } ++ sub.orderBy.flatMap {
+      case (BoundOrderKey.OKOperand(op), _) => columnsDeep(op)
+      case (BoundOrderKey.OKOutput(_), _)   => Nil
+    } ++ sub.having.toSeq.flatMap(columnsOf) ++
+      sub.joinSteps.flatMap(js => columnsOf(js.on))
+
   /** Split a correlated subquery into an uncorrelated core + the
     * equality join pairs (outer col, inner col) pulled from its WHERE —
     * the standard decorrelation for the semi/anti-join lowering. Only
@@ -545,28 +605,7 @@ object Analyzer {
     inner ++= sub.tables.map(_.binding)
     inner ++= sub.joinSteps.map(_.table.binding)
     def isOuter(c: BoundCol) = !inner(c.binding)
-    val nonPredCols: Seq[BoundCol] =
-      sub.projection.flatMap {
-        case BoundItem.BICol(c, _)      => Seq(c)
-        case BoundItem.BIExpr(op, _)    => columnsDeep(op)
-        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(columnsDeep)
-        case BoundItem.BIWin(_, args, parts, ord, _, _) =>
-          (args ++ parts).flatMap(columnsDeep) ++
-            ord.flatMap(o => columnsDeep(o._1))
-        // a scalar item's own correlation keys: if any points past THIS
-        // subquery's scope, the outer-col check below rejects (depth-2
-        // correlation through a projection item is not decorrelated)
-        case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
-          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
-      } ++ sub.groupBy.flatMap {
-        case BoundGroupKey.GKCol(c)      => Seq(c)
-        case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
-      } ++ sub.orderBy.flatMap {
-        case (BoundOrderKey.OKOperand(op), _) => columnsDeep(op)
-        case (BoundOrderKey.OKOutput(_), _)   => Nil
-      } ++ sub.having.toSeq.flatMap(columnsOf) ++
-        sub.joinSteps.flatMap(js => columnsOf(js.on))
-    nonPredCols.find(isOuter) match {
+    nonPredicateCols(sub).find(isOuter) match {
       case Some(c) => Left(BadSubquery(
         s"correlated reference ${c.render} is only supported as an equality in the subquery's WHERE"))
       case None =>
@@ -634,13 +673,9 @@ object Analyzer {
                 if ipairs.exists(p => isOuter(p._1)) &&
                   columnsOf(o).forall(c => !isOuter(c)) =>
               // x IN (SELECT v …) under existence ≡ ∃ row with x = v
-              val inVal = isub.projection.head match {
-                case BoundItem.BICol(ic, _)   => BoundOperand.BCol(ic)
-                case BoundItem.BIExpr(op2, _) => op2
-                case _: BoundItem.BIAgg | _: BoundItem.BIWin | _: BoundItem.BISub =>
-                  return Left(BadSubquery(
-                    "a nested IN subquery correlated to a deeper scope must not aggregate or window"))
-              }
+              val inVal = isub.projection.head.rowValue.getOrElse(
+                return Left(BadSubquery(
+                  "a nested IN subquery correlated to a deeper scope must not aggregate or window")))
               flatten(isub, ipairs,
                 Some(BoundExpr.BCmp(CmpOp.Eq, o, inVal))).foreach(e => return Left(e))
             case other =>
@@ -734,16 +769,24 @@ object Analyzer {
         * from inline OVER calls in the predicate.
         */
       qualify: Option[BoundExpr] = None,
-      qualifyWins: Seq[BoundItem] = Nil,
+      qualifyWins: Seq[BoundItem.BIWin] = Nil,
       /** DISTINCT ON keys (first row per key tuple under the ORDER BY,
         * whose leading keys the analyzer verified match these).
         */
       distinctOn: Seq[BoundOperand] = Nil) extends BoundQuery {
-    def isAggregate: Boolean = groupBy.nonEmpty || projection.exists {
-      case _: BoundItem.BIAgg           => true
-      case BoundItem.BIExpr(op, _)      => BoundNode.containsAgg(op)
-      case _                            => false
-    }
+    def isAggregate: Boolean = BoundSelect.aggregating(groupBy, projection)
+  }
+  object BoundSelect {
+    /** Whether a SELECT with these GROUP BY keys and items aggregates: a
+      * key, an aggregate item or an expression over aggregate calls does
+      * (window items stay row-level, whatever they order by).
+      */
+    def aggregating(groupBy: Seq[BoundGroupKey], projection: Seq[BoundItem]): Boolean =
+      groupBy.nonEmpty || projection.exists {
+        case _: BoundItem.BIAgg      => true
+        case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
+        case _                       => false
+      }
   }
   /** Set-op chain (union/union_all/intersect/except per step; INTERSECT
     * binds tighter, UNION/EXCEPT associate left). ORDER BY keys are
@@ -824,25 +867,7 @@ object Analyzer {
     inner ++= sub.tables.map(_.binding)
     inner ++= sub.joinSteps.map(_.table.binding)
     def isOuter(c: BoundCol) = !inner(c.binding)
-    val nonPredCols: Seq[BoundCol] =
-      sub.projection.flatMap {
-        case BoundItem.BICol(c, _)         => Seq(c)
-        case BoundItem.BIExpr(op, _)       => columnsDeep(op)
-        case BoundItem.BIAgg(_, arg, _, _) => arg.toSeq.flatMap(columnsDeep)
-        case BoundItem.BIWin(_, args, parts, ord, _, _) =>
-          (args ++ parts).flatMap(columnsDeep) ++
-            ord.flatMap(o => columnsDeep(o._1))
-        case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
-          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
-      } ++ sub.groupBy.flatMap {
-        case BoundGroupKey.GKCol(c)      => Seq(c)
-        case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
-      } ++ sub.orderBy.flatMap {
-        case (BoundOrderKey.OKOperand(op), _) => columnsDeep(op)
-        case (BoundOrderKey.OKOutput(_), _)   => Nil
-      } ++ sub.having.toSeq.flatMap(columnsOf) ++
-        sub.joinSteps.flatMap(js => columnsOf(js.on))
-    nonPredCols.find(isOuter) match {
+    nonPredicateCols(sub).find(isOuter) match {
       case Some(c) => Left(BadSubquery(
         s"a LATERAL reference (${c.render}) is only supported as an equality in the body's WHERE"))
       case None =>
@@ -890,10 +915,7 @@ object Analyzer {
           Left(BadSubquery("a correlated LATERAL with LIMIT requires ORDER BY (top-N per key)"))
         else if (sub.orderBy.exists(!_._1.isInstanceOf[BoundOrderKey.OKOperand]))
           Left(BadSubquery("a correlated LATERAL's ORDER BY must use plain operands"))
-        else if (sub.projection.exists {
-          case _: BoundItem.BICol | _: BoundItem.BIExpr => false
-          case _ => true
-        })
+        else if (sub.projection.exists(_.rowValue.isEmpty))
           Left(BadSubquery(
             "a correlated LATERAL projects plain columns and expressions only"))
         else
@@ -1294,6 +1316,13 @@ object Analyzer {
   private def aggType(f: String, args: Seq[BoundOperand]): SqlType =
     Aggregates(f).result(args, operandType)
 
+  /** Window output types by lower-cased alias: the output references a
+    * QUALIFY predicate or a projection expression may name.
+    */
+  private def winTypes(items: Seq[BoundItem]): Map[String, SqlType] =
+    items.collect { case w: BoundItem.BIWin =>
+      w.alias.toLowerCase -> aggType(w.func, w.args) }.toMap
+
   /** The output attributes of a bound subquery used as a derived table.
     * Names must be explicit and unique: a plain column keeps its name,
     * everything else needs its AS alias — the same names the lowering
@@ -1314,38 +1343,31 @@ object Analyzer {
   private def derivedAttributes(b: BoundSelect): Either[AnalyzerError, Seq[AttributeDesc]] = {
     val attrs = Vector.newBuilder[AttributeDesc]
     val seen = scala.collection.mutable.Set.empty[String]
-    for (it <- b.projection) {
-      val named: Either[AnalyzerError, (String, SqlType)] = it match {
-        case BoundItem.BICol(c, a)    => Right((a.getOrElse(c.attr.name), c.attr.sqlType))
-        case BoundItem.BIExpr(op, a)  => Right((a, operandType(op)))
-        case BoundItem.BIAgg(f, arg, Some(a), _) => Right((a, aggType(f, arg.toSeq)))
-        case BoundItem.BIAgg(f, _, None, _) =>
-          Left(BadSubquery(s"derived-table column $f(…) needs an AS name"))
-        case BoundItem.BIWin(f, args, _, _, a, _) =>
-          Right((a, aggType(f, args)))
-        case BoundItem.BISub(sub, a, _, _, _) => Right((a, scalarOutputType(sub)))
-      }
-      named match {
-        case Left(e) => return Left(e)
-        case Right((n, t)) =>
-          if (!seen.add(n.toLowerCase))
-            return Left(BadSubquery(s"duplicate derived-table column name '$n'"))
-          attrs += AttributeDesc(n, t)
-      }
+    for (it <- b.projection) it.columnName match {
+      case Some(n) =>
+        if (!seen.add(n.toLowerCase))
+          return Left(BadSubquery(s"duplicate derived-table column name '$n'"))
+        attrs += AttributeDesc(n, itemType(it))
+      case None => // only an aggregate call goes unnamed
+        val f = it.operands.collectFirst { case BoundOperand.BAgg(f, _, _) => f }
+        return Left(BadSubquery(s"derived-table column ${f.mkString}(…) needs an AS name"))
     }
     Right(attrs.result())
   }
 
-  /** The type of a one-column subquery's output (scalar subquery items
-    * and derived typing).
-    */
-  private def scalarOutputType(sub: BoundSelect): SqlType = sub.projection.head match {
+  /** The output type of a SELECT item. */
+  private def itemType(it: BoundItem): SqlType = it match {
     case BoundItem.BICol(c, _)         => c.attr.sqlType
     case BoundItem.BIExpr(op, _)       => operandType(op)
     case BoundItem.BIAgg(f, arg, _, _) => aggType(f, arg.toSeq)
     case BoundItem.BIWin(f, args, _, _, _, _) => aggType(f, args)
     case BoundItem.BISub(inner, _, _, _, _) => scalarOutputType(inner)
   }
+
+  /** The type of a one-column subquery's output (scalar subquery items
+    * and derived typing).
+    */
+  private def scalarOutputType(sub: BoundSelect): SqlType = itemType(sub.projection.head)
 
   /** Every subquery in a tree, CASE conditions included — a miss here
     * would skip the pre-append materialization for a self-referencing
@@ -1361,8 +1383,7 @@ object Analyzer {
     (s.predicate.toSeq ++ s.having.toSeq).flatMap(subqueriesOf) ++
       s.projection.flatMap {
         case BoundItem.BISub(sub, _, _, _, _) => Seq(sub)
-        case BoundItem.BIExpr(op, _)       => subqueriesOf(op)
-        case _                             => Nil
+        case it => it.rowValue.toSeq.flatMap(subqueriesOf)
       }
 
   /** Self-references of a recursive CTE inside its step: (references in
@@ -1556,11 +1577,8 @@ object Analyzer {
               .flatMap { sitems =>
                 analyzeSelect(SelectTree(Some(sitems),
                   Seq(FTable(TableRef(tname, None))), None), cat).flatMap { bs =>
-                  val bad = bs.isAggregate || bs.projection.exists {
-                    case _: BoundItem.BIWin | _: BoundItem.BISub => true
-                    case BoundItem.BIExpr(op, _) => BoundNode.hasSubquery(op)
-                    case _ => false
-                  }
+                  val bad = bs.isAggregate ||
+                    bs.projection.exists(_.rowValue.forall(BoundNode.hasSubquery))
                   if (bad) Left(BadFunction(
                     "RETURNING items are row-level: no aggregates, " +
                       "windows or subqueries"))
@@ -1817,11 +1835,11 @@ object Analyzer {
         Seq(FTable(TableRef(desc.name, None))), None),
       new Catalog { def resolve(t: String) =
         if (t.equalsIgnoreCase(desc.name)) Some(desc) else None }
-    ).flatMap(_.projection.head match {
-      case BoundItem.BIExpr(b, _) if BoundNode.containsAgg(b) =>
+    ).flatMap(_.projection.head.rowValue match {
+      case Some(b) if BoundNode.containsAgg(b) =>
         Left(BadAggregate("aggregates are not valid in UPDATE SET"))
-      case BoundItem.BIExpr(b, _) => Right(b)
-      case other => Left(BadFunction(s"unexpected SET value $other"))
+      case Some(b) => Right(b)
+      case None    => Left(BadFunction("unexpected SET value"))
     })
 
   /** INSERT … ON CONFLICT: desugars onto the MERGE machinery — the
@@ -2873,23 +2891,7 @@ object Analyzer {
           // a correlated operand takes the SELECT-item scalar contract:
           // a group-less aggregate (one row per key by construction),
           // lowered as ONE per-key aggregate left-joined on its keys
-          _ <-
-            if (pairs.isEmpty) Right(())
-            else if (!bsub.isAggregate || bsub.groupBy.nonEmpty)
-              Left(BadSubquery(
-                "a correlated scalar subquery must be a group-less aggregate"))
-            else bsub.projection.head match {
-              case _: BoundItem.BIAgg => Right(())
-              case BoundItem.BIExpr(op, _)
-                  if BoundNode.containsAgg(op) &&
-                    columnsOf(op).isEmpty &&
-                    !BoundNode.hasSubquery(op) &&
-                    BoundNode.aggNodes(op)
-                      .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
-                Right(())
-              case _ => Left(BadSubquery(
-                "a correlated scalar subquery must project a single aggregate call"))
-            }
+          _ <- if (pairs.isEmpty) Right(()) else correlatedScalarBody(bsub)
           staticOne = pairs.nonEmpty ||
             (bsub.isAggregate && bsub.groupBy.isEmpty) ||
             bsub.limit.exists(_ <= 1L)
@@ -3405,24 +3407,7 @@ object Analyzer {
               // In HAVING scope the decorrelation keys must additionally be
               // GROUP BY keys of the enclosing query — validated after the
               // group keys are known (post-binding check in analyzeSelect).
-              else if (!bsub.isAggregate || bsub.groupBy.nonEmpty)
-                Left(BadSubquery(
-                  "a correlated scalar subquery must be a group-less aggregate"))
-              else bsub.projection.head match {
-                case _: BoundItem.BIAgg => Right(())
-                // an expression OVER aggregate calls (0.2 * avg(x), the
-                // TPC-H Q17 shape): every column ref sits inside an
-                // aggregate argument, every aggregate is a plain call
-                case BoundItem.BIExpr(op, _)
-                    if BoundNode.containsAgg(op) &&
-                      columnsOf(op).isEmpty &&
-                      !BoundNode.hasSubquery(op) &&
-                      BoundNode.aggNodes(op)
-                        .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
-                  Right(())
-                case _ => Left(BadSubquery(
-                  "a correlated scalar subquery must project a single aggregate call"))
-              }
+              else correlatedScalarBody(bsub)
             // one row is a STATIC fact for a group-less aggregate or a
             // LIMIT ≤ 1 subquery; anything else carries a runtime guard
             staticOne = pairs.nonEmpty ||
@@ -3487,6 +3472,121 @@ object Analyzer {
         }
     }
 
+    def bindWin(w: SelectItem.SWin): Either[AnalyzerError, BoundItem.BIWin] = {
+      val SelectItem.SWin(f, args0, parts, ord, a, frame, _) = w
+      val d = Aggregates(f)
+      val noFrame = d.kind == Aggregates.Kind.Ranking ||
+        d.kind == Aggregates.Kind.Shift
+      // DISTINCT rides as a sentinel trailing argument (count/sum/
+      // avg(DISTINCT x) OVER): strip before arity checks, re-append
+      // after binding — the lowering folds a per-frame collect_set
+      val distinctW = args0.lastOption.contains(
+        Operand.Literal(Lit.LitString(Ast.DistinctSentinel)))
+      val args1 = if (distinctW) args0.dropRight(1) else args0
+      // IGNORE NULLS rides as a sentinel trailing argument; strip it
+      // before arity checks and re-append after binding
+      val ignoreNulls = args1.lastOption.contains(
+        Operand.Literal(Lit.LitString(IgnoreNullsSentinel)))
+      val args = if (ignoreNulls) args1.dropRight(1) else args1
+      val argErr = d.winArgs(args)
+      for {
+        _ <-
+          if (ignoreNulls && d.kind != Aggregates.Kind.Shift &&
+              d.kind != Aggregates.Kind.Positional)
+            Left(BadFunction(s"$f does not take IGNORE NULLS"))
+          else if (d.kind == Aggregates.Kind.GroupOnly)
+            Left(BadFunction(
+              s"$f is not supported in window position (group scope only)"))
+          // ranking, shifts and the windowed collects need an order (an
+          // unordered distributed collect would be nondeterministic)
+          else if ((noFrame || d.ordered) && ord.isEmpty)
+            Left(BadFunction(s"$f requires ORDER BY in its OVER clause"))
+          else if (d.unordered && (ord.nonEmpty || frame.isDefined))
+            Left(BadFunction(
+              s"$f takes neither ORDER BY nor a frame in its OVER clause"))
+          else if (argErr.isDefined) Left(BadFunction(argErr.get))
+          // an explicit frame needs an order, and only makes sense
+          // for aggregates and first/last_value (SQL ignores it for
+          // ranking and shift functions — reject rather than ignore)
+          else if (frame.isDefined && noFrame)
+            Left(BadFunction(s"$f does not take a window frame"))
+          else if (frame.isDefined && ord.isEmpty)
+            Left(BadFunction("a window frame requires ORDER BY in the OVER clause"))
+          else if (frame.exists(fr => fr.lo > fr.hi))
+            Left(BadFunction("window frame lower bound exceeds upper bound"))
+          // a RANGE frame measures VALUE distance along the sort key, so
+          // exactly one key (Spark's rangeBetween has the same rule)
+          else if (frame.exists(_.range) && ord.length != 1)
+            Left(BadFunction("a RANGE frame requires exactly one ORDER BY key"))
+          else Right(())
+        // aggregate calls ARE allowed in window args/ordering — over an
+        // aggregated query the window evaluates post-aggregation
+        // (rank() OVER (ORDER BY count(*) DESC)); a non-aggregate query
+        // rejects them in the post-binding scope check
+        bargs <- args.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
+          Right(Vector.empty)) { (acc, x) =>
+          acc.flatMap(v => bindOp(x, allowAgg = true).map(v :+ _))
+        }
+        bparts <- parts.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
+          Right(Vector.empty)) { (acc, r) =>
+          acc.flatMap(v => bindOp(r, allowAgg = true).map(v :+ _)) }
+        bord <- ord.foldLeft[Either[AnalyzerError, Vector[(BoundOperand, SortDir)]]](
+          Right(Vector.empty)) { case (acc, (o, dir)) =>
+          acc.flatMap(v => bindOp(o, allowAgg = true).map(b => v :+ (b -> dir)))
+        }
+        // frame exclusion subtracts the excluded contribution columnar
+        // — only decomposable aggregates qualify; GROUP/TIES need a
+        // RANGE frame (under ROWS a peer group can straddle the frame
+        // boundary) and an ORDER BY (peers are order-key equals)
+        _ <-
+          if (frame.exists(_.exclude != "none") && !d.decomposable)
+            Left(BadFunction(
+              s"EXCLUDE supports sum/count/avg/min/max (got $f)"))
+          else if (frame.exists(fr =>
+              (fr.exclude == "group" || fr.exclude == "ties") &&
+                (!fr.range || ord.isEmpty)))
+            Left(BadFunction(
+              "EXCLUDE GROUP/TIES requires a RANGE frame with ORDER BY " +
+                "(peers can straddle a ROWS boundary)"))
+          // min/max don't subtract — they decompose into prefix/suffix
+          // sub-frames (least/greatest of min over [lo,-1] and [1,hi]).
+          // On a RANGE frame that ±1 boundary split is exact only when
+          // the order key is integral (a DOUBLE key would silently
+          // drop values in (v-1, v)), so non-integer keys reject loudly.
+          else if (frame.exists(fr => fr.range && fr.temporal) &&
+              !(bord.length == 1 && (operandType(bord.head._1) match {
+                case SqlType.SqlTimestamp | SqlType.SqlDate => true
+                case _ => false
+              })))
+            Left(BadFunction(
+              "INTERVAL RANGE bounds require a single date/timestamp " +
+                "ORDER BY key"))
+          else if (d.kind == Aggregates.Kind.Extremum &&
+              frame.exists(fr => fr.exclude != "none" && fr.range) &&
+              !(ord.length == 1 && (bord.headOption.map(b =>
+                operandType(b._1)) match {
+                case Some(SqlType.SqlInt | SqlType.SqlBigInt |
+                          SqlType.SqlSmallInt) => true
+                case _ => false
+              })))
+            Left(BadFunction(
+              s"$f EXCLUDE over a RANGE frame requires a single " +
+                "integer-typed ORDER BY key (the prefix/suffix frame " +
+                "split is exact only on integral values)"))
+          else Right(())
+      } yield {
+        val withIn =
+          if (ignoreNulls) bargs :+ (BoundOperand.BLit(
+            Lit.LitString(IgnoreNullsSentinel)): BoundOperand)
+          else bargs
+        BoundItem.BIWin(f,
+          if (distinctW) withIn :+ (BoundOperand.BLit(
+            Lit.LitString(Ast.DistinctSentinel)): BoundOperand)
+          else withIn,
+          bparts, bord, a, frame)
+      }
+    }
+
     def bindItem(it: SelectItem): Either[AnalyzerError, BoundItem] = it match {
       case _: SelectItem.SStar =>
         sys.error("unreachable: star items expand before binding")
@@ -3528,118 +3628,7 @@ object Analyzer {
         // CASE-condition subqueries are allowed here and re-checked
         // post-binding (rejected in aggregate scope)
         bindOp(op, allowAgg = true, allowSub = true).map(BoundItem.BIExpr(_, a))
-      case SelectItem.SWin(f, args0, parts, ord, a, frame, _) =>
-        val d = Aggregates(f)
-        val noFrame = d.kind == Aggregates.Kind.Ranking ||
-          d.kind == Aggregates.Kind.Shift
-        // DISTINCT rides as a sentinel trailing argument (count/sum/
-        // avg(DISTINCT x) OVER): strip before arity checks, re-append
-        // after binding — the lowering folds a per-frame collect_set
-        val distinctW = args0.lastOption.contains(
-          Operand.Literal(Lit.LitString(Ast.DistinctSentinel)))
-        val args1 = if (distinctW) args0.dropRight(1) else args0
-        // IGNORE NULLS rides as a sentinel trailing argument; strip it
-        // before arity checks and re-append after binding
-        val ignoreNulls = args1.lastOption.contains(
-          Operand.Literal(Lit.LitString(IgnoreNullsSentinel)))
-        val args = if (ignoreNulls) args1.dropRight(1) else args1
-        val argErr = d.winArgs(args)
-        for {
-          _ <-
-            if (ignoreNulls && d.kind != Aggregates.Kind.Shift &&
-                d.kind != Aggregates.Kind.Positional)
-              Left(BadFunction(s"$f does not take IGNORE NULLS"))
-            else if (d.kind == Aggregates.Kind.GroupOnly)
-              Left(BadFunction(
-                s"$f is not supported in window position (group scope only)"))
-            // ranking, shifts and the windowed collects need an order (an
-            // unordered distributed collect would be nondeterministic)
-            else if ((noFrame || d.ordered) && ord.isEmpty)
-              Left(BadFunction(s"$f requires ORDER BY in its OVER clause"))
-            else if (d.unordered && (ord.nonEmpty || frame.isDefined))
-              Left(BadFunction(
-                s"$f takes neither ORDER BY nor a frame in its OVER clause"))
-            else if (argErr.isDefined) Left(BadFunction(argErr.get))
-            // an explicit frame needs an order, and only makes sense
-            // for aggregates and first/last_value (SQL ignores it for
-            // ranking and shift functions — reject rather than ignore)
-            else if (frame.isDefined && noFrame)
-              Left(BadFunction(s"$f does not take a window frame"))
-            else if (frame.isDefined && ord.isEmpty)
-              Left(BadFunction("a window frame requires ORDER BY in the OVER clause"))
-            else if (frame.exists(fr => fr.lo > fr.hi))
-              Left(BadFunction("window frame lower bound exceeds upper bound"))
-            // a RANGE frame measures VALUE distance along the sort key, so
-            // exactly one key (Spark's rangeBetween has the same rule)
-            else if (frame.exists(_.range) && ord.length != 1)
-              Left(BadFunction("a RANGE frame requires exactly one ORDER BY key"))
-            else Right(())
-          // aggregate calls ARE allowed in window args/ordering — over an
-          // aggregated query the window evaluates post-aggregation
-          // (rank() OVER (ORDER BY count(*) DESC)); a non-aggregate query
-          // rejects them in the post-binding scope check
-          bargs <- args.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
-            Right(Vector.empty)) { (acc, x) =>
-            acc.flatMap(v => bindOp(x, allowAgg = true).map(v :+ _))
-          }
-          bparts <- parts.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
-            Right(Vector.empty)) { (acc, r) =>
-            acc.flatMap(v => bindOp(r, allowAgg = true).map(v :+ _)) }
-          bord <- ord.foldLeft[Either[AnalyzerError, Vector[(BoundOperand, SortDir)]]](
-            Right(Vector.empty)) { case (acc, (o, dir)) =>
-            acc.flatMap(v => bindOp(o, allowAgg = true).map(b => v :+ (b -> dir)))
-          }
-          // frame exclusion subtracts the excluded contribution columnar
-          // — only decomposable aggregates qualify; GROUP/TIES need a
-          // RANGE frame (under ROWS a peer group can straddle the frame
-          // boundary) and an ORDER BY (peers are order-key equals)
-          _ <-
-            if (frame.exists(_.exclude != "none") && !d.decomposable)
-              Left(BadFunction(
-                s"EXCLUDE supports sum/count/avg/min/max (got $f)"))
-            else if (frame.exists(fr =>
-                (fr.exclude == "group" || fr.exclude == "ties") &&
-                  (!fr.range || ord.isEmpty)))
-              Left(BadFunction(
-                "EXCLUDE GROUP/TIES requires a RANGE frame with ORDER BY " +
-                  "(peers can straddle a ROWS boundary)"))
-            // min/max don't subtract — they decompose into prefix/suffix
-            // sub-frames (least/greatest of min over [lo,-1] and [1,hi]).
-            // On a RANGE frame that ±1 boundary split is exact only when
-            // the order key is integral (a DOUBLE key would silently
-            // drop values in (v-1, v)), so non-integer keys reject loudly.
-            else if (frame.exists(fr => fr.range && fr.temporal) &&
-                !(bord.length == 1 && (operandType(bord.head._1) match {
-                  case SqlType.SqlTimestamp | SqlType.SqlDate => true
-                  case _ => false
-                })))
-              Left(BadFunction(
-                "INTERVAL RANGE bounds require a single date/timestamp " +
-                  "ORDER BY key"))
-            else if (d.kind == Aggregates.Kind.Extremum &&
-                frame.exists(fr => fr.exclude != "none" && fr.range) &&
-                !(ord.length == 1 && (bord.headOption.map(b =>
-                  operandType(b._1)) match {
-                  case Some(SqlType.SqlInt | SqlType.SqlBigInt |
-                            SqlType.SqlSmallInt) => true
-                  case _ => false
-                })))
-              Left(BadFunction(
-                s"$f EXCLUDE over a RANGE frame requires a single " +
-                  "integer-typed ORDER BY key (the prefix/suffix frame " +
-                  "split is exact only on integral values)"))
-            else Right(())
-        } yield {
-          val withIn =
-            if (ignoreNulls) bargs :+ (BoundOperand.BLit(
-              Lit.LitString(IgnoreNullsSentinel)): BoundOperand)
-            else bargs
-          BoundItem.BIWin(f,
-            if (distinctW) withIn :+ (BoundOperand.BLit(
-              Lit.LitString(Ast.DistinctSentinel)): BoundOperand)
-            else withIn,
-            bparts, bord, a, frame)
-        }
+      case w: SelectItem.SWin => bindWin(w)
       case SelectItem.SSub(subTree, a) =>
         // same contract as a WHERE-scope scalar subquery: one column; a
         // correlated form must be a group-less aggregate (one row per key
@@ -3697,38 +3686,15 @@ object Analyzer {
           }
           _ <-
             if (pairs.isEmpty && ineqOpt.isEmpty) Right(())
-            else if (!bsub.isAggregate || bsub.groupBy.nonEmpty)
-              Left(BadSubquery(
-                "a correlated scalar subquery must be a group-less aggregate"))
-            else bsub.projection.head match {
-              case _: BoundItem.BIAgg => Right(())
-              // an expression OVER aggregate calls (0.2 * avg(x), the
-              // TPC-H Q17 shape): every column ref sits inside an
-              // aggregate argument, every aggregate is a plain call
-              case BoundItem.BIExpr(op, _)
-                  if BoundNode.containsAgg(op) &&
-                    columnsOf(op).isEmpty &&
-                    !BoundNode.hasSubquery(op) &&
-                    BoundNode.aggNodes(op)
-                      .forall(_.isInstanceOf[BoundOperand.BAgg]) =>
-                Right(())
-              case _ => Left(BadSubquery(
-                "a correlated scalar subquery must project a single aggregate call"))
-            }
+            else correlatedScalarBody(bsub)
           // the running-window lowering decomposes the aggregate over a
           // prefix frame — only the natively windowable, non-distinct
           // aggregates qualify
           _ <- ineqOpt match {
             case None => Right(())
             case Some(_) =>
-              val nodes: Seq[(String, Boolean)] = bsub.projection.head match {
-                case BoundItem.BIAgg(f, _, _, dist) => Seq((f, dist))
-                case BoundItem.BIExpr(op, _) =>
-                  BoundNode.aggNodes(op).collect {
-                    case BoundOperand.BAgg(f, _, dist) => (f, dist)
-                  }
-                case _ => Nil
-              }
+              val nodes = bsub.projection.head.operands.flatMap(BoundNode.aggNodes)
+                .collect { case BoundOperand.BAgg(f, _, dist) => (f, dist) }
               nodes.find { case (f, dist) =>
                 dist || !Aggregates(f).decomposable
               } match {
@@ -3748,14 +3714,9 @@ object Analyzer {
       // hidden inline-OVER window items (projection operands + QUALIFY)
       // bind FIRST so their aliases resolve as output references while
       // the projection binds
-      qwins <- s.qualifyWins.foldLeft[Either[AnalyzerError, Vector[BoundItem]]](
-        Right(Vector.empty)) { (acc, w) => acc.flatMap(v => bindItem(w).map(v :+ _)) }
-      _ <- Right {
-        hiddenWinScope = qwins.collect {
-          case BoundItem.BIWin(f, wargs, _, _, a, _) =>
-            a.toLowerCase -> aggType(f, wargs)
-        }.toMap
-      }
+      qwins <- s.qualifyWins.foldLeft[Either[AnalyzerError, Vector[BoundItem.BIWin]]](
+        Right(Vector.empty)) { (acc, w) => acc.flatMap(v => bindWin(w).map(v :+ _)) }
+      _ <- Right { hiddenWinScope = winTypes(qwins) }
       proj <- projItems.foldLeft[Either[AnalyzerError, Vector[BoundItem]]](Right(Vector.empty)) {
         (acc, r) => acc.flatMap(v => bindItem(r).map(v :+ _))
       }
@@ -3773,15 +3734,10 @@ object Analyzer {
       }
       // projection-scope subqueries (CASE conditions etc.) never take
       // residual correlation — no semi/anti join exists there
-      _ <- proj.collectFirst {
-        case BoundItem.BIExpr(op, _) if hasResidualExists(op) => ()
-        case BoundItem.BIAgg(_, Some(a), _, _) if hasResidualExists(a) => ()
-        case BoundItem.BIWin(_, args, _, _, _, _)
-            if args.exists(hasResidualExists) => ()
-      } match {
-        case Some(_) => Left(residualPositionError)
-        case None    => Right(())
-      }
+      _ <-
+        if ((proj ++ qwins).exists(_.operands.exists(hasResidualExists)))
+          Left(residualPositionError)
+        else Right(())
       // LATERAL key equalities travel on their own field (join conditions
       // of the leading FROM group, not WHERE conjuncts)
       pred = pred0
@@ -3811,7 +3767,7 @@ object Analyzer {
                 case None =>
                   val asofOk: Either[AnalyzerError, Unit] =
                     if (js.kind.startsWith("asof"))
-                      asofParts(be, bt.binding) match {
+                      asofDecompose(be, bt.binding) match {
                         case Left(m)  => Left(BadFunction(m))
                         case Right(_) => Right(())
                       }
@@ -3877,22 +3833,20 @@ object Analyzer {
         }
       }
       groupCols = group.collect { case BoundGroupKey.GKCol(c) => c }
+      grouped = (c: BoundCol) => containsCol(groupCols, c)
       groupAliases = group.collect { case BoundGroupKey.GKExpr(_, a) => a.toLowerCase }.toSet
+      groupExprOps = group.collect { case BoundGroupKey.GKExpr(op, _) => op }.toSet
+      isAgg = BoundSelect.aggregating(group, proj)
       // aggregate-scope validation: bare columns must be grouped; a
       // computed item whose alias IS a group key needs no column check
       // (it is the key)
       _ <- {
-        val isAgg = group.nonEmpty || proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }
         if (!isAgg) {
           // outside aggregate scope a window operand must not aggregate
           // (hidden inline-OVER windows included)
           (proj ++ qwins).collectFirst {
-            case BoundItem.BIWin(f, args, _, ord, _, _)
-                if (args ++ ord.map(_._1)).exists(BoundNode.containsAgg) => f
+            case w: BoundItem.BIWin if w.operands.exists(BoundNode.containsAgg) =>
+              w.func
           } match {
             case Some(f) => Left(BadAggregate(
               s"window $f over an aggregate requires GROUP BY"))
@@ -3919,22 +3873,15 @@ object Analyzer {
         // columnsOf/columnsOf below, so the grouped-columns check
         // enforces that every outer reference is a GROUP BY key
         else {
-          def grouped(c: BoundCol) = groupCols.exists(g =>
-            g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))
-          val groupExprOps =
-            group.collect { case BoundGroupKey.GKExpr(op, _) => op }.toSet
           // a window operand that IS a group expression resolves to the
           // grouped key; otherwise its bare columns must be grouped
           // (aggregate arguments are exempt — columnsOf skips them)
           def winOpCols(op: BoundOperand): Seq[BoundCol] =
             if (groupExprOps.contains(op)) Nil else columnsOf(op)
           (proj ++ qwins).flatMap {
-            case BoundItem.BICol(c, _)   => Seq(c)
-            case BoundItem.BIExpr(op, a) if !groupAliases(a.toLowerCase) =>
-              columnsOf(op)
-            case BoundItem.BIWin(_, args, parts, ord, _, _) =>
-              (parts ++ args ++ ord.map(_._1)).flatMap(winOpCols)
-            case _                       => Nil
+            case w: BoundItem.BIWin => w.operands.flatMap(winOpCols)
+            case BoundItem.BIExpr(_, a) if groupAliases(a.toLowerCase) => Nil
+            case it => it.operands.flatMap(columnsOf)
           }.find(!grouped(_)) match {
             case Some(c) => Left(NotInGroupBy(c.render))
             case None    => Right(())
@@ -3967,12 +3914,7 @@ object Analyzer {
           }
         }
       }
-      _ <- {
-        val isAgg = group.nonEmpty || proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }
+      _ <-
         if (!isAgg)
           // a non-aggregate query cannot sort by an aggregate call
           order.collectFirst {
@@ -3982,32 +3924,21 @@ object Analyzer {
               "ORDER BY aggregate requires GROUP BY or an aggregate projection"))
             case None => Right(())
           }
-        else {
+        else
           // a sort operand that IS a group expression (structurally) sorts
           // by the grouped key column; only other operands must be grouped
-          val groupExprOps =
-            group.collect { case BoundGroupKey.GKExpr(op, _) => op }.toSet
-          order.collectFirst {
-            case (BoundOrderKey.OKOperand(op), _)
-                if !groupExprOps.contains(op) &&
-                  columnsOf(op).exists(c => !groupCols.exists(g =>
-                    g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))) =>
-              columnsOf(op).find(c => !groupCols.exists(g =>
-                g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))).get
-          } match {
+          order.flatMap {
+            case (BoundOrderKey.OKOperand(op), _) if !groupExprOps.contains(op) =>
+              columnsOf(op).find(!grouped(_))
+            case _ => None
+          }.headOption match {
             case Some(c) => Left(NotInGroupBy(c.render))
             case None    => Right(())
           }
-        }
-      }
       having <- s.having match {
         case None => Right(None)
         case Some(e0) =>
-          if (group.isEmpty && !proj.exists {
-            case _: BoundItem.BIAgg      => true
-            case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-            case _                       => false
-          })
+          if (!isAgg)
             Left(BadAggregate("HAVING requires GROUP BY or aggregates"))
           else {
             // unqualified HAVING names that are no table column but match
@@ -4047,8 +3978,7 @@ object Analyzer {
             case BoundOperand.BCol(c) => Seq(c)
             case _: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg => Nil
           }
-          bare.find(c => !groupCols.exists(g =>
-            g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))) match {
+          bare.find(!grouped(_)) match {
             case Some(c) => Left(NotInGroupBy(c.render))
             case None    => Right(())
           }
@@ -4065,9 +3995,7 @@ object Analyzer {
             case q: Subquery => q.children.flatMap(keys) ++ q.pairs.map(_._1)
           }
           keys(h).find(c => !(
-            (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) ||
-              groupCols.exists(g =>
-                g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name))
+            (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) || grouped(c)
           )) match {
             case Some(c) => Left(BadSubquery(
               s"a correlated HAVING subquery may only reference GROUP BY keys (got ${c.render})"))
@@ -4082,11 +4010,9 @@ object Analyzer {
       _ <-
         if (!s.distinct || s.distinctOn.nonEmpty) Right(())
         else order.collectFirst {
-          case (BoundOrderKey.OKOperand(BoundOperand.BCol(c)), _) if !proj.exists {
-            case BoundItem.BICol(pc, _) =>
-              pc.binding == c.binding && pc.attr.name.equalsIgnoreCase(c.attr.name)
-            case _ => false
-          } => c.render
+          case (BoundOrderKey.OKOperand(BoundOperand.BCol(c)), _)
+              if !containsCol(proj.collect { case BoundItem.BICol(pc, _) => pc }, c) =>
+            c.render
           case (BoundOrderKey.OKOperand(op), _)
               if !op.isInstanceOf[BoundOperand.BCol] => "<computed expression>"
         } match {
@@ -4098,11 +4024,7 @@ object Analyzer {
       // cannot express subtotal rows)
       _ <-
         if (s.groupSpec.isEmpty) Right(())
-        else if (!proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }) Left(BadAggregate(
+        else if (!BoundSelect.aggregating(Nil, proj)) Left(BadAggregate(
           "ROLLUP/CUBE/GROUPING SETS requires an aggregate in the projection"))
         else Right(())
       // grouping(col) marks subtotal rows — only meaningful under
@@ -4110,13 +4032,8 @@ object Analyzer {
       _ <- {
         def argsIn(n: BoundNode): Seq[Option[BoundOperand]] =
           n.collect { case BoundOperand.BAgg("grouping", arg, _) => Seq(arg) }
-        val groupingArgs = proj.flatMap {
-          case BoundItem.BIAgg(f, arg, _, d) => argsIn(BoundOperand.BAgg(f, arg, d))
-          case BoundItem.BIExpr(op, _) => argsIn(op)
-          case BoundItem.BIWin(_, args, _, ord, _, _) =>
-            (args ++ ord.map(_._1)).flatMap(argsIn)
-          case _ => Nil
-        } ++ having.toSeq.flatMap(argsIn) ++
+        val groupingArgs = (proj ++ qwins).flatMap(_.operands).flatMap(argsIn) ++
+          having.toSeq.flatMap(argsIn) ++
           order.flatMap {
             case (BoundOrderKey.OKOperand(op), _) => argsIn(op)
             case _ => Nil
@@ -4125,9 +4042,7 @@ object Analyzer {
         else if (s.groupSpec.isEmpty) Left(BadAggregate(
           "grouping() requires GROUP BY ROLLUP/CUBE/GROUPING SETS"))
         else if (groupingArgs.forall {
-          case Some(BoundOperand.BCol(c)) =>
-            groupCols.exists(g => g.binding == c.binding &&
-              g.attr.name.equalsIgnoreCase(c.attr.name))
+          case Some(BoundOperand.BCol(c)) => grouped(c)
           case _ => false
         }) Right(())
         else Left(BadAggregate(
@@ -4140,26 +4055,18 @@ object Analyzer {
       qualifyPred <- s.qualify match {
         case None => Right(None: Option[BoundExpr])
         case Some(e0) =>
-          val isAgg = group.nonEmpty || proj.exists {
-            case _: BoundItem.BIAgg      => true
-            case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-            case _                       => false
-          }
-          val winTypes: Map[String, SqlType] = (proj ++ qwins).collect {
-            case BoundItem.BIWin(f, wargs, _, _, a, _) =>
-              a.toLowerCase -> aggType(f, wargs)
-          }.toMap
-          if (winTypes.isEmpty)
+          val wins = winTypes(proj ++ qwins)
+          if (wins.isEmpty)
             Left(BadFunction(
               "QUALIFY requires a window function (an inline OVER call or a window alias)"))
-          else if (!isAgg && winTypes.keys.exists(a =>
+          else if (!isAgg && wins.keys.exists(a =>
               tables.exists(_.desc.attr(a).isDefined)))
             // the non-aggregate lowering attaches window columns at their
             // alias before the filter, so an alias shadowing an input
             // column collides (aggregate scope attaches under generated
             // names — no collision possible)
             Left(BadFunction(
-              s"QUALIFY window alias '${winTypes.keys.find(a =>
+              s"QUALIFY window alias '${wins.keys.find(a =>
                 tables.exists(_.desc.attr(a).isDefined)).get}' shadows an input column"))
           else {
             // window aliases bind as output references through the hidden-
@@ -4171,7 +4078,7 @@ object Analyzer {
             // WINDOWED frame. No semi/anti join exists here, so an EXISTS
             // residual rejects.
             val outerWins = hiddenWinScope
-            hiddenWinScope = winTypes
+            hiddenWinScope = wins
             if (isAgg) {
               havingGkExprKeys = group.collect {
                 case BoundGroupKey.GKExpr(op, a2) =>
@@ -4203,18 +4110,12 @@ object Analyzer {
       // (window-alias references read attached columns and are exempt;
       // aggregate calls aggregate over the group like HAVING's)
       _ <- qualifyPred match {
-        case Some(qp) if group.nonEmpty || proj.exists {
-              case _: BoundItem.BIAgg      => true
-              case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-              case _                       => false
-            } =>
+        case Some(qp) if isAgg =>
           // subquery probes and decorrelation keys join post-aggregation
           // too — they must be GROUP BY keys like HAVING's
           columnsOf(qp).find(c => !(
             (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) ||
-              groupCols.exists(g =>
-                g.binding == c.binding &&
-                  g.attr.name.equalsIgnoreCase(c.attr.name)))) match {
+              grouped(c))) match {
             case Some(c) => Left(NotInGroupBy(c.render))
             case None    => Right(())
           }
@@ -4225,11 +4126,6 @@ object Analyzer {
       // per key" deterministic). Output aliases in the leading ORDER BY
       // positions resolve to their projected expression for the match.
       don <- {
-        val isAgg = group.nonEmpty || proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }
         if (s.distinctOn.isEmpty) Right(Vector.empty[BoundOperand])
         else s.distinctOn.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
           Right(Vector.empty)) { (acc, o) =>
@@ -4237,23 +4133,20 @@ object Analyzer {
           // (aggregate calls allowed, bare columns must be GROUP BY keys)
           acc.flatMap(v => bindOp(o, allowAgg = isAgg).map(v :+ _))
         }.flatMap { keys =>
-          val groupExprOps =
-            group.collect { case BoundGroupKey.GKExpr(op, _) => op }.toSet
           val badAggKey =
             if (!isAgg) None
             else keys.flatMap(k =>
               if (groupExprOps.contains(k)) Nil else columnsOf(k))
-              .find(c => !groupCols.exists(g => g.binding == c.binding &&
-                g.attr.name.equalsIgnoreCase(c.attr.name)))
+              .find(!grouped(_))
+          // the projection items an output name resolves to
+          def named(n: String): Seq[BoundItem] =
+            proj.filter(_.name.exists(_.equalsIgnoreCase(n)))
           def orderKeyOperand(k: BoundOrderKey): Option[BoundOperand] = k match {
             case BoundOrderKey.OKOperand(op) => Some(op)
-            case BoundOrderKey.OKOutput(n) => proj.collectFirst {
-              case BoundItem.BICol(bc, Some(a)) if a.equalsIgnoreCase(n) =>
-                BoundOperand.BCol(bc)
-              case BoundItem.BIExpr(op, a) if a.equalsIgnoreCase(n) => op
-              case BoundItem.BIAgg(f, arg, Some(a), d) if a.equalsIgnoreCase(n) =>
-                BoundOperand.BAgg(f, arg, d)
-            }
+            case BoundOrderKey.OKOutput(n) => named(n).flatMap {
+              case a: BoundItem.BIAgg => Some(a.call)
+              case it                 => it.rowValue
+            }.headOption
           }
           if (badAggKey.isDefined)
             Left(NotInGroupBy(badAggKey.get.render))
@@ -4262,26 +4155,22 @@ object Analyzer {
                 !orderKeyOperand(ok).contains(k) })
             Left(BadFunction(
               "DISTINCT ON requires ORDER BY to lead with the ON expressions"))
-          else if (order.exists { case (k, _) => k match {
-            case BoundOrderKey.OKOutput(n) => proj.exists {
-              case BoundItem.BISub(_, a, _, _, _) => a.equalsIgnoreCase(n)
-              case _                           => false
-            }
+          else if (order.exists {
+            case (BoundOrderKey.OKOutput(n), _) =>
+              named(n).exists(_.isInstanceOf[BoundItem.BISub])
             case _ => false
-          } })
+          })
             Left(BadFunction(
               "DISTINCT ON cannot ORDER BY a scalar-subquery alias"))
-          else if (order.exists { case (k, _) => k match {
+          else if (order.exists {
             // a window alias sort key pre-attaches the window column at
             // its alias (like QUALIFY), so shadowing an input column
             // would collide
-            case BoundOrderKey.OKOutput(n) => proj.exists {
-              case BoundItem.BIWin(_, _, _, _, a, _) => a.equalsIgnoreCase(n) &&
-                tables.exists(_.desc.attr(a).isDefined)
-              case _ => false
-            }
+            case (BoundOrderKey.OKOutput(n), _) =>
+              named(n).exists(_.isInstanceOf[BoundItem.BIWin]) &&
+                tables.exists(_.desc.attr(n).isDefined)
             case _ => false
-          } })
+          })
             Left(BadFunction(
               "DISTINCT ON window-alias sort key shadows an input column"))
           else Right(keys)
@@ -4293,17 +4182,12 @@ object Analyzer {
       _ <- {
         def inOp(n: BoundNode): Boolean =
           n.exists { case BoundOperand.BFunc("unnest", _) => true }
-        var roots = 0
-        var nested = false
-        proj.foreach {
-          case BoundItem.BIExpr(BoundOperand.BFunc("unnest", as), _) =>
-            roots += 1; if (as.exists(inOp)) nested = true
-          case BoundItem.BIExpr(op, _)     => if (inOp(op)) nested = true
-          case BoundItem.BIAgg(_, a, _, _) => if (a.exists(inOp)) nested = true
-          case BoundItem.BIWin(_, as, _, ord, _, _) =>
-            if (as.exists(inOp) || ord.exists(k => inOp(k._1))) nested = true
-          case _ => ()
-        }
+        // a root item's arguments, where the item is one
+        def rootArgs(it: BoundItem): Option[Seq[BoundOperand]] =
+          it.rowValue.collect { case BoundOperand.BFunc("unnest", as) => as }
+        val roots = proj.count(rootArgs(_).isDefined)
+        val nested = (proj ++ qwins).exists(it =>
+          rootArgs(it).getOrElse(it.operands).exists(inOp))
         val elsewhere =
           pred.exists(inOp) || having.exists(inOp) ||
             qualifyPred.exists(inOp) ||
@@ -4336,12 +4220,11 @@ object Analyzer {
           case a @ (_: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg) =>
             a.children.exists(contains)
         }
-        val badProj = proj.exists {
-          case BoundItem.BIExpr(op, _)     => inAggArg(op)
-          case BoundItem.BIAgg(_, a, _, _) => a.exists(contains)
-          case BoundItem.BIWin(_, as, _, ord, _, _) =>
-            as.exists(contains) || ord.exists(k => contains(k._1))
-          case _ => false
+        // a window operand may hold none; any other item none in an
+        // aggregate argument
+        val badProj = (proj ++ qwins).exists {
+          case w: BoundItem.BIWin => w.operands.exists(contains)
+          case it                 => it.operands.exists(inAggArg)
         }
         val badOther =
           pred.exists(inAggArg) || having.exists(inAggArg) ||
@@ -4362,19 +4245,11 @@ object Analyzer {
         // their own walks; projections are validated here — the bare-
         // column check exempts subquery machinery, so pairs get an
         // explicit pass)
-        val aggScoped = group.nonEmpty || proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }
         val badCorrKey =
-          if (!aggScoped) None
-          else proj.flatMap {
-            case BoundItem.BIExpr(op, _) =>
-              op.collect { case v: BoundOperand.BSubVal => v.pairs.map(_._1) }
-            case _ => Nil
-          }.find(c => !groupCols.exists(g =>
-            g.binding == c.binding && g.attr.name.equalsIgnoreCase(c.attr.name)))
+          if (!isAgg) None
+          else proj.flatMap(_.operands).flatMap(_.collect {
+            case v: BoundOperand.BSubVal => v.pairs.map(_._1)
+          }).find(!grouped(_))
         if (badProj || badOther)
           Left(BadSubquery("a scalar-subquery operand is not supported " +
             "in this position (aggregate arguments, GROUP/ORDER BY, " +
@@ -4391,13 +4266,8 @@ object Analyzer {
       // joined after aggregation; correlated = the post-aggregation
       // marker join, whose decorrelation keys must therefore be GROUP BY
       // keys (their grouped output columns are all that's left to join on)
-      projF <- {
-        val aggScope = group.nonEmpty || proj.exists {
-          case _: BoundItem.BIAgg      => true
-          case BoundItem.BIExpr(op, _) => BoundNode.containsAgg(op)
-          case _                       => false
-        }
-        if (!aggScope) Right(proj)
+      projF <-
+        if (!isAgg) Right(proj)
         else {
           val rewritten = proj.map {
             case BoundItem.BISub(sub, a, guard, ps, io) =>
@@ -4412,8 +4282,7 @@ object Analyzer {
               ps.map(_._1) ++
                 io.toSeq.flatMap(iq => columnsDeep(iq.outerOp))
             case _ => Nil
-          }.find(c => !groupCols.exists(g => g.binding == c.binding &&
-            g.attr.name.equalsIgnoreCase(c.attr.name))) match {
+          }.find(!grouped(_)) match {
             case Some(c) => Left(BadSubquery(
               "a correlated scalar-subquery item over an aggregated query " +
                 s"may only correlate on GROUP BY keys (got ${c.render})"))
@@ -4436,7 +4305,6 @@ object Analyzer {
               }
           }
         }
-      }
     } yield BoundSelect(innerTables, projF, pred, order, s.limit, s.offset,
       group, having, s.distinct, steps, derivedSubs.toMap, s.groupSpec,
       lateralConjs.toSeq, qualifyPred, qwins, don)

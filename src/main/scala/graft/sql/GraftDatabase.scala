@@ -2933,12 +2933,9 @@ object Repl {
   def main(args: Array[String]): Unit = {
     val warehouse = args.headOption.getOrElse(
       Files.createTempDirectory("graft-warehouse").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_MASTER points the shell at another deployment
+    val spark = graft.LocalSession("4", "ERROR",
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq)
     val db = new GraftDatabase(spark, warehouse)
     println(s"graft SQL repl — warehouse: $warehouse (exit with \\q)")
     Iterator.continually(scala.io.StdIn.readLine("graft> "))

@@ -319,9 +319,7 @@ object Lowering {
         (q.projection.zipWithIndex.collect {
           case (BoundItem.BIWin(_, _, _, _, a, _), i) =>
             a.toLowerCase -> s"__w_$i"
-        } ++ q.qualifyWins.collect {
-          case BoundItem.BIWin(_, _, _, _, a, _) => a.toLowerCase -> a.toLowerCase
-        }).toMap
+        } ++ q.qualifyWins.map(w => w.alias.toLowerCase -> w.alias.toLowerCase)).toMap
       // post-aggregation resolution: group keys by grouped name,
       // aggregate calls as hidden agg columns (registered as they lower),
       // scalar-subquery operands as broadcast 1-row frames joined after
@@ -535,10 +533,8 @@ object Lowering {
         q.projection.zipWithIndex.collect {
           case (BoundItem.BIWin(f, args, parts, ord, _, frame), i) =>
             lowerWin(s"__w_$i", f, args, parts, ord, frame, i.toString)
-        } ++ q.qualifyWins.collect {
-          case BoundItem.BIWin(f, args, parts, ord, a, frame) =>
-            lowerWin(a.toLowerCase, f, args, parts, ord, frame, s"q_$a")
-        }
+        } ++ q.qualifyWins.map(w => lowerWin(w.alias.toLowerCase, w.func,
+          w.args, w.partitionBy, w.orderBy, w.frame, s"q_${w.alias}"))
       val winItems: Seq[(String, Column)] =
         winLowered.collect { case (n, Right(c)) => n -> c }
       val winReqs: Seq[GlobalWindows.Req] =
@@ -692,12 +688,7 @@ object Lowering {
             } else acc.join(subDf, lc === subDf(vcol), joinType)
           } else {
             val core = combine(spark, ssub, source, Set.empty, None)
-            val inVal = ssub.projection.head match {
-              case BoundItem.BICol(c, _)    => qcolSub(c)
-              case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolSub)
-              case _ => sys.error(
-                "unreachable: a correlated subquery must not aggregate or window")
-            }
+            val inVal = rowValueCol(ssub.projection.head, qcolSub)
             val subDf = core.select(inVal.as(s"__hin${i}_v") +:
               pairs.zipWithIndex.map { case ((_, ic), k) =>
                 qcolSub(ic).as(s"__hin${i}_$k") }: _*)
@@ -850,6 +841,7 @@ object Lowering {
     if (MaterializeAudit.enabled)
       MaterializeAudit.plans.add(df.queryExecution.executedPlan)
     val spark = df.sparkSession
+    val bridge = org.apache.spark.sql.graftbridge.Bridge
     // capStats: checkpoint leaves inherit the origin plan's ESTIMATED
     // stats; join estimates are products of child sizes, so fixpoint
     // loops (recursive CTEs) that chain materializations compound the
@@ -857,13 +849,19 @@ object Lowering {
     // (measured in the CC operator: 77 s inside BigInteger.multiply).
     // The cap is the identity for every real statistic — broadcast
     // decisions from genuinely small frames are untouched.
-    org.apache.spark.sql.graftbridge.Bridge.capStats(
+    val m = bridge.capStats(
       if (spark.conf.get("graft.reliableCheckpoint", "false").toBoolean) {
         if (spark.sparkContext.getCheckpointDir.isEmpty)
           spark.sparkContext.setCheckpointDir(java.nio.file.Files
             .createTempDirectory("graft-ckpt").toString)
         df.checkpoint(eager)
       } else df.localCheckpoint(eager))
+    // adaptive execution runs query stages concurrently, so a stage
+    // submitted before the lineage truncation can still report its
+    // metrics after it; without adaptive execution (fixpoint loops) jobs
+    // run one at a time, and retaining would chain every round's lineage
+    if (!eager && spark.conf.get(Fixpoint.AqeKey).toBoolean) bridge.retainLineage(m)
+    m
   }
 
   /** lag/lead offset: optional second literal argument, default 1.
@@ -1446,11 +1444,8 @@ object Lowering {
         lowerSelect(spark, core, source).crossJoin(outKeys).toDF(allNames: _*)
       else {
         val c = combine(spark, core, source, Set.empty, None)
-        val visible = core.projection.map {
-          case BoundItem.BICol(bc, a)  => qcolOf(bc).as(a.getOrElse(bc.attr.name))
-          case BoundItem.BIExpr(op, a) => lowerOperandWith(op, qcolOf).as(a)
-          case other => sys.error(s"unreachable set-LATERAL projection item $other")
-        }
+        val visible = core.projection.map(it =>
+          rowValueCol(it, qcolOf).as(it.columnName.mkString))
         val keys = innerKeys.zipWithIndex.map { case (ic, i) =>
           qcolOf(ic).as(ls.hiddenKeys(i)) }
         c.filter(innerKeys.map(ic => qcolOf(ic).isNotNull).reduce(_ && _))
@@ -1546,14 +1541,12 @@ object Lowering {
     val kN = pairs.indices.map(j => s"${name}_k$j")
     val tN = s"${name}_t"
     val tagN = s"${name}_tag"
-    val nodes: Seq[(String, Option[BoundOperand])] = sub.projection.head match {
-      case BoundItem.BIAgg(f, arg, _, _) => Seq((f, arg))
-      case BoundItem.BIExpr(op, _) =>
-        Analyzer.BoundNode.aggNodes(op).distinct.map {
-          case BoundOperand.BAgg(f, arg, _) => (f, arg)
-          case other => sys.error(s"unreachable aggregate node $other")
-        }
-      case _ => sys.error("unreachable: analyzer requires a single aggregate call")
+    // the body is one aggregate call or an expression over plain calls
+    val value = sub.projection.head.operands.head
+    val aggNodes = Analyzer.BoundNode.aggNodes(value).distinct
+    val nodes: Seq[(String, Option[BoundOperand])] = aggNodes.map {
+      case BoundOperand.BAgg(f, arg, _) => (f, arg)
+      case other => sys.error(s"unreachable aggregate node $other")
     }
     val inner0 = core.select(
       pairs.zipWithIndex.map { case ((_, ic), j) => qcolSub(ic).as(kN(j)) } ++
@@ -1651,16 +1644,10 @@ object Lowering {
       qcolOuter(oc) <=> ran(kN(j)) } :+
       (lowerOperandWith(iq.outerOp, qcolOuter) <=> ran(tN))).reduce(_ && _)
     val joined = df.join(ran, cond, "left_outer")
-    val scalar = sub.projection.head match {
-      case BoundItem.BIAgg(_, _, _, _) => ran(s"${name}_r0")
-      case BoundItem.BIExpr(op, _) =>
-        val nodeCol: Map[BoundNode, Column] =
-          Analyzer.BoundNode.aggNodes(op).distinct.zipWithIndex.map {
-            case (n2, j) => (n2: BoundOperand) -> ran(s"${name}_r$j")
-          }.toMap
-        lowerTree(op, nodeCol)
-      case _ => sys.error("unreachable: analyzer requires a single aggregate call")
-    }
+    val nodeCol: Map[BoundNode, Column] = aggNodes.zipWithIndex.map {
+      case (n2, j) => (n2: BoundNode) -> ran(s"${name}_r$j")
+    }.toMap
+    val scalar = lowerTree(value, nodeCol)
     (joined, scalar)
   }
 
@@ -1802,27 +1789,25 @@ object Lowering {
       js.kind match {
         case "asof" | "asof_left" =>
           Analyzer.asofDecompose(js.on, js.table.binding) match {
-            case Some(p) if p.eqPairs.nonEmpty && !p.fallback &&
+            case Left(m) => sys.error(s"unreachable: analyzer passed a bad ASOF ON: $m")
+            case Right(p) if p.eqPairs.nonEmpty && !p.fallback &&
                 !asofSparseGroups(q, js, p) =>
               lastAsofChoice = Some("union_merge")
               asofUnionMerge(df, right, js, p)
-            case d =>
-              if (d.exists(p => p.eqPairs.nonEmpty && !p.fallback))
+            case Right(p) =>
+              if (p.eqPairs.nonEmpty && !p.fallback)
                 lastAsofChoice = Some("candidate")
               // Candidate-join fallback (no equality keys, or residual
               // conjuncts reading the outer side): join on the full ON,
               // then keep per left row only the nearest match via a
               // row_number window over a synthetic left-row id. Fan-out
               // before the prune is O(matches) inside a key group.
-              val (tsOp, pickLargest) = Analyzer.asofParts(js.on, js.table.binding)
-                .fold(m => sys.error(s"unreachable: analyzer passed a bad ASOF ON: $m"),
-                  identity)
               val lid = "__asof_lid"; val mk = "__asof_m"; val rn = "__asof_rn"
               val l1 = df.withColumn(lid, monotonically_increasing_id())
               val r1 = right.withColumn(mk, lit(1))
               val joined = l1.join(r1, lowerExpr(js.on), "left_outer")
-              val ord = if (pickLargest) lowerOperand(tsOp).desc_nulls_last
-                        else lowerOperand(tsOp).asc_nulls_last
+              val ts = lowerOperand(p.ineq.stepOp)
+              val ord = if (p.ineq.pickLargest) ts.desc_nulls_last else ts.asc_nulls_last
               val w = org.apache.spark.sql.expressions.Window
                 .partitionBy(col(lid)).orderBy(ord)
               val picked = joined.withColumn(rn, row_number().over(w))
@@ -1877,12 +1862,7 @@ object Lowering {
           // correlated: the subquery's core + its IN value + the inner
           // side of each decorrelated pair, joined semi/anti on all of them
           val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = sub.projection.head match {
-            case BoundItem.BICol(c, _)    => qcolOf(c)
-            case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolOf)
-            case _: BoundItem.BIAgg | _: BoundItem.BIWin =>
-              sys.error("unreachable: a correlated subquery must not aggregate or window")
-          }
+          val inVal = rowValueCol(sub.projection.head, qcolOf)
           val subDf = core.select(inVal.as("__in_v") +:
             pairs.zipWithIndex.map { case ((_, ic), k) => qcolOf(ic).as(s"__c$k") }: _*)
           val pairConds =
@@ -1921,12 +1901,7 @@ object Lowering {
               subDf0.toDF(subDf0.columns.indices.map(i => s"__rv$i"): _*)
             } else {
               val core = combine(spark, sub, source, Set.empty, None)
-              val vals = sub.projection.map {
-                case BoundItem.BICol(c, _)    => qcolOf(c)
-                case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolOf)
-                case _: BoundItem.BIAgg | _: BoundItem.BIWin | _: BoundItem.BISub =>
-                  sys.error("unreachable: a correlated subquery must not aggregate or window")
-              }
+              val vals = sub.projection.map(rowValueCol(_, qcolOf))
               core.select(
                 vals.zipWithIndex.map { case (v, i) => v.as(s"__rv$i") } ++
                 pairs.zipWithIndex.map { case ((_, ic), j) => qcolOf(ic).as(s"__c$j") }: _*)
@@ -1990,12 +1965,7 @@ object Lowering {
           df.join(subDf, conds.reduce(_ && _), "left_semi")
         } else {
           val core = combine(spark, sub, source, Set.empty, None)
-          val vals = sub.projection.map {
-            case BoundItem.BICol(c, _)    => qcolOf(c)
-            case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolOf)
-            case _: BoundItem.BIAgg | _: BoundItem.BIWin | _: BoundItem.BISub =>
-              sys.error("unreachable: a correlated subquery must not aggregate or window")
-          }
+          val vals = sub.projection.map(rowValueCol(_, qcolOf))
           val subDf = core.select(
             vals.zipWithIndex.map { case (v, k) => v.as(s"__rv$k") } ++
             pairs.zipWithIndex.map { case ((_, ic), k) => qcolOf(ic).as(s"__c$k") }: _*)
@@ -2180,12 +2150,7 @@ object Lowering {
           predOf.put(s, if (neg) !p else p)
         } else {
           val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = sub.projection.head match {
-            case BoundItem.BICol(c, _)    => qcolSub(c)
-            case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolSub)
-            case _ => sys.error(
-              "unreachable: a correlated subquery must not aggregate or window")
-          }
+          val inVal = rowValueCol(sub.projection.head, qcolSub)
           val keyed = core.select(inVal.as(s"${m}_v") +:
             pairs.zipWithIndex.map { case ((_, ic), i) =>
               qcolSub(ic).as(s"${m}_$i") }: _*).distinct().withColumn(m, lit(true))
@@ -2238,11 +2203,7 @@ object Lowering {
           if (pairs.isEmpty) lowerSelect(spark, sub, source).toDF(vns: _*)
           else {
             val c = combine(spark, sub, source, Set.empty, None)
-            val items = sub.projection.map {
-              case BoundItem.BICol(cc, _)   => qcolSub(cc)
-              case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolSub)
-              case other => sys.error(s"unreachable correlated row-IN item $other")
-            }
+            val items = sub.projection.map(rowValueCol(_, qcolSub))
             c.select(items.zipWithIndex.map { case (cc, i) => cc.as(vns(i)) } ++
               pairs.zipWithIndex.map { case ((_, ic), j) =>
                 qcolSub(ic).as(pns(j)) }: _*)
@@ -2364,12 +2325,7 @@ object Lowering {
           // correlated: per-key facts — one hash aggregate on the same
           // equi keys the predicate joins on, shuffle-bounded at scale
           val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = sub.projection.head match {
-            case BoundItem.BICol(c, _)    => qcolSub(c)
-            case BoundItem.BIExpr(op2, _) => lowerOperandWith(op2, qcolSub)
-            case _ => sys.error(
-              "unreachable: a correlated subquery must not aggregate or window")
-          }
+          val inVal = rowValueCol(sub.projection.head, qcolSub)
           val facts = core.select(inVal.as(s"${m}_fv") +:
             pairs.zipWithIndex.map { case ((_, ic), i) =>
               qcolSub(ic).as(s"${m}_f$i") }: _*)
@@ -2581,11 +2537,8 @@ object Lowering {
     }
     // visible projection (plain columns/expressions, analyzer-enforced)
     // in derived-attribute order, then the hidden key columns
-    val visible = l.sub.projection.map {
-      case BoundItem.BICol(bc, a)  => qc(bc).as(a.getOrElse(bc.attr.name))
-      case BoundItem.BIExpr(op, a) => lowerOperandWith(op, qc).as(a)
-      case other => sys.error(s"unreachable LATERAL projection item $other")
-    }
+    val visible = l.sub.projection.map(it =>
+      rowValueCol(it, qc).as(it.columnName.mkString))
     val keys = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
       qc(ic).as(l.hiddenKeys(i)) }
     topped.select(visible ++ keys: _*)
@@ -2952,6 +2905,14 @@ object Lowering {
     */
   private[sql] def lowerOperandWith(o: BoundOperand, colOf: BoundCol => Column): Column =
     lowerTree(o, columnLeaf(colOf))
+
+  /** A correlated or LATERAL body's item as a Column. Those bodies
+    * project plain columns and expressions only (the decorrelators
+    * reject aggregating, windowed and scalar-subquery items).
+    */
+  private def rowValueCol(it: BoundItem, colOf: BoundCol => Column): Column =
+    lowerOperandWith(it.rowValue.getOrElse(sys.error(
+      s"unreachable: a correlated body item $it is not a row value")), colOf)
 
   private[sql] def lowerLit(l: Lit): Column = l match {
     case Lit.LitLong(v)      => lit(v)

@@ -96,4 +96,22 @@ object Bridge {
       case _ => df
     }
   }
+
+  /** Pre-checkpoint parents by checkpointed RDD (weak, identity keys). */
+  private val lineage = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], Seq[org.apache.spark.rdd.RDD[_]]]())
+
+  /** Keep the lineage under a lazily checkpointed frame reachable for as
+    * long as the frame's RDD is. The first job over the frame truncates
+    * that lineage; tasks of a query stage submitted before then still
+    * carry the lineage's SQL metrics, and once the driver has collected
+    * those it logs "Failed to update accumulator … non-existent
+    * accumulator" for each as the tasks report.
+    */
+  def retainLineage(df: org.apache.spark.sql.DataFrame): Unit =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        lineage.put(l.rdd, l.rdd.dependencies.map(_.rdd))
+      case _ => ()
+    }
 }

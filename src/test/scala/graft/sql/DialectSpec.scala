@@ -2008,6 +2008,24 @@ class DialectSpec extends AnyFunSuite {
     assert(db.query("SELECT * FROM a JOIN b USING (k, k)").isLeft)
   }
 
+  private def asofRejection(on: String): String = {
+    val db = freshDb()
+    for (sql <- Seq("CREATE TABLE l (k INT, v INT)", "CREATE TABLE q (k INT, t INT, x INT)"))
+      db.query(sql).fold(e => fail(s"$sql -> ${e.msg}"), _ => ())
+    db.query(s"SELECT l.k FROM l ASOF JOIN q ON $on")
+      .fold(_.msg, _ => fail(s"ASOF ON $on was accepted"))
+  }
+
+  test("ASOF JOIN without an inequality in its ON names the missing inequality") {
+    assert(asofRejection("l.k = q.k") == "bad function call: ASOF JOIN requires one " +
+      "inequality (<, <=, >, >=) between an outer operand and a joined-table operand in its ON")
+  }
+
+  test("ASOF JOIN with two inequalities in its ON asks for exactly one") {
+    assert(asofRejection("l.k = q.k AND l.v >= q.t AND l.v <= q.x") ==
+      "bad function call: ASOF JOIN takes exactly one inequality in its ON")
+  }
+
   test("SEMI/ANTI JOIN scope and ASOF JOIN semantics") {
     val db = freshDb()
     def run(sql: String): Unit = db.query(sql) match {

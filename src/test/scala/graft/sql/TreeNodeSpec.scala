@@ -4,9 +4,9 @@ import scala.reflect.runtime.{universe => ru}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import Analyzer.{AttributeDesc, BoundCol, BoundExpr, BoundNode, BoundOperand,
-  BoundSelect, CorrIneq}
-import Ast.{CmpOp, ColRef, Expr, Operand, SelectTree}
+import Analyzer.{AttributeDesc, BoundCol, BoundExpr, BoundItem, BoundNode,
+  BoundOperand, BoundSelect, CorrIneq}
+import Ast.{CmpOp, ColRef, Expr, Operand, SelectTree, SortDir, WinFrame}
 
 /** Completeness guard for the expression-tree traversal: one instance of
   * every case class of the four expression ADTs, each checked against
@@ -16,13 +16,15 @@ import Ast.{CmpOp, ColRef, Expr, Operand, SelectTree}
   * inequality (both straddle the subquery scope). Subquery bodies and
   * decorrelation pairs are not expression nodes, so they never count.
   * A node type added without an instance here, or with a field its
-  * `children` misses, fails this suite.
+  * `children` misses, fails this suite. The same holds for SELECT items
+  * and their `operands`.
   */
 class TreeNodeSpec extends AnyFunSuite {
 
   private val excluded: Map[String, Set[String]] = Map(
     "BExists" -> Set("residual"),
-    "BSubVal" -> Set("ineq"))
+    "BSubVal" -> Set("ineq"),
+    "BISub" -> Set("sub", "pairs", "ineq"))
 
   // ---- parse side ----
   private def c(n: String): Operand = Operand.Col(ColRef(None, n))
@@ -97,6 +99,16 @@ class TreeNodeSpec extends AnyFunSuite {
     BoundExpr.BQuantSub(CmpOp.Gt, b("a"), bsel, all = true, pairs),
     BoundExpr.BRowInSub(Seq(b("a"), b("b")), bsel, pairs, negated = false))
 
+  private val items: Seq[BoundItem] = Seq(
+    BoundItem.BICol(bc("a"), Some("x")),
+    BoundItem.BIExpr(BoundOperand.BArith('+', b("a"), b("b")), "x"),
+    BoundItem.BIAgg("sum", Some(b("a")), Some("x"), distinct = true),
+    BoundItem.BIWin("lag", Seq(b("a"), b("b")), Seq(b("c"), b("d")),
+      Seq((b("e"), SortDir(desc = false, None)), (b("f"), SortDir(desc = true, None))),
+      "x", Some(WinFrame(range = false, -1L, 0L))),
+    BoundItem.BISub(bsel, "x", guard = true, pairs,
+      Some(CorrIneq(CmpOp.Lt, b("x"), b("y")))))
+
   /** The node-typed values of a product's fields, in field order,
     * looking through Seq / Option / pair containers.
     */
@@ -133,6 +145,7 @@ class TreeNodeSpec extends AnyFunSuite {
     covers(ru.typeOf[Expr], exprs)
     covers(ru.typeOf[BoundOperand], boundOperands)
     covers(ru.typeOf[BoundExpr], boundExprs)
+    covers(ru.typeOf[BoundItem], items)
   }
 
   test("parse-side children are exactly the operand and predicate fields") {
@@ -147,6 +160,23 @@ class TreeNodeSpec extends AnyFunSuite {
     for (n <- boundOperands ++ boundExprs)
       assert(n.children == nodeFields(n.asInstanceOf[Product],
         _.isInstanceOf[BoundNode]), n)
+  }
+
+  test("item operands are exactly the operand and column fields") {
+    // a column field is evaluated as its column operand; an aggregate
+    // item's call wraps the item's own fields
+    for (it <- items) {
+      val fields = nodeFields(it.asInstanceOf[Product], x => x.isInstanceOf[BoundNode] ||
+        x.isInstanceOf[BoundCol]).map {
+        case c: BoundCol => BoundOperand.BCol(c)
+        case n           => n
+      }
+      val got = it.operands.flatMap {
+        case a: BoundOperand.BAgg if it.isInstanceOf[BoundItem.BIAgg] => a.children
+        case o                                                        => Seq(o)
+      }
+      assert(got == fields, it)
+    }
   }
 
   test("a rewrite reaches every child, and stops where the rule is defined") {

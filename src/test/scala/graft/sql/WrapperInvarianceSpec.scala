@@ -170,6 +170,71 @@ class WrapperInvarianceSpec extends AnyFunSuite {
         "(SELECT max(v) FROM wrap_u) + 5"))))
   }
 
+  // A window operand is checked alike in every window position: argument,
+  // PARTITION BY key and ORDER BY key, of a SELECT-list window and of a
+  // QUALIFY inline window.
+  private val unnestOp = "unnest([1, 2])"
+  private val subOp = "(SELECT max(v) FROM u)"
+
+  private def rowWin(over: String): String = s"SELECT k, row_number() OVER ($over) AS r FROM t"
+  private def rowQualify(over: String): String =
+    s"SELECT k FROM t QUALIFY row_number() OVER ($over) = 1"
+  private def groupWin(over: String): String =
+    s"SELECT g, count(*) AS c, row_number() OVER ($over) AS r FROM t GROUP BY g"
+  private def groupQualify(over: String): String =
+    s"SELECT g, count(*) AS c FROM t GROUP BY g QUALIFY row_number() OVER ($over) = 1"
+
+  test("PARTITION BY unnest([1, 2]) rejects like ORDER BY unnest([1, 2])") {
+    assert(rejected(rowWin(s"PARTITION BY $unnestOp ORDER BY k")) ==
+      rejected(rowWin(s"ORDER BY $unnestOp")))
+  }
+
+  test("QUALIFY row_number() OVER (ORDER BY unnest([1, 2])) rejects like the SELECT-list window") {
+    assert(rejected(rowQualify(s"ORDER BY $unnestOp")) ==
+      rejected(rowWin(s"ORDER BY $unnestOp")))
+  }
+
+  test("PARTITION BY (SELECT max(v) FROM u) rejects like ORDER BY (SELECT max(v) FROM u)") {
+    assert(rejected(rowWin(s"PARTITION BY $subOp ORDER BY k")) ==
+      rejected(rowWin(s"ORDER BY $subOp, k")))
+  }
+
+  test("QUALIFY window over (SELECT max(v) FROM u) rejects like the SELECT-list window") {
+    val expected = rejected(rowWin(s"ORDER BY $subOp, k"))
+    assert(rejected(rowQualify(s"ORDER BY $subOp, k")) == expected)
+    assert(rejected(rowQualify(s"PARTITION BY $subOp ORDER BY k")) == expected)
+  }
+
+  test("PARTITION BY grouping(g) rejects like ORDER BY grouping(g)") {
+    assert(rejected(groupWin("PARTITION BY grouping(g) ORDER BY g")) ==
+      rejected(groupWin("ORDER BY grouping(g)")))
+  }
+
+  test("QUALIFY row_number() OVER (ORDER BY grouping(g)) rejects like the SELECT-list window") {
+    assert(rejected(groupQualify("ORDER BY grouping(g)")) ==
+      rejected(groupWin("ORDER BY grouping(g)")))
+  }
+
+  test("PARTITION BY sum(v) without GROUP BY rejects like ORDER BY sum(v)") {
+    assert(rejected(rowWin("PARTITION BY sum(v) ORDER BY k")) ==
+      rejected(rowWin("ORDER BY sum(v)")))
+  }
+
+  test("window operand checks: argument, PARTITION BY and ORDER BY, SELECT list and QUALIFY") {
+    for ((op, scope, key) <- Seq((unnestOp, "row", "k"), (subOp, "row", "k"),
+        ("sum(v)", "row", "k"), ("grouping(g)", "group", "g"))) {
+      val (select, from) =
+        if (scope == "row") ("SELECT k", "FROM t") else ("SELECT g, count(*) AS c", "FROM t GROUP BY g")
+      val overs = Seq(s"first_value($op) OVER (ORDER BY $key)",
+        s"first_value($key) OVER (PARTITION BY $op ORDER BY $key)",
+        s"first_value($key) OVER (ORDER BY $op, $key)")
+      val forms = overs.map(w => s"$select, $w AS r $from") ++
+        overs.map(w => s"$select $from QUALIFY $w = 1")
+      val expected = rejected(forms.head)
+      for (sql <- forms.tail) assert(outcome(sql) == Left(expected), sql)
+    }
+  }
+
   private val rowScope =
     "SELECT k, v, row_number() OVER (ORDER BY v) AS rn FROM t QUALIFY "
   private val groupScope = "SELECT g, count(*) AS c, " +
