@@ -53,13 +53,14 @@ object Streaming {
     * transforms sort within the batch, so cross-file arrival order is
     * immaterial).
     */
-  private def boundedSource(df: DataFrame, key: String, d: String,
+  private[queries] def boundedSource(df: DataFrame, key: String, d: String,
       nFiles: Int): String = {
     val tmp = System.getProperty("java.io.tmpdir")
     val fixture = Integer.toHexString(d.hashCode)
     val name = s"graft_stream_${key}_p${nFiles}_$fixture"
-    val dir = s"$tmp/$name"
-    if (!Files.exists(Paths.get(s"$dir/_SUCCESS"))) {
+    val dir = Paths.get(tmp, name)
+    def published: Boolean = Files.exists(dir.resolve("_SUCCESS"))
+    if (!published) {
       // a copy of the same slice under another file count is never read
       // again: remove it rather than accumulate (copies of other fixture
       // dirs stay — another scale factor still reads them)
@@ -67,9 +68,20 @@ object Streaming {
       Option(new java.io.File(tmp).listFiles()).toSeq.flatten
         .filter(f => f.getName != name && f.getName.matches(sibling))
         .foreach(f => FileUtils.deleteDirectory(f))
-      df.repartition(nFiles).write.mode("overwrite").parquet(dir)
+      // each writer writes its own copy, then publishes it with one
+      // atomic rename: concurrent writers (two processes, or two threads
+      // of one) never share a half-written directory, and a writer that
+      // finds the copy already published keeps that one
+      val own = Files.createTempDirectory(Paths.get(tmp), s".$name-")
+      try {
+        df.repartition(nFiles).write.mode("overwrite").parquet(own.toString)
+        // a copy left without _SUCCESS by an interrupted writer is replaced
+        if (Files.exists(dir) && !published) FileUtils.deleteDirectory(dir.toFile)
+        try Files.move(own, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if published => () }
+      } finally FileUtils.deleteDirectory(own.toFile)
     }
-    dir
+    dir.toString
   }
 
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)

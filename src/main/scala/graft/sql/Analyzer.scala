@@ -555,15 +555,21 @@ object Analyzer {
 
   /** The columns a subquery reads outside its WHERE — projection,
     * grouping, ordering, HAVING and join-step ON — which decorrelation
-    * requires to be its own. A scalar item contributes its correlation
-    * keys: one pointing past this subquery's scope rejects (depth-2
-    * correlation through a projection item is not decorrelated).
+    * requires to be its own. A scalar subquery in a projection item —
+    * the item itself or an operand inside it — contributes its
+    * correlation keys: one pointing past this subquery's scope rejects
+    * (depth-2 correlation through a projection item is not
+    * decorrelated).
     */
-  private def nonPredicateCols(sub: BoundSelect): Seq[BoundCol] =
+  private def nonPredicateCols(sub: BoundSelect): Seq[BoundCol] = {
+    def outerOf(pairs: Seq[(BoundCol, BoundCol)], iq: Option[CorrIneq]) =
+      pairs.map(_._1) ++ iq.toSeq.flatMap(x => columnsDeep(x.outerOp))
+    def scalarKeys(n: BoundNode): Seq[BoundCol] = n.collect {
+      case BoundOperand.BSubVal(_, _, ps, iq) => outerOf(ps, iq)
+    }
     sub.projection.flatMap { it =>
-      it.operands.flatMap(columnsDeep) ++ (it match {
-        case BoundItem.BISub(_, _, _, ipairs, iqo) => ipairs.map(_._1) ++
-          iqo.toSeq.flatMap(x => columnsDeep(x.outerOp))
+      it.operands.flatMap(o => columnsDeep(o) ++ scalarKeys(o)) ++ (it match {
+        case BoundItem.BISub(_, _, _, ipairs, iqo) => outerOf(ipairs, iqo)
         case _ => Nil
       })
     } ++ sub.groupBy.flatMap {
@@ -574,6 +580,7 @@ object Analyzer {
       case (BoundOrderKey.OKOutput(_), _)   => Nil
     } ++ sub.having.toSeq.flatMap(columnsOf) ++
       sub.joinSteps.flatMap(js => columnsOf(js.on))
+  }
 
   /** Split a correlated subquery into an uncorrelated core + the
     * equality join pairs (outer col, inner col) pulled from its WHERE —

@@ -1980,6 +1980,13 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       chooseBroadcastSides(ests), planJoinOrder(s, ests))
   }
 
+  /** One SELECT lowered in its own query scope over `source` (the DML
+    * paths' rewritten selects).
+    */
+  private def lowerScoped(s: BoundSelect,
+      source: Analyzer.BoundTable => DataFrame): DataFrame =
+    Lowering.withQueryScope(s, source, scopeStats) { lowerOneSelect(s, source) }
+
   /** Lower any readable query form (SELECT or set-op chain) to a frame —
     * shared by the Rows path and the INSERT…SELECT / CTAS write paths.
     * Every branch gets its own stats-driven plan; a chain is
@@ -2280,7 +2287,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       proj: Option[Analyzer.BoundSelect]): QueryResult = (r, proj) match {
     case (Rows(df), Some(bs)) =>
       val src: Analyzer.BoundTable => DataFrame = _ => df
-      Rows(Lowering.withQueryScope(bs, src, scopeStats) { lowerOneSelect(bs, src) })
+      Rows(lowerScoped(bs, src))
     case _ => r
   }
 
@@ -2315,7 +2322,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           .localCheckpoint()
         val src: Analyzer.BoundTable => DataFrame = bt =>
           if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
-        val rids = Lowering.withQueryScope(ms, src, scopeStats) { lowerOneSelect(ms, src) }
+        val rids = lowerScoped(ms, src)
           .withColumnRenamed("__lkrid", "__delrid")
         (withId.join(rids, col("__lkrid") === col("__delrid"), "left_anti")
           .drop("__lkrid"),
@@ -2351,7 +2358,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           (withId, pred.map(Lowering.lowerExprBare).getOrElse(lit(true)),
             if (needRid) Seq("__lkrid") else Seq.empty[String])
         case Some(ms) =>
-          val rids = Lowering.withQueryScope(ms, src, scopeStats) { lowerOneSelect(ms, src) }
+          val rids = lowerScoped(ms, src)
             .withColumnRenamed("__lkrid", "__updrid").withColumn("__upd", lit(true))
           val joined = withId.join(rids,
             col("__lkrid") === col("__updrid"), "left_outer")
@@ -2367,7 +2374,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       helperCols ++= helperCols0
       val subVals: Seq[(AttributeDesc, org.apache.spark.sql.Column)] =
         subSets.zipWithIndex.map { case ((attr, vs), i) =>
-          val vdf = Lowering.withQueryScope(vs, src, scopeStats) { lowerOneSelect(vs, src) }
+          val vdf = lowerScoped(vs, src)
             .withColumnRenamed("__lkrid", s"__svrid_$i")
             .withColumnRenamed("__sv", s"__sv_$i")
           df = df.join(vdf, col("__lkrid") === col(s"__svrid_$i"), "left_outer")
@@ -2414,8 +2421,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         .localCheckpoint()
       val src: Analyzer.BoundTable => DataFrame = bt =>
         if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
-      val m = Lowering.withQueryScope(matchedSel, src, scopeStats) {
-        lowerOneSelect(matchedSel, src) }
+      val m = lowerScoped(matchedSel, src)
       // SQL standard: more than one source row matching one target row
       // is an error — one bounded probe over the join's key multiset
       val dup = m.filter(col("__msrc").isNotNull)
@@ -2471,8 +2477,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       val image =
         if (iPlans.isEmpty || insertSel.isEmpty) survivors
         else {
-          val ins0 = Lowering.withQueryScope(insertSel.get, src, scopeStats) {
-            lowerOneSelect(insertSel.get, src) }
+          val ins0 = lowerScoped(insertSel.get, src)
           val notMatched = col("__mtgt").isNull
           val iIdx = iPlans.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
             (acc, p) =>

@@ -50,60 +50,23 @@ object Lowering {
       if (counts.getOrElse(bc.attr.name.toLowerCase, 0) > 1) s"${bc.binding}_${bc.attr.name}"
       else bc.attr.name
     }
-    def qcol(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
-
     if (!q.isAggregate) {
       val namedCols = q.projection.collect { case BoundItem.BICol(bc, a) => (bc, a) }
-      // scalar subquery items attach their value to the relational core
-      // BEFORE projection: uncorrelated = one-row broadcast left join on
-      // TRUE (an empty subquery yields SQL NULL, never zero rows);
-      // correlated = the decorrelated per-key aggregate left-joined on
-      // its keys, with the COUNT-over-empty-set coalesce
-      val subScalars: Map[Int, Column] = Map.empty
-      val (base0m, scalarCol) = q.projection.zipWithIndex.foldLeft(
-          (filtered0, subScalars)) {
-        case ((df, m), (BoundItem.BISub(sub, _, _, pairs, Some(iq)), i)) =>
-          // inequality-correlated scalar aggregate → union-merge running
-          // window (one sort shuffle, no candidate fan-out)
-          val (joined, c) = correlatedRunningAgg(spark, df, sub, pairs, iq,
-            source, s"__ps_$i", qcol, windowRows)
-          (joined, m + (i -> c))
-        case ((df, m), (BoundItem.BISub(sub, _, guard, pairs, None), i)) =>
-          val name = s"__ps_$i"
-          if (pairs.isEmpty) {
-            val subDf0 = lowerSelect(spark, sub, source)
-            if (guard)
-              // one-row contract checked AND value captured in one bounded
-              // job — no join, no re-execution in the main plan
-              (df, m + (i -> guardedScalarLit(subDf0)))
-            else
-              (df.join(broadcast(subDf0.toDF(name)), lit(true), "left_outer"),
-                m + (i -> col(name)))
-          } else {
-            val (subAgg, keyCond, scalar) =
-              correlatedScalarAgg(spark, sub, pairs, source, name, s"__ps${i}_c")
-            (df.join(subAgg, keyCond(qcol), "left_outer"), m + (i -> scalar))
-          }
-        case ((df, m), _) => (df, m)
+      // the SELECT list's subqueries attach to the relational core BEFORE
+      // projection: scalar-subquery items first, then the subqueries
+      // inside computed items (CASE conditions, scalar operands); the
+      // final select projects their columns away
+      val ms = new MarkerScope(spark, source, "p", qualified,
+        columnLeaf(qualified), windowRows)
+      val scalarCol: Map[Int, Column] = q.projection.zipWithIndex.collect {
+        case (BoundItem.BISub(sub, _, guard, pairs, iq), i) =>
+          i -> ms.scalar(sub, guard, pairs, iq)
+      }.toMap
+      q.projection.foreach {
+        case BoundItem.BIExpr(op, _) => ms.register(op)
+        case _ => ()
       }
-      // CASE conditions inside computed projections may carry subqueries
-      // (EXISTS / IN / scalar comparisons): their marker frames join the
-      // core BEFORE projection and the final select projects them away
-      val projMs: Option[MarkerScope] =
-        if (!q.projection.exists {
-          case BoundItem.BIExpr(op, _) => BoundNode.hasSubquery(op)
-          case _ => false
-        }) None
-        else {
-          val ms = new MarkerScope(spark, source, "p", qcol, columnLeaf(qcol))
-          q.projection.foreach {
-            case BoundItem.BIExpr(op, _) => ms.register(op)
-            case _ => ()
-          }
-          Some(ms)
-        }
-      val base1 = projMs.fold(base0m)(_.joins.foldLeft(base0m) {
-        case (d, (f, on)) => d.join(f, on, "left_outer") })
+      val base1 = ms.attach(filtered0)
       // QUALIFY: attach every window column (SELECT-list items AND the
       // hidden inline-OVER items) at its alias, filter, and let the final
       // projection read the precomputed columns (and drop hidden ones).
@@ -134,7 +97,7 @@ object Lowering {
       // unpartitioned windows the bucketed operator or the OVER ()
       // broadcast rewrite computes pre-attach (outputCols-time Columns
       // can't rewrite the frame or inject the join)
-      val opL: BoundOperand => Column = lowerOperandWith(_, qcol)
+      val opL: BoundOperand => Column = lowerOperandWith(_, qualified)
       val classified = (q.projection ++ q.qualifyWins).collect {
         case w: BoundItem.BIWin => w -> GlobalWindows.classify(w.alias,
           w.func, w.args, w.partitionBy, w.orderBy, w.frame, opL, oneTaskWins)
@@ -156,29 +119,19 @@ object Lowering {
                 val mk = if (distinctWinEligible(f, args, frame))
                   Some(s"__dmk_$a") else None
                 val d1 = rk.fold(d)(n => d.withColumn(n, groupsRankColumn(
-                  parts, ord, opL, qcol)))
+                  parts, ord, opL, qualified)))
                 val d2 = mk.fold(d1)(n => d1.withColumn(n, distinctMaskColumn(
                   args, parts, ord, opL)))
                 d2.withColumn(a, windowColumn(f, args, parts, ord, frame,
-                    opL, qcol, rk.map(col), mk.map(col)))
+                    opL, qualified, rk.map(col), mk.map(col)))
                   .drop(rk.toSeq ++ mk.toSeq: _*)
             }
           }
-          q.qualify.fold(withWins) { qe =>
-            if (!BoundNode.hasSubquery(qe))
-              withWins.filter(lowerTree(qe, columnLeaf(qcol)))
-            else {
-              // subqueries in QUALIFY: the WHERE mixed-conjunct marker
-              // machinery applied to the WINDOWED frame — marker frames
-              // left-join in, the predicate filters once, markers drop
-              val ms = new MarkerScope(spark, source, "ql", qcol,
-                columnLeaf(qcol))
-              ms.register(qe)
-              val joined = ms.joins.foldLeft(withWins) { case (d, (f, on)) =>
-                d.join(f, on, "left_outer") }
-              joined.filter(ms.lower(qe)).drop(ms.drops.toSeq: _*)
-            }
-          }
+          // QUALIFY's subqueries join the WINDOWED frame
+          val qms = new MarkerScope(spark, source, "ql", qualified,
+            columnLeaf(qualified))
+          qms.filter(q.qualify.toSeq)
+          qms.attach(withWins)
         }
       // DISTINCT ON: first row per key tuple under the query ORDER BY —
       // a row_number window partitioned on the ON keys (one shuffle;
@@ -186,34 +139,32 @@ object Lowering {
       // state is one row, never a per-key sort buffer)
       val base = if (q.distinctOn.isEmpty) baseQ else {
         def okCol(k: BoundOrderKey): Column = k match {
-          case BoundOrderKey.OKOperand(op) => lowerOperandWith(op, qcol)
+          case BoundOrderKey.OKOperand(op) => lowerOperandWith(op, qualified)
           case BoundOrderKey.OKOutput(n) => q.projection.collectFirst {
-            case BoundItem.BICol(bc, Some(a)) if a.equalsIgnoreCase(n) => qcol(bc)
+            case BoundItem.BICol(bc, Some(a)) if a.equalsIgnoreCase(n) => qualified(bc)
             case BoundItem.BIExpr(op, a) if a.equalsIgnoreCase(n) =>
-              lowerOperandWith(op, qcol)
+              lowerOperandWith(op, qualified)
             // window alias: the column is pre-attached (donNeedsWins)
             case BoundItem.BIWin(_, _, _, _, a, _) if a.equalsIgnoreCase(n) =>
               col(a)
           }.getOrElse(sys.error(s"unreachable DISTINCT ON order alias $n"))
         }
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(q.distinctOn.map(lowerOperandWith(_, qcol)): _*)
+          .partitionBy(q.distinctOn.map(lowerOperandWith(_, qualified)): _*)
           .orderBy(q.orderBy.map { case (k, dir) => sortCol(okCol(k), dir) }: _*)
         baseQ.withColumn("__don", row_number().over(w))
           .filter(col("__don") === 1).drop("__don")
       }
-      def projOperand(op: BoundOperand): Column =
-        projMs.fold(lowerOperandWith(op, qcol))(_.lower(op))
       def outputCols: Seq[Column] = q.projection.zipWithIndex.map {
         case (BoundItem.BISub(_, a, _, _, _), i) => scalarCol(i).as(a)
-        case (BoundItem.BICol(bc, a), _)  => qcol(bc).as(outName(bc, a))
-        case (BoundItem.BIExpr(op, a), _) => projOperand(op).as(a)
+        case (BoundItem.BICol(bc, a), _)  => qualified(bc).as(outName(bc, a))
+        case (BoundItem.BIExpr(op, a), _) => ms.lower(op).as(a)
         case (_: BoundItem.BIAgg, _) =>
           sys.error("unreachable: aggregate items take the aggregate branch")
         case (BoundItem.BIWin(f, args, parts, ord, a, frame), _) =>
           if (winsPre) col(a).as(a)
           else windowColumn(f, args, parts, ord, frame,
-            lowerOperandWith(_, qcol), qcol).as(a)
+            lowerOperandWith(_, qualified), qualified).as(a)
       }
       if (q.distinct && q.distinctOn.isEmpty) {
         // DISTINCT applies to the PROJECTED rows, so evaluation reorders:
@@ -251,7 +202,7 @@ object Lowering {
         // TakeOrderedAndProject over the projection)
         val hidden = q.orderBy.zipWithIndex.collect {
           case ((BoundOrderKey.OKOperand(op), _), i) =>
-            s"__sort_$i" -> lowerOperandWith(op, qcol)
+            s"__sort_$i" -> lowerOperandWith(op, qualified)
         }
         val projected = base.select(
           outputCols ++ hidden.map { case (n, c) => c.as(n) }: _*)
@@ -296,7 +247,7 @@ object Lowering {
       // aggregate over a full expression: sum(a * (1 - b)) lowers the
       // argument with qualified (pre-aggregation) column resolution
       def aggNodeCol(node: BoundOperand): Column =
-        Aggregates.lowerNode(node, lowerOperandWith(_, qcol))
+        Aggregates.lowerNode(node, lowerOperandWith(_, qualified))
       val aggExprs = aggItems.map { case (f, arg, dist, _, i) =>
         aggNodeCol(BoundOperand.BAgg(f, arg, dist)).as(aggName(i)) }
       // HAVING / ORDER BY / computed-projection aggregates compute as
@@ -304,12 +255,6 @@ object Lowering {
       // drops them
       val havingAggs =
         scala.collection.mutable.ArrayBuffer.empty[(BoundOperand, String)]
-      // uncorrelated scalar-subquery operands in aggregate scope
-      // (sum(x) / (SELECT sum(x) FROM t)): each a broadcast 1-row frame
-      // joined AFTER aggregation (the expression evaluates over the
-      // grouped frame), or a guarded-literal bounded job
-      val subValJoins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val subValCols = new java.util.IdentityHashMap[BoundOperand, Column]()
       // post-aggregation window column names: projection window items
       // attach as __w_<i>, hidden inline-OVER windows (projection
       // expressions + QUALIFY) at their generated aliases — BOut output
@@ -321,29 +266,13 @@ object Lowering {
             a.toLowerCase -> s"__w_$i"
         } ++ q.qualifyWins.map(w => w.alias.toLowerCase -> w.alias.toLowerCase)).toMap
       // post-aggregation resolution: group keys by grouped name,
-      // aggregate calls as hidden agg columns (registered as they lower),
-      // scalar-subquery operands as broadcast 1-row frames joined after
-      // aggregation
+      // aggregate calls as hidden agg columns (registered as they lower)
       def hiddenAgg(a: BoundOperand): Column = {
         val name = s"__h_${havingAggs.length}"
         havingAggs += ((a, name))
         col(name)
       }
-      val havingLeaf: PartialFunction[BoundNode, Column] = {
-        case v @ BoundOperand.BSubVal(sub, guard, _, None) =>
-          // correlated forms are analyzer-rejected in aggregate scope
-          Option(subValCols.get(v)).getOrElse {
-            val c =
-              if (guard) guardedScalarLit(lowerSelect(spark, sub, source))
-              else {
-                val name = s"__es_${subValJoins.length}"
-                subValJoins += broadcast(
-                  lowerSelect(spark, sub, source).toDF(name))
-                col(name)
-              }
-            subValCols.put(v, c)
-            c
-          }
+      val groupedLeaf: PartialFunction[BoundNode, Column] = {
         case BoundOperand.BCol(c) => col(groupOut(c))
         case a: BoundOperand.BAgg        => hiddenAgg(a)
         case a: BoundOperand.BOrderedAgg => hiddenAgg(a)
@@ -355,110 +284,41 @@ object Lowering {
           // windows; analyzer scope)
           col(qualifyWinAliasCol(n.toLowerCase))
       }
-      def havingOperand(o: BoundOperand): Column = lowerTree(o, havingLeaf)
-      // HAVING splits into plain conjuncts (a post-aggregation filter) and
-      // scalar-subquery conjuncts (each a broadcast join of its 1-row
-      // frame after aggregation). The subquery operands register their
-      // hidden aggregate columns NOW — before agg() assembles.
-      val havingConjs = q.having.map(BoundExpr.conjuncts).getOrElse(Nil)
-      val (havingWithSub, havingPlainConjs) =
-        havingConjs.partition(BoundNode.hasSubquery)
-      // pure top-level subquery conjuncts take the semi/anti path; mixed
-      // ones (subqueries under OR) get boolean-marker joins
-      val (havingSubConjs, havingMixedConjs) = havingWithSub.partition {
-        case _: BoundExpr.BInSub | _: BoundExpr.BExists | _: BoundExpr.BCmpSub => true
-        case _ => false
-      }
-      val havingCond = havingPlainConjs.map(lowerTree(_, havingLeaf))
-        .reduceOption(_ && _)
-      // probe operands lower NOW (registering hidden aggregate columns
-      // before the agg assembles); the joins themselves fold in after
-      // aggregation + plain-HAVING filtering
-      sealed trait HSub
-      case class HCmp(op: Ast.CmpOp, lc: Column, sub: BoundSelect,
-        guard: Boolean, pairs: Seq[(BoundCol, BoundCol)]) extends HSub
-      case class HIn(lc: Column, sub: BoundSelect,
-        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean) extends HSub
-      case class HExists(sub: BoundSelect,
-        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean) extends HSub
-      val havingSubParts: Seq[HSub] = havingSubConjs.map {
-        case BoundExpr.BCmpSub(op, o, ssub, guard, pairs) =>
-          HCmp(op, havingOperand(o), ssub, guard, pairs)
-        case BoundExpr.BInSub(o, ssub, pairs, neg) =>
-          HIn(havingOperand(o), ssub, pairs, neg)
-        // residual is analyzer-rejected in HAVING scope (Seq() pin)
-        case BoundExpr.BExists(ssub, pairs, neg, Seq()) =>
-          HExists(ssub, pairs, neg)
-        case _ => sys.error(
-          "unreachable: analyzer allows only subquery conjuncts here")
-      }
-      def qcolSub(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
-      // mixed HAVING conjuncts (subqueries under OR or NOT): probes and
-      // plain parts lower NOW — their hidden aggregate columns must
-      // register before the agg assembles — while each subquery's marker
-      // frames + join conditions (on the GROUP BY keys' output columns)
-      // are captured for application after aggregation
-      val havingMixedPlans = havingMixedConjs.zipWithIndex.map { case (c0, t) =>
-        val ms = new MarkerScope(spark, source, s"h$t",
-          bc => col(groupOut(bc)), havingLeaf)
-        ms.register(c0)
-        (ms.joins.toSeq, ms.lower(c0), ms.drops.toSeq)
-      }
+      // the grouped frame's subqueries — HAVING, the SELECT list and the
+      // scalar operands of ORDER BY, DISTINCT ON and windows — register
+      // NOW, so their probe aggregates become hidden agg columns before
+      // the agg assembles; they attach after aggregation (outer
+      // references are GROUP BY keys, analyzer-guaranteed)
+      val aggMs = new MarkerScope(spark, source, "h",
+        bc => col(groupOut(bc)), groupedLeaf, windowRows)
+      aggMs.filter(q.having.map(BoundExpr.conjuncts).getOrElse(Nil))
       // computed projections in aggregate scope (count(*) * 2 AS n2):
-      // their aggregate calls become hidden agg columns — registered into
-      // the same buffer BEFORE the agg() is assembled — and the expression
-      // evaluates over them (and grouped names) at the final projection
-      // a computed item whose alias IS a group key projects the grouped
+      // their subqueries register first; then each item lowers, its
+      // aggregate calls becoming hidden agg columns — registered into the
+      // same buffer BEFORE the agg() is assembled — and the expression
+      // evaluates over them (and grouped names) at the final projection.
+      // A computed item whose alias IS a group key projects the grouped
       // column (recomputing would reference pre-aggregation inputs)
-      //
-      // predicate-form subqueries inside the expression (CASE WHEN k IN
-      // (SELECT …) THEN count(*) …) get their own post-aggregation
-      // MarkerScope keyed on the GROUP BY output columns — registered
-      // NOW so probe aggregates become hidden agg columns, frames
-      // left-joined after the HAVING machinery, markers dying at the
-      // final explicit projection (analyzer guarantees every outer
-      // reference is a GROUP BY key)
-      // inequality-correlated scalar-subquery ITEMS (rewritten onto
-      // BSubVal by the analyzer) take the union-merge running-aggregate
-      // lowering over the GROUPED frame — handled after aggregation, not
-      // through the marker machinery; their scalar columns register here
-      val ineqItems: Seq[(Int, BoundSelect, Seq[(BoundCol, BoundCol)],
-          Analyzer.CorrIneq, String)] =
-        q.projection.zipWithIndex.collect {
-          case (BoundItem.BIExpr(
-              BoundOperand.BSubVal(sub, _, ps, Some(iq)), a), i) =>
-            (i, sub, ps, iq, a)
-        }
-      val ineqIdx = ineqItems.map(_._1).toSet
-      val ineqScalarOf = scala.collection.mutable.Map.empty[Int, Column]
-      val projMarkers: Map[Int, MarkerScope] =
-        q.projection.zipWithIndex.collect {
-          case (BoundItem.BIExpr(op, a), i)
-              if !groupExprAliases(a.toLowerCase) && !ineqIdx(i) &&
-                BoundNode.hasSubquery(op) =>
-            val ms = new MarkerScope(spark, source, s"px$i",
-              bc => col(groupOut(bc)), havingLeaf)
-            ms.register(op)
-            i -> ms
-        }.toMap
-      val exprCols: Map[Int, Column] = q.projection.zipWithIndex.collect {
-        case (BoundItem.BIExpr(op, a), i) if !ineqIdx(i) =>
-          i -> (if (groupExprAliases(a.toLowerCase)) col(a).as(a)
-                else projMarkers.get(i).map(_.lower(op).as(a))
-                  .getOrElse(havingOperand(op).as(a)))
-      }.toMap
+      val exprOps = q.projection.zipWithIndex.collect {
+        case (BoundItem.BIExpr(op, a), i) if !groupExprAliases(a.toLowerCase) =>
+          i -> op
+      }
+      exprOps.foreach(x => aggMs.register(x._2))
+      val exprCols = exprOps.map { case (i, op) => i -> aggMs.lower(op) }.toMap
       // ORDER BY keys in aggregate scope lower NOW so their aggregate
       // calls register hidden columns before the agg() assembles: output
-      // aliases resolve to post-aggregation column names, operands go
-      // through havingOperand (group keys by grouped name, aggregates as
-      // hidden agg columns)
+      // aliases resolve to post-aggregation column names, operands
+      // resolve post-aggregation (group keys by grouped name, aggregates
+      // as hidden agg columns, scalar subqueries through aggMs)
       // a subtree that IS a group expression resolves to the grouped key
-      // column (recomputing would reference pre-agg inputs); everything
-      // else resolves like havingOperand
+      // column (recomputing would reference pre-agg inputs)
+      val scalarLeaf: PartialFunction[BoundNode, Column] = {
+        case v: BoundOperand.BSubVal => aggMs.value(v)
+      }
       val aggScopeLeaf: PartialFunction[BoundNode, Column] =
         Function.unlift((n: BoundNode) => q.groupBy.collectFirst {
           case BoundGroupKey.GKExpr(gop, a) if gop == n => col(a)
-        }) orElse havingLeaf
+        }) orElse scalarLeaf orElse groupedLeaf
       def aggScopeOperand(op: BoundOperand): Column = lowerTree(op, aggScopeLeaf)
       val orderCols: Seq[(Column, Ast.SortDir)] = q.orderBy.map { case (k, desc) =>
         val c = k match {
@@ -467,7 +327,7 @@ object Lowering {
               case (BoundItem.BIAgg(_, _, Some(a), _), i) if a.equalsIgnoreCase(n) =>
                 col(aggName(i))
               case (BoundItem.BIExpr(op, a), _) if a.equalsIgnoreCase(n) =>
-                if (groupExprAliases(a.toLowerCase)) col(a) else havingOperand(op)
+                if (groupExprAliases(a.toLowerCase)) col(a) else aggMs.lower(op)
               case (BoundItem.BICol(bc, Some(a)), _) if a.equalsIgnoreCase(n) =>
                 col(groupOut(bc))
               case (BoundItem.BIWin(_, _, _, _, a, _), i) if a.equalsIgnoreCase(n) =>
@@ -539,30 +399,18 @@ object Lowering {
         winLowered.collect { case (n, Right(c)) => n -> c }
       val winReqs: Seq[GlobalWindows.Req] =
         winLowered.collect { case (_, Left(r)) => r }
-      // subquery-bearing QUALIFY over an aggregated query: the
-      // post-aggregation marker machinery, registered NOW (probe
-      // aggregates become hidden agg columns before the agg assembles),
-      // frames joined onto the WINDOWED frame below
-      // the predicate lowers EAGERLY too — probe aggregates reached only
-      // through plain conjuncts (sum(v) * 2 > (SELECT …)) must register
-      // their hidden agg columns before the agg assembles, exactly like
-      // the HAVING mixed-conjunct plans
-      val qualifyMarkers: Option[(MarkerScope, Column)] = q.qualify.collect {
-        case qe if BoundNode.hasSubquery(qe) =>
-          val ms = new MarkerScope(spark, source, "qla",
-            bc => col(groupOut(bc)), aggScopeLeaf)
-          ms.register(qe)
-          (ms, ms.lower(qe))
-      }
-      val qualifyFilter: Option[Column] = q.qualify.collect {
-        case qe if !BoundNode.hasSubquery(qe) => lowerTree(qe, aggScopeLeaf)
-      }
+      // QUALIFY over an aggregated query: its subqueries join the
+      // WINDOWED frame below; the predicate lowers NOW, so its probe
+      // aggregates register hidden agg columns before the agg assembles
+      val qms = new MarkerScope(spark, source, "qla",
+        bc => col(groupOut(bc)), aggScopeLeaf)
+      qms.filter(q.qualify.toSeq)
       val hiddenExprs = havingAggs.map { case (node, name) =>
         aggNodeCol(node).as(name) }
       val allAggs = aggExprs ++ hiddenExprs
       val keyCols = q.groupBy.map {
-        case BoundGroupKey.GKCol(bc)     => qcol(bc).as(groupOut(bc))
-        case BoundGroupKey.GKExpr(op, a) => lowerOperandWith(op, qcol).as(a)
+        case BoundGroupKey.GKCol(bc)     => qualified(bc).as(groupOut(bc))
+        case BoundGroupKey.GKExpr(op, a) => lowerOperandWith(op, qualified).as(a)
       }
       val grouped0 = q.groupSpec match {
         case None =>
@@ -576,8 +424,8 @@ object Lowering {
         // renames positionally: agg output order is keys then aggregates.
         case Some(spec) =>
           val rawKeys = q.groupBy.map {
-            case BoundGroupKey.GKCol(bc)     => qcol(bc)
-            case BoundGroupKey.GKExpr(op, _) => lowerOperandWith(op, qcol)
+            case BoundGroupKey.GKCol(bc)     => qualified(bc)
+            case BoundGroupKey.GKExpr(op, _) => lowerOperandWith(op, qualified)
           }
           val keyNames = q.groupBy.map {
             case BoundGroupKey.GKCol(bc)     => groupOut(bc)
@@ -633,103 +481,10 @@ object Lowering {
               lit(true), "left_anti"))
           }
       }
-      val grouped1 = havingCond.fold(grouped0)(grouped0.filter)
-      val grouped2 = havingSubParts.zipWithIndex.foldLeft(grouped1) {
-        case (acc, (HCmp(op, lc, ssub, guard, Seq()), i)) =>
-          val subDf0 = lowerSelect(spark, ssub, source)
-          if (guard) acc.filter(cmpCols(op, lc, guardedScalarLit(subDf0)))
-          else {
-            val name = s"__hs_$i"
-            val subDf = subDf0.toDF(name)
-            acc.join(broadcast(subDf), cmpCols(op, lc, col(name)), "inner").drop(name)
-          }
-        case (acc, (HCmp(op, lc, ssub, _, pairs), i)) =>
-          // correlated: the per-key aggregate left-joins on the GROUP BY
-          // keys' post-aggregation columns (analyzer guarantees every
-          // decorrelation key is a group key); left join + the count
-          // coalesce preserve groups whose correlated set is empty
-          val name = s"__hs_$i"
-          val (subAgg, keyCond, scalar) =
-            correlatedScalarAgg(spark, ssub, pairs, source, name, s"__hs${i}_c")
-          acc.join(subAgg, keyCond(bc => col(groupOut(bc))), "left_outer")
-            .filter(cmpCols(op, lc, scalar))
-            .drop(name +: pairs.indices.map(k => s"__hs${i}_c$k"): _*)
-        case (acc, (HExists(ssub, pairs, neg), i)) =>
-          val joinType = if (neg) "left_anti" else "left_semi"
-          if (pairs.isEmpty) {
-            // emptiness of the whole subquery decides for every group
-            val subDf = lowerSelect(spark, ssub, source).limit(1)
-            acc.join(broadcast(subDf), lit(true), joinType)
-          } else {
-            // correlated on group keys: semi/anti join the subquery's
-            // key columns against the grouped output columns
-            val core = combine(spark, ssub, source, Set.empty, None)
-            val subDf = core.select(pairs.zipWithIndex.map {
-              case ((_, ic), k) => qcolSub(ic).as(s"__he${i}_$k") }: _*)
-            val cond = pairs.zipWithIndex.map { case ((oc, _), k) =>
-              col(groupOut(oc)) === subDf(s"__he${i}_$k") }.reduce(_ && _)
-            acc.join(subDf, cond, joinType)
-          }
-        case (acc, (HIn(lc, ssub, pairs, neg), i)) =>
-          val joinType = if (neg) "left_anti" else "left_semi"
-          if (pairs.isEmpty) {
-            val subDf = lowerSelect(spark, ssub, source)
-            val vcol = subDf.columns.head
-            if (neg) {
-              // null-aware NOT IN after aggregation — same 1-row facts +
-              // hash anti join as the WHERE-scope lowering
-              val facts = subDf.agg(count(lit(1)).as("__hnin_n"),
-                count(col(vcol)).as("__hnin_nonnull"))
-              acc.join(broadcast(facts), lit(true), "inner")
-                .filter(col("__hnin_n") === 0 ||
-                  (lc.isNotNull && col("__hnin_n") === col("__hnin_nonnull")))
-                .drop("__hnin_n", "__hnin_nonnull")
-                .join(subDf, lc === subDf(vcol), "left_anti")
-            } else acc.join(subDf, lc === subDf(vcol), joinType)
-          } else {
-            val core = combine(spark, ssub, source, Set.empty, None)
-            val inVal = rowValueCol(ssub.projection.head, qcolSub)
-            val subDf = core.select(inVal.as(s"__hin${i}_v") +:
-              pairs.zipWithIndex.map { case ((_, ic), k) =>
-                qcolSub(ic).as(s"__hin${i}_$k") }: _*)
-            val pairConds = pairs.zipWithIndex.map { case ((oc, _), k) =>
-              col(groupOut(oc)) === subDf(s"__hin${i}_$k") }
-            val valCond =
-              if (neg) lc === subDf(s"__hin${i}_v") ||
-                lc.isNull || subDf(s"__hin${i}_v").isNull
-              else lc === subDf(s"__hin${i}_v")
-            acc.join(subDf, (valCond +: pairConds).reduce(_ && _), joinType)
-          }
-      }
-      // mixed HAVING conjuncts apply after the pure subquery joins: each
-      // marker frame left-joins, the disjunction filters, markers drop
-      val groupedM = havingMixedPlans.foldLeft(grouped2) {
-        case (acc, (joins, pred, drops)) =>
-          joins.foldLeft(acc) { case (df, (f, on)) => df.join(f, on, "left_outer") }
-            .filter(pred).drop(drops: _*)
-      }
-      // projection marker frames left-join the aggregated (and HAVING-
-      // filtered) frame — 1:1 by construction, marker columns die at the
-      // final explicit projection
-      val groupedPm = projMarkers.values.foldLeft(groupedM) { (acc, ms) =>
-        ms.joins.foldLeft(acc) { case (df, (f, on)) =>
-          df.join(f, on, "left_outer") }
-      }
-      // scalar-subquery operand frames join the aggregated result (their
+      // HAVING filters, then the SELECT list's and the scalar operands'
+      // subqueries join the aggregated frame (1:1 by construction; their
       // columns die at the final explicit projection)
-      val groupedSv = subValJoins.foldLeft(groupedPm)(
-        (df, f) => df.join(f, lit(true), "left_outer"))
-      // inequality-correlated scalar items: the union-merge running
-      // aggregate runs against the GROUPED frame — the tag side is one
-      // row per distinct (group keys, outer operand) value, so the sort
-      // shuffle is group-cardinality-bounded, never a candidate fan-out
-      val grouped = ineqItems.foldLeft(groupedSv) {
-        case (acc, (i, sub, ps, iq, _)) =>
-          val (joined, scalar) = correlatedRunningAgg(spark, acc, sub, ps,
-            iq, source, s"__piq_$i", bc => col(groupOut(bc)), windowRows)
-          ineqScalarOf(i) = scalar
-          joined
-      }
+      val grouped = aggMs.attach(grouped0)
       // window columns compute over the aggregated (and HAVING-filtered)
       // frame, BEFORE the final ORDER BY — the window's own exchange
       // must not disturb the result ordering
@@ -749,24 +504,18 @@ object Lowering {
       // DISTINCT/ORDER BY (clause order); hidden window columns die at
       // the final projection. Subquery predicates left-join their marker
       // frames onto the windowed frame first (1:1), filter, then drop.
-      val qualified = qualifyMarkers match {
-        case Some((ms, predCol)) =>
-          val joined = ms.joins.foldLeft(withWins) { case (d, (f, on)) =>
-            d.join(f, on, "left_outer") }
-          joined.filter(predCol).drop(ms.drops.toSeq: _*)
-        case _ => qualifyFilter.fold(withWins)(withWins.filter)
-      }
+      val qualifyFiltered = qms.attach(withWins)
       // DISTINCT ON first-row selection: a row_number window on the ON
       // keys ordered by the (ON-key-led) query ORDER BY — Catalyst
       // plans the rn=1 filter as WindowGroupLimit, one row of state per
       // key (same shape as the row-scope path)
       val donned =
-        if (q.distinctOn.isEmpty) qualified
+        if (q.distinctOn.isEmpty) qualifyFiltered
         else {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(donCols: _*)
             .orderBy(orderCols.map { case (c, dir) => sortCol(c, dir) }: _*)
-          qualified.withColumn("__don", row_number().over(w))
+          qualifyFiltered.withColumn("__don", row_number().over(w))
             .filter(col("__don") === 1).drop("__don")
         }
       // ORDER BY runs on the post-aggregation names BEFORE the final
@@ -776,11 +525,11 @@ object Lowering {
         orderCols.map { case (c, dir) => sortCol(c, dir) }: _*)
       val projected = ordered.select(q.projection.zipWithIndex.map {
         case (BoundItem.BICol(bc, a), _) => col(groupOut(bc)).as(outName(bc, a))
-        case (BoundItem.BIExpr(_, a), i) if ineqIdx(i) =>
-          ineqScalarOf(i).as(a)
-        case (_: BoundItem.BIExpr, i)    => exprCols(i)
+        case (BoundItem.BIExpr(_, a), i) => exprCols.getOrElse(i, col(a)).as(a)
         case (BoundItem.BIAgg(_, _, _, _), i) => col(aggName(i))
         case (BoundItem.BIWin(_, _, _, _, a, _), i) => col(s"__w_$i").as(a)
+        case (_: BoundItem.BISub, _) =>
+          sys.error("unreachable: aggregate scope binds scalar items as BSubVal")
       }: _*)
       // SELECT DISTINCT over an aggregate result: a no-op unless the
       // projection drops group keys; apply it for correctness either way
@@ -1238,19 +987,18 @@ object Lowering {
   private def joinAggLateral(spark: SparkSession, df: DataFrame,
       bt: BoundTable, l: Analyzer.BoundLateral,
       source: BoundTable => DataFrame): DataFrame = {
-    def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
     val core = combine(spark, l.sub, source, Set.empty, None)
     val aggExprs = l.sub.projection.zipWithIndex.map {
       case (BoundItem.BIAgg(f, arg, _, dist), i) =>
         Aggregates.lowerNode(BoundOperand.BAgg(f, arg, dist),
-          lowerOperandWith(_, qcolOf)).as(s"__pa$i")
+          lowerOperandWith(_, qualified)).as(s"__pa$i")
       case other => sys.error(s"unreachable aggregate LATERAL item $other")
     }
     val keyCols = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
-      qcolOf(ic).as(s"__pk$i") }
+      qualified(ic).as(s"__pk$i") }
     val perKey = core.groupBy(keyCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
     val outKeys = df.select(l.pairs.zipWithIndex.map { case ((oc, _), i) =>
-      qcolOf(oc).as(s"__ok$i") }: _*).distinct()
+      qualified(oc).as(s"__ok$i") }: _*).distinct()
     val completed = outKeys.join(perKey,
       l.pairs.indices.map(i => col(s"__ok$i") === perKey(s"__pk$i")).reduce(_ && _),
       "left_outer")
@@ -1261,7 +1009,7 @@ object Lowering {
     } ++ l.hiddenKeys.zipWithIndex.map { case (hk, i) => col(s"__ok$i").as(hk) }
     val frame = completed.select(outCols: _*).alias(bt.binding)
     val on = l.pairs.zipWithIndex.map { case ((oc, _), i) =>
-      qcolOf(oc) <=> col(s"${bt.binding}.${l.hiddenKeys(i)}") }.reduce(_ && _)
+      qualified(oc) <=> col(s"${bt.binding}.${l.hiddenKeys(i)}") }.reduce(_ && _)
     df.join(frame, on)
   }
 
@@ -1433,22 +1181,21 @@ object Lowering {
   private def joinSetLateral(spark: SparkSession, df: DataFrame,
       bt: BoundTable, ls: Analyzer.BoundLateralSet,
       source: BoundTable => DataFrame): DataFrame = {
-    def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
     val visNames = bt.desc.attributes.map(_.name)
       .dropRight(ls.hiddenKeys.length)
     val allNames = visNames ++ ls.hiddenKeys
     lazy val outKeys = df.select(ls.keyOuter.zipWithIndex.map { case (oc, i) =>
-      qcolOf(oc).as(ls.hiddenKeys(i)) }: _*).distinct()
+      qualified(oc).as(ls.hiddenKeys(i)) }: _*).distinct()
     def frame(core: BoundSelect, innerKeys: Seq[BoundCol]): DataFrame =
       if (innerKeys.isEmpty)
         lowerSelect(spark, core, source).crossJoin(outKeys).toDF(allNames: _*)
       else {
         val c = combine(spark, core, source, Set.empty, None)
         val visible = core.projection.map(it =>
-          rowValueCol(it, qcolOf).as(it.columnName.mkString))
+          rowValueCol(it, qualified).as(it.columnName.mkString))
         val keys = innerKeys.zipWithIndex.map { case (ic, i) =>
-          qcolOf(ic).as(ls.hiddenKeys(i)) }
-        c.filter(innerKeys.map(ic => qcolOf(ic).isNotNull).reduce(_ && _))
+          qualified(ic).as(ls.hiddenKeys(i)) }
+        c.filter(innerKeys.map(ic => qualified(ic).isNotNull).reduce(_ && _))
           .select(visible ++ keys: _*).toDF(allNames: _*)
       }
     val folded = lowerUnion(
@@ -1457,7 +1204,7 @@ object Lowering {
       Nil, None, None)
     val frame2 = folded.alias(bt.binding)
     val on = ls.keyOuter.zipWithIndex.map { case (oc, i) =>
-      qcolOf(oc) <=> col(s"${bt.binding}.${ls.hiddenKeys(i)}") }.reduce(_ && _)
+      qualified(oc) <=> col(s"${bt.binding}.${ls.hiddenKeys(i)}") }.reduce(_ && _)
     df.join(frame2, on)
   }
 
@@ -1473,17 +1220,16 @@ object Lowering {
       pairs: Seq[(BoundCol, BoundCol)], source: BoundTable => DataFrame,
       scalarName: String, keyPrefix: String)
       : (DataFrame, (BoundCol => Column) => Column, Column) = {
-    def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
     val core = combine(spark, sub, source, Set.empty, None)
     val keyCols = pairs.zipWithIndex.map { case ((_, ic), k) =>
-      qcolOf(ic).as(s"$keyPrefix$k") }
+      qualified(ic).as(s"$keyPrefix$k") }
     // count() over an empty correlated set is 0, not NULL — the classic
     // COUNT decorrelation trap. The empty-group value wraps the POST-left-
     // join column reference, so unmatched outer keys read it too.
     val (subAgg, scalar) = sub.projection.head match {
       case BoundItem.BIAgg(f, arg, _, dist) =>
         val g = core.groupBy(keyCols: _*).agg(Aggregates.lowerNode(
-          BoundOperand.BAgg(f, arg, dist), lowerOperandWith(_, qcolOf)).as(scalarName))
+          BoundOperand.BAgg(f, arg, dist), lowerOperandWith(_, qualified)).as(scalarName))
         (g, Aggregates.completed(f, g(scalarName)))
       case BoundItem.BIExpr(op, _) =>
         // an expression OVER aggregate calls (0.2 * avg(x), the TPC-H
@@ -1491,7 +1237,7 @@ object Lowering {
         // per-key column, the expression projects over them post-join
         val nodes = Analyzer.BoundNode.aggNodes(op).distinct
         val hidden = nodes.zipWithIndex.map { case (n, i) =>
-          Aggregates.lowerNode(n, lowerOperandWith(_, qcolOf))
+          Aggregates.lowerNode(n, lowerOperandWith(_, qualified))
             .as(s"${scalarName}_a$i")
         }
         val g = core.groupBy(keyCols: _*).agg(hidden.head, hidden.tail: _*)
@@ -1535,8 +1281,7 @@ object Lowering {
       sub: BoundSelect, pairs: Seq[(BoundCol, BoundCol)],
       iq: Analyzer.CorrIneq, source: BoundTable => DataFrame,
       name: String, qcolOuter: BoundCol => Column,
-      outerRows: Option[Long]): (DataFrame, Column) = {
-    def qcolSub(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
+      outerRows: Option[Long]): DataFrame = {
     val core = combine(spark, sub, source, Set.empty, None)
     val kN = pairs.indices.map(j => s"${name}_k$j")
     val tN = s"${name}_t"
@@ -1549,11 +1294,11 @@ object Lowering {
       case other => sys.error(s"unreachable aggregate node $other")
     }
     val inner0 = core.select(
-      pairs.zipWithIndex.map { case ((_, ic), j) => qcolSub(ic).as(kN(j)) } ++
-        Seq(lowerOperandWith(iq.innerOp, qcolSub).as(tN)) ++
+      pairs.zipWithIndex.map { case ((_, ic), j) => qualified(ic).as(kN(j)) } ++
+        Seq(lowerOperandWith(iq.innerOp, qualified).as(tN)) ++
         nodes.zipWithIndex.map { case ((_, arg), j) =>
           // count(*) rides an indicator column (counts rows, not values)
-          arg.map(lowerOperandWith(_, qcolSub)).getOrElse(lit(1L))
+          arg.map(lowerOperandWith(_, qualified)).getOrElse(lit(1L))
             .as(s"${name}_a$j") }: _*)
       .filter((kN.map(col) :+ col(tN)).map(_.isNotNull).reduce(_ && _))
       .withColumn(tagN, lit(false))
@@ -1643,12 +1388,15 @@ object Lowering {
     val cond = (pairs.zipWithIndex.map { case ((oc, _), j) =>
       qcolOuter(oc) <=> ran(kN(j)) } :+
       (lowerOperandWith(iq.outerOp, qcolOuter) <=> ran(tN))).reduce(_ && _)
-    val joined = df.join(ran, cond, "left_outer")
-    val nodeCol: Map[BoundNode, Column] = aggNodes.zipWithIndex.map {
-      case (n2, j) => (n2: BoundNode) -> ran(s"${name}_r$j")
-    }.toMap
-    val scalar = lowerTree(value, nodeCol)
-    (joined, scalar)
+    df.join(ran, cond, "left_outer")
+  }
+
+  /** The scalar column [[correlatedRunningAgg]] joins under `name`. */
+  private def runningAggValue(sub: BoundSelect, name: String): Column = {
+    val value = sub.projection.head.operands.head
+    lowerTree(value, Analyzer.BoundNode.aggNodes(value).distinct.zipWithIndex.map {
+      case (n, j) => (n: BoundNode) -> col(s"${name}_r$j")
+    }.toMap)
   }
 
   /** The relational core of a SELECT: inner-join group (stats-ordered when
@@ -1694,16 +1442,8 @@ object Lowering {
       else Seq(spark.range(0L, 1L, 1L, 1).toDF().drop("id"))
     val allConj: Seq[BoundExpr] = q.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
     // subquery conjuncts — IN/EXISTS/scalar comparisons — lower as joins
-    // AFTER the plain filter/join phase. A PURE top-level subquery
-    // conjunct takes the efficient semi/anti-join path; a MIXED conjunct
-    // (subqueries under OR) lowers each subquery to a boolean-marker
-    // left join and filters the disjunction afterwards.
-    val (subConjs, restConj) = allConj.partition {
-      case _: BoundExpr.BInSub | _: BoundExpr.BExists | _: BoundExpr.BCmpSub |
-           _: BoundExpr.BRowInSub => true
-      case _ => false
-    }
-    val (mixedSubConjs, conj0) = restConj.partition(BoundNode.hasSubquery)
+    // AFTER the plain filter/join phase (MarkerScope.filter)
+    val (subConjs, conj0) = allConj.partition(BoundNode.hasSubquery)
     // a conjunct that references an outer-joined table must evaluate AFTER
     // that join (it would be unresolvable — and wrong — before it). And
     // once any RIGHT/FULL step can null-extend the INNER group's side,
@@ -1831,212 +1571,10 @@ object Lowering {
     val postFiltered =
       if (postOuterConj.isEmpty) withOuter
       else withOuter.filter(postOuterConj.map(lowerExpr).reduce(_ && _))
-    // each subquery lowers independently (its own scope); membership joins
-    // left-semi/left-anti on the single output column (plus decorrelated
-    // equality pairs), EXISTS the same without a value column, and a
-    // scalar comparison broadcast-joins the one-row frame and filters
-    def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
-    val afterSubs = subConjs.zipWithIndex.foldLeft(postFiltered) {
-      case (df, (BoundExpr.BInSub(o, sub, pairs, neg), _)) =>
-        val joinType = if (neg) "left_anti" else "left_semi"
-        if (pairs.isEmpty) {
-          val subDf = lowerSelect(spark, sub, source)
-          if (neg) {
-            // Null-aware NOT IN (SQL 3VL): the whole predicate is TRUE only
-            // when the subquery is empty, or the probe is non-NULL, the
-            // subquery has no NULLs, and no value matches. The NULL/empty
-            // facts are one broadcast 1-row aggregate (count vs non-null
-            // count); the no-match part stays a plain hash anti join — no
-            // nested-loop NAAJ plan at any scale.
-            val vcol = subDf.columns.head
-            val facts = subDf.agg(count(lit(1)).as("__nin_n"),
-              count(col(vcol)).as("__nin_nonnull"))
-            df.join(broadcast(facts), lit(true), "inner")
-              .filter(col("__nin_n") === 0 ||
-                (lowerOperand(o).isNotNull && col("__nin_n") === col("__nin_nonnull")))
-              .drop("__nin_n", "__nin_nonnull")
-              .join(subDf, lowerOperand(o) === subDf(vcol), "left_anti")
-          } else
-            df.join(subDf, lowerOperand(o) === subDf(subDf.columns.head), joinType)
-        } else {
-          // correlated: the subquery's core + its IN value + the inner
-          // side of each decorrelated pair, joined semi/anti on all of them
-          val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = rowValueCol(sub.projection.head, qcolOf)
-          val subDf = core.select(inVal.as("__in_v") +:
-            pairs.zipWithIndex.map { case ((_, ic), k) => qcolOf(ic).as(s"__c$k") }: _*)
-          val pairConds =
-            pairs.zipWithIndex.map { case ((oc, _), k) => qcolOf(oc) === subDf(s"__c$k") }
-          // null-aware for NOT IN: a per-key set member that is NULL (or a
-          // NULL probe against a non-empty key set) poisons the predicate
-          // to non-TRUE, so the anti join must also match on those. The
-          // pair equalities stay equi keys — Spark hash-partitions on them
-          // and evaluates the disjunction as the join's extra condition.
-          val valCond =
-            if (neg) lowerOperand(o) === subDf("__in_v") ||
-              lowerOperand(o).isNull || subDf("__in_v").isNull
-            else lowerOperand(o) === subDf("__in_v")
-          df.join(subDf, (valCond +: pairConds).reduce(_ && _), joinType)
-        }
-      case (df, (BoundExpr.BRowInSub(os, sub, pairs, true), _)) =>
-        // Null-aware row-value NOT IN, exact SQL 3VL: a row is KEPT iff
-        // NO subquery row is "compatible" with the probe (compatible =
-        // every component equal or null on either side — the rows whose
-        // comparison is TRUE or UNKNOWN). Decomposition that never needs
-        // a nested-loop join: for every PROPER subset U of components,
-        // one HASH anti join keyed on the components outside U (plus the
-        // decorrelated pair equalities), with the U components'
-        // either-side-null test riding as the join's residual condition;
-        // the U = all-components case has no component key left and
-        // reduces to per-null-mask emptiness FACTS — one bounded
-        // aggregate, broadcast when uncorrelated, left-joined per pair
-        // key when correlated (an absent key = empty per-key set = kept).
-        // 2^k - 1 key-bounded anti joins + one facts frame; the analyzer
-        // caps k at 3, so the fan-out is at most 7 joins.
-        {
-          val k = os.length
-          val subDf =
-            if (pairs.isEmpty) {
-              val subDf0 = lowerSelect(spark, sub, source)
-              subDf0.toDF(subDf0.columns.indices.map(i => s"__rv$i"): _*)
-            } else {
-              val core = combine(spark, sub, source, Set.empty, None)
-              val vals = sub.projection.map(rowValueCol(_, qcolOf))
-              core.select(
-                vals.zipWithIndex.map { case (v, i) => v.as(s"__rv$i") } ++
-                pairs.zipWithIndex.map { case ((_, ic), j) => qcolOf(ic).as(s"__c$j") }: _*)
-            }
-          val probes = os.map(lowerOperand)
-          val all = (1 << k) - 1
-          // facts: for mask m, does S contain a row NULL on every
-          // component in m? (m = 0 reads "is the [per-key] set non-empty")
-          val factsAggs = (0 to all).map { m =>
-            val cond = (0 until k).filter(i => (m & (1 << i)) != 0)
-              .map(i => col(s"__rv$i").isNull)
-              .foldLeft(lit(true))(_ && _)
-            coalesce(max(when(cond, 1).otherwise(0)), lit(0)).as(s"__nf$m")
-          }
-          var cur =
-            if (pairs.isEmpty)
-              df.join(broadcast(subDf.agg(factsAggs.head, factsAggs.tail: _*)),
-                lit(true), "inner")
-            else {
-              val facts = subDf
-                .groupBy(pairs.indices.map(j => col(s"__c$j").as(s"__nfk$j")): _*)
-                .agg(factsAggs.head, factsAggs.tail: _*)
-              df.join(facts,
-                pairs.zipWithIndex.map { case ((oc, _), j) =>
-                  qcolOf(oc) === facts(s"__nfk$j") }.reduce(_ && _),
-                "left_outer")
-                .drop(pairs.indices.map(j => s"__nfk$j"): _*)
-            }
-          for (u <- 0 until all) {
-            val conds = (0 until k).map { i =>
-              if ((u & (1 << i)) != 0)
-                probes(i).isNull || subDf(s"__rv$i").isNull
-              else probes(i) === subDf(s"__rv$i")
-            } ++ pairs.zipWithIndex.map { case ((oc, _), j) =>
-              qcolOf(oc) === subDf(s"__c$j") }
-            cur = cur.join(subDf, conds.reduce(_ && _), "left_anti")
-          }
-          // U = all components: a probe with null-mask m is killed iff
-          // its [per-key] set has a row null on every component the
-          // probe has NON-null (flags coalesce to 0 where the left join
-          // found no key — an empty set keeps the row)
-          val fullKill = (0 to all).map { m =>
-            val probeMask = (0 until k).map { i =>
-              if ((m & (1 << i)) != 0) probes(i).isNull else probes(i).isNotNull
-            }.reduce(_ && _)
-            probeMask && coalesce(col(s"__nf${all & ~m}"), lit(0)) === 1
-          }.reduce(_ || _)
-          cur.filter(!fullKill).drop((0 to all).map(m => s"__nf$m"): _*)
-        }
-      case (df, (BoundExpr.BRowInSub(os, sub, pairs, false), _)) =>
-        // row-value membership: ONE left-semi join on every component
-        // equality (+ the decorrelated pairs). NULL components never
-        // match — SQL's UNKNOWN filtering false in a positive conjunct.
-        // One shuffle keyed on the full component tuple; broadcast when
-        // the subquery side is small (stats-driven like every join here).
-        if (pairs.isEmpty) {
-          val subDf0 = lowerSelect(spark, sub, source)
-          val subDf = subDf0.toDF(subDf0.columns.indices.map(k => s"__rv$k"): _*)
-          val conds = os.zipWithIndex.map { case (o, k) =>
-            lowerOperand(o) === subDf(s"__rv$k") }
-          df.join(subDf, conds.reduce(_ && _), "left_semi")
-        } else {
-          val core = combine(spark, sub, source, Set.empty, None)
-          val vals = sub.projection.map(rowValueCol(_, qcolOf))
-          val subDf = core.select(
-            vals.zipWithIndex.map { case (v, k) => v.as(s"__rv$k") } ++
-            pairs.zipWithIndex.map { case ((_, ic), k) => qcolOf(ic).as(s"__c$k") }: _*)
-          val conds = os.zipWithIndex.map { case (o, k) =>
-            lowerOperand(o) === subDf(s"__rv$k") } ++
-            pairs.zipWithIndex.map { case ((oc, _), k) => qcolOf(oc) === subDf(s"__c$k") }
-          df.join(subDf, conds.reduce(_ && _), "left_semi")
-        }
-      case (df, (BoundExpr.BExists(sub, pairs, neg, residual), _)) =>
-        val joinType = if (neg) "left_anti" else "left_semi"
-        if (pairs.isEmpty && residual.isEmpty) {
-          // uncorrelated EXISTS: emptiness of the whole subquery decides
-          // for every outer row — a one-row broadcast semi join
-          val subDf = lowerSelect(spark, sub, source).limit(1)
-          df.join(broadcast(subDf), lit(true), joinType)
-        } else {
-          val core = combine(spark, sub, source, Set.empty, None)
-          // residual (non-equality) correlated conjuncts ride the join
-          // condition: their inner columns project into the build side,
-          // their outer columns resolve against the probe side. The pair
-          // equalities stay the equi keys — Spark hash-partitions on
-          // them and evaluates the residual as the join's extra
-          // condition (the TPC-H Q21 shape).
-          val innerB = (sub.tables ++ sub.joinSteps.map(_.table))
-            .map(_.binding).toSet
-          val rcols = residual.flatMap(Analyzer.columnsOf)
-            .filter(c => innerB(c.binding)).distinct
-          val subDf = core.select(
-            pairs.zipWithIndex.map { case ((_, ic), k) =>
-              qcolOf(ic).as(s"__c$k") } ++
-            rcols.zipWithIndex.map { case (c, k) =>
-              qcolOf(c).as(s"__r$k") }: _*)
-          val rres: BoundCol => Column = {
-            val m = rcols.zipWithIndex
-              .map { case (c, k) => c -> subDf(s"__r$k") }.toMap
-            bc => m.getOrElse(bc, qcolOf(bc))
-          }
-          val cond = (pairs.zipWithIndex
-            .map { case ((oc, _), k) => qcolOf(oc) === subDf(s"__c$k") } ++
-            residual.map(e =>
-              lowerTree(e, columnLeaf(rres))))
-            .reduce(_ && _)
-          df.join(subDf, cond, joinType)
-        }
-      case (df, (BoundExpr.BCmpSub(op, o, sub, guard, pairs), i)) =>
-        val scalarName = s"__scalar_$i"
-        def cmpCond(lc: Column, sc: Column): Column = cmpCols(op, lc, sc)
-        if (pairs.isEmpty) {
-          val subDf0 = lowerSelect(spark, sub, source)
-          if (guard)
-            // runtime one-row contract, failing like the reference's error
-            // surface (database.rs:38-45 style) — one bounded LIMIT-2 job
-            // that also captures the value, so the subquery runs ONCE
-            df.filter(cmpCond(lowerOperand(o), guardedScalarLit(subDf0)))
-          else {
-            val subDf = subDf0.toDF(scalarName)
-            df.join(broadcast(subDf), cmpCond(lowerOperand(o), col(scalarName)), "inner")
-              .drop(scalarName)
-          }
-        } else {
-          val (subAgg, keyCond, scalar) =
-            correlatedScalarAgg(spark, sub, pairs, source, scalarName, "__c")
-          df.join(subAgg, keyCond(qcolOf), "left_outer")
-            .filter(cmpCond(lowerOperand(o), scalar))
-            .drop(scalarName +: pairs.indices.map(k => s"__c$k"): _*)
-        }
-      case (df, _) => df
-    }
-    mixedSubConjs.zipWithIndex.foldLeft(afterSubs) { case (df, (c, t)) =>
-      applyMixedSubConjunct(spark, df, c, source, t)
-    }
+    val ms = new MarkerScope(spark, source, "w", qualified,
+      columnLeaf(qualified))
+    ms.filter(subConjs)
+    ms.attach(postFiltered)
   }
 
   /** Execute an uncorrelated guarded scalar subquery ONCE: enforce the
@@ -2056,12 +1594,23 @@ object Lowering {
     }
   }
 
-  /** Marker-join scope: subqueries appearing inside a general boolean /
-    * operand expression (under OR, under NOT, or in CASE conditions) each
-    * LEFT-join a marker frame onto the enclosing relational frame, and
-    * the expression then evaluates columnar over the markers — never a
-    * per-outer-row re-execution (the reference's own stated long-term
-    * unnesting goal, execution/plan.rs:41-46).
+  /** The one subquery scope of a SELECT position — WHERE, HAVING, the
+    * SELECT list or QUALIFY. Every IN / NOT IN / row IN / EXISTS /
+    * ANY / ALL / scalar subquery of the position lowers here as joins
+    * onto the enclosing relational frame — never a per-outer-row
+    * re-execution (the reference's own stated long-term unnesting goal,
+    * execution/plan.rs:41-46). Positions differ only in how an outer
+    * correlation column resolves on the frame (`outerKey`: qualified
+    * before aggregation, the grouped output name after) and in how
+    * everything else lowers (`scope`).
+    *
+    * A top-level IN, row IN or EXISTS conjunct of `filter` joins semi or
+    * anti (correlated: on its value plus the decorrelated equality
+    * pairs), and an uncorrelated unguarded scalar comparison joins its
+    * one-row frame inner. Every other subquery — under OR, NOT or a CASE
+    * condition, or a scalar subquery used as a value — LEFT-joins a
+    * marker frame, and the expression evaluates columnar over the
+    * markers.
     *
     * IN markers are THREE-VALUED exactly where SQL's NULL and FALSE are
     * distinguishable (a negated IN, or any IN under an enclosing NOT):
@@ -2075,20 +1624,252 @@ object Lowering {
     * Spark's NULL-propagating comparisons over the left-joined scalar.
     *
     * Registration is eager (HAVING probes must register their hidden
-    * aggregate columns before the agg assembles); the caller applies
-    * `joins` (left_outer each) whenever its frame is ready and then
-    * filters/projects with `pred`/`operand`.
+    * aggregate columns before the agg assembles); `attach` applies the
+    * recorded joins and filters, in registration order, once the
+    * caller's frame is ready.
     */
   private final class MarkerScope(spark: SparkSession,
       source: BoundTable => DataFrame, tag: String,
-      outerKey: BoundCol => Column, scope: PartialFunction[BoundNode, Column]) {
-    val joins = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Column)]
-    val drops = scala.collection.mutable.ArrayBuffer.empty[String]
-    private val predOf = new java.util.IdentityHashMap[BoundExpr, Column]()
-    private val opValOf = new java.util.IdentityHashMap[BoundOperand, Column]()
+      outerKey: BoundCol => Column, scope: PartialFunction[BoundNode, Column],
+      outerRows: Option[Long] = None) {
+    private val steps =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame => DataFrame]
+    // the marker columns a filtering conjunct drops once it has filtered
+    private val drops = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var markOf = new java.util.IdentityHashMap[BoundNode, Column]()
     private var k = 0
     private def fresh(): String = { val m = s"__mx${tag}_$k"; k += 1; m }
-    private def qcolSub(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
+
+    /** The caller's frame with every recorded join and filter applied. */
+    def attach(df: DataFrame): DataFrame = steps.foldLeft(df)((d, f) => f(d))
+
+    private def leftJoin(f: DataFrame, on: Column, cols: Seq[String]): Unit = {
+      steps += (_.join(f, on, "left_outer"))
+      drops ++= cols
+    }
+
+    private def core(sub: BoundSelect): DataFrame =
+      combine(spark, sub, source, Set.empty, None)
+
+    /** A correlated body's core projected to `vals`, the inner side of
+      * each equality pair (`<prefix><j>`), then `rest`.
+      */
+    private def keyed(core: DataFrame, pairs: Seq[(BoundCol, BoundCol)],
+        prefix: String, vals: Seq[Column], rest: Seq[Column] = Nil): DataFrame =
+      core.select(vals ++ pairs.zipWithIndex.map { case ((_, ic), j) =>
+        qualified(ic).as(s"$prefix$j") } ++ rest: _*)
+
+    /** The outer side of each equality pair against `f`'s `<prefix><j>`. */
+    private def onPairs(pairs: Seq[(BoundCol, BoundCol)], f: DataFrame,
+        prefix: String): Seq[Column] =
+      pairs.zipWithIndex.map { case ((oc, _), j) => outerKey(oc) === f(s"$prefix$j") }
+
+    /** A body's rows as columns `<m>_v<i>`, plus the inner pair keys
+      * `<m>_k<j>` when correlated.
+      */
+    private def rows(sub: BoundSelect, pairs: Seq[(BoundCol, BoundCol)],
+        m: String): DataFrame =
+      if (pairs.isEmpty) {
+        val d = lowerSelect(spark, sub, source)
+        d.toDF(d.columns.indices.map(i => s"${m}_v$i"): _*)
+      } else keyed(core(sub), pairs, s"${m}_k", sub.projection.zipWithIndex.map {
+        case (it, i) => rowValueCol(it, qualified).as(s"${m}_v$i") })
+
+    /** Aggregate facts over a body's value column, joined as `names`:
+      * one broadcast row when uncorrelated (`body` is the lowered
+      * subquery), else one hash aggregate per correlation key (`body` is
+      * its core) on the same equi keys the predicate joins on —
+      * shuffle-bounded at scale; an absent key reads through the left
+      * join as NULL.
+      */
+    private def facts(body: DataFrame, sub: BoundSelect,
+        pairs: Seq[(BoundCol, BoundCol)], m: String, names: Seq[String],
+        aggs: Column => Seq[Column]): Unit = {
+      def named(v: Column): Seq[Column] =
+        aggs(v).zip(names).map { case (c, n) => c.as(n) }
+      if (pairs.isEmpty) {
+        val a = named(col(body.columns.head))
+        leftJoin(broadcast(body.agg(a.head, a.tail: _*)), lit(true), names)
+      } else {
+        val p = s"${m}_f"
+        val a = named(col(s"${m}_fv"))
+        val f = keyed(body, pairs, p,
+          Seq(rowValueCol(sub.projection.head, qualified).as(s"${m}_fv")))
+          .groupBy(pairs.indices.map(j => col(s"$p$j")): _*).agg(a.head, a.tail: _*)
+        leftJoin(f, onPairs(pairs, f, p).reduce(_ && _),
+          names ++ pairs.indices.map(j => s"$p$j"))
+      }
+    }
+
+    /** Keep the frame's rows where every conjunct holds: the conjuncts
+      * without a subquery filter first, then each top-level subquery
+      * form in order, then the rest over markers.
+      */
+    def filter(conjs: Seq[BoundExpr]): Unit = {
+      val (subs, plain) = conjs.partition(BoundNode.hasSubquery)
+      plain.map(lower).reduceOption(_ && _).foreach(p => steps += (_.filter(p)))
+      val (top, mixed) = subs.partition {
+        case _: BoundExpr.BInSub | _: BoundExpr.BRowInSub |
+             _: BoundExpr.BExists | _: BoundExpr.BCmpSub => true
+        case _ => false
+      }
+      (top ++ mixed).foreach(conjunct)
+    }
+
+    private def conjunct(c: BoundExpr): Unit = c match {
+      case BoundExpr.BInSub(o, sub, Seq(), neg) =>
+        val probe = value(o)
+        val subDf = lowerSelect(spark, sub, source)
+        val v = subDf(subDf.columns.head)
+        if (!neg) steps += (_.join(subDf, probe === v, "left_semi"))
+        else {
+          // Null-aware NOT IN (SQL 3VL): the whole predicate is TRUE only
+          // when the subquery is empty, or the probe is non-NULL, the
+          // subquery has no NULLs, and no value matches. The NULL/empty
+          // facts are one broadcast 1-row aggregate (count vs non-null
+          // count); the no-match part stays a plain hash anti join — no
+          // nested-loop NAAJ plan at any scale.
+          val (n, nn) = { val m = fresh(); (s"${m}_n", s"${m}_nn") }
+          val facts = broadcast(subDf.agg(count(lit(1)).as(n), count(v).as(nn)))
+          steps += (_.join(facts, lit(true), "inner")
+            .filter(col(n) === 0 || (probe.isNotNull && col(n) === col(nn)))
+            .drop(n, nn)
+            .join(subDf, probe === v, "left_anti"))
+        }
+      case BoundExpr.BInSub(o, sub, pairs, neg) =>
+        // correlated: the subquery's core + its IN value + the inner side
+        // of each decorrelated pair, joined semi/anti on all of them.
+        // Null-aware for NOT IN: a per-key set member that is NULL (or a
+        // NULL probe against a non-empty key set) poisons the predicate
+        // to non-TRUE, so the anti join must also match on those. The
+        // pair equalities stay equi keys — Spark hash-partitions on them
+        // and evaluates the disjunction as the join's extra condition.
+        val probe = value(o)
+        val m = fresh()
+        val f = rows(sub, pairs, m)
+        val v = f(s"${m}_v0")
+        val valCond =
+          if (neg) probe === v || probe.isNull || v.isNull else probe === v
+        steps += (_.join(f, (valCond +: onPairs(pairs, f, s"${m}_k")).reduce(_ && _),
+          if (neg) "left_anti" else "left_semi"))
+      case BoundExpr.BRowInSub(os, sub, pairs, neg) =>
+        val probes = os.map(value)
+        val m = fresh()
+        val subDf = rows(sub, pairs, m)
+        val keys = onPairs(pairs, subDf, s"${m}_k")
+        def v(i: Int): Column = subDf(s"${m}_v$i")
+        if (!neg)
+          // row-value membership: ONE left-semi join on every component
+          // equality (+ the decorrelated pairs). NULL components never
+          // match — SQL's UNKNOWN filtering false in a positive conjunct.
+          steps += (_.join(subDf, (os.indices.map(i => probes(i) === v(i)) ++
+            keys).reduce(_ && _), "left_semi"))
+        else {
+          // Null-aware row-value NOT IN, exact SQL 3VL: a row is KEPT iff
+          // NO subquery row is "compatible" with the probe (compatible =
+          // every component equal or null on either side — the rows whose
+          // comparison is TRUE or UNKNOWN). Decomposition that never
+          // needs a nested-loop join: for every PROPER subset U of
+          // components, one HASH anti join keyed on the components outside
+          // U (plus the decorrelated pair equalities), with the U
+          // components' either-side-null test riding as the join's
+          // residual condition; the U = all-components case has no
+          // component key left and reduces to per-null-mask emptiness
+          // FACTS — one bounded aggregate, broadcast when uncorrelated,
+          // left-joined per pair key when correlated (an absent key =
+          // empty per-key set = kept). 2^k - 1 key-bounded anti joins +
+          // one facts frame; the analyzer caps k at 3, so the fan-out is
+          // at most 7 joins.
+          val k = os.length
+          val all = (1 << k) - 1
+          // facts: for mask b, does S contain a row NULL on every
+          // component in b? (b = 0 reads "is the [per-key] set non-empty")
+          val factsAggs = (0 to all).map { b =>
+            val cond = (0 until k).filter(i => (b & (1 << i)) != 0)
+              .map(i => v(i).isNull)
+              .foldLeft(lit(true))(_ && _)
+            coalesce(max(when(cond, 1).otherwise(0)), lit(0)).as(s"${m}_f$b")
+          }
+          val withFacts: DataFrame => DataFrame =
+            if (pairs.isEmpty) _.join(broadcast(subDf.agg(factsAggs.head,
+              factsAggs.tail: _*)), lit(true), "inner")
+            else {
+              val f = subDf
+                .groupBy(pairs.indices.map(j => col(s"${m}_k$j").as(s"${m}_fk$j")): _*)
+                .agg(factsAggs.head, factsAggs.tail: _*)
+              _.join(f, onPairs(pairs, f, s"${m}_fk").reduce(_ && _), "left_outer")
+                .drop(pairs.indices.map(j => s"${m}_fk$j"): _*)
+            }
+          // U = all components: a probe with null-mask b is killed iff
+          // its [per-key] set has a row null on every component the
+          // probe has NON-null (flags coalesce to 0 where the left join
+          // found no key — an empty set keeps the row)
+          val fullKill = (0 to all).map { b =>
+            val probeMask = (0 until k).map { i =>
+              if ((b & (1 << i)) != 0) probes(i).isNull else probes(i).isNotNull
+            }.reduce(_ && _)
+            probeMask && coalesce(col(s"${m}_f${all & ~b}"), lit(0)) === 1
+          }.reduce(_ || _)
+          steps += (df => (0 until all).foldLeft(withFacts(df)) { (cur, u) =>
+            val conds = (0 until k).map { i =>
+              if ((u & (1 << i)) != 0) probes(i).isNull || v(i).isNull
+              else probes(i) === v(i)
+            } ++ keys
+            cur.join(subDf, conds.reduce(_ && _), "left_anti")
+          }.filter(!fullKill).drop((0 to all).map(b => s"${m}_f$b"): _*))
+        }
+      case BoundExpr.BExists(sub, pairs, neg, residual) =>
+        val joinType = if (neg) "left_anti" else "left_semi"
+        if (pairs.isEmpty && residual.isEmpty) {
+          // uncorrelated EXISTS: emptiness of the whole subquery decides
+          // for every outer row — a one-row broadcast semi join
+          val subDf = broadcast(lowerSelect(spark, sub, source).limit(1))
+          steps += (_.join(subDf, lit(true), joinType))
+        } else {
+          // residual (non-equality) correlated conjuncts ride the join
+          // condition: their inner columns project into the build side,
+          // their outer columns resolve against the probe side. The pair
+          // equalities stay the equi keys — Spark hash-partitions on
+          // them and evaluates the residual as the join's extra
+          // condition (the TPC-H Q21 shape).
+          val m = fresh()
+          val innerB = (sub.tables ++ sub.joinSteps.map(_.table))
+            .map(_.binding).toSet
+          val rcols = residual.flatMap(Analyzer.columnsOf)
+            .filter(c => innerB(c.binding)).distinct
+          val subDf = keyed(core(sub), pairs, s"${m}_k", Nil,
+            rcols.zipWithIndex.map { case (c, i) => qualified(c).as(s"${m}_r$i") })
+          val rres = rcols.zipWithIndex.map { case (c, i) =>
+            c -> subDf(s"${m}_r$i") }.toMap
+          val cond = (onPairs(pairs, subDf, s"${m}_k") ++ residual.map(e =>
+            lowerTree(e, columnLeaf(bc => rres.getOrElse(bc, outerKey(bc))))))
+            .reduce(_ && _)
+          steps += (_.join(subDf, cond, joinType))
+        }
+      case BoundExpr.BCmpSub(op, o, sub, false, Seq()) =>
+        // an inner join with the one-row frame keeps exactly the rows
+        // the comparison holds for
+        val probe = value(o)
+        val m = fresh()
+        val subDf = broadcast(lowerSelect(spark, sub, source).toDF(m))
+        steps += (_.join(subDf, cmpCols(op, probe, col(m)), "inner").drop(m))
+      case other => marked(other)
+    }
+
+    /** A conjunct over markers: their joins, one filter, the markers
+      * dropped. They register apart, so no later operand reads a
+      * dropped marker.
+      */
+    private def marked(c: BoundExpr): Unit = {
+      val outer = markOf
+      markOf = new java.util.IdentityHashMap[BoundNode, Column](outer)
+      drops.clear()
+      register(c)
+      val p = lower(c)
+      val dropped = drops.toList
+      steps += (_.filter(p).drop(dropped: _*))
+      markOf = outer
+    }
 
     /** TRUE on match / FALSE on empty set / NULL on NULL probe or
       * NULL-bearing set / FALSE otherwise — `x IN (set)` under full 3VL.
@@ -2100,296 +1881,201 @@ object Lowering {
           lit(null).cast("boolean"))
         .otherwise(lit(false))
 
-    /** Register every subquery under `n` as marker joins. `obs` = an
-      * enclosing NOT makes NULL-vs-FALSE observable, forcing 3VL markers;
-      * a CASE's WHEN condition consumes TRUE-vs-non-TRUE like a filter,
-      * so below an operand `obs` resets (a nested NOT sets it again).
+    /** A scalar subquery's value: the inequality-correlated running
+      * aggregate, the per-key aggregate left-joined on the decorrelated
+      * equalities, a guarded literal (one bounded job that also checks
+      * the one-row contract — no join) or a broadcast one-row left join
+      * (an empty subquery reads SQL NULL, never zero rows).
       */
-    def register(n: BoundNode, obs: Boolean = false): Unit = n match {
-      case BoundExpr.BNot(x) => register(x, obs = true)
-      case s @ BoundExpr.BExists(sub, pairs, neg, residual) =>
-        require(residual.isEmpty, "unreachable: analyzer restricts " +
-          "residual EXISTS to top-level WHERE conjuncts")
-        val m = fresh()
-        if (pairs.isEmpty)
-          joins += ((broadcast(lowerSelect(spark, sub, source).limit(1)
-            .select(lit(true).as(m))), lit(true)))
-        else {
-          val core = combine(spark, sub, source, Set.empty, None)
-          val keyed = core.select(pairs.zipWithIndex.map { case ((_, ic), i) =>
-            qcolSub(ic).as(s"${m}_$i") }: _*).distinct().withColumn(m, lit(true))
-          joins += ((keyed, pairs.zipWithIndex.map { case ((oc, _), i) =>
-            outerKey(oc) === keyed(s"${m}_$i") }.reduce(_ && _)))
-          drops ++= pairs.indices.map(i => s"${m}_$i")
-        }
-        drops += m
-        val p = coalesce(col(m), lit(false))
-        predOf.put(s, if (neg) !p else p)
-      case s @ BoundExpr.BInSub(o, sub, pairs, neg) =>
-        val m = fresh()
-        register(o)
-        val probe = lower(o)
-        // NULL-vs-FALSE is observable for NOT IN (the negation flips
-        // FALSE to TRUE but keeps NULL) and under any enclosing NOT
-        val three = neg || obs
-        if (pairs.isEmpty) {
-          val subDf = lowerSelect(spark, sub, source)
-          val vcol = subDf.columns.head
-          val keyed = subDf.toDF(s"${m}_v").distinct().withColumn(m, lit(true))
-          joins += ((keyed, probe === keyed(s"${m}_v")))
-          drops ++= Seq(m, s"${m}_v")
-          val p =
-            if (!three) coalesce(col(m), lit(false))
-            else {
-              val facts = broadcast(subDf.agg(count(lit(1)).as(s"${m}_n"),
-                count(col(vcol)).as(s"${m}_nn")))
-              joins += ((facts, lit(true)))
-              drops ++= Seq(s"${m}_n", s"${m}_nn")
-              threeValuedIn(m, probe)
-            }
-          predOf.put(s, if (neg) !p else p)
-        } else {
-          val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = rowValueCol(sub.projection.head, qcolSub)
-          val keyed = core.select(inVal.as(s"${m}_v") +:
-            pairs.zipWithIndex.map { case ((_, ic), i) =>
-              qcolSub(ic).as(s"${m}_$i") }: _*).distinct().withColumn(m, lit(true))
-          joins += ((keyed, ((probe === keyed(s"${m}_v")) +:
-            pairs.zipWithIndex.map { case ((oc, _), i) =>
-              outerKey(oc) === keyed(s"${m}_$i") }).reduce(_ && _)))
-          drops ++= Seq(m, s"${m}_v") ++ pairs.indices.map(i => s"${m}_$i")
-          val p =
-            if (!three) coalesce(col(m), lit(false))
-            else {
-              // per-correlation-key facts: one hash aggregate on the same
-              // equi keys the marker joins on — shuffle-bounded at scale
-              val facts = core.select(inVal.as(s"${m}_fv") +:
-                pairs.zipWithIndex.map { case ((_, ic), i) =>
-                  qcolSub(ic).as(s"${m}_f$i") }: _*)
-                .groupBy(pairs.indices.map(i => col(s"${m}_f$i")): _*)
-                .agg(count(lit(1)).as(s"${m}_n"), count(col(s"${m}_fv")).as(s"${m}_nn"))
-              joins += ((facts, pairs.zipWithIndex.map { case ((oc, _), i) =>
-                outerKey(oc) === facts(s"${m}_f$i") }.reduce(_ && _)))
-              drops ++= Seq(s"${m}_n", s"${m}_nn") ++ pairs.indices.map(i => s"${m}_f$i")
-              threeValuedIn(m, probe)
-            }
-          predOf.put(s, if (neg) !p else p)
-        }
-      case s @ BoundExpr.BRowInSub(os, sub, pairs, neg) =>
-        // (a, b, …) IN (SELECT …) as a marker — exact SQL 3VL with NO
-        // nested-loop join. TRUE = an exact-match marker (one equi join
-        // on all components of the DISTINCT set). FALSE vs NULL =
-        // per-null-mask compatibility markers: for every nonempty mask U
-        // of components, one frame GROUPED BY the outside-U components
-        // (equi keys) carrying ∃-flags per null-pattern subset of U —
-        // grouping (not distinct rows) keeps the left join 1:1, so
-        // markers never duplicate outer rows. The probe's own null
-        // pattern selects the flag columnar-ly. k ≤ 3
-        // (analyzer-enforced), so ≤ 7 keyed joins + 1 facts frame.
-        // CORRELATED probes ride the same frames with the decorrelated
-        // inner keys as EXTRA grouping/join columns — the per-outer-key
-        // set semantics fall out of the grouping, still 1:1 left joins.
-        os.foreach(register(_))
-        val probes = os.map(lower)
-        val k = os.length
-        val kp = pairs.length
-        val m = fresh()
-        // core columns normalized: components ${m}_v*, then the
-        // correlation keys ${m}_p* (a correlated body lowers its
-        // decorrelated core with the inner keys alongside)
-        val vns = (0 until k).map(i => s"${m}_v$i")
-        val pns = (0 until kp).map(j => s"${m}_p$j")
-        val core =
-          if (pairs.isEmpty) lowerSelect(spark, sub, source).toDF(vns: _*)
-          else {
-            val c = combine(spark, sub, source, Set.empty, None)
-            val items = sub.projection.map(rowValueCol(_, qcolSub))
-            c.select(items.zipWithIndex.map { case (cc, i) => cc.as(vns(i)) } ++
-              pairs.zipWithIndex.map { case ((_, ic), j) =>
-                qcolSub(ic).as(pns(j)) }: _*)
-          }
-        def keyConds(f: DataFrame, names: Int => String): Seq[Column] =
-          pairs.zipWithIndex.map { case ((oc, _), j) =>
-            outerKey(oc) === f(names(j)) }
-        // exact-match marker: distinct set rows, all-components (+ keys)
-        // equi join
-        val exact = core.distinct()
-          .toDF((0 until k).map(i => s"${m}_e$i") ++
-            (0 until kp).map(j => s"${m}_ep$j"): _*)
-          .withColumn(m, lit(true))
-        joins += ((exact,
-          ((0 until k).map(i => probes(i) === exact(s"${m}_e$i")) ++
-            keyConds(exact, j => s"${m}_ep$j")).reduce(_ && _)))
-        drops ++= (0 until k).map(i => s"${m}_e$i") ++
-          (0 until kp).map(j => s"${m}_ep$j") :+ m
-        // set-emptiness facts: one broadcast row, or per-key counts (an
-        // absent key reads count 0 through the left join + coalesce)
-        val facts =
-          if (pairs.isEmpty) broadcast(core.agg(count(lit(1)).as(s"${m}_n")))
-          else core.groupBy(pns.map(col): _*).agg(count(lit(1)).as(s"${m}_n"))
-            .toDF((0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n": _*)
-        joins += ((facts,
-          (lit(true) +: keyConds(facts, j => s"${m}_fp$j")).reduce(_ && _)))
-        drops ++= (0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n"
-        // compatibility markers: mask U = the components where equality
-        // holds via a NULL on either side; outside U compares strictly
-        val maskCols = for (mask <- 1 until (1 << k)) yield {
-          val mm = s"${m}_u$mask"
-          val inU  = (0 until k).filter(i => (mask & (1 << i)) != 0)
-          val outU = (0 until k).filterNot(i => (mask & (1 << i)) != 0)
-          // ∃-flags per subset S of U: a set row in this key group that
-          // is NULL on every component of S
-          val subsets = (0 until (1 << inU.length)).map(b =>
-            inU.zipWithIndex.collect { case (c, j) if (b & (1 << j)) != 0 => c })
-          val flags = subsets.map { s2 =>
-            val zAll =
-              if (s2.isEmpty) lit(true)
-              else s2.map(i => col(vns(i)).isNull).reduce(_ && _)
-            max(when(zAll, lit(true)).otherwise(lit(false)))
-              .as(s"${mm}_s${s2.map(i => 1 << i).sum}")
-          }
-          val gcols = outU.map(i => col(vns(i))) ++ pns.map(col)
-          val grouped =
-            if (gcols.isEmpty) core.agg(flags.head, flags.tail: _*)
-            else core.groupBy(gcols: _*)
-              .agg(flags.head, flags.tail: _*)
-              .toDF(outU.map(i => s"${mm}_k$i") ++
-                (0 until kp).map(j => s"${mm}_p$j") ++
-                subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}"): _*)
-          val keyed =
-            if (gcols.isEmpty) broadcast(grouped)
-            else grouped
-          val cond =
-            if (gcols.isEmpty) lit(true)
-            else (outU.map(i => probes(i) === keyed(s"${mm}_k$i")) ++
-              keyConds(keyed, j => s"${mm}_p$j")).reduce(_ && _)
-          joins += ((keyed, cond))
-          drops ++= outU.map(i => s"${mm}_k$i") ++
-            (0 until kp).map(j => s"${mm}_p$j") ++
-            subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}")
-          // the probe's null pattern picks which ∃-flag applies: S = the
-          // U-components where the probe is NON-null (those need the set
-          // row's NULL to be compatible)
-          val pick = subsets.foldLeft(lit(false)) { (acc, s2) =>
-            val sBits = s2.map(i => 1 << i).sum
-            val patternMatches = inU.map(i =>
-              if (s2.contains(i)) probes(i).isNotNull else probes(i).isNull)
-              .reduce(_ && _)
-            when(patternMatches,
-              coalesce(col(s"${mm}_s$sBits"), lit(false))).otherwise(acc)
-          }
-          pick
-        }
-        val compat = maskCols.reduce(_ || _)
-        val p = when(coalesce(col(m), lit(false)), lit(true))
-          .when(coalesce(col(s"${m}_n"), lit(0L)) === lit(0L), lit(false))
-          .when(compat, lit(null).cast("boolean"))
-          .otherwise(lit(false))
-        predOf.put(s, if (neg) !p else p)
-      case s @ BoundExpr.BCmpSub(op, o, sub, guard, pairs) =>
-        register(o)
-        val probe = lower(o)
-        if (pairs.isEmpty) {
-          val subDf0 = lowerSelect(spark, sub, source)
-          if (guard) predOf.put(s, cmpCols(op, probe, guardedScalarLit(subDf0)))
-          else {
-            val m = fresh()
-            joins += ((broadcast(subDf0.toDF(m)), lit(true)))
-            drops += m
-            predOf.put(s, cmpCols(op, probe, col(m)))
-          }
-        } else {
-          val m = fresh()
-          val (subAgg, keyCond, scalar) =
+    def scalar(sub: BoundSelect, guard: Boolean,
+        pairs: Seq[(BoundCol, BoundCol)], iq: Option[CorrIneq]): Column = {
+      val m = fresh()
+      iq match {
+        case Some(x) =>
+          steps += (correlatedRunningAgg(spark, _, sub, pairs, x, source, m,
+            outerKey, outerRows))
+          runningAggValue(sub, m)
+        case None if pairs.nonEmpty =>
+          val (subAgg, keyCond, c) =
             correlatedScalarAgg(spark, sub, pairs, source, m, s"${m}_c")
-          joins += ((subAgg, keyCond(outerKey)))
-          drops += m
-          drops ++= pairs.indices.map(i => s"${m}_c$i")
-          predOf.put(s, cmpCols(op, probe, scalar))
-        }
-      case s @ BoundExpr.BQuantSub(op, o, sub, all, pairs) =>
-        register(o)
-        val probe = lower(o)
-        val m = fresh()
-        val factsCols = Seq(s"${m}_n", s"${m}_nn", s"${m}_mn", s"${m}_mx")
-        if (pairs.isEmpty) {
-          // uncorrelated: ONE bounded aggregate over the subquery —
-          // count / non-null count / min / max — broadcast to every row
-          val subDf = lowerSelect(spark, sub, source)
-          val v = col(subDf.columns.head)
-          val facts = broadcast(subDf.agg(count(lit(1)).as(s"${m}_n"),
-            count(v).as(s"${m}_nn"), min(v).as(s"${m}_mn"),
-            max(v).as(s"${m}_mx")))
-          joins += ((facts, lit(true)))
-        } else {
-          // correlated: per-key facts — one hash aggregate on the same
-          // equi keys the predicate joins on, shuffle-bounded at scale
-          val core = combine(spark, sub, source, Set.empty, None)
-          val inVal = rowValueCol(sub.projection.head, qcolSub)
-          val facts = core.select(inVal.as(s"${m}_fv") +:
-            pairs.zipWithIndex.map { case ((_, ic), i) =>
-              qcolSub(ic).as(s"${m}_f$i") }: _*)
-            .groupBy(pairs.indices.map(i => col(s"${m}_f$i")): _*)
-            .agg(count(lit(1)).as(s"${m}_n"), count(col(s"${m}_fv")).as(s"${m}_nn"),
-              min(col(s"${m}_fv")).as(s"${m}_mn"), max(col(s"${m}_fv")).as(s"${m}_mx"))
-          joins += ((facts, pairs.zipWithIndex.map { case ((oc, _), i) =>
-            outerKey(oc) === facts(s"${m}_f$i") }.reduce(_ && _)))
-          drops ++= pairs.indices.map(i => s"${m}_f$i")
-        }
-        drops ++= factsCols
-        predOf.put(s, quantPred(op, all, probe, m))
-      // a scalar subquery as a VALUE: correlated = one per-key aggregate
-      // frame left-joined on the decorrelated equalities; uncorrelated =
-      // a guarded literal (one bounded job, no join) or one broadcast
-      // 1-row left join
-      case v @ BoundOperand.BSubVal(sub, guard, pairs, None) =>
-        if (!opValOf.containsKey(v)) {
-          if (pairs.nonEmpty) {
-            val m = fresh()
-            val (subAgg, keyCond, scalar) =
-              correlatedScalarAgg(spark, sub, pairs, source, m, s"${m}_c")
-            joins += ((subAgg, keyCond(outerKey)))
-            drops += m
-            drops ++= pairs.indices.map(i => s"${m}_c$i")
-            opValOf.put(v, scalar)
-          } else if (guard)
-            opValOf.put(v, guardedScalarLit(lowerSelect(spark, sub, source)))
-          else {
-            val m = fresh()
-            joins += ((broadcast(lowerSelect(spark, sub, source).toDF(m)),
-              lit(true)))
-            drops += m
-            opValOf.put(v, col(m))
-          }
-        }
-      case o: BoundOperand => o.children.foreach(register(_))
-      case e               => e.children.foreach(register(_, obs))
+          leftJoin(subAgg, keyCond(outerKey),
+            m +: pairs.indices.map(j => s"${m}_c$j"))
+          c
+        case None if guard => guardedScalarLit(lowerSelect(spark, sub, source))
+        case None =>
+          leftJoin(broadcast(lowerSelect(spark, sub, source).toDF(m)), lit(true),
+            Seq(m))
+          col(m)
+      }
     }
+
+    /** An operand or predicate as a Column over its subqueries' markers. */
+    def value(n: BoundNode): Column = { register(n); lower(n) }
+
+    /** Register every subquery under `n` (once) as marker joins. `obs` =
+      * an enclosing NOT makes NULL-vs-FALSE observable, forcing 3VL
+      * markers; a CASE's WHEN condition consumes TRUE-vs-non-TRUE like a
+      * filter, so below an operand `obs` resets (a nested NOT sets it
+      * again).
+      */
+    def register(n: BoundNode, obs: Boolean = false): Unit =
+      if (!markOf.containsKey(n)) n match {
+        case BoundExpr.BNot(x) => register(x, obs = true)
+        case s @ BoundExpr.BExists(sub, pairs, neg, residual) =>
+          require(residual.isEmpty, "unreachable: analyzer restricts " +
+            "residual EXISTS to top-level WHERE conjuncts")
+          val m = fresh()
+          if (pairs.isEmpty)
+            leftJoin(broadcast(lowerSelect(spark, sub, source).limit(1)
+              .select(lit(true).as(m))), lit(true), Seq(m))
+          else {
+            val f = keyed(core(sub), pairs, s"${m}_k", Nil).distinct()
+              .withColumn(m, lit(true))
+            leftJoin(f, onPairs(pairs, f, s"${m}_k").reduce(_ && _),
+              m +: pairs.indices.map(j => s"${m}_k$j"))
+          }
+          val p = coalesce(col(m), lit(false))
+          markOf.put(s, if (neg) !p else p)
+        case s @ BoundExpr.BInSub(o, sub, pairs, neg) =>
+          val probe = value(o)
+          val m = fresh()
+          val body = if (pairs.isEmpty) lowerSelect(spark, sub, source) else core(sub)
+          val f = (if (pairs.isEmpty) body.toDF(s"${m}_v0")
+            else keyed(body, pairs, s"${m}_k",
+              Seq(rowValueCol(sub.projection.head, qualified).as(s"${m}_v0"))))
+            .distinct().withColumn(m, lit(true))
+          leftJoin(f, ((probe === f(s"${m}_v0")) +: onPairs(pairs, f, s"${m}_k"))
+            .reduce(_ && _), Seq(m, s"${m}_v0") ++ pairs.indices.map(j => s"${m}_k$j"))
+          // NULL-vs-FALSE is observable for NOT IN (the negation flips
+          // FALSE to TRUE but keeps NULL) and under any enclosing NOT
+          val p =
+            if (!neg && !obs) coalesce(col(m), lit(false))
+            else {
+              facts(body, sub, pairs, m, Seq(s"${m}_n", s"${m}_nn"),
+                v => Seq(count(lit(1)), count(v)))
+              threeValuedIn(m, probe)
+            }
+          markOf.put(s, if (neg) !p else p)
+        case s @ BoundExpr.BRowInSub(os, sub, pairs, neg) =>
+          // (a, b, …) IN (SELECT …) as a marker — exact SQL 3VL with NO
+          // nested-loop join. TRUE = an exact-match marker (one equi join
+          // on all components of the DISTINCT set). FALSE vs NULL =
+          // per-null-mask compatibility markers: for every nonempty mask U
+          // of components, one frame GROUPED BY the outside-U components
+          // (equi keys) carrying ∃-flags per null-pattern subset of U —
+          // grouping (not distinct rows) keeps the left join 1:1, so
+          // markers never duplicate outer rows. The probe's own null
+          // pattern selects the flag columnar-ly. k ≤ 3
+          // (analyzer-enforced), so ≤ 7 keyed joins + 1 facts frame.
+          // CORRELATED probes ride the same frames with the decorrelated
+          // inner keys as EXTRA grouping/join columns — the per-outer-key
+          // set semantics fall out of the grouping, still 1:1 left joins.
+          val probes = os.map(value)
+          val k = os.length
+          val kp = pairs.length
+          val m = fresh()
+          // components <m>_v*, then the correlation keys <m>_k*
+          val vns = (0 until k).map(i => s"${m}_v$i")
+          val pns = (0 until kp).map(j => s"${m}_k$j")
+          val core = rows(sub, pairs, m)
+          // exact-match marker: distinct set rows, all-components (+ keys)
+          // equi join
+          val exact = core.distinct()
+            .toDF((0 until k).map(i => s"${m}_e$i") ++
+              (0 until kp).map(j => s"${m}_ep$j"): _*)
+            .withColumn(m, lit(true))
+          leftJoin(exact,
+            ((0 until k).map(i => probes(i) === exact(s"${m}_e$i")) ++
+              onPairs(pairs, exact, s"${m}_ep")).reduce(_ && _),
+            (0 until k).map(i => s"${m}_e$i") ++
+              (0 until kp).map(j => s"${m}_ep$j") :+ m)
+          // set-emptiness facts: one broadcast row, or per-key counts (an
+          // absent key reads count 0 through the left join + coalesce)
+          val facts =
+            if (pairs.isEmpty) broadcast(core.agg(count(lit(1)).as(s"${m}_n")))
+            else core.groupBy(pns.map(col): _*).agg(count(lit(1)).as(s"${m}_n"))
+              .toDF((0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n": _*)
+          leftJoin(facts,
+            (lit(true) +: onPairs(pairs, facts, s"${m}_fp")).reduce(_ && _),
+            (0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n")
+          // compatibility markers: mask U = the components where equality
+          // holds via a NULL on either side; outside U compares strictly
+          val maskCols = for (mask <- 1 until (1 << k)) yield {
+            val mm = s"${m}_u$mask"
+            val inU  = (0 until k).filter(i => (mask & (1 << i)) != 0)
+            val outU = (0 until k).filterNot(i => (mask & (1 << i)) != 0)
+            // ∃-flags per subset S of U: a set row in this key group that
+            // is NULL on every component of S
+            val subsets = (0 until (1 << inU.length)).map(b =>
+              inU.zipWithIndex.collect { case (c, j) if (b & (1 << j)) != 0 => c })
+            val flags = subsets.map { s2 =>
+              val zAll =
+                if (s2.isEmpty) lit(true)
+                else s2.map(i => col(vns(i)).isNull).reduce(_ && _)
+              max(when(zAll, lit(true)).otherwise(lit(false)))
+                .as(s"${mm}_s${s2.map(i => 1 << i).sum}")
+            }
+            val gcols = outU.map(i => col(vns(i))) ++ pns.map(col)
+            val grouped =
+              if (gcols.isEmpty) core.agg(flags.head, flags.tail: _*)
+              else core.groupBy(gcols: _*)
+                .agg(flags.head, flags.tail: _*)
+                .toDF(outU.map(i => s"${mm}_k$i") ++
+                  (0 until kp).map(j => s"${mm}_p$j") ++
+                  subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}"): _*)
+            val keyed =
+              if (gcols.isEmpty) broadcast(grouped)
+              else grouped
+            val cond =
+              if (gcols.isEmpty) lit(true)
+              else (outU.map(i => probes(i) === keyed(s"${mm}_k$i")) ++
+                onPairs(pairs, keyed, s"${mm}_p")).reduce(_ && _)
+            leftJoin(keyed, cond, outU.map(i => s"${mm}_k$i") ++
+              (0 until kp).map(j => s"${mm}_p$j") ++
+              subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}"))
+            // the probe's null pattern picks which ∃-flag applies: S = the
+            // U-components where the probe is NON-null (those need the set
+            // row's NULL to be compatible)
+            subsets.foldLeft(lit(false)) { (acc, s2) =>
+              val sBits = s2.map(i => 1 << i).sum
+              val patternMatches = inU.map(i =>
+                if (s2.contains(i)) probes(i).isNotNull else probes(i).isNull)
+                .reduce(_ && _)
+              when(patternMatches,
+                coalesce(col(s"${mm}_s$sBits"), lit(false))).otherwise(acc)
+            }
+          }
+          val compat = maskCols.reduce(_ || _)
+          val p = when(coalesce(col(m), lit(false)), lit(true))
+            .when(coalesce(col(s"${m}_n"), lit(0L)) === lit(0L), lit(false))
+            .when(compat, lit(null).cast("boolean"))
+            .otherwise(lit(false))
+          markOf.put(s, if (neg) !p else p)
+        case s @ BoundExpr.BCmpSub(op, o, sub, guard, pairs) =>
+          markOf.put(s, cmpCols(op, value(o), scalar(sub, guard, pairs, None)))
+        case s @ BoundExpr.BQuantSub(op, o, sub, all, pairs) =>
+          val probe = value(o)
+          val m = fresh()
+          // count / non-null count / min / max of the set
+          facts(if (pairs.isEmpty) lowerSelect(spark, sub, source) else core(sub),
+            sub, pairs, m, Seq("n", "nn", "mn", "mx").map(x => s"${m}_$x"),
+            v => Seq(count(lit(1)), count(v), min(v), max(v)))
+          markOf.put(s, quantPred(op, all, probe, m))
+        case v @ BoundOperand.BSubVal(sub, guard, pairs, iq) =>
+          markOf.put(v, scalar(sub, guard, pairs, iq))
+        case o: BoundOperand => o.children.foreach(register(_))
+        case e               => e.children.foreach(register(_, obs))
+      }
 
     /** Lower a predicate or operand with the registered markers
       * substituted, everything else resolved through `scope`.
       */
     def lower(n: BoundNode): Column = lowerTree(n, leaf)
     private val leaf = ({
-      case e: BoundExpr if predOf.containsKey(e) => predOf.get(e)
-      case v: BoundOperand.BSubVal =>
-        Option(opValOf.get(v)).getOrElse(
-          sys.error("unreachable: scalar-subquery operand was not registered"))
+      case n if markOf.containsKey(n) => markOf.get(n)
+      case _: BoundOperand.BSubVal =>
+        sys.error("unreachable: scalar-subquery operand was not registered")
     }: PartialFunction[BoundNode, Column]).orElse(scope)
-  }
-
-  /** A WHERE conjunct with subqueries in general position (under OR,
-    * NOT, or CASE conditions): marker joins + one columnar filter.
-    */
-  private def applyMixedSubConjunct(spark: SparkSession, df0: DataFrame,
-      cond: BoundExpr, source: BoundTable => DataFrame, tag: Int): DataFrame = {
-    def qcolOf(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
-    val ms = new MarkerScope(spark, source, tag.toString, qcolOf,
-      columnLeaf(qcolOf))
-    ms.register(cond)
-    val joined = ms.joins.foldLeft(df0) { case (d, (f, on)) =>
-      d.join(f, on, "left_outer") }
-    joined.filter(ms.lower(cond)).drop(ms.drops.toSeq: _*)
   }
 
   /** Per-top-level-query lowering scope: reference counts of
@@ -2520,15 +2206,14 @@ object Lowering {
     */
   private def lowerLateral(spark: SparkSession, l: Analyzer.BoundLateral,
       source: BoundTable => DataFrame): DataFrame = {
-    def qc(bc: BoundCol): Column = col(s"${bc.binding}.${bc.attr.name}")
     val core = combine(spark, l.sub, source, Set.empty, None)
     val topped = l.sub.limit match {
       case Some(n) =>
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(l.pairs.map { case (_, ic) => qc(ic) }: _*)
+          .partitionBy(l.pairs.map { case (_, ic) => qualified(ic) }: _*)
           .orderBy(l.sub.orderBy.map {
             case (Analyzer.BoundOrderKey.OKOperand(op), dir) =>
-              sortCol(lowerOperandWith(op, qc), dir)
+              sortCol(lowerOperandWith(op, qualified), dir)
             case (k, _) => sys.error(s"unreachable LATERAL sort key $k")
           }: _*)
         core.withColumn("__lrn", row_number().over(w))
@@ -2538,9 +2223,9 @@ object Lowering {
     // visible projection (plain columns/expressions, analyzer-enforced)
     // in derived-attribute order, then the hidden key columns
     val visible = l.sub.projection.map(it =>
-      rowValueCol(it, qc).as(it.columnName.mkString))
+      rowValueCol(it, qualified).as(it.columnName.mkString))
     val keys = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
-      qc(ic).as(l.hiddenKeys(i)) }
+      qualified(ic).as(l.hiddenKeys(i)) }
     topped.select(visible ++ keys: _*)
   }
 

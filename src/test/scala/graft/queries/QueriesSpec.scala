@@ -63,6 +63,36 @@ class QueriesSpec extends AnyFunSuite {
     } finally Files.deleteIfExists(otherFixture)
   }
 
+  test("two concurrent writers of one bounded stream source both read the full fixture") {
+    import java.nio.file.{Files, Paths}
+    val rows = spark.range(1000).toDF()
+    val fixture = s"concurrent-writers-${System.nanoTime}"
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    val writers = (1 to 2).map(_ => new Thread(() => {
+      start.await()
+      val dir = Streaming.boundedSource(rows, "conc", fixture, 4)
+      val r = spark.read.parquet(dir).agg(
+        org.apache.spark.sql.functions.count("id"),
+        org.apache.spark.sql.functions.sum("id")).head()
+      read.add((dir, r.getLong(0), r.getLong(1)))
+    }))
+    writers.foreach(_.start())
+    start.countDown()
+    writers.foreach(_.join())
+    val got = read.toArray.toSeq.map(_.asInstanceOf[(String, Long, Long)])
+    try {
+      assert(got.length == 2, "a writer failed")
+      assert(got.map(_._1).distinct.length == 1)
+      assert(got.forall { case (_, n, s) => n == 1000L && s == 999L * 1000L / 2 })
+      // each writer's own copy is gone: published or deleted
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+      assert(!tmp.list().exists(n => n.startsWith(".graft_stream_conc_")))
+      assert(Files.exists(Paths.get(got.head._1, "_SUCCESS")))
+    } finally got.headOption.foreach(g =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(g._1)))
+  }
+
   test("entry (flagship) returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

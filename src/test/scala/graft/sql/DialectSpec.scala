@@ -885,6 +885,17 @@ class DialectSpec extends AnyFunSuite {
       "(SELECT n.k FROM nums n WHERE n.k = c.id AND n.v = p.id))").isLeft)
   }
 
+  test("a scalar subquery correlated two scopes out through an IN body's projection rejects like its EXISTS twin") {
+    val db = freshDb()
+    for (sql <- Seq("CREATE TABLE t (k INT, v INT)", "INSERT INTO t VALUES (1, 10), (2, 11)",
+        "CREATE TABLE u (k INT, v INT)", "INSERT INTO u VALUES (1, 1), (2, 2)"))
+      assert(db.query(sql).isRight, sql)
+    val body = "(SELECT (SELECT max(u.v) FROM u WHERE u.k = t.k) + 9 AS x FROM u u2)"
+    val exists = db.select(s"SELECT k FROM t WHERE EXISTS $body").left.map(_.msg)
+    assert(exists.left.exists(_.startsWith("bad subquery")), exists)
+    assert(db.select(s"SELECT k FROM t WHERE v IN $body").left.map(_.msg) == exists)
+  }
+
   test("uncorrelated scalar subqueries in HAVING") {
     val db = demoDb()
     db.query("INSERT INTO cars VALUES (3, 'Cybertruck', 1)")

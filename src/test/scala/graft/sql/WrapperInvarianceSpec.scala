@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.util.{Failure, Success, Try}
 
+import org.apache.spark.JobCounter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -12,7 +13,9 @@ import graft.SparkTestSession
   * each check, the bare operand and its CAST, TRY_CAST, CASE, function
   * call and arithmetic wrappings give the same outcome — the same
   * rejection message, or the same rows (Spark's own answer over the same
-  * data where Spark has the syntax). No statement throws.
+  * data where Spark has the syntax). A subquery gets the same outcome in
+  * every position: a top-level WHERE conjunct and the same predicate
+  * under OR, HAVING and WHERE over the grouped rows. No statement throws.
   */
 class WrapperInvarianceSpec extends AnyFunSuite {
 
@@ -257,6 +260,78 @@ class WrapperInvarianceSpec extends AnyFunSuite {
       assert(cast.isRight, cast)
       assert(outcome(scope + "abs(rn - 2) = 0") == cast)
       assert(outcome(scope + "TRY_CAST(rn AS INTEGER) = 2") == cast)
+    }
+  }
+
+  // Every subquery form, as a top-level WHERE conjunct (its semi/anti or
+  // inner join) and forced onto the marker path by a disjunct that is
+  // never true.
+  private val subqueryForms = Seq(
+    "k IN (SELECT k FROM u)",
+    "k IN (SELECT u.k FROM u WHERE u.v = t.g)",
+    "k NOT IN (SELECT v FROM u)",
+    "k NOT IN (SELECT CASE WHEN v = 3 THEN NULL ELSE v END AS x FROM u)",
+    "v NOT IN (SELECT u.v FROM u WHERE u.k = t.k)",
+    "(k, g) IN (SELECT k, v FROM u)",
+    "(k, g) NOT IN (SELECT k, v FROM u)",
+    "EXISTS (SELECT 1 AS x FROM u WHERE u.k = t.k)",
+    "NOT EXISTS (SELECT 1 AS x FROM u WHERE u.k = t.k)",
+    "v > (SELECT v FROM u WHERE k = 2) + 5",
+    "v > (SELECT v FROM u WHERE k = 2)",
+    "v > (SELECT max(v) FROM u) + 5",
+    "v < (SELECT sum(u.v) FROM u WHERE u.k = t.k) * 3",
+    "v > ANY (SELECT v * 5 AS x FROM u)",
+    "v > ALL (SELECT u.v * 5 AS x FROM u WHERE u.k = t.k)")
+
+  test("a subquery conjunct gives the same rows on the join and on the marker path") {
+    val outcomes = for (p <- subqueryForms) yield {
+      val top = outcome(s"SELECT k, g, v FROM t WHERE $p")
+      assert(outcome(s"SELECT k, g, v FROM t WHERE ($p) OR " +
+        "(k IS NULL AND k IS NOT NULL)") == top, p)
+      top
+    }
+    // the forms answer, and not all alike
+    assert(outcomes.forall(_.isRight), outcomes)
+    assert(outcomes.distinct.length > 5)
+  }
+
+  // `@` is the group's count and `#` its key: HAVING over the grouped
+  // rows, and WHERE over the same grouping as a derived table
+  private val groupedForms = Seq(
+    "@ IN (SELECT v FROM u WHERE v > 1)",
+    "@ NOT IN (SELECT v FROM u WHERE v > 1)",
+    "@ NOT IN (SELECT CASE WHEN v = 3 THEN NULL ELSE v END AS x FROM u)",
+    "(#, @) IN (SELECT k, v FROM u)",
+    "EXISTS (SELECT 1 AS x FROM u WHERE u.k = #)",
+    "NOT EXISTS (SELECT 1 AS x FROM u WHERE u.k = #)",
+    "@ = (SELECT v FROM u WHERE k = 2)",
+    "@ < (SELECT max(v) FROM u)",
+    "@ >= (SELECT count(*) FROM u WHERE u.k = #)",
+    "@ > ANY (SELECT v FROM u)",
+    "@ < ALL (SELECT v FROM u WHERE v > 1)",
+    "(@ IN (SELECT v FROM u WHERE v > 1)) OR # = 3")
+
+  test("HAVING p(count(*)) gives the rows of WHERE p(c) over the grouped rows") {
+    val outcomes = for (p <- groupedForms) yield {
+      val having = outcome("SELECT k, count(*) AS c FROM t GROUP BY k HAVING " +
+        p.replace("@", "count(*)").replace("#", "t.k"))
+      assert(outcome("SELECT k, c FROM (SELECT k, count(*) AS c FROM t GROUP BY k) d " +
+        "WHERE " + p.replace("@", "d.c").replace("#", "d.k")) == having, p)
+      having
+    }
+    assert(outcomes.forall(_.isRight), outcomes)
+    assert(outcomes.distinct.length > 3)
+  }
+
+  test("a guarded scalar subquery runs one Spark job while the statement is built") {
+    val guarded = "(SELECT v FROM u WHERE k = 2)"
+    for (sql <- Seq(s"SELECT k FROM t WHERE v > $guarded",
+        s"SELECT g, count(*) AS c FROM t GROUP BY g HAVING count(*) > $guarded",
+        s"SELECT k, $guarded AS s FROM t",
+        s"SELECT k, CASE WHEN v > $guarded THEN 1 ELSE 0 END AS x FROM t")) {
+      val (df, jobs) = JobCounter.jobsDuring(spark.sparkContext)(db.select(sql))
+      assert(df.isRight, sql)
+      assert(jobs == 1, s"$sql: $jobs jobs")
     }
   }
 }
