@@ -128,6 +128,10 @@ object Analyzer {
   sealed trait Subquery extends BoundNode {
     def sub: BoundSelect
     def pairs: Seq[(BoundCol, BoundCol)]
+    /** The outer columns the subquery correlates on: its pairs' outer
+      * sides, and the outer side of a residual or inequality conjunct.
+      */
+    def outerCols: Seq[BoundCol] = pairs.map(_._1)
   }
 
   sealed trait BoundOperand extends BoundNode
@@ -183,20 +187,22 @@ object Analyzer {
       def children = arg +: order.map(_._1)
     }
 
-    /** A scalar subquery as a general operand (inside arithmetic /
-      * functions / CASE values). Uncorrelated: one broadcast 1-row
-      * frame — or a bounded guarded-literal job when the one-row
-      * contract needs checking. Correlated (`pairs` nonempty): a
-      * group-less aggregate per key, lowered as ONE per-key aggregate
-      * frame left-joined on the decorrelated equalities — never
-      * per-row re-execution. Valid in SELECT-item expressions, WHERE
-      * and (uncorrelated) HAVING; rejected inside aggregate arguments
-      * and in GROUP/ORDER BY. The inequality's operands (`ineq`) are
-      * not children: they straddle the outer and the subquery scope.
+    /** A scalar subquery, in every position: a SELECT item, a
+      * comparison side, or nested in a larger operand. `guard` = the
+      * one-row contract needs a runtime check (uncorrelated, neither a
+      * group-less aggregate nor LIMIT ≤ 1). Correlated (`pairs` or
+      * `ineq`): a group-less aggregate per key, lowered as ONE per-key
+      * or running aggregate frame joined on the correlation — never
+      * per-row re-execution. Rejected inside aggregate arguments and in
+      * GROUP/ORDER BY. The inequality's operands (`ineq`) are not
+      * children: they straddle the outer and the subquery scope.
       */
     final case class BSubVal(sub: BoundSelect, guard: Boolean,
         pairs: Seq[(BoundCol, BoundCol)] = Nil,
-        ineq: Option[CorrIneq] = None) extends Leaf with Subquery
+        ineq: Option[CorrIneq] = None) extends Leaf with Subquery {
+      override def outerCols: Seq[BoundCol] =
+        pairs.map(_._1) ++ ineq.toSeq.flatMap(iq => columnsOf(iq.outerOp))
+    }
 
     /** A bound lambda (list higher-order function argument): params
       * resolve to BLambdaVar references in the body; everything else in
@@ -265,20 +271,8 @@ object Analyzer {
         pairs: Seq[(BoundCol, BoundCol)], negated: Boolean,
         residual: Seq[BoundExpr] = Nil) extends BoundExpr with Subquery {
       def children = Nil
-    }
-    /** Scalar comparison subquery — broadcast join of the one-row frame +
-      * filter. `guard = false` when one row is a static fact (group-less
-      * aggregate, or LIMIT ≤ 1); otherwise the lowering enforces the
-      * one-row contract at runtime and fails like the reference's error
-      * surface (database.rs:38-45 style). Non-empty `pairs` = correlated
-      * aggregate: the decorrelated equalities become GROUP BY keys of the
-      * aggregate frame and the comparison joins per key (one row per key
-      * by construction, so no guard).
-      */
-    final case class BCmpSub(op: CmpOp, o: BoundOperand, sub: BoundSelect,
-        guard: Boolean, pairs: Seq[(BoundCol, BoundCol)] = Nil)
-      extends BoundExpr with Subquery {
-      def children = Seq(o)
+      override def outerCols: Seq[BoundCol] =
+        pairs.map(_._1) ++ residualOuterCols(sub, residual)
     }
     /** Quantified comparison — <probe> <cmp> ANY/ALL (SELECT …) for the
       * combinations that don't desugar to [NOT] IN. Lowers as a facts
@@ -359,16 +353,6 @@ object Analyzer {
       def name = Some(alias)
       override def rowValue = Some(op)
     }
-    /** Scalar subquery projection item. `pairs` = decorrelated equality
-      * keys (outer col, inner col) — empty for the uncorrelated form;
-      * `guard` = the one-row contract needs a runtime probe.
-      */
-    final case class BISub(sub: BoundSelect, alias: String,
-        guard: Boolean, pairs: Seq[(BoundCol, BoundCol)],
-        ineq: Option[CorrIneq] = None) extends BoundItem {
-      def operands = Nil
-      def name = Some(alias)
-    }
     /** Window item: ranking function, lag/lead, or windowed aggregate
       * over a partition/order spec, named by its mandatory alias.
       * Row-level — does NOT make the query aggregate-scoped.
@@ -382,16 +366,14 @@ object Analyzer {
   }
 
   /** The columns a tree references in its own scope: column operands
-    * plus each subquery's outer-facing correlation columns (its pairs,
-    * and an EXISTS's residual outer columns). Aggregate arguments are not
-    * traversed — they are exempt from group-scope checks.
+    * plus each subquery's outer-facing correlation columns
+    * ([[Subquery.outerCols]]). Aggregate arguments are not traversed —
+    * they are exempt from group-scope checks.
     */
   def columnsOf(n: BoundNode): Seq[BoundCol] = n.collect {
     case BoundOperand.BCol(c) => Seq(c)
     case _: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg => Nil
-    case BoundExpr.BExists(sub, ps, _, res) =>
-      ps.map(_._1) ++ residualOuterCols(sub, res)
-    case q: Subquery => q.children.flatMap(columnsOf) ++ q.pairs.map(_._1)
+    case q: Subquery => q.children.flatMap(columnsOf) ++ q.outerCols
   }
 
   /** Whether `cols` holds `c` (names compare case-insensitively within
@@ -512,8 +494,8 @@ object Analyzer {
     * Residual correlation is only lowerable as a semi/anti-join
     * condition, i.e. for a top-level WHERE conjunct; this lets the
     * analyzer reject it everywhere else (under OR/NOT, in CASE, in
-    * projection/QUALIFY scope) instead of risking marker-join row
-    * duplication.
+    * projection, HAVING and QUALIFY scope) with one message instead of
+    * risking marker-join row duplication.
     */
   private def hasResidualExists(n: BoundNode): Boolean =
     n.exists { case BoundExpr.BExists(_, _, _, res) => res.nonEmpty }
@@ -553,26 +535,67 @@ object Analyzer {
         "a correlated scalar subquery must project a single aggregate call"))
     }
 
+  /** A scalar subquery's one correlated NON-equality conjunct (inner_expr
+    * REL outer_expr), normalized into the running-aggregate lowering's
+    * CorrIneq; anything beyond one such conjunct, or an aggregate that
+    * does not decompose over a prefix frame, rejects.
+    */
+  private def corrIneq(bsub: BoundSelect, residual: Seq[BoundExpr])
+      : Either[AnalyzerError, Option[CorrIneq]] = residual match {
+    case Seq() => Right(None)
+    case Seq(BoundExpr.BCmp(op, l, r)) =>
+      val innerB = (bsub.tables ++ bsub.joinSteps.map(_.table)).map(_.binding).toSet
+      // Some(true) = all column refs inner; Some(false) = all outer
+      def sideOf(o: BoundOperand): Option[Boolean] = {
+        val cs = columnsDeep(o)
+        if (cs.isEmpty) None
+        else if (cs.forall(c => innerB(c.binding))) Some(true)
+        else if (cs.forall(c => !innerB(c.binding))) Some(false)
+        else None
+      }
+      def flip(o: CmpOp): CmpOp = o match {
+        case CmpOp.Lt => CmpOp.Gt
+        case CmpOp.Gt => CmpOp.Lt
+        case CmpOp.Le => CmpOp.Ge
+        case CmpOp.Ge => CmpOp.Le
+        case other    => other
+      }
+      // the running-window lowering decomposes the aggregate over a
+      // prefix frame — only the natively windowable, non-distinct
+      // aggregates qualify
+      val undecomposable = bsub.projection.head.operands.flatMap(BoundNode.aggNodes)
+        .collectFirst { case BoundOperand.BAgg(f, _, dist)
+          if dist || !Aggregates(f).decomposable => f }
+      if (!Set[CmpOp](CmpOp.Lt, CmpOp.Le, CmpOp.Gt, CmpOp.Ge)(op)) Left(BadSubquery(
+        "a correlated scalar subquery supports one non-equality " +
+          "correlation conjunct only as <, <=, > or >="))
+      else if (undecomposable.isDefined) Left(BadSubquery(
+        "an inequality-correlated scalar subquery supports " +
+          s"running sum/count/avg/min/max (got ${undecomposable.get})"))
+      else (sideOf(l), sideOf(r)) match {
+        case (Some(true), Some(false)) => Right(Some(CorrIneq(op, r, l)))
+        case (Some(false), Some(true)) => Right(Some(CorrIneq(flip(op), l, r)))
+        case _ => Left(BadSubquery(
+          "the non-equality correlation of a scalar subquery must compare " +
+            "an inner-only expression with an outer-only expression"))
+      }
+    case _ => Left(BadSubquery(
+      "a correlated scalar subquery supports at most ONE " +
+        "non-equality correlation conjunct"))
+  }
+
   /** The columns a subquery reads outside its WHERE — projection,
     * grouping, ordering, HAVING and join-step ON — which decorrelation
-    * requires to be its own. A scalar subquery in a projection item —
-    * the item itself or an operand inside it — contributes its
-    * correlation keys: one pointing past this subquery's scope rejects
-    * (depth-2 correlation through a projection item is not
+    * requires to be its own. A scalar subquery in a projection item
+    * contributes its correlation keys: one pointing past this subquery's
+    * scope rejects (depth-2 correlation through a projection item is not
     * decorrelated).
     */
   private def nonPredicateCols(sub: BoundSelect): Seq[BoundCol] = {
-    def outerOf(pairs: Seq[(BoundCol, BoundCol)], iq: Option[CorrIneq]) =
-      pairs.map(_._1) ++ iq.toSeq.flatMap(x => columnsDeep(x.outerOp))
-    def scalarKeys(n: BoundNode): Seq[BoundCol] = n.collect {
-      case BoundOperand.BSubVal(_, _, ps, iq) => outerOf(ps, iq)
-    }
-    sub.projection.flatMap { it =>
-      it.operands.flatMap(o => columnsDeep(o) ++ scalarKeys(o)) ++ (it match {
-        case BoundItem.BISub(_, _, _, ipairs, iqo) => outerOf(ipairs, iqo)
-        case _ => Nil
-      })
-    } ++ sub.groupBy.flatMap {
+    def scalarKeys(n: BoundNode): Seq[BoundCol] =
+      n.collect { case v: BoundOperand.BSubVal => v.outerCols }
+    sub.projection.flatMap(_.operands.flatMap(o => columnsDeep(o) ++ scalarKeys(o))) ++
+    sub.groupBy.flatMap {
       case BoundGroupKey.GKCol(c)      => Seq(c)
       case BoundGroupKey.GKExpr(op, _) => columnsDeep(op)
     } ++ sub.orderBy.flatMap {
@@ -922,7 +945,7 @@ object Analyzer {
           Left(BadSubquery("a correlated LATERAL with LIMIT requires ORDER BY (top-N per key)"))
         else if (sub.orderBy.exists(!_._1.isInstanceOf[BoundOrderKey.OKOperand]))
           Left(BadSubquery("a correlated LATERAL's ORDER BY must use plain operands"))
-        else if (sub.projection.exists(_.rowValue.isEmpty))
+        else if (sub.projection.exists(_.rowValue.forall(BoundNode.hasSubquery)))
           Left(BadSubquery(
             "a correlated LATERAL projects plain columns and expressions only"))
         else
@@ -1368,7 +1391,6 @@ object Analyzer {
     case BoundItem.BIExpr(op, _)       => operandType(op)
     case BoundItem.BIAgg(f, arg, _, _) => aggType(f, arg.toSeq)
     case BoundItem.BIWin(f, args, _, _, _, _) => aggType(f, args)
-    case BoundItem.BISub(inner, _, _, _, _) => scalarOutputType(inner)
   }
 
   /** The type of a one-column subquery's output (scalar subquery items
@@ -1387,11 +1409,8 @@ object Analyzer {
     * projection items).
     */
   private[sql] def exprSubqueriesOf(s: BoundSelect): Seq[BoundSelect] =
-    (s.predicate.toSeq ++ s.having.toSeq).flatMap(subqueriesOf) ++
-      s.projection.flatMap {
-        case BoundItem.BISub(sub, _, _, _, _) => Seq(sub)
-        case it => it.rowValue.toSeq.flatMap(subqueriesOf)
-      }
+    (s.predicate.toSeq ++ s.having.toSeq ++ s.projection.flatMap(_.rowValue))
+      .flatMap(subqueriesOf)
 
   /** Self-references of a recursive CTE inside its step: (references in
     * FROM position, references at any depth inside expression-position
@@ -1468,8 +1487,8 @@ object Analyzer {
       sets: Seq[(AttributeDesc, BoundOperand)],
       predicate: Option[BoundExpr],
       matched: Option[BoundSelect] = None,
-      /** SET col = (SELECT …) values: each is a bound one-item select —
-        * `SELECT __lkrid, (sub) AS __sv FROM target` — lowered over the
+      /** SET col = <operand with a subquery> values: each is a bound
+        * select — `SELECT __lkrid, <op> AS __sv FROM target` — lowered over the
         * row-id'd pre-update image and joined back per row (correlated
         * aggregate forms decorrelate exactly like projection-scope
         * scalar subqueries).
@@ -1794,7 +1813,7 @@ object Analyzer {
     */
   private def parseHasSub(n: Ast.Node): Boolean = n.exists {
     case _: Operand.ScalarSub | _: Expr.InSubquery | _: Expr.RowInSubquery |
-         _: Expr.Exists | _: Expr.CmpSubquery | _: Expr.QuantSubquery => true
+         _: Expr.Exists | _: Expr.QuantSubquery => true
   }
 
   /** The row-id match select for a subquery-bearing DML WHERE: the target
@@ -2123,11 +2142,11 @@ object Analyzer {
                 case Operand.DefaultVal =>
                   sets += ((attr,
                     BoundOperand.BLit(attr.default.getOrElse(Lit.LitNull))))
-                // SET x = (SELECT …): bind as a one-item select over the
-                // row-id'd target — `SELECT __lkrid, (sub) AS __sv` — so
-                // the projection-scope scalar-subquery machinery (guards,
-                // correlated-aggregate decorrelation) applies unchanged
-                case Operand.ScalarSub(subT) =>
+                // SET x = <operand with a subquery>: bind as a one-item
+                // select over the row-id'd target — `SELECT __lkrid, <op>
+                // AS __sv` — so the projection-scope subquery machinery
+                // (guards, correlated-aggregate decorrelation) applies
+                case expr if parseHasSub(expr) =>
                   val desc2 = desc.copy(attributes =
                     desc.attributes :+ AttributeDesc("__lkrid", SqlType.SqlBigInt))
                   val chained = new Catalog {
@@ -2139,7 +2158,7 @@ object Analyzer {
                   analyzeSelect(
                     SelectTree(Some(Seq(
                       SelectItem.SCol(ColRef(None, "__lkrid")),
-                      SelectItem.SSub(subT, "__sv"))),
+                      SelectItem.SExpr(expr, "__sv"))),
                       Seq(FTable(TableRef(desc.name, None))), None),
                     chained) match {
                     case Left(e)   => return Left(e)
@@ -2731,7 +2750,8 @@ object Analyzer {
           s"${projItems.length}-item SELECT list"))
       else projItems((n - 1).toInt) match {
         case SelectItem.SCol(ref, _) => Right(Operand.Col(ref))
-        case SelectItem.SExpr(op, _) => Right(op)
+        case SelectItem.SExpr(op, a) =>
+          Right(if (forGroup) op else Operand.Col(ColRef(None, a)))
         case SelectItem.SAgg(f, arg, alias, d) =>
           if (forGroup) Left(BadAggregate(
             s"GROUP BY ordinal $n references an aggregate"))
@@ -2740,10 +2760,6 @@ object Analyzer {
         case SelectItem.SWin(_, _, _, _, a, _, _) =>
           if (forGroup) Left(BadAggregate(
             s"GROUP BY ordinal $n references a window item"))
-          else Right(Operand.Col(ColRef(None, a)))
-        case SelectItem.SSub(_, a) =>
-          if (forGroup) Left(BadSubquery(
-            s"GROUP BY ordinal $n references a subquery item"))
           else Right(Operand.Col(ColRef(None, a)))
         case _: SelectItem.SStar => sys.error("unreachable: stars expanded")
       }
@@ -2885,6 +2901,11 @@ object Analyzer {
         }
       case Operand.AggCall(f, _, _) =>
         Left(BadAggregate(s"$f(...) is not valid in this context"))
+      // every scalar subquery, in every position, binds here: one
+      // column; a correlated body (equality pairs and at most one
+      // inequality) must be a group-less aggregate, one row per key by
+      // construction; otherwise one row is static for a group-less
+      // aggregate or LIMIT ≤ 1 and runtime-guarded elsewhere
       case Operand.ScalarSub(sel) =>
         for {
           bsub0 <- analyzeSelect(sel, cat, outerScope = tables ++ outerScope)
@@ -2893,16 +2914,13 @@ object Analyzer {
             else Left(BadSubquery(
               s"a scalar subquery must project exactly one column, got ${bsub0.projection.length}"))
           dp <- decorrelate(bsub0, allowAggregate = true,
-            exprKeys = havingGkExprKeys)
-          (bsub, pairs, _) = dp
-          // a correlated operand takes the SELECT-item scalar contract:
-          // a group-less aggregate (one row per key by construction),
-          // lowered as ONE per-key aggregate left-joined on its keys
-          _ <- if (pairs.isEmpty) Right(()) else correlatedScalarBody(bsub)
-          staticOne = pairs.nonEmpty ||
-            (bsub.isAggregate && bsub.groupBy.isEmpty) ||
-            bsub.limit.exists(_ <= 1L)
-        } yield BoundOperand.BSubVal(bsub, guard = !staticOne, pairs)
+            exprKeys = havingGkExprKeys, allowResidual = true)
+          (bsub, pairs, residual) = dp
+          ineq <- corrIneq(bsub, residual)
+          _ <- if (pairs.isEmpty && ineq.isEmpty) Right(()) else correlatedScalarBody(bsub)
+          staticOne = pairs.nonEmpty || ineq.isDefined ||
+            (bsub.isAggregate && bsub.groupBy.isEmpty) || bsub.limit.exists(_ <= 1L)
+        } yield BoundOperand.BSubVal(bsub, guard = !staticOne, pairs, ineq)
       case Operand.OrderedAgg(f, arg, sep, ord, dist) if allowAgg =>
         val d = Aggregates(f)
         for {
@@ -3386,40 +3404,12 @@ object Analyzer {
         else
           for {
             bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-            // residual (non-equality) correlation only where the EXISTS
-            // lowers as a semi/anti join — never in HAVING scope, where
-            // decorrelation keys must be post-aggregation group keys
+            // residual (non-equality) correlation binds in every position;
+            // each position check rejects it outside a top-level WHERE
+            // conjunct, the one place it lowers as a semi/anti join
             dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys,
-              allowResidual = !allowAgg)
+              allowResidual = true)
           } yield BoundExpr.BExists(dp._1, dp._2, neg, dp._3)
-      case Expr.CmpSubquery(op, o, sub) =>
-        if (!topLevel)
-          Left(BadSubquery("a scalar subquery may not appear under NOT or inside CASE"))
-        else
-          for {
-            bo <- bindOp(o, allowAgg)
-            bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-            _ <-
-              if (bsub0.projection.length != 1)
-                Left(BadSubquery(
-                  s"scalar subquery must project exactly one column, got ${bsub0.projection.length}"))
-              else Right(())
-            dp <- decorrelate(bsub0, allowAggregate = true,
-              exprKeys = havingGkExprKeys)
-            (bsub, pairs, _) = dp
-            _ <-
-              if (pairs.isEmpty) Right(())
-              // correlated scalar: must be a group-less aggregate (one row
-              // per correlated key by construction) over a plain agg call.
-              // In HAVING scope the decorrelation keys must additionally be
-              // GROUP BY keys of the enclosing query — validated after the
-              // group keys are known (post-binding check in analyzeSelect).
-              else correlatedScalarBody(bsub)
-            // one row is a STATIC fact for a group-less aggregate or a
-            // LIMIT ≤ 1 subquery; anything else carries a runtime guard
-            staticOne = pairs.nonEmpty ||
-              (bsub.isAggregate && bsub.groupBy.isEmpty) || bsub.limit.exists(_ <= 1L)
-          } yield BoundExpr.BCmpSub(op, bo, bsub, guard = !staticOne, pairs)
       case Expr.QuantSubquery(op, o, sub, all) =>
         for {
           bo <- bindOp(o, allowAgg)
@@ -3636,84 +3626,6 @@ object Analyzer {
         // post-binding (rejected in aggregate scope)
         bindOp(op, allowAgg = true, allowSub = true).map(BoundItem.BIExpr(_, a))
       case w: SelectItem.SWin => bindWin(w)
-      case SelectItem.SSub(subTree, a) =>
-        // same contract as a WHERE-scope scalar subquery: one column; a
-        // correlated form must be a group-less aggregate (one row per key
-        // by construction); otherwise the one-row contract is static for
-        // LIMIT ≤ 1 / group-less aggregates and runtime-guarded elsewhere
-        for {
-          bsub0 <- analyzeSelect(subTree, cat, outerScope = tables ++ outerScope)
-          _ <-
-            if (bsub0.projection.length == 1) Right(())
-            else Left(BadSubquery(
-              s"scalar subquery must project exactly one column, got ${bsub0.projection.length}"))
-          dp <- decorrelate(bsub0, allowAggregate = true, allowResidual = true)
-          (bsub, pairs, residual) = dp
-          // one correlated NON-equality conjunct (inner_expr REL
-          // outer_expr) normalizes into the running-aggregate lowering;
-          // anything beyond that rejects loudly
-          ineqOpt <- residual match {
-            case Seq() => Right(None)
-            case Seq(BoundExpr.BCmp(op, l, r)) =>
-              val innerB = (bsub.tables ++ bsub.joinSteps.map(_.table))
-                .map(_.binding).toSet
-              // Some(true) = all column refs inner; Some(false) = all outer
-              def sideOf(o: BoundOperand): Option[Boolean] = {
-                val cs = columnsDeep(o)
-                if (cs.isEmpty) None
-                else if (cs.forall(c => innerB(c.binding))) Some(true)
-                else if (cs.forall(c => !innerB(c.binding))) Some(false)
-                else None
-              }
-              def flip(o: CmpOp): CmpOp = o match {
-                case CmpOp.Lt => CmpOp.Gt
-                case CmpOp.Gt => CmpOp.Lt
-                case CmpOp.Le => CmpOp.Ge
-                case CmpOp.Ge => CmpOp.Le
-                case other    => other
-              }
-              val ineqOps: Set[CmpOp] =
-                Set(CmpOp.Lt, CmpOp.Le, CmpOp.Gt, CmpOp.Ge)
-              if (!ineqOps(op)) Left(BadSubquery(
-                "a correlated scalar subquery supports one non-equality " +
-                  "correlation conjunct only as <, <=, > or >="))
-              else (sideOf(l), sideOf(r)) match {
-                case (Some(true), Some(false)) =>
-                  Right(Some(CorrIneq(op, r, l)))
-                case (Some(false), Some(true)) =>
-                  Right(Some(CorrIneq(flip(op), l, r)))
-                case _ => Left(BadSubquery(
-                  "the non-equality correlation of a scalar subquery must " +
-                    "compare an inner-only expression with an outer-only " +
-                    "expression"))
-              }
-            case _ => Left(BadSubquery(
-              "a correlated scalar subquery supports at most ONE " +
-                "non-equality correlation conjunct"))
-          }
-          _ <-
-            if (pairs.isEmpty && ineqOpt.isEmpty) Right(())
-            else correlatedScalarBody(bsub)
-          // the running-window lowering decomposes the aggregate over a
-          // prefix frame — only the natively windowable, non-distinct
-          // aggregates qualify
-          _ <- ineqOpt match {
-            case None => Right(())
-            case Some(_) =>
-              val nodes = bsub.projection.head.operands.flatMap(BoundNode.aggNodes)
-                .collect { case BoundOperand.BAgg(f, _, dist) => (f, dist) }
-              nodes.find { case (f, dist) =>
-                dist || !Aggregates(f).decomposable
-              } match {
-                case Some((f, _)) => Left(BadSubquery(
-                  "an inequality-correlated scalar subquery supports " +
-                    s"running sum/count/avg/min/max (got $f)"))
-                case None => Right(())
-              }
-          }
-          staticOne = pairs.nonEmpty || ineqOpt.isDefined ||
-            (bsub.isAggregate && bsub.groupBy.isEmpty) || bsub.limit.exists(_ <= 1L)
-        } yield BoundItem.BISub(bsub, a, guard = !staticOne, pairs, ineqOpt)
     }
 
     for {
@@ -3771,6 +3683,8 @@ object Analyzer {
                 .map(_.binding).toSet -- (semiAntiB - bt.binding)
               columnsOf(be).find(c => !visible(c.binding)) match {
                 case Some(c) => Left(UnboundBinding(c.binding))
+                case None if BoundNode.hasSubquery(be) => Left(BadSubquery(
+                  "a subquery is not supported in a JOIN step's ON condition"))
                 case None =>
                   val asofOk: Either[AnalyzerError, Unit] =
                     if (js.kind.startsWith("asof"))
@@ -3860,25 +3774,11 @@ object Analyzer {
             case None => Right(())
           }
         }
-        // scalar-subquery ITEMS over an aggregated query rewrite onto
-        // the operand machinery at the yield below (uncorrelated = one
-        // broadcast 1-row frame; correlated = the post-aggregation
-        // marker join; inequality-correlated = the union-merge running
-        // aggregate over the GROUPED frame — keys validated there)
-        else if (proj.exists {
-          case BoundItem.BISub(_, _, _, _, Some(io)) =>
-            BoundNode.containsAgg(io.outerOp)
-          case _ => false
-        })
-          Left(BadSubquery(
-            "the outer side of an inequality-correlated scalar-subquery " +
-              "item must not contain aggregate calls"))
-        // predicate-form subqueries inside computed projections (CASE
-        // conditions) of an aggregated query lower through the
-        // post-aggregation MarkerScope keyed on GROUP BY output columns;
-        // their probe columns and decorrelation keys flow through
-        // columnsOf/columnsOf below, so the grouped-columns check
-        // enforces that every outer reference is a GROUP BY key
+        // subqueries of an aggregated query's SELECT items lower
+        // through the post-aggregation MarkerScope keyed on GROUP BY
+        // output columns; their probe columns and correlation columns
+        // flow through columnsOf, so the grouped-columns check enforces
+        // that every outer reference is a GROUP BY key
         else {
           // a window operand that IS a group expression resolves to the
           // grouped key; otherwise its bare columns must be grouped
@@ -3904,7 +3804,6 @@ object Analyzer {
           case SelectItem.SAgg(_, _, Some(a), _) => a
           case SelectItem.SExpr(_, a)         => a
           case SelectItem.SWin(_, _, _, _, a, _, _) => a
-          case SelectItem.SSub(_, a)          => a
         }
         orderByKeys.foldLeft[Either[AnalyzerError, Vector[(BoundOrderKey, SortDir)]]](
           Right(Vector.empty)) { case (acc, (opnd, desc)) =>
@@ -3971,7 +3870,8 @@ object Analyzer {
                 op -> BoundCol("", AttributeDesc(a, operandType(op)))
             }.toMap
             havingMarkerOk = true
-            val r = bindExpr(e0.transform(aliasRule), allowAgg = true).map(Some(_))
+            val r = bindExpr(e0.transform(aliasRule), allowAgg = true).flatMap(h =>
+              if (hasResidualExists(h)) Left(residualPositionError) else Right(Some(h)))
             havingMarkerOk = false
             r
           }
@@ -3997,9 +3897,9 @@ object Analyzer {
       _ <- having match {
         case None => Right(())
         case Some(h) =>
-          // every subquery's pairs, CASE conditions included
+          // every subquery's correlation columns, CASE conditions included
           def keys(n: BoundNode): Seq[BoundCol] = n.collect {
-            case q: Subquery => q.children.flatMap(keys) ++ q.pairs.map(_._1)
+            case q: Subquery => q.children.flatMap(keys) ++ q.outerCols
           }
           keys(h).find(c => !(
             (c.binding.isEmpty && groupAliases(c.attr.name.toLowerCase)) || grouped(c)
@@ -4163,13 +4063,6 @@ object Analyzer {
             Left(BadFunction(
               "DISTINCT ON requires ORDER BY to lead with the ON expressions"))
           else if (order.exists {
-            case (BoundOrderKey.OKOutput(n), _) =>
-              named(n).exists(_.isInstanceOf[BoundItem.BISub])
-            case _ => false
-          })
-            Left(BadFunction(
-              "DISTINCT ON cannot ORDER BY a scalar-subquery alias"))
-          else if (order.exists {
             // a window alias sort key pre-attaches the window column at
             // its alias (like QUALIFY), so shadowing an input column
             // would collide
@@ -4244,75 +4137,13 @@ object Analyzer {
               case (BoundOrderKey.OKOperand(op), _) => contains(op)
               case _ => false
             }
-        // correlated operand subqueries in aggregate-scope projections /
-        // HAVING / QUALIFY evaluate POST-aggregation: their key
-        // equalities join the grouped frame via the marker scopes, so
-        // every decorrelation key must be a GROUP BY key (HAVING and
-        // QUALIFY keys are validated with the other subquery kinds by
-        // their own walks; projections are validated here — the bare-
-        // column check exempts subquery machinery, so pairs get an
-        // explicit pass)
-        val badCorrKey =
-          if (!isAgg) None
-          else proj.flatMap(_.operands).flatMap(_.collect {
-            case v: BoundOperand.BSubVal => v.pairs.map(_._1)
-          }).find(!grouped(_))
         if (badProj || badOther)
           Left(BadSubquery("a scalar-subquery operand is not supported " +
             "in this position (aggregate arguments, GROUP/ORDER BY, " +
             "window arguments)"))
-        else badCorrKey match {
-          case Some(c) => Left(BadSubquery(
-            "a correlated scalar-subquery operand in an aggregate-scope " +
-              s"projection may only correlate on GROUP BY keys (got ${c.render})"))
-          case None => Right(())
-        }
+        else Right(())
       }
-      // scalar-subquery ITEMS over an aggregated query ride the operand
-      // machinery (BSubVal): uncorrelated = a broadcast 1-row frame
-      // joined after aggregation; correlated = the post-aggregation
-      // marker join, whose decorrelation keys must therefore be GROUP BY
-      // keys (their grouped output columns are all that's left to join on)
-      projF <-
-        if (!isAgg) Right(proj)
-        else {
-          val rewritten = proj.map {
-            case BoundItem.BISub(sub, a, guard, ps, io) =>
-              BoundItem.BIExpr(BoundOperand.BSubVal(sub, guard, ps, io), a)
-            case other => other
-          }
-          // every outer reference — the decorrelated equality keys AND
-          // the inequality's outer operand — must be a GROUP BY key:
-          // post-aggregation, grouped output columns are all that's left
-          rewritten.flatMap {
-            case BoundItem.BIExpr(BoundOperand.BSubVal(_, _, ps, io), _) =>
-              ps.map(_._1) ++
-                io.toSeq.flatMap(iq => columnsDeep(iq.outerOp))
-            case _ => Nil
-          }.find(!grouped(_)) match {
-            case Some(c) => Left(BadSubquery(
-              "a correlated scalar-subquery item over an aggregated query " +
-                s"may only correlate on GROUP BY keys (got ${c.render})"))
-            case None =>
-              // the running scalar attaches AFTER ordering columns are
-              // resolved — its alias cannot be an ORDER BY key (order by
-              // its inputs instead); reject here, not as a plan crash
-              val ineqAliases = rewritten.collect {
-                case BoundItem.BIExpr(
-                    BoundOperand.BSubVal(_, _, _, Some(_)), a) => a.toLowerCase
-              }.toSet
-              order.collectFirst {
-                case (BoundOrderKey.OKOutput(n), _)
-                    if ineqAliases(n.toLowerCase) => n
-              } match {
-                case Some(n) => Left(BadSubquery(
-                  s"ORDER BY cannot reference the inequality-correlated " +
-                    s"scalar item '$n' over an aggregated query"))
-                case None => Right(rewritten)
-              }
-          }
-        }
-    } yield BoundSelect(innerTables, projF, pred, order, s.limit, s.offset,
+    } yield BoundSelect(innerTables, proj, pred, order, s.limit, s.offset,
       group, having, s.distinct, steps, derivedSubs.toMap, s.groupSpec,
       lateralConjs.toSeq, qualifyPred, qwins, don)
   }

@@ -170,9 +170,10 @@ object Ast {
       * the right operand of + / - against a date/timestamp.
       */
     final case class Interval(n: Long, unit: String) extends Leaf
-    /** `(SELECT …)` as an operand — today only in UPDATE SET value
-      * position (`SET x = (SELECT …)`); the analyzer rejects it
-      * elsewhere. One column; at most one row per (correlation) key.
+    /** `(SELECT …)` as an operand — the one parsed form of a scalar
+      * subquery, whether it is a whole SELECT item, one side of a
+      * comparison or nested in a larger operand. One column; at most one
+      * row (per correlation key).
       */
     final case class ScalarSub(sub: SelectTree) extends Leaf
     /** A lambda argument of a list higher-order function:
@@ -259,13 +260,6 @@ object Ast {
     final case class Exists(sub: SelectTree, negated: Boolean) extends Expr {
       def mapChildren(op: Operand => Operand, ex: Expr => Expr) = this
     }
-    /** <operand> <cmp> (SELECT …) — scalar comparison subquery: a
-      * group-less aggregate or LIMIT ≤ 1 subquery is one row statically;
-      * anything else gets a runtime one-row guard.
-      */
-    final case class CmpSubquery(op: CmpOp, l: Operand, sub: SelectTree) extends Expr {
-      def mapChildren(o: Operand => Operand, ex: Expr => Expr) = copy(l = o(l))
-    }
     /** <operand> <cmp> ANY/SOME/ALL (SELECT …) — quantified comparison.
       * `= ANY` / `<> ALL` desugar in the parser to [NOT] IN; the rest
       * lower as a min/max/count facts frame + a three-valued predicate
@@ -329,12 +323,6 @@ object Ast {
       * computed column needs a name.
       */
     final case class SExpr(op: Operand, alias: String) extends SelectItem
-    /** A scalar subquery as a projection item — `(SELECT …) AS a`. One
-      * column, at most one row (enforced statically for group-less
-      * aggregates / LIMIT 1, by a runtime guard otherwise); correlated
-      * aggregate forms decorrelate like WHERE-scope scalar subqueries.
-      */
-    final case class SSub(sub: SelectTree, alias: String) extends SelectItem
     /** Window item: row_number/rank/dense_rank, ntile/percent_rank/
       * cume_dist, lag/lead, first/last value, or a windowed aggregate —
       * `<fn>(args…) OVER (PARTITION BY … ORDER BY …

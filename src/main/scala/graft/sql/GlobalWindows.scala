@@ -30,7 +30,8 @@ import Analyzer._
   *
   * [[classify]] decides per window item; [[attach]] runs one
   * statement's requests. Both lowering paths (plain projection and
-  * aggregate scope) use the two.
+  * aggregate scope) use the two; a keyless inequality-correlated scalar
+  * subquery sends its running aggregates to [[attach]] as [[Scan]]s.
   *
   * The operator runs only where the window input may be large: when
   * driver-resident statistics bound that input by [[OneTaskRows]], every
@@ -396,7 +397,7 @@ private[sql] object GlobalWindows {
     * [[BucketCols.before]]), broadcast-joined back onto `df`. This is the
     * only single-partition step, and its size is the bucket count.
     */
-  private[sql] def carry(df: DataFrame, src: DataFrame, pid: String,
+  private def carry(df: DataFrame, src: DataFrame, pid: String,
       totals: Seq[Column], offsets: Seq[Column]): DataFrame = {
     val perBucket = src.groupBy(col(pid)).agg(totals.head, totals.tail: _*)
     df.join(broadcast(perBucket.select(col(pid) +: offsets: _*)), Seq(pid),
@@ -584,7 +585,7 @@ private[sql] object GlobalWindows {
     * avg decomposes into sum/count. `n(part, c)` names the scratch
     * columns (part "in", "t" or "f").
     */
-  private[sql] def running(f: String, a: Column, w: WindowSpec,
+  private def running(f: String, a: Column, w: WindowSpec,
       earlier: WindowSpec, n: (String, String) => String)
       : (Seq[Column], Seq[Column], Seq[Column], Column) = {
     def inN(c: String) = n("in", c)

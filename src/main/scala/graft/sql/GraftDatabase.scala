@@ -2365,7 +2365,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
           (joined, coalesce(col("__upd"), lit(false)),
             Seq("__lkrid", "__updrid", "__upd"))
       }
-      // SET x = (SELECT …): each value select computes (__lkrid, __sv)
+      // SET x = <operand with a subquery>: each value select computes (__lkrid, __sv)
       // over the pre-update image — uncorrelated forms broadcast one
       // guarded row, correlated aggregates join per key — and the value
       // joins back on the row id

@@ -52,16 +52,11 @@ object Lowering {
     }
     if (!q.isAggregate) {
       val namedCols = q.projection.collect { case BoundItem.BICol(bc, a) => (bc, a) }
-      // the SELECT list's subqueries attach to the relational core BEFORE
-      // projection: scalar-subquery items first, then the subqueries
-      // inside computed items (CASE conditions, scalar operands); the
+      // the SELECT list's subqueries (scalar subqueries, CASE
+      // conditions) attach to the relational core BEFORE projection; the
       // final select projects their columns away
       val ms = new MarkerScope(spark, source, "p", qualified,
         columnLeaf(qualified), windowRows)
-      val scalarCol: Map[Int, Column] = q.projection.zipWithIndex.collect {
-        case (BoundItem.BISub(sub, _, guard, pairs, iq), i) =>
-          i -> ms.scalar(sub, guard, pairs, iq)
-      }.toMap
       q.projection.foreach {
         case BoundItem.BIExpr(op, _) => ms.register(op)
         case _ => ()
@@ -142,8 +137,7 @@ object Lowering {
           case BoundOrderKey.OKOperand(op) => lowerOperandWith(op, qualified)
           case BoundOrderKey.OKOutput(n) => q.projection.collectFirst {
             case BoundItem.BICol(bc, Some(a)) if a.equalsIgnoreCase(n) => qualified(bc)
-            case BoundItem.BIExpr(op, a) if a.equalsIgnoreCase(n) =>
-              lowerOperandWith(op, qualified)
+            case BoundItem.BIExpr(op, a) if a.equalsIgnoreCase(n) => ms.lower(op)
             // window alias: the column is pre-attached (donNeedsWins)
             case BoundItem.BIWin(_, _, _, _, a, _) if a.equalsIgnoreCase(n) =>
               col(a)
@@ -155,13 +149,12 @@ object Lowering {
         baseQ.withColumn("__don", row_number().over(w))
           .filter(col("__don") === 1).drop("__don")
       }
-      def outputCols: Seq[Column] = q.projection.zipWithIndex.map {
-        case (BoundItem.BISub(_, a, _, _, _), i) => scalarCol(i).as(a)
-        case (BoundItem.BICol(bc, a), _)  => qualified(bc).as(outName(bc, a))
-        case (BoundItem.BIExpr(op, a), _) => ms.lower(op).as(a)
-        case (_: BoundItem.BIAgg, _) =>
+      def outputCols: Seq[Column] = q.projection.map {
+        case BoundItem.BICol(bc, a)  => qualified(bc).as(outName(bc, a))
+        case BoundItem.BIExpr(op, a) => ms.lower(op).as(a)
+        case _: BoundItem.BIAgg =>
           sys.error("unreachable: aggregate items take the aggregate branch")
-        case (BoundItem.BIWin(f, args, parts, ord, a, frame), _) =>
+        case BoundItem.BIWin(f, args, parts, ord, a, frame) =>
           if (winsPre) col(a).as(a)
           else windowColumn(f, args, parts, ord, frame,
             lowerOperandWith(_, qualified), qualified).as(a)
@@ -528,8 +521,6 @@ object Lowering {
         case (BoundItem.BIExpr(_, a), i) => exprCols.getOrElse(i, col(a)).as(a)
         case (BoundItem.BIAgg(_, _, _, _), i) => col(aggName(i))
         case (BoundItem.BIWin(_, _, _, _, a, _), i) => col(s"__w_$i").as(a)
-        case (_: BoundItem.BISub, _) =>
-          sys.error("unreachable: aggregate scope binds scalar items as BSubVal")
       }: _*)
       // SELECT DISTINCT over an aggregate result: a no-op unless the
       // projection drops group keys; apply it for correctness either way
@@ -1315,13 +1306,12 @@ object Lowering {
     val inclusive = iq.op == Ast.CmpOp.Le || iq.op == Ast.CmpOp.Ge
     val tie = when(col(tagN), lit(if (inclusive) 1 else 0))
       .otherwise(lit(if (inclusive) 0 else 1))
-    val ordExprs = Seq(
-      (if (asc) col(tN).asc_nulls_first else col(tN).desc_nulls_first),
-      tie.asc)
+    val ordCols = Seq(col(tN) -> Ast.SortDir(!asc, Some(true)),
+      tie -> Ast.SortDir(false, Some(true)))
     // the union holds the outer tags and the inner rows
     val unionRows = for (o <- outerRows; i <- inputRows(sub, source))
       yield o + i
-    val ran =
+    val windowed =
       if (kN.nonEmpty || (oneTask(unionRows) &&
           nodes.forall { case (f, a) => !GlobalWindows.retyped(f, a) })) {
         // equality keys partition the running window — scales on its
@@ -1329,7 +1319,7 @@ object Lowering {
         // carry types an aggregate its own way
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(kN.map(col): _*)
-          .orderBy(ordExprs: _*)
+          .orderBy(ordCols.map { case (c, d) => sortCol(c, d) }: _*)
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding, 0L)
         // each node's argument is pre-projected as its `_a` column
@@ -1340,51 +1330,17 @@ object Lowering {
             _.over(w)).as(s"${name}_r$j")
         }
         unioned.select(col("*") +: resCols: _*)
-          .filter(col(tagN))
-          .select(kN.map(col) ++ Seq(col(tN)) ++
-            nodes.indices.map(j => col(s"${name}_r$j")): _*)
       } else {
-        // NO equality keys over a large or unknown union: an
-        // unpartitioned running window would plan as Exchange
-        // SinglePartition — every inner row through one task, the
-        // classic 100×-scale killer. Instead, a DISTRIBUTED
-        // PREFIX SCAN: range-partition by the running order, run the
-        // prefix window INSIDE each bucket (parallel), aggregate one
-        // total row per bucket (tiny), take the EXCLUSIVE prefix of
-        // those totals over bucket ids (P rows on one task — trivial),
-        // broadcast the offsets back and combine. avg decomposes into
-        // sum/count (offsets aren't averageable); min/max combine with
-        // null-skipping least/greatest; count offsets coalesce to 0.
-        val pidN = s"${name}_pid"
-        val nParts = spark.sessionState.conf.numShufflePartitions
-        // lazy local checkpoint: the bucketing feeds both the in-bucket
-        // windows and the per-bucket totals — RangePartitioner's
-        // RDD-id-seeded boundary sampling must not run twice (see
-        // materializeOnce)
-        val bucketed = materializeOnce(unioned
-          .repartitionByRange(nParts, ordExprs: _*)
-          .withColumn(pidN, spark_partition_id()))
-        val wB = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(pidN)).orderBy(ordExprs: _*)
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, 0L)
-        val wP = org.apache.spark.sql.expressions.Window
-          .orderBy(col(pidN).asc)
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, -1L)
-        val parts = nodes.zipWithIndex.map { case ((f, _), j) =>
-          GlobalWindows.running(f, col(s"${name}_a$j"), wB, wP,
-            (p, c) => s"${name}_$p${j}_$c")
-        }
-        GlobalWindows.carry(
-            bucketed.select(col("*") +: parts.flatMap(_._1): _*), bucketed,
-            pidN, parts.flatMap(_._2), parts.flatMap(_._3))
-          .select(col("*") +: parts.zipWithIndex.map { case (p, j) =>
-            p._4.as(s"${name}_r$j") }: _*)
-          .filter(col(tagN))
-          .select(Seq(col(tN)) ++
-            nodes.indices.map(j => col(s"${name}_r$j")): _*)
+        // NO equality keys over a large or unknown union: the bucketed
+        // prefix scan, one running request per node over one range
+        // bucketing of the (bound, tag tiebreak) order (equal empty keys)
+        val prefix = Ast.WinFrame(range = false, lo = Long.MinValue, hi = 0L)
+        GlobalWindows.attach(unioned, nodes.indices.map(j =>
+          GlobalWindows.Bucketed(Nil, ordCols, GlobalWindows.Scan(s"${name}_r$j",
+            nodes(j)._1, Some(col(s"${name}_a$j")), Some(prefix)))))(identity)
       }
+    val ran = windowed.filter(col(tagN)).select(kN.map(col) ++ Seq(col(tN)) ++
+      nodes.indices.map(j => col(s"${name}_r$j")): _*)
     val cond = (pairs.zipWithIndex.map { case ((oc, _), j) =>
       qcolOuter(oc) <=> ran(kN(j)) } :+
       (lowerOperandWith(iq.outerOp, qcolOuter) <=> ran(tN))).reduce(_ && _)
@@ -1594,6 +1550,14 @@ object Lowering {
     }
   }
 
+  /** An uncorrelated scalar subquery whose one row is static. */
+  private object OneRow {
+    def unapply(n: BoundNode): Option[BoundSelect] = n match {
+      case BoundOperand.BSubVal(sub, false, Seq(), None) => Some(sub)
+      case _                                             => None
+    }
+  }
+
   /** The one subquery scope of a SELECT position — WHERE, HAVING, the
     * SELECT list or QUALIFY. Every IN / NOT IN / row IN / EXISTS /
     * ANY / ALL / scalar subquery of the position lowers here as joins
@@ -1606,11 +1570,11 @@ object Lowering {
     *
     * A top-level IN, row IN or EXISTS conjunct of `filter` joins semi or
     * anti (correlated: on its value plus the decorrelated equality
-    * pairs), and an uncorrelated unguarded scalar comparison joins its
-    * one-row frame inner. Every other subquery — under OR, NOT or a CASE
-    * condition, or a scalar subquery used as a value — LEFT-joins a
-    * marker frame, and the expression evaluates columnar over the
-    * markers.
+    * pairs), and a comparison with an uncorrelated unguarded scalar
+    * subquery on either side joins its one-row frame inner. Every other
+    * subquery — under OR, NOT or a CASE condition, or a scalar subquery
+    * used as a value — LEFT-joins a marker frame, and the expression
+    * evaluates columnar over the markers.
     *
     * IN markers are THREE-VALUED exactly where SQL's NULL and FALSE are
     * distinguishable (a negated IN, or any IN under an enclosing NOT):
@@ -1709,8 +1673,8 @@ object Lowering {
       val (subs, plain) = conjs.partition(BoundNode.hasSubquery)
       plain.map(lower).reduceOption(_ && _).foreach(p => steps += (_.filter(p)))
       val (top, mixed) = subs.partition {
-        case _: BoundExpr.BInSub | _: BoundExpr.BRowInSub |
-             _: BoundExpr.BExists | _: BoundExpr.BCmpSub => true
+        case _: BoundExpr.BInSub | _: BoundExpr.BRowInSub | _: BoundExpr.BExists |
+             BoundExpr.BCmp(_, OneRow(_), _) | BoundExpr.BCmp(_, _, OneRow(_)) => true
         case _ => false
       }
       (top ++ mixed).foreach(conjunct)
@@ -1846,14 +1810,20 @@ object Lowering {
             .reduce(_ && _)
           steps += (_.join(subDf, cond, joinType))
         }
-      case BoundExpr.BCmpSub(op, o, sub, false, Seq()) =>
-        // an inner join with the one-row frame keeps exactly the rows
-        // the comparison holds for
-        val probe = value(o)
-        val m = fresh()
-        val subDf = broadcast(lowerSelect(spark, sub, source).toDF(m))
-        steps += (_.join(subDf, cmpCols(op, probe, col(m)), "inner").drop(m))
+      case BoundExpr.BCmp(op, l, OneRow(sub)) => oneRowJoin(sub, value(l), cmpCols(op, _, _))
+      case BoundExpr.BCmp(op, OneRow(sub), r) =>
+        oneRowJoin(sub, value(r), (p, v) => cmpCols(op, v, p))
       case other => marked(other)
+    }
+
+    /** An inner join with `sub`'s one-row frame keeps exactly the rows
+      * `cmp(probe, value)` holds for.
+      */
+    private def oneRowJoin(sub: BoundSelect, probe: Column,
+        cmp: (Column, Column) => Column): Unit = {
+      val m = fresh()
+      val subDf = broadcast(lowerSelect(spark, sub, source).toDF(m))
+      steps += (_.join(subDf, cmp(probe, col(m)), "inner").drop(m))
     }
 
     /** A conjunct over markers: their joins, one filter, the markers
@@ -2051,8 +2021,6 @@ object Lowering {
             .when(compat, lit(null).cast("boolean"))
             .otherwise(lit(false))
           markOf.put(s, if (neg) !p else p)
-        case s @ BoundExpr.BCmpSub(op, o, sub, guard, pairs) =>
-          markOf.put(s, cmpCols(op, value(o), scalar(sub, guard, pairs, None)))
         case s @ BoundExpr.BQuantSub(op, o, sub, all, pairs) =>
           val probe = value(o)
           val m = fresh()

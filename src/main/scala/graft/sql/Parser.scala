@@ -768,21 +768,18 @@ object Parser {
         case FLateral(sel, _)       => readsTable(sel, name)
         case FLateralSet(u, _)      => inTree(u)
       }
-      def inExpr(e: Expr): Boolean = e match {
-        case Expr.And(l, r)               => inExpr(l) || inExpr(r)
-        case Expr.Or(l, r)                => inExpr(l) || inExpr(r)
-        case Expr.Not(x)                  => inExpr(x)
-        case Expr.InSubquery(_, sub, _)   => readsTable(sub, name)
-        case Expr.RowInSubquery(_, sub, _) => readsTable(sub, name)
-        case Expr.Exists(sub, _)          => readsTable(sub, name)
-        case Expr.CmpSubquery(_, _, sub)  => readsTable(sub, name)
+      def inNode(n: Node): Boolean = (n match {
+        case Operand.ScalarSub(sub)           => readsTable(sub, name)
+        case Expr.InSubquery(_, sub, _)       => readsTable(sub, name)
+        case Expr.RowInSubquery(_, sub, _)    => readsTable(sub, name)
+        case Expr.Exists(sub, _)              => readsTable(sub, name)
         case Expr.QuantSubquery(_, _, sub, _) => readsTable(sub, name)
-        case _                            => false
-      }
+        case _                                => false
+      }) || n.children.exists(inNode)
       t.from.exists(inFrom) || t.joinSteps.exists(js => inFrom(js.item)) ||
-        t.where.exists(inExpr) || t.having.exists(inExpr) ||
+        t.where.exists(inNode) || t.having.exists(inNode) ||
         t.columns.exists(_.exists {
-          case SelectItem.SSub(sub, _) => readsTable(sub, name)
+          case SelectItem.SExpr(op, _) => inNode(op)
           case _                       => false
         })
     }
@@ -863,9 +860,8 @@ object Parser {
     }
 
   /** Replace CTE-name table references with derived tables, recursing into
-    * every nested SELECT (derived tables, join steps, WHERE/HAVING
-    * subqueries, scalar projection items). Operands cannot contain
-    * subqueries (no parse path), so only Expr positions recurse.
+    * every nested SELECT (derived tables, join steps, and the subqueries
+    * of WHERE, HAVING and computed SELECT items at any depth).
     */
   private def substCte(t: SelectTree, ctes: Map[String, ParseTree]): SelectTree = {
     if (ctes.isEmpty) return t
@@ -884,22 +880,22 @@ object Parser {
       case tf: FTableFunc    => tf
       case fs: FFileScan     => fs
     }
-    def expr(e: Expr): Expr = e match {
-      case Expr.And(l, r)         => Expr.And(expr(l), expr(r))
-      case Expr.Or(l, r)          => Expr.Or(expr(l), expr(r))
-      case Expr.Not(x)            => Expr.Not(expr(x))
+    def operand(o: Operand): Operand = o match {
+      case Operand.ScalarSub(sub) => Operand.ScalarSub(substCte(sub, ctes))
+      case other                  => other.mapChildren(operand, expr)
+    }
+    def expr(e: Expr): Expr = (e match {
       case Expr.InSubquery(o, sub, n)   => Expr.InSubquery(o, substCte(sub, ctes), n)
       case Expr.RowInSubquery(os, sub, n) =>
         Expr.RowInSubquery(os, substCte(sub, ctes), n)
       case Expr.Exists(sub, n)          => Expr.Exists(substCte(sub, ctes), n)
-      case Expr.CmpSubquery(op, l, sub) => Expr.CmpSubquery(op, l, substCte(sub, ctes))
       case Expr.QuantSubquery(op, l, sub, all) =>
         Expr.QuantSubquery(op, l, substCte(sub, ctes), all)
       case other                  => other
-    }
+    }).mapChildren(operand, expr)
     t.copy(
       columns = t.columns.map(_.map {
-        case SelectItem.SSub(sub, a) => SelectItem.SSub(substCte(sub, ctes), a)
+        case SelectItem.SExpr(op, a) => SelectItem.SExpr(operand(op), a)
         case other                   => other
       }),
       from = t.from.map(fromItem),
@@ -1406,37 +1402,6 @@ object Parser {
               } =>
                 p.next(); p.next(); p.next() // ident . *
                 parseStarMods(p).map { case (e, r, rn) => SelectItem.SStar(Some(b), e, r, rn) }
-              // `(SELECT …) AS a` — a scalar subquery item; a bare `(`
-              // not followed by SELECT stays a parenthesized operand
-              case TSym("(", _) if {
-                val save = p.i; p.next(); val r = p.isKw("select"); p.i = save; r
-              } =>
-                val save = p.i
-                for {
-                  _ <- p.eatSym("(")
-                  sub <- parseSelect(p)
-                  _ <- p.eatSym(")")
-                  it <- p.peek match {
-                    case TIdent(k, _) if k.equalsIgnoreCase("as") =>
-                      p.next(); p.ident().map(a => SelectItem.SSub(sub, a): SelectItem)
-                    // `(SELECT …) - x AS gap`: the subquery is part of a
-                    // larger expression — reparse through the operand
-                    // grammar (its atom layer yields a ScalarSub)
-                    case TSym("+" | "-" | "*" | "/" | "%" | "||" | "::" | "[", _) =>
-                      p.i = save
-                      parseOperand(p, allowAgg = true).flatMap { computed =>
-                        p.peek match {
-                          case TIdent(s2, _) if s2.equalsIgnoreCase("as") =>
-                            p.next(); p.ident().map(a =>
-                              SelectItem.SExpr(computed, a): SelectItem)
-                          case _ => Left(ParseError(
-                            "computed select item requires AS <name>", start))
-                        }
-                      }
-                    case _ => Left(ParseError(
-                      "a scalar subquery item requires AS <name>", start))
-                  }
-                } yield it
               // fn(COLUMNS(…)) — per-column function application (DuckDB):
               // one output item per matched column, named with the bare
               // column name. Detected by a 3-token lookahead so ordinary
@@ -2369,7 +2334,6 @@ object Parser {
                           Right(Operand.AggCall(f, arg, d))
                         case SelectItem.SWin(_, _, _, _, a, _, _) =>
                           Right(Operand.Col(ColRef(None, a)))
-                        case SelectItem.SSub(_, a) => Right(Operand.Col(ColRef(None, a)))
                         case _: SelectItem.SStar => Left(ParseError(
                           "ORDER BY ALL does not support * items", pos))
                       }
@@ -2751,43 +2715,21 @@ object Parser {
               }
             case _ => Right(None)
           }
-          // right side: a scalar subquery — (SELECT …) — or a plain operand
-          isSub = quant.isDefined || {
-            val save = p.i
-            val r = p.eatSym("(").isRight && p.isKw("select")
-            p.i = save
-            r
-          }
-          rhsStart = p.i
-          e <-
-            if (isSub)
+          // right side: a quantified subquery, or an operand (a scalar
+          // subquery is one)
+          e <- quant match {
+            case Some(isAll) =>
               for {
                 _ <- p.eatSym("(")
                 sub <- parseSelect(p)
                 _ <- p.eatSym(")")
-                q <- quant match {
-                  case None =>
-                    // `x = (SELECT …) - 2`: the subquery is part of a
-                    // LARGER operand — rewind and reparse the right side
-                    // through the operand grammar (whose atom layer
-                    // yields a ScalarSub)
-                    p.peek match {
-                      case TSym("+" | "-" | "*" | "/" | "%" | "||" |
-                          "::" | "[", _) =>
-                        p.i = rhsStart
-                        parseOperand(p, allowAgg)
-                          .map(r => collatedCmp(op, l, r): Expr)
-                      case _ => Right(Expr.CmpSubquery(op, l, sub): Expr)
-                    }
-                  case Some(isAll) => (op, isAll) match {
-                    case (CmpOp.Eq, false)  => Right(Expr.InSubquery(l, sub, negated = false): Expr)
-                    case (CmpOp.Neq, true)  => Right(Expr.InSubquery(l, sub, negated = true): Expr)
-                    case (CmpOp.Eq, true) | (CmpOp.Neq, false) | _ =>
-                      Right(Expr.QuantSubquery(op, l, sub, isAll): Expr)
-                  }
-                }
-              } yield q
-            else parseOperand(p, allowAgg).map(r => collatedCmp(op, l, r): Expr)
+              } yield (op, isAll) match {
+                case (CmpOp.Eq, false) => Expr.InSubquery(l, sub, negated = false)
+                case (CmpOp.Neq, true) => Expr.InSubquery(l, sub, negated = true)
+                case _                 => Expr.QuantSubquery(op, l, sub, isAll)
+              }
+            case None => parseOperand(p, allowAgg).map(r => collatedCmp(op, l, r))
+          }
         } yield e
     }
   }
@@ -4599,36 +4541,22 @@ object Parser {
       for {
         c <- p.ident()
         _ <- p.eatSym("=")
-        // SET x = (SELECT …) — a scalar subquery as the value
-        isSub = {
-          val save = p.i
-          val r = p.eatSym("(").isRight && p.isKw("select")
-          p.i = save
-          r
+        // SET x = DEFAULT — the column's declared default (when the
+        // keyword stands alone; `default` stays usable as a column)
+        v <- p.peek match {
+          case TIdent(k, _) if k.equalsIgnoreCase("default") && {
+              val save = p.i; p.next()
+              val alone = p.peek match {
+                case TSym(",", _) | TEnd(_) => true
+                case TIdent(w, _) => w.equalsIgnoreCase("where")
+                case TSym(";", _) => true
+                case _ => false
+              }
+              p.i = save; alone
+            } =>
+            p.next(); Right(Operand.DefaultVal: Operand)
+          case _ => parseOperand(p)
         }
-        v <-
-          if (isSub)
-            for {
-              _ <- p.eatSym("(")
-              sub <- parseSelect(p)
-              _ <- p.eatSym(")")
-            } yield Operand.ScalarSub(sub): Operand
-          // SET x = DEFAULT — the column's declared default (when the
-          // keyword stands alone; `default` stays usable as a column)
-          else p.peek match {
-            case TIdent(k, _) if k.equalsIgnoreCase("default") && {
-                val save = p.i; p.next()
-                val alone = p.peek match {
-                  case TSym(",", _) | TEnd(_) => true
-                  case TIdent(w, _) => w.equalsIgnoreCase("where")
-                  case TSym(";", _) => true
-                  case _ => false
-                }
-                p.i = save; alone
-              } =>
-              p.next(); Right(Operand.DefaultVal: Operand)
-            case _ => parseOperand(p)
-          }
       } yield (c, v)
     for {
       _ <- p.eatKw("update")

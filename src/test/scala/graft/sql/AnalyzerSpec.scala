@@ -202,7 +202,7 @@ class AnalyzerSpec extends AnyFunSuite {
   test("scalar subquery guard flag: static one-row forms skip the guard") {
     def guardOf(sql: String): Boolean = {
       val Right(b: BoundSelect) = analyzeSql(sql): @unchecked
-      val Some(BoundExpr.BCmpSub(_, _, _, g, _)) = b.predicate: @unchecked
+      val Some(BoundExpr.BCmp(_, _, BoundOperand.BSubVal(_, g, _, _))) = b.predicate: @unchecked
       g
     }
     assert(!guardOf("SELECT name FROM people WHERE age > (SELECT max(age) FROM people)"))

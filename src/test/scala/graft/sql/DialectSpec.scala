@@ -263,10 +263,17 @@ class DialectSpec extends AnyFunSuite {
 
   test("scalar comparison subqueries (group-less aggregates) lower as broadcast joins") {
     val db = demoDb()
-    // max(age) = 30 → only Doc matches >=
-    val m = db.select("SELECT name FROM people WHERE age >= (SELECT max(age) FROM people)")
-      .toOption.get
-    assert(m.collect().map(_.getString(0)).toSeq == Seq("Dr. Emmett L. „Doc“ Brown"))
+    // max(age) = 30 → only Doc matches >=, with the subquery on either
+    // side: an inner join with the one-row frame, no marker left join
+    for (p <- Seq("age >= (SELECT max(age) FROM people)",
+        "(SELECT max(age) FROM people) <= age")) {
+      val m = db.select(s"SELECT name FROM people WHERE $p").toOption.get
+      assert(m.collect().map(_.getString(0)).toSeq == Seq("Dr. Emmett L. „Doc“ Brown"))
+      // the lowering's own plan: Catalyst would turn a marker left join
+      // under this filter into an inner join
+      val plan = m.queryExecution.analyzed.toString
+      assert(plan.contains("Join Inner") && !plan.contains("LeftOuter"), plan)
+    }
     // count over another table as the scalar
     val c = db.select("SELECT name FROM people WHERE id <= (SELECT count(*) FROM cars) " +
       "ORDER BY id").toOption.get
@@ -1176,10 +1183,12 @@ class DialectSpec extends AnyFunSuite {
       "(SELECT c.id FROM cars c WHERE c.owner_id = p.id OR c.id = 1) " +
       "ORDER BY id").toOption.get
     assert(or.collect().length == 3)
-    // … but scalar subqueries still require equality correlation (their
-    // decorrelation keys become GROUP BY keys)
-    assert(db.query("SELECT name FROM people p WHERE age > " +
-      "(SELECT min(c.id) FROM cars c WHERE c.owner_id > p.id)").isLeft)
+    // … and a scalar subquery's one inequality conjunct lowers as a
+    // running aggregate in WHERE as in the SELECT list (p.id = 1: the
+    // cars of owners past 1 have min id 2 < 20; p.id = 2: none, NULL)
+    val ineq = db.select("SELECT name FROM people p WHERE age > " +
+      "(SELECT min(c.id) FROM cars c WHERE c.owner_id > p.id)").toOption.get
+    assert(ineq.collect().map(_.getString(0)).toSeq == Seq("Elon"))
     // correlated reference in the projection
     assert(db.query("SELECT name FROM people p WHERE EXISTS " +
       "(SELECT p.id FROM cars c WHERE c.owner_id = p.id)").isLeft)
@@ -3006,39 +3015,51 @@ class DialectSpec extends AnyFunSuite {
   }
 
   test("inequality-correlated scalar subqueries: running-aggregate lowering") {
-    val db = freshDb()
-    def run(sql: String): Unit = db.query(sql) match {
-      case Left(e) => fail(s"$sql -> ${e.msg}")
-      case Right(_) => ()
+    onBothWindowPaths { (db, bucketed) =>
+      def run(sql: String): Unit = db.query(sql) match {
+        case Left(e) => fail(s"$sql -> ${e.msg}")
+        case Right(_) => ()
+      }
+      run("CREATE TABLE rr (k INT, t INT, v INT)")
+      run("INSERT INTO rr VALUES (1, 1, 10), (1, 2, 20), (1, 3, 30), " +
+        "(2, 1, 5), (2, 2, 7)")
+      pinBuckets(db, bucketed)
+      def rows(sql: String): Seq[Seq[Any]] =
+        db.select(sql).toOption.getOrElse(fail(s"rejected: $sql"))
+          .collect().map(_.toSeq.toSeq).toSeq
+      // inclusive running sum per key
+      assert(rows("SELECT k, t, (SELECT sum(v) AS s FROM rr r2 " +
+        "WHERE r2.k = rr.k AND r2.t <= rr.t) AS run FROM rr ORDER BY k, t") ==
+        Seq(Seq(1, 1, 10L), Seq(1, 2, 30L), Seq(1, 3, 60L),
+          Seq(2, 1, 5L), Seq(2, 2, 12L)))
+      // strict suffix count (reads 0 over the empty set, not NULL)
+      assert(rows("SELECT k, t, (SELECT count(*) AS c FROM rr r2 " +
+        "WHERE r2.k = rr.k AND r2.t > rr.t) AS later FROM rr ORDER BY k, t") ==
+        Seq(Seq(1, 1, 2L), Seq(1, 2, 1L), Seq(1, 3, 0L),
+          Seq(2, 1, 1L), Seq(2, 2, 0L)))
+      // no equality keys: global strict prefix min (empty set reads NULL),
+      // on the bucketed prefix scan when the union is large
+      val keyless = "SELECT k, t, (SELECT min(v) AS m FROM rr r2 " +
+        "WHERE r2.t < rr.t) AS mn FROM rr ORDER BY k, t"
+      assert(rows(keyless) ==
+        Seq(Seq(1, 1, null), Seq(1, 2, 5), Seq(1, 3, 5),
+          Seq(2, 1, null), Seq(2, 2, 5)))
+      val plan = db.select(keyless).toOption.get.queryExecution.executedPlan.toString
+      assert(plan.contains("ExistingRDD") == bucketed, plan)
+      // keyless running sum, count and avg over the suffix
+      assert(rows("SELECT k, t, (SELECT sum(v) + count(*) AS s FROM rr r2 " +
+        "WHERE r2.t >= rr.t) AS s, (SELECT avg(v) AS a FROM rr r2 " +
+        "WHERE r2.t > rr.t) AS a FROM rr ORDER BY k, t") ==
+        Seq(Seq(1, 1, 77L, 19.0), Seq(1, 2, 60L, 30.0), Seq(1, 3, 31L, null),
+          Seq(2, 1, 77L, 19.0), Seq(2, 2, 60L, 30.0)))
+      // rejections: two inequalities, non-windowable aggregate, DISTINCT
+      assert(db.select("SELECT k, (SELECT sum(v) AS s FROM rr r2 " +
+        "WHERE r2.t <= rr.t AND r2.v < rr.v) AS x FROM rr").isLeft)
+      assert(db.select("SELECT k, (SELECT median(v) AS s FROM rr r2 " +
+        "WHERE r2.t <= rr.t) AS x FROM rr").isLeft)
+      assert(db.select("SELECT k, (SELECT sum(DISTINCT v) AS s FROM rr r2 " +
+        "WHERE r2.t <= rr.t) AS x FROM rr").isLeft)
     }
-    run("CREATE TABLE rr (k INT, t INT, v INT)")
-    run("INSERT INTO rr VALUES (1, 1, 10), (1, 2, 20), (1, 3, 30), " +
-      "(2, 1, 5), (2, 2, 7)")
-    def rows(sql: String): Seq[Seq[Any]] =
-      db.select(sql).toOption.getOrElse(fail(s"rejected: $sql"))
-        .collect().map(_.toSeq.toSeq).toSeq
-    // inclusive running sum per key
-    assert(rows("SELECT k, t, (SELECT sum(v) AS s FROM rr r2 " +
-      "WHERE r2.k = rr.k AND r2.t <= rr.t) AS run FROM rr ORDER BY k, t") ==
-      Seq(Seq(1, 1, 10L), Seq(1, 2, 30L), Seq(1, 3, 60L),
-        Seq(2, 1, 5L), Seq(2, 2, 12L)))
-    // strict suffix count (reads 0 over the empty set, not NULL)
-    assert(rows("SELECT k, t, (SELECT count(*) AS c FROM rr r2 " +
-      "WHERE r2.k = rr.k AND r2.t > rr.t) AS later FROM rr ORDER BY k, t") ==
-      Seq(Seq(1, 1, 2L), Seq(1, 2, 1L), Seq(1, 3, 0L),
-        Seq(2, 1, 1L), Seq(2, 2, 0L)))
-    // no equality keys: global strict prefix min (empty set reads NULL)
-    assert(rows("SELECT k, t, (SELECT min(v) AS m FROM rr r2 " +
-      "WHERE r2.t < rr.t) AS mn FROM rr ORDER BY k, t") ==
-      Seq(Seq(1, 1, null), Seq(1, 2, 5), Seq(1, 3, 5),
-        Seq(2, 1, null), Seq(2, 2, 5)))
-    // rejections: two inequalities, non-windowable aggregate, DISTINCT
-    assert(db.select("SELECT k, (SELECT sum(v) AS s FROM rr r2 " +
-      "WHERE r2.t <= rr.t AND r2.v < rr.v) AS x FROM rr").isLeft)
-    assert(db.select("SELECT k, (SELECT median(v) AS s FROM rr r2 " +
-      "WHERE r2.t <= rr.t) AS x FROM rr").isLeft)
-    assert(db.select("SELECT k, (SELECT sum(DISTINCT v) AS s FROM rr r2 " +
-      "WHERE r2.t <= rr.t) AS x FROM rr").isLeft)
   }
 
   test("row-value IN inside HAVING via the post-aggregation markers") {
@@ -5514,10 +5535,14 @@ class DialectSpec extends AnyFunSuite {
       // the ineq outer side must be group-key-only…
       assert(db.select("SELECT g, count(*), " +
         "(SELECT count(*) FROM ib WHERE w < v) AS c FROM ia GROUP BY g").isLeft)
-      // …and ORDER BY cannot reference the running item's alias
-      assert(db.select("SELECT g, count(*) AS n, " +
+      // …and ORDER BY may sort by the running item's alias (g=1 and
+      // g NULL count 0, g=3 counts 2)
+      val o = db.select("SELECT g, count(*) AS n, " +
         "(SELECT count(*) FROM ib WHERE w < g) AS c " +
-        "FROM ia GROUP BY g ORDER BY c").isLeft)
+        "FROM ia GROUP BY g ORDER BY c, g NULLS LAST")
+        .fold(e => fail(e.msg), _.collect())
+      assert(o.map(x => (if (x.isNullAt(0)) -99 else x.getInt(0), x.getLong(2))).toSeq ==
+        Seq((1, 0L), (-99, 0L), (3, 2L)))
     }
   }
 

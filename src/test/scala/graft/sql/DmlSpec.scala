@@ -147,6 +147,12 @@ class DmlSpec extends AnyFunSuite {
     val multi = scala.util.Try(g.query("UPDATE t SET y = (SELECT amt FROM o)"))
     assert(multi.isFailure || multi.get.isLeft)
     assert(snap() == Seq(Row(1, 2, 10), Row(2, 1, 20), Row(3, 0, 30)))
+    // a scalar subquery inside a larger value operand, as in a SELECT item
+    assert(g.query("UPDATE t SET y = y + (SELECT sum(amt) AS v FROM o " +
+      "WHERE o.k = t.id) WHERE id = 1").isRight)
+    assert(snap() == Seq(Row(1, 2, 22), Row(2, 1, 20), Row(3, 0, 30)))
+    assert(g.query("UPDATE t SET y = (SELECT max(amt) AS v FROM o) - 70 WHERE id = 1").isRight)
+    assert(snap() == Seq(Row(1, 2, 30), Row(2, 1, 20), Row(3, 0, 30)))
   }
 
   test("INSERT INTO ... BY NAME maps the select's output names") {

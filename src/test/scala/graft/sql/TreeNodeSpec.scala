@@ -23,8 +23,7 @@ class TreeNodeSpec extends AnyFunSuite {
 
   private val excluded: Map[String, Set[String]] = Map(
     "BExists" -> Set("residual"),
-    "BSubVal" -> Set("ineq"),
-    "BISub" -> Set("sub", "pairs", "ineq"))
+    "BSubVal" -> Set("ineq"))
 
   // ---- parse side ----
   private def c(n: String): Operand = Operand.Col(ColRef(None, n))
@@ -58,7 +57,6 @@ class TreeNodeSpec extends AnyFunSuite {
     Expr.InSubquery(c("a"), sel, negated = false),
     Expr.RowInSubquery(Seq(c("a"), c("b")), sel, negated = false),
     Expr.Exists(sel, negated = false),
-    Expr.CmpSubquery(CmpOp.Gt, c("a"), sel),
     Expr.QuantSubquery(CmpOp.Gt, c("a"), sel, all = true))
 
   // ---- bound side ----
@@ -95,7 +93,6 @@ class TreeNodeSpec extends AnyFunSuite {
     BoundExpr.BLike(b("a"), "x%", negated = false),
     BoundExpr.BInSub(b("a"), bsel, pairs, negated = false),
     BoundExpr.BExists(bsel, pairs, negated = false, residual = Seq(bp("r"))),
-    BoundExpr.BCmpSub(CmpOp.Gt, b("a"), bsel, guard = false, pairs),
     BoundExpr.BQuantSub(CmpOp.Gt, b("a"), bsel, all = true, pairs),
     BoundExpr.BRowInSub(Seq(b("a"), b("b")), bsel, pairs, negated = false))
 
@@ -105,9 +102,7 @@ class TreeNodeSpec extends AnyFunSuite {
     BoundItem.BIAgg("sum", Some(b("a")), Some("x"), distinct = true),
     BoundItem.BIWin("lag", Seq(b("a"), b("b")), Seq(b("c"), b("d")),
       Seq((b("e"), SortDir(desc = false, None)), (b("f"), SortDir(desc = true, None))),
-      "x", Some(WinFrame(range = false, -1L, 0L))),
-    BoundItem.BISub(bsel, "x", guard = true, pairs,
-      Some(CorrIneq(CmpOp.Lt, b("x"), b("y")))))
+      "x", Some(WinFrame(range = false, -1L, 0L))))
 
   /** The node-typed values of a product's fields, in field order,
     * looking through Seq / Option / pair containers.

@@ -21,17 +21,26 @@ class WrapperInvarianceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
-  private lazy val db: GraftDatabase = {
+  private def database(ddl: String*): GraftDatabase = {
     val d = new GraftDatabase(spark,
       Files.createTempDirectory("graft-wrap").toString)
-    for (sql <- Seq(
-        "CREATE TABLE t (k INT, g INT, v INT)",
-        "INSERT INTO t VALUES (1, 1, 10), (1, 1, 20), (2, 2, 5), (3, 2, 7)",
-        "CREATE TABLE u (k INT, v INT)",
-        "INSERT INTO u VALUES (1, 1), (1, 2), (1, 3), (2, 1)"))
-      d.query(sql).fold(e => fail(s"$sql -> ${e.msg}"), _ => ())
+    for (sql <- ddl) d.query(sql).fold(e => fail(s"$sql -> ${e.msg}"), _ => ())
     d
   }
+
+  private lazy val db: GraftDatabase = database(
+    "CREATE TABLE t (k INT, g INT, v INT)",
+    "INSERT INTO t VALUES (1, 1, 10), (1, 1, 20), (2, 2, 5), (3, 2, 7)",
+    "CREATE TABLE u (k INT, v INT)",
+    "INSERT INTO u VALUES (1, 1), (1, 2), (1, 3), (2, 1)")
+
+  // the scalar-subquery position checks' tables: a NULL outer value and
+  // a duplicated inner key
+  private lazy val scalarDb: GraftDatabase = database(
+    "CREATE TABLE t (k INT, v INT)",
+    "INSERT INTO t VALUES (1, 10), (2, 20), (3, 30), (4, NULL)",
+    "CREATE TABLE u (k INT, v INT)",
+    "INSERT INTO u VALUES (1, 5), (2, 25), (2, 7), (3, 40)")
 
   // Spark twins of t and u, for the checks whose rows Spark can answer
   private lazy val twins: Unit = {
@@ -47,8 +56,8 @@ class WrapperInvarianceSpec extends AnyFunSuite {
     "CASE WHEN 1 = 1 THEN %s END", "abs(%s)", "%s + 0")
 
   /** A rejection message, or the sorted rows. */
-  private def outcome(sql: String): Either[String, Seq[String]] =
-    Try(db.select(sql).map(_.collect().map(_.toString).toSeq.sorted)) match {
+  private def outcome(sql: String, d: => GraftDatabase = db): Either[String, Seq[String]] =
+    Try(d.select(sql).map(_.collect().map(_.toString).toSeq.sorted)) match {
       case Success(r) => r.left.map(_.msg)
       case Failure(e) => fail(s"$sql threw $e")
     }
@@ -57,14 +66,14 @@ class WrapperInvarianceSpec extends AnyFunSuite {
     * wrapping of it; every form must give `expected`.
     */
   private def invariant(template: String, operand: String,
-      expected: Either[String, Seq[String]]): Unit =
+      expected: Either[String, Seq[String]], d: => GraftDatabase = db): Unit =
     for (form <- operand +: wrappings.map(_.format(operand))) {
       val sql = template.replace("@", form)
-      assert(outcome(sql) == expected, sql)
+      assert(outcome(sql, d) == expected, sql)
     }
 
-  private def rejected(sql: String): String =
-    outcome(sql).swap.getOrElse(fail(s"$sql was accepted"))
+  private def rejected(sql: String, d: => GraftDatabase = db): String =
+    outcome(sql, d).swap.getOrElse(fail(s"$sql was accepted"))
 
   private def sparkRows(sql: String): Seq[String] = {
     twins
@@ -95,6 +104,17 @@ class WrapperInvarianceSpec extends AnyFunSuite {
   test("residual-EXISTS position check") {
     val t = "SELECT k FROM t WHERE @ = 1 OR k = 3"
     invariant(t, residualCase, Left(rejected(t.replace("@", residualCase))))
+  }
+
+  test("a residual EXISTS rejects alike in every position but a top-level WHERE conjunct") {
+    val expected = rejected(s"SELECT k FROM t WHERE $residualCase = 1 OR k = 3")
+    for (sql <- Seq(s"SELECT k, $residualCase AS x FROM t",
+        s"SELECT k, $residualCase AS x FROM t GROUP BY k, v",
+        s"SELECT k, v FROM t GROUP BY k, v HAVING $residualCase = 1",
+        s"SELECT k FROM t QUALIFY row_number() OVER (ORDER BY k) = 1 AND $residualCase = 1",
+        "SELECT k FROM t GROUP BY k, v HAVING EXISTS (SELECT u.k FROM u " +
+          "WHERE u.k = t.k AND u.v <= t.v)"))
+      assert(outcome(sql) == Left(expected), sql)
   }
 
   test("TRY_CAST over a residual EXISTS under OR rejects like CAST") {
@@ -171,6 +191,37 @@ class WrapperInvarianceSpec extends AnyFunSuite {
     assert(outcome(multi("t", "u", "(SELECT max(v) FROM u) + 5")) ==
       Right(sparkRows(multi("wrap_t t", "wrap_u u",
         "(SELECT max(v) FROM wrap_u) + 5"))))
+  }
+
+  // An inequality-correlated scalar subquery in each position gives the
+  // rows of the same query reading it as a bare item of a derived table.
+  private val running = "(SELECT sum(v) FROM u WHERE u.k <= t.k)"
+  private val bareItem = s"(SELECT k, v, $running AS s FROM t) d"
+
+  test("an inequality-correlated scalar subquery gives its bare item's rows in every position") {
+    val positions = Seq(
+      "SELECT k, @ AS s FROM t" -> s"SELECT k, s FROM $bareItem",
+      "SELECT k, CASE WHEN @ > 40 THEN 1 ELSE 0 END AS s FROM t" ->
+        s"SELECT k, CASE WHEN s > 40 THEN 1 ELSE 0 END AS s FROM $bareItem",
+      "SELECT k FROM t WHERE v < @" -> s"SELECT k FROM $bareItem WHERE v < s",
+      "SELECT k, sum(v) AS sv FROM t GROUP BY k HAVING sum(v) < @" ->
+        s"SELECT k, sum(v) AS sv FROM $bareItem GROUP BY k, s HAVING sum(v) < s",
+      "SELECT k, @ AS s, count(*) AS c FROM t GROUP BY k" ->
+        s"SELECT k, s, count(*) AS c FROM $bareItem GROUP BY k, s")
+    val answers = for ((template, equivalent) <- positions) yield {
+      val expected = outcome(equivalent, scalarDb)
+      assert(expected.isRight, equivalent)
+      invariant(template, running, expected, scalarDb)
+      expected
+    }
+    assert(answers.head == Right(Seq("[1,5]", "[2,37]", "[3,77]", "[4,77]")))
+    assert(answers(2) == Right(Seq("[2]", "[3]")))
+  }
+
+  test("a scalar subquery over an ungrouped outer column rejects alike, bare and wrapped") {
+    val t = "SELECT k, @ AS s, count(*) AS c FROM t GROUP BY k"
+    val sub = "(SELECT sum(v) FROM u WHERE u.k = t.v)"
+    invariant(t, sub, Left(rejected(t.replace("@", sub), scalarDb)), scalarDb)
   }
 
   // A window operand is checked alike in every window position: argument,
