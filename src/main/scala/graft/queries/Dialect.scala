@@ -467,10 +467,11 @@ object Dialect {
              |ORDER BY n_nationkey""".stripMargin)),
 
     // LATERAL top-N per key: each customer's two biggest orders via a
-    // per-key row_number window inside the lateral frame — one shuffle on
-    // the key, no per-row re-execution; customers with no orders drop
-    // (CROSS JOIN LATERAL semantics). DuckDB's native LATERAL is the
-    // independent oracle.
+    // per-key row_number window over the body's rows (NULL keys dropped),
+    // joined fused after the plain FROM group on the hidden key — one
+    // shuffle on the key, no per-row re-execution; customers with no
+    // orders drop (CROSS JOIN LATERAL semantics). DuckDB's native LATERAL
+    // is the independent oracle.
     "q_dialect_lateral" -> QueryDef(
       (s, d) => run(db(s, d, "customer", "orders"),
         "SELECT c.c_custkey, t.o_orderkey, t.o_totalprice FROM customer c, " +
@@ -487,8 +488,9 @@ object Dialect {
              |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)),
 
     // LEFT JOIN LATERAL: the latest order per customer, PRESERVING
-    // customers with no orders (the key equalities ride the step's ON,
-    // so empty lateral sets null-extend instead of dropping).
+    // customers with no orders (the fused join runs inside the join-step
+    // fold as a left outer join on the hidden key AND the step's ON, so
+    // empty lateral sets null-extend instead of dropping).
     "q_dialect_lateral_left" -> QueryDef(
       (s, d) => run(db(s, d, "customer", "orders"),
         "SELECT c.c_custkey, t.o_orderkey, t.o_totalprice FROM customer c " +
@@ -959,8 +961,10 @@ object Dialect {
              |FROM seq a, seq b WHERE b.n = a.n + 1 ORDER BY an""".stripMargin)),
 
     // Correlated aggregate LATERAL: per-customer order stats, empty
-    // groups included (count 0 / NULL aggregates) — fused as per-key
-    // aggregate + outer-key completion, never per-row re-execution.
+    // groups included (count 0 / NULL aggregates) — the fused join's
+    // aggregate branch: a per-key aggregate left-joined onto the distinct
+    // outer keys and completed, then joined back null-safely; never
+    // per-row re-execution.
     "q_dialect_lateral_agg" -> QueryDef(
       (s, d) => run(db(s, d, "customer", "orders"),
         "SELECT c.c_custkey, t.n, round(t.total / 1000, 2) AS tot_k, t.mx " +

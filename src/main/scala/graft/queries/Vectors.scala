@@ -467,17 +467,8 @@ object Vectors {
         // fixture per action — at 100 TB this is the standard cache-
         // the-training-input discipline, as a lineage-cutting
         // checkpoint (guide §5)
-        val reliable =
-          s.conf.get("graft.reliableCheckpoint", "false").toBoolean
-        val all = org.apache.spark.sql.graftbridge.Bridge.capStats {
-          val a0 = withNorm(emb(s, d))
-          if (reliable) {
-            if (s.sparkContext.getCheckpointDir.isEmpty)
-              s.sparkContext.setCheckpointDir(java.nio.file.Files
-                .createTempDirectory("graft-ckpt").toString)
-            a0.checkpoint()
-          } else a0.localCheckpoint()
-        }
+        val all = graft.sql.Lowering.materializeOnce(withNorm(emb(s, d)),
+          eager = true)
         val model = graft.operators.KMeans.train(
           all, "vec_id", "e", k = 8, iters = 2, roundTo = Some(6))
         def distArr = array(model.centroids.map { case (cid, w) =>

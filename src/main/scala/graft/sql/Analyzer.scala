@@ -333,6 +333,11 @@ object Analyzer {
       * expression (None for aggregate, window and subquery items).
       */
     def rowValue: Option[BoundOperand] = None
+    /** A row value free of subqueries: what a correlated IN / ANY / ALL
+      * or LATERAL body and a RETURNING list may project — those lower
+      * item by item over plain rows.
+      */
+    def rowLevel: Boolean = rowValue.exists(v => !BoundNode.hasSubquery(v))
   }
   object BoundItem {
     final case class BICol(c: BoundCol, alias: Option[String] = None) extends BoundItem {
@@ -740,6 +745,15 @@ object Analyzer {
     }
   }
 
+  /** A correlated IN / row IN / ANY / ALL body lowers item by item over
+    * its decorrelated rows, so it projects row-level items only.
+    */
+  private def rowLevelBody(sub: BoundSelect, pairs: Seq[(BoundCol, BoundCol)])
+      : Either[AnalyzerError, Unit] =
+    if (pairs.isEmpty || sub.projection.forall(_.rowLevel)) Right(())
+    else Left(BadSubquery(
+      "a correlated IN / ANY / ALL subquery projects plain columns and expressions only"))
+
   /** A join step (left/right/full outer, or inner-after-outer): applied
     * in declaration order after the inner-join group, with its ON
     * condition attached (never WHERE-desugared).
@@ -787,12 +801,6 @@ object Analyzer {
         * reference keys by index).
         */
       groupSpec: Option[GroupingSpec] = None,
-      /** Synthetic FROM-list LATERAL key equalities (outer col = hidden
-        * key). JOIN conditions of the leading FROM group — carried apart
-        * from the user's WHERE so a RIGHT/FULL step cannot demote them
-        * into post-join filters (which would drop null-extended rows).
-        */
-      lateralConjs: Seq[BoundExpr] = Nil,
       /** QUALIFY predicate over window results (BOut references resolve
         * to precomputed window columns; evaluated after windows, before
         * DISTINCT/ORDER BY/LIMIT), plus the hidden window items desugared
@@ -838,13 +846,6 @@ object Analyzer {
   /** DROP TABLE: desc = None when IF EXISTS matched nothing (a no-op). */
   final case class BoundDrop(table: String, desc: Option[TableDesc]) extends BoundQuery
 
-  /** A correlated LATERAL subquery in the FROM list: `sub` is the body
-    * with its correlation conjuncts stripped (they re-enter the enclosing
-    * WHERE as equalities on the synthetic `hiddenKeys` columns), and
-    * ORDER BY + LIMIT mean top-N PER KEY. Non-aggregate only — inner-join
-    * semantics then match SQL's CROSS JOIN LATERAL exactly (an outer row
-    * whose lateral set is empty drops).
-    */
   /** A range/generate_series table function (half-open, literal
     * bounds): lowers to spark.range — a parallelized lazy range, never
     * materialized rows.
@@ -864,35 +865,28 @@ object Analyzer {
   final case class BoundFileScan(format: String, path: String,
       desc: TableDesc) extends BoundQuery
 
-  final case class BoundLateral(sub: BoundSelect,
-      pairs: Seq[(BoundCol, BoundCol)], hiddenKeys: Seq[String],
-      /** Group-less aggregate body: one row PER KEY including empty
-        * groups (count = 0, others NULL) — lowered fused into the
-        * enclosing join group, not as a standalone frame.
-        */
-      agg: Boolean = false) extends BoundQuery
-
-  /** A correlated set-operation LATERAL: each branch is its decorrelated
-    * core plus its inner key columns aligned to `keyOuter`'s order
-    * (empty = uncorrelated branch, completed over the distinct outer
-    * keys at lowering). Branch frames carry the keys as hidden columns,
-    * so the set operations fold over (row, key) tuples — exactly
-    * per-key set semantics. Joined fused into the enclosing group like
-    * aggregate laterals (the completion keys come from the enclosing
-    * frame).
+  /** A correlated LATERAL: a set-operation chain of branches (a plain
+    * SELECT is a one-branch chain), each its decorrelated core plus its
+    * inner key columns aligned to `keyOuter`'s order. A branch's kind
+    * reads from its core: uncorrelated (no inner keys), aggregate
+    * (group-less, one row per outer key including empty groups) or rows
+    * (top-N per key under ORDER BY + LIMIT). The frame carries the keys
+    * as the hidden `hiddenKeys` columns; the lowering joins it fused into
+    * the enclosing frame (Lowering.joinLateral).
     */
-  final case class BoundLateralSet(
+  final case class BoundLateral(
       branches: Seq[(String /* connector, "" for the first */, BoundSelect,
         Seq[BoundCol] /* inner keys, keyOuter order; empty = uncorrelated */)],
       keyOuter: Seq[BoundCol],
       hiddenKeys: Seq[String]) extends BoundQuery
 
-  /** Decorrelation for LATERAL bodies: like `decorrelate`, but ORDER BY +
-    * LIMIT are allowed (per-key top-N) while aggregates/DISTINCT/OFFSET/
-    * windows/scalar items are rejected in the correlated form.
+  /** Decorrelation for one LATERAL branch: like `decorrelate`, but ORDER
+    * BY + LIMIT are allowed (per-key top-N) and a group-less aggregate
+    * computes per key, while DISTINCT/OFFSET/windows/scalar-subquery
+    * items are rejected in the correlated form.
     */
   private def decorrelateLateral(sub: BoundSelect)
-      : Either[AnalyzerError, (BoundSelect, Seq[(BoundCol, BoundCol)], Boolean)] = {
+      : Either[AnalyzerError, (BoundSelect, Seq[(BoundCol, BoundCol)])] = {
     val inner = scala.collection.mutable.Set.empty[String]
     inner ++= sub.tables.map(_.binding)
     inner ++= sub.joinSteps.map(_.table.binding)
@@ -916,7 +910,8 @@ object Analyzer {
             }
         }
         val ps = pairs.result()
-        if (ps.isEmpty) Right((sub, Nil, false))
+        lazy val core = sub.copy(predicate = kept.result().reduceOption(BoundExpr.BAnd(_, _)))
+        if (ps.isEmpty) Right((sub, Nil))
         else if (sub.isAggregate) {
           // correlated aggregate LATERAL: a group-less aggregate evaluated
           // per correlation key — one output row per outer row, INCLUDING
@@ -935,9 +930,7 @@ object Analyzer {
           })
             Left(BadSubquery(
               "a correlated LATERAL aggregate projects aliased aggregate calls only"))
-          else
-            Right((sub.copy(predicate = kept.result().reduceOption(BoundExpr.BAnd(_, _))),
-              ps, true))
+          else Right((core, ps))
         }
         else if (sub.distinct || sub.offset.isDefined)
           Left(BadSubquery("a correlated LATERAL must not use DISTINCT or OFFSET"))
@@ -945,12 +938,10 @@ object Analyzer {
           Left(BadSubquery("a correlated LATERAL with LIMIT requires ORDER BY (top-N per key)"))
         else if (sub.orderBy.exists(!_._1.isInstanceOf[BoundOrderKey.OKOperand]))
           Left(BadSubquery("a correlated LATERAL's ORDER BY must use plain operands"))
-        else if (sub.projection.exists(_.rowValue.forall(BoundNode.hasSubquery)))
+        else if (!sub.projection.forall(_.rowLevel))
           Left(BadSubquery(
             "a correlated LATERAL projects plain columns and expressions only"))
-        else
-          Right((sub.copy(predicate = kept.result().reduceOption(BoundExpr.BAnd(_, _))),
-            ps, false))
+        else Right((core, ps))
     }
   }
 
@@ -1439,9 +1430,8 @@ object Analyzer {
         val (sf, se) = selfRefs(r.step, name)
         (bf + sf, be + se)
       }
-    case l: BoundLateral => selfRefs(l.sub, name)
-    case ls: BoundLateralSet =>
-      val all = ls.branches.map(b => selfRefs(b._2, name))
+    case l: BoundLateral =>
+      val all = l.branches.map(b => selfRefs(b._2, name))
       (all.map(_._1).sum, all.map(_._2).sum)
     case _ => (0, 0)
   }
@@ -1466,8 +1456,7 @@ object Analyzer {
     case r: BoundRecursive =>
       referencedTables(r.base) ++
         (referencedTables(r.step) - r.desc.name)
-    case l: BoundLateral => referencedTables(l.sub)
-    case ls: BoundLateralSet => ls.branches.flatMap(b => referencedTables(b._2)).toSet
+    case l: BoundLateral => l.branches.flatMap(b => referencedTables(b._2)).toSet
     case _ => Set.empty
   }
   /** DELETE: a plain row-level predicate lowers as a filter; a predicate
@@ -1603,8 +1592,7 @@ object Analyzer {
               .flatMap { sitems =>
                 analyzeSelect(SelectTree(Some(sitems),
                   Seq(FTable(TableRef(tname, None))), None), cat).flatMap { bs =>
-                  val bad = bs.isAggregate ||
-                    bs.projection.exists(_.rowValue.forall(BoundNode.hasSubquery))
+                  val bad = bs.isAggregate || !bs.projection.forall(_.rowLevel)
                   if (bad) Left(BadFunction(
                     "RETURNING items are row-level: no aggregates, " +
                       "windows or subqueries"))
@@ -1930,7 +1918,6 @@ object Analyzer {
           case FTable(TableRef(n, a)) => a.getOrElse(n.split('.').last)
           case FDerived(_, a)         => a
           case FLateral(_, a)         => a // unreachable: parser never builds
-          case FLateralSet(_, a)      => a // unreachable: parser never builds
         }
         if (talias.equalsIgnoreCase(salias))
           return Left(DuplicateBinding(salias))
@@ -2205,12 +2192,6 @@ object Analyzer {
           if (bound.contains(b)) Some(DuplicateBinding(b))
           else { bound(b) = BoundTable(desc, b); None }
       }
-    // LATERAL join conjuncts: equality of the outer column against the
-    // lateral frame's synthetic hidden-key column, folded into WHERE
-    val lateralConjs = scala.collection.mutable.ArrayBuffer.empty[BoundExpr]
-    // aggregate-lateral bindings join fused in the lowering; other frames
-    // may not correlate against their columns (evaluation-order cycle)
-    val aggLateralNames = scala.collection.mutable.Set.empty[String]
     def addFrom(fi: FromItem): Option[AnalyzerError] = fi match {
       case FTable(tr) => addTable(tr)
       case FFileScan(format, path, alias) =>
@@ -2236,50 +2217,18 @@ object Analyzer {
           derivedSubs(b) = BoundRange(start, stopExcl, step, colName, temporal)
           None
         }
-      case FLateral(sel, alias) =>
-        // the body sees the PRECEDING FROM entries (bound so far)
-        analyzeSelect(sel, cat, outerScope = bound.values.toSeq) match {
-          case Left(e) => Some(e)
-          case Right(bsub0) =>
-            decorrelateLateral(bsub0) match {
-              case Left(e) => Some(e)
-              case Right((core, Seq(), _)) =>
-                // uncorrelated LATERAL = an ordinary derived table
-                addFrom(FDerived(sel, alias))
-              case Right((core, ps, agg)) =>
-                derivedAttributes(core) match {
-                  case Left(e) => Some(e)
-                  case Right(visAttrs) =>
-                    val b = alias.toLowerCase
-                    if (bound.contains(b)) Some(DuplicateBinding(b))
-                    else ps.collectFirst {
-                      case (oc, _) if aggLateralNames(oc.binding) => oc
-                    } match {
-                      case Some(oc) => Some(BadSubquery(
-                        s"a LATERAL may not correlate against an aggregate " +
-                          s"LATERAL's columns (${oc.render})"))
-                      case None =>
-                        val hidden = ps.zipWithIndex.map { case ((_, ic), i) =>
-                          AttributeDesc(s"__lk$i", ic.attr.sqlType) }
-                        bound(b) = BoundTable(TableDesc(b, visAttrs ++ hidden), b)
-                        derivedSubs(b) = BoundLateral(core, ps, hidden.map(_.name), agg)
-                        if (agg) aggLateralNames += b
-                        else
-                          lateralConjs ++= ps.zipWithIndex.map { case ((oc, _), i) =>
-                            BoundExpr.BCmp(CmpOp.Eq, BoundOperand.BCol(oc),
-                              BoundOperand.BCol(BoundCol(b, hidden(i)))) }
-                        None
-                    }
-                }
-            }
+      case FLateral(body, alias) =>
+        // branch-wise: each branch (a plain SELECT is a one-branch chain)
+        // analyzes against the PRECEDING FROM entries and decorrelates on
+        // its own. If no branch correlates — or the body is recursive —
+        // this is an ordinary derived table.
+        val branchTrees: Seq[(String, SelectTree)] = body match {
+          case sel: SelectTree => Seq("" -> sel)
+          case u: UnionTree    => ("" -> u.first) +: u.rest
+          case _               => Nil
         }
-      case FLateralSet(u, alias) =>
-        // branch-wise: analyze each branch against the PRECEDING FROM
-        // entries, then decorrelate branch-wise. If no branch correlates
-        // this is an ordinary set-operation derived table.
-        val branchTrees: Seq[(String, SelectTree)] = ("" -> u.first) +: u.rest
         val analyzedE = branchTrees.foldLeft[Either[AnalyzerError,
-            Vector[(String, (BoundSelect, Seq[(BoundCol, BoundCol)], Boolean))]]](
+            Vector[(String, (BoundSelect, Seq[(BoundCol, BoundCol)]))]]](
           Right(Vector.empty)) { case (acc, (conn, t)) =>
           acc.flatMap(v => analyzeSelect(t, cat, outerScope = bound.values.toSeq)
             .flatMap(decorrelateLateral)
@@ -2288,18 +2237,19 @@ object Analyzer {
         analyzedE match {
           case Left(e) => Some(e)
           case Right(brs) if brs.forall(_._2._2.isEmpty) =>
-            addFrom(FDerived(u, alias))
+            addFrom(FDerived(body, alias))
           case Right(brs) =>
-            if (u.orderBy.nonEmpty || u.limit.isDefined || u.offset.isDefined)
+            val chainClauses = body match {
+              case u: UnionTree =>
+                u.orderBy.nonEmpty || u.limit.isDefined || u.offset.isDefined
+              case _ => false
+            }
+            if (chainClauses)
               Some(BadSubquery(
                 "a correlated set-operation LATERAL does not take ORDER BY/LIMIT/OFFSET"))
             else if (brs.exists(_._1.endsWith("_byname")))
               Some(BadSubquery(
                 "BY NAME set operations are not supported in a correlated LATERAL"))
-            else if (brs.exists(_._2._3))
-              Some(BadSubquery(
-                "aggregate branches are not supported in a correlated " +
-                  "set-operation LATERAL (use a single-branch LATERAL)"))
             else if (brs.exists(_._2._1.projection.length !=
                 brs.head._2._1.projection.length))
               Some(BadSubquery(
@@ -2310,64 +2260,50 @@ object Analyzer {
               // equalities re-enter the branch core as inner-inner
               // conjuncts); every correlated branch must use the same SET
               def okey(c: BoundCol) = (c.binding, c.attr.name)
-              val keyOuter0 = brs.collectFirst {
-                case (_, (_, ps, _)) if ps.nonEmpty => ps
-              }.get
-              val keyOuter = keyOuter0.map(_._1)
+              val keyOuter = brs.collectFirst {
+                case (_, (_, ps)) if ps.nonEmpty => ps
+              }.get.map(_._1)
                 .foldLeft(Vector.empty[BoundCol])((v, c) =>
                   if (v.exists(x => okey(x) == okey(c))) v else v :+ c)
               val keySet = keyOuter.map(okey).toSet
-              if (keyOuter.exists(oc => aggLateralNames(oc.binding)))
-                Some(BadSubquery(
-                  "a LATERAL may not correlate against an aggregate or " +
-                    "set-operation LATERAL's columns"))
-              else {
-                val alignedE = brs.foldLeft[Either[AnalyzerError,
-                    Vector[(String, BoundSelect, Seq[BoundCol])]]](
-                  Right(Vector.empty)) {
-                  case (acc, (conn, (core, ps, _))) => acc.flatMap { v =>
-                    if (ps.isEmpty) Right(v :+ ((conn, core, Nil)))
-                    else if (ps.map(p => okey(p._1)).toSet != keySet)
-                      Left(BadSubquery(
-                        "every correlated branch of a set-operation LATERAL " +
-                          "must correlate on the same outer columns"))
-                    else {
-                      val byKey = ps.groupBy(p => okey(p._1))
-                      val inner = keyOuter.map(ko => byKey(okey(ko)).head._2)
-                      val extra = byKey.values.flatMap(g =>
-                        g.tail.map(p => BoundExpr.BCmp(CmpOp.Eq,
-                          BoundOperand.BCol(g.head._2),
-                          BoundOperand.BCol(p._2)))).toSeq
-                      val core2 =
-                        if (extra.isEmpty) core
-                        else core.copy(predicate = (core.predicate.toSeq ++ extra)
-                          .reduceOption(BoundExpr.BAnd(_, _)))
-                      Right(v :+ ((conn, core2, inner)))
-                    }
+              val alignedE = brs.foldLeft[Either[AnalyzerError,
+                  Vector[(String, BoundSelect, Seq[BoundCol])]]](
+                Right(Vector.empty)) {
+                case (acc, (conn, (core, ps))) => acc.flatMap { v =>
+                  if (ps.isEmpty) Right(v :+ ((conn, core, Nil)))
+                  else if (ps.map(p => okey(p._1)).toSet != keySet)
+                    Left(BadSubquery(
+                      "every correlated branch of a set-operation LATERAL " +
+                        "must correlate on the same outer columns"))
+                  else {
+                    val byKey = ps.groupBy(p => okey(p._1))
+                    val inner = keyOuter.map(ko => byKey(okey(ko)).head._2)
+                    val extra = byKey.values.flatMap(g =>
+                      g.tail.map(p => BoundExpr.BCmp(CmpOp.Eq,
+                        BoundOperand.BCol(g.head._2),
+                        BoundOperand.BCol(p._2)))).toSeq
+                    val core2 =
+                      if (extra.isEmpty) core
+                      else core.copy(predicate = (core.predicate.toSeq ++ extra)
+                        .reduceOption(BoundExpr.BAnd(_, _)))
+                    Right(v :+ ((conn, core2, inner)))
                   }
                 }
-                alignedE match {
-                  case Left(e) => Some(e)
-                  case Right(branches) =>
-                    derivedAttributes(branches.head._2) match {
-                      case Left(e) => Some(e)
-                      case Right(visAttrs) =>
-                        val b = alias.toLowerCase
-                        if (bound.contains(b)) Some(DuplicateBinding(b))
-                        else {
-                          val hidden = keyOuter.zipWithIndex.map { case (oc, i) =>
-                            AttributeDesc(s"__lk$i", oc.attr.sqlType) }
-                          bound(b) = BoundTable(TableDesc(b, visAttrs ++ hidden), b)
-                          derivedSubs(b) = BoundLateralSet(branches, keyOuter,
-                            hidden.map(_.name))
-                          // joins fused after the plain phase, like
-                          // aggregate laterals — later frames may not
-                          // correlate against its columns
-                          aggLateralNames += b
-                          None
-                        }
-                    }
-                }
+              }
+              alignedE.flatMap(branches =>
+                derivedAttributes(branches.head._2).map((branches, _))) match {
+                case Left(e) => Some(e)
+                case Right((branches, visAttrs)) =>
+                  val b = alias.toLowerCase
+                  if (bound.contains(b)) Some(DuplicateBinding(b))
+                  else {
+                    val hidden = keyOuter.zipWithIndex.map { case (oc, i) =>
+                      AttributeDesc(s"__lk$i", oc.attr.sqlType) }
+                    bound(b) = BoundTable(TableDesc(b, visAttrs ++ hidden), b)
+                    derivedSubs(b) = BoundLateral(branches, keyOuter,
+                      hidden.map(_.name))
+                    None
+                  }
               }
             }
         }
@@ -2398,30 +2334,11 @@ object Analyzer {
         }
     }
     for (fi <- s.from) addFrom(fi).foreach(e => return Left(e))
-    // a LATERAL in a join step keeps its key equalities in the step's ON
-    // (not WHERE): LEFT JOIN LATERAL … ON 1 = 1 null-extends outer rows
-    // whose lateral set is empty
-    val stepLateralConjs = scala.collection.mutable.Map.empty[Int, Seq[BoundExpr]]
-    for ((js, k) <- s.joinSteps.zipWithIndex) js.item match {
+    for (js <- s.joinSteps) js.item match {
       case _: FLateral if js.kind != "left" && js.kind != "inner" =>
         return Left(BadSubquery(
           "LATERAL join steps support LEFT and INNER JOIN only"))
-      case fl: FLateral =>
-        val before = lateralConjs.length
-        addFrom(fl).foreach(e => return Left(e))
-        if (aggLateralNames(fl.alias.toLowerCase))
-          return Left(BadSubquery(
-            "an aggregate LATERAL is only supported in the FROM list"))
-        stepLateralConjs(k) = lateralConjs.drop(before).toSeq
-        lateralConjs.remove(before, lateralConjs.length - before)
-      case fls: FLateralSet =>
-        // only the uncorrelated form (an ordinary derived table) can ride
-        // a join step — a correlated one needs the fused FROM-list join
-        addFrom(fls).foreach(e => return Left(e))
-        if (aggLateralNames(fls.alias.toLowerCase))
-          return Left(BadSubquery(
-            "a correlated set-operation LATERAL is only supported in the FROM list"))
-      case other => addFrom(other).foreach(e => return Left(e))
+      case fi => addFrom(fi).foreach(e => return Left(e))
     }
     // scope = inner FROM group + outer-join step tables, in declaration
     // order (LinkedHashMap); BoundSelect.tables carries only the inner
@@ -3374,6 +3291,7 @@ object Analyzer {
                 s"row-value IN subquery must project ${os.length} columns, " +
                   s"got ${bsub0.projection.length}"))
             dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
+            _ <- rowLevelBody(dp._1, dp._2)
             // HAVING resolves post-aggregation: row-IN correlation keys
             // must be GROUP BY keys — validated with the other HAVING
             // subquery kinds by the decorrelation-key walk (BRowInSub
@@ -3397,6 +3315,7 @@ object Analyzer {
               else Left(BadSubquery(
                 s"subquery must project exactly one column, got ${bsub0.projection.length}"))
             dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
+            _ <- rowLevelBody(dp._1, dp._2)
           } yield BoundExpr.BInSub(bo, dp._1, dp._2, neg)
       case Expr.Exists(sub, neg) =>
         if (!topLevel)
@@ -3419,6 +3338,7 @@ object Analyzer {
             else Left(BadSubquery(
               s"subquery must project exactly one column, got ${bsub0.projection.length}"))
           dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
+          _ <- rowLevelBody(dp._1, dp._2)
         } yield BoundExpr.BQuantSub(op, bo, dp._1, all, dp._2)
       case Expr.IsNull(o, neg) =>
         bindOp(o, allowAgg, allowSub = topLevel && (!allowAgg || havingMarkerOk))
@@ -3693,12 +3613,7 @@ object Analyzer {
                         case Right(_) => Right(())
                       }
                     else Right(())
-                  asofOk.flatMap { _ =>
-                    // a step-lateral's key equalities join here, in the ON
-                    val on = (be +: stepLateralConjs.getOrElse(k, Nil))
-                      .reduce(BoundExpr.BAnd(_, _))
-                    Right(v :+ BoundJoinStep(js.kind, bt, on))
-                  }
+                  asofOk.map(_ => v :+ BoundJoinStep(js.kind, bt, be))
               }
             }
           }
@@ -4145,7 +4060,7 @@ object Analyzer {
       }
     } yield BoundSelect(innerTables, proj, pred, order, s.limit, s.offset,
       group, having, s.distinct, steps, derivedSubs.toMap, s.groupSpec,
-      lateralConjs.toSeq, qualifyPred, qwins, don)
+      qualifyPred, qwins, don)
   }
 
   /** An operand whose type decides a comparison with a literal: anything

@@ -33,18 +33,14 @@ object Ast {
   sealed trait FromItem
   final case class FTable(ref: TableRef) extends FromItem
   final case class FDerived(select: ParseTree, alias: String) extends FromItem
-  /** `, LATERAL (SELECT …) alias` — the body may reference PRECEDING
-    * FROM tables via equality WHERE conjuncts; group-less aggregates
-    * compute per key, and ORDER BY + LIMIT mean top-N PER KEY.
+  /** `, LATERAL (SELECT …) alias` — the body (a SELECT or a set-operation
+    * chain) may reference PRECEDING FROM tables via equality WHERE
+    * conjuncts, branch by branch. Group-less aggregates compute per key,
+    * ORDER BY + LIMIT mean top-N PER KEY, and set operations fold per
+    * key. An uncorrelated or recursive body is an ordinary derived table
+    * (correlated references inside a recursive one fail at binding).
     */
-  final case class FLateral(select: SelectTree, alias: String) extends FromItem
-  /** `, LATERAL (SELECT … UNION SELECT …) alias` — a set-operation body
-    * whose branches may each correlate against PRECEDING FROM tables via
-    * equality WHERE conjuncts. Set operations fold over (row, key)
-    * tuples, which IS per-key set semantics; uncorrelated branches
-    * complete over the distinct outer keys.
-    */
-  final case class FLateralSet(union: UnionTree, alias: String) extends FromItem
+  final case class FLateral(body: ParseTree, alias: String) extends FromItem
   /** A FROM-position table function: range / generate_series with
     * LITERAL bounds, normalized at parse to half-open spark.range
     * semantics (start inclusive, stop exclusive, step ≠ 0). One BIGINT

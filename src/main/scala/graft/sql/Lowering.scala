@@ -564,7 +564,8 @@ object Lowering {
   /** Materialize a frame exactly ONCE — the range bucketing that feeds
     * two consumers (in-bucket windows + per-bucket totals/edges, where
     * RangePartitioner's RDD-id-seeded boundary sampling must not run
-    * twice) and the fixpoint accumulators whose lineage must truncate.
+    * twice), the fixpoint accumulators whose lineage must truncate and
+    * the k-means trainer's input (q_ann_ivf_kmeans), read once per pass.
     *
     * Default: executor-local unreplicated blocks (localCheckpoint — the
     * single-box gate/bench shape; an executor loss fails the job).
@@ -576,7 +577,7 @@ object Lowering {
     * storage rather than failing the query. Identical values either
     * way — spec-pinned (LoweringSpec "reliable checkpoint").
     */
-  private[sql] def materializeOnce(df: DataFrame,
+  private[graft] def materializeOnce(df: DataFrame,
       eager: Boolean = false): DataFrame = {
     if (MaterializeAudit.enabled)
       MaterializeAudit.plans.add(df.queryExecution.executedPlan)
@@ -962,48 +963,6 @@ object Lowering {
     }
   }
 
-  /** Fuse a correlated aggregate LATERAL into the enclosing join group:
-    * per-key aggregate over the body's core, COMPLETED over the distinct
-    * outer keys observed in the enclosing frame (left join + the
-    * count-over-empty-group coalesce), then joined back null-safely so
-    * NULL outer keys keep their row too. The COMPLETION join is plain
-    * equality: a NULL outer key must take the EMPTY group (count 0,
-    * NULL max — `fc.k = NULL` is UNKNOWN for every inner row), not the
-    * NULL-key group's aggregates (round-14 fuzz found exactly that
-    * divergence vs DuckDB); only the structural join-back uses `<=>`,
-    * to link each outer row to its own completed-key row. Three
-    * key-bounded shuffles (outer-key distinct, per-key aggregate, final
-    * join) — never a per-outer-row re-execution of the body.
-    */
-  private def joinAggLateral(spark: SparkSession, df: DataFrame,
-      bt: BoundTable, l: Analyzer.BoundLateral,
-      source: BoundTable => DataFrame): DataFrame = {
-    val core = combine(spark, l.sub, source, Set.empty, None)
-    val aggExprs = l.sub.projection.zipWithIndex.map {
-      case (BoundItem.BIAgg(f, arg, _, dist), i) =>
-        Aggregates.lowerNode(BoundOperand.BAgg(f, arg, dist),
-          lowerOperandWith(_, qualified)).as(s"__pa$i")
-      case other => sys.error(s"unreachable aggregate LATERAL item $other")
-    }
-    val keyCols = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
-      qualified(ic).as(s"__pk$i") }
-    val perKey = core.groupBy(keyCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
-    val outKeys = df.select(l.pairs.zipWithIndex.map { case ((oc, _), i) =>
-      qualified(oc).as(s"__ok$i") }: _*).distinct()
-    val completed = outKeys.join(perKey,
-      l.pairs.indices.map(i => col(s"__ok$i") === perKey(s"__pk$i")).reduce(_ && _),
-      "left_outer")
-    val outCols = l.sub.projection.zipWithIndex.map {
-      case (BoundItem.BIAgg(f, _, Some(a), _), i) =>
-        Aggregates.completed(f, perKey(s"__pa$i")).as(a)
-      case other => sys.error(s"unreachable aggregate LATERAL item $other")
-    } ++ l.hiddenKeys.zipWithIndex.map { case (hk, i) => col(s"__ok$i").as(hk) }
-    val frame = completed.select(outCols: _*).alias(bt.binding)
-    val on = l.pairs.zipWithIndex.map { case ((oc, _), i) =>
-      qualified(oc) <=> col(s"${bt.binding}.${l.hiddenKeys(i)}") }.reduce(_ && _)
-    df.join(frame, on)
-  }
-
   /** Union-merge ASOF lowering — the 100 TB path (the same shape as the
     * API-level operators/AsOf.asofJoin): instead of materializing every
     * inequality-satisfying candidate and pruning with a per-left-row
@@ -1156,97 +1115,103 @@ object Lowering {
     res.drop((kL ++ Seq(tL) ++ rk ++ Seq("__asof_rt", "__asof_pres")): _*)
   }
 
-  /** Fuse a correlated set-operation LATERAL into the enclosing join
-    * group: each branch becomes a frame of (first-branch visible columns
-    * + the hidden correlation keys). A correlated branch carries its own
-    * inner key values (rows with a NULL key component can never equi-
-    * match an outer key, so they are filtered); an uncorrelated branch
-    * is COMPLETED over the distinct outer keys observed in the enclosing
-    * frame — its rows appear for every key, including the NULL key
-    * group. The set operations then fold over the (row, key) tuples,
-    * which IS per-key set semantics (set ops compare NULLs equal, so the
-    * NULL key group behaves like any other key), and one null-safe equi
-    * join attaches the result. Key-bounded shuffles only — never a
-    * per-outer-row re-execution of any branch.
+  /** A correlated LATERAL, joined fused into the frame built so far.
+    * Each branch becomes a frame of (the first branch's visible columns
+    * + the hidden correlation keys), by the kind of its core:
+    *  - uncorrelated: its rows for every distinct outer key observed in
+    *    `df`, the NULL key included;
+    *  - aggregate: the per-key aggregate, left-joined onto the distinct
+    *    outer keys and completed (count 0, other aggregates NULL). The
+    *    completion join is plain equality: a NULL outer key must take
+    *    the EMPTY group (`k = NULL` is UNKNOWN for every inner row), not
+    *    the NULL-key group's aggregates;
+    *  - rows: the core without its NULL inner keys (they equal no outer
+    *    key), cut to top-N per key by a row_number window under ORDER BY
+    *    + LIMIT.
+    * The set operations then fold over the (row, key) tuples, which IS
+    * per-key set semantics (set ops compare NULLs equal, so the NULL key
+    * group behaves like any other key), and one equi join on the keys
+    * (plus a join step's ON) attaches the result — null-safe when an
+    * uncorrelated or aggregate branch gives the NULL key rows. Key-
+    * bounded shuffles only: the body never re-runs per outer row.
     */
-  private def joinSetLateral(spark: SparkSession, df: DataFrame,
-      bt: BoundTable, ls: Analyzer.BoundLateralSet,
-      source: BoundTable => DataFrame): DataFrame = {
-    val visNames = bt.desc.attributes.map(_.name)
-      .dropRight(ls.hiddenKeys.length)
-    val allNames = visNames ++ ls.hiddenKeys
-    lazy val outKeys = df.select(ls.keyOuter.zipWithIndex.map { case (oc, i) =>
-      qualified(oc).as(ls.hiddenKeys(i)) }: _*).distinct()
-    def frame(core: BoundSelect, innerKeys: Seq[BoundCol]): DataFrame =
-      if (innerKeys.isEmpty)
-        lowerSelect(spark, core, source).crossJoin(outKeys).toDF(allNames: _*)
-      else {
-        val c = combine(spark, core, source, Set.empty, None)
-        val visible = core.projection.map(it =>
-          rowValueCol(it, qualified).as(it.columnName.mkString))
-        val keys = innerKeys.zipWithIndex.map { case (ic, i) =>
-          qualified(ic).as(ls.hiddenKeys(i)) }
-        c.filter(innerKeys.map(ic => qualified(ic).isNotNull).reduce(_ && _))
-          .select(visible ++ keys: _*).toDF(allNames: _*)
-      }
-    val folded = lowerUnion(
-      frame(ls.branches.head._2, ls.branches.head._3),
-      ls.branches.tail.map { case (conn, core, ks) => (conn, frame(core, ks)) },
-      Nil, None, None)
-    val frame2 = folded.alias(bt.binding)
-    val on = ls.keyOuter.zipWithIndex.map { case (oc, i) =>
-      qualified(oc) <=> col(s"${bt.binding}.${ls.hiddenKeys(i)}") }.reduce(_ && _)
-    df.join(frame2, on)
+  private def joinLateral(spark: SparkSession, df: DataFrame,
+      bt: BoundTable, l: Analyzer.BoundLateral, kind: String,
+      on: Option[Column], source: BoundTable => DataFrame): DataFrame = {
+    val hk = l.hiddenKeys
+    lazy val outKeys = df.select(l.keyOuter.zipWithIndex.map { case (oc, i) =>
+      qualified(oc).as(hk(i)) }: _*).distinct()
+    def frame(core: BoundSelect, inner: Seq[BoundCol]): DataFrame = {
+      val f =
+        if (inner.isEmpty) lowerSelect(spark, core, source).crossJoin(outKeys)
+        else if (core.isAggregate) {
+          val (perKey, values) = perKeyAgg(spark, core, inner, source, "__pa", "__pk")
+          outKeys.join(perKey, hk.indices.map(i =>
+            col(hk(i)) === perKey(s"__pk$i")).reduce(_ && _), "left_outer")
+            .select(values ++ hk.map(col): _*)
+        } else {
+          val c = combine(spark, core, source, Set.empty, None)
+            .filter(inner.map(qualified(_).isNotNull).reduce(_ && _))
+          val topped = core.limit.fold(c) { n =>
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(inner.map(qualified): _*)
+              .orderBy(core.orderBy.map {
+                case (Analyzer.BoundOrderKey.OKOperand(op), dir) =>
+                  sortCol(lowerOperandWith(op, qualified), dir)
+                case (k, _) => sys.error(s"unreachable LATERAL sort key $k")
+              }: _*)
+            c.withColumn("__lrn", row_number().over(w))
+              .filter(col("__lrn") <= n).drop("__lrn")
+          }
+          topped.select(core.projection.map(it =>
+            rowValueCol(it, qualified).as(it.columnName.mkString)) ++
+            inner.zipWithIndex.map { case (ic, i) => qualified(ic).as(hk(i)) }: _*)
+        }
+      f.toDF(bt.desc.attributes.map(_.name): _*)
+    }
+    val folded = lowerUnion(frame(l.branches.head._2, l.branches.head._3),
+      l.branches.tail.map { case (conn, core, ks) => (conn, frame(core, ks)) },
+      Nil, None).alias(bt.binding)
+    val nullSafe = l.branches.exists { case (_, core, ks) =>
+      ks.isEmpty || core.isAggregate }
+    val keyEq = l.keyOuter.zipWithIndex.map { case (oc, i) =>
+      val inner = col(s"${bt.binding}.${hk(i)}")
+      if (nullSafe) qualified(oc) <=> inner else qualified(oc) === inner
+    }.reduce(_ && _)
+    df.join(folded, on.fold(keyEq)(keyEq && _), kind)
   }
 
-  /** Correlated scalar aggregate: GROUP BY the decorrelated keys — one row
-    * per key by construction. Callers LEFT-join the frame, not inner:
-    * for an outer row with no matching key the scalar is SQL-NULL —
-    * EXCEPT count(), whose value over an empty correlated set is 0, which
-    * only an outer join with a coalesce can reproduce (the classic COUNT
-    * decorrelation trap). Returns (per-key frame, join condition builder
-    * over the caller's outer-column resolver, the scalar value column).
+  /** Per-key aggregate of a correlated body: GROUP BY its inner key
+    * columns (`keyPrefix`0…) — one row per key by construction — with
+    * one hidden column per distinct aggregate node of its items (an
+    * expression OVER aggregate calls, 0.2 * avg(x) in the TPC-H Q17
+    * shape, projects over them). Returns the frame and each item's value
+    * over it. Callers LEFT-join the frame, not inner: count() over an
+    * empty correlated set is 0, not NULL — the classic COUNT
+    * decorrelation trap — and the empty-group value wraps the POST-left-
+    * join column reference, so unmatched outer keys read it too.
     */
-  private def correlatedScalarAgg(spark: SparkSession, sub: BoundSelect,
-      pairs: Seq[(BoundCol, BoundCol)], source: BoundTable => DataFrame,
-      scalarName: String, keyPrefix: String)
-      : (DataFrame, (BoundCol => Column) => Column, Column) = {
+  private def perKeyAgg(spark: SparkSession, sub: BoundSelect,
+      innerKeys: Seq[BoundCol], source: BoundTable => DataFrame,
+      name: String, keyPrefix: String): (DataFrame, Seq[Column]) = {
     val core = combine(spark, sub, source, Set.empty, None)
-    val keyCols = pairs.zipWithIndex.map { case ((_, ic), k) =>
+    val keyCols = innerKeys.zipWithIndex.map { case (ic, k) =>
       qualified(ic).as(s"$keyPrefix$k") }
-    // count() over an empty correlated set is 0, not NULL — the classic
-    // COUNT decorrelation trap. The empty-group value wraps the POST-left-
-    // join column reference, so unmatched outer keys read it too.
-    val (subAgg, scalar) = sub.projection.head match {
-      case BoundItem.BIAgg(f, arg, _, dist) =>
-        val g = core.groupBy(keyCols: _*).agg(Aggregates.lowerNode(
-          BoundOperand.BAgg(f, arg, dist), lowerOperandWith(_, qualified)).as(scalarName))
-        (g, Aggregates.completed(f, g(scalarName)))
-      case BoundItem.BIExpr(op, _) =>
-        // an expression OVER aggregate calls (0.2 * avg(x), the TPC-H
-        // Q17 shape): each distinct aggregate node computes as a hidden
-        // per-key column, the expression projects over them post-join
-        val nodes = Analyzer.BoundNode.aggNodes(op).distinct
-        val hidden = nodes.zipWithIndex.map { case (n, i) =>
-          Aggregates.lowerNode(n, lowerOperandWith(_, qualified))
-            .as(s"${scalarName}_a$i")
-        }
-        val g = core.groupBy(keyCols: _*).agg(hidden.head, hidden.tail: _*)
-        val nodeCol: Map[BoundNode, Column] = nodes.zipWithIndex.map {
-          case (n, i) =>
-            val c = g(s"${scalarName}_a$i")
-            n -> (n match {
-              case BoundOperand.BAgg(f, _, _) => Aggregates.completed(f, c)
-              case _                          => c
-            })
-        }.toMap
-        (g, lowerTree(op, nodeCol))
-      case _ => sys.error("unreachable: analyzer requires a single aggregate call")
+    val values = sub.projection.map(_.operands.head)
+    val nodes = values.flatMap(Analyzer.BoundNode.aggNodes).distinct
+    val hidden = nodes.zipWithIndex.map { case (n, i) =>
+      Aggregates.lowerNode(n, lowerOperandWith(_, qualified)).as(s"${name}_a$i")
     }
-    val keyCond = (outer: BoundCol => Column) => pairs.zipWithIndex
-      .map { case ((oc, _), k) => outer(oc) === subAgg(s"$keyPrefix$k") }
-      .reduce(_ && _)
-    (subAgg, keyCond, scalar)
+    val g = core.groupBy(keyCols: _*).agg(hidden.head, hidden.tail: _*)
+    val nodeCol: Map[BoundNode, Column] = nodes.zipWithIndex.map {
+      case (n, i) =>
+        val c = g(s"${name}_a$i")
+        n -> (n match {
+          case BoundOperand.BAgg(f, _, _) => Aggregates.completed(f, c)
+          case _                          => c
+        })
+    }.toMap
+    (g, values.map(lowerTree(_, nodeCol)))
   }
 
   /** Inequality-correlated scalar aggregate (running-total bodies:
@@ -1366,16 +1331,12 @@ object Lowering {
       source: BoundTable => DataFrame,
       broadcastBindings: Set[String],
       joinPlan: Option[JoinOrder.Tree]): DataFrame = {
-    // aggregate LATERAL frames need the enclosing frame first (their
+    // LATERAL frames read the frame built so far (their outer and
     // completion keys come from it) — they join after the plain phase
-    val aggLats: Seq[(BoundTable, Analyzer.BoundQuery)] = q.tables.flatMap(bt =>
-      q.derived.get(bt.binding) match {
-        case Some(l: Analyzer.BoundLateral) if l.agg      => Some((bt, l))
-        case Some(ls: Analyzer.BoundLateralSet)           => Some((bt, ls))
-        case _ => None
-      })
-    val aggLatB = aggLats.map(_._1.binding).toSet
-    val plainTables = q.tables.filterNot(bt => aggLatB(bt.binding))
+    val lats: Seq[(BoundTable, Analyzer.BoundLateral)] = q.tables.flatMap(bt =>
+      q.derived.get(bt.binding).collect { case l: Analyzer.BoundLateral => (bt, l) })
+    val latB = lats.map(_._1.binding).toSet
+    val plainTables = q.tables.filterNot(bt => latB(bt.binding))
     val base0 = plainTables.map { bt =>
       // a derived table lowers its subquery in place of a scan
       val df0 = q.derived.get(bt.binding) match {
@@ -1414,13 +1375,9 @@ object Lowering {
       if (leftNullExtending) (Nil, conj0)
       else conj0.partition(c =>
         Analyzer.columnsOf(c).map(_.binding).toSet.subsetOf(innerB))
-    // LATERAL key equalities are JOIN conditions of the leading FROM
-    // group: they always apply here — deferring them past a RIGHT/FULL
-    // step would filter that step's null-extended rows away
-    val conj2 = conj1 ++ q.lateralConjs
-    // conjuncts reading an aggregate-lateral column wait for its join
-    val (aggLatConj, conj) = conj2.partition(c =>
-      Analyzer.columnsOf(c).exists(x => aggLatB(x.binding)))
+    // conjuncts reading a LATERAL column wait for its join
+    val (latConj, conj) = conj1.partition(c =>
+      Analyzer.columnsOf(c).exists(x => latB(x.binding)))
     // equi-conjunct across two bindings → usable as an explicit join cond
     def equiSides(c: BoundExpr): Option[(String, String)] = c match {
       case BoundExpr.BCmp(Ast.CmpOp.Eq, BoundOperand.BCol(a), BoundOperand.BCol(b))
@@ -1460,30 +1417,37 @@ object Lowering {
         if (conj.isEmpty) joined
         else joined.filter(conj.map(lowerExpr).reduce(_ && _))
     }
-    // aggregate LATERAL frames fuse in (their completion keys read the
-    // frame built so far), then conjuncts over their columns filter
-    val withAggLats = aggLats.foldLeft(plainFiltered) {
-      case (df, (bt, l: Analyzer.BoundLateral)) =>
-        joinAggLateral(spark, df, bt, l, source)
-      case (df, (bt, ls: Analyzer.BoundLateralSet)) =>
-        joinSetLateral(spark, df, bt, ls, source)
-      case (_, (_, other)) => sys.error(s"unreachable fused lateral $other")
+    // LATERAL frames fuse in, in declaration order (a later one may
+    // correlate against an earlier one's columns), then conjuncts over
+    // their columns filter
+    val withLats = lats.foldLeft(plainFiltered) { case (df, (bt, l)) =>
+      joinLateral(spark, df, bt, l, "inner", None, source)
     }
-    val aggLatFiltered =
-      if (aggLatConj.isEmpty) withAggLats
-      else withAggLats.filter(aggLatConj.map(lowerExpr).reduce(_ && _))
+    val latFiltered =
+      if (latConj.isEmpty) withLats
+      else withLats.filter(latConj.map(lowerExpr).reduce(_ && _))
+    def sparkType(kind: String): String = kind match {
+      case "left"  => "left_outer"
+      case "right" => "right_outer"
+      case "full"  => "full_outer"
+      case "semi"  => "left_semi"
+      case "anti"  => "left_anti"
+      case _       => "inner"
+    }
     // join steps (outer, or inner-after-outer) fold in declaration order
     // with their ON attached; WHERE conjuncts touching these tables
     // filter afterwards (SQL order)
-    val withOuter = q.joinSteps.foldLeft(aggLatFiltered) { (df, js) =>
+    val withOuter = q.joinSteps.foldLeft(latFiltered) { (df, js) =>
       // a derived step side lowers its subquery in place of a scan
-      val right0 = q.derived.get(js.table.binding) match {
+      lazy val right = (q.derived.get(js.table.binding) match {
         case Some(sub) => lowerDerived(spark, sub, source)
         case None      => source(js.table)
-      }
-      val right = right0.alias(js.table.binding)
-      js.kind match {
-        case "asof" | "asof_left" =>
+      }).alias(js.table.binding)
+      (js.kind, q.derived.get(js.table.binding)) match {
+        case (k, Some(l: Analyzer.BoundLateral)) =>
+          joinLateral(spark, df, js.table, l, sparkType(k),
+            Some(lowerExpr(js.on)), source)
+        case ("asof" | "asof_left", _) =>
           Analyzer.asofDecompose(js.on, js.table.binding) match {
             case Left(m) => sys.error(s"unreachable: analyzer passed a bad ASOF ON: $m")
             case Right(p) if p.eqPairs.nonEmpty && !p.fallback &&
@@ -1512,16 +1476,7 @@ object Lowering {
                         else picked
               res.drop(lid).drop(rn).drop(mk)
           }
-        case _ =>
-          val sparkType = js.kind match {
-            case "left"  => "left_outer"
-            case "right" => "right_outer"
-            case "full"  => "full_outer"
-            case "semi"  => "left_semi"
-            case "anti"  => "left_anti"
-            case _       => "inner"
-          }
-          df.join(right, lowerExpr(js.on), sparkType)
+        case _ => df.join(right, lowerExpr(js.on), sparkType(js.kind))
       }
     }
     val postFiltered =
@@ -1866,11 +1821,11 @@ object Lowering {
             outerKey, outerRows))
           runningAggValue(sub, m)
         case None if pairs.nonEmpty =>
-          val (subAgg, keyCond, c) =
-            correlatedScalarAgg(spark, sub, pairs, source, m, s"${m}_c")
-          leftJoin(subAgg, keyCond(outerKey),
-            m +: pairs.indices.map(j => s"${m}_c$j"))
-          c
+          val (subAgg, values) =
+            perKeyAgg(spark, sub, pairs.map(_._2), source, m, s"${m}_c")
+          leftJoin(subAgg, onPairs(pairs, subAgg, s"${m}_c").reduce(_ && _),
+            subAgg.columns.toSeq)
+          values.head
         case None if guard => guardedScalarLit(lowerSelect(spark, sub, source))
         case None =>
           leftJoin(broadcast(lowerSelect(spark, sub, source).toDF(m)), lit(true),
@@ -2109,9 +2064,8 @@ object Lowering {
       (u.first +: u.rest.map(_._2)).foreach(countDerivedRefs(_, acc))
     case r: Analyzer.BoundRecursive =>
       countDerivedRefs(r.base, acc); countDerivedRefs(r.step, acc)
-    case l: Analyzer.BoundLateral => countDerivedRefs(l.sub, acc)
-    case ls: Analyzer.BoundLateralSet =>
-      ls.branches.foreach(b => countDerivedRefs(b._2, acc))
+    case l: Analyzer.BoundLateral =>
+      l.branches.foreach(b => countDerivedRefs(b._2, acc))
     case _ => ()
   }
 
@@ -2158,43 +2112,7 @@ object Lowering {
         case "json" => spark.read.schema(fs.desc.sparkSchema).json(fs.path)
         case other => sys.error(s"unreachable file format $other")
       }
-    case l: Analyzer.BoundLateral   =>
-      if (l.agg) sys.error("unreachable: aggregate laterals join fused in combine")
-      lowerLateral(spark, l, source)
-    case _: Analyzer.BoundLateralSet =>
-      sys.error("unreachable: set-operation laterals join fused in combine")
     case other => sys.error(s"not a derivable query: $other")
-  }
-
-  /** A correlated LATERAL frame: the body's core plus the synthetic
-    * hidden-key columns the enclosing WHERE joins on; ORDER BY + LIMIT
-    * become a per-key row_number window (top-N per key), never a global
-    * cut. Inner-join semantics downstream match SQL's CROSS JOIN LATERAL
-    * (an outer row with an empty lateral set drops).
-    */
-  private def lowerLateral(spark: SparkSession, l: Analyzer.BoundLateral,
-      source: BoundTable => DataFrame): DataFrame = {
-    val core = combine(spark, l.sub, source, Set.empty, None)
-    val topped = l.sub.limit match {
-      case Some(n) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(l.pairs.map { case (_, ic) => qualified(ic) }: _*)
-          .orderBy(l.sub.orderBy.map {
-            case (Analyzer.BoundOrderKey.OKOperand(op), dir) =>
-              sortCol(lowerOperandWith(op, qualified), dir)
-            case (k, _) => sys.error(s"unreachable LATERAL sort key $k")
-          }: _*)
-        core.withColumn("__lrn", row_number().over(w))
-          .filter(col("__lrn") <= n).drop("__lrn")
-      case None => core
-    }
-    // visible projection (plain columns/expressions, analyzer-enforced)
-    // in derived-attribute order, then the hidden key columns
-    val visible = l.sub.projection.map(it =>
-      rowValueCol(it, qualified).as(it.columnName.mkString))
-    val keys = l.pairs.zipWithIndex.map { case ((_, ic), i) =>
-      qualified(ic).as(l.hiddenKeys(i)) }
-    topped.select(visible ++ keys: _*)
   }
 
   /** WITH RECURSIVE fixpoint: materialize the base, then repeatedly run

@@ -765,8 +765,7 @@ object Parser {
       def inFrom(fi: FromItem): Boolean = fi match {
         case FTable(TableRef(n, _)) => n.equalsIgnoreCase(name)
         case FDerived(sel, _)       => inTree(sel)
-        case FLateral(sel, _)       => readsTable(sel, name)
-        case FLateralSet(u, _)      => inTree(u)
+        case FLateral(sel, _)       => inTree(sel)
       }
       def inNode(n: Node): Boolean = (n match {
         case Operand.ScalarSub(sub)           => readsTable(sub, name)
@@ -872,11 +871,7 @@ object Parser {
         FDerived(ctes(n.toLowerCase), a.getOrElse(n.split('.').last))
       case ft: FTable        => ft
       case FDerived(sel, al) => FDerived(substCteTree(sel, ctes), al)
-      case FLateral(sel, al) => FLateral(substCte(sel, ctes), al)
-      case FLateralSet(u, al) => substCteTree(u, ctes) match {
-        case u2: UnionTree => FLateralSet(u2, al)
-        case other         => FDerived(other, al)
-      }
+      case FLateral(sel, al) => FLateral(substCteTree(sel, ctes), al)
       case tf: FTableFunc    => tf
       case fs: FFileScan     => fs
     }
@@ -1855,16 +1850,7 @@ object Parser {
                 case TIdent(a, _) if !reserved(a) => p.next(); Right(a)
                 case t => Left(ParseError("a LATERAL subquery requires an alias", t.pos))
               }
-            } yield sel match {
-              // a plain SELECT (incl. a WITH that desugared to one) takes
-              // the correlated-LATERAL path; set-op chains and recursive
-              // bodies behave as ordinary derived tables (LATERAL without
-              // correlation is just a derived table — correlated
-              // references inside them fail loudly at binding)
-              case s: SelectTree => FLateral(s, alias)
-              case u: UnionTree  => FLateralSet(u, alias)
-              case other         => FDerived(other, alias)
-            }
+            } yield FLateral(sel, alias)
           case TSym("(", _) =>
             p.next()
             // (VALUES (…), (…)) alias(c1, c2) — an inline derived table;

@@ -1226,10 +1226,15 @@ class DialectSpec extends AnyFunSuite {
       "LATERAL (SELECT count(*) AS n, max(v) AS mx FROM lk " +
       "WHERE lk.k = lo.a) t ORDER BY lo.id").toOption.get
     assert(nl.collect().toSeq == Seq(Row(1, 1L, 10), Row(2, 0L, null)))
-    // aggregate laterals are FROM-list only
-    assert(db.select("SELECT p.name, t.n FROM people p LEFT JOIN " +
+    // LEFT JOIN LATERAL … ON 1 = 1 over an aggregate body gives its
+    // FROM-list twin's rows (every outer row owns one completed row)
+    def sorted(sql: String) =
+      db.select(sql).toOption.get.collect().map(_.toString).toSeq.sorted
+    val step = sorted("SELECT p.name, t.n FROM people p LEFT JOIN " +
       "LATERAL (SELECT count(*) AS n FROM cars c WHERE c.owner_id = p.id) t " +
-      "ON 1 = 1").isLeft)
+      "ON 1 = 1")
+    assert(step.nonEmpty && step == sorted("SELECT p.name, t.n FROM people p, " +
+      "LATERAL (SELECT count(*) AS n FROM cars c WHERE c.owner_id = p.id) t"))
   }
 
   test("FROM-list LATERAL key equalities survive RIGHT/FULL join steps") {
@@ -1397,14 +1402,23 @@ class DialectSpec extends AnyFunSuite {
       "ORDER BY p.id").toOption.get
     assert(ce.collect().map(x => (x.getInt(0), x.getString(1))).toSeq ==
       Seq((2, "DeLorean DMC-12")))
-    // rejection surface: chain-level LIMIT, aggregate branches, and
-    // branches correlating on DIFFERENT outer columns all error loudly
+    // an aggregate branch is one completed row per key: the per-key
+    // count UNION ALL a constant row, as written out by hand
+    val ca = db.select("SELECT p.id, t.m FROM people p, " +
+      "LATERAL (SELECT count(*) AS m FROM cars c WHERE c.owner_id = p.id " +
+      "UNION ALL SELECT 0 AS m) t").toOption.get
+    val byHand = db.select("SELECT p.id, (SELECT count(*) FROM cars c " +
+      "WHERE c.owner_id = p.id) AS m FROM people p " +
+      "UNION ALL SELECT p.id, 0 AS m FROM people p").toOption.get
+    def sortedPairs(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(x => (x.getInt(0), x.getLong(1))).toSeq.sorted
+    assert(sortedPairs(ca) == sortedPairs(byHand))
+    assert(sortedPairs(ca) == Seq((1, 0L), (1, 1L), (2, 0L), (2, 1L), (3, 0L), (3, 0L)))
+    // rejection surface: chain-level LIMIT and branches correlating on
+    // DIFFERENT outer columns error loudly
     assert(db.select("SELECT p.id, t.m FROM people p, " +
       "LATERAL (SELECT model AS m FROM cars c WHERE c.owner_id = p.id " +
       "UNION SELECT name AS m FROM people LIMIT 1) t").isLeft)
-    assert(db.select("SELECT p.id, t.m FROM people p, " +
-      "LATERAL (SELECT count(*) AS m FROM cars c WHERE c.owner_id = p.id " +
-      "UNION ALL SELECT 0 AS m) t").isLeft)
     assert(db.select("SELECT p.id, t.m FROM people p, " +
       "LATERAL (SELECT model AS m FROM cars c WHERE c.owner_id = p.id " +
       "UNION ALL SELECT model AS m FROM cars c2 WHERE c2.owner_id = p.age) t")

@@ -385,4 +385,70 @@ class WrapperInvarianceSpec extends AnyFunSuite {
       assert(jobs == 1, s"$sql: $jobs jobs")
     }
   }
+
+  test("a correlated IN / ANY body projecting a scalar subquery rejects alike, bare and wrapped") {
+    val body = "(SELECT @ AS x FROM u u2 WHERE u2.k = t.k)"
+    val sub = "(SELECT max(v) FROM u)"
+    val expected = rejected(s"SELECT k FROM t WHERE v IN ${body.replace("@", sub)}")
+    for (t <- Seq(s"SELECT k FROM t WHERE v IN $body",
+        s"SELECT k FROM t WHERE v NOT IN $body",
+        s"SELECT k FROM t WHERE v > ANY $body",
+        s"SELECT k FROM t WHERE v < ALL $body",
+        "SELECT k FROM t WHERE (k, v) IN (SELECT u2.k, @ AS x FROM u u2 WHERE u2.k = t.k)"))
+      invariant(t, sub, Left(expected))
+    // EXISTS never reads its body's items: the same body returns rows
+    assert(outcome(s"SELECT k FROM t WHERE EXISTS ${body.replace("@", sub)}") ==
+      Right(Seq("[1]", "[1]", "[2]")))
+  }
+
+  // LATERAL bodies correlate twice on one outer column (c.a = p.id AND
+  // c.b = p.id); p has a NULL id, c a NULL key pair, a pair with a != b
+  // and a key no outer row has
+  private lazy val lateralDb: GraftDatabase = database(
+    "CREATE TABLE p (id INT)",
+    "INSERT INTO p VALUES (1), (2), (3), (NULL)",
+    "CREATE TABLE c (a INT, b INT, v INT)",
+    "INSERT INTO c VALUES (1, 1, 10), (1, 1, 20), (1, 2, 30), (2, 2, 20), " +
+      "(NULL, NULL, 40), (4, 4, 50)")
+
+  private val pairWhere = "WHERE c.a = p.id AND c.b = p.id"
+
+  // body -> its FROM-list rows (p.id, l.v)
+  private val lateralShapes = Seq(
+    s"SELECT c.v FROM c $pairWhere" ->
+      Seq("[1,10]", "[1,20]", "[2,20]"),
+    s"SELECT c.v FROM c $pairWhere ORDER BY c.v DESC LIMIT 1" ->
+      Seq("[1,20]", "[2,20]"),
+    s"SELECT count(*) AS v FROM c $pairWhere" ->
+      Seq("[1,2]", "[2,1]", "[3,0]", "[null,0]"),
+    s"SELECT c.v FROM c $pairWhere UNION SELECT v FROM c WHERE a = 4" ->
+      Seq("[1,10]", "[1,20]", "[1,50]", "[2,20]", "[2,50]", "[3,50]", "[null,50]"),
+    s"SELECT c.v FROM c $pairWhere EXCEPT SELECT 20 AS v" ->
+      Seq("[1,10]"))
+
+  test("a LATERAL gives the same rows in the FROM list and as a join step") {
+    val ids = Seq("1", "2", "3", "null")
+    for ((body, rows) <- lateralShapes) {
+      val from = outcome(s"SELECT p.id, l.v FROM p, LATERAL ($body) l", lateralDb)
+      assert(from == Right(rows.sorted), body)
+      assert(outcome(s"SELECT p.id, l.v FROM p INNER JOIN LATERAL ($body) l ON 1 = 1",
+        lateralDb) == from, body)
+      // LEFT keeps each outer row whose lateral set is empty, null-extended
+      val kept = rows.map(_.drop(1).takeWhile(_ != ',')).toSet
+      val extended = ids.filterNot(kept).map(id => s"[$id,null]")
+      assert(outcome(s"SELECT p.id, l.v FROM p LEFT JOIN LATERAL ($body) l ON 1 = 1",
+        lateralDb) == Right((rows ++ extended).sorted), body)
+    }
+  }
+
+  test("a LATERAL correlating against an earlier aggregate LATERAL's column") {
+    val chained = outcome("SELECT p.id, a.n, l.v FROM p, " +
+      s"LATERAL (SELECT count(*) AS n FROM c $pairWhere) a, " +
+      "LATERAL (SELECT c.v FROM c WHERE c.a = a.n) l", lateralDb)
+    val twin = outcome("SELECT a.id, a.n, c.v FROM (SELECT p.id AS id, " +
+      s"(SELECT count(*) FROM c $pairWhere) AS n FROM p) a, c WHERE c.a = a.n",
+      lateralDb)
+    assert(chained == twin)
+    assert(chained == Right(Seq("[1,2,20]", "[2,1,10]", "[2,1,20]", "[2,1,30]")))
+  }
 }
