@@ -8,6 +8,8 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.graftbridge.Bridge
 
 import Analyzer._
 
@@ -1250,9 +1252,16 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   // ---- catalog introspection + export ----
 
+  /** A frame over driver-held rows: a LocalRelation, so collecting it
+    * starts no job. Values convert through the encoder
+    * `createDataFrame(rdd, schema)` uses, so a value of the wrong type
+    * fails here as it would there.
+    */
   private def localRows(schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      rows: Seq[Row]): DataFrame = {
+    val toRow = ExpressionEncoder(schema).createSerializer()
+    Bridge.localFrame(spark, schema, rows.map(r => toRow(r).copy()))
+  }
 
   /** SHOW TABLES: every relation with its kind, sorted by name. */
   private def showTables(): Either[QueryError, QueryResult] = {
@@ -1952,6 +1961,26 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       df.write.mode("append").insertInto(catName(desc.name))
     } else df.write.mode("append").parquet(dataPath(desc.name))
 
+  /** INSERT … VALUES: all rows land in one parquet file (SURVEY.md §7.4 —
+    * per-row writes would be pathological). Literal NULLs were
+    * analysis-checked, but generated columns arrive as NULL placeholders,
+    * materialize (and NOT NULL over them re-checks) and CHECK constraints
+    * evaluate in the frame pass, so the input is nullable throughout. The
+    * pass runs on the driver before any file exists, so a failing row
+    * leaves none; a plain table's file is then written by the driver with
+    * no Spark job, a bucketed table's by Spark's bucketed write. Returns
+    * the rows as written (the RETURNING image).
+    */
+  private def insertValues(desc: TableDesc, rows: Seq[Seq[Any]]): DataFrame = {
+    val input = org.apache.spark.sql.types.StructType(desc.sparkSchema.map(_.copy(nullable = true)))
+    val (schema, written) = Bridge.collectRows(
+      enforceNotNull(localRows(input, rows.map(Row.fromSeq)), desc))
+    if (desc.bucket.isDefined) appendTo(desc, Bridge.localFrame(spark, schema, written))
+    else Bridge.writeParquet(spark, dataPath(desc.name), schema, written)
+    statistics.recordInsert(desc, rows)
+    Bridge.localFrame(spark, schema, written)
+  }
+
   private def readTable(desc: TableDesc): DataFrame =
     externalFormat.get(desc.name) match {
       case Some("csv") =>
@@ -2167,15 +2196,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       Done(s"created table ${desc.name} with $n row(s)")
 
     case BoundInsert(desc, rows) =>
-      // Batched append: all VALUES rows land in one parquet write
-      // (SURVEY.md §7.4 — per-row writes would be pathological).
-      val rdd = spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1)
-      // literal NULLs were analysis-checked, but generated columns
-      // materialize (and NOT NULL over them re-checks) and CHECK
-      // constraints evaluate in the frame pass
-      appendTo(desc, enforceNotNull(
-        spark.createDataFrame(rdd, desc.sparkSchema), desc))
-      statistics.recordInsert(desc, rows)
+      insertValues(desc, rows)
       Done(s"inserted ${rows.length} row(s) into ${desc.name}")
 
     case BoundCreate(desc) =>
@@ -2205,14 +2226,10 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     case Analyzer.BoundReturning(u: BoundUpdate, proj) =>
       applyReturning(runUpdate(u, returning = true), proj)
 
-    // INSERT … RETURNING: the inserted rows (post-cast) as the result
-    case Analyzer.BoundReturning(bi @ BoundInsert(desc, rows), proj) =>
-      execute(bi) match {
-        case Done(_) =>
-          val rdd = spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1)
-          applyReturning(Rows(spark.createDataFrame(rdd, desc.sparkSchema)), proj)
-        case other => other
-      }
+    // INSERT … RETURNING: the inserted rows as written (generated
+    // columns materialized) as the result
+    case Analyzer.BoundReturning(BoundInsert(desc, rows), proj) =>
+      applyReturning(Rows(insertValues(desc, rows)), proj)
 
     case Analyzer.BoundReturning(bis: BoundInsertSelect, proj) =>
       applyReturning(runInsertSelect(bis, returning = true), proj)

@@ -9,7 +9,9 @@ object ExplainQ {
   def main(args: Array[String]): Unit = {
     val (names, dirs) = args.partition(a => !a.startsWith("/"))
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.LocalSession("8", "ERROR")
+    // scan metadata (DataFilters, PushedFilters) in full: cut at Spark's
+    // default 100 characters, the cut point moves with expression-id widths
+    val spark = graft.LocalSession("8", "ERROR", Seq("spark.sql.maxMetadataStringLength" -> "100000"))
     for (q <- names) {
       println(s"===== $q =====")
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

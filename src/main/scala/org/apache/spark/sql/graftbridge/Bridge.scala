@@ -1,5 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences,
@@ -8,6 +14,7 @@ import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpre
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is private[sql] in Spark 4,
@@ -63,6 +70,39 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Run `df` on the driver and return its physical plan's schema with
+    * its rows. A frame over a LocalRelation (driver rows under a foldable
+    * projection) collects without a Spark job.
+    */
+  def collectRows(df: org.apache.spark.sql.DataFrame): (StructType, Array[InternalRow]) = {
+    val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.executedPlan
+    (plan.schema, plan.executeCollect())
+  }
+
+  /** Write driver-held `rows` into the directory `dir` as one parquet
+    * file, on the calling thread, through Spark's own parquet writer set
+    * up as a write task sets it up: the same footer and bytes as a
+    * one-task `df.write.parquet` append of a frame with this `schema`
+    * (whose nullability a Spark write puts in the footer). The file is
+    * written under a hidden temp name and published by one rename, which
+    * carries its `.crc` along; file listings skip names starting with
+    * `.`, so a reader never sees a partial file, nor one a failed write
+    * left behind.
+    */
+  def writeParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
+      schema: StructType, rows: Seq[InternalRow]): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(dir, s".$name.tmp")
+    val writer = factory.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(writer.write) finally writer.close()
+    if (!tmp.getFileSystem(job.getConfiguration).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not publish $tmp")
+  }
 
   /** Cap a checkpointed DataFrame's inherited size/rowCount estimates at
     * Long.MaxValue — the identity for every sane estimate, a bound for the
