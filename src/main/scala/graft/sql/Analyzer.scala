@@ -247,16 +247,19 @@ object Analyzer {
         ci: Boolean = false, escape: Option[Char] = None) extends BoundExpr {
       def children = Seq(o)
     }
-    /** [NOT] IN (SELECT …): lowers to left-semi/anti join. `pairs` are the
-      * decorrelated equality conjuncts (outer col, inner col) pulled out of
-      * the subquery's WHERE into the join condition; empty = uncorrelated.
-      * NOT IN is null-aware (SQL 3VL): a NULL in the subquery result, or a
-      * NULL probe against a non-empty set, makes the predicate non-TRUE.
+    /** (p1, …, pk) [NOT] IN (SELECT v1, …, vk): membership of a
+      * k-component probe (k = 1 for a plain operand). `pairs` are the
+      * decorrelated equality conjuncts (outer col, inner col) pulled out
+      * of the subquery's WHERE; empty = uncorrelated. SQL 3VL: the
+      * predicate is TRUE when a set row equals the probe on every
+      * component, FALSE when no set row is compatible (every component
+      * equal or NULL on either side), NULL otherwise. Lowered in
+      * `Lowering.MarkerScope`.
       */
-    final case class BInSub(o: BoundOperand, sub: BoundSelect,
+    final case class BInSub(probes: Seq[BoundOperand], sub: BoundSelect,
         pairs: Seq[(BoundCol, BoundCol)], negated: Boolean)
       extends BoundExpr with Subquery {
-      def children = Seq(o)
+      def children = probes
     }
     /** [NOT] EXISTS (SELECT …): left-semi/anti join on the decorrelated
       * equality pairs (uncorrelated = constant-condition semi join against
@@ -288,18 +291,6 @@ object Analyzer {
       extends BoundExpr with Subquery {
       def children = Seq(o)
     }
-    /** (a, b, …) IN (SELECT …) — row-value membership: ONE left-semi
-      * join on every component equality plus the decorrelated pairs.
-      * Positive top-level WHERE conjuncts only (analyzer-enforced), so
-      * component NULLs simply fail to match — exactly SQL's UNKNOWN
-      * filtering false.
-      */
-    final case class BRowInSub(os: Seq[BoundOperand], sub: BoundSelect,
-        pairs: Seq[(BoundCol, BoundCol)], negated: Boolean)
-      extends BoundExpr with Subquery {
-      def children = os
-    }
-
     /** The AND-tree flattened into its conjuncts (OR subtrees stay whole). */
     def conjuncts(e: BoundExpr): Seq[BoundExpr] = e match {
       case BAnd(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -656,7 +647,7 @@ object Analyzer {
         // flattening); its conjuncts re-enter the queue so deeper nesting
         // flattens level by level
         def flatten(isub: BoundSelect, ipairs: Seq[(BoundCol, BoundCol)],
-            inEq: Option[BoundExpr]): Option[AnalyzerError] = {
+            inEqs: Seq[BoundExpr]): Option[AnalyzerError] = {
           if (sub.isAggregate)
             return Some(BadSubquery(
               "correlation into a deeper scope is not supported under an aggregating subquery"))
@@ -673,7 +664,7 @@ object Analyzer {
           extraSteps ++= isub.joinSteps
           extraDerived ++= isub.derived
           queue ++= isub.predicate.map(BoundExpr.conjuncts).getOrElse(Nil)
-          inEq.foreach(kept += _)
+          kept ++= inEqs
           for ((oc, ic) <- ipairs) {
             if (isOuter(oc)) pairs += ((oc, ic))
             else kept += BoundExpr.BCmp(CmpOp.Eq, BoundOperand.BCol(oc), BoundOperand.BCol(ic))
@@ -698,21 +689,22 @@ object Analyzer {
               pairs += ((exprKeys(op), ic))
             case BoundExpr.BExists(isub, ipairs, false, ires)
                 if ipairs.exists(p => isOuter(p._1)) =>
-              flatten(isub, ipairs, None).foreach(e => return Left(e))
+              flatten(isub, ipairs, Nil).foreach(e => return Left(e))
               // the nested sub's residual conjuncts re-classify in the
               // merged scope (its bindings are inner now): refs local to
               // the flattened body become plain predicates, deeper refs
               // become this sub's pairs/residual
               queue ++= ires
-            case BoundExpr.BInSub(o, isub, ipairs, false)
+            case BoundExpr.BInSub(os, isub, ipairs, false)
                 if ipairs.exists(p => isOuter(p._1)) &&
-                  columnsOf(o).forall(c => !isOuter(c)) =>
-              // x IN (SELECT v …) under existence ≡ ∃ row with x = v
-              val inVal = isub.projection.head.rowValue.getOrElse(
+                  os.flatMap(columnsOf).forall(c => !isOuter(c)) =>
+              // (x1, …, xk) IN (SELECT v1, …, vk …) under existence ≡
+              // ∃ row with x1 = v1 AND … AND xk = vk
+              val inVals = isub.projection.map(_.rowValue.getOrElse(
                 return Left(BadSubquery(
-                  "a nested IN subquery correlated to a deeper scope must not aggregate or window")))
-              flatten(isub, ipairs,
-                Some(BoundExpr.BCmp(CmpOp.Eq, o, inVal))).foreach(e => return Left(e))
+                  "a nested IN subquery correlated to a deeper scope must not aggregate or window"))))
+              flatten(isub, ipairs, os.zip(inVals).map { case (o, v) =>
+                BoundExpr.BCmp(CmpOp.Eq, o, v) }).foreach(e => return Left(e))
             case other =>
               columnsOf(other).find(isOuter) match {
                 case Some(cc) =>
@@ -744,15 +736,6 @@ object Analyzer {
           Right((flattened, ps, res))
     }
   }
-
-  /** A correlated IN / row IN / ANY / ALL body lowers item by item over
-    * its decorrelated rows, so it projects row-level items only.
-    */
-  private def rowLevelBody(sub: BoundSelect, pairs: Seq[(BoundCol, BoundCol)])
-      : Either[AnalyzerError, Unit] =
-    if (pairs.isEmpty || sub.projection.forall(_.rowLevel)) Right(())
-    else Left(BadSubquery(
-      "a correlated IN / ANY / ALL subquery projects plain columns and expressions only"))
 
   /** A join step (left/right/full outer, or inner-after-outer): applied
     * in declaration order after the inner-join group, with its ON
@@ -1785,23 +1768,12 @@ object Analyzer {
       else Right(b)
     }
 
-  /** A row-value IN reachable through a marker position (under OR/NOT):
-    * the per-mask compatibility joins grow 2^k, so the component count
-    * is capped. Correlated probes ride the same frames with the
-    * decorrelated keys as extra grouping columns.
-    */
-  private def rowInMarkerIssue(e: BoundExpr): Option[String] = e.collect {
-    case BoundExpr.BRowInSub(os, _, _, _) if os.length > 3 =>
-      Seq("row-value IN here supports at most 3 components " +
-        "(the null-aware decomposition grows 2^k)")
-  }.headOption
-
   /** Parse-level subquery detection on a DML WHERE — decides whether the
     * predicate can lower as a plain filter or needs the row-id rewrite.
     */
   private def parseHasSub(n: Ast.Node): Boolean = n.exists {
-    case _: Operand.ScalarSub | _: Expr.InSubquery | _: Expr.RowInSubquery |
-         _: Expr.Exists | _: Expr.QuantSubquery => true
+    case _: Operand.ScalarSub | _: Expr.InSubquery | _: Expr.Exists |
+         _: Expr.QuantSubquery => true
   }
 
   /** The row-id match select for a subquery-bearing DML WHERE: the target
@@ -2715,12 +2687,6 @@ object Analyzer {
     // projection operands) — resolve as output references once bound
     var hiddenWinScope: Map[String, SqlType] = Map.empty
 
-    // true while the HAVING predicate binds: its marker lowering (the
-    // post-aggregation MarkerScope over group-output columns) handles
-    // subqueries inside CASE conditions too, so allowSub stays on there
-    // even though the scope is aggregate (projection items of aggregated
-    // queries have no such path and keep rejecting)
-    var havingMarkerOk = false
 
     // Lateral column aliases (DuckDB): a SELECT item may reference an
     // earlier (or any acyclic) item's alias — `a+1 AS b, b*2 AS c`.
@@ -2738,8 +2704,7 @@ object Analyzer {
       }.toMap
     val aliasInProgress = scala.collection.mutable.Set.empty[String]
 
-    def bindOp(o: Operand, allowAgg: Boolean,
-        allowSub: Boolean = false): Either[AnalyzerError, BoundOperand] = {
+    def bindOp(o: Operand, allowAgg: Boolean): Either[AnalyzerError, BoundOperand] = {
     // the lateral-alias fallback inherits THIS reference's scope flags:
     // an aggregate-valued alias referenced from WHERE still rejects
     def lateralAliasFallback(c: ColRef,
@@ -2751,7 +2716,7 @@ object Analyzer {
         if (!aliasInProgress.add(key))
           Left(BadFunction(s"circular lateral column alias '$key'"))
         else
-          try bindOp(lateralAliasOps(key), allowAgg, allowSub)
+          try bindOp(lateralAliasOps(key), allowAgg)
           finally aliasInProgress -= key
       }
     o match {
@@ -2872,13 +2837,13 @@ object Analyzer {
       case Operand.OrderedAgg(f, _, _, _, _) =>
         Left(BadAggregate(s"$f(...) is not valid in this context"))
       case Operand.Cast(o, t) =>
-        bindOp(o, allowAgg, allowSub).flatMap(b =>
+        bindOp(o, allowAgg).flatMap(b =>
           bindCastDispatch(b, t, trying = false))
       // try_cast shares the type-directed dispatch (bindCastDispatch) —
       // the only deltas are NULL-on-miss where the checked cast raises
       // (ENUM membership) and BTryCast at the plain fallthrough
       case Operand.TryCast(o, t) =>
-        bindOp(o, allowAgg, allowSub).flatMap(b =>
+        bindOp(o, allowAgg).flatMap(b =>
           bindCastDispatch(b, t, trying = true))
       // list higher-order functions: the second argument is a lambda
       // whose parameters bind to the list's ELEMENT type; the body may
@@ -2888,7 +2853,7 @@ object Analyzer {
       // the arithmetic path (typing/validation identical to `+`)
       case Operand.FuncCall(f0, Seq(a, b))
           if f0.equalsIgnoreCase("date_add") =>
-        bindOp(Operand.Arith('+', a, b), allowAgg, allowSub)
+        bindOp(Operand.Arith('+', a, b), allowAgg)
       // COLLATE marker (parser postfix `expr COLLATE spec[.spec…]`):
       // binds as the collation's transform chain applied left-to-right
       // — NOCASE→lower, NOACCENT→strip_accents, NFC→nfc_normalize.
@@ -2897,7 +2862,7 @@ object Analyzer {
       // binding each marker independently collates the comparison.
       // COLLATE applies to VARCHAR only, like DuckDB.
       case Operand.FuncCall(f0, Seq(x)) if f0.startsWith("__collate:") =>
-        bindOp(x, allowAgg, allowSub).flatMap { bx =>
+        bindOp(x, allowAgg).flatMap { bx =>
           if (!operandType(bx).isInstanceOf[SqlType.SqlVarChar])
             Left(BadFunction("COLLATE can only be applied to VARCHAR " +
               s"operands, not ${operandType(bx).render}"))
@@ -2930,7 +2895,7 @@ object Analyzer {
             args match {
               case Seq(listArg, Operand.Lambda(ps, body)) =>
                 for {
-                  bl <- bindOp(listArg, allowAgg, allowSub)
+                  bl <- bindOp(listArg, allowAgg)
                   elemT <- operandType(bl) match {
                     case SqlType.SqlArray(e) => Right(e)
                     case other => Left(BadFunction(
@@ -2967,7 +2932,7 @@ object Analyzer {
             _ <- d.literalCheck(args).map(BadFunction(_)).toLeft(())
             bound <- args.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
                 Right(Vector.empty)) { (acc, a) =>
-              acc.flatMap(v => bindOp(a, allowAgg, allowSub).map(v :+ _))
+              acc.flatMap(v => bindOp(a, allowAgg).map(v :+ _))
             }
             bargs <- d.boundCheck(bound, operandType).left.map(BadFunction(_))
           } yield {
@@ -3096,17 +3061,14 @@ object Analyzer {
             Right(Vector.empty)) { case (acc, (c, v)) =>
             acc.flatMap { vs =>
               for {
-                // subqueries in CASE conditions are allowed exactly where
-                // the lowering has a marker path (WHERE conjuncts and
-                // non-aggregate projections) — allowSub carries the context
-                bc <- bindExpr(c, allowAgg, topLevel = allowSub)
-                bv <- bindOp(v, allowAgg, allowSub)
+                bc <- bindExpr(c, allowAgg)
+                bv <- bindOp(v, allowAgg)
               } yield vs :+ (bc -> bv)
             }
           }
           be <- els match {
             case None    => Right(None)
-            case Some(e) => bindOp(e, allowAgg, allowSub).map(Some(_))
+            case Some(e) => bindOp(e, allowAgg).map(Some(_))
           }
         } yield BoundOperand.BCase(bs, be)
       case Operand.Interval(n, u) => Right(BoundOperand.BInterval(n, u))
@@ -3164,8 +3126,8 @@ object Analyzer {
             "TIME arithmetic takes sub-day INTERVAL units only"))
         }
         for {
-          bl <- bindOp(l, allowAgg, allowSub)
-          br <- bindOp(r, allowAgg, allowSub)
+          bl <- bindOp(l, allowAgg)
+          br <- bindOp(r, allowAgg)
           res <- (bl, br) match {
             case (_, BoundOperand.BInterval(_, _)) =>
               if ((ch == '+' || ch == '-') && operandType(bl) == SqlType.SqlTime)
@@ -3249,102 +3211,77 @@ object Analyzer {
     }
     }
 
+    /** The one binder of IN and ANY / ALL: the k probe components, and a
+      * body that projects one column per component, decorrelated. A
+      * correlated body lowers item by item over its decorrelated rows, so
+      * it projects row-level items only. A three-valued IN (negated, or
+      * under NOT) decomposes into 2^k - 1 compatibility frames, so its
+      * probe is capped at three components. The position check after
+      * binding rejects the positions that have no subquery lowering.
+      */
+    def bindProbed(os: Seq[Operand], sub: SelectTree, allowAgg: Boolean,
+        threeValued: Boolean): Either[AnalyzerError,
+          (Seq[BoundOperand], BoundSelect, Seq[(BoundCol, BoundCol)])] =
+      for {
+        bos <- os.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
+          Right(Vector.empty)) { (acc, o) =>
+          acc.flatMap(v => bindOp(o, allowAgg).map(v :+ _))
+        }
+        bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
+        _ <-
+          if (bsub0.projection.length == os.length) Right(())
+          else Left(BadSubquery(s"the subquery must project one column per " +
+            s"probe component (${os.length}), got ${bsub0.projection.length}"))
+        dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
+        (body, pairs, _) = dp
+        _ <-
+          if (pairs.isEmpty || body.projection.forall(_.rowLevel)) Right(())
+          else Left(BadSubquery("a correlated IN / ANY / ALL subquery " +
+            "projects plain columns and expressions only"))
+        _ <-
+          if (os.length <= 3 || !threeValued) Right(())
+          else Left(BadSubquery("NOT IN, and IN under NOT, support at most " +
+            "3 probe components (the null-aware decomposition grows 2^k)"))
+      } yield (bos, body, pairs)
+
+    /** `underNot`: an enclosing NOT makes NULL-vs-FALSE observable, so an
+      * IN below it lowers three-valued (a CASE condition resets it, as
+      * the marker lowering does).
+      */
     def bindExpr(e: Expr, allowAgg: Boolean = false,
-        topLevel: Boolean = true): Either[AnalyzerError, BoundExpr] = e match {
+        underNot: Boolean = false): Either[AnalyzerError, BoundExpr] = e match {
       case Expr.And(l, r) =>
         for {
-          bl <- bindExpr(l, allowAgg, topLevel)
-          br <- bindExpr(r, allowAgg, topLevel)
+          bl <- bindExpr(l, allowAgg, underNot)
+          br <- bindExpr(r, allowAgg, underNot)
         } yield BoundExpr.BAnd(bl, br)
       case Expr.Or(l, r) =>
-        // WHERE and HAVING keep subqueries usable under OR (they lower
-        // as boolean-marker left joins); row-value IN rides the same
-        // machinery UNCORRELATED (the per-mask marker frames have no
-        // per-key variant) — a correlated row-IN under OR rejects after
-        // binding, when correlation is known.
         for {
-          bl <- bindExpr(l, allowAgg, topLevel)
-          br <- bindExpr(r, allowAgg, topLevel)
-          _ <- rowInMarkerIssue(BoundExpr.BOr(bl, br))
-            .fold[Either[AnalyzerError, Unit]](Right(()))(m => Left(BadSubquery(m)))
+          bl <- bindExpr(l, allowAgg, underNot)
+          br <- bindExpr(r, allowAgg, underNot)
         } yield BoundExpr.BOr(bl, br)
-      case Expr.Not(x) =>
-        // subqueries stay legal under NOT: the marker lowering is
-        // three-valued there (NULL-vs-FALSE observable); row-value IN's
-        // markers are three-valued by construction (per-null-mask
-        // compatibility joins), correlated probes excepted.
-        for {
-          bx <- bindExpr(x, allowAgg, topLevel)
-          _ <- rowInMarkerIssue(bx)
-            .fold[Either[AnalyzerError, Unit]](Right(()))(m => Left(BadSubquery(m)))
-        } yield BoundExpr.BNot(bx)
-      case Expr.RowInSubquery(os, sub, neg) =>
-          for {
-            bos <- os.foldLeft[Either[AnalyzerError, Vector[BoundOperand]]](
-              Right(Vector.empty)) { (acc, o) =>
-              acc.flatMap(v => bindOp(o, allowAgg).map(v :+ _))
-            }
-            bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-            _ <-
-              if (bsub0.projection.length == os.length) Right(())
-              else Left(BadSubquery(
-                s"row-value IN subquery must project ${os.length} columns, " +
-                  s"got ${bsub0.projection.length}"))
-            dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
-            _ <- rowLevelBody(dp._1, dp._2)
-            // HAVING resolves post-aggregation: row-IN correlation keys
-            // must be GROUP BY keys — validated with the other HAVING
-            // subquery kinds by the decorrelation-key walk (BRowInSub
-            // case); the markers then join on the grouped output columns
-            _ <-
-              if (!neg && topLevel && !allowAgg) Right(())
-              else if (os.length > 3) Left(BadSubquery(
-                "row-value IN here supports at most 3 components (the null-aware decomposition grows 2^k)"))
-              else Right(())
-          } yield BoundExpr.BRowInSub(bos, dp._1, dp._2, neg)
-      case Expr.InSubquery(o, sub, neg) =>
-        if (!topLevel)
-          Left(BadSubquery("IN (SELECT …) may not appear under NOT or inside CASE"))
-        else
-          for {
-            // in HAVING scope the probe may be an aggregate (count(*) IN …)
-            bo <- bindOp(o, allowAgg)
-            bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-            _ <-
-              if (bsub0.projection.length == 1) Right(())
-              else Left(BadSubquery(
-                s"subquery must project exactly one column, got ${bsub0.projection.length}"))
-            dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
-            _ <- rowLevelBody(dp._1, dp._2)
-          } yield BoundExpr.BInSub(bo, dp._1, dp._2, neg)
-      case Expr.Exists(sub, neg) =>
-        if (!topLevel)
-          Left(BadSubquery("EXISTS (SELECT …) may not appear under NOT or inside CASE"))
-        else
-          for {
-            bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-            // residual (non-equality) correlation binds in every position;
-            // each position check rejects it outside a top-level WHERE
-            // conjunct, the one place it lowers as a semi/anti join
-            dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys,
-              allowResidual = true)
-          } yield BoundExpr.BExists(dp._1, dp._2, neg, dp._3)
+      case Expr.Not(x) => bindExpr(x, allowAgg, underNot = true).map(BoundExpr.BNot(_))
+      case Expr.InSubquery(os, sub, neg) =>
+        bindProbed(os, sub, allowAgg, threeValued = neg || underNot).map {
+          case (bos, body, pairs) => BoundExpr.BInSub(bos, body, pairs, neg)
+        }
       case Expr.QuantSubquery(op, o, sub, all) =>
+        bindProbed(Seq(o), sub, allowAgg, threeValued = false).map {
+          case (bos, body, pairs) => BoundExpr.BQuantSub(op, bos.head, body, all, pairs)
+        }
+      case Expr.Exists(sub, neg) =>
         for {
-          bo <- bindOp(o, allowAgg)
           bsub0 <- analyzeSelect(sub, cat, outerScope = tables ++ outerScope)
-          _ <-
-            if (bsub0.projection.length == 1) Right(())
-            else Left(BadSubquery(
-              s"subquery must project exactly one column, got ${bsub0.projection.length}"))
-          dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys)
-          _ <- rowLevelBody(dp._1, dp._2)
-        } yield BoundExpr.BQuantSub(op, bo, dp._1, all, dp._2)
+          // residual (non-equality) correlation binds in every position;
+          // each position check rejects it outside a top-level WHERE
+          // conjunct, the one place it lowers as a semi/anti join
+          dp <- decorrelate(bsub0, exprKeys = havingGkExprKeys,
+            allowResidual = true)
+        } yield BoundExpr.BExists(dp._1, dp._2, neg, dp._3)
       case Expr.IsNull(o, neg) =>
-        bindOp(o, allowAgg, allowSub = topLevel && (!allowAgg || havingMarkerOk))
-          .map(BoundExpr.BIsNull(_, neg))
+        bindOp(o, allowAgg).map(BoundExpr.BIsNull(_, neg))
       case Expr.Like(o, pat, neg, ci, esc) =>
-        bindOp(o, allowAgg, allowSub = topLevel && (!allowAgg || havingMarkerOk)).flatMap {
+        bindOp(o, allowAgg).flatMap {
           // LIKE needs a string operand; non-string columns are a type error
           case b @ BoundOperand.BCol(c) => c.attr.sqlType match {
             case SqlType.SqlVarChar(_) => Right(BoundExpr.BLike(b, pat, neg, ci, esc))
@@ -3354,8 +3291,8 @@ object Analyzer {
         }
       case Expr.Cmp(op, l, r) =>
         for {
-          bl <- bindOp(l, allowAgg, allowSub = topLevel && (!allowAgg || havingMarkerOk))
-          br <- bindOp(r, allowAgg, allowSub = topLevel && (!allowAgg || havingMarkerOk))
+          bl <- bindOp(l, allowAgg)
+          br <- bindOp(r, allowAgg)
           _ <- (bl, br) match {
             case (BoundOperand.BCol(a), BoundOperand.BCol(b)) =>
               if (SqlType.comparable(a.attr.sqlType, b.attr.sqlType)) Right(())
@@ -3541,10 +3478,8 @@ object Analyzer {
         }
       case SelectItem.SExpr(op, a) =>
         // aggregates ARE allowed inside computed projections — the item
-        // then makes the query aggregate-scoped (count(*) * 2 AS n2);
-        // CASE-condition subqueries are allowed here and re-checked
-        // post-binding (rejected in aggregate scope)
-        bindOp(op, allowAgg = true, allowSub = true).map(BoundItem.BIExpr(_, a))
+        // then makes the query aggregate-scoped (count(*) * 2 AS n2)
+        bindOp(op, allowAgg = true).map(BoundItem.BIExpr(_, a))
       case w: SelectItem.SWin => bindWin(w)
     }
 
@@ -3595,7 +3530,7 @@ object Analyzer {
               case None =>
                 // a SEMI/ANTI step's own table is visible inside its ON
                 semiVisible = Set(bt.binding)
-                try bindExpr(js.on, allowAgg = false, topLevel = false)
+                try bindExpr(js.on)
                 finally semiVisible = Set.empty
             }
             beE.flatMap { be =>
@@ -3784,11 +3719,8 @@ object Analyzer {
               case BoundGroupKey.GKExpr(op, a) =>
                 op -> BoundCol("", AttributeDesc(a, operandType(op)))
             }.toMap
-            havingMarkerOk = true
-            val r = bindExpr(e0.transform(aliasRule), allowAgg = true).flatMap(h =>
+            bindExpr(e0.transform(aliasRule), allowAgg = true).flatMap(h =>
               if (hasResidualExists(h)) Left(residualPositionError) else Right(Some(h)))
-            havingMarkerOk = false
-            r
           }
       }
       // bare columns inside HAVING must be grouped (aggregate arguments
@@ -3901,13 +3833,11 @@ object Analyzer {
             // residual rejects.
             val outerWins = hiddenWinScope
             hiddenWinScope = wins
-            if (isAgg) {
+            if (isAgg)
               havingGkExprKeys = group.collect {
                 case BoundGroupKey.GKExpr(op, a2) =>
                   op -> BoundCol("", AttributeDesc(a2, operandType(op)))
               }.toMap
-              havingMarkerOk = true
-            }
             try bindExpr(e0, allowAgg = isAgg).flatMap { bp =>
               // QUALIFY's comparisons type-check strictly: a window output
               // against an incomparable value would fail at run time
@@ -3917,15 +3847,9 @@ object Analyzer {
                   Seq(NotComparable(operandType(l), operandType(r)))
                 case _: BoundOperand => Nil
               }
-              rowInMarkerIssue(bp) match {
-                case Some(m) => Left(BadSubquery(m))
-                case None if hasResidualExists(bp) => Left(residualPositionError)
-                case None => incomparable.headOption.toLeft(Some(bp))
-              }
-            } finally {
-              hiddenWinScope = outerWins
-              havingMarkerOk = false
-            }
+              if (hasResidualExists(bp)) Left(residualPositionError)
+              else incomparable.headOption.toLeft(Some(bp))
+            } finally hiddenWinScope = outerWins
           }
       }
       // QUALIFY bare columns in aggregate scope must be GROUP BY keys
@@ -4022,38 +3946,38 @@ object Analyzer {
             "one unnest(...) per SELECT list (one generator per projection)"))
         else Right(())
       }
-      // scalar-subquery OPERAND placement: valid inside SELECT-item
-      // expressions, WHERE and HAVING — but never inside an aggregate
-      // argument (the agg computes per input row, pre-join) and never in
-      // GROUP BY / ORDER BY / QUALIFY / window positions (no marker
-      // frame joins there)
+      // subquery placement, one check for every kind (scalar, IN, ANY /
+      // ALL, EXISTS): valid in SELECT-item expressions, WHERE, HAVING and
+      // QUALIFY — but never inside an aggregate argument (the agg
+      // computes per input row, pre-join) and never in GROUP BY / ORDER
+      // BY / DISTINCT ON keys or window operands (no marker frame joins
+      // there)
       _ <- {
-        def contains(n: BoundNode): Boolean =
-          n.exists { case _: BoundOperand.BSubVal => true }
+        import BoundNode.hasSubquery
         // inside an aggregate's ARGUMENT (any nesting) = bad
         def inAggArg(n: BoundNode): Boolean = n.exists {
           case a @ (_: BoundOperand.BAgg | _: BoundOperand.BOrderedAgg) =>
-            a.children.exists(contains)
+            a.children.exists(hasSubquery)
         }
         // a window operand may hold none; any other item none in an
         // aggregate argument
         val badProj = (proj ++ qwins).exists {
-          case w: BoundItem.BIWin => w.operands.exists(contains)
+          case w: BoundItem.BIWin => w.operands.exists(hasSubquery)
           case it                 => it.operands.exists(inAggArg)
         }
         val badOther =
           pred.exists(inAggArg) || having.exists(inAggArg) ||
             qualifyPred.exists(inAggArg) ||
             group.exists {
-              case BoundGroupKey.GKExpr(op, _) => contains(op)
+              case BoundGroupKey.GKExpr(op, _) => hasSubquery(op)
               case _ => false
             } ||
             order.exists {
-              case (BoundOrderKey.OKOperand(op), _) => contains(op)
+              case (BoundOrderKey.OKOperand(op), _) => hasSubquery(op)
               case _ => false
-            }
+            } || don.exists(hasSubquery)
         if (badProj || badOther)
-          Left(BadSubquery("a scalar-subquery operand is not supported " +
+          Left(BadSubquery("a subquery is not supported " +
             "in this position (aggregate arguments, GROUP/ORDER BY, " +
             "window arguments)"))
         else Right(())

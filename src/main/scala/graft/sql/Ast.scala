@@ -232,23 +232,15 @@ object Ast {
         ci: Boolean = false, escape: Option[Char] = None) extends Expr {
       def mapChildren(op: Operand => Operand, ex: Expr => Expr) = copy(o = op(o))
     }
-    /** <operand> [NOT] IN (SELECT …) — subquery membership, lowered as a
-      * left-semi/left-anti join; equality-correlated inner predicates pull
-      * into the join condition (decorrelation).
+    /** <probe> [NOT] IN (SELECT …) and (p1, …, pk) [NOT] IN (SELECT …) —
+      * subquery membership of a k-component probe (k = 1 for a plain
+      * operand; `= ANY` and `<> ALL` desugar here too). The subquery
+      * projects one column per probe.
       */
-    final case class InSubquery(o: Operand, sub: SelectTree, negated: Boolean) extends Expr {
-      def mapChildren(op: Operand => Operand, ex: Expr => Expr) = copy(o = op(o))
-    }
-    /** (a, b, …) IN (SELECT …) — row-value membership, lowered as one
-      * left-semi join on every component equality. Positive, top-level
-      * WHERE conjuncts only: under NOT (or negated) the per-component
-      * NULL semantics make UNKNOWN observable, and the engine rejects
-      * rather than risk a wrong answer.
-      */
-    final case class RowInSubquery(os: Seq[Operand], sub: SelectTree,
+    final case class InSubquery(probes: Seq[Operand], sub: SelectTree,
         negated: Boolean) extends Expr {
       def mapChildren(op: Operand => Operand, ex: Expr => Expr) =
-        copy(os = os.map(op))
+        copy(probes = probes.map(op))
     }
     /** [NOT] EXISTS (SELECT …) — lowered as a left-semi/left-anti join;
       * equality-correlated inner predicates become the join condition.

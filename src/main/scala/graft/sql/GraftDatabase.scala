@@ -1977,7 +1977,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       enforceNotNull(localRows(input, rows.map(Row.fromSeq)), desc))
     if (desc.bucket.isDefined) appendTo(desc, Bridge.localFrame(spark, schema, written))
     else Bridge.writeParquet(spark, dataPath(desc.name), schema, written)
-    statistics.recordInsert(desc, rows)
+    statistics.recordInsert(desc, Bridge.externalRows(schema, written))
     Bridge.localFrame(spark, schema, written)
   }
 
@@ -2308,6 +2308,21 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
     case _ => r
   }
 
+  /** The pre-image a subquery-bearing DML statement matches against:
+    * `df` with a row id `__lkrid`, checkpointed (the checkpoint pins the
+    * nondeterministic id assignment, and subqueries see the pre-statement
+    * image), and the source its row-id match select lowers over — the
+    * target's row-id'd binding reads the image, every other table its
+    * files.
+    */
+  private def rowIdImage(df: DataFrame)
+      : (DataFrame, Analyzer.BoundTable => DataFrame) = {
+    val withId = df.withColumn("__lkrid",
+      org.apache.spark.sql.functions.monotonically_increasing_id()).localCheckpoint()
+    (withId, bt =>
+      if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc))
+  }
+
   /** DELETE, optionally RETURNING the removed rows' pre-image
     * (materialized via localCheckpoint BEFORE the rewrite overwrites
     * the files).
@@ -2315,8 +2330,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
   private def runDelete(desc: TableDesc, pred: Option[Analyzer.BoundExpr],
       matched: Option[Analyzer.BoundSelect],
       returning: Boolean): QueryResult = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit,
-      monotonically_increasing_id}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val df = readTable(desc)
     val before = statistics.get(desc.name).map(_.rowCount).getOrElse(df.count())
     // kept = the complement of the delete set; for RETURNING the delete
@@ -2328,17 +2342,12 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       case (Some(p), _) =>
         val c = Lowering.lowerExprBare(p)
         (df.filter(!coalesce(c, lit(false))), df.filter(coalesce(c, lit(false))))
-      // subquery WHERE: materialize the table once with a row-id (the
-      // checkpoint pins the nondeterministic id assignment), run the
-      // full WHERE through the SELECT machinery to a matched-row-id
-      // set — subqueries see the PRE-delete image, SQL semantics —
-      // and anti-join back. Row multiplicity is exact (ids are unique)
-      // and the anti join is a distributed hash join on a long key.
+      // subquery WHERE: run the full WHERE through the SELECT
+      // machinery over the row-id'd image to a matched-row-id set and
+      // anti-join back. Row multiplicity is exact (ids are unique) and
+      // the anti join is a distributed hash join on a long key.
       case (None, Some(ms)) =>
-        val withId = df.withColumn("__lkrid", monotonically_increasing_id())
-          .localCheckpoint()
-        val src: Analyzer.BoundTable => DataFrame = bt =>
-          if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
+        val (withId, src) = rowIdImage(df)
         val rids = lowerScoped(ms, src)
           .withColumnRenamed("__lkrid", "__delrid")
         (withId.join(rids, col("__lkrid") === col("__delrid"), "left_anti")
@@ -2356,18 +2365,14 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   private def runUpdate(bu: BoundUpdate, returning: Boolean): QueryResult = {
       val BoundUpdate(desc, sets, pred, matchedSel, subSets) = bu
-      import org.apache.spark.sql.functions.{coalesce, col, lit,
-        monotonically_increasing_id, sum, when}
+      import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
       // a subquery anywhere (WHERE or a SET value) needs the row-id'd
       // pre-update image; both consumers share ONE checkpointed frame
       val needRid = matchedSel.isDefined || subSets.nonEmpty
       val base = readTable(desc)
-      val withId =
-        if (!needRid) base
-        else base.withColumn("__lkrid", monotonically_increasing_id())
-          .localCheckpoint()
-      val src: Analyzer.BoundTable => DataFrame = bt =>
-        if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
+      val (withId, src) =
+        if (needRid) rowIdImage(base)
+        else (base, (bt: Analyzer.BoundTable) => readTable(bt.desc))
       // subquery WHERE: the same row-id rewrite as DELETE — the matched
       // id set left-joins back as a boolean condition column
       val (df0, cond, helperCols0) = matchedSel match {
@@ -2430,14 +2435,9 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
 
   private def executeTail(q: Analyzer.BoundQuery): QueryResult = q match {
     case BoundMerge(desc, matchedSel, insertSel, plans) =>
-      import org.apache.spark.sql.functions.{coalesce, col, lit,
-        monotonically_increasing_id, sum, when}
+      import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
       import Analyzer.MergePlan._
-      val withId = readTable(desc)
-        .withColumn("__lkrid", monotonically_increasing_id())
-        .localCheckpoint()
-      val src: Analyzer.BoundTable => DataFrame = bt =>
-        if (bt.desc.attr("__lkrid").isDefined) withId else readTable(bt.desc)
+      val (withId, src) = rowIdImage(readTable(desc))
       val m = lowerScoped(matchedSel, src)
       // SQL standard: more than one source row matching one target row
       // is an error — one bounded probe over the join's key multiset

@@ -1514,33 +1514,50 @@ object Lowering {
   }
 
   /** The one subquery scope of a SELECT position — WHERE, HAVING, the
-    * SELECT list or QUALIFY. Every IN / NOT IN / row IN / EXISTS /
-    * ANY / ALL / scalar subquery of the position lowers here as joins
-    * onto the enclosing relational frame — never a per-outer-row
-    * re-execution (the reference's own stated long-term unnesting goal,
+    * SELECT list or QUALIFY. Every IN / NOT IN / EXISTS / ANY / ALL /
+    * scalar subquery of the position lowers here as joins onto the
+    * enclosing relational frame — never a per-outer-row re-execution
+    * (the reference's own stated long-term unnesting goal,
     * execution/plan.rs:41-46). Positions differ only in how an outer
     * correlation column resolves on the frame (`outerKey`: qualified
     * before aggregation, the grouped output name after) and in how
     * everything else lowers (`scope`).
     *
-    * A top-level IN, row IN or EXISTS conjunct of `filter` joins semi or
-    * anti (correlated: on its value plus the decorrelated equality
-    * pairs), and a comparison with an uncorrelated unguarded scalar
-    * subquery on either side joins its one-row frame inner. Every other
-    * subquery — under OR, NOT or a CASE condition, or a scalar subquery
-    * used as a value — LEFT-joins a marker frame, and the expression
-    * evaluates columnar over the markers.
+    * A top-level IN or EXISTS conjunct of `filter` joins semi or anti
+    * (correlated: also on the decorrelated equality pairs), and a
+    * comparison with an uncorrelated unguarded scalar subquery on either
+    * side joins its one-row frame inner. Every other subquery — under
+    * OR, NOT or a CASE condition, or a scalar subquery used as a value —
+    * LEFT-joins a marker frame, and the expression evaluates columnar
+    * over the markers.
     *
-    * IN markers are THREE-VALUED exactly where SQL's NULL and FALSE are
-    * distinguishable (a negated IN, or any IN under an enclosing NOT):
-    * alongside the distinct-value match frame, a per-key facts frame
-    * (row count + non-null count — one bounded aggregate, broadcast when
-    * uncorrelated) joins too, and the predicate reads TRUE on match,
-    * FALSE on an empty set, NULL on a NULL probe or a NULL-bearing set,
-    * FALSE otherwise. Positive IN in a plain disjunction skips the facts
-    * join (TRUE vs non-TRUE is all a filter consumes). EXISTS is
-    * two-valued by definition; scalar-comparison markers are exact via
-    * Spark's NULL-propagating comparisons over the left-joined scalar.
+    * IN has one rule for a probe of k components (k = 1 for a plain
+    * operand; the analyzer caps a three-valued IN at k ≤ 3). Under SQL
+    * 3VL, `(p1, …, pk) IN S` is TRUE when a row of S equals the probe on
+    * every component, NULL when some row is only compatible (every
+    * component equal or NULL on either side), FALSE otherwise — an
+    * empty S included.
+    *  - Positive conjunct: one semi join on the k component equalities
+    *    and the pairs.
+    *  - Negated correlated conjunct: one anti join on the pairs, with
+    *    the compatibility `AND_i (p_i = v_i OR p_i IS NULL OR v_i IS
+    *    NULL)` as its extra condition.
+    *  - Negated uncorrelated conjunct: a broadcast facts row (for each
+    *    NULL mask, whether S has a row NULL there) and 2^k - 1 hash anti
+    *    joins, one per proper subset of components that meet through a
+    *    NULL.
+    *  - Marker: the distinct exact-match frame. Where NULL and FALSE are
+    *    distinguishable (a negated IN, or any IN under an enclosing NOT)
+    *    the 2^k - 1 compatibility frames join too, one per nonempty set
+    *    of components that meet through a NULL, grouped by the other
+    *    components and the pairs (broadcast when nothing is left to
+    *    group by). The all-components frame groups by the pairs alone,
+    *    so it also tells an empty (per-key) set. A positive IN in a
+    *    plain disjunction or CASE condition skips them: TRUE vs non-TRUE
+    *    is all those consume.
+    * EXISTS is two-valued by definition; scalar-comparison markers are
+    * exact via Spark's NULL-propagating comparisons over the left-joined
+    * scalar.
     *
     * Registration is eager (HAVING probes must register their hidden
     * aggregate columns before the agg assembles); `attach` applies the
@@ -1558,6 +1575,11 @@ object Lowering {
     private var markOf = new java.util.IdentityHashMap[BoundNode, Column]()
     private var k = 0
     private def fresh(): String = { val m = s"__mx${tag}_$k"; k += 1; m }
+
+    /** Whether bit `i` of `mask` is set: a component of an IN probe's
+      * NULL mask.
+      */
+    private def in(mask: Int, i: Int): Boolean = (mask & (1 << i)) != 0
 
     /** The caller's frame with every recorded join and filter applied. */
     def attach(df: DataFrame): DataFrame = steps.foldLeft(df)((d, f) => f(d))
@@ -1628,7 +1650,7 @@ object Lowering {
       val (subs, plain) = conjs.partition(BoundNode.hasSubquery)
       plain.map(lower).reduceOption(_ && _).foreach(p => steps += (_.filter(p)))
       val (top, mixed) = subs.partition {
-        case _: BoundExpr.BInSub | _: BoundExpr.BRowInSub | _: BoundExpr.BExists |
+        case _: BoundExpr.BInSub | _: BoundExpr.BExists |
              BoundExpr.BCmp(_, OneRow(_), _) | BoundExpr.BCmp(_, _, OneRow(_)) => true
         case _ => false
       }
@@ -1636,106 +1658,46 @@ object Lowering {
     }
 
     private def conjunct(c: BoundExpr): Unit = c match {
-      case BoundExpr.BInSub(o, sub, Seq(), neg) =>
-        val probe = value(o)
-        val subDf = lowerSelect(spark, sub, source)
-        val v = subDf(subDf.columns.head)
-        if (!neg) steps += (_.join(subDf, probe === v, "left_semi"))
-        else {
-          // Null-aware NOT IN (SQL 3VL): the whole predicate is TRUE only
-          // when the subquery is empty, or the probe is non-NULL, the
-          // subquery has no NULLs, and no value matches. The NULL/empty
-          // facts are one broadcast 1-row aggregate (count vs non-null
-          // count); the no-match part stays a plain hash anti join — no
-          // nested-loop NAAJ plan at any scale.
-          val (n, nn) = { val m = fresh(); (s"${m}_n", s"${m}_nn") }
-          val facts = broadcast(subDf.agg(count(lit(1)).as(n), count(v).as(nn)))
-          steps += (_.join(facts, lit(true), "inner")
-            .filter(col(n) === 0 || (probe.isNotNull && col(n) === col(nn)))
-            .drop(n, nn)
-            .join(subDf, probe === v, "left_anti"))
-        }
-      case BoundExpr.BInSub(o, sub, pairs, neg) =>
-        // correlated: the subquery's core + its IN value + the inner side
-        // of each decorrelated pair, joined semi/anti on all of them.
-        // Null-aware for NOT IN: a per-key set member that is NULL (or a
-        // NULL probe against a non-empty key set) poisons the predicate
-        // to non-TRUE, so the anti join must also match on those. The
-        // pair equalities stay equi keys — Spark hash-partitions on them
-        // and evaluates the disjunction as the join's extra condition.
-        val probe = value(o)
-        val m = fresh()
-        val f = rows(sub, pairs, m)
-        val v = f(s"${m}_v0")
-        val valCond =
-          if (neg) probe === v || probe.isNull || v.isNull else probe === v
-        steps += (_.join(f, (valCond +: onPairs(pairs, f, s"${m}_k")).reduce(_ && _),
-          if (neg) "left_anti" else "left_semi"))
-      case BoundExpr.BRowInSub(os, sub, pairs, neg) =>
+      case BoundExpr.BInSub(os, sub, pairs, neg) =>
         val probes = os.map(value)
         val m = fresh()
-        val subDf = rows(sub, pairs, m)
-        val keys = onPairs(pairs, subDf, s"${m}_k")
-        def v(i: Int): Column = subDf(s"${m}_v$i")
+        val f = rows(sub, pairs, m)
+        val vs = os.indices.map(i => f(s"${m}_v$i"))
+        val keys = onPairs(pairs, f, s"${m}_k")
+        def join(kind: String, comps: Seq[Column]): DataFrame => DataFrame =
+          _.join(f, (comps ++ keys).reduce(_ && _), kind)
         if (!neg)
-          // row-value membership: ONE left-semi join on every component
-          // equality (+ the decorrelated pairs). NULL components never
-          // match — SQL's UNKNOWN filtering false in a positive conjunct.
-          steps += (_.join(subDf, (os.indices.map(i => probes(i) === v(i)) ++
-            keys).reduce(_ && _), "left_semi"))
+          steps += join("left_semi", probes.zip(vs).map { case (p, v) => p === v })
+        else if (pairs.nonEmpty)
+          steps += join("left_anti", probes.zip(vs).map { case (p, v) =>
+            p === v || p.isNull || v.isNull })
         else {
-          // Null-aware row-value NOT IN, exact SQL 3VL: a row is KEPT iff
-          // NO subquery row is "compatible" with the probe (compatible =
-          // every component equal or null on either side — the rows whose
-          // comparison is TRUE or UNKNOWN). Decomposition that never
-          // needs a nested-loop join: for every PROPER subset U of
-          // components, one HASH anti join keyed on the components outside
-          // U (plus the decorrelated pair equalities), with the U
-          // components' either-side-null test riding as the join's
-          // residual condition; the U = all-components case has no
-          // component key left and reduces to per-null-mask emptiness
-          // FACTS — one bounded aggregate, broadcast when uncorrelated,
-          // left-joined per pair key when correlated (an absent key =
-          // empty per-key set = kept). 2^k - 1 key-bounded anti joins +
-          // one facts frame; the analyzer caps k at 3, so the fan-out is
-          // at most 7 joins.
+          // for every PROPER subset U of components, one hash anti join
+          // keyed on the components outside U, the U components'
+          // either-side-NULL test its extra condition; U = all
+          // components has no key left and reads the facts row (for
+          // mask b, whether S has a row NULL on every component of b;
+          // b = 0: S is non-empty)
           val k = os.length
           val all = (1 << k) - 1
-          // facts: for mask b, does S contain a row NULL on every
-          // component in b? (b = 0 reads "is the [per-key] set non-empty")
-          val factsAggs = (0 to all).map { b =>
-            val cond = (0 until k).filter(i => (b & (1 << i)) != 0)
-              .map(i => v(i).isNull)
+          val facts = (0 to all).map { b =>
+            val allNull = (0 until k).filter(in(b, _)).map(vs(_).isNull)
               .foldLeft(lit(true))(_ && _)
-            coalesce(max(when(cond, 1).otherwise(0)), lit(0)).as(s"${m}_f$b")
+            coalesce(max(when(allNull, 1).otherwise(0)), lit(0)).as(s"${m}_f$b")
           }
-          val withFacts: DataFrame => DataFrame =
-            if (pairs.isEmpty) _.join(broadcast(subDf.agg(factsAggs.head,
-              factsAggs.tail: _*)), lit(true), "inner")
-            else {
-              val f = subDf
-                .groupBy(pairs.indices.map(j => col(s"${m}_k$j").as(s"${m}_fk$j")): _*)
-                .agg(factsAggs.head, factsAggs.tail: _*)
-              _.join(f, onPairs(pairs, f, s"${m}_fk").reduce(_ && _), "left_outer")
-                .drop(pairs.indices.map(j => s"${m}_fk$j"): _*)
-            }
-          // U = all components: a probe with null-mask b is killed iff
-          // its [per-key] set has a row null on every component the
-          // probe has NON-null (flags coalesce to 0 where the left join
-          // found no key — an empty set keeps the row)
-          val fullKill = (0 to all).map { b =>
-            val probeMask = (0 until k).map { i =>
-              if ((b & (1 << i)) != 0) probes(i).isNull else probes(i).isNotNull
-            }.reduce(_ && _)
-            probeMask && coalesce(col(s"${m}_f${all & ~b}"), lit(0)) === 1
+          // a probe NULL on exactly the components of b is killed iff the
+          // set has a row NULL on every component the probe has non-NULL
+          val killed = (0 to all).map { b =>
+            (0 until k).map(i => if (in(b, i)) probes(i).isNull else probes(i).isNotNull)
+              .reduce(_ && _) && col(s"${m}_f${all & ~b}") === 1
           }.reduce(_ || _)
-          steps += (df => (0 until all).foldLeft(withFacts(df)) { (cur, u) =>
-            val conds = (0 until k).map { i =>
-              if ((u & (1 << i)) != 0) probes(i).isNull || v(i).isNull
-              else probes(i) === v(i)
-            } ++ keys
-            cur.join(subDf, conds.reduce(_ && _), "left_anti")
-          }.filter(!fullKill).drop((0 to all).map(b => s"${m}_f$b"): _*))
+          steps += (df => (0 until all).foldLeft(
+            df.join(broadcast(f.agg(facts.head, facts.tail: _*)), lit(true), "inner")
+              .filter(!killed).drop((0 to all).map(b => s"${m}_f$b"): _*)) { (cur, u) =>
+            cur.join(f, (0 until k).map(i =>
+              if (in(u, i)) probes(i).isNull || vs(i).isNull
+              else probes(i) === vs(i)).reduce(_ && _), "left_anti")
+          })
         }
       case BoundExpr.BExists(sub, pairs, neg, residual) =>
         val joinType = if (neg) "left_anti" else "left_semi"
@@ -1796,16 +1758,6 @@ object Lowering {
       markOf = outer
     }
 
-    /** TRUE on match / FALSE on empty set / NULL on NULL probe or
-      * NULL-bearing set / FALSE otherwise — `x IN (set)` under full 3VL.
-      */
-    private def threeValuedIn(m: String, probe: Column): Column =
-      when(coalesce(col(m), lit(false)), lit(true))
-        .when(coalesce(col(s"${m}_n"), lit(0L)) === lit(0L), lit(false))
-        .when(probe.isNull || col(s"${m}_nn") < col(s"${m}_n"),
-          lit(null).cast("boolean"))
-        .otherwise(lit(false))
-
     /** A scalar subquery's value: the inequality-correlated running
       * aggregate, the per-key aggregate left-joined on the decorrelated
       * equalities, a guarded literal (one bounded job that also checks
@@ -1861,120 +1813,56 @@ object Lowering {
           }
           val p = coalesce(col(m), lit(false))
           markOf.put(s, if (neg) !p else p)
-        case s @ BoundExpr.BInSub(o, sub, pairs, neg) =>
-          val probe = value(o)
+        case s @ BoundExpr.BInSub(os, sub, pairs, neg) =>
+          val probes = os.map(value)
+          val k = os.length
           val m = fresh()
-          val body = if (pairs.isEmpty) lowerSelect(spark, sub, source) else core(sub)
-          val f = (if (pairs.isEmpty) body.toDF(s"${m}_v0")
-            else keyed(body, pairs, s"${m}_k",
-              Seq(rowValueCol(sub.projection.head, qualified).as(s"${m}_v0"))))
-            .distinct().withColumn(m, lit(true))
-          leftJoin(f, ((probe === f(s"${m}_v0")) +: onPairs(pairs, f, s"${m}_k"))
-            .reduce(_ && _), Seq(m, s"${m}_v0") ++ pairs.indices.map(j => s"${m}_k$j"))
-          // NULL-vs-FALSE is observable for NOT IN (the negation flips
-          // FALSE to TRUE but keeps NULL) and under any enclosing NOT
+          val body = rows(sub, pairs, m)
+          // TRUE: an exact match among the distinct set rows (per key)
+          // (renamed after the DISTINCT, so a plan that reads no marker
+          // still sees the frame unique on its join keys and drops it)
+          val exact = body.distinct().toDF(os.indices.map(i => s"${m}_e$i") ++
+            pairs.indices.map(j => s"${m}_ep$j"): _*).withColumn(m, lit(true))
+          leftJoin(exact, (os.indices.map(i => probes(i) === exact(s"${m}_e$i")) ++
+            onPairs(pairs, exact, s"${m}_ep")).reduce(_ && _), exact.columns.toSeq)
           val p =
             if (!neg && !obs) coalesce(col(m), lit(false))
             else {
-              facts(body, sub, pairs, m, Seq(s"${m}_n", s"${m}_nn"),
-                v => Seq(count(lit(1)), count(v)))
-              threeValuedIn(m, probe)
+              // compatibility frame U: grouping (not distinct rows) keeps
+              // the left join 1:1; per subset S of U, whether the group
+              // has a row NULL on every component of S — the probe's own
+              // NULL pattern picks the flag
+              def bits(is: Seq[Int]) = is.map(1 << _).sum
+              val compat = (1 until (1 << k)).map { mask =>
+                val mm = s"${m}_u$mask"
+                val (inU, outU) = (0 until k).partition(in(mask, _))
+                val subsets = (0 until (1 << inU.length)).map(b =>
+                  inU.zipWithIndex.collect { case (c, j) if in(b, j) => c })
+                val flags = subsets.map { s2 =>
+                  max(s2.map(i => body(s"${m}_v$i").isNull).foldLeft(lit(true))(_ && _))
+                    .as(s"${mm}_s${bits(s2)}")
+                }
+                val gcols = outU.map(i => body(s"${m}_v$i")) ++
+                  pairs.indices.map(j => body(s"${m}_k$j"))
+                val g =
+                  if (gcols.isEmpty) broadcast(body.agg(flags.head, flags.tail: _*))
+                  else body.groupBy(gcols: _*).agg(flags.head, flags.tail: _*)
+                    .toDF(outU.map(i => s"${mm}_k$i") ++
+                      pairs.indices.map(j => s"${mm}_p$j") ++ flags.indices.map(f =>
+                        s"${mm}_s${bits(subsets(f))}"): _*)
+                leftJoin(g, (outU.map(i => probes(i) === g(s"${mm}_k$i")) ++
+                  onPairs(pairs, g, s"${mm}_p")).foldLeft(lit(true))(_ && _),
+                  g.columns.toSeq)
+                subsets.foldLeft(lit(false)) { (acc, s2) =>
+                  when(inU.map(i => if (s2.contains(i)) probes(i).isNotNull
+                    else probes(i).isNull).reduce(_ && _),
+                    coalesce(col(s"${mm}_s${bits(s2)}"), lit(false))).otherwise(acc)
+                }
+              }.reduce(_ || _)
+              when(coalesce(col(m), lit(false)), lit(true))
+                .when(compat, lit(null).cast("boolean"))
+                .otherwise(lit(false))
             }
-          markOf.put(s, if (neg) !p else p)
-        case s @ BoundExpr.BRowInSub(os, sub, pairs, neg) =>
-          // (a, b, …) IN (SELECT …) as a marker — exact SQL 3VL with NO
-          // nested-loop join. TRUE = an exact-match marker (one equi join
-          // on all components of the DISTINCT set). FALSE vs NULL =
-          // per-null-mask compatibility markers: for every nonempty mask U
-          // of components, one frame GROUPED BY the outside-U components
-          // (equi keys) carrying ∃-flags per null-pattern subset of U —
-          // grouping (not distinct rows) keeps the left join 1:1, so
-          // markers never duplicate outer rows. The probe's own null
-          // pattern selects the flag columnar-ly. k ≤ 3
-          // (analyzer-enforced), so ≤ 7 keyed joins + 1 facts frame.
-          // CORRELATED probes ride the same frames with the decorrelated
-          // inner keys as EXTRA grouping/join columns — the per-outer-key
-          // set semantics fall out of the grouping, still 1:1 left joins.
-          val probes = os.map(value)
-          val k = os.length
-          val kp = pairs.length
-          val m = fresh()
-          // components <m>_v*, then the correlation keys <m>_k*
-          val vns = (0 until k).map(i => s"${m}_v$i")
-          val pns = (0 until kp).map(j => s"${m}_k$j")
-          val core = rows(sub, pairs, m)
-          // exact-match marker: distinct set rows, all-components (+ keys)
-          // equi join
-          val exact = core.distinct()
-            .toDF((0 until k).map(i => s"${m}_e$i") ++
-              (0 until kp).map(j => s"${m}_ep$j"): _*)
-            .withColumn(m, lit(true))
-          leftJoin(exact,
-            ((0 until k).map(i => probes(i) === exact(s"${m}_e$i")) ++
-              onPairs(pairs, exact, s"${m}_ep")).reduce(_ && _),
-            (0 until k).map(i => s"${m}_e$i") ++
-              (0 until kp).map(j => s"${m}_ep$j") :+ m)
-          // set-emptiness facts: one broadcast row, or per-key counts (an
-          // absent key reads count 0 through the left join + coalesce)
-          val facts =
-            if (pairs.isEmpty) broadcast(core.agg(count(lit(1)).as(s"${m}_n")))
-            else core.groupBy(pns.map(col): _*).agg(count(lit(1)).as(s"${m}_n"))
-              .toDF((0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n": _*)
-          leftJoin(facts,
-            (lit(true) +: onPairs(pairs, facts, s"${m}_fp")).reduce(_ && _),
-            (0 until kp).map(j => s"${m}_fp$j") :+ s"${m}_n")
-          // compatibility markers: mask U = the components where equality
-          // holds via a NULL on either side; outside U compares strictly
-          val maskCols = for (mask <- 1 until (1 << k)) yield {
-            val mm = s"${m}_u$mask"
-            val inU  = (0 until k).filter(i => (mask & (1 << i)) != 0)
-            val outU = (0 until k).filterNot(i => (mask & (1 << i)) != 0)
-            // ∃-flags per subset S of U: a set row in this key group that
-            // is NULL on every component of S
-            val subsets = (0 until (1 << inU.length)).map(b =>
-              inU.zipWithIndex.collect { case (c, j) if (b & (1 << j)) != 0 => c })
-            val flags = subsets.map { s2 =>
-              val zAll =
-                if (s2.isEmpty) lit(true)
-                else s2.map(i => col(vns(i)).isNull).reduce(_ && _)
-              max(when(zAll, lit(true)).otherwise(lit(false)))
-                .as(s"${mm}_s${s2.map(i => 1 << i).sum}")
-            }
-            val gcols = outU.map(i => col(vns(i))) ++ pns.map(col)
-            val grouped =
-              if (gcols.isEmpty) core.agg(flags.head, flags.tail: _*)
-              else core.groupBy(gcols: _*)
-                .agg(flags.head, flags.tail: _*)
-                .toDF(outU.map(i => s"${mm}_k$i") ++
-                  (0 until kp).map(j => s"${mm}_p$j") ++
-                  subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}"): _*)
-            val keyed =
-              if (gcols.isEmpty) broadcast(grouped)
-              else grouped
-            val cond =
-              if (gcols.isEmpty) lit(true)
-              else (outU.map(i => probes(i) === keyed(s"${mm}_k$i")) ++
-                onPairs(pairs, keyed, s"${mm}_p")).reduce(_ && _)
-            leftJoin(keyed, cond, outU.map(i => s"${mm}_k$i") ++
-              (0 until kp).map(j => s"${mm}_p$j") ++
-              subsets.map(s2 => s"${mm}_s${s2.map(i => 1 << i).sum}"))
-            // the probe's null pattern picks which ∃-flag applies: S = the
-            // U-components where the probe is NON-null (those need the set
-            // row's NULL to be compatible)
-            subsets.foldLeft(lit(false)) { (acc, s2) =>
-              val sBits = s2.map(i => 1 << i).sum
-              val patternMatches = inU.map(i =>
-                if (s2.contains(i)) probes(i).isNotNull else probes(i).isNull)
-                .reduce(_ && _)
-              when(patternMatches,
-                coalesce(col(s"${mm}_s$sBits"), lit(false))).otherwise(acc)
-            }
-          }
-          val compat = maskCols.reduce(_ || _)
-          val p = when(coalesce(col(m), lit(false)), lit(true))
-            .when(coalesce(col(s"${m}_n"), lit(0L)) === lit(0L), lit(false))
-            .when(compat, lit(null).cast("boolean"))
-            .otherwise(lit(false))
           markOf.put(s, if (neg) !p else p)
         case s @ BoundExpr.BQuantSub(op, o, sub, all, pairs) =>
           val probe = value(o)

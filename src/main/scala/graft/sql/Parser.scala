@@ -770,7 +770,6 @@ object Parser {
       def inNode(n: Node): Boolean = (n match {
         case Operand.ScalarSub(sub)           => readsTable(sub, name)
         case Expr.InSubquery(_, sub, _)       => readsTable(sub, name)
-        case Expr.RowInSubquery(_, sub, _)    => readsTable(sub, name)
         case Expr.Exists(sub, _)              => readsTable(sub, name)
         case Expr.QuantSubquery(_, _, sub, _) => readsTable(sub, name)
         case _                                => false
@@ -880,9 +879,7 @@ object Parser {
       case other                  => other.mapChildren(operand, expr)
     }
     def expr(e: Expr): Expr = (e match {
-      case Expr.InSubquery(o, sub, n)   => Expr.InSubquery(o, substCte(sub, ctes), n)
-      case Expr.RowInSubquery(os, sub, n) =>
-        Expr.RowInSubquery(os, substCte(sub, ctes), n)
+      case Expr.InSubquery(os, sub, n)  => Expr.InSubquery(os, substCte(sub, ctes), n)
       case Expr.Exists(sub, n)          => Expr.Exists(substCte(sub, ctes), n)
       case Expr.QuantSubquery(op, l, sub, all) =>
         Expr.QuantSubquery(op, l, substCte(sub, ctes), all)
@@ -2458,7 +2455,7 @@ object Parser {
                   _ <- p.eatSym("(")
                   sub <- parseSelect(p)
                   _ <- p.eatSym(")")
-                } yield Expr.RowInSubquery(os, sub, neg): Expr
+                } yield Expr.InSubquery(os, sub, neg): Expr
               }
             }
           }
@@ -2587,7 +2584,7 @@ object Parser {
               _ <- p.eatSym("(")
               sub <- parseSelect(p)
               _ <- p.eatSym(")")
-            } yield Expr.InSubquery(l, sub, neg)
+            } yield Expr.InSubquery(Seq(l), sub, neg)
           else litList().map { vs =>
             val eqs = vs.map(v =>
               collatedCmp(CmpOp.Eq, l, Operand.Literal(v)): Expr)
@@ -2710,8 +2707,8 @@ object Parser {
                 sub <- parseSelect(p)
                 _ <- p.eatSym(")")
               } yield (op, isAll) match {
-                case (CmpOp.Eq, false) => Expr.InSubquery(l, sub, negated = false)
-                case (CmpOp.Neq, true) => Expr.InSubquery(l, sub, negated = true)
+                case (CmpOp.Eq, false) => Expr.InSubquery(Seq(l), sub, negated = false)
+                case (CmpOp.Neq, true) => Expr.InSubquery(Seq(l), sub, negated = true)
                 case _                 => Expr.QuantSubquery(op, l, sub, isAll)
               }
             case None => parseOperand(p, allowAgg).map(r => collatedCmp(op, l, r))

@@ -164,8 +164,9 @@ final class StatsManager(spark: SparkSession, warehouse: String) {
     save()
   }
 
-  /** Fold an inserted batch into rowcount + sketches + sample. Batch sizes
-    * are REPL-scale here; the per-value add loop is the same cost the
+  /** Fold an inserted batch, as written (generated columns
+    * materialized), into rowcount + sketches + sample. Batch sizes are
+    * REPL-scale here; the per-value add loop is the same cost the
     * reference pays on its write path.
     */
   def recordInsert(desc: TableDesc, rows: Seq[Seq[Any]]): Unit = {

@@ -64,6 +64,14 @@ object Bridge {
       project(toCatalyst(r).asInstanceOf[InternalRow]).copy()).toIndexedSeq
   }
 
+  /** Driver-held rows as external Scala / Java values (java.sql.Date,
+    * java.math.BigDecimal, …): the inverse of `unsafeRows`' conversion.
+    */
+  def externalRows(schema: StructType, rows: Seq[InternalRow]): Seq[Seq[Any]] = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.map(r => toScala(r).asInstanceOf[org.apache.spark.sql.Row].toSeq)
+  }
+
   /** A DataFrame over driver-held rows (a LocalRelation: no Spark job). */
   def localFrame(spark: org.apache.spark.sql.SparkSession, schema: StructType,
       rows: Seq[InternalRow]): org.apache.spark.sql.DataFrame =

@@ -35,6 +35,21 @@ class StatsManagerSpec extends AnyFunSuite {
     assert(tagNdv >= 8 && tagNdv <= 13, s"tag ndv=$tagNdv")
   }
 
+  test("an INSERT folds a generated column as written: its sketch and sample equal ANALYZE's") {
+    val db = freshDb()
+    for (sql <- Seq("CREATE TABLE g (a INT, b INT GENERATED ALWAYS AS (a * 2))",
+        "INSERT INTO g VALUES (1), (2), (3), (NULL), (2)"))
+      db.query(sql).fold(e => fail(s"$sql -> ${e.msg}"), _ => ())
+    val desc = TableDesc("g", Seq(AttributeDesc("a", SqlType.SqlInt),
+      AttributeDesc("b", SqlType.SqlInt)))
+    def image = (db.statistics.get("g").get.sketches("b").toSeq,
+      db.statistics.sample(desc).collect().map(_.toString).toSeq.sorted)
+    val inserted = image
+    assert(inserted._2 == Seq("[1,2]", "[2,4]", "[2,4]", "[3,6]", "[null,null]"))
+    db.query("ANALYZE g").fold(e => fail(e.msg), _ => ())
+    assert(image == inserted)
+  }
+
   test("the reference's cardinality fixture: 10 rows, id < 5 estimates 4") {
     val db = freshDb()
     db.query("CREATE TABLE ten (id INT)")

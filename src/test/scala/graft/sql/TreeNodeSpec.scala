@@ -54,8 +54,7 @@ class TreeNodeSpec extends AnyFunSuite {
     Expr.Not(p("a")),
     Expr.IsNull(c("a"), negated = false),
     Expr.Like(c("a"), "x%", negated = false),
-    Expr.InSubquery(c("a"), sel, negated = false),
-    Expr.RowInSubquery(Seq(c("a"), c("b")), sel, negated = false),
+    Expr.InSubquery(Seq(c("a"), c("b")), sel, negated = false),
     Expr.Exists(sel, negated = false),
     Expr.QuantSubquery(CmpOp.Gt, c("a"), sel, all = true))
 
@@ -91,10 +90,9 @@ class TreeNodeSpec extends AnyFunSuite {
     BoundExpr.BNot(bp("a")),
     BoundExpr.BIsNull(b("a"), negated = true),
     BoundExpr.BLike(b("a"), "x%", negated = false),
-    BoundExpr.BInSub(b("a"), bsel, pairs, negated = false),
+    BoundExpr.BInSub(Seq(b("a"), b("b")), bsel, pairs, negated = false),
     BoundExpr.BExists(bsel, pairs, negated = false, residual = Seq(bp("r"))),
-    BoundExpr.BQuantSub(CmpOp.Gt, b("a"), bsel, all = true, pairs),
-    BoundExpr.BRowInSub(Seq(b("a"), b("b")), bsel, pairs, negated = false))
+    BoundExpr.BQuantSub(CmpOp.Gt, b("a"), bsel, all = true, pairs))
 
   private val items: Seq[BoundItem] = Seq(
     BoundItem.BICol(bc("a"), Some("x")),

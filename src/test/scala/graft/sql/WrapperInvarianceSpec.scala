@@ -346,6 +346,54 @@ class WrapperInvarianceSpec extends AnyFunSuite {
     assert(outcomes.distinct.length > 5)
   }
 
+  test("a subquery in an aggregate argument or an ORDER BY key rejects with one message") {
+    val message = "a subquery is not supported in this position " +
+      "(aggregate arguments, GROUP/ORDER BY, window arguments)"
+    for (p <- subqueryForms; sql <- Seq(
+        s"SELECT sum(CASE WHEN $p THEN 1 ELSE 0 END) AS c FROM t",
+        s"SELECT k FROM t ORDER BY CASE WHEN $p THEN 1 ELSE 0 END, k")) {
+      val r = Try(db.query(sql)).getOrElse(fail(s"$sql threw"))
+      assert(r.swap.exists(_.msg.contains(message)), sql)
+    }
+  }
+
+  // a scalar IN twinned with its row-value form: a constant second
+  // component that always matches
+  private val scalarIn = """(\w+) (NOT )?IN \(SELECT (.*?) FROM (.*)\)""".r
+  private val rowTwins = subqueryForms.collect {
+    case p @ scalarIn(probe, not, v, rest) =>
+      p -> s"($probe, 1) ${Option(not).getOrElse("")}IN (SELECT $v, 1 AS one FROM $rest)"
+  }
+
+  test("a row-value IN gives its scalar twin's rows in every position") {
+    assert(rowTwins.length == 5)
+    val positions = Seq(
+      "SELECT k, g, v FROM t WHERE @",
+      "SELECT k, g, v FROM t WHERE (@) OR (k IS NULL AND k IS NOT NULL)",
+      "SELECT k, g, v FROM t WHERE NOT (@)",
+      "SELECT k, g, v, CASE WHEN @ THEN 1 ELSE 0 END AS c FROM t",
+      "SELECT k, g, v FROM t GROUP BY k, g, v HAVING @",
+      "SELECT k, g, v, row_number() OVER (ORDER BY k, g, v) AS rn FROM t " +
+        "QUALIFY rn > 0 AND (@)")
+    for ((scalar, row) <- rowTwins; pos <- positions) {
+      val expected = outcome(pos.replace("@", scalar))
+      assert(expected.isRight, pos.replace("@", scalar))
+      assert(outcome(pos.replace("@", row)) == expected, pos.replace("@", row))
+    }
+    // nested under a correlated EXISTS, the row form flattens like the
+    // scalar one
+    val nested = database(
+      "CREATE TABLE t (a INT, b INT)",
+      "INSERT INTO t VALUES (1, 1), (2, NULL), (NULL, 3), (4, 4)",
+      "CREATE TABLE s (x INT, y INT)",
+      "INSERT INTO s VALUES (1, 1), (NULL, 3), (5, 5)")
+    def exists(in: String) = outcome("SELECT 1 AS one FROM t WHERE EXISTS " +
+      s"(SELECT 1 AS z FROM s WHERE $in) AND a = 1", nested)
+    assert(exists("s.x IN (SELECT t2.a FROM t t2 WHERE t2.a = t.a)") == Right(Seq("[1]")))
+    assert(exists("(s.x, s.y) IN (SELECT t2.a, t2.b FROM t t2 WHERE t2.a = t.a)") ==
+      Right(Seq("[1]")))
+  }
+
   // `@` is the group's count and `#` its key: HAVING over the grouped
   // rows, and WHERE over the same grouping as a derived table
   private val groupedForms = Seq(
