@@ -1824,6 +1824,10 @@ object Analyzer {
     ).flatMap(_.projection.head.rowValue match {
       case Some(b) if BoundNode.containsAgg(b) =>
         Left(BadAggregate("aggregates are not valid in UPDATE SET"))
+      // UPDATE SET binds a subquery-bearing value on the row-id path, so
+      // only a generated column's expression can hold one here
+      case Some(b) if BoundNode.hasSubquery(b) =>
+        Left(BadSubquery("subqueries are not supported in generated columns"))
       case Some(b) => Right(b)
       case None    => Left(BadFunction("unexpected SET value"))
     })

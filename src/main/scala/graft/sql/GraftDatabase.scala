@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.Bridge
 
 import Analyzer._
@@ -1569,6 +1570,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         refreshBucketEntry(desc)
         statistics.dropTable(desc.name)
         tables.remove(desc.name)
+        scans.remove(desc.name)
         val from = Paths.get(dataPath(desc.name))
         val dest = Paths.get(s"$warehouse/data/$to")
         if (Files.exists(from)) Files.move(from, dest)
@@ -1992,11 +1994,57 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
         // catalog-backed read so the scan carries the bucket spec
         ensureCatalogTable(desc)
         spark.table(catName(desc.name))
+      case _ if external.contains(desc.name) => readParquet(desc)
       case _ =>
-        // Explicit schema: works even when the table has zero parquet files
-        // yet, and skips footer merging on every query.
-        spark.read.schema(desc.sparkSchema).parquet(dataPath(desc.name))
+        // a hit is the last read's relation with fresh attribute ids, so
+        // a self-join's two sides stay distinct
+        val key = scanKey(desc)
+        Option(scans.get(desc.name)) match {
+          case Some((k, rel)) if key.contains(k) => Bridge.frameOver(spark, rel)
+          case _ =>
+            val df = readParquet(desc)
+            for (k <- key; rel <- Bridge.fileRelation(df) if scanKey(desc).contains(k))
+              scans.put(desc.name, (k, rel))
+            df
+        }
     }
+
+  // Explicit schema: works even when the table has zero parquet files
+  // yet, and skips footer merging on every query.
+  private def readParquet(desc: TableDesc): DataFrame =
+    spark.read.schema(desc.sparkSchema).parquet(dataPath(desc.name))
+
+  /** The resolved scan of each warehouse parquet table, from its last
+    * read: resolving `spark.read` again (data source lookup, Hadoop
+    * configuration copies, file listing) costs more than planning a
+    * point query. The entry holds while its key does, the table's
+    * schema and its visible data files (name, length, modification
+    * time), so every writer invalidates it without a hook: INSERT, DML,
+    * TRUNCATE, ALTER, another database on the same warehouse, a file
+    * dropped in from outside. One entry per table, removed with it.
+    */
+  private val scans = new java.util.concurrent.ConcurrentHashMap[
+    String, (ScanKey, LogicalRelation)]
+  private type ScanKey = (org.apache.spark.sql.types.StructType, Seq[(String, Long, Long)])
+
+  /** `desc`'s scan key, listed as Spark's file index lists the
+    * directory (names starting with `.` or `_` are hidden); None when
+    * the directory cannot be listed.
+    */
+  private def scanKey(desc: TableDesc): Option[ScanKey] =
+    try {
+      val listing = Files.list(Paths.get(dataPath(desc.name)))
+      try Some((desc.sparkSchema, listing.iterator.asScala.flatMap { p =>
+        val n = p.getFileName.toString
+        if (n.startsWith(".") || n.startsWith("_")) None
+        else {
+          val a = Files.readAttributes(p,
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          Some((n, a.size, a.lastModifiedTime.toMillis))
+        }
+      }.toSeq.sorted))
+      finally listing.close()
+    } catch { case _: java.io.IOException => None }
 
   /** The one table-source lambda per top-level query — the lowering's
     * CTE-reuse memo recognizes it as the root scope (fixpoint steps
@@ -2287,6 +2335,7 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       tables.remove(name)
       tempTables -= name
       statistics.dropTable(name)
+      scans.remove(name)
       FileUtils.deleteDirectory(new java.io.File(dataPath(name)))
       saveCatalog()
       Done(s"dropped table '$name'")

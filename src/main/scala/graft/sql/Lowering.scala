@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Analyzer._
+import graft.functions.ParamLiteral
 import graft.operators.Fixpoint
 
 /** Lowers a bound query to a declarative DataFrame program. This is the
@@ -2221,7 +2222,14 @@ object Lowering {
       case BoundExpr.BLike(o, pat, neg, ci, esc) =>
         val c = likeCol(low(o), pat, ci, esc)
         if (neg) !c else c
-      case BoundExpr.BCmp(op, l, r) => cmpCols(op, low(l), low(r))
+      case BoundExpr.BCmp(op, l, r) =>
+        // a constant compared with a column takes the column's type
+        def side(o: BoundOperand, other: BoundOperand): Column = (o, other) match {
+          case (BoundOperand.BLit(c), BoundOperand.BCol(bc)) if !leaf.isDefinedAt(o) =>
+            lowerLitAs(c, bc.attr.sqlType)
+          case _ => low(o)
+        }
+        cmpCols(op, side(l, r), side(r, l))
       case _: Subquery =>
         sys.error("subqueries lower as joins or markers, not Column expressions")
       case other => sys.error(s"unreachable: $other has no lowering in this scope")
@@ -2373,19 +2381,35 @@ object Lowering {
     lowerOperandWith(it.rowValue.getOrElse(sys.error(
       s"unreachable: a correlated body item $it is not a row value")), colOf)
 
+  /** Numbers, dates and timestamps lower as parameter constants, so
+    * statements that differ only in them share their generated code.
+    */
   private[sql] def lowerLit(l: Lit): Column = l match {
-    case Lit.LitLong(v)      => lit(v)
-    case Lit.LitDouble(v)    => lit(v)
+    case Lit.LitLong(v)      => ParamLiteral.column(v)
+    case Lit.LitDouble(v)    => ParamLiteral.column(v)
     case Lit.LitString(s)    => lit(s)
-    case Lit.LitDate(s)      => lit(java.sql.Date.valueOf(s))
-    case Lit.LitTimestamp(s) => lit(java.sql.Timestamp.valueOf(s))
+    case Lit.LitDate(s)      => ParamLiteral.column(java.sql.Date.valueOf(s))
+    case Lit.LitTimestamp(s) => ParamLiteral.column(java.sql.Timestamp.valueOf(s))
     // LocalTime lowers through Spark's TIME literal encoder
     case Lit.LitTime(s)      => lit(java.time.LocalTime.parse(s))
     // the UTC-normalized wall text IS the instant under the pinned UTC
     // session zone (carrier: TimestampType)
-    case Lit.LitTimestampTz(s) => lit(java.sql.Timestamp.valueOf(s))
+    case Lit.LitTimestampTz(s) => ParamLiteral.column(java.sql.Timestamp.valueOf(s))
     case Lit.LitBool(v)      => lit(v)
     case Lit.LitNull         => lit(null)
+  }
+
+  /** A constant compared with a column of type `t`, in that type when
+    * its value fits exactly. Otherwise type coercion casts the column or
+    * the constant, and the optimizer folds that back into a plain
+    * literal whose value is written into the generated code.
+    */
+  private def lowerLitAs(l: Lit, t: SqlType): Column = (l, t) match {
+    case (Lit.LitLong(v), SqlType.SqlInt) if v.isValidInt        => ParamLiteral.column(v.toInt)
+    case (Lit.LitLong(v), SqlType.SqlSmallInt) if v.isValidShort => ParamLiteral.column(v.toShort)
+    case (Lit.LitLong(v), SqlType.SqlDouble) if math.abs(v) <= (1L << 53) =>
+      ParamLiteral.column(v.toDouble)
+    case _ => lowerLit(l)
   }
 
   /** A calendar-interval Column (unit-positional make_interval args:

@@ -4200,6 +4200,8 @@ object Parser {
     if (!sql0.toLowerCase.contains("getvariable")) return Right(sql0)
     def render(l: Lit): String = l match {
       case Lit.LitLong(v)      => v.toString
+      // NaN and ±Infinity have no numeric spelling; a string cast reads them
+      case Lit.LitDouble(v) if v.isNaN || v.isInfinite => s"CAST('$v' AS DOUBLE)"
       case Lit.LitDouble(v)    => s"CAST($v AS DOUBLE)"
       case Lit.LitString(v)    => s"'${v.replace("'", "''")}'"
       case Lit.LitBool(v)      => v.toString

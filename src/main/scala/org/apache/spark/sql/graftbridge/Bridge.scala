@@ -11,9 +11,10 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, Query
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences,
   BoundReference, Expression, InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpressions}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -36,12 +37,7 @@ object Bridge {
     */
   def bindOver(spark: org.apache.spark.sql.SparkSession, schema: StructType,
       cols: Seq[Column]): Seq[Expression] = {
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rel = LocalRelation(DataTypeUtils.toAttributes(schema))
-    val plan = Project(cols.zipWithIndex.map { case (c, i) =>
-      Alias(session.expression(c), s"_$i")() }, rel)
-    val analyzed = session.withActive(
-      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker))
+    val (rel, analyzed) = analyzeOver(spark, schema, cols)
     ComputeCurrentTime(ReplaceExpressions(analyzed)) match {
       case Project(list, _) => list.map {
         case a: Alias => BindReferences.bindReference(a.child, AttributeSeq(rel.output))
@@ -49,6 +45,21 @@ object Bridge {
       }
       case other => sys.error(s"unexpected analyzed projection: $other")
     }
+  }
+
+  /** `cols` projected over a relation of `schema`, resolved and checked
+    * by the session's analyzer as a query's would be, but with no
+    * Dataset built, so no query execution event fires. Returns the
+    * relation and the analyzed plan; throws what the analyzer throws.
+    */
+  def analyzeOver(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      cols: Seq[Column]): (LocalRelation, LogicalPlan) = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rel = LocalRelation(DataTypeUtils.toAttributes(schema))
+    val plan = Project(cols.zipWithIndex.map { case (c, i) =>
+      Alias(session.expression(c), s"_$i")() }, rel)
+    (rel, session.withActive(
+      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker)))
   }
 
   /** External rows (the values a DataFrame of `schema` accepts or yields)
@@ -78,6 +89,21 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The resolved file scan a `spark.read` frame is, if it is one. */
+  def fileRelation(df: org.apache.spark.sql.DataFrame): Option[LogicalRelation] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed match {
+      case r: LogicalRelation => Some(r)
+      case _                  => None
+    }
+
+  /** A new frame over `rel` with fresh attribute ids: Spark resolves
+    * nothing again, and the frame can meet another over `rel` in a join.
+    */
+  def frameOver(spark: org.apache.spark.sql.SparkSession,
+      rel: LogicalRelation): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rel.newInstance())
 
   /** Run `df` on the driver and return its physical plan's schema with
     * its rows. A frame over a LocalRelation (driver rows under a foldable

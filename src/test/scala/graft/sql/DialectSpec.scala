@@ -2393,6 +2393,10 @@ class DialectSpec extends AnyFunSuite {
       "y INT GENERATED ALWAYS AS (1))").isLeft)
     assert(db.query(
       "CREATE TABLE bad3 (x INT GENERATED ALWAYS AS (1) DEFAULT 2)").isLeft)
+    // a subquery in a generator rejects at CREATE, as in a CHECK
+    val sub = db.query("CREATE TABLE bad4 (a INT, b INT GENERATED ALWAYS AS " +
+      "(CASE WHEN a IN (SELECT a FROM bad4) THEN 1 ELSE 0 END))")
+    assert(sub.left.exists(_.msg.contains("subqueries are not supported")), sub)
   }
 
   test("CHECK constraints: create-time binding, write enforcement, persistence") {
@@ -5845,6 +5849,14 @@ class DialectSpec extends AnyFunSuite {
       .collect().head.getString(0) == "getvariable('x')")
     // non-scalar values reject loudly
     assert(db.query("SET VARIABLE bad = [1, 2, 3]").isLeft)
+    // non-finite doubles round-trip
+    for ((text, want) <- Seq("NaN" -> Double.NaN, "Infinity" -> Double.PositiveInfinity,
+        "-Infinity" -> Double.NegativeInfinity)) {
+      db.query(s"SET VARIABLE nf = CAST('$text' AS DOUBLE)").fold(e => fail(e.msg), identity)
+      val got = db.select("SELECT getvariable('nf') AS v")
+        .fold(e => fail(s"$text: ${e.msg}"), _.collect().head.getDouble(0))
+      assert(java.lang.Double.compare(got, want) == 0, s"$text read back as $got")
+    }
   }
 
   test("PRAGMA table_info / version / database_size / show_tables") {

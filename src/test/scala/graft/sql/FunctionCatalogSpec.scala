@@ -2,6 +2,7 @@ package graft.sql
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,10 +132,14 @@ class FunctionCatalogSpec extends AnyFunSuite {
       case _ => false
     }
 
-  /** Calls Spark's analyzer accepts (a type rejection is Spark's to make). */
+  /** Calls Spark's analyzer accepts (a type rejection is Spark's to make).
+    * The session analyzer runs on a projection over the row's schema,
+    * with no Dataset built, so an expected rejection fires no query
+    * listener event (whose failure handlers would log its stack).
+    */
   private def analyzable(calls: Seq[Call]): Seq[Call] =
     if (calls.isEmpty) calls
-    else try { oneRow.select(calls.map(_.col): _*); calls }
+    else try { Bridge.analyzeOver(spark, oneRow.schema, calls.map(_.col)); calls }
     catch {
       case _: Exception if calls.length > 1 => calls.flatMap(c => analyzable(Seq(c)))
       case _: org.apache.spark.sql.AnalysisException => Nil
