@@ -2223,7 +2223,8 @@ object Lowering {
         val c = likeCol(low(o), pat, ci, esc)
         if (neg) !c else c
       case BoundExpr.BCmp(op, l, r) =>
-        // a constant compared with a column takes the column's type
+        // a constant compared with a column takes the column's type,
+        // unless the scope resolves it itself (a constant GROUP BY key)
         def side(o: BoundOperand, other: BoundOperand): Column = (o, other) match {
           case (BoundOperand.BLit(c), BoundOperand.BCol(bc)) if !leaf.isDefinedAt(o) =>
             lowerLitAs(c, bc.attr.sqlType)
