@@ -1997,14 +1997,14 @@ final class GraftDatabase(val spark: SparkSession, val warehouse: String) {
       case _ if external.contains(desc.name) => readParquet(desc)
       case _ =>
         // a hit is the last read's relation with fresh attribute ids, so
-        // a self-join's two sides stay distinct
-        val key = scanKey(desc)
+        // a self-join's two sides stay distinct; a miss stores the key of
+        // the files the new relation itself listed
         Option(scans.get(desc.name)) match {
-          case Some((k, rel)) if key.contains(k) => Bridge.frameOver(spark, rel)
+          case Some((k, rel)) if scanKey(desc).contains(k) => Bridge.frameOver(spark, rel)
           case _ =>
             val df = readParquet(desc)
-            for (k <- key; rel <- Bridge.fileRelation(df) if scanKey(desc).contains(k))
-              scans.put(desc.name, (k, rel))
+            for ((rel, files) <- Bridge.fileRelation(df))
+              scans.put(desc.name, ((desc.sparkSchema, files), rel))
             df
         }
     }

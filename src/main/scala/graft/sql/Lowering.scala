@@ -2400,16 +2400,14 @@ object Lowering {
     case Lit.LitNull         => lit(null)
   }
 
-  /** A constant compared with a column of type `t`, in that type when
-    * its value fits exactly. Otherwise type coercion casts the column or
-    * the constant, and the optimizer folds that back into a plain
-    * literal whose value is written into the generated code.
+  /** A constant compared with a column of type `t`: an integer compared
+    * with an INT column is an INT constant when its value fits. Otherwise
+    * type coercion casts the column or the constant, and the optimizer
+    * folds that back into a plain literal whose value is written into
+    * the generated code.
     */
   private def lowerLitAs(l: Lit, t: SqlType): Column = (l, t) match {
-    case (Lit.LitLong(v), SqlType.SqlInt) if v.isValidInt        => ParamLiteral.column(v.toInt)
-    case (Lit.LitLong(v), SqlType.SqlSmallInt) if v.isValidShort => ParamLiteral.column(v.toShort)
-    case (Lit.LitLong(v), SqlType.SqlDouble) if math.abs(v) <= (1L << 53) =>
-      ParamLiteral.column(v.toDouble)
+    case (Lit.LitLong(v), SqlType.SqlInt) if v.isValidInt => ParamLiteral.column(v.toInt)
     case _ => lowerLit(l)
   }
 

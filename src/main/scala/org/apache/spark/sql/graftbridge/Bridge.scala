@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpre
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -90,11 +91,22 @@ object Bridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
-  /** The resolved file scan a `spark.read` frame is, if it is one. */
-  def fileRelation(df: org.apache.spark.sql.DataFrame): Option[LogicalRelation] =
+  /** The resolved file scan a `spark.read` frame is, if it is one, with
+    * the files its index listed as (name, length, modification time),
+    * sorted: exactly the files the scan reads.
+    */
+  def fileRelation(df: org.apache.spark.sql.DataFrame)
+      : Option[(LogicalRelation, Seq[(String, Long, Long)])] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed match {
-      case r: LogicalRelation => Some(r)
-      case _                  => None
+      case r: LogicalRelation => r.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case index: PartitioningAwareFileIndex => Some((r, index.allFiles().map(f =>
+            (f.getPath.getName, f.getLen, f.getModificationTime)).sorted))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
     }
 
   /** A new frame over `rel` with fresh attribute ids: Spark resolves
